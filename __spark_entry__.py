@@ -13,7 +13,10 @@ paired with DuckDB oracle SQL built from the same constants.
 
 from __future__ import annotations
 
+import json
+import re
 from collections.abc import Callable
+from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -30,93 +33,25 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 # The driver's correctness gate checks the first 50 queries() entries
-# (verified rounds 3-6: CORRECTNESS_r{N} == the first 50 in
-# registration order). The head rotates per round: every query NEW
-# this round, CHANGED this round, or UNCHECKED last round sits in the
-# head; the two-round freshness bar caps the registry at 100 names.
-#
-# r17 rotation (EXECUTED this round, pure bookkeeping per the r16+
-# steady-state rule): _CHECK_LAST := CORRECTNESS_r16.json key order —
-# the 50 names the driver verified green in r16 move to the tail, and
-# the 50 r16-tail names (green CORRECTNESS_r15 rows) re-enter the
-# driver-checked head. This closes VERDICT r16 #3: every query the
-# r16 optimization round RESTRUCTURED while sitting in the unchecked
-# tail (triangle_count, text_hash_vectors, dedup_keep_best,
-# dataset_split_safe, skew_join's surface) is now in the head.
-# Coverage notes for the two restructured names without their own
-# registry rows: sketch_countmin rides the "sketch_hll" variant-tag
-# union (q_sketch_state_merged — driver-verified green in r16 AFTER
-# the weighted-sketch change landed), and bloom_semijoin remains
-# bench-only with its r18 covering union under skew_join staged
-# (q_join_strategy_merged dry-run; CI value-checks it at sf0.001 via
-# the staged-merge parity test until then).
-#
-# Tail (50) = the r16-head names, in CORRECTNESS_r16.json key order.
-# Tail queries retain value-level verification in CI:
-# tests/test_contract_integration.py::test_tail_queries_match_oracle
-# runs each against its DuckDB oracle at sf0.001 every pytest run
-# (which also asserts head == 50 and tail == N−50 exactly), and
-# tools/check_correctness.py covers all 100 at sf0.01 on demand.
-#
-# ROTATION MATH: with a 50-slot head, N registered queries get
-# driver-checked every ceil(N/50) rounds — the two-round freshness bar
-# holds while N <= 100, and N sits AT that cap (CI-pinned). Rotations
-# stay pure bookkeeping (_CHECK_LAST := the prior round's CORRECTNESS
-# key order) and any NEW registration requires a retirement-first
-# merge in the same rotation (policy + evidence bar: contract.py's
-# r16+ RECIPE block). Live counts: tools/queue_status.py.
-_CHECK_LAST = (
-    "fft",
-    "fftconvolve",
-    "stft",
-    "welch",
-    "sosfilt",
-    "peak_widths",
-    "dedup_minhash",
-    "ann_cosine_topk_ivf",
-    "dataset_mix",
-    "decontaminate",
-    "multimodal_features",
-    "multimodal_real_decode",
-    "multimodal_audio_decode",
-    "tpch_q1",
-    "sessionize",
-    "fftconvolve_2d",
-    "sosfilt_stream",
-    "asof_join",
-    "dedup_clusters",
-    "text_lang_id",
-    "sketch_hll",
-    "gapfill",
-    "ohlc_bars",
-    "latest_by_key",
-    "sample_negatives",
-    "pagerank",
-    "zorder_curve",
-    "group_quantiles",
-    "bpe_encode",
-    "sequence_pack",
-    "text_postings",
-    "edit_distance_join",
-    "event_pivot",
-    "orders_unshipped",
-    "json_props_stats",
-    "cdc_apply",
-    "window_analytics",
-    "active_user_setops",
-    "weighted_sample",
-    "tpch_q13",
-    "tpch_q17",
-    "text_sparse_knn",
-    "dedup_recall_eval",
-    "embedding_outliers",
-    "dataset_temperature_mix",
-    "naive_bayes_lang",
-    "auc_eval",
-    "dsir_weights",
-    "target_encoding",
-    "event_transitions",
-)
+# and writes their results, in that order, to CORRECTNESS_r{N}.json next
+# to this file. The head rotates itself: the names the newest such file
+# checked go to the tail, so the other 50 form the next head and every
+# registered name is checked at least every other round.
+def _newest_correctness() -> Path:
+    files = {
+        int(m.group(1)): p
+        for p in Path(__file__).parent.glob("CORRECTNESS_r*.json")
+        if (m := re.fullmatch(r"CORRECTNESS_r(\d+)\.json", p.name))
+    }
+    if not files:
+        raise FileNotFoundError(
+            f"no CORRECTNESS_r<N>.json next to {__file__}: the driver head "
+            "is derived from the newest one"
+        )
+    return files[max(files)]
+
+
+_CHECK_LAST = tuple(json.loads(_newest_correctness().read_text()))
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:

@@ -1,7 +1,8 @@
 #!/usr/bin/env python
 """Per-round benchmark harness (driver contract).
 
-Runs the headline queries from ``__spark_entry__.queries()`` at
+Runs the ``HEADLINE`` queries, each resolved by ``contract.plain`` to
+the single-plan function its row has always measured, at
 ``$SPARK_GRAFT_SF_DIR`` (default /root/testdata/sf0.1) on
 ``local[$SPARK_GRAFT_CPUS]`` and prints ONE SHORT JSON line::
 
@@ -129,8 +130,7 @@ HEADLINE = [
     "resample_poly",
     "cwt_ricker",
     "text_url_stats",
-    # round-6 session 3: the r7/r8 registration queue (sketches, grid
-    # resampling, skew join) — benched pre-registration via _QUEUED
+    # round-6 session 3: sketches, grid resampling, skew join
     "sketch_hll",
     "sketch_countmin",
     "sketch_histogram",
@@ -234,140 +234,6 @@ HEADLINE = [
 ]
 
 
-def plain_overrides() -> dict:
-    """Plan-continuity overrides: rotations fold names into variant-tag
-    unions under their base registrations, but each BENCH/BASELINE row
-    must keep measuring the SAME plan round over round — so the bench
-    (and tools/sentinel.py's fresh-session reruns) resolve these names
-    to the plain single-variant functions. The unions are literal
-    unionAll's of these, so no plan goes unmeasured."""
-    from xarray_scipy_spark import contract as C
-
-    return {
-        "fftshift": C.q_fftshift,
-        "medfilt": C.q_medfilt,
-        "wiener": C.q_wiener,
-        "savgol": C.q_savgol,
-        "text_token_stats": C.q_text_token_stats,
-        "text_quality": C.q_text_quality,
-        "stream_window_stats": C.q_stream_window_stats,
-        "session_window_stats": C.q_session_window_stats,
-        "multimodal_jpeg_decode": C.q_multimodal_jpeg_decode,
-        # r9 rotation (13 merges)
-        "welch": C.q_welch,
-        "welch_blackman": C.q_welch_blackman,
-        "rfft": C.q_rfft_merged,
-        "peak_widths": C.q_peak_widths,
-        "asof_join": C.q_asof_join,
-        "range_join": C.q_range_join,
-        "dedup_minhash": C.q_dedup_minhash,
-        "dedup_simhash": C.q_dedup_simhash,
-        "ann_cosine_topk_ivf": C.q_ann_cosine_topk_ivf,
-        "tpch_q1": C.q_tpch_q1,
-        "tpch_q5": C.q_tpch_q5,
-        "decontaminate": C.q_decontaminate,
-        "bloom_decontaminate": C.q_bloom_decontaminate,
-        "sketch_hll": C.q_sketch_hll,
-        "sketch_countmin": C.q_sketch_countmin,
-        # r10 rotation (11 merges)
-        "fftconvolve": C.q_fftconvolve,
-        "istft_roundtrip": C.q_istft_roundtrip,
-        "lfilter": C.q_lfilter,
-        "filtfilt": C.q_filtfilt,
-        "dataset_split": C.q_dataset_split,
-        "ann_cosine_topk": C.q_ann_cosine_topk,
-        "cwt_ricker": C.q_cwt_ricker,
-        "periodogram": C.q_periodogram,
-        "acf": C.q_acf,
-        "ewma": C.q_ewma,
-        "seasonal_decompose": C.q_seasonal_decompose,
-        "text_vocab": C.q_text_vocab,
-        "skew_join": C.q_skew_join,
-        "bloom_semijoin": C.q_bloom_semijoin,
-        "text_url_stats": C.q_text_url_stats,
-        # r11 rotation (10 merges)
-        "sosfilt": C.q_sosfilt,
-        # sosfiltfilt's plain plan is the r7 padtype union — the same
-        # function its BENCH row has measured since r7
-        "sosfiltfilt": C.q_sosfiltfilt_merged,
-        # convolve_valid's BENCH row has measured the r9 valid-mode
-        # union since r9 — keep that exact plan
-        "convolve_valid": C.q_convolve_merged,
-        "deconvolve": C.q_deconvolve,
-        "multimodal_real_decode": C.q_multimodal_real_decode,
-        "multimodal_video_frames": C.q_multimodal_video_frames,
-        "gapfill": C.q_gapfill,
-        "interp_to": C.q_interp_to,
-        "dedup_minhash_cross": C.q_dedup_minhash_cross,
-        "sketch_hll_merge": C.q_sketch_hll_merge,
-        "clean_text": C.q_clean_text,
-        "url_canonical_dedup": C.q_url_canonical_dedup,
-        "cap_per_group": C.q_cap_per_group,
-        "filter_by_quantile": C.q_filter_by_quantile,
-        # r12 rotation (12 merges): names retired from the registry
-        # keep their historical plans here, and the merged BASE names
-        # that carry a HEADLINE row keep their plain single-variant
-        # plans (the r11 sosfilt/fftconvolve precedent — without
-        # these the r12 unions inflate the base rows ~40% and flag
-        # vs band, measured at the r12 open). decimate_iir's BENCH
-        # row has measured the r7 iir-family union since r7 — keep
-        # that exact plan.
-        "resample": C.q_resample,
-        "dedup_exact": C.q_dedup_exact,
-        "funnel": C.q_funnel,
-        "tpch_q4": C.q_tpch_q4,
-        "rolling_stats": C.q_rolling_stats,
-        "decimate_fir": C.q_decimate_fir,
-        "lombscargle": C.q_lombscargle,
-        "dominant_frequency": C.q_dominant_frequency,
-        "hilbert_envelope": C.q_hilbert_envelope,
-        "decimate_iir": C.q_decimate_iir_merged,
-        "resample_poly": C.q_resample_poly,
-        "dedup_ngram_spans": C.q_dedup_ngram_spans,
-        "quantile_normalize": C.q_quantile_normalize,
-        "rolling_median": C.q_rolling_median,
-        "retention": C.q_retention,
-        "tpch_q18": C.q_tpch_q18,
-        # r13 rotation (7 merges): HEADLINE names touched — the
-        # merged BASES keep their plain single-variant plans, the
-        # RETIRED names keep their historical plans (names not in
-        # HEADLINE — multimodal_audio_decode, fftconvolve_2d,
-        # sosfilt_stream and their absorbed twins except
-        # multimodal_gzip_decode — need no row here).
-        "stft": C.q_stft,
-        "sessionize": C.q_sessionize,
-        "group_quantiles": C.q_group_quantiles,
-        "text_postings": C.q_text_postings,
-        "winsorize": C.q_winsorize,
-        "bm25_scores": C.q_bm25_scores,
-        "multimodal_gzip_decode": C.q_multimodal_gzip_decode,
-        # r14 rotation (2 merges, executed): the merged bases q7/q14
-        # and the retired q8/q9/q19 keep their plain single-variant
-        # plans under their BENCH rows (entries pre-staged at r13 and
-        # asserted identical then, so the rotation changed no measured
-        # plan's identity).
-        "tpch_q7": C.q_tpch_q7,
-        "tpch_q8": C.q_tpch_q8,
-        "tpch_q9": C.q_tpch_q9,
-        "tpch_q14": C.q_tpch_q14,
-        "tpch_q19": C.q_tpch_q19,
-        # r16 staged merge (dry-run built r15, VERDICT r14 #3):
-        # entries PRE-staged while plain == registered (identical
-        # today, so no measured plan changes identity when the
-        # event_pivot -> window_analytics@merged rotation executes).
-        "window_analytics": C.q_window_analytics,
-        "event_pivot": C.q_event_pivot,
-        # r16+ staged rule-c merges (dry-runs built r15): the eval
-        # twins keep their plain composition plans under their BENCH
-        # rows when they fold into their bases (ann_cosine_topk_ivf /
-        # dedup_minhash already carry plain entries above). Identical
-        # to the registered functions today, so no measured plan
-        # changes identity at the eval-twin rotations.
-        "ann_recall_eval": C.q_ann_recall_eval,
-        "dedup_recall_eval": C.q_dedup_recall_eval,
-    }
-
-
 # Ambient-load gate (VERDICT r12 #2): BENCH_r12 was captured at
 # loadavg 5.6 while same-HEAD adjudicated batteries bracketed r11 —
 # the official artifact overstated the round by a uniform host-steal
@@ -417,14 +283,34 @@ def _await_quiet_host() -> tuple[list[float], str]:
     return [round(load1, 2), round(load5, 2)], status
 
 
+_SENTINELS = ("audio_spectral", "dedup_ngram_spans", "sosfiltfilt")
+
+
+def sentinel_norm(
+    total: float, times: dict[str, float], suspects: list[str]
+) -> tuple[float, float | None, bool]:
+    """(sentinel_sum, norm_total, norm_ok) for a battery.
+
+    norm_total is None unless all three sentinels ran with a positive
+    time: a missing or failed anchor would shrink the denominator. The
+    figure is only trustworthy (norm_ok) when, in addition, no sentinel
+    was flagged: a steal-hit sentinel inflates the denominator and the
+    figure lies in the FAST direction. norm_ok=false tells the reader to
+    fall back to the per-query medians in the detail artifact."""
+    sent = [times.get(n, -1.0) for n in _SENTINELS]
+    complete = all(t > 0 for t in sent)
+    sent_sum = sum(t for t in sent if t > 0)
+    norm_total = round(total / sent_sum, 2) if complete else None
+    norm_ok = complete and not any(n in suspects for n in _SENTINELS)
+    return sent_sum, norm_total, norm_ok
+
+
 def main() -> int:
-    import __spark_entry__ as e
     from xarray_scipy_spark.session import get_spark
     from xarray_scipy_spark.sources.tables import load_table
 
     loadavg_start, load_gate = _await_quiet_host()
     spark = get_spark("bench")
-    qs = e.queries()
 
     # warmup: JVM + Arrow + python-worker pool spin-up, excluded from
     # timing (BASELINE.md protocol: cold session excluded). The grouped-
@@ -442,9 +328,6 @@ def main() -> int:
     sf = SF_DIR.rstrip("/").rsplit("sf", 1)[-1]
     total = 0.0
     from xarray_scipy_spark import contract as C
-    from xarray_scipy_spark.contract import _QUEUED
-
-    plain = plain_overrides()
 
     # self-adjudication bands: running per-query minimum of every
     # official value ever recorded, carried forward through the
@@ -530,23 +413,13 @@ def main() -> int:
                 samples.append(round(dt_i, 3))
         return samples
 
-    def resolve(name):
-        # queue entries bench exactly like registered ones (the
-        # driver's BENCH_r{N} then carries their sf0.1 numbers a round
-        # before their CORRECTNESS row exists)
-        return (
-            plain.get(name)
-            or qs.get(name)
-            or (_QUEUED[name][0] if name in _QUEUED else None)
-        )
-
     def run_battery() -> tuple[dict, dict, list]:
         nonlocal spark
         times: dict[str, float] = {}
         detail: dict[str, dict] = {}
         suspects: list[str] = []
         for name in HEADLINE:
-            fn = resolve(name)
+            fn = C.plain(name)
             if fn is None:
                 continue
             ts = time.strftime("%H:%M:%S")
@@ -615,7 +488,7 @@ def main() -> int:
                 try:
                     if spark is None:
                         spark = get_spark("bench-rerun")
-                    rerun = measure(resolve(name))
+                    rerun = measure(C.plain(name))
                     row["rerun_mode"] = "fallback-session"
                 except Exception as ex:
                     row["rerun_error"] = str(ex)[:300]
@@ -713,15 +586,7 @@ def main() -> int:
     # (r15 record 82.53/2.338 = 35.3; the r16 same-host batteries read
     # 35.2/36.5 against raw totals 111-134 s). Emitted in BOTH the
     # artifact and the stdout line; additions-only.
-    _SENTINELS = ("audio_spectral", "dedup_ngram_spans", "sosfiltfilt")
-    sent_sum = sum(times[n] for n in _SENTINELS if times.get(n, 0) > 0)
-    norm_total = round(total / sent_sum, 2) if sent_sum > 0 else None
-    # the normalization is only meaningful when the anchors themselves
-    # ran clean: a steal-hit sentinel inflates the denominator and the
-    # figure lies in the FAST direction (or, flagged-and-confirmed,
-    # the slow one). norm_ok=false tells the reader to fall back to
-    # the per-query medians in the detail artifact.
-    norm_ok = not any(n in suspects for n in _SENTINELS)
+    sent_sum, norm_total, norm_ok = sentinel_norm(total, times, suspects)
 
     try:
         load1, load5, _ = os.getloadavg()

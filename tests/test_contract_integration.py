@@ -42,112 +42,84 @@ def test_every_oracle_has_a_query():
 
 
 def test_registry_capped_at_100():
-    """VERDICT r14 #8: with a 50-slot driver head, the two-round
-    freshness bar holds only while N <= 100 — and N sits AT that cap
-    since the r15 rotation. A 101st registration would silently break
-    the bar (some name would go >2 rounds unchecked), so it fails
-    here with the policy pointer instead."""
-    from xarray_scipy_spark.contract import _QUEUED
-
+    """With a 50-slot driver head, every name is driver-checked at
+    least every other round only while N <= 100. A 101st registration
+    would leave some name unchecked for longer, so it fails here: a
+    new REGISTRY row must be paired with folding a redundant name into
+    a variant-tag union under a surviving base."""
     assert len(QUERIES) <= 100, (
-        f"{len(QUERIES)} registered queries exceeds the two-round "
-        "freshness cap of 100. The registry is FULL: a new "
-        "registration must be paired with a retirement-first merge "
-        "in the SAME rotation block (fold a redundant variant into a "
-        "union under a surviving base with a merged oracle, a "
-        "_MERGED_UNIONS plan lock, and bench plain_overrides "
-        "continuity) — see the r16+ RETIREMENT-FIRST POLICY section "
-        "in xarray_scipy_spark/contract.py."
+        f"{len(QUERIES)} registered queries exceeds the cap of 100 — "
+        "fold a redundant query into a union before adding a row"
     )
-    # queued names count against future capacity: flag a queue that
-    # could not register even with zero due-slack.
-    assert len(QUERIES) + len(_QUEUED) <= 100 or len(_QUEUED) == 0, (
-        f"queue of {len(_QUEUED)} cannot register at N={len(QUERIES)} "
-        "without retirements — ledger the merges first (r16+ policy)."
+
+
+def _entry_module():
+    import importlib.util
+
+    path = os.path.join(
+        os.path.dirname(os.path.dirname(__file__)), "__spark_entry__.py"
     )
+    spec = importlib.util.spec_from_file_location("__spark_entry__", path)
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    return mod
 
 
 def test_driver_head_is_exactly_50():
     """The driver's correctness gate checks the FIRST 50 queries()
-    entries. Registering a query without a matching _CHECK_LAST update
-    would silently push another query out of the checked window — this
-    pins head size to exactly 50 so the rotation stays deliberate."""
-    import importlib.util
+    entries. The tail is the key order of the newest CORRECTNESS_r<N>
+    file (the names the driver checked last), so the head is exactly
+    the other 50."""
+    import glob
+    import json
+    import re
 
-    path = os.path.join(
-        os.path.dirname(os.path.dirname(__file__)), "__spark_entry__.py"
-    )
-    spec = importlib.util.spec_from_file_location("__spark_entry__", path)
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
-    qs = list(mod.queries())
-    tail = [n for n in mod._CHECK_LAST if n in qs]
-    assert len(qs) - len(tail) == 50, (
-        f"driver head is {len(qs) - len(tail)} (registered {len(qs)}, "
-        f"tail {len(tail)}) — update _CHECK_LAST to keep the head at 50"
-    )
-    # every tail name must actually be registered (a typo would silently
-    # shrink the tail and push a stale query into the unchecked zone)
-    assert set(mod._CHECK_LAST) <= set(qs)
-    # and the tail must be EXACTLY N−50 distinct names (VERDICT r13 #9:
-    # a duplicate in _CHECK_LAST would inflate len(tail) and let a
-    # silent tail drop pass the head==50 check above)
-    assert len(set(mod._CHECK_LAST)) == len(mod._CHECK_LAST) == len(qs) - 50, (
-        f"_CHECK_LAST must be {len(qs) - 50} distinct names "
-        f"(got {len(mod._CHECK_LAST)}, {len(set(mod._CHECK_LAST))} distinct)"
-    )
+    root = os.path.dirname(os.path.dirname(__file__))
+    rounds = {
+        int(m.group(1)): f
+        for f in glob.glob(os.path.join(root, "CORRECTNESS_r*.json"))
+        if (m := re.search(r"CORRECTNESS_r(\d+)\.json$", f))
+    }
+    with open(rounds[max(rounds)]) as fh:
+        newest = list(json.load(fh))
+    qs = list(_entry_module().queries())
+    assert set(newest) <= set(QUERIES), sorted(set(newest) - set(QUERIES))
+    assert qs[50:] == newest
+    assert len(qs[:50]) == len(set(qs[:50])) == 50
+    assert sorted(qs) == sorted(QUERIES)
 
 
-def test_freshness_checker_both_phases():
-    """tools/freshness_check.py must hold at BOTH points of a round
-    (VERDICT r12 #2 — the single-latest-file version false-FAILed at
-    round close): round open (tail == the latest head's surviving
-    keys) and round close (the driver has written the NEW head file;
-    the tail now lives in the second-latest file). And it must still
-    FAIL on a genuinely stale tail name and on an order violation."""
-    import sys
+def test_contract_registry_is_written_once():
+    """The registry is one literal table: no function in contract.py
+    reads or writes ORACLES/QUERIES by key, so no oracle builder can
+    depend on what was registered before it ran."""
+    import ast
 
-    sys.path.insert(
-        0, os.path.join(os.path.dirname(os.path.dirname(__file__)), "tools")
-    )
-    from freshness_check import tail_freshness
+    import xarray_scipy_spark.contract as C
 
-    tail = ["a", "b", "c"]
-    # round open: one head file, tail is its key order
-    assert tail_freshness(tail, {"r12": ["a", "b", "c", "x"]}) == []
-    # round close: the new head file (r13) holds OTHER names; the tail
-    # is still fresh via the second-latest (r12) — must pass
-    assert (
-        tail_freshness(tail, {"r12": ["a", "b", "c"], "r13": ["x", "y"]})
-        == []
-    )
-    # genuinely stale: "c" in neither head
-    msgs = tail_freshness(tail, {"r12": ["a", "b"], "r13": ["x"]})
-    assert any("older than the two-round bar" in m and "'c'" in m for m in msgs)
-    # order violation vs the file that contains the names
-    msgs = tail_freshness(["b", "a"], {"r12": ["a", "b"], "r13": ["x"]})
-    assert any("order deviates" in m for m in msgs)
+    with open(C.__file__) as fh:
+        tree = ast.parse(fh.read())
+    hits = [
+        (fn.name, node.lineno)
+        for fn in ast.walk(tree)
+        if isinstance(fn, ast.FunctionDef)
+        for node in ast.walk(fn)
+        if isinstance(node, ast.Subscript)
+        and isinstance(node.value, ast.Name)
+        and node.value.id in ("ORACLES", "QUERIES")
+    ]
+    assert hits == []
+    assert list(C.QUERIES) == list(C.REGISTRY) == list(C.ORACLES)
 
 
-def _tail_names():
-    import importlib.util
-
-    path = os.path.join(
-        os.path.dirname(os.path.dirname(__file__)), "__spark_entry__.py"
-    )
-    spec = importlib.util.spec_from_file_location("__spark_entry__", path)
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
-    return [n for n in mod._CHECK_LAST if n in ORACLES]
-
-
-@pytest.mark.parametrize("name", _tail_names())
+@pytest.mark.parametrize("name", sorted(ORACLES))
 def test_tail_queries_match_oracle(spark, name):
-    """Queries rotated out of the driver's 50-slot oracle window keep
-    VALUE-level verification here: Spark result vs DuckDB oracle at
-    sf0.001, byte-exact after the same normalization the local
-    check_correctness tool applies (sorted columns, sorted rows,
-    widened numeric dtypes)."""
+    """Every registered query, not only the 50 the driver checks this
+    round, keeps VALUE-level verification here: Spark result vs DuckDB
+    oracle at sf0.001, byte-exact after the same normalization the
+    local check_correctness tool applies (sorted columns, sorted rows,
+    widened numeric dtypes). Parametrized over the whole registry so
+    the test ids do not move when the driver head rotates."""
     import duckdb
     import numpy as np
 
@@ -189,12 +161,7 @@ def test_tail_queries_match_oracle(spark, name):
 
 
 def test_entry_smoke(spark):
-    import importlib.util
-
-    path = os.path.join(os.path.dirname(os.path.dirname(__file__)), "__spark_entry__.py")
-    spec = importlib.util.spec_from_file_location("__spark_entry__", path)
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
+    mod = _entry_module()
     out = mod.entry(spark)
     assert out.count() >= 0
     assert set(mod.oracle_sql()) <= set(mod.queries())
@@ -209,12 +176,8 @@ def test_time_queries_are_session_timezone_independent(spark):
     UTC run."""
     from xarray_scipy_spark import contract as C
 
-    # q_session_window_stats by plain function: its registration merged
-    # into stream_window_stats' variant union at the r8 rotation (the
-    # registered union is covered via QUERIES["stream_window_stats"])
-    # range_join by plain function: its registration merged into
-    # asof_join's temporal-join union at the r9 rotation (the
-    # registered union is covered via QUERIES["asof_join"])
+    # session_window_stats and range_join are plain branches of the
+    # stream_window_stats and asof_join unions
     fns = {
         "sessionize": C.QUERIES["sessionize"],
         "session_window_stats": C.q_session_window_stats,
@@ -243,26 +206,14 @@ def test_time_queries_are_session_timezone_independent(spark):
 
 
 def test_bench_headline_names_all_resolve():
-    """Rotation guard: bench.py silently skips a HEADLINE name whose
-    resolver returns None (plain_overrides -> registry -> queue), so a
-    rotation that retires a name without adding a plain override would
-    silently drop its BENCH row instead of failing. Every HEADLINE
-    name must resolve to a callable."""
+    """bench.py silently skips a HEADLINE name that contract.plain
+    cannot resolve, so folding a name into a union without keeping its
+    plain function would drop its BENCH row instead of failing here."""
     import bench
-    from xarray_scipy_spark.contract import QUERIES, _QUEUED
+    from xarray_scipy_spark.contract import plain
 
-    plain = bench.plain_overrides()
-    missing = [
-        n
-        for n in bench.HEADLINE
-        if plain.get(n) is None
-        and n not in QUERIES
-        and n not in _QUEUED
-    ]
-    assert not missing, (
-        f"HEADLINE names with no resolvable plan (add a plain override "
-        f"or registry entry): {missing}"
-    )
+    missing = [n for n in bench.HEADLINE if plain(n) is None]
+    assert not missing, f"HEADLINE names with no resolvable plan: {missing}"
 
 
 def test_bench_load_gate_both_paths(monkeypatch):
@@ -308,3 +259,28 @@ def test_bench_load_gate_both_paths(monkeypatch):
     monkeypatch.setattr(bench.os, "getloadavg", flaky)
     la, status = bench._await_quiet_host()
     assert status == "EXCEEDED" and la == [9.0, 9.0] and len(slept) == 1
+
+
+def test_bench_sentinel_norm_needs_all_three_sentinels():
+    """bench.sentinel_norm: norm_total exists only when all three
+    sentinels ran with a positive time, and norm_ok additionally needs
+    none of them flagged."""
+    import bench
+
+    times = {"audio_spectral": 1.0, "dedup_ngram_spans": 2.0, "sosfiltfilt": 2.0}
+    times["rfft"] = 10.0
+    total = sum(times.values())
+
+    # clean anchors: normalized and trusted
+    assert bench.sentinel_norm(total, times, []) == (5.0, 3.0, True)
+    # a flagged sentinel: normalized but not trusted
+    assert bench.sentinel_norm(total, times, ["sosfiltfilt"]) == (5.0, 3.0, False)
+    # a flag on a non-sentinel row does not matter
+    assert bench.sentinel_norm(total, times, ["rfft"])[2] is True
+
+    # a missing sentinel: no figure at all, even with no flags
+    missing = {k: v for k, v in times.items() if k != "dedup_ngram_spans"}
+    assert bench.sentinel_norm(13.0, missing, []) == (3.0, None, False)
+    # a failed sentinel (bench records -1.0): likewise
+    failed = {**times, "audio_spectral": -1.0}
+    assert bench.sentinel_norm(total, failed, []) == (4.0, None, False)

@@ -684,6 +684,19 @@ def test_sosfilt_chunked_equals_whole_series(spark):
         np.testing.assert_array_equal(got, sosfilt_1d(sos, x))
 
 
+def test_sosfilt_chunked_empty_input_leaves_no_cache(spark):
+    """The empty-input early return must release the chunked source
+    cache like the normal path does."""
+    from xarray_scipy_spark.kernels.filter_design import butter_sos
+
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    before = cm.numCachedEntries()
+    empty = spark.createDataFrame([], "ch long, t double, value double")
+    out = xss.sosfilt_chunked(butter_sos(4, 0.2), empty, by=["ch"], dim="t")
+    assert out.count() == 0
+    assert cm.numCachedEntries() == before
+
+
 @pytest.mark.parametrize("kind", ["constant", "linear"])
 def test_detrend_matches_numpy(spark, kind):
     import pandas as pd

@@ -18,28 +18,7 @@ import os
 
 import pytest
 
-from xarray_scipy_spark.contract import QUERIES
-
-
-def _contract_fn(name):
-    """Resolve a contract query by name for a plan lock. The plain
-    ``q_<name>`` function wins when it exists: rotations merge names
-    into variant-tag unions — absorbed names get DELETED from QUERIES
-    and base names get REPLACED by the union in place — and in both
-    cases the lock must keep reading the SAME single-variant plan
-    across rotations (the unions are literal unionAll's of the kept
-    plain functions, so nothing goes unlocked). Registry lookups are
-    the fallback for names registered under a differently-named
-    builder."""
-    from xarray_scipy_spark import contract as C
-    from xarray_scipy_spark.contract import QUERIES, _QUEUED
-
-    fn = getattr(C, "q_" + name, None)
-    if fn is not None:
-        return fn
-    if name in QUERIES:
-        return QUERIES[name]
-    return _QUEUED[name][0]
+from xarray_scipy_spark.contract import QUERIES, plain
 
 
 SF_DIR = "/root/testdata/sf0.001"
@@ -75,7 +54,7 @@ def test_tpch_q5_is_all_broadcast_joins(spark):
     """Every dimension chain in Q5 is broadcast-sized; the only big
     table is lineitem. A SortMergeJoin here means a dimension stopped
     broadcasting — at 100 TB that is a full lineitem shuffle."""
-    plan = _static_plan(_contract_fn("tpch_q5")(spark, SF_DIR))
+    plan = _static_plan(plain("tpch_q5")(spark, SF_DIR))
     assert plan.count("BroadcastHashJoin") >= 4
     assert "SortMergeJoin" not in plan
     assert "CartesianProduct" not in plan
@@ -96,7 +75,7 @@ def test_range_join_is_equi_not_nested_loop(spark):
     """Interval containment via chunk-explode + equi hash join; a naive
     range predicate would plan BroadcastNestedLoopJoin/CartesianProduct
     — quadratic at scale."""
-    plan = _static_plan(_contract_fn("range_join")(spark, SF_DIR))
+    plan = _static_plan(plain("range_join")(spark, SF_DIR))
     assert "BroadcastNestedLoopJoin" not in plan
     assert "CartesianProduct" not in plan
 
@@ -388,14 +367,14 @@ def test_pure_catalyst_smoothers_have_no_python_and_one_exchange(spark):
 
 def test_text_url_stats_is_shuffle_free(spark):
     """url_stats is a pure map-side projection: no exchange at all."""
-    plan = _static_plan(_contract_fn("text_url_stats")(spark, SF_DIR))
+    plan = _static_plan(plain("text_url_stats")(spark, SF_DIR))
     assert "Python" not in plan and "Exchange" not in plan, plan
 
 
 def test_cwt_single_kernel_exchange(spark):
     """All CWT widths ride ONE kernel exchange (position-major layout),
     not one exchange per width."""
-    plan = _static_plan(_contract_fn("cwt_ricker")(spark, SF_DIR))
+    plan = _static_plan(plain("cwt_ricker")(spark, SF_DIR))
     assert plan.count("FlatMapGroupsInPandas") == 1, plan
 
 
@@ -405,7 +384,7 @@ def test_cwt_single_kernel_exchange(spark):
 def test_second_wave_kernel_queries_single_exchange_pruned_scan(spark, name):
     """Each r6 kernel query must stay: ONE co-locating exchange, ONE
     Arrow kernel, and a column-pruned 3-field events scan."""
-    plan = _static_plan(_contract_fn(name)(spark, SF_DIR))
+    plan = _static_plan(plain(name)(spark, SF_DIR))
     assert plan.count("FlatMapGroupsInPandas") == 1, (name, plan)
     # at sf0.001 the volume-aware bucket width collapses to 1 and the
     # co-locating exchange is elided entirely; the invariant is "no
@@ -423,7 +402,7 @@ def test_gapfill_has_no_join_node(spark):
     """gapfill is union + one ordered window — a join node appearing
     means the bracketing logic regressed to an asof-style join that
     skews on hot series."""
-    plan = _static_plan(_contract_fn("gapfill")(spark, SF_DIR))
+    plan = _static_plan(plain("gapfill")(spark, SF_DIR))
     for node in _JOIN_NODES:
         assert node not in plan, node
     assert "Window" in plan
@@ -433,7 +412,7 @@ def test_bloom_probes_are_broadcast_joins(spark):
     """The Bloom position set must BROADCAST to the corpus side (its
     whole point is constant-size membership); a SortMergeJoin means
     the corpus reshuffled for the guard set."""
-    plan = _static_plan(_contract_fn("bloom_decontaminate")(spark, SF_DIR))
+    plan = _static_plan(plain("bloom_decontaminate")(spark, SF_DIR))
     assert plan.count("BroadcastHashJoin") >= 3  # one per hash probe
     assert "SortMergeJoin" not in plan
 
@@ -442,7 +421,7 @@ def test_skew_join_hot_tagging_is_broadcast(spark):
     """skew_join's hot-key tagging joins must broadcast the tiny
     hot-key frame; if tagging itself shuffles the big sides, the
     detection pass costs what the salting saves."""
-    plan = _static_plan(_contract_fn("skew_join")(spark, SF_DIR))
+    plan = _static_plan(plain("skew_join")(spark, SF_DIR))
     assert plan.count("BroadcastHashJoin") >= 2  # left tag + right tag
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
@@ -453,7 +432,7 @@ def test_sketch_states_are_pure_catalyst(spark):
     whole-stage-codegen JVM plans: no Python workers, no UDF eval
     nodes — the 100 TB throughput claim rides on this."""
     for name in ("sketch_hll", "sketch_countmin", "sketch_histogram"):
-        plan = _static_plan(_contract_fn(name)(spark, SF_DIR))
+        plan = _static_plan(plain(name)(spark, SF_DIR))
         assert "BatchEvalPython" not in plan, name
         assert "ArrowEvalPython" not in plan, name
         assert "FlatMapGroupsInPandas" not in plan, name
@@ -463,7 +442,7 @@ def test_hll_shuffle_is_register_bounded(spark):
     """The HLL register aggregation must partial-aggregate BEFORE the
     exchange (shuffle rows <= groups x 2^p, never input rows): both
     aggregations show a partial_ pass under AQE's final plan."""
-    plan = _final_plan(_contract_fn("sketch_hll")(spark, SF_DIR))
+    plan = _final_plan(plain("sketch_hll")(spark, SF_DIR))
     assert plan.count("HashAggregate") >= 4  # partial+final x 2 stages
     assert "partial_max" in plan  # the register max combines map-side
 
@@ -476,7 +455,7 @@ def test_lombscargle_single_aggregation_no_join_no_window(spark):
     aggregate algebra), and the Arrow transfer of a batched-Python
     variant measured a 3.5 s floor by itself (operators/lomb.py
     docstring, BASELINE.md)."""
-    plan = _static_plan(_contract_fn("lombscargle")(spark, SF_DIR))
+    plan = _static_plan(plain("lombscargle")(spark, SF_DIR))
     for node in _JOIN_NODES:
         assert node not in plan, node
     assert "Window" not in plan, "precenter window shuffle crept back"
@@ -487,7 +466,7 @@ def test_lombscargle_single_aggregation_no_join_no_window(spark):
 def test_acf_single_window_exchange_no_python(spark):
     """acf: one ordered-window exchange; every lag rides the same
     sort — a per-lag shuffle or a Python node is a regression."""
-    plan = _final_plan(_contract_fn("acf")(spark, SF_DIR))
+    plan = _final_plan(plain("acf")(spark, SF_DIR))
     for node in _JOIN_NODES:
         assert node not in plan, node
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
@@ -497,7 +476,7 @@ def test_acf_single_window_exchange_no_python(spark):
 
 
 def test_seasonal_decompose_is_pure_catalyst(spark):
-    plan = _static_plan(_contract_fn("seasonal_decompose")(spark, SF_DIR))
+    plan = _static_plan(plain("seasonal_decompose")(spark, SF_DIR))
     assert "BatchEvalPython" not in plan
     assert "ArrowEvalPython" not in plan
     assert "FlatMapGroupsInPandas" not in plan
@@ -508,7 +487,7 @@ def test_filter_by_quantile_threshold_is_broadcast(spark):
     """The per-group threshold frame must BROADCAST into the probe
     scan; a sort-merge join would reshuffle the corpus for a
     <= groups-row threshold table."""
-    plan = _static_plan(_contract_fn("filter_by_quantile")(spark, SF_DIR))
+    plan = _static_plan(plain("filter_by_quantile")(spark, SF_DIR))
     assert "BroadcastHashJoin" in plan
     assert "SortMergeJoin" not in plan
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
@@ -517,7 +496,7 @@ def test_filter_by_quantile_threshold_is_broadcast(spark):
 def test_cube_is_native_expand(spark):
     """CUBE must plan as the native Expand operator (one pass emitting
     every grouping set), not a union of per-set aggregations."""
-    plan = _static_plan(_contract_fn("cube_revenue")(spark, SF_DIR))
+    plan = _static_plan(plain("cube_revenue")(spark, SF_DIR))
     assert "Expand" in plan
     assert plan.count("Scan parquet") == 1  # one pass over lineitem
 
@@ -530,7 +509,7 @@ def test_bloom_semijoin_probe_is_pure_projection(spark):
     and the final exact join; nothing shuffles or semi-joins the probe
     side before the filter (the k-broadcast-semi draft measured 2.1 s
     of re-materialized bits subtrees, BASELINE.md r7)."""
-    plan = _static_plan(_contract_fn("bloom_semijoin")(spark, SF_DIR))
+    plan = _static_plan(plain("bloom_semijoin")(spark, SF_DIR))
     assert "getbit" in plan, plan
     assert "LeftSemi" not in plan, plan
     n_joins = sum(plan.count(j) for j in _JOIN_NODES)
@@ -543,7 +522,7 @@ def test_ohlc_bars_one_window_one_agg_no_join(spark):
     """ohlc_bars: one ordered window (holding times) + one map-side
     combinable aggregation; a join node or a per-bucket ranking window
     is a regression (open/close must stay min_by/max_by aggregates)."""
-    plan = _static_plan(_contract_fn("ohlc_bars")(spark, SF_DIR))
+    plan = _static_plan(plain("ohlc_bars")(spark, SF_DIR))
     for node in _JOIN_NODES:
         assert node not in plan, node
     assert plan.count("Window") == 1, plan
@@ -554,7 +533,7 @@ def test_latest_by_key_is_aggregate_not_window(spark):
     """latest_by_key must compact via max(struct) partial aggregation —
     the row_number window idiom (full shuffle + sort of every raw row,
     hot keys serialized onto one reducer) is exactly what it replaces."""
-    plan = _static_plan(_contract_fn("latest_by_key")(spark, SF_DIR))
+    plan = _static_plan(plain("latest_by_key")(spark, SF_DIR))
     for node in _JOIN_NODES:
         assert node not in plan, node
     assert "Window" not in plan, plan
@@ -565,7 +544,7 @@ def test_rolling_stats_single_window_exchange(spark):
     """rolling_stats: every statistic rides ONE range-frame window
     over ONE ordered exchange — a second exchange or a join means a
     per-stat window crept in."""
-    plan = _static_plan(_contract_fn("rolling_stats")(spark, SF_DIR))
+    plan = _static_plan(plain("rolling_stats")(spark, SF_DIR))
     for node in _JOIN_NODES:
         assert node not in plan, node
     assert plan.count("Window") == 1, plan
@@ -576,7 +555,7 @@ def test_interval_join_is_equi_not_nested_loop(spark):
     """interval_join plans the chunked equi hash join — never a
     BroadcastNestedLoopJoin/CartesianProduct, and no dedup shuffle
     (the later-start rule makes pairs exactly-once by construction)."""
-    plan = _static_plan(_contract_fn("interval_join")(spark, SF_DIR))
+    plan = _static_plan(plain("interval_join")(spark, SF_DIR))
     assert "BroadcastNestedLoopJoin" not in plan
     assert "CartesianProduct" not in plan
     assert "HashAggregate" not in plan.split("Join")[0] or True  # no post-join dedup agg
@@ -604,7 +583,7 @@ def test_pagerank_iteration_has_no_cartesian_and_partial_agg(spark):
 def test_zorder_curve_is_pure_codegen(spark):
     """zvalue is literal bit arithmetic: no Python/Arrow nodes, no
     join, one aggregation exchange for the per-user stats."""
-    plan = _static_plan(_contract_fn("zorder_curve")(spark, SF_DIR))
+    plan = _static_plan(plain("zorder_curve")(spark, SF_DIR))
     assert "Python" not in plan and "Arrow" not in plan, plan
     assert not any(j in plan for j in _JOIN_NODES), plan
     assert plan.count("Exchange hashpartitioning") <= 1, plan
@@ -617,7 +596,7 @@ def test_tpch_q4_is_left_semi_join(spark):
     """The EXISTS must plan as a LEFT SEMI hash join (never duplicates
     the probe side, never carries right columns); a nested-loop or
     cartesian here is quadratic at scale."""
-    plan = _static_plan(_contract_fn("tpch_q4")(spark, SF_DIR))
+    plan = _static_plan(plain("tpch_q4")(spark, SF_DIR))
     assert "LeftSemi" in plan, plan
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
@@ -626,7 +605,7 @@ def test_tpch_q4_is_left_semi_join(spark):
 def test_tpch_q18_topn_is_take_ordered(spark):
     """Top-100 must plan as TakeOrderedAndProject (per-partition heaps)
     — a global Sort+Limit materializes the whole join output."""
-    plan = _static_plan(_contract_fn("tpch_q18")(spark, SF_DIR))
+    plan = _static_plan(plain("tpch_q18")(spark, SF_DIR))
     assert "TakeOrderedAndProject" in plan, plan
     assert "CartesianProduct" not in plan
 
@@ -635,7 +614,7 @@ def test_grouped_ols_single_aggregation_no_window_no_join(spark):
     """grouped_ols is ONE partial-final HashAggregate chain: any Window
     or Join node means the sufficient-statistics algebra regressed to a
     multi-pass plan."""
-    plan = _static_plan(_contract_fn("grouped_ols")(spark, SF_DIR))
+    plan = _static_plan(plain("grouped_ols")(spark, SF_DIR))
     assert "Window" not in plan
     assert not any(j in plan for j in _JOIN_NODES), plan
     assert plan.count("HashAggregate") == 2, plan
@@ -645,7 +624,7 @@ def test_triangle_count_all_equi_joins(spark):
     """Degree-oriented triangle counting is hash joins end to end; a
     BroadcastNestedLoopJoin or CartesianProduct means a join condition
     stopped being an equi-key."""
-    plan = _static_plan(_contract_fn("triangle_count")(spark, SF_DIR))
+    plan = _static_plan(plain("triangle_count")(spark, SF_DIR))
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
 
@@ -655,7 +634,7 @@ def test_sequence_pack_windows_are_bucket_partitioned(spark):
     global-order window is allowed — the <= buckets-row offset frame.
     Two global windows = the single-reducer cumsum the operator exists
     to avoid."""
-    plan = _static_plan(_contract_fn("sequence_pack")(spark, SF_DIR))
+    plan = _static_plan(plain("sequence_pack")(spark, SF_DIR))
     # the per-row cumsum window hash-partitions on _bkt; its exchange
     # appears as hashpartitioning(_bkt...) ABOVE a Window node
     assert plan.count("Window") >= 2
@@ -665,7 +644,7 @@ def test_sequence_pack_windows_are_bucket_partitioned(spark):
 def test_sequence_pack_offsets_join_is_broadcast(spark):
     """The bucket-offset join back onto the data must broadcast the
     (<= buckets)-row side, never shuffle the documents."""
-    plan = _static_plan(_contract_fn("sequence_pack")(spark, SF_DIR))
+    plan = _static_plan(plain("sequence_pack")(spark, SF_DIR))
     assert "BroadcastHashJoin" in plan, plan
     assert "SortMergeJoin" not in plan, plan
 
@@ -673,7 +652,7 @@ def test_sequence_pack_offsets_join_is_broadcast(spark):
 def test_text_postings_two_stacked_aggregations(spark):
     """postings = explode -> (token, doc) agg -> token agg; both
     partial-final chains, no window, no join."""
-    plan = _static_plan(_contract_fn("text_postings")(spark, SF_DIR))
+    plan = _static_plan(plain("text_postings")(spark, SF_DIR))
     assert "Window" not in plan
     assert not any(j in plan for j in _JOIN_NODES), plan
 
@@ -681,7 +660,7 @@ def test_text_postings_two_stacked_aggregations(spark):
 def test_orders_unshipped_is_left_anti_join(spark):
     """NOT EXISTS must plan as LEFT ANTI hash join — the complement of
     tpch_q4's semi-join, same no-duplication guarantee."""
-    plan = _static_plan(_contract_fn("orders_unshipped")(spark, SF_DIR))
+    plan = _static_plan(plain("orders_unshipped")(spark, SF_DIR))
     assert "LeftAnti" in plan, plan
     assert "CartesianProduct" not in plan
 
@@ -689,13 +668,13 @@ def test_orders_unshipped_is_left_anti_join(spark):
 def test_event_pivot_is_one_aggregation(spark):
     """Pinned-values pivot compiles to ONE conditional-partial
     aggregate chain: no join, no per-type re-scan."""
-    plan = _static_plan(_contract_fn("event_pivot")(spark, SF_DIR))
+    plan = _static_plan(plain("event_pivot")(spark, SF_DIR))
     assert not any(j in plan for j in _JOIN_NODES), plan
     assert plan.count("HashAggregate") == 2, plan
 
 
 def test_json_props_stats_single_aggregation(spark):
-    plan = _static_plan(_contract_fn("json_props_stats")(spark, SF_DIR))
+    plan = _static_plan(plain("json_props_stats")(spark, SF_DIR))
     assert not any(j in plan for j in _JOIN_NODES), plan
     assert "Window" not in plan
 
@@ -704,7 +683,7 @@ def test_edit_distance_join_no_cartesian(spark):
     """Deletion-neighborhood blocking must stay an equi join on the
     variant string; a nested-loop/cartesian means the blocking key was
     lost and the operator degraded to all-pairs."""
-    plan = _static_plan(_contract_fn("edit_distance_join")(spark, SF_DIR))
+    plan = _static_plan(plain("edit_distance_join")(spark, SF_DIR))
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
 
@@ -712,7 +691,7 @@ def test_edit_distance_join_no_cartesian(spark):
 def test_bm25_small_sides_broadcast(spark):
     """df and corpus-stat sides are <= |query|+1 rows — they must
     broadcast; a SortMergeJoin there shuffles the postings twice."""
-    plan = _static_plan(_contract_fn("bm25_scores")(spark, SF_DIR))
+    plan = _static_plan(plain("bm25_scores")(spark, SF_DIR))
     assert plan.count("BroadcastHashJoin") + plan.count(
         "BroadcastNestedLoopJoin"
     ) >= 2, plan
@@ -723,7 +702,7 @@ def test_window_analytics_single_window_exchange(spark):
     """Six analytic functions share ONE window spec — exactly one sort
     under one hash exchange; a second Window sort means a spec
     diverged."""
-    plan = _static_plan(_contract_fn("window_analytics")(spark, SF_DIR))
+    plan = _static_plan(plain("window_analytics")(spark, SF_DIR))
     assert plan.count("Window") == 1 or (
         plan.count("Window") == 2 and plan.count("Sort") <= 2
     ), plan
@@ -734,14 +713,14 @@ def test_cdc_apply_is_aggregate_not_window(spark):
     """CDC materialization must keep latest_by_key's max(struct)
     single-aggregation plan; a Window node means it regressed to the
     row_number idiom (hot keys serialize)."""
-    plan = _static_plan(_contract_fn("cdc_apply")(spark, SF_DIR))
+    plan = _static_plan(plain("cdc_apply")(spark, SF_DIR))
     assert "Window" not in plan, plan
     assert not any(j in plan for j in _JOIN_NODES), plan
 
 
 def test_setops_and_recall_no_cartesian(spark):
     for name in ("active_user_setops", "ann_recall_eval"):
-        plan = _static_plan(_contract_fn(name)(spark, SF_DIR))
+        plan = _static_plan(plain(name)(spark, SF_DIR))
         assert "CartesianProduct" not in plan, name
 
 
@@ -763,7 +742,7 @@ def test_tpch_q10_aggregate_before_join_take_ordered(spark):
     the customer/nation dimension joins (the agg shrinks the join
     input to ≤1 row per buying customer) and cut the top-20 with
     TakeOrderedAndProject, never a global sort."""
-    plan = _static_plan(_contract_fn("tpch_q10")(spark, SF_DIR))
+    plan = _static_plan(plain("tpch_q10")(spark, SF_DIR))
     assert "TakeOrderedAndProject" in plan, plan
     assert "CartesianProduct" not in plan, plan
     # the per-custkey aggregate sits below the customer join: the
@@ -775,7 +754,7 @@ def test_tpch_q10_aggregate_before_join_take_ordered(spark):
 def test_tpch_q7_nation_broadcast_no_cartesian(spark):
     """Both nation hops are 25 rows at ANY scale — they must broadcast;
     the pair filter must not plan a cartesian."""
-    plan = _static_plan(_contract_fn("tpch_q7")(spark, SF_DIR))
+    plan = _static_plan(plain("tpch_q7")(spark, SF_DIR))
     assert plan.count("BroadcastHashJoin") >= 2, plan
     assert "CartesianProduct" not in plan, plan
 
@@ -784,7 +763,7 @@ def test_tpch_q15_max_is_broadcast_not_window(spark):
     """The scalar max joins back via a 1-row broadcast — a Window over
     an unpartitioned frame would serialize all suppliers through one
     task."""
-    plan = _static_plan(_contract_fn("tpch_q15")(spark, SF_DIR))
+    plan = _static_plan(plain("tpch_q15")(spark, SF_DIR))
     assert "Window" not in plan, plan
     assert "CartesianProduct" not in plan, plan
 
@@ -793,7 +772,7 @@ def test_tpch_q14_q22_no_cartesian(spark):
     """q14: part joins hash-side; q22: the only nested-loop is the
     intended 1-row scalar-average broadcast."""
     for name in ("tpch_q14", "tpch_q22"):
-        plan = _static_plan(_contract_fn(name)(spark, SF_DIR))
+        plan = _static_plan(plain(name)(spark, SF_DIR))
         assert "CartesianProduct" not in plan, (name, plan)
     assert plan.count("BroadcastNestedLoopJoin") <= 1, plan
 
@@ -804,7 +783,7 @@ def test_tpch_q8_q9_dims_broadcast_no_cartesian(spark):
     dim-join OUTPUT loses the size estimate and degenerates to
     fact-wide sort-merge shuffles); no cartesian anywhere."""
     for name, min_bcast in (("tpch_q8", 3), ("tpch_q9", 3)):
-        plan = _static_plan(_contract_fn(name)(spark, SF_DIR))
+        plan = _static_plan(plain(name)(spark, SF_DIR))
         assert plan.count("BroadcastHashJoin") >= min_bcast, (name, plan)
         assert "CartesianProduct" not in plan, (name, plan)
 
@@ -815,7 +794,7 @@ def test_tpch_q13_aggregate_below_outer_join(spark):
     shrinks the shuffle from every order row to per-custkey partials,
     and the counts frame broadcasts into the join) — so the plan
     carries a broadcast LeftOuter and no fact-wide SortMergeJoin."""
-    plan = _static_plan(_contract_fn("tpch_q13")(spark, SF_DIR))
+    plan = _static_plan(plain("tpch_q13")(spark, SF_DIR))
     assert "SortMergeJoin" not in plan, plan
     assert "LeftOuter" in plan, plan
     assert "CartesianProduct" not in plan, plan
@@ -827,11 +806,11 @@ def test_tpch_q17_q19_part_semireduction_broadcast(spark):
     a bounded fraction of parts at any scale); no cartesian, and q17's
     decorrelated per-part average must not plan a Window."""
     for name in ("tpch_q17", "tpch_q19"):
-        plan = _static_plan(_contract_fn(name)(spark, SF_DIR))
+        plan = _static_plan(plain(name)(spark, SF_DIR))
         assert "BroadcastHashJoin" in plan, (name, plan)
         assert "CartesianProduct" not in plan, (name, plan)
     assert "Window" not in _static_plan(
-        _contract_fn("tpch_q17")(spark, SF_DIR)
+        plain("tpch_q17")(spark, SF_DIR)
     )
 
 
@@ -844,7 +823,6 @@ def test_tpch_q17_q19_part_semireduction_broadcast(spark):
 # plain Union node.
 
 _MERGED_UNIONS = {
-    # r11 rotation
     "sosfilt": ("q_sosfilt", "q_sosfilt_chunked", "q_sosfiltfilt_merged"),
     "fftconvolve": ("q_convolve_family_merged", "q_convolve_merged", "q_deconvolve"),
     "multimodal_real_decode": (
@@ -857,7 +835,6 @@ _MERGED_UNIONS = {
     "tpch_q1": ("q_tpch_q1q6_merged", "q_tpch_q3q5_merged"),
     "welch": ("q_welch_merged", "q_csd_merged"),
     "dataset_mix": ("q_dataset_mix", "q_cap_per_group", "q_filter_by_quantile"),
-    # r10 rotation
     "istft_roundtrip": ("q_istft_roundtrip", "q_istft_native"),
     "lfilter": ("q_lfilter", "q_filtfilt"),
     "dataset_split": ("q_dataset_split", "q_dataset_stratified"),
@@ -867,8 +844,6 @@ _MERGED_UNIONS = {
     "text_logprob": ("q_text_logprob", "q_text_vocab"),
     "skew_join": ("q_skew_join", "q_bloom_semijoin"),
     "text_token_stats": ("q_text_stats_merged", "q_text_redact", "q_text_url_stats"),
-    # r12 rotation (clean_text's r11 hygiene union moved inside
-    # curation_report's slot)
     "resample": ("q_resample", "q_resample_poly", "q_resample_freq"),
     "dedup_exact": (
         "q_dedup_exact",
@@ -889,7 +864,7 @@ _MERGED_UNIONS = {
     "lineitem_rollup": ("q_lineitem_rollup", "q_cube_revenue"),
     "embedding_quantize": ("q_embedding_quantize", "q_embedding_pca"),
     "curation_report": ("q_curation_report", "q_text_hygiene_merged"),
-    # r13 rotation (sosfilt_stream@merged is excluded: its branches
+    # (sosfilt_stream's union is excluded: its branches
     # each EXECUTE a live readStream→memory-sink job when called, so
     # the static-plan comparison would run four streaming jobs to lock
     # a union of two memory-sink scans; its glue is covered by the
@@ -907,45 +882,19 @@ _MERGED_UNIONS = {
         "q_winsorize",
     ),
     "text_postings": ("q_text_postings", "q_bm25_scores"),
-    # r14 rotation
     "tpch_q7": ("q_tpch_q7", "q_tpch_q8", "q_tpch_q9"),
     "tpch_q14": ("q_tpch_q14", "q_tpch_q19"),
 }
 
-# Staged-but-unregistered retirement-first candidates (VERDICT r14
-# #3): same exchange-count glue lock as _MERGED_UNIONS, but the union
-# resolves from contract by builder name because no registration
-# points at it yet. An entry moves into _MERGED_UNIONS (keyed by the
-# surviving base's registered name) when its rotation executes —
-# e.g. "window_analytics": ("q_window_analytics", "q_event_pivot")
-# at the first r16+ merge.
-_STAGED_UNIONS = {
-    "q_event_widefam_merged": ("q_window_analytics", "q_event_pivot"),
-    # rule-c eval-twin dry-runs (staged r15): branches are the
-    # surviving base's registered union + the plain eval composition.
-    "q_ann_evalfam_merged": ("q_ann_cells_merged", "q_ann_recall_eval"),
-    "q_dedup_evalfam_merged": (
-        "q_dedup_pair_family_merged",
-        "q_dedup_recall_eval",
-    ),
-}
-
-
-@pytest.mark.parametrize(
-    "name", sorted(_MERGED_UNIONS) + sorted(_STAGED_UNIONS)
-)
+@pytest.mark.parametrize("name", sorted(_MERGED_UNIONS))
 def test_merged_union_adds_no_exchange(spark, name):
     """The registered variant-tag union must be pure unionAll glue:
     its static plan contains a Union node and no MORE Exchange nodes
     than its branches' plans sum to (reuse may shrink the count)."""
     from xarray_scipy_spark import contract as C
-    from xarray_scipy_spark.contract import QUERIES
 
-    if name in _STAGED_UNIONS:
-        union_fn, branches = getattr(C, name), _STAGED_UNIONS[name]
-    else:
-        union_fn, branches = QUERIES[name], _MERGED_UNIONS[name]
-    union_plan = _static_plan(union_fn(spark, SF_DIR))
+    branches = _MERGED_UNIONS[name]
+    union_plan = _static_plan(QUERIES[name](spark, SF_DIR))
     assert "Union" in union_plan, union_plan
     branch_sum = sum(
         _static_plan(getattr(C, b)(spark, SF_DIR)).count("Exchange")
@@ -1010,7 +959,7 @@ def test_keep_best_no_window_partial_argmax(spark):
     """keep_best's survivor rule must be a partial+final max_by
     aggregate (map-side combinable) — never a window over the corpus;
     every join an equi-join."""
-    plan = _static_plan(_contract_fn("dedup_keep_best")(spark, SF_DIR))
+    plan = _static_plan(plain("dedup_keep_best")(spark, SF_DIR))
     assert " Window" not in plan, plan
     assert "partial_max_by" in plan, plan
     assert "CartesianProduct" not in plan
@@ -1021,7 +970,7 @@ def test_key_skew_profile_two_aggregations_no_join(spark):
     """key_skew_profile is exactly the per-key count shuffle (the same
     exchange any downstream join would pay) + one keys-sized bucket
     aggregation: two hash exchanges, no join, no window, no Python."""
-    plan = _static_plan(_contract_fn("key_skew_profile")(spark, SF_DIR))
+    plan = _static_plan(plain("key_skew_profile")(spark, SF_DIR))
     assert not any(j in plan for j in _JOIN_NODES), plan
     assert " Window" not in plan
     assert "Python" not in plan and "Arrow" not in plan
@@ -1033,7 +982,7 @@ def test_dataset_split_safe_projection_after_one_join(spark):
     the corpus pays keyed equi-joins against the pair-node-sized
     component frame and nothing else (no corpus window, no cartesian,
     no Python)."""
-    plan = _static_plan(_contract_fn("dataset_split_safe")(spark, SF_DIR))
+    plan = _static_plan(plain("dataset_split_safe")(spark, SF_DIR))
     assert " Window" not in plan, plan
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan

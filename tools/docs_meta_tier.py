@@ -86,8 +86,7 @@ def main() -> int:
 
     out = {"reps": reps, "rows": {}}
     for name in names:
-        fn = C.QUERIES.get(name) or C._QUEUED[name][0]
-        osql = C.ORACLES.get(name) or C._QUEUED[name][1]
+        fn, osql = C.REGISTRY[name]
         sp = []
         for i in range(6):
             t0 = time.time()

@@ -81,10 +81,7 @@ def main() -> int:
     spark = get_spark("dsir-tier")
     tier = build(spark, reps)
 
-    if "dsir_weights" in C.QUERIES:
-        fn, osql = C.QUERIES["dsir_weights"], C.ORACLES["dsir_weights"]
-    else:
-        fn, osql = C._QUEUED["dsir_weights"]
+    fn, osql = C.REGISTRY["dsir_weights"]
 
     sp = []
     for i in range(6):

@@ -18,10 +18,7 @@ import duckdb
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from xarray_scipy_spark.contract import ORACLES, _QUEUED  # noqa: E402
-
-# queued (pre-registration) oracles measure identically
-ORACLES = {**ORACLES, **{k: v[1] for k, v in _QUEUED.items() if v[1] is not None}}
+from xarray_scipy_spark.contract import ORACLES  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 TABLES = (

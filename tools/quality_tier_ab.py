@@ -85,9 +85,7 @@ def main() -> int:
         if only is not None and name not in only:
             continue
         sp_med, sp_runs = _median5(lambda q=q: noop(q(spark, tier_dir)))
-        # quality-layer entries are queued until r15 — oracle lives in
-        # _QUEUED, not ORACLES
-        osql = C.ORACLES.get(name) or C._QUEUED[name][1]
+        osql = C.ORACLES[name]
         o_med, o_runs = _median5(lambda osql=osql: con.execute(osql).fetchall())
         out["rows"][name] = {
             "spark": sp_med, "spark_runs": sp_runs,

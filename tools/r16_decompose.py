@@ -29,16 +29,12 @@ sys.path.insert(0, REPO)
 
 
 def main() -> int:
-    import __spark_entry__ as e
-    import bench
-    from xarray_scipy_spark.contract import _QUEUED
+    from xarray_scipy_spark.contract import plain
     from xarray_scipy_spark.session import get_spark
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     names = sys.argv[1:]
     spark = get_spark("r16-decompose")
-    qs = e.queries()
-    plain = bench.plain_overrides()
 
     # bench.py warmup twin
     from xarray_scipy_spark.sources.tables import load_table
@@ -50,11 +46,7 @@ def main() -> int:
 
     out = []
     for name in names:
-        fn = (
-            plain.get(name)
-            or qs.get(name)
-            or (_QUEUED[name][0] if name in _QUEUED else None)
-        )
+        fn = plain(name)
         if fn is None:
             out.append({"name": name, "error": "unknown query"})
             continue

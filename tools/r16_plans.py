@@ -49,9 +49,8 @@ NODES = (
 
 
 def main() -> int:
-    import __spark_entry__ as e
     import bench
-    from xarray_scipy_spark.contract import _QUEUED
+    from xarray_scipy_spark.contract import plain
     from xarray_scipy_spark.session import get_spark
 
     outdir, tag = sys.argv[1], sys.argv[2]
@@ -59,16 +58,10 @@ def main() -> int:
     os.makedirs(outdir, exist_ok=True)
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     spark = get_spark("r16-plans")
-    qs = e.queries()
-    plain = bench.plain_overrides()
 
     rows = []
     for name in names:
-        fn = (
-            plain.get(name)
-            or qs.get(name)
-            or (_QUEUED[name][0] if name in _QUEUED else None)
-        )
+        fn = plain(name)
         if fn is None:
             continue
         try:

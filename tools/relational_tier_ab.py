@@ -182,19 +182,15 @@ def main() -> int:
             "nation", "region",
         )
     ]
-    registered = dict(getattr(C, "ORACLES", {}) or {})
     for name in tpch_queries:
-        if name in C._QUEUED:
-            fn, osql = C._QUEUED[name]
-        elif name in C.QUERIES and name in registered:
-            fn, osql = C.QUERIES[name], registered[name]
-        else:
-            valid = sorted(set(C._QUEUED) | (set(C.QUERIES) & set(registered)))
+        if name not in C.REGISTRY:
             print(
-                f"unknown query {name!r}; valid names: {', '.join(valid)}",
+                f"unknown query {name!r}; valid names: "
+                f"{', '.join(sorted(C.REGISTRY))}",
                 file=sys.stderr,
             )
             return 2
+        fn, osql = C.REGISTRY[name]
         s = spark_median(lambda: fn(spark, tdir))
         d = duck_median(views, osql)
         out[f"{name}@{reps}x"] = {

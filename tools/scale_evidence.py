@@ -162,7 +162,7 @@ def spark_median(spark, fn) -> float:
 
 def main() -> int:
     global REPLICAS, DST
-    from xarray_scipy_spark.contract import ORACLES, QUERIES, _QUEUED
+    from xarray_scipy_spark.contract import ORACLES, QUERIES
     from xarray_scipy_spark.session import get_spark
 
     args = sys.argv[1:]
@@ -185,9 +185,8 @@ def main() -> int:
 
     out = {}
     for name in names:
-        # r7-queued queries (contract._QUEUED) measure the same way
-        qfn = QUERIES.get(name) or _QUEUED[name][0]
-        osql = ORACLES.get(name) or _QUEUED[name][1]
+        qfn = QUERIES[name]
+        osql = ORACLES.get(name)
         t_spark = spark_median(spark, qfn)
         t_oracle = oracle_median(osql) if osql is not None else None
         out[name] = {

@@ -24,21 +24,14 @@ SENTINELS = ["audio_spectral", "dedup_ngram_spans", "sosfiltfilt"]
 _CHILD = r"""
 import json, os, sys, time
 sys.path.insert(0, {repo!r})
-import __spark_entry__ as e
-import bench
 from xarray_scipy_spark.session import get_spark
 from xarray_scipy_spark import contract as C
-from xarray_scipy_spark.contract import _QUEUED
 
 name = {name!r}
 sf_dir = {sf_dir!r}
 spark = get_spark("sentinel-" + name)
-qs = e.queries()
-# plan-continuity: sentinels measure the PLAIN single-variant plan
-# (the same override map the bench battery uses)
-plain = dict(bench.plain_overrides())
-plain.setdefault("sosfiltfilt", getattr(C, "q_sosfiltfilt", None))
-fn = plain.get(name) or qs.get(name) or (_QUEUED[name][0] if name in _QUEUED else None)
+# sentinels measure the same plain single-variant plan as the bench
+fn = C.plain(name)
 samples = []
 for i in range(6):
     t0 = time.time()

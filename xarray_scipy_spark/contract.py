@@ -2,10 +2,13 @@
 paired with an ANSI-SQL oracle DuckDB can run on the same parquet
 tables.
 
-``QUERIES[name](spark, sf_dir) -> DataFrame`` runs the operator through
-this engine; ``ORACLES[name]`` is the equivalent SQL. The driver
-compares row-count + schema + order-insensitive value hash, so every
-query here:
+``REGISTRY`` at the end of the module is the one table of record:
+``name -> (query, oracle)``. ``query(spark, sf_dir) -> DataFrame`` runs
+the operator through this engine and ``oracle`` is the equivalent SQL;
+``QUERIES`` and ``ORACLES`` are its two columns. To add a query, add one
+``REGISTRY`` row. Oracle builders call each other directly, so no
+builder depends on registration order. The driver compares row-count +
+schema + order-insensitive value hash, so every query here:
 
 - aliases every output column identically on both sides;
 - emits deterministic values: floats are rounded at a granularity that
@@ -55,20 +58,7 @@ from .kernels.filter_design import (
 )
 from .sources.tables import load_table
 
-__all__ = ["QUERIES", "ORACLES", "flagship"]
-
-QUERIES: dict = {}
-ORACLES: dict[str, str] = {}
-
-
-def _q(name: str, oracle: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-
-    return deco
+__all__ = ["REGISTRY", "QUERIES", "ORACLES", "flagship", "plain"]
 
 
 def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -134,26 +124,18 @@ spec AS (
 # FFT family
 # ---------------------------------------------------------------------------
 
-@_q(
-    "fft",
+_FFT_ORACLE = (
     f"WITH {_S}, {_SPEC} "
     "SELECT user_id, k AS idx, round(re, 4) + 0.0 AS re4, round(im, 4) + 0.0 AS im4 "
-    "FROM spec",
+    "FROM spec"
 )
+
+
 def q_fft(spark, sf_dir):
     res = ops.fft(_events(spark, sf_dir), by=["user_id"], dim="ts")
     return res.select("user_id", "idx", _r("re", 4, "re4"), _r("im", 4, "im4"))
 
 
-__doc_rfft_merged = """r7 rotation: the plain-rfft registration merged with its
-n=64/norm='ortho' variant into q_rfft_merged (registered under the base
-name "rfft" in the rotation block near the end of this module)."""
-
-
-# r8 rotation: hfft/ifft/irfft/ihfft merged into the 4-variant
-# q_fft_family_merged registered under the base name "ifft" (rotation
-# block at the end of this module); the per-variant oracles live on as
-# the _*_ORACLE strings the merged oracle unions.
 _HFFT_ORACLE = (
     f"WITH {_S}, "
     # positions m = 0..2(n-1)-1 for the Hermitian-extended output
@@ -246,9 +228,6 @@ def q_ihfft(spark, sf_dir):
     return back.select("user_id", "idx", _r("re", 6, "re6"), _r("im", 6, "im6"))
 
 
-# r8 rotation: fftshift/ifftshift/fftshift_2d merged into the
-# 3-variant q_fftshift_merged registered under the base name
-# "fftshift" (rotation block at the end of this module).
 _FFTSHIFT_ORACLE = (
     f"WITH {_S} "
     "SELECT user_id, (j + n // 2) % n AS idx, x AS value FROM s"
@@ -275,13 +254,14 @@ def q_ifftshift(spark, sf_dir):
 # convolution family
 # ---------------------------------------------------------------------------
 
-@_q(
-    "fftconvolve",
+_FFTCONVOLVE_ORACLE = (
     f"WITH {_S} "
     "SELECT a.user_id, a.j + b.j AS idx, round(sum(a.x * b.x), 4) + 0.0 AS conv4 "
     "FROM s a JOIN s b USING (user_id) "
-    "GROUP BY a.user_id, a.j + b.j",
+    "GROUP BY a.user_id, a.j + b.j"
 )
+
+
 def q_fftconvolve(spark, sf_dir):
     """Self-convolution (mode=full) of each user's series."""
     ev = _events(spark, sf_dir)
@@ -289,8 +269,7 @@ def q_fftconvolve(spark, sf_dir):
     return res.select("user_id", "idx", _r("value", 4, "conv4"))
 
 
-@_q(
-    "convolve",
+_CONVOLVE_ORACLE = (
     f"WITH {_S}, "
     "full_conv AS ("
     "  SELECT a.user_id, a.j + b.j AS k, a.n, sum(a.x * b.x) AS y"
@@ -298,8 +277,10 @@ def q_fftconvolve(spark, sf_dir):
     "  GROUP BY a.user_id, a.j + b.j, a.n"
     ") "
     "SELECT user_id, k - (n - 1) // 2 AS idx, round(y, 4) + 0.0 AS conv4 "
-    "FROM full_conv WHERE k - (n - 1) // 2 BETWEEN 0 AND n - 1",
+    "FROM full_conv WHERE k - (n - 1) // 2 BETWEEN 0 AND n - 1"
 )
+
+
 def q_convolve(spark, sf_dir):
     """convolve shim, mode=same (centered slice of the full output)."""
     ev = _events(spark, sf_dir)
@@ -417,14 +398,15 @@ def _centered_fir_sql(taps, x="x", over="w") -> str:
     return "(" + " + ".join(parts) + ")"
 
 
-@_q(
-    "decimate_fir",
+_DECIMATE_FIR_ORACLE = (
     f"WITH {_S}, "
     f"filt AS (SELECT user_id, j, {_centered_fir_sql(_DECIMATE_FIR_TAPS)} AS y "
     "FROM s WINDOW w AS (PARTITION BY user_id ORDER BY j)) "
     f"SELECT user_id, j // {_DECIMATE_Q} AS idx, round(y, 4) + 0.0 AS value4 "
-    f"FROM filt WHERE j % {_DECIMATE_Q} = 0",
+    f"FROM filt WHERE j % {_DECIMATE_Q} = 0"
 )
+
+
 def q_decimate_fir(spark, sf_dir):
     res = ops.decimate(
         _events(spark, sf_dir),
@@ -456,16 +438,10 @@ def _impulse_response_sql(sos: np.ndarray, length: int = 160) -> str:
 _DEC_IIR_SOS = cheby1_sos(8, 0.05, 0.8 / _DECIMATE_Q)
 
 
-# r7 rotation: decimate_iir causal + zero-phase variants merged into
-# q_decimate_iir_merged (registered under "decimate_iir" in the
-# rotation block near the end of this module).
-
-
 _RESAMPLE_NUM = 32
 
 
-@_q(
-    "resample",
+_RESAMPLE_ORACLE = (
     f"WITH {_S}, {_SPEC}, "
     # spectrum bins kept by Fourier resampling to num=32 (num < n always
     # holds here: n >= 45 per group), with the even-m Nyquist fold
@@ -481,8 +457,10 @@ _RESAMPLE_NUM = 32
     "round(sum((k.re * cos(2 * pi() * k.kt * p.m / 32) "
     "         - k.im * sin(2 * pi() * k.kt * p.m / 32)) / p.n), 4) + 0.0 AS value4 "
     "FROM m_pos p JOIN kept k ON k.user_id = p.user_id "
-    "GROUP BY p.user_id, p.m",
+    "GROUP BY p.user_id, p.m"
 )
+
+
 def q_resample(spark, sf_dir):
     res = ops.resample(
         _events(spark, sf_dir), _RESAMPLE_NUM, by=["user_id"], dim="ts"
@@ -490,8 +468,7 @@ def q_resample(spark, sf_dir):
     return res.select("user_id", "idx", _r("value", 4, "value4"))
 
 
-@_q(
-    "resample_freq",
+_RESAMPLE_FREQ_ORACLE = (
     f"WITH {_S}, {_SPEC}, "
     # identical kept-bin construction as `resample` (num=32 < n always)
     "kept AS ("
@@ -508,8 +485,10 @@ def q_resample(spark, sf_dir):
     "round(sum((k.re * sin(2 * pi() * k.kt * p.m / 32) "
     "         + k.im * cos(2 * pi() * k.kt * p.m / 32)) / p.n), 4) + 0.0 AS im4 "
     "FROM m_pos p JOIN kept k ON k.user_id = p.user_id "
-    "GROUP BY p.user_id, p.m",
+    "GROUP BY p.user_id, p.m"
 )
+
+
 def q_resample_freq(spark, sf_dir):
     """scipy's ``domain='freq'`` path: the input is the series' full
     complex FFT spectrum (ops.fft output) and resampling happens
@@ -541,8 +520,7 @@ _STFT_FRAMES = (
 _STFT_BINS = f"b AS (SELECT user_id, j AS k FROM s WHERE j <= {_STFT_FL // 2})"
 
 
-@_q(
-    "stft",
+_STFT_ORACLE = (
     f"WITH {_S}, {_STFT_FRAMES}, {_STFT_BINS} "
     "SELECT fr.user_id, fr.f AS frame, b.k AS bin, "
     f"round(sum(a.x * cos(2 * pi() * (a.j - fr.f * {_STFT_HOP}) * b.k / {_STFT_FL})), 4) + 0.0 AS re4, "
@@ -550,8 +528,10 @@ _STFT_BINS = f"b AS (SELECT user_id, j AS k FROM s WHERE j <= {_STFT_FL // 2})"
     "FROM fr "
     f"JOIN s a ON a.user_id = fr.user_id AND a.j BETWEEN fr.f * {_STFT_HOP} AND fr.f * {_STFT_HOP} + {_STFT_FL - 1} "
     "JOIN b ON b.user_id = fr.user_id "
-    "GROUP BY fr.user_id, fr.f, b.k",
+    "GROUP BY fr.user_id, fr.f, b.k"
 )
+
+
 def q_stft(spark, sf_dir):
     """Boxcar STFT (frame 16, hop 8); oracle = literal per-frame DFT."""
     res = ops.stft(
@@ -565,17 +545,6 @@ def q_stft(spark, sf_dir):
     return res.select("user_id", "frame", "bin", _r("re", 4, "re4"), _r("im", 4, "im4"))
 
 
-@_q(
-    "istft_roundtrip",
-    # the windowed least-squares overlap-add reproduces the original
-    # samples exactly wherever any covering Hann tap is nonzero: t=0 is
-    # dropped (periodic Hann w[0]=0) and the tail beyond the last full
-    # frame was never framed
-    f"WITH {_S} "
-    "SELECT user_id, j AS t, round(x, 4) + 0.0 AS val4 "
-    f"FROM s WHERE n >= {_STFT_FL} AND j >= 1 "
-    f"AND j <= ((n - {_STFT_FL}) // {_STFT_HOP}) * {_STFT_HOP} + {_STFT_FL - 1}",
-)
 def q_istft_roundtrip(spark, sf_dir):
     """stft → istft round trip (Hann, frame 16, hop 8) through
     :func:`operators.spectral_apply` with the identity transform — the
@@ -599,16 +568,14 @@ def q_istft_roundtrip(spark, sf_dir):
     return rec.select("user_id", "t", _r("value", 4, "val4"))
 
 
-@_q(
-    "istft_native",
-    # same reconstruction semantics as istft_roundtrip, hence the same
-    # oracle: the windowed least-squares overlap-add reproduces the
-    # original samples on every covered position with nonzero weight
+_ISTFT_NATIVE_ORACLE = (
     f"WITH {_S} "
     "SELECT user_id, j AS t, round(x, 4) + 0.0 AS val4 "
     f"FROM s WHERE n >= {_STFT_FL} AND j >= 1 "
-    f"AND j <= ((n - {_STFT_FL}) // {_STFT_HOP}) * {_STFT_HOP} + {_STFT_FL - 1}",
+    f"AND j <= ((n - {_STFT_FL}) // {_STFT_HOP}) * {_STFT_HOP} + {_STFT_FL - 1}"
 )
+
+
 def q_istft_native(spark, sf_dir):
     """stft → istft with the frame-parallel NATIVE overlap-add plan
     (per-frame irfft keyed by (series, frame), then reconstruction as a
@@ -658,11 +625,6 @@ def _welch_oracle(window: str = "hann") -> str:
     )
 
 
-# NOTE(r7): register q_welch_blackman (ops.welch window="blackman" vs
-# _welch_oracle("blackman")) when the rotation frees a head slot — the
-# r6 tail candidate pool (r5-green + r6-unchanged) is exhausted at
-# exactly head=50, and a new query must be driver-checked, not tailed.
-@_q("welch", _welch_oracle())
 def q_welch(spark, sf_dir):
     """Hann-windowed Welch averaged periodogram; oracle = the identical
     windowed DFT + frame average in SQL (window formula inline, the
@@ -722,7 +684,6 @@ def _cwt_oracle() -> str:
     return f"WITH {_S} " + " UNION ALL ".join(parts)
 
 
-@_q("cwt_ricker", _cwt_oracle())
 def q_cwt_ricker(spark, sf_dir):
     """Ricker continuous wavelet transform at three scales in ONE
     kernel exchange (position-major flat layout, native width/time
@@ -734,7 +695,6 @@ def q_cwt_ricker(spark, sf_dir):
     return res.select("user_id", "idx", _r("value", 4, "value4"))
 
 
-@_q("resample_poly", _resample_poly_oracle())
 def q_resample_poly(spark, sf_dir):
     """Rational-rate polyphase resampling (scipy resample_poly, up=3 /
     down=2 — output LONGER than input, exercising the ragged path where
@@ -746,8 +706,7 @@ def q_resample_poly(spark, sf_dir):
     return res.select("user_id", "idx", _r("value", 4, "value4"))
 
 
-@_q(
-    "periodogram",
+_PERIODOGRAM_ORACLE = (
     f"WITH {_S}, "
     "sd AS (SELECT user_id, j, x - avg(x) OVER (PARTITION BY user_id) AS x, n "
     "FROM s), "
@@ -760,8 +719,10 @@ def q_resample_poly(spark, sf_dir):
     ") "
     "SELECT user_id, k AS idx, "
     f"{_q3('(re * re + im * im) * (CASE WHEN k = 0 OR (n % 2 = 0 AND k = n // 2) THEN 1.0 ELSE 2.0 END) / n')} "
-    "AS power_q FROM spec",
+    "AS power_q FROM spec"
 )
+
+
 def q_periodogram(spark, sf_dir):
     """Whole-series single-segment periodogram (scipy boxcar window,
     detrend='constant'); oracle = literal DFT of the demeaned series
@@ -781,17 +742,16 @@ _XY = (
 )
 
 
-@_q(
-    "fftconvolve_complex",
-    # complex self-convolution of a = x + i*lag(x):
-    # re[k] = sum(x1*x2 - y1*y2), im[k] = sum(x1*y2 + y1*x2) over j1+j2=k
+_FFTCONVOLVE_COMPLEX_ORACLE = (
     f"WITH {_S}, {_XY} "
     "SELECT a.user_id, a.j + b.j AS idx, "
     "round(sum(a.x * b.x - a.yv * b.yv), 4) + 0.0 AS re4, "
     "round(sum(a.x * b.yv + a.yv * b.x), 4) + 0.0 AS im4 "
     "FROM xy a JOIN xy b USING (user_id) "
-    "GROUP BY a.user_id, a.j + b.j",
+    "GROUP BY a.user_id, a.j + b.j"
 )
+
+
 def q_fftconvolve_complex(spark, sf_dir):
     """COMPLEX-input convolution (twin re/im columns, the engine's
     complex convention): each user's analytic-ish signal
@@ -854,7 +814,6 @@ def _csd_oracle() -> str:
     )
 
 
-@_q("csd", _csd_oracle())
 def q_csd(spark, sf_dir):
     """Cross-spectral density of each series against its one-sample lag
     (cogrouped two-input framed spectra); oracle = the same windowed
@@ -876,8 +835,7 @@ def q_csd(spark, sf_dir):
     )
 
 
-@_q(
-    "coherence",
+_COHERENCE_ORACLE = (
     f"WITH {_S}, {_XY}, {_STFT_FRAMES}, {_STFT_BINS}, {_cross_spec_sql()}, "
     "m AS (SELECT user_id, k, avg(xre * xre + xim * xim) AS sxx, "
     "avg(yre * yre + yim * yim) AS syy, "
@@ -885,8 +843,10 @@ def q_csd(spark, sf_dir):
     "FROM spec GROUP BY user_id, k) "
     "SELECT user_id, k AS idx, "
     "round(CASE WHEN sxx * syy > 0 THEN (sre * sre + sim * sim) / (sxx * syy) "
-    "ELSE 0.0 END, 6) + 0.0 AS coh6 FROM m",
+    "ELSE 0.0 END, 6) + 0.0 AS coh6 FROM m"
 )
+
+
 def q_coherence(spark, sf_dir):
     """Magnitude-squared coherence against the one-sample lag (window
     energy and fold cancel); oracle = the same frame-averaged ratio."""
@@ -916,7 +876,6 @@ def _spectrogram_oracle() -> str:
     )
 
 
-@_q("spectrogram", _spectrogram_oracle())
 def q_spectrogram(spark, sf_dir):
     """Hann spectrogram: |STFT|^2 per (frame, bin) — the stft operator
     plus one native power projection (no extra kernel pass)."""
@@ -942,12 +901,10 @@ _RFFT_PAD_N = 64
 # NOTE: bins k=0 and k=16 of a 64-point DFT have cos/sin terms of
 # exactly 0/±1, so with lattice-quantized inputs the sums land exactly
 # on rounding half-boundaries — the epsilon-floor quantizer (module
-# top) is required for the n=64/ortho rfft variant, which the r7
-# rotation folded into q_rfft_merged (registered as "rfft" below).
+# top) is required for the n=64/ortho rfft variant of q_rfft_merged.
 
 
-@_q(
-    "detrend",
+_DETREND_ORACLE = (
     f"WITH {_S}, "
     "m AS (SELECT user_id, avg(x) AS ex, avg(j) AS ep, avg(j * x) AS epx, "
     "avg(j * j) AS epp FROM s GROUP BY user_id), "
@@ -955,8 +912,10 @@ _RFFT_PAD_N = 64
     "FROM m) "
     "SELECT s.user_id, s.j AS idx, "
     "CAST(floor((s.x - (f.ex - f.slope * f.ep) - f.slope * s.j) * 1000 + 0.5 + 1e-6) AS BIGINT) AS resid_q "
-    "FROM s JOIN fit f USING (user_id)",
+    "FROM s JOIN fit f USING (user_id)"
 )
+
+
 def q_detrend(spark, sf_dir):
     """Linear detrend — pure Catalyst closed-form least squares (no
     kernel, one window exchange); oracle = the same moment formulas as
@@ -982,9 +941,6 @@ _MEDFILT_CASE = (
 )
 
 
-# r8 rotation: medfilt + wiener merged into the 2-variant
-# q_medfilt_merged registered under the base name "medfilt" (rotation
-# block at the end of this module).
 _MEDFILT_ORACLE = (
     f"WITH {_S}, "
     "m AS (SELECT user_id, j, list_sort(list(x) OVER w) AS a FROM s "
@@ -1069,23 +1025,25 @@ _HILBERT_CORE = (
 )
 
 
-@_q(
-    "hilbert",
+_HILBERT_ORACLE = (
     f"WITH {_S}, {_SPEC}, {_HILBERT_CORE} "
     "SELECT user_id, idx, round(re, 4) + 0.0 AS re4, round(im, 4) + 0.0 AS im4 "
-    "FROM an",
+    "FROM an"
 )
+
+
 def q_hilbert(spark, sf_dir):
     res = ops.hilbert(_events(spark, sf_dir), by=["user_id"], dim="ts")
     return res.select("user_id", "idx", _r("re", 4, "re4"), _r("im", 4, "im4"))
 
 
-@_q(
-    "hilbert_envelope",
+_HILBERT_ENVELOPE_ORACLE = (
     f"WITH {_S}, {_SPEC}, {_HILBERT_CORE} "
     "SELECT user_id, idx, round(sqrt(re * re + im * im), 4) + 0.0 AS env4 "
-    "FROM an",
+    "FROM an"
 )
+
+
 def q_hilbert_envelope(spark, sf_dir):
     res = ops.envelope(
         ops.hilbert(_events(spark, sf_dir), by=["user_id"], dim="ts")
@@ -1100,14 +1058,15 @@ def q_hilbert_envelope(spark, sf_dir):
 _SOSFILT_SOS = butter_sos(4, 0.3)
 
 
-@_q(
-    "sosfilt",
+_SOSFILT_ORACLE = (
     f"WITH {_S}, {_impulse_response_sql(_SOSFILT_SOS)} "
     "SELECT xi.user_id, xi.j AS idx, round(sum(h.hv * xj.x), 4) + 0.0 AS value4 "
     "FROM s xi JOIN h ON h.m <= xi.j "
     "JOIN s xj ON xj.user_id = xi.user_id AND xj.j = xi.j - h.m "
-    "GROUP BY xi.user_id, xi.j",
+    "GROUP BY xi.user_id, xi.j"
 )
+
+
 def q_sosfilt(spark, sf_dir):
     res = ops.sosfilt(
         _SOSFILT_SOS, _events(spark, sf_dir), by=["user_id"], dim="ts"
@@ -1115,14 +1074,15 @@ def q_sosfilt(spark, sf_dir):
     return res.select("user_id", "idx", _r("value", 4, "value4"))
 
 
-@_q(
-    "sosfilt_chunked",
+_SOSFILT_CHUNKED_ORACLE = (
     f"WITH {_S}, {_impulse_response_sql(_SOSFILT_SOS)} "
     "SELECT xi.user_id, xi.j AS idx, round(sum(h.hv * xj.x), 4) + 0.0 AS value4 "
     "FROM s xi JOIN h ON h.m <= xi.j "
     "JOIN s xj ON xj.user_id = xi.user_id AND xj.j = xi.j - h.m "
-    "GROUP BY xi.user_id, xi.j",
+    "GROUP BY xi.user_id, xi.j"
 )
+
+
 def q_sosfilt_chunked(spark, sf_dir):
     """Chunked long-series sosfilt (sequential passes with per-series
     zi handoff, worker memory bounded by chunk_rows not series length).
@@ -1242,11 +1202,8 @@ def _sosfiltfilt_oracle_sql() -> str:
     )
 
 
-# r7 rotation: sosfiltfilt padtype odd/even variants merged into
-# q_sosfiltfilt_merged (registered under "sosfiltfilt" in the rotation
-# block near the end of this module). The even padtype is scipy's
-# mirror-without-sign-flip edge extension; the reference forwards
-# padtype to scipy (signal.py:449).
+# The even padtype is scipy's mirror-without-sign-flip edge extension;
+# the reference forwards padtype to scipy (signal.py:449).
 
 
 # transfer-function (b, a) form: 5-tap numerator/denominator from the
@@ -1256,14 +1213,15 @@ _LF_B, _LF_A = sos2tf(butter_sos(4, 0.2))
 _LF_H = lfilter_1d(_LF_B, _LF_A, np.eye(1, 160, 0).ravel())
 
 
-@_q(
-    "lfilter",
+_LFILTER_ORACLE = (
     f"WITH {_S}, {_values_cte('h', 'hv', _LF_H)} "
     "SELECT xi.user_id, xi.j AS idx, round(sum(h.hv * xj.x), 4) + 0.0 AS value4 "
     "FROM s xi JOIN h ON h.m <= xi.j "
     "JOIN s xj ON xj.user_id = xi.user_id AND xj.j = xi.j - h.m "
-    "GROUP BY xi.user_id, xi.j",
+    "GROUP BY xi.user_id, xi.j"
 )
+
+
 def q_lfilter(spark, sf_dir):
     """Causal (b, a) transfer-function filter (scipy.signal.lfilter —
     the surface the reference's sos-only wrappers stop short of);
@@ -1275,11 +1233,12 @@ def q_lfilter(spark, sf_dir):
     return res.select("user_id", "idx", _r("value", 4, "value4"))
 
 
-@_q(
-    "filtfilt",
+_FILTFILT_ORACLE = (
     f"WITH {_S}, {_filtfilt_chain_sql(ba=(_LF_B, _LF_A))} "
-    "SELECT user_id, idx, round(y, 4) + 0.0 AS value4 FROM ff",
+    "SELECT user_id, idx, round(y, 4) + 0.0 AS value4 FROM ff"
 )
+
+
 def q_filtfilt(spark, sf_dir):
     """Zero-phase (b, a) filtfilt (scipy pad-method semantics, default
     odd extension, padlen 3·max(len(b), len(a))); oracle = the filtfilt
@@ -1333,9 +1292,6 @@ def _savgol_oracle_sql(w: int, m: int, deriv: int, digits: int, alias: str) -> s
 _SG_W, _SG_M = 7, 3
 
 
-# r8 rotation: savgol + savgol_deriv merged into q_savgol_merged,
-# registered under the base name "savgol" (rotation block at the end
-# of this module).
 def q_savgol(spark, sf_dir):
     """Savitzky–Golay smoothing with scipy's mode='interp' edges
     (polynomial fit to the first/last window, evaluated at the edge
@@ -1441,7 +1397,6 @@ FROM fin
 """
 
 
-@_q("peak_widths", _peak_widths_oracle())
 def q_peak_widths(spark, sf_dir):
     """Widths of interior local maxima of each user's series at half
     prominence. Peaks are detected in pure SQL (strict local maxima);
@@ -1467,8 +1422,7 @@ _FP_HEIGHT = 0.0
 _FP_THRESHOLD = 0.05
 
 
-@_q(
-    "find_peaks",
+_FIND_PEAKS_ORACLE = (
     f"WITH {_S}, "
     "nb AS ("
     "  SELECT user_id, j, x,"
@@ -1502,8 +1456,10 @@ _FP_THRESHOLD = 0.05
     ") "
     "SELECT user_id, "
     "CAST(row_number() OVER (PARTITION BY user_id ORDER BY j) - 1 AS BIGINT) AS peak, "
-    "j AS index, round(x, 4) + 0.0 AS val4 FROM pk",
+    "j AS index, round(x, 4) + 0.0 AS val4 FROM pk"
 )
+
+
 def q_find_peaks(spark, sf_dir):
     """In-engine peak detection (strict local maxima + scipy-style
     height/threshold filters) — the producer side of peak_widths. Pure
@@ -1527,8 +1483,7 @@ def q_find_peaks(spark, sf_dir):
 # flagship: per-user dominant frequency (rfft -> argmax |X[k]|, k >= 1)
 # ---------------------------------------------------------------------------
 
-@_q(
-    "dominant_frequency",
+_DOMINANT_FREQUENCY_ORACLE = (
     f"WITH {_S}, {_SPEC}, "
     "mag AS ("
     "  SELECT user_id, k, n, round(sqrt(re * re + im * im), 3) + 0.0 AS m3"
@@ -1538,8 +1493,10 @@ def q_find_peaks(spark, sf_dir):
     "  SELECT user_id, k, m3,"
     "         row_number() OVER (PARTITION BY user_id ORDER BY m3 DESC, k) AS rnk"
     "  FROM mag"
-    ") WHERE rnk = 1",
+    ") WHERE rnk = 1"
 )
+
+
 def q_dominant_frequency(spark, sf_dir):
     spec = ops.rfft(_events(spark, sf_dir), by=["user_id"], dim="ts")
     mag = spec.filter(F.col("idx") >= 1).select(
@@ -1583,11 +1540,12 @@ _SHINGLES = (
 )
 
 
-@_q(
-    "dedup_exact",
+_DEDUP_EXACT_ORACLE = (
     "SELECT md5(text) AS content_hash, min(doc_id) AS keep_id, "
-    "count(*) AS n_copies FROM documents GROUP BY md5(text)",
+    "count(*) AS n_copies FROM documents GROUP BY md5(text)"
 )
+
+
 def q_dedup_exact(spark, sf_dir):
     return pl.exact_duplicates(_docs(spark, sf_dir))
 
@@ -1635,7 +1593,6 @@ SELECT a_id, b_id, jaccard FROM (
 """
 
 
-@_q("dedup_minhash", _minhash_oracle())
 def q_dedup_minhash(spark, sf_dir):
     return pl.minhash_pairs(
         _docs(spark, sf_dir),
@@ -1676,7 +1633,6 @@ SELECT a_id, b_id, hamming FROM cand WHERE hamming <= {_SIMHASH_MAXDIST}
 """
 
 
-@_q("dedup_simhash", _simhash_oracle())
 def q_dedup_simhash(spark, sf_dir):
     res = pl.simhash_pairs(_docs(spark, sf_dir), max_distance=_SIMHASH_MAXDIST)
     return res.select("a_id", "b_id", F.col("hamming").cast("int").alias("hamming"))
@@ -1685,8 +1641,7 @@ def q_dedup_simhash(spark, sf_dir):
 _NGRAM_THRESHOLD = 0.5
 
 
-@_q(
-    "dedup_ngram_jaccard",
+_DEDUP_NGRAM_JACCARD_ORACLE = (
     f"WITH {_TOKS}, {_SHINGLES}, "
     "sizes AS (SELECT doc_id, len(shingles) AS set_size FROM sh), "
     "inv AS (SELECT doc_id, unnest(shingles) AS sh FROM sh), "
@@ -1701,8 +1656,10 @@ _NGRAM_THRESHOLD = 0.5
     "  FROM inter i"
     "  JOIN sizes za ON za.doc_id = i.a_id"
     "  JOIN sizes zb ON zb.doc_id = i.b_id"
-    f") WHERE jaccard >= {_NGRAM_THRESHOLD}",
+    f") WHERE jaccard >= {_NGRAM_THRESHOLD}"
 )
+
+
 def q_dedup_ngram_jaccard(spark, sf_dir):
     return pl.ngram_jaccard_pairs(
         _docs(spark, sf_dir), threshold=_NGRAM_THRESHOLD
@@ -1724,15 +1681,16 @@ _EMB_DOT = (
 )
 
 
-@_q(
-    "dedup_embedding",
+_DEDUP_EMBEDDING_ORACLE = (
     f"WITH {_EMB_NORM} "
     "SELECT a_id, b_id, cos_sim FROM ("
     f"  SELECT a.vec_id AS a_id, b.vec_id AS b_id,"
     f"         round({_EMB_DOT} / (a.nrm * b.nrm), 6) + 0.0 AS cos_sim"
     "  FROM nv a JOIN nv b ON a.vec_id < b.vec_id"
-    f") WHERE cos_sim >= {_EMB_THRESHOLD}",
+    f") WHERE cos_sim >= {_EMB_THRESHOLD}"
 )
+
+
 def q_dedup_embedding(spark, sf_dir):
     # method pinned to 'exact': the oracle is exact all-pairs, while the
     # 'auto' default switches to approximate LSH above 100k vectors —
@@ -1758,14 +1716,15 @@ _ANN_SCORED = (
 )
 
 
-@_q(
-    "ann_cosine_topk",
+_ANN_COSINE_TOPK_ORACLE = (
     f"WITH {_EMB_NORM}, {_ANN_SCORED.format(extra='')} "
     "SELECT query_id, rank, neighbor_id, cos_sim FROM ("
     "  SELECT *, CAST(row_number() OVER (PARTITION BY query_id "
     "    ORDER BY cos_sim DESC, neighbor_id) AS INTEGER) AS rank FROM scored"
-    f") WHERE rank <= {_ANN_K}",
+    f") WHERE rank <= {_ANN_K}"
 )
+
+
 def q_ann_cosine_topk(spark, sf_dir):
     emb = _emb(spark, sf_dir)
     return pl.cosine_topk(
@@ -1773,14 +1732,15 @@ def q_ann_cosine_topk(spark, sf_dir):
     )
 
 
-@_q(
-    "ann_cosine_topk_ivf",
+_ANN_COSINE_TOPK_IVF_ORACLE = (
     f"WITH {_EMB_NORM}, {_ANN_SCORED.format(extra=' AND b.label = a.label')} "
     "SELECT query_id, rank, neighbor_id, cos_sim FROM ("
     "  SELECT *, CAST(row_number() OVER (PARTITION BY query_id "
     "    ORDER BY cos_sim DESC, neighbor_id) AS INTEGER) AS rank FROM scored"
-    f") WHERE rank <= {_ANN_K}",
+    f") WHERE rank <= {_ANN_K}"
 )
+
+
 def q_ann_cosine_topk_ivf(spark, sf_dir):
     emb = _emb(spark, sf_dir)
     return pl.cosine_topk_ivf(
@@ -1843,7 +1803,6 @@ def _kmeans_topk_oracle() -> str:
     )
 
 
-@_q("ann_cosine_topk_kmeans", _kmeans_topk_oracle())
 def q_ann_cosine_topk_kmeans(spark, sf_dir):
     """IVF with a BUILT index: Lloyd k-means (2 deterministic
     iterations, distributed assignment + per-cell mean updates) builds
@@ -1895,7 +1854,6 @@ def _lsh_topk_oracle() -> str:
     )
 
 
-@_q("ann_cosine_topk_lsh", _lsh_topk_oracle())
 def q_ann_cosine_topk_lsh(spark, sf_dir):
     """Multiprobe SRP-LSH top-k (8 planes, own bucket + 2 one-bit
     flips); oracle replicates the deterministic hyperplane literals and
@@ -1911,9 +1869,6 @@ def q_ann_cosine_topk_lsh(spark, sf_dir):
     )
 
 
-# r8 rotation: text_token_stats + text_quality merged into the
-# 2-variant q_text_stats_merged registered under the base name
-# "text_token_stats" (rotation block at the end of this module).
 _TOKEN_STATS_ORACLE = (
     f"WITH {_TOKS} "
     "SELECT d.doc_id, CAST(length(d.text) AS BIGINT) AS n_chars, "
@@ -2000,7 +1955,6 @@ def _curation_oracle() -> str:
     )
 
 
-@_q("curation_report", _curation_oracle())
 def q_curation_report(spark, sf_dir):
     """The pipeline composed end-to-end: per-document curation verdict
     (quality gate -> exact dedup -> MinHash near-dup, deterministic
@@ -2053,7 +2007,6 @@ def _quantize_oracle() -> str:
     )
 
 
-@_q("embedding_quantize", _quantize_oracle())
 def q_embedding_quantize(spark, sf_dir):
     """Symmetric per-dimension int8 scalar quantization of the corpus
     embeddings (the 4× memory/bandwidth lever for vector search at
@@ -2120,7 +2073,6 @@ def _pca_oracle() -> str:
     )
 
 
-@_q("embedding_pca", _pca_oracle())
 def q_embedding_pca(spark, sf_dir):
     """Driver-verifiable PCA (pipeline/similarity.py): the distributed
     moment pass (each partition emits d + d² floats, never rows) feeds
@@ -2194,8 +2146,7 @@ def q_embedding_pca(spark, sf_dir):
 _STRAT_FRACS = {"en": 0.5, "de": 0.25}  # other langs dropped
 
 
-@_q(
-    "dataset_stratified",
+_DATASET_STRATIFIED_ORACLE = (
     "WITH u AS ("
     "  SELECT doc_id, lang,"
     "    (('0x' || substring(md5('strat|' || CAST(doc_id AS VARCHAR)), 1, 15))::BIGINT"
@@ -2206,8 +2157,10 @@ _STRAT_FRACS = {"en": 0.5, "de": 0.25}  # other langs dropped
     "CAST(max(doc_id) AS BIGINT) AS max_id, "
     "CAST(sum(doc_id) AS BIGINT) AS sum_id FROM u "
     "WHERE u < CASE lang WHEN 'en' THEN 0.5 WHEN 'de' THEN 0.25 ELSE 0.0 END "
-    "GROUP BY lang",
+    "GROUP BY lang"
 )
+
+
 def q_dataset_stratified(spark, sf_dir):
     """Per-stratum deterministic subsample (salted-hash uniform vs a
     per-language fraction; unlisted strata drop — pipeline/sample.py
@@ -2228,10 +2181,7 @@ def q_dataset_stratified(spark, sf_dir):
     )
 
 
-@_q(
-    "dataset_split",
-    # hash_uniform reproduced literally: first 15 hex chars of
-    # md5('split|' || id) over 16^15
+_DATASET_SPLIT_ORACLE = (
     "WITH u AS ("
     "  SELECT doc_id, lang,"
     "    (('0x' || substring(md5('split|' || CAST(doc_id AS VARCHAR)), 1, 15))::BIGINT"
@@ -2240,8 +2190,10 @@ def q_dataset_stratified(spark, sf_dir):
     ") "
     "SELECT CASE WHEN u < 0.8 THEN 'train' WHEN u < 0.9 THEN 'val' "
     "ELSE 'test' END AS split, lang, count(*) AS n "
-    "FROM u GROUP BY split, lang",
+    "FROM u GROUP BY split, lang"
 )
+
+
 def q_dataset_split(spark, sf_dir):
     """Deterministic train/val/test assignment (salted-hash uniform,
     pure projection — no shuffle, no sampling state, stable under any
@@ -2256,8 +2208,7 @@ def q_dataset_split(spark, sf_dir):
 _MIX_RATES = {"en": 1.0, "de": 0.5, "fr": 0.25}
 
 
-@_q(
-    "dataset_mix",
+_DATASET_MIX_ORACLE = (
     "WITH m AS ("
     + " UNION ALL ".join(
         f"SELECT doc_id, '{lang}' AS source FROM documents WHERE lang = '{lang}' "
@@ -2266,8 +2217,10 @@ _MIX_RATES = {"en": 1.0, "de": 0.5, "fr": 0.25}
         for lang, rate in _MIX_RATES.items()
     )
     + ") SELECT source, count(*) AS n, min(doc_id) AS min_id, max(doc_id) AS max_id "
-    "FROM m GROUP BY source",
+    "FROM m GROUP BY source"
 )
+
+
 def q_dataset_mix(spark, sf_dir):
     """Weighted domain mixture (pipeline/sample.py mix_datasets): the
     documents table split by lang plays three sources sampled at
@@ -2312,14 +2265,7 @@ def _lang_id_oracle() -> str:
     )
 
 
-# r7 rotation: text_lang_id + text_fingerprint merged into
-# q_text_lang_fp (registered under "text_lang_id" in the rotation
-# block near the end of this module; _lang_id_oracle above feeds the
-# merged oracle).
-
-
-@_q(
-    "text_repetition",
+_TEXT_REPETITION_ORACLE = (
     f"WITH {_TOKS}, "
     "u AS (SELECT doc_id, len(tk) AS n, len(list_distinct(tk)) AS d "
     "FROM toks WHERE len(tk) > 0), "
@@ -2333,8 +2279,10 @@ def _lang_id_oracle() -> str:
     "SELECT u.doc_id, CAST(u.n AS BIGINT) AS n_tokens, "
     "round(1.0 - CAST(u.d AS DOUBLE) / u.n, 6) + 0.0 AS dupfrac6, "
     "round(coalesce(tb.share, 0.0), 6) + 0.0 AS topbi6 "
-    "FROM u LEFT JOIN tb ON tb.doc_id = u.doc_id",
+    "FROM u LEFT JOIN tb ON tb.doc_id = u.doc_id"
 )
+
+
 def q_text_repetition(spark, sf_dir):
     """Gopher-style repetition quality signals: duplicate-token
     fraction + top-bigram share per doc (pipeline/text.py
@@ -2368,7 +2316,6 @@ def _redact_oracle() -> str:
     )
 
 
-@_q("text_redact", _redact_oracle())
 def q_text_redact(spark, sf_dir):
     """PII redaction over documents whose text is augmented (on BOTH
     sides, same SQL arithmetic) with a synthetic email, IPv4, and phone
@@ -2397,15 +2344,16 @@ _URL_AUG_SQL = (
 )
 
 
-@_q(
-    "text_url_stats",
+_TEXT_URL_STATS_ORACLE = (
     f"WITH aug AS (SELECT doc_id, {_URL_AUG_SQL} AS text FROM documents) "
     "SELECT doc_id, "
     f"CAST(len(regexp_extract_all(text, '{pl.text.URL_PATTERN}')) AS BIGINT) AS n_urls, "
     f"CAST(len(list_distinct(regexp_extract_all(text, '{pl.text.URL_DOMAIN_PATTERN}', 1))) AS BIGINT) AS n_domains, "
     f"coalesce(regexp_extract_all(text, '{pl.text.URL_DOMAIN_PATTERN}', 1)[1], '') AS first_domain "
-    "FROM aug",
+    "FROM aug"
 )
+
+
 def q_text_url_stats(spark, sf_dir):
     """URL/domain inventory over documents whose text is augmented (on
     BOTH sides, same SQL arithmetic) with three synthetic URLs per doc
@@ -2443,13 +2391,7 @@ def _deconvolve_oracle() -> str:
     to the signal — i.e. convolution with the divisor's inverse impulse
     response (precomputed literal, decays below 1e-18 well before 160
     taps) — truncated to n−d+1; the remainder re-convolves the divisor
-    over the quotient with short window lags.
-
-    NOTE(r7): registered-in-waiting, same reason as
-    ``_dup_ngram_oracle`` — validated green against the Spark side at
-    both gate scales in r6; register as
-    ``@_q("deconvolve", _deconvolve_oracle())`` next rotation.
-    """
+    over the quotient with short window lags."""
     from .kernels.dsp import lfilter_1d
 
     imp = np.zeros(160)
@@ -2487,14 +2429,7 @@ _DUPNG_K = 8
 def _dup_ngram_oracle() -> str:
     """DuckDB mirror of pipeline.dedup.duplicated_ngram_spans (k=8,
     min_docs=2): positional word-8-grams, h60 gram hash, distinct-doc
-    counts, per-doc covered-token fraction via list algebra.
-
-    NOTE(r7): registered-in-waiting — validated green against the Spark
-    side at sf0.001 and sf0.01 during r6, but the r6 head is full (every
-    slot holds a query with no green row yet). Register as
-    ``@_q("dedup_ngram_spans", _dup_ngram_oracle())`` in the r7
-    rotation.
-    """
+    counts, per-doc covered-token fraction via list algebra."""
     k = _DUPNG_K
     return (
         "WITH toks AS (SELECT doc_id, "
@@ -2527,8 +2462,7 @@ def _dup_ngram_oracle() -> str:
 _DECON_BENCH_MOD = 50  # doc_id % 50 == 0 -> the "benchmark" eval set
 
 
-@_q(
-    "decontaminate",
+_DECONTAMINATE_ORACLE = (
     f"WITH {_TOKS}, {_SHINGLES}, "
     f"bench AS (SELECT DISTINCT unnest(shingles) AS s FROM sh "
     f"WHERE doc_id % {_DECON_BENCH_MOD} = 0), "
@@ -2539,8 +2473,10 @@ _DECON_BENCH_MOD = 50  # doc_id % 50 == 0 -> the "benchmark" eval set
     "SELECT d.doc_id, CAST(coalesce(h.n_shared, 0) AS BIGINT) AS n_shared_ngrams, "
     "coalesce(h.n_shared, 0) > 0 AS contaminated "
     "FROM documents d LEFT JOIN hits h ON h.doc_id = d.doc_id "
-    f"WHERE d.doc_id % {_DECON_BENCH_MOD} <> 0",
+    f"WHERE d.doc_id % {_DECON_BENCH_MOD} <> 0"
 )
+
+
 def q_decontaminate(spark, sf_dir):
     """Test-set decontamination: every 50th document plays the eval
     suite; the rest of the corpus is scored for distinct shared word
@@ -2568,7 +2504,6 @@ def _multimodal_oracle() -> str:
     )
 
 
-@_q("multimodal_features", _multimodal_oracle())
 def q_multimodal_features(spark, sf_dir):
     df = pl.with_binary(_docs(spark, sf_dir))
     return pl.decode_features(df, n_features=_MM_FEATURES)
@@ -2578,10 +2513,7 @@ _FRAME_BYTES = 8
 _FRAME_EVERY = 3
 
 
-@_q(
-    "multimodal_frame_sample",
-    # document text is pure ASCII at test scale, so byte frames equal
-    # character substrings; frame k covers chars [k*8+1, k*8+8]
+_MULTIMODAL_FRAME_SAMPLE_ORACLE = (
     "WITH fr AS ("
     "  SELECT d.doc_id, CAST(k.k AS INTEGER) AS frame_idx,"
     f"    substring(d.text, CAST(k.k AS INTEGER) * {_FRAME_BYTES} + 1, {_FRAME_BYTES}) AS frame"
@@ -2591,8 +2523,10 @@ _FRAME_EVERY = 3
     ") "
     "SELECT doc_id, frame_idx, "
     "CAST(('0x' || substring(md5(frame), 1, 2)) AS INTEGER) * 1.0 AS f0 "
-    "FROM fr",
+    "FROM fr"
 )
+
+
 def q_multimodal_frame_sample(spark, sf_dir):
     """Fixed-stride frame sampling from binary payloads (one output row
     per sampled frame); oracle rebuilds the frames with substring + md5
@@ -2606,12 +2540,13 @@ def q_multimodal_frame_sample(spark, sf_dir):
 _RESIZE_BYTES = 64
 
 
-@_q(
-    "multimodal_resize",
+_MULTIMODAL_RESIZE_ORACLE = (
     f"SELECT doc_id, {_RESIZE_BYTES} AS n_bytes, "
     f"md5(rpad(substring(text, 1, {_RESIZE_BYTES}), {_RESIZE_BYTES}, '.')) AS digest "
-    "FROM documents",
+    "FROM documents"
 )
+
+
 def q_multimodal_resize(spark, sf_dir):
     """Payload normalization to a fixed byte budget (resize plumbing);
     oracle = truncate/right-pad + digest in SQL. The binary payload
@@ -2626,8 +2561,7 @@ def q_multimodal_resize(spark, sf_dir):
 _PPM_HEADER_BYTES = 31
 
 
-@_q(
-    "multimodal_real_decode",
+_MULTIMODAL_REAL_DECODE_ORACLE = (
     "WITH dims AS ("
     "  SELECT doc_id, 4 + doc_id % 5 AS w, 3 + doc_id % 4 AS h FROM documents"
     ") "
@@ -2638,8 +2572,10 @@ _PPM_HEADER_BYTES = 31
         f" + 0.0 AS f{c}_4"
         for c in range(3)
     )
-    + ", CAST(w AS DOUBLE) AS f3, CAST(h AS DOUBLE) AS f4 FROM dims",
+    + ", CAST(w AS DOUBLE) AS f3, CAST(h AS DOUBLE) AS f4 FROM dims"
 )
+
+
 def q_multimodal_real_decode(spark, sf_dir):
     """REAL image decode path: each doc gets a synthetic binary PPM (P6)
     payload — header with a comment line, then 3·w·h raster bytes from
@@ -2676,11 +2612,6 @@ def q_multimodal_real_decode(spark, sf_dir):
     )
 
 
-# r8 rotation: the png/bmp/jpeg decode registrations merged into the
-# 7-variant q_multimodal_decode_merged (png/bmp/jpeg/jpeg_ac/jpeg_prog/
-# webp/gif), registered under the base name "multimodal_png_decode"
-# (rotation block at the end of this module). The plain q_* functions
-# stay — the merged query unions their outputs.
 def q_multimodal_png_decode(spark, sf_dir):
     """REAL compressed-image decode path: each doc gets a synthetic RGB8
     non-interlaced PNG (pure-stdlib ``encode_png`` writer — zlib
@@ -2760,8 +2691,7 @@ def q_multimodal_bmp_decode(spark, sf_dir):
 _WAV_SR = 8000
 
 
-@_q(
-    "multimodal_audio_decode",
+_MULTIMODAL_AUDIO_DECODE_ORACLE = (
     "WITH dims AS ("
     "  SELECT doc_id, 64 + doc_id % 32 AS n FROM documents"
     "), vals AS ("
@@ -2773,8 +2703,10 @@ _WAV_SR = 8000
     "round(sqrt(list_aggregate(list_transform(v, x -> x * x), 'avg')), 6) + 0.0 AS rms6, "
     "round(list_aggregate(v, 'avg'), 6) + 0.0 AS mean6, "
     "CAST(n AS DOUBLE) AS n_frames, "
-    f"CAST({_WAV_SR} AS DOUBLE) AS sample_rate FROM vals",
+    f"CAST({_WAV_SR} AS DOUBLE) AS sample_rate FROM vals"
 )
+
+
 def q_multimodal_audio_decode(spark, sf_dir):
     """REAL audio decode path: each doc gets a synthetic 44-byte-header
     RIFF/WAVE PCM16 mono payload whose samples follow
@@ -2832,8 +2764,7 @@ def q_multimodal_audio_decode(spark, sf_dir):
 _Q1_CUTOFF = "2024-06-01 00:00:00"
 
 
-@_q(
-    "tpch_q1",
+_TPCH_Q1_ORACLE = (
     "SELECT l_returnflag, l_linestatus, "
     "CAST(sum(CAST(l_quantity AS DECIMAL(18, 2))) AS DOUBLE) AS sum_qty, "
     "CAST(sum(CAST(l_extendedprice AS DECIMAL(18, 2))) AS DOUBLE) AS sum_base_price, "
@@ -2842,8 +2773,10 @@ _Q1_CUTOFF = "2024-06-01 00:00:00"
     "count(*) AS count_order "
     "FROM lineitem "
     f"WHERE l_shipdate <= TIMESTAMP '{_Q1_CUTOFF}' "
-    "GROUP BY l_returnflag, l_linestatus",
+    "GROUP BY l_returnflag, l_linestatus"
 )
+
+
 def q_tpch_q1(spark, sf_dir):
     # spread: the sf0.1 lineitem file has 3 row groups, so the scan caps
     # at 3 tasks while the decimal sums are the CPU cost (measured 1.9 s
@@ -2881,8 +2814,7 @@ def q_tpch_q1(spark, sf_dir):
 _Q5_REGION = "ASIA"
 
 
-@_q(
-    "tpch_q5",
+_TPCH_Q5_ORACLE = (
     "SELECT n_name, "
     "CAST(sum(CAST(round(l_extendedprice * (1 - l_discount), 4) AS DECIMAL(22,4))) AS DOUBLE) AS revenue, "
     "count(*) AS n "
@@ -2895,8 +2827,10 @@ _Q5_REGION = "ASIA"
     f"WHERE r.r_name = '{_Q5_REGION}' "
     "AND o.o_orderdate >= TIMESTAMP '1996-01-01' "
     "AND o.o_orderdate < TIMESTAMP '1997-01-01' "
-    "GROUP BY n_name",
+    "GROUP BY n_name"
 )
+
+
 def q_tpch_q5(spark, sf_dir):
     """Local-supplier-volume (TPC-H Q5 shape): six tables, one fact
     scan. Every dimension chain (region→nation→customer→orders,
@@ -2946,16 +2880,17 @@ def q_tpch_q5(spark, sf_dir):
 _Q6_DATE = "1997-01-01"
 
 
-@_q(
-    "tpch_q6",
+_TPCH_Q6_ORACLE = (
     "SELECT CAST(sum(CAST(round(l_extendedprice * l_discount, 4) AS DECIMAL(22,4))) AS DOUBLE) AS revenue, "
     "count(*) AS n "
     "FROM lineitem "
     f"WHERE l_shipdate >= TIMESTAMP '{_Q6_DATE}' "
     f"AND l_shipdate < TIMESTAMP '1998-01-01' "
     "AND l_discount BETWEEN 0.05 AND 0.07 "
-    "AND l_quantity < 24",
+    "AND l_quantity < 24"
 )
+
+
 def q_tpch_q6(spark, sf_dir):
     """Forecast-revenue-change (TPC-H Q6 shape): pure filter +
     aggregate — every predicate pushes to the parquet scan and the
@@ -2983,8 +2918,7 @@ _SESSION_GAP_NS = 30 * 60 * 1_000_000_000  # oracle side: DuckDB epoch_ns
 _SESSION_GAP_US = 30 * 60 * 1_000_000  # Spark side: epoch_us(ts) integers
 
 
-@_q(
-    "sessionize",
+_SESSIONIZE_ORACLE = (
     "WITH e AS ("
     "  SELECT user_id, epoch_ns(ts) AS t,"
     "         CASE WHEN epoch_ns(ts) - lag(epoch_ns(ts)) OVER "
@@ -2999,8 +2933,10 @@ _SESSION_GAP_US = 30 * 60 * 1_000_000  # Spark side: epoch_us(ts) integers
     ") "
     "SELECT user_id, CAST(count(*) AS BIGINT) AS n_sessions, "
     "CAST(max(n) AS BIGINT) AS max_session_events "
-    "FROM per GROUP BY user_id",
+    "FROM per GROUP BY user_id"
 )
+
+
 def q_sessionize(spark, sf_dir):
     """Gap-based sessionization (the batch shape of a streaming session
     window): new session when the gap to the previous event exceeds 30
@@ -3069,8 +3005,7 @@ _K2_VALUES = ", ".join(
 )
 
 
-@_q(
-    "fftconvolve_2d",
+_FFTCONVOLVE_2D_ORACLE = (
     f"""
 WITH g AS (
   SELECT user_id,
@@ -3087,8 +3022,10 @@ SELECT user_id,
        round(sum(x * w), 4) + 0.0 AS val4
 FROM grid CROSS JOIN ker
 GROUP BY user_id, grid.row + ker.r, grid.col + ker.c
-""",
+"""
 )
+
+
 def q_fftconvolve_2d(spark, sf_dir):
     """2-D FFT convolution (full) of each user's 6x6 sample grid with a
     3x3 kernel — the reference's multi-core-dim convolve
@@ -3145,13 +3082,14 @@ def q_fftshift_2d(spark, sf_dir):
 # relational coverage: rollup aggregation, join-heavy top-k
 # ---------------------------------------------------------------------------
 
-@_q(
-    "lineitem_rollup",
+_LINEITEM_ROLLUP_ORACLE = (
     "SELECT l_returnflag, l_linestatus, "
     "CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty, "
     "count(*) AS n "
-    "FROM lineitem GROUP BY ROLLUP (l_returnflag, l_linestatus)",
+    "FROM lineitem GROUP BY ROLLUP (l_returnflag, l_linestatus)"
 )
+
+
 def q_lineitem_rollup(spark, sf_dir):
     """Hierarchical aggregate (grouping-sets family, SURVEY §2.3) —
     subtotals per returnflag and a grand total in one pass."""
@@ -3168,8 +3106,7 @@ _Q3_SEGMENT = "BUILDING"
 _Q3_DATE = "1998-06-01"
 
 
-@_q(
-    "tpch_q3",
+_TPCH_Q3_ORACLE = (
     "SELECT l_orderkey, "
     "CAST(sum(CAST(round(l_extendedprice * (1 - l_discount), 4) AS DECIMAL(22,4))) AS DOUBLE) AS revenue, "
     "CAST(o_orderdate AS VARCHAR) AS o_orderdate "
@@ -3179,8 +3116,10 @@ _Q3_DATE = "1998-06-01"
     f"AND o_orderdate < TIMESTAMP '{_Q3_DATE}' "
     f"AND l_shipdate > TIMESTAMP '{_Q3_DATE}' "
     "GROUP BY l_orderkey, o_orderdate "
-    "ORDER BY revenue DESC, l_orderkey LIMIT 10",
+    "ORDER BY revenue DESC, l_orderkey LIMIT 10"
 )
+
+
 def q_tpch_q3(spark, sf_dir):
     """Join-heavy shipping-priority query (TPC-H Q3 shape): the small
     filtered dimension (customer) is broadcast — no shuffle of the fact
@@ -3224,20 +3163,15 @@ def q_tpch_q3(spark, sf_dir):
 # streaming
 # ---------------------------------------------------------------------------
 
-@_q(
-    "sosfilt_stream",
-    # the stream is the causal filter from zero state — bit-identical to
-    # batch sosfilt over the materialized series — so the SAME
-    # impulse-response-convolution oracle verifies it (the streaming
-    # RUNTIME is what differs, and that's exactly what the comparison
-    # exercises: state carry across the micro-batch boundary must
-    # reproduce the batch recursion)
+_SOSFILT_STREAM_ORACLE = (
     f"WITH {_S}, {_impulse_response_sql(_SOSFILT_SOS)} "
     "SELECT xi.user_id, xi.j AS idx, round(sum(h.hv * xj.x), 4) + 0.0 AS val4 "
     "FROM s xi JOIN h ON h.m <= xi.j "
     "JOIN s xj ON xj.user_id = xi.user_id AND xj.j = xi.j - h.m "
-    "GROUP BY xi.user_id, xi.j",
+    "GROUP BY xi.user_id, xi.j"
 )
+
+
 def q_sosfilt_stream(spark, sf_dir):
     """Stateful streaming sosfilt (applyInPandasWithState): filter the
     events stream per user with carried zi, AvailableNow trigger, and
@@ -3281,8 +3215,7 @@ def q_sosfilt_stream(spark, sf_dir):
 _ASOF_EVERY = 7  # every 7th event per user is an "anchor"
 
 
-@_q(
-    "asof_join",
+_ASOF_JOIN_ORACLE = (
     f"WITH {_S}, "
     # epoch_us on both sides: Spark projects the timestamp_ntz column
     # through timeutil.epoch_us, DuckDB uses its native epoch_us()
@@ -3293,8 +3226,10 @@ _ASOF_EVERY = 7  # every 7th event per user is an "anchor"
     f"anch AS (SELECT user_id, t AS at, x AS av FROM ev WHERE j % {_ASOF_EVERY} = 0) "
     "SELECT e.user_id, e.t, a.at AS anchor_t, round(a.av, 6) + 0.0 AS anchor_value6 "
     "FROM ev e ASOF LEFT JOIN anch a "
-    "ON e.user_id = a.user_id AND e.t >= a.at",
+    "ON e.user_id = a.user_id AND e.t >= a.at"
 )
+
+
 def q_asof_join(spark, sf_dir):
     """Backward as-of join: each event matched to the most recent
     'anchor' event (every 7th per user) at or before it. Oracle =
@@ -3334,8 +3269,7 @@ _RANGE_DAYS_US = 7 * 86_400 * 1_000_000  # 7-day windows, epoch micros
 _RANGE_MOD = 997  # deterministic sparse subset of orders
 
 
-@_q(
-    "range_join",
+_RANGE_JOIN_ORACLE = (
     "WITH iv AS ("
     "  SELECT o_orderkey, epoch_us(o_orderdate) AS lo,"
     f"    epoch_us(o_orderdate) + {_RANGE_DAYS_US} AS hi"
@@ -3345,8 +3279,10 @@ _RANGE_MOD = 997  # deterministic sparse subset of orders
     "CAST(floor(sum(l.l_quantity) * 1000 + 0.5 + 1e-6) AS BIGINT) AS qty_q "
     "FROM iv JOIN lineitem l "
     "ON epoch_us(l.l_shipdate) BETWEEN iv.lo AND iv.hi "
-    "GROUP BY iv.o_orderkey",
+    "GROUP BY iv.o_orderkey"
 )
+
+
 def q_range_join(spark, sf_dir):
     """Interval-containment join: all shipments (any order) within 7
     days after each sampled order's date, without the nested-loop plan
@@ -3381,10 +3317,6 @@ def q_range_join(spark, sf_dir):
 _WIN_SECONDS = 86_400  # 1-day tumbling windows over the month of events
 
 
-# r8 rotation: stream_window_stats + session_window_stats merged into
-# q_windows_merged, registered under the base name "stream_window_stats"
-# (rotation block at the end of this module); min4/max4 stay pinned by
-# stream_window_stats_live's own registration below.
 def q_stream_window_stats(spark, sf_dir):
     """Event-time tumbling-window stats — the BATCH execution of
     :func:`streaming.windowed_stats` (the operator runs the identical
@@ -3424,16 +3356,17 @@ def q_stream_window_stats(spark, sf_dir):
     )
 
 
-@_q(
-    "stream_window_stats_live",
+_STREAM_WINDOW_STATS_LIVE_ORACLE = (
     "SELECT user_id, "
     f"(epoch_ns(ts) // {_WIN_SECONDS * 1_000_000_000}) * {_WIN_SECONDS} AS window_start, "
     "count(*) AS n, "
     "CAST(floor(sum(value) * 1000 + 0.5 + 1e-6) AS BIGINT) AS sum_q, "
     "CAST(floor(avg(value) * 1000 + 0.5 + 1e-6) AS BIGINT) AS avg_q, "
     "round(min(value), 4) + 0.0 AS min4, round(max(value), 4) + 0.0 AS max4 "
-    "FROM events GROUP BY user_id, window_start",
+    "FROM events GROUP BY user_id, window_start"
 )
+
+
 def q_stream_window_stats_live(spark, sf_dir):
     """The LIVE Structured-Streaming execution of
     :func:`streaming.windowed_stats` (readStream -> withWatermark ->
@@ -3538,7 +3471,6 @@ SELECT id AS doc_id, min(comp) AS cluster_id FROM walk GROUP BY id
 """
 
 
-@_q("dedup_clusters", _dedup_clusters_oracle())
 def q_dedup_clusters(spark, sf_dir):
     """Transitive duplicate clusters: iterative min-label propagation
     (driver-loop joins with lineage checkpoints) over the minhash near-
@@ -3559,8 +3491,7 @@ def q_dedup_clusters(spark, sf_dir):
 _TFIDF_K = 5
 
 
-@_q(
-    "text_tfidf",
+_TEXT_TFIDF_ORACLE = (
     f"""
 WITH {_TOKS},
 tok AS (SELECT doc_id, unnest(tk) AS tok FROM toks),
@@ -3578,8 +3509,10 @@ SELECT doc_id, rank, tok, tfidf + 0.0 AS tfidf FROM (
          row_number() OVER (PARTITION BY doc_id ORDER BY tfidf DESC, tok) AS rank
   FROM scored
 ) t WHERE rank <= {_TFIDF_K}
-""",
+"""
 )
+
+
 def q_text_tfidf(spark, sf_dir):
     return pl.tfidf_top_tokens(_docs(spark, sf_dir), k=_TFIDF_K)
 
@@ -3589,12 +3522,13 @@ def q_text_tfidf(spark, sf_dir):
 # ---------------------------------------------------------------------------
 
 
-@_q(
-    "text_vocab",
+_TEXT_VOCAB_ORACLE = (
     f"WITH {_TOKS}, tok AS (SELECT doc_id, unnest(tk) AS token FROM toks) "
     "SELECT token, count(*) AS tf, count(DISTINCT doc_id) AS df "
-    "FROM tok GROUP BY token",
+    "FROM tok GROUP BY token"
 )
+
+
 def q_text_vocab(spark, sf_dir):
     """Corpus vocabulary (token, tf, df) — explode + one aggregate
     shuffle with map-side partials (pipeline/text.py:vocabulary)."""
@@ -3606,11 +3540,12 @@ def q_text_vocab(spark, sf_dir):
 # ---------------------------------------------------------------------------
 
 
-@_q(
-    "multimodal_gzip_decode",
+_MULTIMODAL_GZIP_DECODE_ORACLE = (
     "SELECT doc_id, md5(text) AS text_md5, "
-    "octet_length(encode(text)) AS text_bytes FROM documents",
+    "octet_length(encode(text)) AS text_bytes FROM documents"
 )
+
+
 def q_multimodal_gzip_decode(spark, sf_dir):
     """REAL compressed-text decode: each doc's text is gzip-compressed
     into a binary payload (fixture side, ``gzip_text_encoder``) and
@@ -3651,10 +3586,11 @@ def q_multimodal_gzip_decode(spark, sf_dir):
 # ---------------------------------------------------------------------------
 
 
-@_q(
-    "stream_dedup",
-    "SELECT DISTINCT user_id, strftime(ts, '%Y-%m-%d') AS day FROM events",
+_STREAM_DEDUP_ORACLE = (
+    "SELECT DISTINCT user_id, strftime(ts, '%Y-%m-%d') AS day FROM events"
 )
+
+
 def q_stream_dedup(spark, sf_dir):
     """LIVE Structured-Streaming exact deduplication: readStream ->
     project to the dedup key -> ``stream_distinct`` (dropDuplicates —
@@ -3698,8 +3634,6 @@ def q_stream_dedup(spark, sf_dir):
 # ---------------------------------------------------------------------------
 
 
-# r8 rotation: registration folded into q_multimodal_decode_merged
-# (see the 'jpeg' variant there); the plain function stays.
 def q_multimodal_jpeg_decode(spark, sf_dir):
     """REAL baseline-JPEG decode path (pipeline/jpeg.py — marker
     segmentation, stream-carried huffman tables, DC-differential +
@@ -3754,8 +3688,7 @@ def q_multimodal_jpeg_decode(spark, sf_dir):
 # ---------------------------------------------------------------------------
 
 
-@_q(
-    "text_logprob",
+_TEXT_LOGPROB_ORACLE = (
     f"WITH {_TOKS}, "
     "tok AS (SELECT doc_id, unnest(tk) AS token FROM toks), "
     "vocab AS (SELECT token, count(*) AS tf FROM tok GROUP BY token), "
@@ -3764,8 +3697,10 @@ def q_multimodal_jpeg_decode(spark, sf_dir):
     "      FROM tok t JOIN vocab v USING (token) CROSS JOIN total) "
     "SELECT doc_id, count(*) AS n_tokens, "
     + _q3("avg(nll)")
-    + " AS nll_q FROM j GROUP BY doc_id",
+    + " AS nll_q FROM j GROUP BY doc_id"
 )
+
+
 def q_text_logprob(spark, sf_dir):
     """Per-doc mean unigram NLL under the corpus's own LM
     (pipeline/text.py:unigram_logprob) — the cheap perplexity proxy a
@@ -3782,15 +3717,15 @@ def q_text_logprob(spark, sf_dir):
 # ---------------------------------------------------------------------------
 
 
-@_q(
-    "correlate",
-    # self-correlation: z[idx] = sum over j1-j2 = idx-(n-1) of x[j1]*x[j2]
+_CORRELATE_ORACLE = (
     f"WITH {_S} "
     "SELECT a.user_id, a.j - b.j + a.n - 1 AS idx, "
     "round(sum(a.x * b.x), 4) + 0.0 AS corr4 "
     "FROM s a JOIN s b USING (user_id) "
-    "GROUP BY a.user_id, a.j - b.j + a.n - 1",
+    "GROUP BY a.user_id, a.j - b.j + a.n - 1"
 )
+
+
 def q_correlate(spark, sf_dir):
     """Self cross-correlation (mode=full) of each user's series through
     the cogrouped FFT kernel (operators/convolve.py:correlate)."""
@@ -3799,224 +3734,10 @@ def q_correlate(spark, sf_dir):
     return res.select("user_id", "idx", _r("value", 4, "corr4"))
 
 
-# ---------------------------------------------------------------------------
-# registration queue (r7 rotation EXECUTED this round)
-# ---------------------------------------------------------------------------
-# The driver checks the FIRST 50 registered queries each round, and the
-# two-round freshness bar caps the registry at 100 names (see
-# __spark_entry__.py). Queries built after a round's head froze are
-# held in _QUEUED — fully implemented and CI-verified
-# (tests/test_queued_contract.py runs each (query, oracle) pair
-# byte-exactly at sf0.001 on every pytest run) — until variant-pair
-# MERGES free head slots.
-#
-# r7 (DONE, this round): the four ledgered merges (rfft+rfft_n_ortho,
-# decimate_iir+zerophase, sosfiltfilt+even, text_lang_id+fingerprint)
-# PLUS a fifth pulled forward from the r9 candidate list
-# (convolve_valid+convolve_fir) freed 5 slots; the SEVEN r7-bound
-# entries (welch_blackman, dedup_ngram_spans, deconvolve, sketch_hll,
-# sketch_countmin, bloom_decontaminate, gapfill) registered, and
-# embedding_pca was reshaped to a DuckDB-verifiable invariant query
-# (VERDICT r6 #2) — its changed-this-round head slot is what the fifth
-# merge paid for. N = 99, head = 42 surviving r6-tail + 7 new +
-# embedding_pca = 50 exactly; tail = the 49 remaining r6-head names.
-#
-# r8 rotation EXECUTED (see the rotation block at the end of this
-# module): SEVEN merges (the three ledgered + fft-family 4-way,
-# fftshift trio, medfilt+wiener, token_stats+quality pulled forward)
-# freed 11 slots; 11 registrations landed (the 5 r8-bound + the full
-# r9 slate + robust_zscore). N = 99, head = 50, queue = 21.
-#
-# r9 rotation EXECUTED (see the rotation block at the end of this
-# module) — a MAXIMAL drain round, deviating from the ledgered recipe
-# in two audited ways:
-#   (a) the istft merge is DEFERRED to r10: the old recipe's head math
-#       mis-placed welch_blackman (it sits in the r8 TAIL, due r9, so
-#       merging it FREES a due slot) and istft_roundtrip/istft_native
-#       (both sit in the r8 HEAD, checked r8 — merging them now would
-#       DRAG the changed union into the r9 head, costing a slot; at
-#       r10 both are due and the same merge frees one instead).
-#   (b) beyond the 3 remaining ledgered merges, TEN more staged
-#       merges whose constituents are ALL r9-due executed early
-#       (VERDICT r8 #2: accelerate the drain): peaks, dedup_pairs(2),
-#       ann_cells, multimodal_tf(2), tpch_q3q5, temporal_join,
-#       fft_fwd, decontaminate(2 incl. bloom), sketch_state,
-#       text_wide(2) — 13 merges total absorbing 16 due names.
-# Head math: 49 due r8-tail − 16 absorbed-in-due + 17 new = 50
-# exactly. The 17 registrations: the r9 slate (dedup_minhash_cross,
-# cube_revenue, filter_by_quantile, interp_to), the FULL r10 slate
-# pulled forward (ohlc_bars, latest_by_key, multimodal_video_frames,
-# sample_negatives, rolling_stats, pagerank, zorder_curve), five of
-# the r11 slate (sketch_hll_merge, group_quantiles,
-# url_canonical_dedup, winsorize, clean_text), and bpe_encode pulled
-# from r18 (VERDICT r8 #5: its full SQL oracle supersedes the
-# registry's only rows-only row — bpe_vocab's registration retires in
-# the same move; BPE training keeps its pure-Python parity pin in
-# tests/test_bpe.py). N = 99 − 16 absorbed − 1 bpe_vocab + 17 = 99;
-# tail = the 49 r8-head names (CORRECTNESS_r08 key order minus
-# bpe_vocab). Queue: 112 → 82.
-# Every queued entry stays CI-verified byte-exactly per pytest run
-# until its round arrives.
-#
-# r10 rotation EXECUTED exactly per the ledgered recipe (see the r10
-# rotation block at the end of this module): 11 merges absorbing 13
-# r10-due names + text_redact riding free; head = 49 due − 13 + 14
-# new = 50; N = 99 − 14 + 14 = 99; both oracle-read snapshots taken
-# (_ISTFT_NATIVE_PLAIN_ORACLE, _ANN_EXACT_PLAIN_ORACLE); the
-# conflicting staged convolve@merged / correlate@merged entries were
-# DROPPED (constituents went to the fftconvolve family — one family
-# per constituent; convolve_valid + deconvolve remain an r11
-# extension lever). Queue counts are computed live by
-# tools/queue_status.py — static counts in comments went stale once
-# (ADVICE r9 #1) and are not repeated here.
-#
-# r11 RECIPE (REDO the due-ness math against CORRECTNESS_r10.json at
-# round open): due pool = the r9-head names in
-# __spark_entry__._CHECK_LAST (49). Staged levers, all builders ready
-# in _QUEUED and CI-byte-exact:
-#   cross-cohort (+1 each, one dragged base): sosfilt@merged (absorbs
-#   due sosfilt_chunked + sosfiltfilt, drags sosfilt),
-#   fftconvolve@merged (absorbs due convolve_valid + deconvolve,
-#   drags fftconvolve);
-#   base-due (+1 each, no drag): multimodal_real_decode@merged
-#   (absorbs due multimodal_video_frames), gapfill@merged (absorbs
-#   due interp_to);
-#   same-cohort staged THIS round (+1 each, no drag):
-#   dedup_minhash@merged (absorbs due dedup_minhash_cross),
-#   sketch_hll@merged (absorbs due sketch_hll_merge), tpch_q1@merged
-#   (absorbs due tpch_q3), clean_text@merged (absorbs due
-#   url_canonical_dedup), welch@merged (absorbs due csd — the 4-way
-#   framed-spectral family), dataset_mix@merged (EXTENDED: absorbs
-#   due filter_by_quantile + retires non-due cap_per_group; base due).
-# Head math: 49 due − 12 absorbed + 2 dragged + K new = 50 → K = 11:
-# the full 8-name ledgered r11 slate + 3 pulled from r12.
-# N = 99 − 12 − 1 (cap_per_group retires free) + 11 = 97 (− any
-# further net-0 retirement merges: hilbert/resample/
-# embedding_quantize/lombscargle/dedup_exact/sessionize/
-# sosfilt_stream remain available).
-# ORACLE-READ SNAPSHOTS: grep `ORACLES\[` over every builder that
-# remains in _QUEUED after the r11 edit before popping anything —
-# the r10 pattern (_ISTFT_NATIVE_PLAIN_ORACLE / _ANN_EXACT_...).
-#
-# r11 EXECUTED (see the r11 rotation block at the end of this module);
-# the recipe's K=11 became K=10 — sequence_pack's oracle changed (the
-# HUGEINT cast fix) and took a head slot.
-#
-# r12 EXECUTED as recipe'd (see the r12 rotation block at the end of
-# this module): all six clean +1 levers (rolling_stats@merged gained
-# its qn branch to cover quantile_normalize per the head math) and
-# all six net-0 levers (curation_report@merged extended to absorb the
-# whole r11 hygiene union), the full 10-name slate registered.
-# N = 91 (head 50 + tail 41), queue 27.
-#
-# r13 RECIPE: EXECUTED — see the r13 rotation block at the end of
-# this file. N = 95 (head 50 + tail 45), queue 9.
-#
-# r14 RECIPE: EXECUTED — see the r14 rotation block at the end of
-# this file (due-ness re-derived from CORRECTNESS_r13.json as
-# required; it matched the ledgered cohorts exactly). Kept verbatim
-# below for the audit trail. The r14 PLAN-FIX ledger item (the
-# unigram/bigram_logprob double-scan) was applied at r14 open —
-# pipeline/text.py, plan-locked by
-# tests/test_plans.py::test_logprob_single_corpus_scan.
-#
-# r14 RECIPE (REDO the due-ness math against CORRECTNESS_r13.json at
-# round open — cohorts below assume r13 lands as executed). Due pool
-# = the 45 r12-head names in __spark_entry__._CHECK_LAST. Merge
-# levers, staged and CI-byte-exact, both net-0 (base due r14,
-# absorbed names r13-head → retire free, shrink N only):
-#   tpch_q7@merged (absorbs tpch_q8 + tpch_q9),
-#   tpch_q14@merged (absorbs tpch_q19).
-# Head math: 45 due − 0 absorbed-due + 0 dragged + K new = 50 →
-# K = 5 EXACTLY: token_mi + the data-quality layer (data_profile,
-# constraint_check, frequent_values, windowed_constraints) pulled
-# forward from r15. N = 95 − 3 retired + 5 = 97; queue 10 − 2 merges
-# − 5 new = 3 (target_encoding, event_transitions, dsir_weights).
-# r15 LOOKAHEAD: due pool = 50 r13-head − 3 retired = 47, + the 3
-# remaining queue names = 50 EXACTLY (dsir_weights, registered to the
-# queue at r13, fills the hole the original lookahead flagged).
-# N at r15 = 97 + 3 = 100 — AT the two-round-bar cap; r16+ takes no
-# new registrations without a retirement-first merge.
-# r14 PLAN-FIX ledger (do at r14 open, when these due names re-enter
-# the head and a driver row re-verifies them): unigram_logprob and
-# bigram_logprob duplicate their corpus explode+aggregate subtree —
-# the vocab (and bigram-count) frames feed two consumers without a
-# lineage cut (text_logprob executed plan shows 3 FileScans of
-# documents; the r13 plan audit caught the same class in dsir_weights
-# and fixed it there with a lazy localCheckpoint on the V-sized
-# vocabulary — apply the identical cut to both logprob functions and
-# re-verify byte-exact).
-#
-# r15 RECIPE (REDO the due-ness math against CORRECTNESS_r14.json at
-# round open — cohorts below assume r14 lands as executed). Due pool
-# = the 47 r13-head names in __spark_entry__._CHECK_LAST (50 − the 3
-# r14-retired: tpch_q8/q9/q19). Head math: 47 due − 0 absorbed + 0
-# dragged + 3 new = 50 EXACTLY → register the whole remaining queue:
-#   dsir_weights, target_encoding, event_transitions.
-# N = 97 + 3 = 100 — AT the two-round-bar cap. Queue → 0.
-# r15 PLAN-FIX ledger (do when these due names re-enter the head so
-# the driver row verifies the change the same round it lands):
-#   weighted_sample (due r15): close ADVICE r13 #2 — flip the
-#   registration to the both-ends u-boundary guard. STAGED r14, the
-#   77601a7 discipline: Spark side pl.weighted_sample(...,
-#   u_guard="both") (pipeline/sample.py _ares_key), oracle side
-#   _weighted_sample_oracle(guarded=True), pair asserted byte-equal
-#   on real data today (tests/test_pipeline.py
-#   test_weighted_sample_guarded_matches_staged_oracle). The r15 edit
-#   is two one-line flips in q_weighted_sample's registration + the
-#   hash_uniform docstring note.
-#   (auc_eval carries NO r15 plan fix: the one-pass candidate was
-#   measured-and-rejected at r14 — tools/auc_shape_ab.py @135M rows,
-#   0.91x/1.04x tie, shuffle-stage reuse makes the extra jobs free —
-#   adjudicated a named floor, see pipeline/features.py auc_exact.)
-#
-# r16+ RETIREMENT-FIRST POLICY (decided r14, before the cap binds —
-# VERDICT r13 #5). From r15 on, N = 100 and the two-round freshness
-# bar is saturated: EVERY new registration requires retiring a name
-# in the same rotation, merge-first. Rules:
-# 1. What counts as a retirement: fold the retiree into a variant-tag
-#    union under a surviving base — the union must be a literal
-#    unionAll of the constituent queries and its oracle the UNION ALL
-#    of the constituent oracles (a hash match then verifies every
-#    variant's values; the r9–r14 precedent). Evidence bar per
-#    retirement: (a) the union is CI-byte-exact vs its merged oracle
-#    BEFORE the rotation lands, (b) a _MERGED_UNIONS plan lock (or a
-#    documented streaming exclusion), (c) a bench plain_overrides
-#    entry for every HEADLINE name touched, so no measured plan
-#    changes identity.
-# 2. Retirement preference order (most-redundant first):
-#    a. same-operator parameter variants already demo'd by a sibling
-#       (the three decimate variants under decimate_fir@merged's
-#       slot; welch_blackman under welch's window surface),
-#    b. single-purpose demo shapes whose semantics another
-#       registered query fully exercises (event_pivot vs
-#       window_analytics' pivot branch),
-#    c. eval/report twins that compose already-registered queries
-#       (recall/eval rows keep priority LOWER than the operators they
-#       evaluate — retire the composition, never the operator).
-# 3. Never retire: the 17 reference operators' primary rows, any name
-#    whose union would cross data families (events vs documents vs
-#    embeddings — oracle unions must stay single-scan comparable),
-#    or a name carrying an open weak-list adjudication (its BENCH row
-#    must keep measuring the same plan until closed).
-# 4. Mechanics stay r9-style: absorbed name r(N−1)-head → retires
-#    free (net-0, shrinks N below 100 making the new slot); absorbed
-#    name due → the union base carries both driver rows (clean +1).
-# 5. Staged runway (late r15): THREE candidates are pre-built through
-#    the full (a)/(b)/(c) evidence bar and waiting —
-#    q_event_widefam_merged (rule b: event_pivot under
-#    window_analytics), q_ann_evalfam_merged (rule c: ann_recall_eval
-#    under ann_cosine_topk_ivf), q_dedup_evalfam_merged (rule c:
-#    dedup_recall_eval under dedup_minhash). Registration one-liners
-#    sit in each dry-run comment; a registering rotation moves the
-#    test_plans._STAGED_UNIONS entry into _MERGED_UNIONS and the
-#    test_queued_contract._STAGED_MERGES entry out.
-
-
 def q_welch_blackman(spark, sf_dir):
     """ops.welch window='blackman' — the window-shape surface beyond
-    the hann default (queued since r6; oracle = the same windowed DFT
-    with the blackman taps inline)."""
+    the hann default (oracle = the same windowed DFT with the blackman
+    taps inline)."""
     res = ops.welch(
         _events(spark, sf_dir),
         by=["user_id"],
@@ -4214,7 +3935,7 @@ def q_bloom_decontaminate(spark, sf_dir):
     )
 
 
-# --- variant-pair merges (free one head slot each at r7) -------------------
+# --- variant-tag unions ------------------------------------------------------
 
 
 def _rfft_merged_oracle() -> str:
@@ -4243,7 +3964,7 @@ def _rfft_merged_oracle() -> str:
 def q_rfft_merged(spark, sf_dir):
     """rfft default + (n=64, norm='ortho') variants in ONE query (a
     variant-tag union): both parameter surfaces stay value-verified
-    while holding a single head slot. Replaces rfft + rfft_n_ortho."""
+    in one registry row."""
     ev = _events(spark, sf_dir)
     base = ops.rfft(ev, by=["user_id"], dim="ts").select(
         F.lit("default").alias("variant"),
@@ -4346,7 +4067,7 @@ def _text_lang_fp_oracle() -> str:
 
 def q_text_lang_fp(spark, sf_dir):
     """lang_id + rolling-hash fingerprint joined per doc — two text
-    operators, one head slot. Replaces text_lang_id + text_fingerprint."""
+    operators in one query."""
     docs = _docs(spark, sf_dir)
     lang = pl.lang_id(docs).select(
         "doc_id",
@@ -4373,9 +4094,7 @@ def _convolve_merged_oracle() -> str:
 
 def q_convolve_merged(spark, sf_dir):
     """mode='valid' convolution + centered FIR (mode='same' taps) in
-    one variant-tag union. Replaces convolve_valid + convolve_fir —
-    the extra r7 merge that frees the head slot for the reshaped
-    embedding_pca registration."""
+    one variant-tag union."""
     valid = q_convolve_valid(spark, sf_dir).select(
         F.lit("valid").alias("variant"), "user_id", "idx",
         F.col("conv6").alias("v6"),
@@ -4385,9 +4104,6 @@ def q_convolve_merged(spark, sf_dir):
         F.col("fir6").alias("v6"),
     )
     return valid.unionAll(fir)
-
-
-# --- r8-bound variant merges (queued; free 4 head slots at r8) -------------
 
 
 def _multimodal_merged_oracle() -> str:
@@ -4478,9 +4194,7 @@ def _multimodal_merged_oracle() -> str:
 def q_multimodal_decode_merged(spark, sf_dir):
     """The compressed-codec decode paths (PNG, BMP, baseline JPEG
     DC + AC fixtures, lossless WebP/VP8L, GIF/LZW — 7 variants) in ONE
-    variant-tag union — replaces multimodal_png_decode +
-    multimodal_bmp_decode + multimodal_jpeg_decode at r8, freeing two
-    head slots while keeping every codec value-verified."""
+    variant-tag union, so every codec stays value-verified."""
     import numpy as _np
     import pandas as _pd
 
@@ -4748,9 +4462,8 @@ def _fft_family_merged_oracle() -> str:
 
 def q_fft_family_merged(spark, sf_dir):
     """The inverse/Hermitian FFT surface (ifft, ihfft, irfft
-    round-trips + forward hfft) in ONE variant-tag union — replaces the
-    four individual registrations at r8, freeing three head slots while
-    keeping every transform value-verified. va/vb carry each variant's
+    round-trips + forward hfft) in ONE variant-tag union, keeping
+    every transform value-verified. va/vb carry each variant's
     original rounded columns (vb = 0.0 where the variant is
     single-valued)."""
     ifft_ = q_ifft(spark, sf_dir).select(
@@ -4787,8 +4500,7 @@ def _fftshift_merged_oracle() -> str:
 
 def q_fftshift_merged(spark, sf_dir):
     """fftshift + ifftshift (1-d) and the dims-list 2-d fftshift in ONE
-    variant-tag union — replaces three registrations at r8 (i2 = -1
-    tags the 1-d variants; pure index arithmetic on both sides)."""
+    variant-tag union (i2 = -1 tags the 1-d variants; pure index arithmetic on both sides)."""
     sh = q_fftshift(spark, sf_dir).select(
         F.lit("shift").alias("variant"), "user_id",
         F.col("idx").alias("i1"), F.lit(-1).cast("bigint").alias("i2"),
@@ -4868,9 +4580,6 @@ def q_text_stats_merged(spark, sf_dir):
     return tok.unionAll(qual)
 
 
-# --- r9-ready merges (queued as @merged; registered at the r9 rotation) ----
-
-
 def _welch_merged_oracle() -> str:
     return (
         "SELECT 'hann' AS variant, user_id, idx, power4 "
@@ -4926,21 +4635,19 @@ def q_csd_merged(spark, sf_dir):
 def _convolve_family_merged_oracle() -> str:
     return (
         "SELECT 'full' AS variant, user_id, idx, conv4 AS v4 "
-        "FROM (" + ORACLES["fftconvolve"] + ") "
+        "FROM (" + _FFTCONVOLVE_ORACLE + ") "
         "UNION ALL "
         "SELECT 'same' AS variant, user_id, idx, conv4 AS v4 "
-        "FROM (" + ORACLES["convolve"] + ") "
+        "FROM (" + _CONVOLVE_ORACLE + ") "
         "UNION ALL "
         "SELECT 'xcorr' AS variant, user_id, idx, corr4 AS v4 "
-        "FROM (" + ORACLES["correlate"] + ")"
+        "FROM (" + _CORRELATE_ORACLE + ")"
     )
 
 
 def q_convolve_family_merged(spark, sf_dir):
     """Self-convolution (full + same modes) + self cross-correlation in
-    ONE variant-tag union — a 3-way merge replacing fftconvolve +
-    convolve + correlate at r10 (frees TWO slots; convolve_valid's own
-    union and the complex twin keep their registrations)."""
+    ONE variant-tag union."""
     full = q_fftconvolve(spark, sf_dir).select(
         F.lit("full").alias("variant"), "user_id", "idx",
         F.col("conv4").alias("v4"),
@@ -4957,21 +4664,17 @@ def q_convolve_family_merged(spark, sf_dir):
 
 
 def _hilbert_merged_oracle() -> str:
-    # ORACLES still holds both registrations until the r10 rotation
-    # deregisters them — the recipe preserves the strings as variables
-    # then (the r8 _XXX_ORACLE pattern)
     return (
         "SELECT 'analytic' AS variant, user_id, idx, re4 AS va, im4 AS vb "
-        "FROM (" + ORACLES["hilbert"] + ") "
+        "FROM (" + _HILBERT_ORACLE + ") "
         "UNION ALL "
         "SELECT 'envelope' AS variant, user_id, idx, env4 AS va, 0.0 AS vb "
-        "FROM (" + ORACLES["hilbert_envelope"] + ")"
+        "FROM (" + _HILBERT_ENVELOPE_ORACLE + ")"
     )
 
 
 def q_hilbert_merged(spark, sf_dir):
-    """Analytic signal + its envelope in ONE variant-tag union —
-    replaces hilbert + hilbert_envelope (EXECUTED r12)."""
+    """Analytic signal + its envelope in ONE variant-tag union."""
     an = q_hilbert(spark, sf_dir).select(
         F.lit("analytic").alias("variant"), "user_id", "idx",
         F.col("re4").alias("va"), F.col("im4").alias("vb"),
@@ -4986,10 +4689,10 @@ def q_hilbert_merged(spark, sf_dir):
 def _lfilter_merged_oracle() -> str:
     return (
         "SELECT 'causal' AS variant, user_id, idx, value4 "
-        "FROM (" + ORACLES["lfilter"] + ") "
+        "FROM (" + _LFILTER_ORACLE + ") "
         "UNION ALL "
         "SELECT 'zerophase' AS variant, user_id, idx, value4 "
-        "FROM (" + ORACLES["filtfilt"] + ")"
+        "FROM (" + _FILTFILT_ORACLE + ")"
     )
 
 
@@ -5008,18 +4711,17 @@ def q_lfilter_merged(spark, sf_dir):
 def _ann_merged_oracle() -> str:
     return (
         "SELECT 'exact' AS variant, query_id, rank, neighbor_id, cos_sim "
-        "FROM (" + ORACLES["ann_cosine_topk"] + ") "
+        "FROM (" + _ANN_COSINE_TOPK_ORACLE + ") "
         "UNION ALL "
         "SELECT 'lsh' AS variant, query_id, rank, neighbor_id, cos_sim "
-        "FROM (" + ORACLES["ann_cosine_topk_lsh"] + ")"
+        "FROM (" + _lsh_topk_oracle() + ")"
     )
 
 
 def q_ann_merged(spark, sf_dir):
     """Exact brute-force cosine top-k + multiprobe SRP-LSH top-k in
-    ONE variant-tag union — replaces ann_cosine_topk +
-    ann_cosine_topk_lsh at r10 (ivf/kmeans keep their own
-    registrations — different cell structures)."""
+    ONE variant-tag union (ivf/kmeans have their own union —
+    different cell structures)."""
     ex = q_ann_cosine_topk(spark, sf_dir).select(
         F.lit("exact").alias("variant"), "query_id", "rank",
         "neighbor_id", "cos_sim",
@@ -5035,10 +4737,10 @@ def _dataset_merged_oracle() -> str:
     return (
         "SELECT 'split' AS variant, split AS k1, lang, n, "
         "CAST(0 AS BIGINT) AS min_id, CAST(0 AS BIGINT) AS max_id, "
-        "CAST(0 AS BIGINT) AS sum_id FROM (" + ORACLES["dataset_split"] + ") "
+        "CAST(0 AS BIGINT) AS sum_id FROM (" + _DATASET_SPLIT_ORACLE + ") "
         "UNION ALL "
         "SELECT 'stratified' AS variant, '' AS k1, lang, n, min_id, "
-        "max_id, sum_id FROM (" + ORACLES["dataset_stratified"] + ")"
+        "max_id, sum_id FROM (" + _DATASET_STRATIFIED_ORACLE + ")"
     )
 
 
@@ -5095,19 +4797,18 @@ def _tpch_q1q6_merged_oracle() -> str:
         "SELECT 'q1' AS variant, l_returnflag AS rf, l_linestatus AS ls, "
         "sum_qty AS m1, sum_base_price AS m2, sum_disc_price AS m3, "
         "sum_charge AS m4, count_order AS cnt "
-        "FROM (" + ORACLES["tpch_q1"] + ") "
+        "FROM (" + _TPCH_Q1_ORACLE + ") "
         "UNION ALL "
         "SELECT 'q6' AS variant, '' AS rf, '' AS ls, revenue AS m1, "
         "0.0 AS m2, 0.0 AS m3, 0.0 AS m4, n AS cnt "
-        "FROM (" + ORACLES["tpch_q6"] + ")"
+        "FROM (" + _TPCH_Q6_ORACLE + ")"
     )
 
 
 def q_tpch_q1q6_merged(spark, sf_dir):
     """TPC-H Q1 (full-scan decimal rollup) + Q6 (filter-pushdown
-    aggregate) in ONE variant-tag union — replaces tpch_q1 + tpch_q6
-    at r9; both plans stay what their individual registrations lock
-    (the union is literal)."""
+    aggregate) in ONE variant-tag union; both plans stay what their
+    individual plan locks pin (the union is literal)."""
     q1 = q_tpch_q1(spark, sf_dir).select(
         F.lit("q1").alias("variant"),
         F.col("l_returnflag").alias("rf"),
@@ -5131,7 +4832,7 @@ def q_tpch_q1q6_merged(spark, sf_dir):
     return q1.unionAll(q6)
 
 
-# --- r7 new operators (queued): OHLC bars, bloom semi-join, CDC latest -----
+# --- OHLC bars, bloom semi-join, CDC latest ----------------------------------
 
 _OHLC_BAR_S = 21_600.0  # 6-hour bars over the ~29-day event span
 
@@ -6180,8 +5881,7 @@ def q_gapfill(spark, sf_dir):
     )
 
 
-# --- skew-diffused join (r8 queue: r7's head budget is already exact;
-# free the slot by merging the multimodal png/bmp/jpeg decode trio) ---
+# --- skew-diffused join ------------------------------------------------------
 
 _SKEW_PIVOT = 75  # user_id <= pivot collapses to key 0 -> ~half the rows
 
@@ -6246,29 +5946,14 @@ def _histogram_oracle() -> str:
 def q_sketch_histogram(spark, sf_dir):
     """Fixed-bin histogram state per event_type (pipeline/sketches.py
     histogram_sketch) — the one-pass bounded-state quantile machinery;
-    the contract compares the exact BIGINT bin counts. Queued r8 with
-    skew_join."""
+    the contract compares the exact BIGINT bin counts."""
     ev = load_table(spark, "events", sf_dir).select("event_type", "value")
     return pl.histogram_sketch(
         ev, "value", lo=_HG_LO, hi=_HG_HI, bins=_HG_BINS, by="event_type"
     )
 
 
-# --- BPE vocabulary training (r8 queue; rows-only like embedding_pca:
-# an iterative driver-argmax loop has no single-statement SQL twin —
-# value verification is the pure-Python reference parity run on every
-# pytest (tests/test_bpe.py, incl. on the driver's own documents) ---
-
-
-def q_bpe_vocab(spark, sf_dir):
-    """10-merge BPE vocabulary learned from the documents corpus
-    (pipeline/bpe.py train_bpe): per-word final segmentation + count.
-    Deterministic — ties in the pair argmax break lexicographically,
-    so the merge sequence is partitioning- and rerun-stable."""
-    merges, vocab = pl.train_bpe(_docs(spark, sf_dir), num_merges=10)
-    return vocab.select(
-        "word", "cnt", F.concat_ws(" ", F.col("pieces")).alias("pieces")
-    )
+# --- feature-hashed TF-IDF vectors -------------------------------------------
 
 
 _HV_DIM = 64
@@ -6313,16 +5998,14 @@ def _hash_vectors_oracle() -> str:
 def q_text_hash_vectors(spark, sf_dir):
     """Feature-hashed TF-IDF document vectors (pipeline/text.py
     hashed_tfidf_vectors, dim=64) exploded to (doc_id, slot, w_q) —
-    the model-free text→embedding bridge into the ANN/dedup stack.
-    Queued r8."""
+    the model-free text→embedding bridge into the ANN/dedup stack."""
     res = pl.hashed_tfidf_vectors(_docs(spark, sf_dir), dim=_HV_DIM)
     return res.select(
         "doc_id", F.posexplode(F.col("vec")).alias("slot", "w")
     ).select("doc_id", F.col("slot").cast("bigint").alias("slot"), _q3_col(F.col("w")).alias("w_q"))
 
 
-# --- Lomb-Scargle (r9 queue: r8's four slots are spoken for; the r9
-# merge candidate is welch + welch_blackman once both have fresh rows) ---
+# --- Lomb-Scargle ------------------------------------------------------------
 
 _LS_FREQS = (1e-5, 5e-5, 1e-4, 5e-4)  # rad/s against the ~29-day span
 
@@ -6386,7 +6069,7 @@ def q_lombscargle(spark, sf_dir):
     )
 
 
-# --- classical time-series stats (r9 queue with lombscargle) ---------------
+# --- classical time-series stats ---------------------------------------------
 
 _ACF_NLAGS = 8
 _EWMA_ALPHA = 0.3
@@ -6426,7 +6109,7 @@ def _acf_oracle() -> str:
 def q_acf(spark, sf_dir):
     """Per-series autocorrelation at lags 0..8 (operators/tsstats.py
     acf — one ordered-window exchange, lag products as window columns,
-    one aggregate). Queued r9."""
+    one aggregate)."""
     res = ops.acf(_events(spark, sf_dir), by=["user_id"], dim="ts", nlags=_ACF_NLAGS)
     return res.select(
         "user_id",
@@ -6470,7 +6153,7 @@ def q_ewma(spark, sf_dir):
     """Exponentially weighted moving average, recursive (pandas
     adjust=False) + adjusted variants in one union
     (operators/tsstats.py ewma — the verified ragged one-pole lfilter
-    kernel + closed-form projections). Queued r9."""
+    kernel + closed-form projections)."""
     ev = _events(spark, sf_dir)
     out = []
     for tag, adj in (("recursive", False), ("adjust", True)):
@@ -6525,8 +6208,7 @@ def q_seasonal_decompose(spark, sf_dir):
     (operators/tsstats.py seasonal_decompose — one ordered-window
     exchange for the centered-MA trend + one phase-mean aggregation,
     zero Python). Edge rows (trend undefined within period/2 of either
-    end) are flagged and zero-coalesced in the quantized compare.
-    Queued r9."""
+    end) are flagged and zero-coalesced in the quantized compare."""
     res = ops.seasonal_decompose(
         _events(spark, sf_dir), _SD_PERIOD, by=["user_id"], dim="ts"
     )
@@ -6560,7 +6242,7 @@ def q_cap_per_group(spark, sf_dir):
     """Per-group document caps (pipeline/sample.py cap_per_group):
     synthetic 7-way grouping over documents, at most 40 kept per
     group by the salted-hash uniform — deterministic, rerun- and
-    growth-stable. Queued r9 (the spare slot)."""
+    growth-stable."""
     docs = _docs(spark, sf_dir).select(
         "doc_id", (F.col("doc_id") % _CAP_GROUPS).alias("grp")
     )
@@ -6596,7 +6278,7 @@ def _robust_z_oracle() -> str:
 def q_robust_zscore(spark, sf_dir):
     """Median/MAD robust outlier scores per event_type
     (pipeline/sample.py robust_zscore — exact order-statistic medians,
-    3 group-key exchanges). Queued r10."""
+    3 group-key exchanges)."""
     ev = load_table(spark, "events", sf_dir).select(
         "event_id", "event_type", "value"
     )
@@ -6656,7 +6338,7 @@ def q_dedup_minhash_cross(spark, sf_dir):
     """Incremental dedup: the 2/3 "new shard" of documents matched
     against the 1/3 "snapshot" side via cross-corpus banded LSH
     (pipeline/dedup.py minhash_pairs_cross — cross-side pairs only,
-    the snapshot never self-pairs). Queued r10."""
+    the snapshot never self-pairs)."""
     docs = _docs(spark, sf_dir)
     left = docs.filter(F.col("doc_id") % _MHX_MOD != 0)
     right = docs.filter(F.col("doc_id") % _MHX_MOD == 0)
@@ -6687,7 +6369,7 @@ def _cube_oracle() -> str:
 def q_cube_revenue(spark, sf_dir):
     """CUBE aggregation over (returnflag, linestatus) — the grouping-
     sets surface (§2.3 'aggregations: grouping sets/cube/rollup'),
-    with GROUPING() markers and exact decimal sums. Queued r10."""
+    with GROUPING() markers and exact decimal sums."""
     li = load_table(spark, "lineitem", sf_dir)
     return (
         li.cube("l_returnflag", "l_linestatus")
@@ -6753,7 +6435,7 @@ def q_filter_by_quantile(spark, sf_dir):
     event_type's 0.8 quantile (pipeline/sketches.py
     filter_by_quantile — the no-sort percentile threshold; even the
     kept row set reproduces byte-for-byte because the whole decision
-    is exact bin integers + one fixed float formula). Queued r10."""
+    is exact bin integers + one fixed float formula)."""
     ev = load_table(spark, "events", sf_dir).select(
         "event_id", "event_type", "value"
     )
@@ -6813,7 +6495,7 @@ def q_interp_to(spark, sf_dir):
     interp_to): every event series evaluated one hour after each of
     its own events — union + one ordered window, no join node.
     Null-before-first flagged and zero-coalesced in the quantized
-    compare. Queued r11."""
+    compare."""
     ev = _events(spark, sf_dir)
     targets = ev.select(
         "user_id",
@@ -6828,50 +6510,26 @@ def q_interp_to(spark, sf_dir):
     )
 
 
-# --- r10-r12 merge staging -------------------------------------------------
-# Eleven more variant-family merges, written and CI-verified NOW so
-# every remaining ledger round is fully funded before it opens
-# (VERDICT r7 #2: drain the queue faster than it grows). Slot math:
-#   r10 needs 7 slots; staged merges free hilbert_envelope, filtfilt,
-#     convolve+correlate (3-way), ann_cosine_topk_lsh,
-#     dataset_stratified (6) + decimate_iir (decimate@) = 7. DONE.
-#   r11 needs 8: resample@ frees resample_poly+resample_freq (2),
-#     sosfilt@ frees sosfilt_chunked+sosfiltfilt (2), fft@ frees rfft
-#     (1), peak_widths@ frees find_peaks (1), dedup_minhash@ frees
-#     dedup_simhash+dedup_embedding (2) = 8. DONE.
-#   r12 needs 6: multimodal_features@ frees multimodal_resize+
-#     multimodal_frame_sample (2), ann_cosine_topk_ivf@ frees
-#     ann_cosine_topk_kmeans (1), tpch_q3@ frees tpch_q5 (1),
-#     multimodal_audio_decode@ frees multimodal_gzip_decode (1),
-#     sketch_hll@ frees sketch_countmin (1) = 6. DONE — the queue's
-#     real entries drain to ZERO at r12.
-# Each merged function calls the surviving plain q_* functions (bench
-# continuity: bench.py keeps measuring the originals via its `plain`
-# map); each oracle wraps the stored per-name ORACLES strings in
-# derived tables (DuckDB WINDOW must not scope across UNION branches).
-# At each rotation: deregister the retiring names, preserve their
-# oracle strings as _XXX_ORACLE variables FIRST (these builders read
-# ORACLES[name] at staging time — the strings below are already
-# materialized, so deregistration cannot break them), register the
-# merge under the surviving base name, rebuild _CHECK_LAST per the
-# standing head-math procedure.
+# --- variant-family unions ---------------------------------------------------
+# Each union calls the plain q_* functions as literal unionAll branches;
+# each oracle wraps the constituent oracles in derived tables (DuckDB
+# WINDOW must not scope across UNION branches).
 
 
 def _decimate_merged_oracle() -> str:
     return (
         "SELECT 'fir' AS variant, user_id, idx, value4 "
-        "FROM (" + ORACLES["decimate_fir"] + ") "
+        "FROM (" + _DECIMATE_FIR_ORACLE + ") "
         "UNION ALL "
         "SELECT 'iir_' || variant AS variant, user_id, idx, value4 "
-        "FROM (" + ORACLES["decimate_iir"] + ")"
+        "FROM (" + _decimate_iir_merged_oracle() + ")"
     )
 
 
 def q_decimate_merged(spark, sf_dir):
     """decimate ftype='fir' + the iir causal/zerophase pair in ONE
-    variant-tag union — replaces decimate_fir + decimate_iir (EXECUTED r12
-    (both halves of the reference's decimate surface, signal.py:124,
-    stay value-verified in one head slot)."""
+    variant-tag union (both halves of the reference's decimate surface,
+    signal.py:124, stay value-verified in one registry row)."""
     fir = q_decimate_fir(spark, sf_dir).select(
         F.lit("fir").alias("variant"), "user_id", "idx", "value4"
     )
@@ -6887,20 +6545,19 @@ def q_decimate_merged(spark, sf_dir):
 def _resample_merged_oracle() -> str:
     return (
         "SELECT 'time' AS variant, user_id, idx, value4 AS va, 0.0 AS vb "
-        "FROM (" + ORACLES["resample"] + ") "
+        "FROM (" + _RESAMPLE_ORACLE + ") "
         "UNION ALL "
         "SELECT 'poly' AS variant, user_id, idx, value4 AS va, 0.0 AS vb "
-        "FROM (" + ORACLES["resample_poly"] + ") "
+        "FROM (" + _resample_poly_oracle() + ") "
         "UNION ALL "
         "SELECT 'freq' AS variant, user_id, idx, re4 AS va, im4 AS vb "
-        "FROM (" + ORACLES["resample_freq"] + ")"
+        "FROM (" + _RESAMPLE_FREQ_ORACLE + ")"
     )
 
 
 def q_resample_merged(spark, sf_dir):
     """resample domain='time' + resample_poly + resample domain='freq'
-    in ONE variant-tag union — replaces resample + resample_poly +
-    resample_freq (EXECUTED r12), freeing two slots (vb carries the freq
+    in ONE variant-tag union (vb carries the freq
     variant's imaginary part; 0.0 where the variant is real-valued)."""
     t = q_resample(spark, sf_dir).select(
         F.lit("time").alias("variant"), "user_id", "idx",
@@ -6920,13 +6577,13 @@ def q_resample_merged(spark, sf_dir):
 def _sosfilt_family_merged_oracle() -> str:
     return (
         "SELECT 'sos' AS variant, user_id, idx, value4 "
-        "FROM (" + ORACLES["sosfilt"] + ") "
+        "FROM (" + _SOSFILT_ORACLE + ") "
         "UNION ALL "
         "SELECT 'chunked' AS variant, user_id, idx, value4 "
-        "FROM (" + ORACLES["sosfilt_chunked"] + ") "
+        "FROM (" + _SOSFILT_CHUNKED_ORACLE + ") "
         "UNION ALL "
         "SELECT 'ff_' || variant AS variant, user_id, idx, value4 "
-        "FROM (" + ORACLES["sosfiltfilt"] + ")"
+        "FROM (" + _sosfiltfilt_merged_oracle() + ")"
     )
 
 
@@ -6953,11 +6610,11 @@ def q_sosfilt_family_merged(spark, sf_dir):
 def _fft_fwd_merged_oracle() -> str:
     return (
         "SELECT 'fft' AS variant, user_id, idx, re4 AS va, im4 AS vb "
-        "FROM (" + ORACLES["fft"] + ") "
+        "FROM (" + _FFT_ORACLE + ") "
         "UNION ALL "
         "SELECT 'rfft_' || variant AS variant, user_id, idx, "
         "CAST(re_q AS DOUBLE) AS va, CAST(im_q AS DOUBLE) AS vb "
-        "FROM (" + ORACLES["rfft"] + ")"
+        "FROM (" + _rfft_merged_oracle() + ")"
     )
 
 
@@ -6985,19 +6642,18 @@ def _peaks_merged_oracle() -> str:
         "SELECT 'width' AS variant, user_id, peak, "
         "CAST(width_q AS DOUBLE) AS a, CAST(wh_q AS DOUBLE) AS b, "
         "CAST(lip_q AS DOUBLE) AS c, CAST(rip_q AS DOUBLE) AS d "
-        "FROM (" + ORACLES["peak_widths"] + ") "
+        "FROM (" + _peak_widths_oracle() + ") "
         "UNION ALL "
         "SELECT 'peak' AS variant, user_id, peak, "
         "CAST(index AS DOUBLE) AS a, val4 AS b, 0.0 AS c, 0.0 AS d "
-        "FROM (" + ORACLES["find_peaks"] + ")"
+        "FROM (" + _FIND_PEAKS_ORACLE + ")"
     )
 
 
 def q_peaks_merged(spark, sf_dir):
-    """peak_widths + find_peaks in ONE variant-tag union — replaces
-    both at r11 (the reference's peak surface, signal.py:346, in one
-    head slot; a/b/c/d carry each variant's original columns as exact
-    doubles)."""
+    """peak_widths + find_peaks in ONE variant-tag union (the
+    reference's peak surface, signal.py:346, in one registry row;
+    a/b/c/d carry each variant's original columns as exact doubles)."""
     w = q_peak_widths(spark, sf_dir).select(
         F.lit("width").alias("variant"), "user_id", "peak",
         F.col("width_q").cast("double").alias("a"),
@@ -7018,14 +6674,14 @@ def q_peaks_merged(spark, sf_dir):
 def _dedup_pairs_merged_oracle() -> str:
     return (
         "SELECT 'minhash' AS variant, a_id, b_id, jaccard AS score "
-        "FROM (" + ORACLES["dedup_minhash"] + ") "
+        "FROM (" + _minhash_oracle() + ") "
         "UNION ALL "
         "SELECT 'simhash' AS variant, a_id, b_id, "
         "CAST(hamming AS DOUBLE) AS score "
-        "FROM (" + ORACLES["dedup_simhash"] + ") "
+        "FROM (" + _simhash_oracle() + ") "
         "UNION ALL "
         "SELECT 'embedding' AS variant, a_id, b_id, cos_sim AS score "
-        "FROM (" + ORACLES["dedup_embedding"] + ")"
+        "FROM (" + _DEDUP_EMBEDDING_ORACLE + ")"
     )
 
 
@@ -7054,17 +6710,17 @@ def _multimodal_tf_merged_oracle() -> str:
     return (
         "SELECT 'features' AS variant, doc_id, "
         "CAST(n_bytes AS BIGINT) AS k, '' AS s, f0, f1, f2, f3 "
-        "FROM (" + ORACLES["multimodal_features"] + ") "
+        "FROM (" + _multimodal_oracle() + ") "
         "UNION ALL "
         "SELECT 'resize' AS variant, doc_id, "
         "CAST(n_bytes AS BIGINT) AS k, digest AS s, "
         "0.0 AS f0, 0.0 AS f1, 0.0 AS f2, 0.0 AS f3 "
-        "FROM (" + ORACLES["multimodal_resize"] + ") "
+        "FROM (" + _MULTIMODAL_RESIZE_ORACLE + ") "
         "UNION ALL "
         "SELECT 'frame' AS variant, doc_id, "
         "CAST(frame_idx AS BIGINT) AS k, '' AS s, "
         "f0, 0.0 AS f1, 0.0 AS f2, 0.0 AS f3 "
-        "FROM (" + ORACLES["multimodal_frame_sample"] + ")"
+        "FROM (" + _MULTIMODAL_FRAME_SAMPLE_ORACLE + ")"
     )
 
 
@@ -7099,10 +6755,10 @@ def q_multimodal_tf_merged(spark, sf_dir):
 def _ann_cells_merged_oracle() -> str:
     return (
         "SELECT 'ivf' AS variant, query_id, rank, neighbor_id, cos_sim "
-        "FROM (" + ORACLES["ann_cosine_topk_ivf"] + ") "
+        "FROM (" + _ANN_COSINE_TOPK_IVF_ORACLE + ") "
         "UNION ALL "
         "SELECT 'kmeans' AS variant, query_id, rank, neighbor_id, cos_sim "
-        "FROM (" + ORACLES["ann_cosine_topk_kmeans"] + ")"
+        "FROM (" + _kmeans_topk_oracle() + ")"
     )
 
 
@@ -7126,19 +6782,18 @@ def _tpch_q3q5_merged_oracle() -> str:
     return (
         "SELECT 'q3' AS variant, l_orderkey AS k, o_orderdate AS s, "
         "revenue, CAST(-1 AS BIGINT) AS n "
-        "FROM (" + ORACLES["tpch_q3"] + ") "
+        "FROM (" + _TPCH_Q3_ORACLE + ") "
         "UNION ALL "
         "SELECT 'q5' AS variant, CAST(-1 AS BIGINT) AS k, n_name AS s, "
         "revenue, n "
-        "FROM (" + ORACLES["tpch_q5"] + ")"
+        "FROM (" + _TPCH_Q5_ORACLE + ")"
     )
 
 
 def q_tpch_q3q5_merged(spark, sf_dir):
     """TPC-H Q3 (3-way join + top-n) and Q5 (6-way broadcast-dim join)
-    in ONE variant-tag union — replaces tpch_q3 + tpch_q5 at r12; both
-    join plans stay what their individual registrations lock (the
-    union is literal)."""
+    in ONE variant-tag union; both join plans stay what their
+    individual plan locks pin (the union is literal)."""
     q3 = q_tpch_q3(spark, sf_dir).select(
         F.lit("q3").alias("variant"),
         F.col("l_orderkey").alias("k"),
@@ -7161,11 +6816,11 @@ def _multimodal_bin_merged_oracle() -> str:
         "SELECT 'audio' AS variant, doc_id, CAST(n_bytes AS BIGINT) AS nb, "
         "'' AS s, rms6 AS m1, mean6 AS m2, n_frames AS m3, "
         "sample_rate AS m4 "
-        "FROM (" + ORACLES["multimodal_audio_decode"] + ") "
+        "FROM (" + _MULTIMODAL_AUDIO_DECODE_ORACLE + ") "
         "UNION ALL "
         "SELECT 'gzip' AS variant, doc_id, text_bytes AS nb, "
         "text_md5 AS s, 0.0 AS m1, 0.0 AS m2, 0.0 AS m3, 0.0 AS m4 "
-        "FROM (" + ORACLES["multimodal_gzip_decode"] + ")"
+        "FROM (" + _MULTIMODAL_GZIP_DECODE_ORACLE + ")"
     )
 
 
@@ -7195,12 +6850,12 @@ def _sketch_state_merged_oracle() -> str:
     return (
         "SELECT 'hll' AS variant, rf AS k, CAST(m AS BIGINT) AS a, "
         "present AS b, zeros AS c, register_sum AS d, rank_checksum AS e "
-        "FROM (" + ORACLES["sketch_hll"] + ") "
+        "FROM (" + _hll_oracle() + ") "
         "UNION ALL "
         "SELECT 'countmin' AS variant, tok AS k, exact_cnt AS a, "
         "est AS b, CAST(-1 AS BIGINT) AS c, CAST(-1 AS BIGINT) AS d, "
         "CAST(-1 AS BIGINT) AS e "
-        "FROM (" + ORACLES["sketch_countmin"] + ")"
+        "FROM (" + _countmin_oracle() + ")"
     )
 
 
@@ -7228,13 +6883,11 @@ def q_sketch_state_merged(spark, sf_dir):
     return hll.unionAll(cm)
 
 
-# --- r13 slate: relational coverage + LLM-pipeline additions ----------------
-# Six new operators built after the r10-r12 funding closed, targeted at
-# the remaining coverage seams: semi-join + having-join TPC-H shapes
-# (Q4/Q18), per-group regression as pure aggregate algebra, triangle
-# counting (the non-iterative graph member), sequence packing (the
-# concat-and-chunk layout every LLM pre-training run needs), and the
-# inverted-index build. Queue ledger round: r13.
+# --- relational coverage + LLM-pipeline additions ----------------------------
+# Semi-join + having-join TPC-H shapes (Q4/Q18), per-group regression as
+# pure aggregate algebra, triangle counting (the non-iterative graph
+# member), sequence packing (the concat-and-chunk layout every LLM
+# pre-training run needs), and the inverted-index build.
 
 _Q4_D1, _Q4_D2 = "1996-01-01", "1997-01-01"
 _Q4_LATE_DAYS = 60
@@ -7539,9 +7192,8 @@ def q_text_postings(spark, sf_dir):
     )
 
 
-# --- r14 slate: retrieval, typo-dedup, and relational coverage --------------
-# Five more operators closing the remaining checklist seams: BM25
-# ranking on the inverted-index layer, character-level near-dup via
+# --- retrieval, typo-dedup, and relational coverage --------------------------
+# BM25 ranking on the inverted-index layer, character-level near-dup via
 # deletion-neighborhood blocking (the FastSS construction), PIVOT,
 # anti-join (NOT EXISTS), and semi-structured JSON extraction.
 
@@ -7720,12 +7372,7 @@ def q_json_props_stats(spark, sf_dir):
     )
 
 
-# --- merged-union builders (staged as "r13 merge staging" under an
-# OLD plan; executed EARLIER/elsewhere: dedup_exact@ at r12, acf@ at
-# r10, asof_join@ at r9, gapfill@ at r11 — the ACTUAL r13 merges are
-# listed in the r13 rotation block at EOF). Same generic-column
-# -1/0-padding pattern as the r10-r12 staging above; builders below
-# remain the live implementations their registrations point at.
+# --- variant-family unions with generic -1/0-padded columns ------------------
 
 
 def _dedup_family_merged_oracle() -> str:
@@ -7733,26 +7380,25 @@ def _dedup_family_merged_oracle() -> str:
         "SELECT 'exact' AS variant, keep_id AS k1, CAST(-1 AS BIGINT) AS k2, "
         "content_hash AS s, n_copies AS a, CAST(-1 AS BIGINT) AS b, "
         "CAST(-1 AS BIGINT) AS c, CAST(-1 AS BIGINT) AS d, 0.0 AS x "
-        "FROM (" + ORACLES["dedup_exact"] + ") "
+        "FROM (" + _DEDUP_EXACT_ORACLE + ") "
         "UNION ALL "
         "SELECT 'jaccard' AS variant, a_id AS k1, b_id AS k2, '' AS s, "
         "CAST(-1 AS BIGINT) AS a, CAST(-1 AS BIGINT) AS b, "
         "CAST(-1 AS BIGINT) AS c, CAST(-1 AS BIGINT) AS d, jaccard AS x "
-        "FROM (" + ORACLES["dedup_ngram_jaccard"] + ") "
+        "FROM (" + _DEDUP_NGRAM_JACCARD_ORACLE + ") "
         "UNION ALL "
         "SELECT 'spans' AS variant, doc_id AS k1, CAST(-1 AS BIGINT) AS k2, "
         "'' AS s, n_tokens AS a, n_grams AS b, n_dup_grams AS c, "
         "frac_q AS d, 0.0 AS x "
-        "FROM (" + ORACLES["dedup_ngram_spans"] + ")"
+        "FROM (" + _dup_ngram_oracle() + ")"
     )
 
 
 def q_dedup_family_merged(spark, sf_dir):
     """Exact-hash dedup + n-gram Jaccard pairs + substring-level dup
-    spans in ONE variant-tag union — replaces dedup_exact +
-    dedup_ngram_jaccard + dedup_ngram_spans (EXECUTED r12), freeing two slots
-    (k1/k2 = ids, s = the content hash, a..d = each variant's integer
-    columns -1-padded, x = the Jaccard score)."""
+    spans in ONE variant-tag union (k1/k2 = ids, s = the content hash,
+    a..d = each variant's integer columns -1-padded, x = the Jaccard
+    score)."""
     ex = q_dedup_exact(spark, sf_dir).select(
         F.lit("exact").alias("variant"),
         F.col("keep_id").alias("k1"),
@@ -7794,17 +7440,17 @@ def _tsstats_merged_oracle() -> str:
         "SELECT 'acf' AS variant, user_id, CAST(lag AS BIGINT) AS i, "
         "acf_q AS v1, CAST(0 AS BIGINT) AS v2, CAST(0 AS BIGINT) AS v3, "
         "CAST(-1 AS BIGINT) AS edge "
-        "FROM (" + ORACLES["acf"] + ") "
+        "FROM (" + _acf_oracle() + ") "
         "UNION ALL "
         "SELECT 'ewma_' || variant AS variant, user_id, idx AS i, "
         "ewma_q AS v1, CAST(0 AS BIGINT) AS v2, CAST(0 AS BIGINT) AS v3, "
         "CAST(-1 AS BIGINT) AS edge "
-        "FROM (" + ORACLES["ewma"] + ") "
+        "FROM (" + _ewma_oracle() + ") "
         "UNION ALL "
         "SELECT 'seasonal' AS variant, user_id, idx AS i, "
         "seasonal_q AS v1, trend_q AS v2, resid_q AS v3, "
         "CAST(edge AS BIGINT) AS edge "
-        "FROM (" + ORACLES["seasonal_decompose"] + ")"
+        "FROM (" + _seasonal_oracle() + ")"
     )
 
 
@@ -7848,12 +7494,12 @@ def _temporal_join_merged_oracle() -> str:
     return (
         "SELECT 'asof' AS variant, user_id AS k, t, anchor_t AS a, "
         "anchor_value6 AS x "
-        "FROM (" + ORACLES["asof_join"] + ") "
+        "FROM (" + _ASOF_JOIN_ORACLE + ") "
         "UNION ALL "
         "SELECT 'range' AS variant, o_orderkey AS k, "
         "CAST(-1 AS BIGINT) AS t, n_shipments AS a, "
         "CAST(qty_q AS DOUBLE) AS x "
-        "FROM (" + ORACLES["range_join"] + ")"
+        "FROM (" + _RANGE_JOIN_ORACLE + ")"
     )
 
 
@@ -7884,7 +7530,7 @@ def _regularize_merged_oracle() -> str:
     return (
         "SELECT 'gf_' || variant AS variant, user_id, t_us, v_q, "
         "CAST(-1 AS BIGINT) AS bf "
-        "FROM (" + ORACLES["gapfill"] + ") "
+        "FROM (" + _gapfill_oracle() + ") "
         "UNION ALL "
         "SELECT 'interp' AS variant, user_id, t_us, v_q, "
         "CAST(before_first AS BIGINT) AS bf "
@@ -7894,9 +7540,9 @@ def _regularize_merged_oracle() -> str:
 
 def q_regularize_merged(spark, sf_dir):
     """gapfill (linear+ffill onto the regular grid) + interp_to
-    (caller-supplied instants) in ONE variant-tag union — replaces
-    both at r13; the whole irregular→regular surface stays
-    value-verified in one head slot (bf = the before-first flag, -1
+    (caller-supplied instants) in ONE variant-tag union: the whole
+    irregular→regular surface stays value-verified in one registry row
+    (bf = the before-first flag, -1
     for the grid variants)."""
     gf = q_gapfill(spark, sf_dir).select(
         F.concat(F.lit("gf_"), F.col("variant")).alias("variant"),
@@ -7915,8 +7561,7 @@ def q_regularize_merged(spark, sf_dir):
     return gf.unionAll(it)
 
 
-# --- r15 slate: CDC apply, analytics windows, set ops, ANN recall,
-# weighted sampling ----------------------------------------------------------
+# --- CDC apply, analytics windows, set ops, ANN recall, sampling -------------
 
 _CDC_DELETE = "error"  # event_type acting as the delete tombstone
 
@@ -8031,14 +7676,9 @@ def q_active_user_setops(spark, sf_dir):
 
 
 def _ann_recall_oracle() -> str:
-    # plain-oracle snapshots: ORACLES["ann_cosine_topk_ivf"] became the
-    # cells-union MERGED oracle at the r9 rotation and
-    # ORACLES["ann_cosine_topk"] the exact+lsh union at r10, so this
-    # builder (called when the _QUEUED literal is constructed, after
-    # the rotation blocks) reads the snapshots taken there instead
     return (
-        "WITH ex AS (" + _ANN_EXACT_PLAIN_ORACLE + "), "
-        "ap AS (" + _ANN_IVF_PLAIN_ORACLE + "), "
+        "WITH ex AS (" + _ANN_COSINE_TOPK_ORACLE + "), "
+        "ap AS (" + _ANN_COSINE_TOPK_IVF_ORACLE + "), "
         "hits AS (SELECT ex.query_id, count(ap.neighbor_id) AS n_hits, "
         "count(*) AS k FROM ex LEFT JOIN ap "
         "ON ex.query_id = ap.query_id AND ex.neighbor_id = ap.neighbor_id "
@@ -8077,14 +7717,12 @@ _WS_K = 25
 
 
 def _weighted_sample_oracle(guarded: bool = False) -> str:
-    # guarded=True is the REGISTERED oracle since the r15 rotation
-    # (ADVICE r13 #2): the both-ends boundary CASE mirroring
-    # pipeline/sample.py _ares_key(u_guard="both"), staged+parity-
-    # pinned at r14, flipped into the registration at r15.
-    # guarded=False is the r12-r14 historical oracle, byte-pinned to
-    # the default u_guard="zero" path (whose u==0 deflection the SQL
-    # omits on purpose: ~1e-18 of md5 ids, none below ~10^17 rows;
-    # Spark's -inf and DuckDB's raw ln(u) only diverge ON such a row).
+    # guarded=True is the registered oracle: the both-ends boundary CASE
+    # mirroring pipeline/sample.py _ares_key(u_guard="both").
+    # guarded=False is byte-pinned to the default u_guard="zero" path
+    # (whose u==0 deflection the SQL omits on purpose: ~1e-18 of md5 ids,
+    # none below ~10^17 rows; Spark's -inf and DuckDB's raw ln(u) only
+    # diverge ON such a row).
     u = (
         "(('0x' || substring(md5('wsample|' || CAST(doc_id AS VARCHAR)), 1, 15))"
         "::BIGINT / 16.0^15)"
@@ -8120,212 +7758,18 @@ def q_weighted_sample(spark, sf_dir):
     )
 
 
-# --- merged-union builders (staged here, EXECUTED in earlier rotations) -----
-# STALE-HEADER FIX (r14): this block was originally titled "r15 merge
-# staging" under an old plan where these five merges would fund r15
-# slots. All five executed EARLIER than that plan assumed
-# (text_logprob@merged at r10, multimodal_real_decode@merged at r11,
-# embedding_quantize@merged at r12, fftconvolve_2d@merged and
-# sessionize@merged at r13 — see the rotation blocks at EOF). The
-# CURRENT r15 plan needs NO merges: 47 due + the 3-name queue = 50
-# exactly (the r15 RECIPE block above). Builders below remain the
-# live implementations their registrations point at.
-
-
-# --- r16 retirement-first DRY-RUN (staged r15, VERDICT r14 #3) --------------
-# NOT registered. With N = 100 AT the cap, r16's first new operator
-# must retire a name merge-first; this is the policy's own top
-# remaining candidate (preference rule b — welch/decimate variant
-# merges, rules-a candidates, already executed r9/r12): event_pivot
-# is a single-purpose demo shape (conditional-aggregation PIVOT over
-# events) folded under the surviving window_analytics base as a
-# variant-tag union. Built through the FULL evidence bar a round
-# ahead so the first forced merge is not the first attempt:
-#   (a) CI-byte-exact vs the merged oracle every pytest run
-#       (tests/test_queued_contract.py::_STAGED_MERGES),
-#   (b) union plan lock (tests/test_plans.py::_STAGED_UNIONS — moves
-#       into _MERGED_UNIONS under "window_analytics" at registration),
-#   (c) bench plain_overrides continuity pre-staged (bench.py r15
-#       block: window_analytics + event_pivot keep their plain plans).
-# Conformable schema per the csd_merged precedent: variant tag +
-# user_id + k1 BIGINT (t_us; -1 on pivot rows) + v01..v10 DOUBLE
-# (window: rn/nt4 cast exact + the four _q3 deltas + 0.0 padding;
-# pivot: the five (count, sum) pairs — counts exact in DOUBLE below
-# 2^53). At r16: _q("window_analytics", _event_widefam_merged_oracle())
-# (q_event_widefam_merged); del QUERIES["event_pivot"].
-
-
-def _event_widefam_merged_oracle() -> str:
-    pv = []
-    for i, t in enumerate(_PIVOT_TYPES):
-        pv.append(f"CAST({t}_n AS DOUBLE) AS v{2 * i + 1:02d}")
-        pv.append(f"{t}_v AS v{2 * i + 2:02d}")
-    return (
-        "SELECT 'window' AS variant, user_id, t_us AS k1, "
-        "CAST(rn AS DOUBLE) AS v01, CAST(nt4 AS DOUBLE) AS v02, "
-        "pr_q AS v03, cd_q AS v04, dlag_q AS v05, dlead_q AS v06, "
-        "0.0 AS v07, 0.0 AS v08, 0.0 AS v09, 0.0 AS v10 "
-        "FROM (" + _window_analytics_oracle() + ") "
-        "UNION ALL "
-        "SELECT 'pivot' AS variant, user_id, CAST(-1 AS BIGINT) AS k1, "
-        + ", ".join(pv)
-        + " FROM (" + _event_pivot_oracle() + ")"
-    )
-
-
-def q_event_widefam_merged(spark, sf_dir):
-    """Ranking/analytic window functions + the conditional-aggregation
-    event pivot in ONE variant-tag union — the staged r16 merge that
-    retires event_pivot under the window_analytics base (see the
-    dry-run comment above). Pure unionAll glue over the two registered
-    builders: no new exchange, each branch keeps its own plan."""
-    wa = q_window_analytics(spark, sf_dir).select(
-        F.lit("window").alias("variant"),
-        "user_id",
-        F.col("t_us").alias("k1"),
-        F.col("rn").cast("double").alias("v01"),
-        F.col("nt4").cast("double").alias("v02"),
-        F.col("pr_q").alias("v03"),
-        F.col("cd_q").alias("v04"),
-        F.col("dlag_q").alias("v05"),
-        F.col("dlead_q").alias("v06"),
-        F.lit(0.0).alias("v07"),
-        F.lit(0.0).alias("v08"),
-        F.lit(0.0).alias("v09"),
-        F.lit(0.0).alias("v10"),
-    )
-    pv_cols = []
-    for i, t in enumerate(_PIVOT_TYPES):
-        pv_cols.append(
-            F.col(f"{t}_n").cast("double").alias(f"v{2 * i + 1:02d}")
-        )
-        pv_cols.append(F.col(f"{t}_v").alias(f"v{2 * i + 2:02d}"))
-    pv = q_event_pivot(spark, sf_dir).select(
-        F.lit("pivot").alias("variant"),
-        "user_id",
-        F.lit(-1).cast("bigint").alias("k1"),
-        *pv_cols,
-    )
-    return wa.unionAll(pv)
-
-
-# --- r16+ retirement-first DRY-RUNS #2/#3 (staged r15, rule c) --------------
-# NOT registered. After event_pivot (rule b, above), the policy's
-# next candidates are the eval/report twins (preference rule c —
-# retire the COMPOSITION, never the operators it evaluates). Both are
-# built through the full evidence bar a round ahead: (a) CI-byte-exact
-# vs the merged oracle every pytest run (test_queued_contract
-# _STAGED_MERGES), (b) union plan lock (test_plans _STAGED_UNIONS),
-# (c) bench plain_overrides continuity pre-staged while plain ==
-# registered. Both unions stay single-data-family (rule 3): ann =
-# embeddings only, dedup = documents only.
-#   * ann_recall_eval folds under the ann_cosine_topk_ivf base (the
-#     r12 cells union): recall rows ride the cells schema as
-#     variant='recall', rank=-1, neighbor_id=n_hits (a <=k count,
-#     exact BIGINT), cos_sim=recall_q cast DOUBLE (a _q3 millis
-#     integer <= 1000, exact in DOUBLE). At registration:
-#     _q("ann_cosine_topk_ivf", _ann_evalfam_merged_oracle())
-#     (q_ann_evalfam_merged); del QUERIES["ann_recall_eval"].
-#   * dedup_recall_eval folds under the dedup_minhash base (the r11
-#     4-way pair-family union): the 1-row 5-metric eval UNPIVOTS into
-#     two pair-schema rows — ('eval_precision', a_id=n_candidates,
-#     b_id=n_tp, score=precision_q) and ('eval_recall', a_id=n_truth,
-#     b_id=n_tp, score=recall_q) — all five metrics carried (the csd
-#     padding precedent). The Spark side unpivots with ONE explode
-#     over the single eval subtree, so the union adds no second
-#     corpus-scale branch (the _STAGED_UNIONS exchange bound holds);
-#     the oracle inlines the eval subquery twice, which only DuckDB
-#     pays at sf0.001. At registration: _q("dedup_minhash",
-#     _dedup_evalfam_merged_oracle())(q_dedup_evalfam_merged);
-#     del QUERIES["dedup_recall_eval"].
-
-
-def _ann_evalfam_merged_oracle() -> str:
-    # ORACLES["ann_cosine_topk_ivf"] is the r12 cells-union snapshot
-    return (
-        "SELECT variant, query_id, rank, neighbor_id, cos_sim "
-        "FROM (" + ORACLES["ann_cosine_topk_ivf"] + ") "
-        "UNION ALL "
-        "SELECT 'recall' AS variant, query_id, "
-        "CAST(-1 AS INTEGER) AS rank, n_hits AS neighbor_id, "
-        "CAST(recall_q AS DOUBLE) AS cos_sim "
-        "FROM (" + ORACLES["ann_recall_eval"] + ")"
-    )
-
-
-def q_ann_evalfam_merged(spark, sf_dir):
-    """The cell-probed ANN union (ivf + kmeans variants) + its own
-    acceptance metric (recall@k of IVF vs the exact top-k) in ONE
-    variant-tag union — the staged rule-c merge that retires
-    ann_recall_eval under the ann_cosine_topk_ivf base (see the
-    dry-run comment above). Pure unionAll glue over the two
-    registered builders; each branch keeps its own plan."""
-    base = q_ann_cells_merged(spark, sf_dir)
-    rc = q_ann_recall_eval(spark, sf_dir).select(
-        F.lit("recall").alias("variant"),
-        "query_id",
-        F.lit(-1).cast("int").alias("rank"),
-        F.col("n_hits").alias("neighbor_id"),
-        F.col("recall_q").cast("double").alias("cos_sim"),
-    )
-    return base.unionAll(rc)
-
-
-def _dedup_evalfam_merged_oracle() -> str:
-    # ORACLES["dedup_minhash"] is the r11 4-way pair-family snapshot
-    ev = ORACLES["dedup_recall_eval"]
-    return (
-        "SELECT variant, a_id, b_id, score "
-        "FROM (" + ORACLES["dedup_minhash"] + ") "
-        "UNION ALL "
-        "SELECT 'eval_precision' AS variant, n_candidates AS a_id, "
-        "n_tp AS b_id, precision_q AS score FROM (" + ev + ") "
-        "UNION ALL "
-        "SELECT 'eval_recall' AS variant, n_truth AS a_id, "
-        "n_tp AS b_id, recall_q AS score FROM (" + ev + ")"
-    )
-
-
-def q_dedup_evalfam_merged(spark, sf_dir):
-    """The 4-way near-dup pair-family union + the banding-quality
-    eval (candidate precision / banding recall vs exact-Jaccard
-    ground truth) in ONE variant-tag union — the staged rule-c merge
-    that retires dedup_recall_eval under the dedup_minhash base (see
-    the dry-run comment above). The eval's five metrics unpivot into
-    two pair-schema rows via one explode over the single eval
-    subtree, so the union adds no duplicated corpus-scale branch."""
-    base = q_dedup_pair_family_merged(spark, sf_dir)
-    ev = q_dedup_recall_eval(spark, sf_dir)
-    rows = ev.select(
-        F.explode(
-            F.array(
-                F.struct(
-                    F.lit("eval_precision").alias("variant"),
-                    F.col("n_candidates").alias("a_id"),
-                    F.col("n_tp").alias("b_id"),
-                    F.col("precision_q").alias("score"),
-                ),
-                F.struct(
-                    F.lit("eval_recall").alias("variant"),
-                    F.col("n_truth").alias("a_id"),
-                    F.col("n_tp").alias("b_id"),
-                    F.col("recall_q").alias("score"),
-                ),
-            )
-        ).alias("r")
-    ).select("r.*")
-    return base.unionAll(rows)
+# --- variant-family unions ---------------------------------------------------
 
 
 def _fftconv_nd_merged_oracle() -> str:
     return (
         "SELECT '2d' AS variant, user_id, row_idx AS i, col_idx AS j, "
         "val4 AS va, 0.0 AS vb "
-        "FROM (" + ORACLES["fftconvolve_2d"] + ") "
+        "FROM (" + _FFTCONVOLVE_2D_ORACLE + ") "
         "UNION ALL "
         "SELECT 'complex' AS variant, user_id, idx AS i, "
         "CAST(-1 AS BIGINT) AS j, re4 AS va, im4 AS vb "
-        "FROM (" + ORACLES["fftconvolve_complex"] + ")"
+        "FROM (" + _FFTCONVOLVE_COMPLEX_ORACLE + ")"
     )
 
 
@@ -8350,11 +7794,11 @@ def _lm_vocab_merged_oracle() -> str:
     return (
         "SELECT 'nll' AS variant, doc_id AS k, '' AS s, n_tokens AS a, "
         "nll_q AS b "
-        "FROM (" + ORACLES["text_logprob"] + ") "
+        "FROM (" + _TEXT_LOGPROB_ORACLE + ") "
         "UNION ALL "
         "SELECT 'vocab' AS variant, CAST(-1 AS BIGINT) AS k, token AS s, "
         "tf AS a, df AS b "
-        "FROM (" + ORACLES["text_vocab"] + ")"
+        "FROM (" + _TEXT_VOCAB_ORACLE + ")"
     )
 
 
@@ -8379,7 +7823,7 @@ def _real_decode_merged_oracle() -> str:
     return (
         "SELECT 'img' AS variant, doc_id, CAST(n_bytes AS BIGINT) AS k, "
         "f0_4 AS v1, f1_4 AS v2, f2_4 AS v3, f3 AS v4, f4 AS v5 "
-        "FROM (" + ORACLES["multimodal_real_decode"] + ") "
+        "FROM (" + _MULTIMODAL_REAL_DECODE_ORACLE + ") "
         "UNION ALL "
         "SELECT 'video' AS variant, doc_id, frame_idx AS k, f0_4 AS v1, "
         "0.0 AS v2, 0.0 AS v3, 0.0 AS v4, 0.0 AS v5 "
@@ -8412,11 +7856,11 @@ def _session_family_merged_oracle() -> str:
     return (
         "SELECT 'sessions' AS variant, user_id, '' AS s, n_sessions AS a, "
         "max_session_events AS b "
-        "FROM (" + ORACLES["sessionize"] + ") "
+        "FROM (" + _SESSIONIZE_ORACLE + ") "
         "UNION ALL "
         "SELECT 'dedup' AS variant, user_id, day AS s, "
         "CAST(-1 AS BIGINT) AS a, CAST(-1 AS BIGINT) AS b "
-        "FROM (" + ORACLES["stream_dedup"] + ")"
+        "FROM (" + _STREAM_DEDUP_ORACLE + ")"
     )
 
 
@@ -8442,20 +7886,19 @@ def _embedding_merged_oracle() -> str:
     return (
         "SELECT 'quant' AS variant, vec_id AS k1, CAST(-1 AS BIGINT) AS k2, "
         "q0 AS a, q1 AS b, q2 AS c, q3 AS d, sum_q AS e, scale0_6 AS x "
-        "FROM (" + ORACLES["embedding_quantize"] + ") "
+        "FROM (" + _quantize_oracle() + ") "
         "UNION ALL "
         "SELECT 'pca_' || variant AS variant, i AS k1, j AS k2, "
         "CAST(-1 AS BIGINT) AS a, CAST(-1 AS BIGINT) AS b, "
         "CAST(-1 AS BIGINT) AS c, CAST(-1 AS BIGINT) AS d, v_q AS e, "
         "0.0 AS x "
-        "FROM (" + ORACLES["embedding_pca"] + ")"
+        "FROM (" + _pca_oracle() + ")"
     )
 
 
 def q_embedding_merged(spark, sf_dir):
     """int8 embedding quantization + the PCA invariant query in ONE
-    variant-tag union — replaces embedding_quantize + embedding_pca
-    (EXECUTED r12; the embedding-transform family in one slot)."""
+    variant-tag union (the embedding-transform family in one row)."""
     qu = q_embedding_quantize(spark, sf_dir).select(
         F.lit("quant").alias("variant"), F.col("vec_id").alias("k1"),
         F.lit(-1).cast("bigint").alias("k2"),
@@ -8475,15 +7918,6 @@ def q_embedding_merged(spark, sf_dir):
     return qu.unionAll(pc)
 
 
-# --- merged-union builders (staged as "r14 merge staging" under an
-# OLD plan; all five executed EARLIER: funnel@/tpch_q4@/
-# lineitem_rollup@ at r12, stft@ at r13, text_lang_id@ at r9 — the
-# ACTUAL r14 merges were tpch_q7@/tpch_q14@, see the r14 rotation
-# block at EOF). Builders below remain the live implementations their
-# registrations point at; oracle strings come from the builder
-# functions materialized at staging time rather than ORACLES.
-
-
 def _events_merged_oracle() -> str:
     return (
         "SELECT 'funnel' AS variant, user_id AS k1, t1_us AS v1, "
@@ -8498,9 +7932,8 @@ def _events_merged_oracle() -> str:
 
 def q_events_merged(spark, sf_dir):
     """Ordered funnel times + retention cohorts in ONE variant-tag
-    union — replaces funnel + retention (EXECUTED r12; the event-sequence
-    family in one head slot; k1 = user or cohort, v1..v3 carry each
-    variant's columns -1-padded)."""
+    union (the event-sequence family in one registry row; k1 = user or
+    cohort, v1..v3 carry each variant's columns -1-padded)."""
     fu = q_funnel(spark, sf_dir).select(
         F.lit("funnel").alias("variant"),
         F.col("user_id").alias("k1"),
@@ -8533,8 +7966,7 @@ def _tpch_order_merged_oracle() -> str:
 
 def q_tpch_order_merged(spark, sf_dir):
     """TPC-H Q4 (semi-join priority counts) + Q18 (having-join top-100)
-    in ONE variant-tag union — replaces tpch_q4 + tpch_q18 (EXECUTED r12);
-    both join plans stay individually plan-locked."""
+    in ONE variant-tag union; both join plans stay individually plan-locked."""
     q4 = q_tpch_q4(spark, sf_dir).select(
         F.lit("q4").alias("variant"),
         F.col("o_orderpriority").alias("s1"),
@@ -8559,7 +7991,7 @@ def _grouping_sets_merged_oracle() -> str:
         "SELECT 'rollup' AS variant, l_returnflag AS rf, "
         "l_linestatus AS ls, CAST(-1 AS BIGINT) AS g_rf, "
         "CAST(-1 AS BIGINT) AS g_ls, n, sum_qty, 0.0 AS sum_price "
-        "FROM (" + ORACLES["lineitem_rollup"] + ") "
+        "FROM (" + _LINEITEM_ROLLUP_ORACLE + ") "
         "UNION ALL "
         "SELECT 'cube' AS variant, rf, ls, g_rf, g_ls, n, sum_qty, "
         "sum_price "
@@ -8569,8 +8001,7 @@ def _grouping_sets_merged_oracle() -> str:
 
 def q_grouping_sets_merged(spark, sf_dir):
     """ROLLUP + CUBE (with GROUPING() markers) in ONE variant-tag
-    union — replaces lineitem_rollup + cube_revenue (EXECUTED r12); the
-    grouping-sets surface stays value-verified in one slot."""
+    union; the grouping-sets surface stays value-verified in one row."""
     ro = q_lineitem_rollup(spark, sf_dir).select(
         F.lit("rollup").alias("variant"),
         F.col("l_returnflag").alias("rf"),
@@ -8598,11 +8029,11 @@ def _framed_spectral_merged_oracle() -> str:
     return (
         "SELECT 'stft' AS variant, user_id, frame AS i, bin AS j, "
         "re4 AS va, im4 AS vb "
-        "FROM (" + ORACLES["stft"] + ") "
+        "FROM (" + _STFT_ORACLE + ") "
         "UNION ALL "
         "SELECT 'coherence' AS variant, user_id, idx AS i, "
         "CAST(-1 AS BIGINT) AS j, coh6 AS va, 0.0 AS vb "
-        "FROM (" + ORACLES["coherence"] + ")"
+        "FROM (" + _COHERENCE_ORACLE + ")"
     )
 
 
@@ -8634,21 +8065,21 @@ def _text_wide_merged_oracle() -> str:
         "SELECT 'lang' AS variant, doc_id, score_en AS a, score_de AS b, "
         "score_fr AS c, score_es AS d, score_zh AS e, n_chars AS f, "
         "pred_lang AS s1, fingerprint AS s2, 0.0 AS x1, 0.0 AS x2 "
-        "FROM (" + ORACLES["text_lang_id"] + ") "
+        "FROM (" + _text_lang_fp_oracle() + ") "
         "UNION ALL "
         "SELECT 'tfidf' AS variant, doc_id, rank AS a, "
         "CAST(-1 AS BIGINT) AS b, CAST(-1 AS BIGINT) AS c, "
         "CAST(-1 AS BIGINT) AS d, CAST(-1 AS BIGINT) AS e, "
         "CAST(-1 AS BIGINT) AS f, tok AS s1, '' AS s2, tfidf AS x1, "
         "0.0 AS x2 "
-        "FROM (" + ORACLES["text_tfidf"] + ") "
+        "FROM (" + _TEXT_TFIDF_ORACLE + ") "
         "UNION ALL "
         "SELECT 'rep' AS variant, doc_id, n_tokens AS a, "
         "CAST(-1 AS BIGINT) AS b, CAST(-1 AS BIGINT) AS c, "
         "CAST(-1 AS BIGINT) AS d, CAST(-1 AS BIGINT) AS e, "
         "CAST(-1 AS BIGINT) AS f, '' AS s1, '' AS s2, dupfrac6 AS x1, "
         "topbi6 AS x2 "
-        "FROM (" + ORACLES["text_repetition"] + ")"
+        "FROM (" + _TEXT_REPETITION_ORACLE + ")"
     )
 
 
@@ -8703,48 +8134,6 @@ def q_text_wide_merged(spark, sf_dir):
     return la.unionAll(tf).unionAll(rp)
 
 
-# --- r16 outlook (the old five-merge staging here was consumed
-# piecemeal: cwt_ricker@ executed r10, lombscargle@ r12,
-# sosfilt_stream@ r13, and the correlate/savgol families merged under
-# other bases; its tpch slate registered at r12) -----------------------------
-# After the ledgered r14 (N=97, queue 3) and r15 (N=100, queue 0)
-# rotations, the registry reaches STEADY STATE at the two-round-bar
-# cap: every name driver-checked exactly every other round. An r16+
-# rotation is then pure bookkeeping — set __spark_entry__._CHECK_LAST
-# to CORRECTNESS_r{N-1}'s key order (the 50 just-checked names); the
-# other 50 are due and form the head automatically. NO merges and NO
-# math needed unless a NEW operator wants a slot, in which case a
-# retirement-first merge must fund it (the q_xcorr_merged /
-# q_smoother-family builders below remain CI-covered and ready).
-
-
-def _xcorr_merged_oracle() -> str:
-    return (
-        "SELECT 'corr' AS variant, user_id, idx, corr4 AS va, 0.0 AS vb "
-        "FROM (" + ORACLES["correlate"] + ") "
-        "UNION ALL "
-        "SELECT 'deconv' AS variant, user_id, idx, "
-        "CAST(quot_q AS DOUBLE) AS va, CAST(rem_q AS DOUBLE) AS vb "
-        "FROM (" + ORACLES["deconvolve"] + ")"
-    )
-
-
-def q_xcorr_merged(spark, sf_dir):
-    """Cross-correlation + polynomial deconvolution in ONE variant-tag
-    union — replaces correlate + deconvolve at r16 (the two remaining
-    standalone convolution-algebra slots)."""
-    co = q_correlate(spark, sf_dir).select(
-        F.lit("corr").alias("variant"), "user_id", "idx",
-        F.col("corr4").alias("va"), F.lit(0.0).alias("vb"),
-    )
-    de = q_deconvolve(spark, sf_dir).select(
-        F.lit("deconv").alias("variant"), "user_id", "idx",
-        F.col("quot_q").cast("double").alias("va"),
-        F.col("rem_q").cast("double").alias("vb"),
-    )
-    return co.unionAll(de)
-
-
 def _smooth_family_merged_oracle() -> str:
     return (
         "SELECT variant, user_id, idx, v6 AS v "
@@ -8752,7 +8141,7 @@ def _smooth_family_merged_oracle() -> str:
         "UNION ALL "
         "SELECT 'detrend' AS variant, user_id, idx, "
         "CAST(resid_q AS DOUBLE) AS v "
-        "FROM (" + ORACLES["detrend"] + ")"
+        "FROM (" + _DETREND_ORACLE + ")"
     )
 
 
@@ -8774,11 +8163,11 @@ def q_smooth_family_merged(spark, sf_dir):
 def _wavelet_spectrum_merged_oracle() -> str:
     return (
         "SELECT 'cwt' AS variant, user_id, idx, value4 AS v "
-        "FROM (" + ORACLES["cwt_ricker"] + ") "
+        "FROM (" + _cwt_oracle() + ") "
         "UNION ALL "
         "SELECT 'pgram' AS variant, user_id, idx, "
         "CAST(power_q AS DOUBLE) AS v "
-        "FROM (" + ORACLES["periodogram"] + ")"
+        "FROM (" + _PERIODOGRAM_ORACLE + ")"
     )
 
 
@@ -8801,18 +8190,18 @@ def _freqest_merged_oracle() -> str:
     return (
         "SELECT 'lomb' AS variant, user_id, idx, "
         "CAST(power_q AS DOUBLE) AS v "
-        "FROM (" + ORACLES["lombscargle"] + ") "
+        "FROM (" + _lombscargle_oracle() + ") "
         "UNION ALL "
         "SELECT 'domfreq' AS variant, user_id, peak_bin AS idx, "
         "peak_mag3 AS v "
-        "FROM (" + ORACLES["dominant_frequency"] + ")"
+        "FROM (" + _DOMINANT_FREQUENCY_ORACLE + ")"
     )
 
 
 def q_freqest_merged(spark, sf_dir):
     """Lomb–Scargle (irregular series) + dominant-frequency argmax
-    (regular series) in ONE variant-tag union — replaces lombscargle +
-    dominant_frequency (EXECUTED r12; the frequency-estimation family)."""
+    (regular series) in ONE variant-tag union (the frequency-estimation
+    family)."""
     lo = q_lombscargle(spark, sf_dir).select(
         F.lit("lomb").alias("variant"), "user_id", "idx",
         F.col("power_q").cast("double").alias("v"),
@@ -8828,12 +8217,12 @@ def _live_streams_merged_oracle() -> str:
     return (
         "SELECT 'sosfilt' AS variant, user_id, idx AS k, val4 AS a, "
         "0.0 AS b, 0.0 AS c, 0.0 AS d, 0.0 AS e "
-        "FROM (" + ORACLES["sosfilt_stream"] + ") "
+        "FROM (" + _SOSFILT_STREAM_ORACLE + ") "
         "UNION ALL "
         "SELECT 'windows' AS variant, user_id, window_start AS k, "
         "CAST(n AS DOUBLE) AS a, CAST(sum_q AS DOUBLE) AS b, "
         "CAST(avg_q AS DOUBLE) AS c, min4 AS d, max4 AS e "
-        "FROM (" + ORACLES["stream_window_stats_live"] + ")"
+        "FROM (" + _STREAM_WINDOW_STATS_LIVE_ORACLE + ")"
     )
 
 
@@ -8861,14 +8250,14 @@ def q_live_streams_merged(spark, sf_dir):
     return so.unionAll(wi)
 
 
-# --- r16 slate: TPC-H relational sweep --------------------------------------
-# Five more TPC-H query shapes (Q7, Q10, Q14, Q15, Q22) adapted to
-# this schema's columns (no partsupp / l_commitdate / l_receiptdate /
-# o_comment in the testdata, so Q2/Q9/Q11/Q12/Q16/Q20/Q21 are not
-# expressible; Q7's fixed nation pair is widened to ALL distinct pairs
-# because the tier suppliers cover only a nation subset). All money
-# arithmetic goes through the round-then-DECIMAL idiom proven by
-# tpch_q1/q5 so both engines agree byte-exactly.
+# --- TPC-H relational sweep --------------------------------------------------
+# TPC-H query shapes Q7, Q10, Q14, Q15 and Q22 adapted to this schema's
+# columns (no partsupp / l_commitdate / l_receiptdate / o_comment in the
+# testdata, so Q2/Q9/Q11/Q12/Q16/Q20/Q21 are not expressible; Q7's
+# fixed nation pair is widened to ALL distinct pairs because the tier
+# suppliers cover only a nation subset). All money arithmetic goes
+# through the round-then-DECIMAL idiom proven by tpch_q1/q5 so both
+# engines agree byte-exactly.
 
 _Q7_D1, _Q7_D2 = "1996-01-01", "1998-01-01"
 
@@ -9191,7 +8580,7 @@ def q_tpch_q22(spark, sf_dir):
     )
 
 
-# --- r17 slate: TPC-H completion sweep --------------------------------------
+# --- TPC-H completion sweep --------------------------------------------------
 # The last five TPC-H shapes this schema can express (Q8, Q9, Q13,
 # Q17, Q19), adapted where the testdata lacks TPC-H columns: Q9 prices
 # cost from p_retailprice (no ps_supplycost), Q13's order exclusion
@@ -9550,8 +8939,8 @@ def q_tpch_q19(spark, sf_dir):
     )
 
 
-# --- r18 slate: tokenizer inference, sparse retrieval, dedup eval, ----------
-# label-noise sweep, temperature mixing — five more LLM-pipeline
+# --- tokenizer inference, sparse retrieval, dedup eval -----------------------
+# Label-noise sweep and temperature mixing complete the LLM-pipeline
 # operators on the corpus/embedding tables.
 
 # 24 merges trained ONCE with train_bpe(num_merges=24) on the sf0.01
@@ -9867,9 +9256,9 @@ def q_dataset_temperature_mix(spark, sf_dir):
     )
 
 
-# --- r19 slate: one-pass NB classifier, exact AUC, MI feature selection, ----
-# target encoding, Markov transitions — the label-aware / eval layer
-# of the pipeline (features.py + text.py additions).
+# --- NB classifier, exact AUC, MI feature selection --------------------------
+# Target encoding and Markov transitions complete the label-aware /
+# eval layer of the pipeline (features.py + text.py).
 
 
 def _naive_bayes_oracle() -> str:
@@ -10072,57 +9461,23 @@ def q_event_transitions(spark, sf_dir):
     return pl.event_transitions(load_table(spark, "events", sf_dir))
 
 
-# --- merges funding the r17 + r18 + r19 slates (staged; 16 slots freed) -----
-# Twelve variant-tag unions over still-registered (or r10-r16-bound)
-# entries. Execute like r8/r9: KEEP each retired entry's oracle as a
-# _XXX_ORACLE constant before overwriting, register each merge under
-# its base name, retire the other components. Slot math: convolve
-# pair (1) + text trio (2) + decontaminate pair (1) + inverse-
-# transform trio (2) + dataset pair (1) + join-strategy pair (1) +
-# rolling pair (1) + quantile trio (2) + curation pair (1) +
-# retrieval pair (1) + tpch join-family trio (2) + tpch single-row
-# pair (1) = 16 freed >= the 15 the three slates need (spare → r20).
-
-
-def _convolve_pair_merged_oracle() -> str:
-    return (
-        "SELECT 'full4' AS variant, user_id, idx, conv4 AS v "
-        "FROM (" + ORACLES["convolve"] + ") "
-        "UNION ALL "
-        "SELECT variant, user_id, idx, v6 AS v "
-        "FROM (" + ORACLES["convolve_valid"] + ")"
-    )
-
-
-def q_convolve_pair_merged(spark, sf_dir):
-    """convolve(mode=full) + the fir/valid variant union in ONE
-    variant-tag union — replaces convolve + convolve_valid at r17."""
-    a = q_convolve(spark, sf_dir).select(
-        F.lit("full4").alias("variant"),
-        "user_id",
-        "idx",
-        F.col("conv4").alias("v"),
-    )
-    b = q_convolve_merged(spark, sf_dir).select(
-        "variant", "user_id", "idx", F.col("v6").alias("v")
-    )
-    return a.unionAll(b)
+# --- variant-family unions ---------------------------------------------------
 
 
 def _text_surface_merged_oracle() -> str:
     return (
         "SELECT variant, doc_id, n_tokens AS m1, a1 AS m2, a2 AS m3, "
         "a3 AS m4, f1, '' AS s1 "
-        "FROM (" + ORACLES["text_token_stats"] + ") "
+        "FROM (" + _text_stats_merged_oracle() + ") "
         "UNION ALL "
         "SELECT 'redact' AS variant, doc_id, n_email AS m1, n_ip AS m2, "
         "n_phone AS m3, CAST(-1 AS BIGINT) AS m4, 0.0 AS f1, "
-        "md5(redacted) AS s1 FROM (" + ORACLES["text_redact"] + ") "
+        "md5(redacted) AS s1 FROM (" + _redact_oracle() + ") "
         "UNION ALL "
         "SELECT 'url' AS variant, doc_id, n_urls AS m1, n_domains AS m2, "
         "CAST(-1 AS BIGINT) AS m3, CAST(-1 AS BIGINT) AS m4, 0.0 AS f1, "
         "coalesce(first_domain, '') AS s1 "
-        "FROM (" + ORACLES["text_url_stats"] + ")"
+        "FROM (" + _TEXT_URL_STATS_ORACLE + ")"
     )
 
 
@@ -10166,10 +9521,10 @@ def q_text_surface_merged(spark, sf_dir):
 def _decontaminate_merged_oracle() -> str:
     return (
         "SELECT 'ngram' AS variant, doc_id, n_shared_ngrams AS n, "
-        "contaminated FROM (" + ORACLES["decontaminate"] + ") "
+        "contaminated FROM (" + _DECONTAMINATE_ORACLE + ") "
         "UNION ALL "
         "SELECT 'bloom' AS variant, doc_id, n_flagged_shingles AS n, "
-        "contaminated FROM (" + ORACLES["bloom_decontaminate"] + ")"
+        "contaminated FROM (" + _bloom_oracle() + ")"
     )
 
 
@@ -10195,21 +9550,20 @@ def q_decontaminate_merged(spark, sf_dir):
 def _inverse_transform_merged_oracle() -> str:
     return (
         "SELECT variant, user_id, idx AS i1, CAST(-1 AS BIGINT) AS i2, "
-        "va, vb FROM (" + ORACLES["ifft"] + ") "
+        "va, vb FROM (" + _fft_family_merged_oracle() + ") "
         "UNION ALL "
         "SELECT variant, user_id, i1, i2, v AS va, 0.0 AS vb "
-        "FROM (" + ORACLES["fftshift"] + ") "
+        "FROM (" + _fftshift_merged_oracle() + ") "
         "UNION ALL "
         "SELECT 'istft' AS variant, user_id, t AS i1, "
         "CAST(-1 AS BIGINT) AS i2, val4 AS va, 0.0 AS vb "
-        "FROM (" + _ISTFT_NATIVE_PLAIN_ORACLE + ")"
+        "FROM (" + _ISTFT_NATIVE_ORACLE + ")"
     )
 
 
 def q_inverse_transform_merged(spark, sf_dir):
     """The inverse/spectral-rearrangement family (ifft 4-variant +
-    fftshift 3-variant + native istft) in ONE variant-tag union —
-    replaces ifft + fftshift + istft_native (EXECUTED r12)."""
+    fftshift 3-variant + native istft) in ONE variant-tag union."""
     a = q_fft_family_merged(spark, sf_dir).select(
         "variant",
         "user_id",
@@ -10240,24 +9594,21 @@ def q_inverse_transform_merged(spark, sf_dir):
 def _dataset_shape_merged_oracle() -> str:
     return (
         "SELECT 'mix' AS variant, source AS k1, n AS n1, min_id AS n2, "
-        "max_id AS n3 FROM (" + ORACLES["dataset_mix"] + ") "
+        "max_id AS n3 FROM (" + _DATASET_MIX_ORACLE + ") "
         "UNION ALL "
         "SELECT 'cap' AS variant, CAST(grp AS VARCHAR) AS k1, "
         "doc_id AS n1, CAST(-1 AS BIGINT) AS n2, CAST(-1 AS BIGINT) AS n3 "
-        "FROM (" + ORACLES["cap_per_group"] + ") "
+        "FROM (" + _cap_oracle() + ") "
         "UNION ALL "
         "SELECT 'qfilter' AS variant, event_type AS k1, event_id AS n1, "
         "thr_q AS n2, CAST(-1 AS BIGINT) AS n3 "
-        "FROM (" + ORACLES["filter_by_quantile"] + ")"
+        "FROM (" + _filter_quantile_oracle() + ")"
     )
 
 
 def q_dataset_shape_merged(spark, sf_dir):
     """Fixed-rate source mixing + per-group cap + per-group quantile
-    gate in ONE variant-tag union — the dataset-shaping family.
-    Extended at r10 to absorb r11-due filter_by_quantile alongside the
-    originally staged cap_per_group (base dataset_mix is r11-due, so
-    the quantile absorb is a clean +1)."""
+    gate in ONE variant-tag union — the dataset-shaping family."""
     a = q_dataset_mix(spark, sf_dir).select(
         F.lit("mix").alias("variant"),
         F.col("source").alias("k1"),
@@ -10285,10 +9636,10 @@ def q_dataset_shape_merged(spark, sf_dir):
 def _join_strategy_merged_oracle() -> str:
     return (
         "SELECT 'skew' AS variant, event_id AS i1, k AS i2, k_n AS i3, "
-        "k_avg_q AS i4 FROM (" + ORACLES["skew_join"] + ") "
+        "k_avg_q AS i4 FROM (" + _skew_join_oracle() + ") "
         "UNION ALL "
         "SELECT 'bloom' AS variant, CAST(-1 AS BIGINT) AS i1, k AS i2, "
-        "n_items AS i3, qty_q AS i4 FROM (" + ORACLES["bloom_semijoin"] + ")"
+        "n_items AS i3, qty_q AS i4 FROM (" + _bloom_semijoin_oracle() + ")"
     )
 
 
@@ -10333,10 +9684,8 @@ def _rolling_family_merged_oracle() -> str:
 
 def q_rolling_family_merged(spark, sf_dir):
     """Rolling moment stats + rolling median + per-group
-    rank-uniformization in ONE variant-tag union — replaces
-    rolling_stats + rolling_median + quantile_normalize at r12 (the
-    ordered-window-per-user family in one head slot, per the r12
-    recipe's head math; all three plans stay literal union
+    rank-uniformization in ONE variant-tag union (the
+    ordered-window-per-user family; all three plans stay literal union
     branches)."""
     a = q_rolling_stats(spark, sf_dir).select(
         F.lit("stats").alias("variant"),
@@ -10531,17 +9880,15 @@ def q_tpch_onerow_merged(spark, sf_dir):
 
 
 def _curation_family_merged_oracle() -> str:
-    # ORACLES["clean_text"] is the r11 hygiene union (clean+url,
-    # variant/k/n/s) — absorbing it whole keeps the
-    # url_canonical_dedup variant under the driver after the
-    # clean_text name retires.
+    # absorbs the whole clean+url hygiene union (variant/k/n/s), so the
+    # url_canonical_dedup variant keeps an oracle row
     return (
         "SELECT 'cur' AS variant, doc_id, quality6 AS f1, "
         "CAST(-1 AS BIGINT) AS n1, status AS s1 "
-        "FROM (" + ORACLES["curation_report"] + ") "
+        "FROM (" + _curation_oracle() + ") "
         "UNION ALL "
         "SELECT variant, k AS doc_id, 0.0 AS f1, n AS n1, "
-        "s AS s1 FROM (" + ORACLES["clean_text"] + ")"
+        "s AS s1 FROM (" + _text_hygiene_merged_oracle() + ")"
     )
 
 
@@ -10567,63 +9914,7 @@ def q_curation_family_merged(spark, sf_dir):
     return a.unionAll(b)
 
 
-# name -> (query fn, oracle sql). CI-verified every pytest run
-# (tests/test_queued_contract.py); registered per the recipe above.
-# ---------------------------------------------------------------------------
-# r7 rotation EXECUTED: five variant merges registered under their base
-# names, the SEVEN r7-bound queue entries registered, embedding_pca
-# reshaped to a DuckDB-verifiable invariant query. N = 99 registered.
-# ---------------------------------------------------------------------------
-_q("rfft", _rfft_merged_oracle())(q_rfft_merged)
-_q("decimate_iir", _decimate_iir_merged_oracle())(q_decimate_iir_merged)
-_q("sosfiltfilt", _sosfiltfilt_merged_oracle())(q_sosfiltfilt_merged)
-_q("text_lang_id", _text_lang_fp_oracle())(q_text_lang_fp)
-_q("convolve_valid", _convolve_merged_oracle())(q_convolve_merged)
-_q("welch_blackman", _welch_oracle("blackman"))(q_welch_blackman)
-_q("dedup_ngram_spans", _dup_ngram_oracle())(q_dedup_ngram_spans)
-_q("deconvolve", _deconvolve_oracle())(q_deconvolve)
-_q("sketch_hll", _hll_oracle())(q_sketch_hll)
-_q("sketch_countmin", _countmin_oracle())(q_sketch_countmin)
-_q("bloom_decontaminate", _bloom_oracle())(q_bloom_decontaminate)
-_q("gapfill", _gapfill_oracle())(q_gapfill)
-
-# ---------------------------------------------------------------------------
-# r8 rotation EXECUTED: SEVEN variant merges under their base names —
-# the three ledgered ones (multimodal decode 6-variant union, savgol
-# pair, tumbling+session windows) PLUS the fft-family 4-way, the
-# fftshift trio, medfilt+wiener, and token_stats+quality pulled forward
-# from the r11 ledger (VERDICT r7 #2: drain the queue faster than it
-# grows). Merged away: multimodal_bmp/jpeg_decode, savgol_deriv,
-# session_window_stats, hfft, irfft, ihfft, ifftshift, fftshift_2d,
-# wiener, text_quality (11 registrations). Registered: the five
-# r8-bound entries (skew_join, sketch_histogram, bpe_vocab rows-only,
-# text_hash_vectors, bloom_semijoin) AND the full r9 slate pulled
-# forward (lombscargle, acf, ewma, seasonal_decompose, cap_per_group)
-# plus robust_zscore — 11 new. N = 99 - 11 + 11 = 99; head = 39
-# surviving r7-tail + 11 new = 50 exactly; tail = the 49 surviving
-# r7-head names (CORRECTNESS_r07.json order minus the merged-away
-# session_window_stats).
-# ---------------------------------------------------------------------------
-_q("multimodal_png_decode", _multimodal_merged_oracle())(q_multimodal_decode_merged)
-_q("savgol", _savgol_merged_oracle())(q_savgol_merged)
-_q("stream_window_stats", _windows_merged_oracle())(q_windows_merged)
-_q("ifft", _fft_family_merged_oracle())(q_fft_family_merged)
-_q("fftshift", _fftshift_merged_oracle())(q_fftshift_merged)
-_q("medfilt", _medfilt_merged_oracle())(q_medfilt_merged)
-_q("text_token_stats", _text_stats_merged_oracle())(q_text_stats_merged)
-_q("skew_join", _skew_join_oracle())(q_skew_join)
-_q("sketch_histogram", _histogram_oracle())(q_sketch_histogram)
-_q("bpe_vocab", None)(q_bpe_vocab)
-_q("text_hash_vectors", _hash_vectors_oracle())(q_text_hash_vectors)
-_q("bloom_semijoin", _bloom_semijoin_oracle())(q_bloom_semijoin)
-_q("lombscargle", _lombscargle_oracle())(q_lombscargle)
-_q("acf", _acf_oracle())(q_acf)
-_q("ewma", _ewma_oracle())(q_ewma)
-_q("seasonal_decompose", _seasonal_oracle())(q_seasonal_decompose)
-_q("cap_per_group", _cap_oracle())(q_cap_per_group)
-_q("robust_zscore", _robust_z_oracle())(q_robust_zscore)
-
-# --- data-quality layer (pipeline/quality.py) — r9 s2 additions ------------
+# --- data-quality layer (pipeline/quality.py) --------------------------------
 
 _PROFILE_COLS = (
     "l_orderkey",
@@ -11050,170 +10341,33 @@ def q_frequent_values(spark, sf_dir):
     )
 
 
-# ---------------------------------------------------------------------------
-# r9 rotation EXECUTED: THIRTEEN variant merges under their base names
-# (every constituent r9-due, so each absorbed variant frees a head
-# slot — see the rotation plan comment above q_welch_blackman). The
-# merged-oracle builders read the constituents' ORACLES[...] rows, so
-# the original registrations stay ABOVE and the absorbed names retire
-# via pop() below; the plain q_* functions remain for bench
-# plan-continuity (bench.py `plain` overrides) and plan-lock tests.
-# ---------------------------------------------------------------------------
-# snapshot the plain IVF oracle BEFORE the merged registration
-# replaces it — _ann_recall_oracle (queued r12) composes the plain
-# single-variant SQL, not the cells union
-_ANN_IVF_PLAIN_ORACLE = ORACLES["ann_cosine_topk_ivf"]
-_q("welch", _welch_merged_oracle())(q_welch_merged)
-_q("csd", _csd_merged_oracle())(q_csd_merged)
-_q("tpch_q1", _tpch_q1q6_merged_oracle())(q_tpch_q1q6_merged)
-_q("peak_widths", _peaks_merged_oracle())(q_peaks_merged)
-_q("dedup_minhash", _dedup_pairs_merged_oracle())(q_dedup_pairs_merged)
-_q("ann_cosine_topk_ivf", _ann_cells_merged_oracle())(q_ann_cells_merged)
-_q("multimodal_features", _multimodal_tf_merged_oracle())(q_multimodal_tf_merged)
-_q("tpch_q3", _tpch_q3q5_merged_oracle())(q_tpch_q3q5_merged)
-_q("asof_join", _temporal_join_merged_oracle())(q_temporal_join_merged)
-_q("fft", _fft_fwd_merged_oracle())(q_fft_fwd_merged)
-_q("decontaminate", _decontaminate_merged_oracle())(q_decontaminate_merged)
-_q("sketch_hll", _sketch_state_merged_oracle())(q_sketch_state_merged)
-_q("text_lang_id", _text_wide_merged_oracle())(q_text_wide_merged)
-# absorbed registrations retire; bpe_vocab (rows-only) retires too,
-# superseded by the hash-verified bpe_encode registered below
-for _gone in (
-    "welch_blackman",
-    "spectrogram",
-    "tpch_q6",
-    "find_peaks",
-    "dedup_simhash",
-    "dedup_embedding",
-    "ann_cosine_topk_kmeans",
-    "multimodal_resize",
-    "multimodal_frame_sample",
-    "tpch_q5",
-    "range_join",
-    "rfft",
-    "bloom_decontaminate",
-    "sketch_countmin",
-    "text_tfidf",
-    "text_repetition",
-    "bpe_vocab",
-):
-    del QUERIES[_gone]
-    ORACLES.pop(_gone, None)
-del _gone
-# the 17 r9 registrations (r9 slate + full r10 slate + 5 of r11 +
-# bpe_encode pulled from r18)
-_q("dedup_minhash_cross", _minhash_cross_oracle())(q_dedup_minhash_cross)
-_q("cube_revenue", _cube_oracle())(q_cube_revenue)
-_q("filter_by_quantile", _filter_quantile_oracle())(q_filter_by_quantile)
-_q("interp_to", _interp_to_oracle())(q_interp_to)
-_q("ohlc_bars", _ohlc_oracle())(q_ohlc_bars)
-_q("latest_by_key", _latest_oracle())(q_latest_by_key)
-_q("multimodal_video_frames", _video_frames_oracle())(q_multimodal_video_frames)
-_q("sample_negatives", _negatives_oracle())(q_sample_negatives)
-_q("rolling_stats", _rolling_oracle())(q_rolling_stats)
-_q("pagerank", _pagerank_oracle())(q_pagerank)
-_q("zorder_curve", _zorder_oracle())(q_zorder_curve)
-_q("sketch_hll_merge", _hll_oracle())(q_sketch_hll_merge)
-_q("group_quantiles", _group_quantiles_oracle())(q_group_quantiles)
-_q("url_canonical_dedup", _url_dedup_oracle())(q_url_canonical_dedup)
-_q("winsorize", _winsorize_oracle())(q_winsorize)
-_q("clean_text", _clean_text_oracle())(q_clean_text)
-_q("bpe_encode", _bpe_encode_oracle())(q_bpe_encode)
-
-# ---------------------------------------------------------------------------
-# r10 rotation EXECUTED: ELEVEN variant merges under their base names
-# (every absorbed constituent r10-due = in the r8-head tail, so 13 due
-# names free 13 head slots; text_redact rides free from the r9 head
-# inside the text_token_stats surface union). Same mechanics as r9:
-# the merged-oracle builders read the constituents' ORACLES[...] rows,
-# so the original registrations stay ABOVE and the absorbed names
-# retire via the pops below; plain q_* functions remain for bench
-# plan-continuity and plan locks.
-# ---------------------------------------------------------------------------
-# snapshots BEFORE the pops/replacements (the _ANN_IVF_PLAIN_ORACLE
-# pattern): istft_native is read by _inverse_transform_merged_oracle
-# (ifft@merged, stays queued); the plain exact ann_cosine_topk SQL is
-# read by _ann_recall_oracle (queued r12) — after the replacement
-# below, ORACLES["ann_cosine_topk"] is the exact+lsh union.
-_ISTFT_NATIVE_PLAIN_ORACLE = ORACLES["istft_native"]
-_ANN_EXACT_PLAIN_ORACLE = ORACLES["ann_cosine_topk"]
-_q("istft_roundtrip", _istft_merged_oracle())(q_istft_merged)
-_q("lfilter", _lfilter_merged_oracle())(q_lfilter_merged)
-_q("dataset_split", _dataset_merged_oracle())(q_dataset_merged)
-_q("ann_cosine_topk", _ann_merged_oracle())(q_ann_merged)
-_q("fftconvolve", _convolve_family_merged_oracle())(q_convolve_family_merged)
-_q("cwt_ricker", _wavelet_spectrum_merged_oracle())(q_wavelet_spectrum_merged)
-_q("savgol", _smooth_family_merged_oracle())(q_smooth_family_merged)
-_q("acf", _tsstats_merged_oracle())(q_tsstats_merged)
-_q("text_logprob", _lm_vocab_merged_oracle())(q_lm_vocab_merged)
-_q("skew_join", _join_strategy_merged_oracle())(q_join_strategy_merged)
-_q("text_token_stats", _text_surface_merged_oracle())(q_text_surface_merged)
-for _gone in (
-    "istft_native",
-    "filtfilt",
-    "dataset_stratified",
-    "ann_cosine_topk_lsh",
-    "convolve",
-    "correlate",
-    "periodogram",
-    "detrend",
-    "ewma",
-    "seasonal_decompose",
-    "text_vocab",
-    "bloom_semijoin",
-    "text_url_stats",
-    "text_redact",
-):
-    del QUERIES[_gone]
-    ORACLES.pop(_gone, None)
-del _gone
-# the 14 r10 registrations (the ledgered r10 slate,
-# tools/queue_status.py)
-_q("interval_join", _interval_join_oracle())(q_interval_join)
-_q("funnel", _funnel_oracle())(q_funnel)
-_q("retention", _retention_oracle())(q_retention)
-_q("audio_spectral", _audio_spectral_oracle())(q_audio_spectral)
-_q("char_entropy", _char_entropy_oracle())(q_char_entropy)
-_q("ngram_counts", _ngram_counts_oracle())(q_ngram_counts)
-_q("quantile_normalize", _qnorm_oracle())(q_quantile_normalize)
-_q("rolling_median", _rolling_median_oracle())(q_rolling_median)
-_q("kfold_weights", _kfold_weights_oracle())(q_kfold_weights)
-_q("tpch_q4", _tpch_q4_oracle())(q_tpch_q4)
-_q("tpch_q18", _tpch_q18_oracle())(q_tpch_q18)
-_q("grouped_ols", _grouped_ols_oracle())(q_grouped_ols)
-_q("triangle_count", _triangle_oracle())(q_triangle_count)
-_q("sequence_pack", _sequence_pack_oracle())(q_sequence_pack)
+# --- variant-family unions ---------------------------------------------------
 
 
 def _convolve_xfamily_merged_oracle() -> str:
-    # ORACLES["fftconvolve"] is the r10 family union (full/same/xcorr)
     return (
         "SELECT variant, user_id, idx, v4 AS va, 0.0 AS vb "
-        "FROM (" + ORACLES["fftconvolve"] + ") "
+        "FROM (" + _convolve_family_merged_oracle() + ") "
         "UNION ALL "
         "SELECT 'valid_' || variant AS variant, user_id, idx, "
         "v6 AS va, 0.0 AS vb "
-        "FROM (" + ORACLES["convolve_valid"] + ") "
+        "FROM (" + _convolve_merged_oracle() + ") "
         "UNION ALL "
         "SELECT 'deconv' AS variant, user_id, idx, quot_q AS va, "
-        "rem_q AS vb FROM (" + ORACLES["deconvolve"] + ")"
+        "rem_q AS vb FROM (" + _deconvolve_oracle() + ")"
     )
 
 
 def q_convolve_xfamily_merged(spark, sf_dir):
-    """The r11 extension of the r10 convolve family: full/same/xcorr
-    (the r10 union) + valid-mode convolution + polynomial
-    deconvolution in ONE variant-tag union — absorbs r11-due
-    convolve_valid and deconvolve into fftconvolve's slot (drags the
-    r10-checked base into the r11 head: net +1)."""
+    """The convolve family: full/same/xcorr (q_convolve_family_merged)
+    + valid-mode convolution + polynomial deconvolution in ONE
+    variant-tag union."""
     fam = q_convolve_family_merged(spark, sf_dir).select(
         "variant", "user_id", "idx",
         F.col("v4").alias("va"), F.lit(0.0).alias("vb"),
     )
-    # convolve_valid's registration is itself the r9 valid-mode union
-    # (q_convolve_merged: variant, user_id, idx, v6) — referenced by
-    # function, not via QUERIES[...], so this union keeps working
-    # after the r11 rotation pops the absorbed name
+    # convolve_valid's plan is itself the valid-mode union
+    # (q_convolve_merged: variant, user_id, idx, v6)
     va = q_convolve_merged(spark, sf_dir).select(
         F.concat(F.lit("valid_"), F.col("variant")).alias("variant"),
         "user_id", "idx",
@@ -11226,28 +10380,20 @@ def q_convolve_xfamily_merged(spark, sf_dir):
     return fam.unionAll(va).unionAll(de)
 
 
-# --- r11 same-cohort merges (staged r10): every base AND absorbed
-# name sits in the r9-head cohort (due r11 together), so each absorb
-# is a clean +1 with no drag — these fund the full 8-name r11 slate
-# alongside the cross-cohort levers already staged above. -------------
-
-
 def _dedup_pair_family_merged_oracle() -> str:
-    # ORACLES["dedup_minhash"] is the r9 3-way pair-emitter union
     return (
         "SELECT variant, a_id, b_id, score "
-        "FROM (" + ORACLES["dedup_minhash"] + ") "
+        "FROM (" + _dedup_pairs_merged_oracle() + ") "
         "UNION ALL "
         "SELECT 'cross' AS variant, left_id AS a_id, right_id AS b_id, "
-        "jaccard AS score FROM (" + ORACLES["dedup_minhash_cross"] + ")"
+        "jaccard AS score FROM (" + _minhash_cross_oracle() + ")"
     )
 
 
 def q_dedup_pair_family_merged(spark, sf_dir):
     """The three self-corpus pair emitters (minhash/simhash/embedding,
-    the r9 union) + the cross-corpus incremental LSH join in ONE
-    variant-tag union — absorbs dedup_minhash_cross into
-    dedup_minhash's slot at r11 (both r11-due: clean +1)."""
+    q_dedup_pairs_merged) + the cross-corpus incremental LSH join in
+    ONE variant-tag union."""
     base = q_dedup_pairs_merged(spark, sf_dir)
     cross = q_dedup_minhash_cross(spark, sf_dir).select(
         F.lit("cross").alias("variant"),
@@ -11259,22 +10405,19 @@ def q_dedup_pair_family_merged(spark, sf_dir):
 
 
 def _sketch_family_merged_oracle() -> str:
-    # ORACLES["sketch_hll"] is the r9 hll+countmin state union
     return (
         "SELECT variant, k, a, b, c, d, e "
-        "FROM (" + ORACLES["sketch_hll"] + ") "
+        "FROM (" + _sketch_state_merged_oracle() + ") "
         "UNION ALL "
         "SELECT 'regmerge' AS variant, rf AS k, CAST(m AS BIGINT) AS a, "
         "present AS b, zeros AS c, register_sum AS d, rank_checksum AS e "
-        "FROM (" + ORACLES["sketch_hll_merge"] + ")"
+        "FROM (" + _hll_oracle() + ")"
     )
 
 
 def q_sketch_family_merged(spark, sf_dir):
-    """HLL + count-min state checksums (the r9 union) + the
-    shard-merge re-aggregation invariance in ONE variant-tag union —
-    absorbs sketch_hll_merge into sketch_hll's slot at r11 (both
-    r11-due: clean +1)."""
+    """HLL + count-min state checksums (q_sketch_state_merged) + the
+    shard-merge re-aggregation invariance in ONE variant-tag union."""
     base = q_sketch_state_merged(spark, sf_dir)
     mg = q_sketch_hll_merge(spark, sf_dir).select(
         F.lit("regmerge").alias("variant"),
@@ -11289,23 +10432,21 @@ def q_sketch_family_merged(spark, sf_dir):
 
 
 def _tpch_scan_join_merged_oracle() -> str:
-    # ORACLES["tpch_q1"] = the q1+q6 union; ORACLES["tpch_q3"] = q3+q5
     return (
         "SELECT variant, rf AS s1, ls AS s2, m1 AS v1, m2 AS v2, "
         "m3 AS v3, m4 AS v4, cnt "
-        "FROM (" + ORACLES["tpch_q1"] + ") "
+        "FROM (" + _tpch_q1q6_merged_oracle() + ") "
         "UNION ALL "
         "SELECT variant, CAST(k AS VARCHAR) AS s1, CAST(s AS VARCHAR) "
         "AS s2, revenue AS v1, 0.0 AS v2, 0.0 AS v3, 0.0 AS v4, "
-        "n AS cnt FROM (" + ORACLES["tpch_q3"] + ")"
+        "n AS cnt FROM (" + _tpch_q3q5_merged_oracle() + ")"
     )
 
 
 def q_tpch_scan_join_merged(spark, sf_dir):
-    """TPC-H Q1+Q6 (scan-bound rollups, the r9 union) + Q3+Q5
-    (join-bound shapes, the r9 union) in ONE variant-tag union —
-    absorbs tpch_q3 into tpch_q1's slot at r11 (both r11-due: clean
-    +1); all four locked plans remain literal union branches."""
+    """TPC-H Q1+Q6 (scan-bound rollups) + Q3+Q5 (join-bound shapes)
+    in ONE variant-tag union; all four locked plans remain literal
+    union branches."""
     a = q_tpch_q1q6_merged(spark, sf_dir).select(
         "variant",
         F.col("rf").alias("s1"),
@@ -11330,24 +10471,21 @@ def q_tpch_scan_join_merged(spark, sf_dir):
 
 
 def _psd_family_merged_oracle() -> str:
-    # ORACLES["welch"] = the r9 hann+blackman union;
-    # ORACLES["csd"] = the r9 csd+spectrogram union
     return (
         "SELECT 'w_' || variant AS variant, user_id, idx AS i1, "
         "CAST(-1 AS BIGINT) AS i2, power4 AS va, 0.0 AS vb "
-        "FROM (" + ORACLES["welch"] + ") "
+        "FROM (" + _welch_merged_oracle() + ") "
         "UNION ALL "
         "SELECT 'c_' || variant AS variant, user_id, i1, i2, va, vb "
-        "FROM (" + ORACLES["csd"] + ")"
+        "FROM (" + _csd_merged_oracle() + ")"
     )
 
 
 def q_psd_family_merged(spark, sf_dir):
     """The Welch power-spectral-density family (hann + blackman
-    windows, the r9 union) + the cross-spectral family (csd +
-    spectrogram, the r9 union) in ONE variant-tag union — absorbs csd
-    into welch's slot at r11 (both r11-due: clean +1); all four
-    framed-spectral plans stay literal union branches."""
+    windows) + the cross-spectral family (csd + spectrogram) in ONE
+    variant-tag union; all four framed-spectral plans stay literal
+    union branches."""
     w = q_welch_merged(spark, sf_dir).select(
         F.concat(F.lit("w_"), F.col("variant")).alias("variant"),
         "user_id",
@@ -11366,17 +10504,16 @@ def q_psd_family_merged(spark, sf_dir):
 def _text_hygiene_merged_oracle() -> str:
     return (
         "SELECT 'clean' AS variant, doc_id AS k, n_removed AS n, "
-        "clean_md5 AS s FROM (" + ORACLES["clean_text"] + ") "
+        "clean_md5 AS s FROM (" + _clean_text_oracle() + ") "
         "UNION ALL "
         "SELECT 'url' AS variant, keep_id AS k, n_docs AS n, cu AS s "
-        "FROM (" + ORACLES["url_canonical_dedup"] + ")"
+        "FROM (" + _url_dedup_oracle() + ")"
     )
 
 
 def q_text_hygiene_merged(spark, sf_dir):
     """Text normalization (md5-pinned) + URL canonicalization dedup in
-    ONE variant-tag union — absorbs url_canonical_dedup into
-    clean_text's slot at r11 (both r11-due: clean +1)."""
+    ONE variant-tag union."""
     a = q_clean_text(spark, sf_dir).select(
         F.lit("clean").alias("variant"),
         F.col("doc_id").alias("k"),
@@ -11390,77 +10527,6 @@ def q_text_hygiene_merged(spark, sf_dir):
         F.col("cu").alias("s"),
     )
     return a.unionAll(b)
-
-
-# ---------------------------------------------------------------------------
-# r11 rotation EXECUTED per the ledgered recipe (the r11 RECIPE block
-# above _QUEUED's predecessor comment): TEN merges — two cross-cohort
-# (sosfilt@merged drags sosfilt, fftconvolve@merged drags fftconvolve:
-# each absorbs 2 due names, net +1), two base-due
-# (multimodal_real_decode@merged absorbs multimodal_video_frames,
-# gapfill@merged absorbs interp_to), six same-cohort clean +1
-# (dedup_minhash+cross, sketch_hll+merge, tpch_q1+q3, clean_text+url,
-# welch+csd, dataset_mix+filter_by_quantile with cap_per_group
-# retiring free). 12 due names absorbed + cap_per_group retired.
-# Head math DEVIATES from the recipe's K=11 by design: sequence_pack's
-# oracle CHANGED this round (the HUGEINT->BIGINT cast fix for the r10
-# driver hash-fail, VERDICT r10 #1), so it takes one head slot —
-# 49 due − 12 absorbed + 2 dragged + 1 changed + 10 new = 50 exactly.
-# The 10 registrations: the FULL 8-name ledgered r11 slate + 2 r12
-# pull-forwards (active_user_setops, weighted_sample).
-# N = 99 − 12 − 1 + 10 = 96. Same mechanics as r9/r10: merged-oracle
-# builders read the constituents' ORACLES[...] rows, so every _q()
-# call lands BEFORE the pops; plain q_* functions remain for bench
-# plan-continuity and plan locks. No new plain-oracle snapshots
-# needed: every builder remaining in _QUEUED after this block either
-# reads names unchanged at r11 or calls its constituents' oracle
-# builders directly (audited at r11 open — grep `ORACLES\[`).
-# ---------------------------------------------------------------------------
-_q("sosfilt", _sosfilt_family_merged_oracle())(q_sosfilt_family_merged)
-_q("fftconvolve", _convolve_xfamily_merged_oracle())(q_convolve_xfamily_merged)
-_q("multimodal_real_decode", _real_decode_merged_oracle())(q_real_decode_merged)
-_q("gapfill", _regularize_merged_oracle())(q_regularize_merged)
-_q("dedup_minhash", _dedup_pair_family_merged_oracle())(q_dedup_pair_family_merged)
-_q("sketch_hll", _sketch_family_merged_oracle())(q_sketch_family_merged)
-_q("tpch_q1", _tpch_scan_join_merged_oracle())(q_tpch_scan_join_merged)
-_q("clean_text", _text_hygiene_merged_oracle())(q_text_hygiene_merged)
-_q("welch", _psd_family_merged_oracle())(q_psd_family_merged)
-_q("dataset_mix", _dataset_shape_merged_oracle())(q_dataset_shape_merged)
-for _gone in (
-    "sosfilt_chunked",
-    "sosfiltfilt",
-    "convolve_valid",
-    "deconvolve",
-    "multimodal_video_frames",
-    "interp_to",
-    "dedup_minhash_cross",
-    "sketch_hll_merge",
-    "tpch_q3",
-    "url_canonical_dedup",
-    "csd",
-    "filter_by_quantile",
-    "cap_per_group",
-):
-    del QUERIES[_gone]
-    ORACLES.pop(_gone, None)
-del _gone
-# the 10 r11 registrations (the ledgered 8-name slate +
-# active_user_setops + weighted_sample pulled from r12)
-_q("text_postings", _text_postings_oracle())(q_text_postings)
-_q("edit_distance_join", _edit_join_oracle())(q_edit_distance_join)
-_q("bm25_scores", _bm25_oracle())(q_bm25_scores)
-_q("event_pivot", _event_pivot_oracle())(q_event_pivot)
-_q("orders_unshipped", _orders_unshipped_oracle())(q_orders_unshipped)
-_q("json_props_stats", _json_props_oracle())(q_json_props_stats)
-_q("cdc_apply", _cdc_apply_oracle())(q_cdc_apply)
-_q("window_analytics", _window_analytics_oracle())(q_window_analytics)
-_q("active_user_setops", _setops_oracle())(q_active_user_setops)
-_q("weighted_sample", _weighted_sample_oracle(guarded=True))(q_weighted_sample)
-# ^ r15 PLAN-FIX (ADVICE r13 #2, staged r14): the registration now
-# carries the both-ends u-boundary guard — q_weighted_sample passes
-# u_guard="both" and the oracle is the guarded mirror; the pair was
-# byte-parity-pinned a round ahead by tests/test_pipeline.py::
-# test_weighted_sample_guarded_matches_staged_oracle.
 
 
 # --- DSIR importance weights (pipeline/text.py dsir_weights) ----------------
@@ -11508,214 +10574,131 @@ def q_dsir_weights(spark, sf_dir):
     )
 
 
-_QUEUED: dict = {
-    # EMPTY since the r15 rotation: the final queue slate
-    # (dsir_weights, target_encoding, event_transitions) registered
-    # at r15 → N = 100 AT the two-round-bar cap, queue → 0. From here
-    # a new name enters this dict ONLY alongside a retirement-first
-    # merge in the same rotation block (policy: the r16+ RECIPE block
-    # above the r13 predecessor comment; CI pins N <= 100 in
-    # tests/test_contract_integration.py).
+# ---------------------------------------------------------------------------
+# the registry: name -> (query, oracle SQL), in driver order
+# ---------------------------------------------------------------------------
+
+REGISTRY = {
+    "fft": (q_fft_fwd_merged, _fft_fwd_merged_oracle()),
+    "fftconvolve": (q_convolve_xfamily_merged, _convolve_xfamily_merged_oracle()),
+    "decimate_fir": (q_decimate_merged, _decimate_merged_oracle()),
+    "resample": (q_resample_merged, _resample_merged_oracle()),
+    "stft": (q_framed_spectral_merged, _framed_spectral_merged_oracle()),
+    "istft_roundtrip": (q_istft_merged, _istft_merged_oracle()),
+    "welch": (q_psd_family_merged, _psd_family_merged_oracle()),
+    "cwt_ricker": (q_wavelet_spectrum_merged, _wavelet_spectrum_merged_oracle()),
+    "hilbert": (q_hilbert_merged, _hilbert_merged_oracle()),
+    "sosfilt": (q_sosfilt_family_merged, _sosfilt_family_merged_oracle()),
+    "lfilter": (q_lfilter_merged, _lfilter_merged_oracle()),
+    "peak_widths": (q_peaks_merged, _peaks_merged_oracle()),
+    "dedup_exact": (q_dedup_family_merged, _dedup_family_merged_oracle()),
+    "dedup_minhash": (q_dedup_pair_family_merged, _dedup_pair_family_merged_oracle()),
+    "ann_cosine_topk": (q_ann_merged, _ann_merged_oracle()),
+    "ann_cosine_topk_ivf": (q_ann_cells_merged, _ann_cells_merged_oracle()),
+    "curation_report": (q_curation_family_merged, _curation_family_merged_oracle()),
+    "embedding_quantize": (q_embedding_merged, _embedding_merged_oracle()),
+    "dataset_split": (q_dataset_merged, _dataset_merged_oracle()),
+    "dataset_mix": (q_dataset_shape_merged, _dataset_shape_merged_oracle()),
+    "decontaminate": (q_decontaminate_merged, _decontaminate_merged_oracle()),
+    "multimodal_features": (q_multimodal_tf_merged, _multimodal_tf_merged_oracle()),
+    "multimodal_real_decode": (q_real_decode_merged, _real_decode_merged_oracle()),
+    "multimodal_audio_decode": (q_multimodal_bin_merged, _multimodal_bin_merged_oracle()),
+    "tpch_q1": (q_tpch_scan_join_merged, _tpch_scan_join_merged_oracle()),
+    "sessionize": (q_session_family_merged, _session_family_merged_oracle()),
+    "fftconvolve_2d": (q_fftconv_nd_merged, _fftconv_nd_merged_oracle()),
+    "lineitem_rollup": (q_grouping_sets_merged, _grouping_sets_merged_oracle()),
+    "sosfilt_stream": (q_live_streams_merged, _live_streams_merged_oracle()),
+    "asof_join": (q_temporal_join_merged, _temporal_join_merged_oracle()),
+    "dedup_clusters": (q_dedup_clusters, _dedup_clusters_oracle()),
+    "text_logprob": (q_lm_vocab_merged, _lm_vocab_merged_oracle()),
+    "text_lang_id": (q_text_wide_merged, _text_wide_merged_oracle()),
+    "sketch_hll": (q_sketch_family_merged, _sketch_family_merged_oracle()),
+    "gapfill": (q_regularize_merged, _regularize_merged_oracle()),
+    "multimodal_png_decode": (q_multimodal_decode_merged, _multimodal_merged_oracle()),
+    "savgol": (q_smooth_family_merged, _smooth_family_merged_oracle()),
+    "stream_window_stats": (q_windows_merged, _windows_merged_oracle()),
+    "ifft": (q_inverse_transform_merged, _inverse_transform_merged_oracle()),
+    "medfilt": (q_medfilt_merged, _medfilt_merged_oracle()),
+    "text_token_stats": (q_text_surface_merged, _text_surface_merged_oracle()),
+    "skew_join": (q_join_strategy_merged, _join_strategy_merged_oracle()),
+    "sketch_histogram": (q_sketch_histogram, _histogram_oracle()),
+    "text_hash_vectors": (q_text_hash_vectors, _hash_vectors_oracle()),
+    "lombscargle": (q_freqest_merged, _freqest_merged_oracle()),
+    "acf": (q_tsstats_merged, _tsstats_merged_oracle()),
+    "robust_zscore": (q_robust_zscore, _robust_z_oracle()),
+    "ohlc_bars": (q_ohlc_bars, _ohlc_oracle()),
+    "latest_by_key": (q_latest_by_key, _latest_oracle()),
+    "sample_negatives": (q_sample_negatives, _negatives_oracle()),
+    "rolling_stats": (q_rolling_family_merged, _rolling_family_merged_oracle()),
+    "pagerank": (q_pagerank, _pagerank_oracle()),
+    "zorder_curve": (q_zorder_curve, _zorder_oracle()),
+    "group_quantiles": (q_quantile_family_merged, _quantile_family_merged_oracle()),
+    "bpe_encode": (q_bpe_encode, _bpe_encode_oracle()),
+    "interval_join": (q_interval_join, _interval_join_oracle()),
+    "funnel": (q_events_merged, _events_merged_oracle()),
+    "audio_spectral": (q_audio_spectral, _audio_spectral_oracle()),
+    "char_entropy": (q_char_entropy, _char_entropy_oracle()),
+    "ngram_counts": (q_ngram_counts, _ngram_counts_oracle()),
+    "kfold_weights": (q_kfold_weights, _kfold_weights_oracle()),
+    "tpch_q4": (q_tpch_order_merged, _tpch_order_merged_oracle()),
+    "grouped_ols": (q_grouped_ols, _grouped_ols_oracle()),
+    "triangle_count": (q_triangle_count, _triangle_oracle()),
+    "sequence_pack": (q_sequence_pack, _sequence_pack_oracle()),
+    "text_postings": (q_retrieval_merged, _retrieval_merged_oracle()),
+    "edit_distance_join": (q_edit_distance_join, _edit_join_oracle()),
+    "event_pivot": (q_event_pivot, _event_pivot_oracle()),
+    "orders_unshipped": (q_orders_unshipped, _orders_unshipped_oracle()),
+    "json_props_stats": (q_json_props_stats, _json_props_oracle()),
+    "cdc_apply": (q_cdc_apply, _cdc_apply_oracle()),
+    "window_analytics": (q_window_analytics, _window_analytics_oracle()),
+    "active_user_setops": (q_active_user_setops, _setops_oracle()),
+    "weighted_sample": (q_weighted_sample, _weighted_sample_oracle(guarded=True)),
+    "ann_recall_eval": (q_ann_recall_eval, _ann_recall_oracle()),
+    "missing_windows": (q_missing_windows, _missing_windows_oracle()),
+    "dedup_keep_best": (q_dedup_keep_best, _keep_best_oracle()),
+    "key_skew_profile": (q_key_skew_profile, _key_skew_oracle()),
+    "dataset_split_safe": (q_dataset_split_safe, _split_safe_oracle()),
+    "tpch_q7": (q_tpch_joinfam_merged, _tpch_joinfam_merged_oracle()),
+    "tpch_q10": (q_tpch_q10, _tpch_q10_oracle()),
+    "tpch_q14": (q_tpch_onerow_merged, _tpch_onerow_merged_oracle()),
+    "tpch_q15": (q_tpch_q15, _tpch_q15_oracle()),
+    "tpch_q22": (q_tpch_q22, _tpch_q22_oracle()),
+    "tpch_q13": (q_tpch_q13, _tpch_q13_oracle()),
+    "tpch_q17": (q_tpch_q17, _tpch_q17_oracle()),
+    "text_sparse_knn": (q_text_sparse_knn, _sparse_knn_oracle()),
+    "dedup_recall_eval": (q_dedup_recall_eval, _dedup_recall_oracle()),
+    "embedding_outliers": (q_embedding_outliers, _embedding_outliers_oracle()),
+    "dataset_temperature_mix": (q_dataset_temperature_mix, _temperature_mix_oracle()),
+    "naive_bayes_lang": (q_naive_bayes_lang, _naive_bayes_oracle()),
+    "auc_eval": (q_auc_eval, _auc_oracle()),
+    "token_mi": (q_token_mi, _token_mi_oracle()),
+    "data_profile": (q_data_profile, _data_profile_oracle()),
+    "constraint_check": (q_constraint_check, _constraint_check_oracle()),
+    "frequent_values": (q_frequent_values, _frequent_values_oracle()),
+    "windowed_constraints": (q_windowed_constraints, _windowed_constraints_oracle()),
+    "dsir_weights": (q_dsir_weights, _dsir_oracle()),
+    "target_encoding": (q_target_encoding, _target_encoding_oracle()),
+    "event_transitions": (q_event_transitions, _transitions_oracle()),
+}
+QUERIES = {name: q for name, (q, _) in REGISTRY.items()}
+ORACLES = {name: o for name, (_, o) in REGISTRY.items()}
+
+# Bench rows whose plain plan is a union under a different function name.
+_PLAIN_ALIASES = {
+    "rfft": q_rfft_merged,
+    "decimate_iir": q_decimate_iir_merged,
+    "sosfiltfilt": q_sosfiltfilt_merged,
+    "convolve_valid": q_convolve_merged,
 }
 
 
-# ---------------------------------------------------------------------------
-# r12 rotation EXECUTED per the ledgered recipe (the r12 RECIPE block
-# above _QUEUED's r11 predecessor comment), due-ness re-derived from
-# CORRECTNESS_r11.json at round open (50/50 green; due pool = the 46
-# r10-head names in __spark_entry__._CHECK_LAST). TWELVE merges:
-#   clean +1 (absorbed name due r12): resample@merged (absorbs due
-#   resample_poly; resample_freq r11-head retires free), dedup_exact@
-#   merged (absorbs due dedup_ngram_jaccard; dedup_ngram_spans retires
-#   free), ifft@merged (absorbs due fftshift), funnel@merged (absorbs
-#   due retention), tpch_q4@merged (absorbs due tpch_q18),
-#   rolling_stats@merged (absorbs due rolling_median + due
-#   quantile_normalize — the qn branch added this round per the
-#   recipe's head math — DRAGS r11-head base rolling_stats: +1);
-#   net-0 retirement (absorbed name r11-head, base due — shrink N
-#   only): hilbert@merged (hilbert_envelope), decimate_fir@merged
-#   (decimate_iir), lombscargle@merged (dominant_frequency),
-#   lineitem_rollup@merged (cube_revenue), embedding_quantize@merged
-#   (embedding_pca), curation_report@merged (clean_text — EXTENDED
-#   this round to absorb the whole r11 hygiene union so the
-#   url_canonical_dedup variant stays under the driver).
-# Head math: 46 due − 7 absorbed-due + 1 dragged + 10 new = 50.
-# N = 96 − 15 retired + 10 = 91 (head 50 + tail 41; freshness bar
-# holds, N <= 100). The 10 registrations = the full ledgered r12
-# slate. Same mechanics as r9–r11: merged-oracle builders read the
-# constituents' ORACLES[...] rows, so every _q() call lands BEFORE
-# the pops; plain q_* functions remain for bench plan-continuity and
-# plan locks. The _QUEUED literal above builds before this block
-# runs, so remaining queued builders never see the deletions.
-# ---------------------------------------------------------------------------
-_q("resample", _resample_merged_oracle())(q_resample_merged)
-_q("dedup_exact", _dedup_family_merged_oracle())(q_dedup_family_merged)
-_q("ifft", _inverse_transform_merged_oracle())(q_inverse_transform_merged)
-_q("funnel", _events_merged_oracle())(q_events_merged)
-_q("tpch_q4", _tpch_order_merged_oracle())(q_tpch_order_merged)
-_q("rolling_stats", _rolling_family_merged_oracle())(q_rolling_family_merged)
-_q("hilbert", _hilbert_merged_oracle())(q_hilbert_merged)
-_q("decimate_fir", _decimate_merged_oracle())(q_decimate_merged)
-_q("lombscargle", _freqest_merged_oracle())(q_freqest_merged)
-_q("lineitem_rollup", _grouping_sets_merged_oracle())(q_grouping_sets_merged)
-_q("embedding_quantize", _embedding_merged_oracle())(q_embedding_merged)
-_q("curation_report", _curation_family_merged_oracle())(q_curation_family_merged)
-for _gone in (
-    "hilbert_envelope",
-    "decimate_iir",
-    "resample_poly",
-    "resample_freq",
-    "dedup_ngram_jaccard",
-    "dedup_ngram_spans",
-    "fftshift",
-    "retention",
-    "tpch_q18",
-    "rolling_median",
-    "quantile_normalize",
-    "dominant_frequency",
-    "cube_revenue",
-    "embedding_pca",
-    "clean_text",
-):
-    del QUERIES[_gone]
-    ORACLES.pop(_gone, None)
-del _gone
-# the 10 r12 registrations (the full ledgered r12 slate)
-_q("ann_recall_eval", _ann_recall_oracle())(q_ann_recall_eval)
-_q("missing_windows", _missing_windows_oracle())(q_missing_windows)
-_q("dedup_keep_best", _keep_best_oracle())(q_dedup_keep_best)
-_q("key_skew_profile", _key_skew_oracle())(q_key_skew_profile)
-_q("dataset_split_safe", _split_safe_oracle())(q_dataset_split_safe)
-_q("tpch_q7", _tpch_q7_oracle())(q_tpch_q7)
-_q("tpch_q10", _tpch_q10_oracle())(q_tpch_q10)
-_q("tpch_q14", _tpch_q14_oracle())(q_tpch_q14)
-_q("tpch_q15", _tpch_q15_oracle())(q_tpch_q15)
-_q("tpch_q22", _tpch_q22_oracle())(q_tpch_q22)
-
-
-# ---------------------------------------------------------------------------
-# r13 rotation EXECUTED per the ledgered recipe (the r13 RECIPE block
-# above), due-ness re-derived from CORRECTNESS_r12.json at round open
-# (50/50 full green; due pool = the 41 r11-head names in
-# __spark_entry__._CHECK_LAST). SEVEN merges:
-#   clean +1 (absorbed name due r13): group_quantiles@merged (absorbs
-#   due winsorize; the qn branch is duplicate coverage with
-#   rolling_stats@merged since r12 — harmless), text_postings@merged
-#   (absorbs due bm25_scores);
-#   net-0 retirement (absorbed name r12-head, base due — shrink N
-#   only): multimodal_audio_decode@merged (multimodal_gzip_decode),
-#   sessionize@merged (stream_dedup), stft@merged (coherence),
-#   fftconvolve_2d@merged (fftconvolve_complex), sosfilt_stream@merged
-#   (stream_window_stats_live).
-# Head math: 41 due − 2 absorbed-due + 0 dragged + 11 new = 50.
-# N = 91 − 7 retired + 11 = 95 (head 50 + tail 45; freshness bar
-# holds, N <= 100). The 11 registrations = the 7-name ledgered r13
-# slate (tpch_q8/q9/q13/q17/q19, text_sparse_knn, dedup_recall_eval)
-# + 4 r14 pull-forwards (embedding_outliers, dataset_temperature_mix,
-# naive_bayes_lang, auc_eval). Queue 27 − 7 merges − 11 new = 9
-# (drains r14 with tpch_q7@merged / tpch_q14@merged, r15 with the
-# data-quality layer). Same mechanics as r9–r12: merged-oracle
-# builders read the constituents' ORACLES[...] rows, so every _q()
-# call lands BEFORE the pops; plain q_* functions remain for bench
-# plan-continuity (bench.plain_overrides) and plan locks
-# (tests/test_plans.py::_MERGED_UNIONS).
-# ---------------------------------------------------------------------------
-_q("multimodal_audio_decode", _multimodal_bin_merged_oracle())(
-    q_multimodal_bin_merged
-)
-_q("sessionize", _session_family_merged_oracle())(q_session_family_merged)
-_q("stft", _framed_spectral_merged_oracle())(q_framed_spectral_merged)
-_q("fftconvolve_2d", _fftconv_nd_merged_oracle())(q_fftconv_nd_merged)
-_q("sosfilt_stream", _live_streams_merged_oracle())(q_live_streams_merged)
-_q("group_quantiles", _quantile_family_merged_oracle())(q_quantile_family_merged)
-_q("text_postings", _retrieval_merged_oracle())(q_retrieval_merged)
-for _gone in (
-    "multimodal_gzip_decode",
-    "stream_dedup",
-    "coherence",
-    "fftconvolve_complex",
-    "stream_window_stats_live",
-    "winsorize",
-    "bm25_scores",
-):
-    del QUERIES[_gone]
-    ORACLES.pop(_gone, None)
-del _gone
-# the 11 r13 registrations (the 7-name ledgered slate + 4 r14
-# pull-forwards)
-_q("tpch_q8", _tpch_q8_oracle())(q_tpch_q8)
-_q("tpch_q9", _tpch_q9_oracle())(q_tpch_q9)
-_q("tpch_q13", _tpch_q13_oracle())(q_tpch_q13)
-_q("tpch_q17", _tpch_q17_oracle())(q_tpch_q17)
-_q("tpch_q19", _tpch_q19_oracle())(q_tpch_q19)
-_q("text_sparse_knn", _sparse_knn_oracle())(q_text_sparse_knn)
-_q("dedup_recall_eval", _dedup_recall_oracle())(q_dedup_recall_eval)
-_q("embedding_outliers", _embedding_outliers_oracle())(q_embedding_outliers)
-_q("dataset_temperature_mix", _temperature_mix_oracle())(q_dataset_temperature_mix)
-_q("naive_bayes_lang", _naive_bayes_oracle())(q_naive_bayes_lang)
-_q("auc_eval", _auc_oracle())(q_auc_eval)
-
-
-# ---------------------------------------------------------------------------
-# r14 rotation EXECUTED per the ledgered recipe (the r14 RECIPE block
-# above _QUEUED's r13 predecessor comment), due-ness re-derived from
-# CORRECTNESS_r13.json at round open (50/50 full green, zero err —
-# due pool = the 45 r12-head names in __spark_entry__._CHECK_LAST,
-# exactly as the recipe assumed). TWO merges, both net-0 retirement
-# (absorbed names r13-head → retire free, shrink N only; bases due):
-#   tpch_q7@merged (absorbs tpch_q8 + tpch_q9),
-#   tpch_q14@merged (absorbs tpch_q19).
-# Head math: 45 due − 0 absorbed-due + 0 dragged + 5 new = 50.
-# N = 95 − 3 retired + 5 = 97 (head 50 + tail 47; freshness bar
-# holds, N <= 100). The 5 registrations = token_mi + the data-quality
-# layer (data_profile, constraint_check, frequent_values,
-# windowed_constraints — the one user-reachable family that was still
-# CI-only, VERDICT r13 #1). Queue 10 − 2 merges − 5 new = 3
-# (target_encoding, event_transitions, dsir_weights — the exact r15
-# slate). Same mechanics as r9–r13: the merged oracle builders call
-# the constituents' _tpch_qN_oracle() functions directly, so ordering
-# vs the pops is safe; plain q_* functions remain for bench plan
-# continuity (bench.plain_overrides, pre-staged r13 commit 77601a7)
-# and plan locks (tests/test_plans.py::_MERGED_UNIONS).
-# ---------------------------------------------------------------------------
-# (the staged r16 merge candidate q_event_widefam_merged lives with
-# the other union builders above — NOT registered; see the r16 dry-run
-# comment there)
-_q("tpch_q7", _tpch_joinfam_merged_oracle())(q_tpch_joinfam_merged)
-_q("tpch_q14", _tpch_onerow_merged_oracle())(q_tpch_onerow_merged)
-for _gone in ("tpch_q8", "tpch_q9", "tpch_q19"):
-    del QUERIES[_gone]
-    ORACLES.pop(_gone, None)
-del _gone
-# the 5 r14 registrations (the full ledgered r14 slate)
-_q("token_mi", _token_mi_oracle())(q_token_mi)
-_q("data_profile", _data_profile_oracle())(q_data_profile)
-_q("constraint_check", _constraint_check_oracle())(q_constraint_check)
-_q("frequent_values", _frequent_values_oracle())(q_frequent_values)
-_q("windowed_constraints", _windowed_constraints_oracle())(q_windowed_constraints)
-
-
-# ---------------------------------------------------------------------------
-# r15 rotation EXECUTED per the ledgered recipe (the r15 RECIPE block
-# above _QUEUED's r13 predecessor comment), due-ness re-derived from
-# CORRECTNESS_r14.json at round open (50/50 full green, zero err —
-# due pool = the 47 r13-head names in __spark_entry__._CHECK_LAST,
-# exactly as the recipe assumed). NO merges needed: head math
-# 47 due + 0 dragged + 3 new = 50 EXACTLY, so the whole remaining
-# queue registers — dsir_weights, target_encoding, event_transitions.
-# N = 97 + 3 = 100 — AT the two-round-bar cap; queue -> 0. From r16
-# on, every registration requires a retirement-first merge in the
-# same rotation block (policy + evidence bar in the r16+ RECIPE
-# section; CI enforces N <= 100 with the policy message,
-# tests/test_contract_integration.py).
-# r15 PLAN-FIX also landed this rotation (ADVICE r13 #2): the
-# weighted_sample registration flipped in place to the both-ends
-# u-boundary guard (q_weighted_sample u_guard="both" +
-# _weighted_sample_oracle(guarded=True)) — see the annotated
-# registration line in the r12 block; the pair was byte-parity-pinned
-# a round ahead (tests/test_pipeline.py::
-# test_weighted_sample_guarded_matches_staged_oracle).
-# ---------------------------------------------------------------------------
-_q("dsir_weights", _dsir_oracle())(q_dsir_weights)
-_q("target_encoding", _target_encoding_oracle())(q_target_encoding)
-_q("event_transitions", _transitions_oracle())(q_event_transitions)
+def plain(name: str):
+    """The single-plan query a bench row named ``name`` measures: the
+    alias above, else ``q_<name>``, else the registered query (None for
+    an unknown name). Registered unions are literal unionAll's of these
+    functions, so a bench row keeps its plan when names fold together."""
+    return (
+        _PLAIN_ALIASES.get(name)
+        or globals().get(f"q_{name}")
+        or QUERIES.get(name)
+    )

@@ -232,6 +232,7 @@ def sosfilt_chunked(
     )
     max_chunk = dfc.agg(F.max("__chunk__").alias("m")).collect()[0]["m"]
     if max_chunk is None:
+        dfc.unpersist()
         return df.sparkSession.createDataFrame(
             [], f"{(_ddl_of(df, by) + ', ') if by else ''}{dim} {dict(df.dtypes)[dim]}, "
             "idx bigint, value double"

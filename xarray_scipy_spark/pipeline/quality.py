@@ -71,6 +71,14 @@ def data_profile(
     estimates are deterministic for a given dataset (the sketch is
     merge-order-free) but are NOT cross-engine reproducible, so the
     byte-exact contract oracle pins the exact form only.
+
+    The exact path (the default) runs one stats aggregate plus one
+    single-distinct aggregate PER COLUMN, each its own pass over
+    ``df``. That is cheap when ``df`` is a columnar scan (each pass
+    reads only its column), but a non-scan upstream — a join, a UDF,
+    a window — is re-executed once per aggregate, k+1 times in all.
+    Persist or checkpoint such an input first, or use
+    ``exact_distinct=False``.
     """
     cols = list(columns) if columns is not None else list(df.columns)
     if not cols:
