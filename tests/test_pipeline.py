@@ -46,6 +46,54 @@ def test_resize_payload_truncate_and_pad(spark):
     assert out.loc[1, "digest"] == hashlib.md5(b"short" + b"." * 11).hexdigest()
 
 
+def test_binary_operators_pass_null_payloads(spark):
+    """A NULL payload among valid rows: decode_features/decode_text give
+    NULL n_bytes and NULL outputs without calling the decoder,
+    resize_payload gives NULL payload/n_bytes/digest, frame_sample
+    emits no frames for it, and the valid rows are unaffected."""
+    import numpy as np
+
+    from xarray_scipy_spark.pipeline.multimodal import encode_avi_mjpeg
+
+    texts = {0: "abcdefgh" * 3, 2: "xyz"}
+    gz = {d: pl.gzip_text_encoder(t) for d, t in texts.items()}
+    df = spark.createDataFrame(
+        [(0, bytearray(gz[0])), (1, None), (2, bytearray(gz[2]))],
+        "doc_id bigint, payload binary",
+    )
+
+    def decoder(payload, n):
+        assert payload is not None
+        return [float(len(payload)), float(payload[0])][:n]
+
+    feats = pl.decode_features(df, n_features=2, decoder=decoder).collect()
+    feats = {r.doc_id: r for r in feats}
+    assert (feats[1].n_bytes, feats[1].f0, feats[1].f1) == (None, None, None)
+    for d in (0, 2):
+        assert feats[d].n_bytes == len(gz[d])
+        assert (feats[d].f0, feats[d].f1) == (float(len(gz[d])), float(gz[d][0]))
+
+    text = {r.doc_id: r for r in pl.decode_text(df).collect()}
+    assert (text[1].n_bytes, text[1].text) == (None, None)
+    assert {d: text[d].text for d in (0, 2)} == texts
+
+    resized = {r.doc_id: r for r in pl.resize_payload(df, target_bytes=16).collect()}
+    assert resized[1].payload is None
+    assert (resized[1].n_bytes, resized[1].digest) == (None, None)
+    assert resized[0].n_bytes == 16 and bytes(resized[0].payload) == gz[0][:16]
+
+    frames = pl.frame_sample(df, frame_bytes=8, every=1).toPandas()
+    assert sorted(frames.groupby("doc_id").size().to_dict().items()) == [
+        (d, len(gz[d]) // 8) for d in (0, 2)
+    ]
+    avi = encode_avi_mjpeg([np.full((8, 8), 40, dtype=np.uint8)] * 2)
+    videos = spark.createDataFrame(
+        [(0, bytearray(avi)), (1, None)], "doc_id bigint, payload binary"
+    )
+    out = pl.frame_sample(videos, every=1, codec="mjpeg").toPandas()
+    assert sorted(out["doc_id"]) == [0, 0]
+
+
 def test_series_form_roundtrip(spark, tmp_path):
     """write_series -> read_series is the identity on long-form data,
     and a value transform applied in series form matches the long form."""

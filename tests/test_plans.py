@@ -18,7 +18,7 @@ import os
 
 import pytest
 
-from xarray_scipy_spark.contract import QUERIES, plain
+from xarray_scipy_spark.contract import _UNIONS, QUERIES, _branches, _union, plain
 
 
 SF_DIR = "/root/testdata/sf0.001"
@@ -814,92 +814,37 @@ def test_tpch_q17_q19_part_semireduction_broadcast(spark):
     )
 
 
-# --- merged-union glue locks (ADVICE r10 #5) --------------------------------
-# _contract_fn prefers the plain q_<name> function, so the union plans
-# themselves had no lock: an accidental repartition/sort between
-# unionAll branches would go unnoticed. Lock: the union's Exchange
-# count must not exceed the SUM of its branches' own counts (exchange
-# reuse may make it smaller — never larger), and the glue must be a
-# plain Union node.
+# --- variant-tag union glue locks --------------------------------------------
+# plain() prefers the plain q_<name> function, so the union plans
+# themselves need their own lock: an accidental repartition/sort between
+# unionAll branches would go unnoticed. Lock: the union's Exchange count
+# must not exceed the SUM of its branches' own counts (exchange reuse
+# may make it smaller — never larger), the glue must be a plain Union
+# node, and every branch must project the union's columns in order
+# (unionAll matches by position, so a reordered branch would silently
+# mix columns on both engines).
+#
+# sosfilt_stream's union is excluded: its branches each EXECUTE a live
+# readStream→memory-sink job when called, so the static-plan comparison
+# would run four streaming jobs to lock a union of two memory-sink
+# scans; its glue is covered by the tail oracle check instead.
+_LOCKED_UNIONS = sorted(set(_UNIONS) - {"sosfilt_stream"})
 
-_MERGED_UNIONS = {
-    "sosfilt": ("q_sosfilt", "q_sosfilt_chunked", "q_sosfiltfilt_merged"),
-    "fftconvolve": ("q_convolve_family_merged", "q_convolve_merged", "q_deconvolve"),
-    "multimodal_real_decode": (
-        "q_multimodal_real_decode",
-        "q_multimodal_video_frames",
-    ),
-    "gapfill": ("q_gapfill", "q_interp_to"),
-    "dedup_minhash": ("q_dedup_pairs_merged", "q_dedup_minhash_cross"),
-    "sketch_hll": ("q_sketch_state_merged", "q_sketch_hll_merge"),
-    "tpch_q1": ("q_tpch_q1q6_merged", "q_tpch_q3q5_merged"),
-    "welch": ("q_welch_merged", "q_csd_merged"),
-    "dataset_mix": ("q_dataset_mix", "q_cap_per_group", "q_filter_by_quantile"),
-    "istft_roundtrip": ("q_istft_roundtrip", "q_istft_native"),
-    "lfilter": ("q_lfilter", "q_filtfilt"),
-    "dataset_split": ("q_dataset_split", "q_dataset_stratified"),
-    "ann_cosine_topk": ("q_ann_cosine_topk", "q_ann_cosine_topk_lsh"),
-    "cwt_ricker": ("q_cwt_ricker", "q_periodogram"),
-    "acf": ("q_acf", "q_ewma", "q_seasonal_decompose"),
-    "text_logprob": ("q_text_logprob", "q_text_vocab"),
-    "skew_join": ("q_skew_join", "q_bloom_semijoin"),
-    "text_token_stats": ("q_text_stats_merged", "q_text_redact", "q_text_url_stats"),
-    "resample": ("q_resample", "q_resample_poly", "q_resample_freq"),
-    "dedup_exact": (
-        "q_dedup_exact",
-        "q_dedup_ngram_jaccard",
-        "q_dedup_ngram_spans",
-    ),
-    "ifft": ("q_fft_family_merged", "q_fftshift_merged", "q_istft_native"),
-    "funnel": ("q_funnel", "q_retention"),
-    "tpch_q4": ("q_tpch_q4", "q_tpch_q18"),
-    "rolling_stats": (
-        "q_rolling_stats",
-        "q_rolling_median",
-        "q_quantile_normalize",
-    ),
-    "hilbert": ("q_hilbert", "q_hilbert_envelope"),
-    "decimate_fir": ("q_decimate_fir", "q_decimate_iir_merged"),
-    "lombscargle": ("q_lombscargle", "q_dominant_frequency"),
-    "lineitem_rollup": ("q_lineitem_rollup", "q_cube_revenue"),
-    "embedding_quantize": ("q_embedding_quantize", "q_embedding_pca"),
-    "curation_report": ("q_curation_report", "q_text_hygiene_merged"),
-    # (sosfilt_stream's union is excluded: its branches
-    # each EXECUTE a live readStream→memory-sink job when called, so
-    # the static-plan comparison would run four streaming jobs to lock
-    # a union of two memory-sink scans; its glue is covered by the
-    # tail oracle check instead)
-    "multimodal_audio_decode": (
-        "q_multimodal_audio_decode",
-        "q_multimodal_gzip_decode",
-    ),
-    "sessionize": ("q_sessionize", "q_stream_dedup"),
-    "stft": ("q_stft", "q_coherence"),
-    "fftconvolve_2d": ("q_fftconvolve_2d", "q_fftconvolve_complex"),
-    "group_quantiles": (
-        "q_group_quantiles",
-        "q_quantile_normalize",
-        "q_winsorize",
-    ),
-    "text_postings": ("q_text_postings", "q_bm25_scores"),
-    "tpch_q7": ("q_tpch_q7", "q_tpch_q8", "q_tpch_q9"),
-    "tpch_q14": ("q_tpch_q14", "q_tpch_q19"),
-}
 
-@pytest.mark.parametrize("name", sorted(_MERGED_UNIONS))
+@pytest.mark.parametrize("name", _LOCKED_UNIONS)
 def test_merged_union_adds_no_exchange(spark, name):
-    """The registered variant-tag union must be pure unionAll glue:
-    its static plan contains a Union node and no MORE Exchange nodes
-    than its branches' plans sum to (reuse may shrink the count)."""
-    from xarray_scipy_spark import contract as C
-
-    branches = _MERGED_UNIONS[name]
-    union_plan = _static_plan(QUERIES[name](spark, SF_DIR))
+    """The variant-tag union must be pure unionAll glue: its static plan
+    contains a Union node and no MORE Exchange nodes than its branches'
+    plans sum to (reuse may shrink the count), and each branch projects
+    exactly the union's column names, in order."""
+    union = _union(name)[0](spark, SF_DIR)
+    union_plan = _static_plan(union)
     assert "Union" in union_plan, union_plan
-    branch_sum = sum(
-        _static_plan(getattr(C, b)(spark, SF_DIR)).count("Exchange")
-        for b in branches
-    )
+    branch_sum = 0
+    for query, _, cols in _branches(name):
+        branch = query(spark, SF_DIR)
+        assert branch.selectExpr(*cols).columns == union.columns, (name, cols)
+        branch_sum += _static_plan(branch).count("Exchange")
     assert union_plan.count("Exchange") <= branch_sum, (
         name,
         union_plan.count("Exchange"),

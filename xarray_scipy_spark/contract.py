@@ -35,10 +35,14 @@ Oracle strategies per family:
   in DuckDB's dialect (lists, lambdas, bit ops) — byte-equal results.
 
 Spark-side scale notes live with each operator's implementation module;
-this file is only the wiring + oracle text.
+this file is only the wiring + oracle text. A variant-tag union of leaf
+queries is one ``_UNIONS`` entry, registered as ``_union(name)``.
 """
 
 from __future__ import annotations
+
+import struct
+from functools import reduce
 
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
@@ -90,6 +94,42 @@ def _q3(expr_sql: str) -> str:
 
 def _q3_col(col):
     return F.floor(col * 1000 + F.lit(0.5) + F.lit(1e-6)).cast("bigint")
+
+
+def _with_payloads(docs: DataFrame, encode) -> DataFrame:
+    """``(doc_id, payload)``: one synthetic binary payload per row of
+    ``docs``, ``encode(row) -> bytes`` over the row's columns. Fixture
+    generator only; production payloads arrive from storage."""
+    import pandas as _pd
+
+    def synth(batches):
+        for pdf in batches:
+            payloads = [encode(row) for row in pdf.itertuples(index=False)]
+            yield _pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
+
+    return docs.mapInPandas(synth, "doc_id bigint, payload binary")
+
+
+def _fixture_pixels(d: int, channels: int = 3):
+    """The image fixtures' raster: ``(d·31 + i·7) mod 256`` over
+    ``channels`` interleaved samples of a (3 + d % 4) × (4 + d % 5)
+    image."""
+    w, h = 4 + d % 5, 3 + d % 4
+    px = (d * 31 + np.arange(channels * w * h) * 7) % 256
+    return px.astype(np.uint8).reshape((h, w, channels) if channels > 1 else (h, w))
+
+
+def _wav(pcm: bytes, sr: int) -> bytes:
+    """``pcm`` (PCM16 mono samples) behind a 44-byte RIFF/WAVE header."""
+    return (
+        b"RIFF"
+        + struct.pack("<I", 36 + len(pcm))
+        + b"WAVEfmt "
+        + struct.pack("<IHHIIHH", 16, 1, 1, sr, sr * 2, 2, 16)
+        + b"data"
+        + struct.pack("<I", len(pcm))
+        + pcm
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -2585,23 +2625,13 @@ def q_multimodal_real_decode(spark, sf_dir):
     the expected features from the same formula, so header tokenizing,
     comment handling, raster decode, and the feature math are all
     value-verified without any imaging library."""
-    import pandas as _pd
 
-    docs = _docs(spark, sf_dir).select("doc_id")
+    def ppm(row):
+        px = _fixture_pixels(int(row.doc_id))
+        h, w, _ = px.shape
+        return f"P6\n# synthetic fixture\n{w} {h}\n255\n".encode() + px.tobytes()
 
-    def synth(batches):
-        # fixture generator (production payloads arrive from storage)
-        for pdf in batches:
-            payloads = []
-            for d in pdf["doc_id"]:
-                d = int(d)
-                w, h = 4 + d % 5, 3 + d % 4
-                header = f"P6\n# synthetic fixture\n{w} {h}\n255\n".encode()
-                data = bytes((d * 31 + i * 7) % 256 for i in range(3 * w * h))
-                payloads.append(header + data)
-            yield _pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
-
-    with_payload = docs.mapInPandas(synth, "doc_id bigint, payload binary")
+    with_payload = _with_payloads(_docs(spark, sf_dir).select("doc_id"), ppm)
     res = pl.decode_features(with_payload, n_features=5, decoder=pl.image_decoder)
     return res.select(
         "doc_id",
@@ -2624,24 +2654,10 @@ def q_multimodal_png_decode(spark, sf_dir):
     math are value-verified without any imaging library. The
     compressed payload size is not SQL-computable, so n_bytes is
     excluded from the compare (the pixel means pin the raster)."""
-    import numpy as _np
-    import pandas as _pd
-
-    docs = _docs(spark, sf_dir).select("doc_id")
-
-    def synth(batches):
-        for pdf in batches:
-            payloads = []
-            for d in pdf["doc_id"]:
-                d = int(d)
-                w, h = 4 + d % 5, 3 + d % 4
-                px = (
-                    (d * 31 + _np.arange(3 * w * h) * 7) % 256
-                ).astype(_np.uint8).reshape(h, w, 3)
-                payloads.append(pl.encode_png(px))
-            yield _pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
-
-    with_payload = docs.mapInPandas(synth, "doc_id bigint, payload binary")
+    with_payload = _with_payloads(
+        _docs(spark, sf_dir).select("doc_id"),
+        lambda row: pl.encode_png(_fixture_pixels(int(row.doc_id))),
+    )
     res = pl.decode_features(with_payload, n_features=5, decoder=pl.image_decoder)
     return res.select(
         "doc_id",
@@ -2660,24 +2676,10 @@ def q_multimodal_bmp_decode(spark, sf_dir):
     the payload size IS closed-form (54 + stride·h), so the oracle
     checks ``n_bytes`` too, pinning the writer's framing alongside the
     decoded pixel means."""
-    import numpy as _np
-    import pandas as _pd
-
-    docs = _docs(spark, sf_dir).select("doc_id")
-
-    def synth(batches):
-        for pdf in batches:
-            payloads = []
-            for d in pdf["doc_id"]:
-                d = int(d)
-                w, h = 4 + d % 5, 3 + d % 4
-                px = (
-                    (d * 31 + _np.arange(3 * w * h) * 7) % 256
-                ).astype(_np.uint8).reshape(h, w, 3)
-                payloads.append(pl.encode_bmp(px))
-            yield _pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
-
-    with_payload = docs.mapInPandas(synth, "doc_id bigint, payload binary")
+    with_payload = _with_payloads(
+        _docs(spark, sf_dir).select("doc_id"),
+        lambda row: pl.encode_bmp(_fixture_pixels(int(row.doc_id))),
+    )
     res = pl.decode_features(with_payload, n_features=5, decoder=pl.image_decoder)
     return res.select(
         "doc_id",
@@ -2716,33 +2718,14 @@ def q_multimodal_audio_decode(spark, sf_dir):
     features from the same sample formula, so header parsing, PCM16
     scaling, and the feature math are all value-verified without any
     audio library."""
-    import struct
 
-    import pandas as _pd
+    def wav(row):
+        d = int(row.doc_id)
+        n = 64 + d % 32
+        samples = (((d * 13 + i * 7) % 2048) - 1024 for i in range(n))
+        return _wav(struct.pack(f"<{n}h", *samples), _WAV_SR)
 
-    docs = _docs(spark, sf_dir).select("doc_id")
-
-    def synth(batches):
-        for pdf in batches:
-            payloads = []
-            for d in pdf["doc_id"]:
-                d = int(d)
-                n = 64 + d % 32
-                data = struct.pack(
-                    f"<{n}h", *(((d * 13 + i * 7) % 2048) - 1024 for i in range(n))
-                )
-                hdr = (
-                    b"RIFF"
-                    + struct.pack("<I", 36 + len(data))
-                    + b"WAVEfmt "
-                    + struct.pack("<IHHIIHH", 16, 1, 1, _WAV_SR, _WAV_SR * 2, 2, 16)
-                    + b"data"
-                    + struct.pack("<I", len(data))
-                )
-                payloads.append(hdr + data)
-            yield _pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
-
-    with_payload = docs.mapInPandas(synth, "doc_id bigint, payload binary")
+    with_payload = _with_payloads(_docs(spark, sf_dir).select("doc_id"), wav)
     res = pl.decode_features(with_payload, n_features=4, decoder=pl.audio_decoder)
     return res.select(
         "doc_id",
@@ -3554,25 +3537,10 @@ def q_multimodal_gzip_decode(spark, sf_dir):
     wire format of web-crawl corpora (WARC records, .jsonl.gz shards).
     The oracle hashes the ORIGINAL text, so framing, inflate, and utf-8
     decode are all value-verified end to end."""
-    import pandas as _pd
-
     from xarray_scipy_spark.pipeline.hashes import spread as _spread
 
     docs = _spread(_docs(spark, sf_dir).select("doc_id", "text"), "doc_id")
-
-    def synth(batches):
-        # fixture generator (production payloads arrive from storage)
-        from xarray_scipy_spark.pipeline.multimodal import gzip_text_encoder
-
-        for pdf in batches:
-            yield _pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "payload": [gzip_text_encoder(t) for t in pdf["text"]],
-                }
-            )
-
-    with_payload = docs.mapInPandas(synth, "doc_id bigint, payload binary")
+    with_payload = _with_payloads(docs, lambda row: pl.gzip_text_encoder(row.text))
     res = pl.decode_text(with_payload)
     return res.select(
         "doc_id",
@@ -3646,9 +3614,6 @@ def q_multimodal_jpeg_decode(spark, sf_dir):
     transform pipeline is value-verified without any imaging library.
     Lossy-by-construction content (nonzero AC under real quant tables)
     is covered with error bounds by tests/test_pipeline.py instead."""
-    import numpy as _np
-    import pandas as _pd
-
     from xarray_scipy_spark.pipeline.hashes import spread as _spread
 
     # fixture ENCODE is itself per-payload python work — spread it
@@ -3656,22 +3621,14 @@ def q_multimodal_jpeg_decode(spark, sf_dir):
     # parquet file otherwise scans as one partition and serializes it)
     docs = _spread(_docs(spark, sf_dir).select("doc_id"), "doc_id")
 
-    def synth(batches):
-        from xarray_scipy_spark.pipeline.jpeg import encode_jpeg
+    def jpeg(row):
+        d = int(row.doc_id)
+        bw, bh = 1 + d % 3, 1 + d % 2
+        vals = (d * 37 + np.arange(bw * bh) * 11) % 256
+        img = np.repeat(np.repeat(vals.reshape(bh, bw), 8, axis=0), 8, axis=1)
+        return pl.encode_jpeg(img.astype(np.uint8))
 
-        for pdf in batches:
-            payloads = []
-            for d in pdf["doc_id"]:
-                d = int(d)
-                bw, bh = 1 + d % 3, 1 + d % 2
-                vals = (d * 37 + _np.arange(bw * bh) * 11) % 256
-                img = _np.repeat(
-                    _np.repeat(vals.reshape(bh, bw), 8, axis=0), 8, axis=1
-                ).astype(_np.uint8)
-                payloads.append(encode_jpeg(img))
-            yield _pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
-
-    with_payload = docs.mapInPandas(synth, "doc_id bigint, payload binary")
+    with_payload = _with_payloads(docs, jpeg)
     res = pl.decode_features(with_payload, n_features=5, decoder=pl.image_decoder)
     return res.select(
         "doc_id",
@@ -4293,23 +4250,12 @@ def q_multimodal_decode_merged(spark, sf_dir):
     # webp variant (r8): the png pixel formula through the VP8L
     # lossless pipeline (subtract-green transform + color cache +
     # data-derived huffman codes), decoded back by pipeline/webp.py
-    def webp_synth(batches):
-        for pdf in batches:
-            payloads = []
-            for d in pdf["doc_id"]:
-                d = int(d)
-                w, h = 4 + d % 5, 3 + d % 4
-                px = ((d * 31 + _np.arange(3 * w * h) * 7) % 256).astype(
-                    _np.uint8
-                ).reshape(h, w, 3)
-                payloads.append(
-                    pl.encode_webp_lossless(
-                        px, subtract_green=True, cache_bits=4
-                    )
-                )
-            yield _pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
-
-    webp_payload = docs.mapInPandas(webp_synth, "doc_id bigint, payload binary")
+    webp_payload = _with_payloads(
+        docs,
+        lambda row: pl.encode_webp_lossless(
+            _fixture_pixels(int(row.doc_id)), subtract_green=True, cache_bits=4
+        ),
+    )
     webp = pl.decode_features(
         webp_payload, n_features=5, decoder=pl.image_decoder
     ).select(
@@ -4325,19 +4271,9 @@ def q_multimodal_decode_merged(spark, sf_dir):
 
     # gif variant (r7): grayscale-palette LZW — lossless, so the PPM
     # formula with a single channel drives all three decoded means
-    def gif_synth(batches):
-        for pdf in batches:
-            payloads = []
-            for d in pdf["doc_id"]:
-                d = int(d)
-                w, h = 4 + d % 5, 3 + d % 4
-                px = ((d * 31 + _np.arange(w * h) * 7) % 256).astype(
-                    _np.uint8
-                ).reshape(h, w)
-                payloads.append(pl.encode_gif(px))
-            yield _pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
-
-    gif_payload = docs.mapInPandas(gif_synth, "doc_id bigint, payload binary")
+    gif_payload = _with_payloads(
+        docs, lambda row: pl.encode_gif(_fixture_pixels(int(row.doc_id), channels=1))
+    )
     gif = pl.decode_features(
         gif_payload, n_features=5, decoder=pl.image_decoder
     ).select(
@@ -4441,395 +4377,14 @@ def q_windows_merged(spark, sf_dir):
     return win.unionAll(sess)
 
 
-def _fft_family_merged_oracle() -> str:
-    """ifft/ihfft/irfft/hfft in one variant-tag union (each branch is
-    the original per-query oracle wrapped as a derived table — DuckDB
-    WINDOW clauses must not scope across UNION branches)."""
-    return (
-        "SELECT 'ifft' AS variant, user_id, idx, re6 AS va, im6 AS vb "
-        "FROM (" + _IFFT_ORACLE + ") "
-        "UNION ALL "
-        "SELECT 'ihfft' AS variant, user_id, idx, re6 AS va, im6 AS vb "
-        "FROM (" + _IHFFT_ORACLE + ") "
-        "UNION ALL "
-        "SELECT 'irfft' AS variant, user_id, idx, value6 AS va, 0.0 AS vb "
-        "FROM (" + _IRFFT_ORACLE + ") "
-        "UNION ALL "
-        "SELECT 'hfft' AS variant, user_id, idx, value4 AS va, 0.0 AS vb "
-        "FROM (" + _HFFT_ORACLE + ")"
-    )
-
-
-def q_fft_family_merged(spark, sf_dir):
-    """The inverse/Hermitian FFT surface (ifft, ihfft, irfft
-    round-trips + forward hfft) in ONE variant-tag union, keeping
-    every transform value-verified. va/vb carry each variant's
-    original rounded columns (vb = 0.0 where the variant is
-    single-valued)."""
-    ifft_ = q_ifft(spark, sf_dir).select(
-        F.lit("ifft").alias("variant"), "user_id", "idx",
-        F.col("re6").alias("va"), F.col("im6").alias("vb"),
-    )
-    ihfft_ = q_ihfft(spark, sf_dir).select(
-        F.lit("ihfft").alias("variant"), "user_id", "idx",
-        F.col("re6").alias("va"), F.col("im6").alias("vb"),
-    )
-    irfft_ = q_irfft(spark, sf_dir).select(
-        F.lit("irfft").alias("variant"), "user_id", "idx",
-        F.col("value6").alias("va"), F.lit(0.0).alias("vb"),
-    )
-    hfft_ = q_hfft(spark, sf_dir).select(
-        F.lit("hfft").alias("variant"), "user_id", "idx",
-        F.col("value4").alias("va"), F.lit(0.0).alias("vb"),
-    )
-    return ifft_.unionAll(ihfft_).unionAll(irfft_).unionAll(hfft_)
-
-
-def _fftshift_merged_oracle() -> str:
-    return (
-        "SELECT 'shift' AS variant, user_id, idx AS i1, "
-        "CAST(-1 AS BIGINT) AS i2, value AS v FROM (" + _FFTSHIFT_ORACLE + ") "
-        "UNION ALL "
-        "SELECT 'ishift' AS variant, user_id, idx AS i1, "
-        "CAST(-1 AS BIGINT) AS i2, value AS v FROM (" + _IFFTSHIFT_ORACLE + ") "
-        "UNION ALL "
-        "SELECT 'shift2d' AS variant, user_id, idx_d1 AS i1, idx_d2 AS i2, "
-        "val4 AS v FROM (" + _FFTSHIFT2D_ORACLE + ")"
-    )
-
-
-def q_fftshift_merged(spark, sf_dir):
-    """fftshift + ifftshift (1-d) and the dims-list 2-d fftshift in ONE
-    variant-tag union (i2 = -1 tags the 1-d variants; pure index arithmetic on both sides)."""
-    sh = q_fftshift(spark, sf_dir).select(
-        F.lit("shift").alias("variant"), "user_id",
-        F.col("idx").alias("i1"), F.lit(-1).cast("bigint").alias("i2"),
-        F.col("value").alias("v"),
-    )
-    ish = q_ifftshift(spark, sf_dir).select(
-        F.lit("ishift").alias("variant"), "user_id",
-        F.col("idx").alias("i1"), F.lit(-1).cast("bigint").alias("i2"),
-        F.col("value").alias("v"),
-    )
-    sh2 = q_fftshift_2d(spark, sf_dir).select(
-        F.lit("shift2d").alias("variant"), "user_id",
-        F.col("idx_d1").alias("i1"), F.col("idx_d2").alias("i2"),
-        F.col("val4").alias("v"),
-    )
-    return sh.unionAll(ish).unionAll(sh2)
-
-
-def _medfilt_merged_oracle() -> str:
-    return (
-        "SELECT 'median' AS variant, user_id, idx, med6 AS v "
-        "FROM (" + _MEDFILT_ORACLE + ") "
-        "UNION ALL "
-        "SELECT 'wiener' AS variant, user_id, idx, "
-        "CAST(wiener_q AS DOUBLE) AS v FROM (" + _WIENER_ORACLE + ")"
-    )
-
-
-def q_medfilt_merged(spark, sf_dir):
-    """Sliding-median + adaptive-Wiener smoothing in ONE variant-tag
-    union — replaces medfilt + wiener at r8 (the wiener branch's
-    quantized BIGINT is cast to DOUBLE on both sides; exact below
-    2^53)."""
-    med = q_medfilt(spark, sf_dir).select(
-        F.lit("median").alias("variant"), "user_id", "idx",
-        F.col("med6").alias("v"),
-    )
-    wie = q_wiener(spark, sf_dir).select(
-        F.lit("wiener").alias("variant"), "user_id", "idx",
-        F.col("wiener_q").cast("double").alias("v"),
-    )
-    return med.unionAll(wie)
-
-
-def _text_stats_merged_oracle() -> str:
-    return (
-        "SELECT 'tokens' AS variant, doc_id, n_tokens, n_chars AS a1, "
-        "n_uniq_tokens AS a2, n_bpe_pieces AS a3, mean_token_len AS f1 "
-        "FROM (" + _TOKEN_STATS_ORACLE + ") "
-        "UNION ALL "
-        "SELECT 'quality' AS variant, doc_id, n_tokens, n_stopwords AS a1, "
-        "CAST(0 AS BIGINT) AS a2, CAST(0 AS BIGINT) AS a3, quality AS f1 "
-        "FROM (" + _TEXT_QUALITY_ORACLE + ")"
-    )
-
-
-def q_text_stats_merged(spark, sf_dir):
-    """token_stats + quality_score in ONE variant-tag union — replaces
-    text_token_stats + text_quality at r8. Every original column
-    survives: tokens packs (n_chars, n_uniq_tokens, n_bpe_pieces,
-    mean_token_len) into (a1, a2, a3, f1); quality packs
-    (n_stopwords, quality) into (a1, f1) with zero padding."""
-    tok = q_text_token_stats(spark, sf_dir).select(
-        F.lit("tokens").alias("variant"), "doc_id", "n_tokens",
-        F.col("n_chars").alias("a1"),
-        F.col("n_uniq_tokens").alias("a2"),
-        F.col("n_bpe_pieces").alias("a3"),
-        F.col("mean_token_len").alias("f1"),
-    )
-    qual = q_text_quality(spark, sf_dir).select(
-        F.lit("quality").alias("variant"), "doc_id", "n_tokens",
-        F.col("n_stopwords").alias("a1"),
-        F.lit(0).cast("bigint").alias("a2"),
-        F.lit(0).cast("bigint").alias("a3"),
-        F.col("quality").alias("f1"),
-    )
-    return tok.unionAll(qual)
-
-
-def _welch_merged_oracle() -> str:
-    return (
-        "SELECT 'hann' AS variant, user_id, idx, power4 "
-        "FROM (" + _welch_oracle() + ") "
-        "UNION ALL "
-        "SELECT 'blackman' AS variant, user_id, idx, power4 "
-        "FROM (" + _welch_oracle("blackman") + ")"
-    )
-
-
-def q_welch_merged(spark, sf_dir):
-    """Welch periodogram, hann + blackman window variants in ONE union
-    — replaces welch + welch_blackman at r9."""
-    hann = q_welch(spark, sf_dir).select(
-        F.lit("hann").alias("variant"), "user_id", "idx", "power4"
-    )
-    bl = q_welch_blackman(spark, sf_dir).select(
-        F.lit("blackman").alias("variant"), "user_id", "idx", "power4"
-    )
-    return hann.unionAll(bl)
-
-
-def _csd_merged_oracle() -> str:
-    return (
-        "SELECT 'csd' AS variant, user_id, idx AS i1, "
-        "CAST(-1 AS BIGINT) AS i2, CAST(re_q AS DOUBLE) AS va, "
-        "CAST(im_q AS DOUBLE) AS vb FROM (" + _csd_oracle() + ") "
-        "UNION ALL "
-        "SELECT 'sgram' AS variant, user_id, frame AS i1, bin AS i2, "
-        "pow4 AS va, 0.0 AS vb FROM (" + _spectrogram_oracle() + ")"
-    )
-
-
-def q_csd_merged(spark, sf_dir):
-    """Cross-spectral density + |STFT|^2 spectrogram in ONE variant-tag
-    union — replaces csd + spectrogram at r9 (i2 = -1 tags the
-    per-bin csd rows; the quantized BIGINTs cast to DOUBLE on both
-    sides, exact below 2^53)."""
-    csd = q_csd(spark, sf_dir).select(
-        F.lit("csd").alias("variant"), "user_id",
-        F.col("idx").alias("i1"), F.lit(-1).cast("bigint").alias("i2"),
-        F.col("re_q").cast("double").alias("va"),
-        F.col("im_q").cast("double").alias("vb"),
-    )
-    sg = q_spectrogram(spark, sf_dir).select(
-        F.lit("sgram").alias("variant"), "user_id",
-        F.col("frame").alias("i1"), F.col("bin").alias("i2"),
-        F.col("pow4").alias("va"), F.lit(0.0).alias("vb"),
-    )
-    return csd.unionAll(sg)
-
-
-def _convolve_family_merged_oracle() -> str:
-    return (
-        "SELECT 'full' AS variant, user_id, idx, conv4 AS v4 "
-        "FROM (" + _FFTCONVOLVE_ORACLE + ") "
-        "UNION ALL "
-        "SELECT 'same' AS variant, user_id, idx, conv4 AS v4 "
-        "FROM (" + _CONVOLVE_ORACLE + ") "
-        "UNION ALL "
-        "SELECT 'xcorr' AS variant, user_id, idx, corr4 AS v4 "
-        "FROM (" + _CORRELATE_ORACLE + ")"
-    )
-
-
-def q_convolve_family_merged(spark, sf_dir):
-    """Self-convolution (full + same modes) + self cross-correlation in
-    ONE variant-tag union."""
-    full = q_fftconvolve(spark, sf_dir).select(
-        F.lit("full").alias("variant"), "user_id", "idx",
-        F.col("conv4").alias("v4"),
-    )
-    same = q_convolve(spark, sf_dir).select(
-        F.lit("same").alias("variant"), "user_id", "idx",
-        F.col("conv4").alias("v4"),
-    )
-    xc = q_correlate(spark, sf_dir).select(
-        F.lit("xcorr").alias("variant"), "user_id", "idx",
-        F.col("corr4").alias("v4"),
-    )
-    return full.unionAll(same).unionAll(xc)
-
-
-def _hilbert_merged_oracle() -> str:
-    return (
-        "SELECT 'analytic' AS variant, user_id, idx, re4 AS va, im4 AS vb "
-        "FROM (" + _HILBERT_ORACLE + ") "
-        "UNION ALL "
-        "SELECT 'envelope' AS variant, user_id, idx, env4 AS va, 0.0 AS vb "
-        "FROM (" + _HILBERT_ENVELOPE_ORACLE + ")"
-    )
-
-
-def q_hilbert_merged(spark, sf_dir):
-    """Analytic signal + its envelope in ONE variant-tag union."""
-    an = q_hilbert(spark, sf_dir).select(
-        F.lit("analytic").alias("variant"), "user_id", "idx",
-        F.col("re4").alias("va"), F.col("im4").alias("vb"),
-    )
-    env = q_hilbert_envelope(spark, sf_dir).select(
-        F.lit("envelope").alias("variant"), "user_id", "idx",
-        F.col("env4").alias("va"), F.lit(0.0).alias("vb"),
-    )
-    return an.unionAll(env)
-
-
-def _lfilter_merged_oracle() -> str:
-    return (
-        "SELECT 'causal' AS variant, user_id, idx, value4 "
-        "FROM (" + _LFILTER_ORACLE + ") "
-        "UNION ALL "
-        "SELECT 'zerophase' AS variant, user_id, idx, value4 "
-        "FROM (" + _FILTFILT_ORACLE + ")"
-    )
-
-
-def q_lfilter_merged(spark, sf_dir):
-    """Causal (b, a) lfilter + zero-phase filtfilt in ONE variant-tag
-    union — replaces lfilter + filtfilt at r10."""
-    ca = q_lfilter(spark, sf_dir).select(
-        F.lit("causal").alias("variant"), "user_id", "idx", "value4"
-    )
-    zp = q_filtfilt(spark, sf_dir).select(
-        F.lit("zerophase").alias("variant"), "user_id", "idx", "value4"
-    )
-    return ca.unionAll(zp)
-
-
-def _ann_merged_oracle() -> str:
-    return (
-        "SELECT 'exact' AS variant, query_id, rank, neighbor_id, cos_sim "
-        "FROM (" + _ANN_COSINE_TOPK_ORACLE + ") "
-        "UNION ALL "
-        "SELECT 'lsh' AS variant, query_id, rank, neighbor_id, cos_sim "
-        "FROM (" + _lsh_topk_oracle() + ")"
-    )
-
-
-def q_ann_merged(spark, sf_dir):
-    """Exact brute-force cosine top-k + multiprobe SRP-LSH top-k in
-    ONE variant-tag union (ivf/kmeans have their own union —
-    different cell structures)."""
-    ex = q_ann_cosine_topk(spark, sf_dir).select(
-        F.lit("exact").alias("variant"), "query_id", "rank",
-        "neighbor_id", "cos_sim",
-    )
-    lsh = q_ann_cosine_topk_lsh(spark, sf_dir).select(
-        F.lit("lsh").alias("variant"), "query_id", "rank",
-        "neighbor_id", "cos_sim",
-    )
-    return ex.unionAll(lsh)
-
-
-def _dataset_merged_oracle() -> str:
-    return (
-        "SELECT 'split' AS variant, split AS k1, lang, n, "
-        "CAST(0 AS BIGINT) AS min_id, CAST(0 AS BIGINT) AS max_id, "
-        "CAST(0 AS BIGINT) AS sum_id FROM (" + _DATASET_SPLIT_ORACLE + ") "
-        "UNION ALL "
-        "SELECT 'stratified' AS variant, '' AS k1, lang, n, min_id, "
-        "max_id, sum_id FROM (" + _DATASET_STRATIFIED_ORACLE + ")"
-    )
-
-
-def q_dataset_merged(spark, sf_dir):
-    """Deterministic split assignment + per-stratum exact-by-id
-    subsample in ONE variant-tag union — replaces dataset_split +
-    dataset_stratified at r10."""
-    sp = q_dataset_split(spark, sf_dir).select(
-        F.lit("split").alias("variant"), F.col("split").alias("k1"),
-        "lang", "n",
-        F.lit(0).cast("bigint").alias("min_id"),
-        F.lit(0).cast("bigint").alias("max_id"),
-        F.lit(0).cast("bigint").alias("sum_id"),
-    )
-    st = q_dataset_stratified(spark, sf_dir).select(
-        F.lit("stratified").alias("variant"), F.lit("").alias("k1"),
-        "lang", "n", "min_id", "max_id", "sum_id",
-    )
-    return sp.unionAll(st)
-
-
-def _istft_merged_oracle() -> str:
-    # both reconstruction strategies share ONE oracle (the original
-    # series on covered positions) — the union just tags it twice
-    base = (
-        f"WITH {_S} "
-        "SELECT user_id, j AS t, round(x, 4) + 0.0 AS val4 "
-        f"FROM s WHERE n >= {_STFT_FL} AND j >= 1 "
-        f"AND j <= ((n - {_STFT_FL}) // {_STFT_HOP}) * {_STFT_HOP} + {_STFT_FL - 1}"
-    )
-    return (
-        "SELECT 'fused' AS variant, user_id, t, val4 FROM (" + base + ") "
-        "UNION ALL "
-        "SELECT 'native' AS variant, user_id, t, val4 FROM (" + base + ")"
-    )
-
-
-def q_istft_merged(spark, sf_dir):
-    """Both istft reconstruction strategies (fused spectral_apply
-    round-trip + frame-parallel native overlap-add) in ONE variant-tag
-    union — replaces istft_roundtrip + istft_native at r9; each
-    variant must still reproduce the original series."""
-    fused = q_istft_roundtrip(spark, sf_dir).select(
-        F.lit("fused").alias("variant"), "user_id", "t", "val4"
-    )
-    native = q_istft_native(spark, sf_dir).select(
-        F.lit("native").alias("variant"), "user_id", "t", "val4"
-    )
-    return fused.unionAll(native)
-
-
-def _tpch_q1q6_merged_oracle() -> str:
-    return (
-        "SELECT 'q1' AS variant, l_returnflag AS rf, l_linestatus AS ls, "
-        "sum_qty AS m1, sum_base_price AS m2, sum_disc_price AS m3, "
-        "sum_charge AS m4, count_order AS cnt "
-        "FROM (" + _TPCH_Q1_ORACLE + ") "
-        "UNION ALL "
-        "SELECT 'q6' AS variant, '' AS rf, '' AS ls, revenue AS m1, "
-        "0.0 AS m2, 0.0 AS m3, 0.0 AS m4, n AS cnt "
-        "FROM (" + _TPCH_Q6_ORACLE + ")"
-    )
-
-
-def q_tpch_q1q6_merged(spark, sf_dir):
-    """TPC-H Q1 (full-scan decimal rollup) + Q6 (filter-pushdown
-    aggregate) in ONE variant-tag union; both plans stay what their
-    individual plan locks pin (the union is literal)."""
-    q1 = q_tpch_q1(spark, sf_dir).select(
-        F.lit("q1").alias("variant"),
-        F.col("l_returnflag").alias("rf"),
-        F.col("l_linestatus").alias("ls"),
-        F.col("sum_qty").alias("m1"),
-        F.col("sum_base_price").alias("m2"),
-        F.col("sum_disc_price").alias("m3"),
-        F.col("sum_charge").alias("m4"),
-        F.col("count_order").alias("cnt"),
-    )
-    q6 = q_tpch_q6(spark, sf_dir).select(
-        F.lit("q6").alias("variant"),
-        F.lit("").alias("rf"),
-        F.lit("").alias("ls"),
-        F.col("revenue").alias("m1"),
-        F.lit(0.0).alias("m2"),
-        F.lit(0.0).alias("m3"),
-        F.lit(0.0).alias("m4"),
-        F.col("n").alias("cnt"),
-    )
-    return q1.unionAll(q6)
+# Both istft reconstruction strategies share one oracle: the original
+# series on covered positions.
+_ISTFT_ORACLE = (
+    f"WITH {_S} "
+    "SELECT user_id, j AS t, round(x, 4) + 0.0 AS val4 "
+    f"FROM s WHERE n >= {_STFT_FL} AND j >= 1 "
+    f"AND j <= ((n - {_STFT_FL}) // {_STFT_HOP}) * {_STFT_HOP} + {_STFT_FL - 1}"
+)
 
 
 # --- OHLC bars, bloom semi-join, CDC latest ----------------------------------
@@ -5372,35 +4927,18 @@ def q_audio_spectral(spark, sf_dir):
     noise in centroid/bandwidth matches to the quantum."""
     import numpy as _np
     import pandas as _pd
-    import struct as _struct
 
     from xarray_scipy_spark.pipeline.hashes import spread as _spread
 
     n, sr, amp = _ASP_N, _ASP_SR, _ASP_AMP
     docs = _spread(_docs(spark, sf_dir).select("doc_id"), "doc_id")
 
-    def synth(batches):
-        for pdf in batches:
-            payloads = []
-            for d in pdf["doc_id"]:
-                k = 3 + int(d) % 40
-                j = _np.arange(n)
-                pcm = _np.round(
-                    amp * 32767 * _np.sin(2 * _np.pi * k * j / n)
-                ).astype("<i2")
-                raw = pcm.tobytes()
-                hdr = (
-                    b"RIFF"
-                    + _struct.pack("<I", 36 + len(raw))
-                    + b"WAVEfmt "
-                    + _struct.pack("<IHHIIHH", 16, 1, 1, sr, sr * 2, 2, 16)
-                    + b"data"
-                    + _struct.pack("<I", len(raw))
-                )
-                payloads.append(hdr + raw)
-            yield _pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
+    def tone(row):
+        k = 3 + int(row.doc_id) % 40
+        pcm = _np.round(amp * 32767 * _np.sin(2 * _np.pi * k * _np.arange(n) / n))
+        return _wav(pcm.astype("<i2").tobytes(), sr)
 
-    withp = docs.mapInPandas(synth, "doc_id bigint, payload binary")
+    withp = _with_payloads(docs, tone)
 
     def feats(batches):
         from xarray_scipy_spark.pipeline.multimodal import (
@@ -5789,28 +5327,19 @@ def q_multimodal_video_frames(spark, sf_dir):
     through the in-repo baseline-JPEG decoder — the oracle recomputes
     each sampled frame's exact pixel mean from the generating
     formula."""
-    import numpy as _np
-    import pandas as _pd
-
     from xarray_scipy_spark.pipeline.hashes import spread as _spread
+    from xarray_scipy_spark.pipeline.multimodal import encode_avi_mjpeg
 
     docs = _spread(_docs(spark, sf_dir).select("doc_id"), "doc_id")
 
-    def synth(batches):
-        from xarray_scipy_spark.pipeline.multimodal import encode_avi_mjpeg
+    def avi(row):
+        d = int(row.doc_id)
+        frames = range(2 + d % 4)
+        return encode_avi_mjpeg(
+            [np.full((8, 8), (d * 31 + f * 17) % 256, dtype=np.uint8) for f in frames]
+        )
 
-        for pdf in batches:
-            payloads = []
-            for d in pdf["doc_id"]:
-                d = int(d)
-                frames = [
-                    _np.full((8, 8), (d * 31 + f * 17) % 256, dtype=_np.uint8)
-                    for f in range(2 + d % 4)
-                ]
-                payloads.append(encode_avi_mjpeg(frames))
-            yield _pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
-
-    with_payload = docs.mapInPandas(synth, "doc_id bigint, payload binary")
+    with_payload = _with_payloads(docs, avi)
     res = pl.frame_sample(with_payload, every=2, codec="mjpeg")
     return res.select("doc_id", "frame_idx", _r("f0", 4, "f0_4"))
 
@@ -6516,373 +6045,6 @@ def q_interp_to(spark, sf_dir):
 # WINDOW must not scope across UNION branches).
 
 
-def _decimate_merged_oracle() -> str:
-    return (
-        "SELECT 'fir' AS variant, user_id, idx, value4 "
-        "FROM (" + _DECIMATE_FIR_ORACLE + ") "
-        "UNION ALL "
-        "SELECT 'iir_' || variant AS variant, user_id, idx, value4 "
-        "FROM (" + _decimate_iir_merged_oracle() + ")"
-    )
-
-
-def q_decimate_merged(spark, sf_dir):
-    """decimate ftype='fir' + the iir causal/zerophase pair in ONE
-    variant-tag union (both halves of the reference's decimate surface,
-    signal.py:124, stay value-verified in one registry row)."""
-    fir = q_decimate_fir(spark, sf_dir).select(
-        F.lit("fir").alias("variant"), "user_id", "idx", "value4"
-    )
-    iir = q_decimate_iir_merged(spark, sf_dir).select(
-        F.concat(F.lit("iir_"), F.col("variant")).alias("variant"),
-        "user_id",
-        "idx",
-        "value4",
-    )
-    return fir.unionAll(iir)
-
-
-def _resample_merged_oracle() -> str:
-    return (
-        "SELECT 'time' AS variant, user_id, idx, value4 AS va, 0.0 AS vb "
-        "FROM (" + _RESAMPLE_ORACLE + ") "
-        "UNION ALL "
-        "SELECT 'poly' AS variant, user_id, idx, value4 AS va, 0.0 AS vb "
-        "FROM (" + _resample_poly_oracle() + ") "
-        "UNION ALL "
-        "SELECT 'freq' AS variant, user_id, idx, re4 AS va, im4 AS vb "
-        "FROM (" + _RESAMPLE_FREQ_ORACLE + ")"
-    )
-
-
-def q_resample_merged(spark, sf_dir):
-    """resample domain='time' + resample_poly + resample domain='freq'
-    in ONE variant-tag union (vb carries the freq
-    variant's imaginary part; 0.0 where the variant is real-valued)."""
-    t = q_resample(spark, sf_dir).select(
-        F.lit("time").alias("variant"), "user_id", "idx",
-        F.col("value4").alias("va"), F.lit(0.0).alias("vb"),
-    )
-    p = q_resample_poly(spark, sf_dir).select(
-        F.lit("poly").alias("variant"), "user_id", "idx",
-        F.col("value4").alias("va"), F.lit(0.0).alias("vb"),
-    )
-    fr = q_resample_freq(spark, sf_dir).select(
-        F.lit("freq").alias("variant"), "user_id", "idx",
-        F.col("re4").alias("va"), F.col("im4").alias("vb"),
-    )
-    return t.unionAll(p).unionAll(fr)
-
-
-def _sosfilt_family_merged_oracle() -> str:
-    return (
-        "SELECT 'sos' AS variant, user_id, idx, value4 "
-        "FROM (" + _SOSFILT_ORACLE + ") "
-        "UNION ALL "
-        "SELECT 'chunked' AS variant, user_id, idx, value4 "
-        "FROM (" + _SOSFILT_CHUNKED_ORACLE + ") "
-        "UNION ALL "
-        "SELECT 'ff_' || variant AS variant, user_id, idx, value4 "
-        "FROM (" + _sosfiltfilt_merged_oracle() + ")"
-    )
-
-
-def q_sosfilt_family_merged(spark, sf_dir):
-    """sosfilt + the chunked-state-handoff twin + sosfiltfilt
-    (odd/even padtypes) in ONE variant-tag union — replaces sosfilt +
-    sosfilt_chunked + sosfiltfilt at r11, freeing two slots while the
-    whole cascaded-biquad surface stays value-verified."""
-    s = q_sosfilt(spark, sf_dir).select(
-        F.lit("sos").alias("variant"), "user_id", "idx", "value4"
-    )
-    c = q_sosfilt_chunked(spark, sf_dir).select(
-        F.lit("chunked").alias("variant"), "user_id", "idx", "value4"
-    )
-    ff = q_sosfiltfilt_merged(spark, sf_dir).select(
-        F.concat(F.lit("ff_"), F.col("variant")).alias("variant"),
-        "user_id",
-        "idx",
-        "value4",
-    )
-    return s.unionAll(c).unionAll(ff)
-
-
-def _fft_fwd_merged_oracle() -> str:
-    return (
-        "SELECT 'fft' AS variant, user_id, idx, re4 AS va, im4 AS vb "
-        "FROM (" + _FFT_ORACLE + ") "
-        "UNION ALL "
-        "SELECT 'rfft_' || variant AS variant, user_id, idx, "
-        "CAST(re_q AS DOUBLE) AS va, CAST(im_q AS DOUBLE) AS vb "
-        "FROM (" + _rfft_merged_oracle() + ")"
-    )
-
-
-def q_fft_fwd_merged(spark, sf_dir):
-    """Forward fft + the rfft default/(n=64, norm='ortho') pair in ONE
-    variant-tag union — replaces fft + rfft at r11 (the rfft branch's
-    quantized-int columns ride as exact doubles; ints < 2^53 are
-    lossless in float64)."""
-    f_ = q_fft(spark, sf_dir).select(
-        F.lit("fft").alias("variant"), "user_id", "idx",
-        F.col("re4").alias("va"), F.col("im4").alias("vb"),
-    )
-    r_ = q_rfft_merged(spark, sf_dir).select(
-        F.concat(F.lit("rfft_"), F.col("variant")).alias("variant"),
-        "user_id",
-        "idx",
-        F.col("re_q").cast("double").alias("va"),
-        F.col("im_q").cast("double").alias("vb"),
-    )
-    return f_.unionAll(r_)
-
-
-def _peaks_merged_oracle() -> str:
-    return (
-        "SELECT 'width' AS variant, user_id, peak, "
-        "CAST(width_q AS DOUBLE) AS a, CAST(wh_q AS DOUBLE) AS b, "
-        "CAST(lip_q AS DOUBLE) AS c, CAST(rip_q AS DOUBLE) AS d "
-        "FROM (" + _peak_widths_oracle() + ") "
-        "UNION ALL "
-        "SELECT 'peak' AS variant, user_id, peak, "
-        "CAST(index AS DOUBLE) AS a, val4 AS b, 0.0 AS c, 0.0 AS d "
-        "FROM (" + _FIND_PEAKS_ORACLE + ")"
-    )
-
-
-def q_peaks_merged(spark, sf_dir):
-    """peak_widths + find_peaks in ONE variant-tag union (the
-    reference's peak surface, signal.py:346, in one registry row;
-    a/b/c/d carry each variant's original columns as exact doubles)."""
-    w = q_peak_widths(spark, sf_dir).select(
-        F.lit("width").alias("variant"), "user_id", "peak",
-        F.col("width_q").cast("double").alias("a"),
-        F.col("wh_q").cast("double").alias("b"),
-        F.col("lip_q").cast("double").alias("c"),
-        F.col("rip_q").cast("double").alias("d"),
-    )
-    p = q_find_peaks(spark, sf_dir).select(
-        F.lit("peak").alias("variant"), "user_id", "peak",
-        F.col("index").cast("double").alias("a"),
-        F.col("val4").alias("b"),
-        F.lit(0.0).alias("c"),
-        F.lit(0.0).alias("d"),
-    )
-    return w.unionAll(p)
-
-
-def _dedup_pairs_merged_oracle() -> str:
-    return (
-        "SELECT 'minhash' AS variant, a_id, b_id, jaccard AS score "
-        "FROM (" + _minhash_oracle() + ") "
-        "UNION ALL "
-        "SELECT 'simhash' AS variant, a_id, b_id, "
-        "CAST(hamming AS DOUBLE) AS score "
-        "FROM (" + _simhash_oracle() + ") "
-        "UNION ALL "
-        "SELECT 'embedding' AS variant, a_id, b_id, cos_sim AS score "
-        "FROM (" + _DEDUP_EMBEDDING_ORACLE + ")"
-    )
-
-
-def q_dedup_pairs_merged(spark, sf_dir):
-    """The three near-dup pair-emitters (MinHash-LSH Jaccard, SimHash
-    Hamming, blocked embedding cosine) in ONE variant-tag union —
-    replaces dedup_minhash + dedup_simhash + dedup_embedding at r11,
-    freeing two slots; all three bucketed no-all-pairs plans stay
-    value-verified."""
-    mh = q_dedup_minhash(spark, sf_dir).select(
-        F.lit("minhash").alias("variant"), "a_id", "b_id",
-        F.col("jaccard").alias("score"),
-    )
-    sh = q_dedup_simhash(spark, sf_dir).select(
-        F.lit("simhash").alias("variant"), "a_id", "b_id",
-        F.col("hamming").cast("double").alias("score"),
-    )
-    em = q_dedup_embedding(spark, sf_dir).select(
-        F.lit("embedding").alias("variant"), "a_id", "b_id",
-        F.col("cos_sim").alias("score"),
-    )
-    return mh.unionAll(sh).unionAll(em)
-
-
-def _multimodal_tf_merged_oracle() -> str:
-    return (
-        "SELECT 'features' AS variant, doc_id, "
-        "CAST(n_bytes AS BIGINT) AS k, '' AS s, f0, f1, f2, f3 "
-        "FROM (" + _multimodal_oracle() + ") "
-        "UNION ALL "
-        "SELECT 'resize' AS variant, doc_id, "
-        "CAST(n_bytes AS BIGINT) AS k, digest AS s, "
-        "0.0 AS f0, 0.0 AS f1, 0.0 AS f2, 0.0 AS f3 "
-        "FROM (" + _MULTIMODAL_RESIZE_ORACLE + ") "
-        "UNION ALL "
-        "SELECT 'frame' AS variant, doc_id, "
-        "CAST(frame_idx AS BIGINT) AS k, '' AS s, "
-        "f0, 0.0 AS f1, 0.0 AS f2, 0.0 AS f3 "
-        "FROM (" + _MULTIMODAL_FRAME_SAMPLE_ORACLE + ")"
-    )
-
-
-def q_multimodal_tf_merged(spark, sf_dir):
-    """The three pixel-transform stages (feature extraction, resize
-    digest, frame sampling) in ONE variant-tag union — replaces
-    multimodal_features + multimodal_resize + multimodal_frame_sample
-    at r12, freeing two slots (k = n_bytes or frame_idx; s = the
-    resize digest)."""
-    fe = q_multimodal_features(spark, sf_dir).select(
-        F.lit("features").alias("variant"), "doc_id",
-        F.col("n_bytes").cast("bigint").alias("k"),
-        F.lit("").alias("s"), "f0", "f1", "f2", "f3",
-    )
-    rz = q_multimodal_resize(spark, sf_dir).select(
-        F.lit("resize").alias("variant"), "doc_id",
-        F.col("n_bytes").cast("bigint").alias("k"),
-        F.col("digest").alias("s"),
-        F.lit(0.0).alias("f0"), F.lit(0.0).alias("f1"),
-        F.lit(0.0).alias("f2"), F.lit(0.0).alias("f3"),
-    )
-    fs = q_multimodal_frame_sample(spark, sf_dir).select(
-        F.lit("frame").alias("variant"), "doc_id",
-        F.col("frame_idx").cast("bigint").alias("k"),
-        F.lit("").alias("s"), "f0",
-        F.lit(0.0).alias("f1"), F.lit(0.0).alias("f2"),
-        F.lit(0.0).alias("f3"),
-    )
-    return fe.unionAll(rz).unionAll(fs)
-
-
-def _ann_cells_merged_oracle() -> str:
-    return (
-        "SELECT 'ivf' AS variant, query_id, rank, neighbor_id, cos_sim "
-        "FROM (" + _ANN_COSINE_TOPK_IVF_ORACLE + ") "
-        "UNION ALL "
-        "SELECT 'kmeans' AS variant, query_id, rank, neighbor_id, cos_sim "
-        "FROM (" + _kmeans_topk_oracle() + ")"
-    )
-
-
-def q_ann_cells_merged(spark, sf_dir):
-    """The two cell-probed ANN variants (IVF coarse cells, k-means
-    cells) in ONE variant-tag union — replaces ann_cosine_topk_ivf +
-    ann_cosine_topk_kmeans at r12 (identical schemas; both
-    cell-probed-not-all-pairs plans stay value-verified)."""
-    iv = q_ann_cosine_topk_ivf(spark, sf_dir).select(
-        F.lit("ivf").alias("variant"), "query_id", "rank",
-        "neighbor_id", "cos_sim",
-    )
-    km = q_ann_cosine_topk_kmeans(spark, sf_dir).select(
-        F.lit("kmeans").alias("variant"), "query_id", "rank",
-        "neighbor_id", "cos_sim",
-    )
-    return iv.unionAll(km)
-
-
-def _tpch_q3q5_merged_oracle() -> str:
-    return (
-        "SELECT 'q3' AS variant, l_orderkey AS k, o_orderdate AS s, "
-        "revenue, CAST(-1 AS BIGINT) AS n "
-        "FROM (" + _TPCH_Q3_ORACLE + ") "
-        "UNION ALL "
-        "SELECT 'q5' AS variant, CAST(-1 AS BIGINT) AS k, n_name AS s, "
-        "revenue, n "
-        "FROM (" + _TPCH_Q5_ORACLE + ")"
-    )
-
-
-def q_tpch_q3q5_merged(spark, sf_dir):
-    """TPC-H Q3 (3-way join + top-n) and Q5 (6-way broadcast-dim join)
-    in ONE variant-tag union; both join plans stay what their
-    individual plan locks pin (the union is literal)."""
-    q3 = q_tpch_q3(spark, sf_dir).select(
-        F.lit("q3").alias("variant"),
-        F.col("l_orderkey").alias("k"),
-        F.col("o_orderdate").alias("s"),
-        "revenue",
-        F.lit(-1).cast("bigint").alias("n"),
-    )
-    q5 = q_tpch_q5(spark, sf_dir).select(
-        F.lit("q5").alias("variant"),
-        F.lit(-1).cast("bigint").alias("k"),
-        F.col("n_name").alias("s"),
-        "revenue",
-        "n",
-    )
-    return q3.unionAll(q5)
-
-
-def _multimodal_bin_merged_oracle() -> str:
-    return (
-        "SELECT 'audio' AS variant, doc_id, CAST(n_bytes AS BIGINT) AS nb, "
-        "'' AS s, rms6 AS m1, mean6 AS m2, n_frames AS m3, "
-        "sample_rate AS m4 "
-        "FROM (" + _MULTIMODAL_AUDIO_DECODE_ORACLE + ") "
-        "UNION ALL "
-        "SELECT 'gzip' AS variant, doc_id, text_bytes AS nb, "
-        "text_md5 AS s, 0.0 AS m1, 0.0 AS m2, 0.0 AS m3, 0.0 AS m4 "
-        "FROM (" + _MULTIMODAL_GZIP_DECODE_ORACLE + ")"
-    )
-
-
-def q_multimodal_bin_merged(spark, sf_dir):
-    """WAV audio decode + gzip/DEFLATE text decode in ONE variant-tag
-    union — replaces multimodal_audio_decode + multimodal_gzip_decode
-    at r12 (nb = byte count, s = the gzip text digest; the audio
-    branch's four stats ride m1..m4)."""
-    au = q_multimodal_audio_decode(spark, sf_dir).select(
-        F.lit("audio").alias("variant"), "doc_id",
-        F.col("n_bytes").cast("bigint").alias("nb"),
-        F.lit("").alias("s"),
-        F.col("rms6").alias("m1"), F.col("mean6").alias("m2"),
-        F.col("n_frames").alias("m3"), F.col("sample_rate").alias("m4"),
-    )
-    gz = q_multimodal_gzip_decode(spark, sf_dir).select(
-        F.lit("gzip").alias("variant"), "doc_id",
-        F.col("text_bytes").alias("nb"),
-        F.col("text_md5").alias("s"),
-        F.lit(0.0).alias("m1"), F.lit(0.0).alias("m2"),
-        F.lit(0.0).alias("m3"), F.lit(0.0).alias("m4"),
-    )
-    return au.unionAll(gz)
-
-
-def _sketch_state_merged_oracle() -> str:
-    return (
-        "SELECT 'hll' AS variant, rf AS k, CAST(m AS BIGINT) AS a, "
-        "present AS b, zeros AS c, register_sum AS d, rank_checksum AS e "
-        "FROM (" + _hll_oracle() + ") "
-        "UNION ALL "
-        "SELECT 'countmin' AS variant, tok AS k, exact_cnt AS a, "
-        "est AS b, CAST(-1 AS BIGINT) AS c, CAST(-1 AS BIGINT) AS d, "
-        "CAST(-1 AS BIGINT) AS e "
-        "FROM (" + _countmin_oracle() + ")"
-    )
-
-
-def q_sketch_state_merged(spark, sf_dir):
-    """HLL register-state checksums + count-min exact-vs-estimate rows
-    in ONE variant-tag union — replaces sketch_hll + sketch_countmin
-    at r12 (k = the group key / token; a..e carry each sketch's
-    original integer columns, -1-padded). Both byte-exact STATE
-    comparisons survive the merge, so approximation noise still never
-    touches the gate."""
-    hll = q_sketch_hll(spark, sf_dir).select(
-        F.lit("hll").alias("variant"), F.col("rf").alias("k"),
-        F.col("m").cast("bigint").alias("a"),
-        F.col("present").alias("b"), F.col("zeros").alias("c"),
-        F.col("register_sum").alias("d"),
-        F.col("rank_checksum").alias("e"),
-    )
-    cm = q_sketch_countmin(spark, sf_dir).select(
-        F.lit("countmin").alias("variant"), F.col("tok").alias("k"),
-        F.col("exact_cnt").alias("a"), F.col("est").alias("b"),
-        F.lit(-1).cast("bigint").alias("c"),
-        F.lit(-1).cast("bigint").alias("d"),
-        F.lit(-1).cast("bigint").alias("e"),
-    )
-    return hll.unionAll(cm)
-
-
 # --- relational coverage + LLM-pipeline additions ----------------------------
 # Semi-join + having-join TPC-H shapes (Q4/Q18), per-group regression as
 # pure aggregate algebra, triangle counting (the non-iterative graph
@@ -7375,192 +6537,6 @@ def q_json_props_stats(spark, sf_dir):
 # --- variant-family unions with generic -1/0-padded columns ------------------
 
 
-def _dedup_family_merged_oracle() -> str:
-    return (
-        "SELECT 'exact' AS variant, keep_id AS k1, CAST(-1 AS BIGINT) AS k2, "
-        "content_hash AS s, n_copies AS a, CAST(-1 AS BIGINT) AS b, "
-        "CAST(-1 AS BIGINT) AS c, CAST(-1 AS BIGINT) AS d, 0.0 AS x "
-        "FROM (" + _DEDUP_EXACT_ORACLE + ") "
-        "UNION ALL "
-        "SELECT 'jaccard' AS variant, a_id AS k1, b_id AS k2, '' AS s, "
-        "CAST(-1 AS BIGINT) AS a, CAST(-1 AS BIGINT) AS b, "
-        "CAST(-1 AS BIGINT) AS c, CAST(-1 AS BIGINT) AS d, jaccard AS x "
-        "FROM (" + _DEDUP_NGRAM_JACCARD_ORACLE + ") "
-        "UNION ALL "
-        "SELECT 'spans' AS variant, doc_id AS k1, CAST(-1 AS BIGINT) AS k2, "
-        "'' AS s, n_tokens AS a, n_grams AS b, n_dup_grams AS c, "
-        "frac_q AS d, 0.0 AS x "
-        "FROM (" + _dup_ngram_oracle() + ")"
-    )
-
-
-def q_dedup_family_merged(spark, sf_dir):
-    """Exact-hash dedup + n-gram Jaccard pairs + substring-level dup
-    spans in ONE variant-tag union (k1/k2 = ids, s = the content hash,
-    a..d = each variant's integer columns -1-padded, x = the Jaccard
-    score)."""
-    ex = q_dedup_exact(spark, sf_dir).select(
-        F.lit("exact").alias("variant"),
-        F.col("keep_id").alias("k1"),
-        F.lit(-1).cast("bigint").alias("k2"),
-        F.col("content_hash").alias("s"),
-        F.col("n_copies").alias("a"),
-        F.lit(-1).cast("bigint").alias("b"),
-        F.lit(-1).cast("bigint").alias("c"),
-        F.lit(-1).cast("bigint").alias("d"),
-        F.lit(0.0).alias("x"),
-    )
-    ja = q_dedup_ngram_jaccard(spark, sf_dir).select(
-        F.lit("jaccard").alias("variant"),
-        F.col("a_id").alias("k1"),
-        F.col("b_id").alias("k2"),
-        F.lit("").alias("s"),
-        F.lit(-1).cast("bigint").alias("a"),
-        F.lit(-1).cast("bigint").alias("b"),
-        F.lit(-1).cast("bigint").alias("c"),
-        F.lit(-1).cast("bigint").alias("d"),
-        F.col("jaccard").alias("x"),
-    )
-    sp = q_dedup_ngram_spans(spark, sf_dir).select(
-        F.lit("spans").alias("variant"),
-        F.col("doc_id").alias("k1"),
-        F.lit(-1).cast("bigint").alias("k2"),
-        F.lit("").alias("s"),
-        F.col("n_tokens").alias("a"),
-        F.col("n_grams").alias("b"),
-        F.col("n_dup_grams").alias("c"),
-        F.col("frac_q").alias("d"),
-        F.lit(0.0).alias("x"),
-    )
-    return ex.unionAll(ja).unionAll(sp)
-
-
-def _tsstats_merged_oracle() -> str:
-    return (
-        "SELECT 'acf' AS variant, user_id, CAST(lag AS BIGINT) AS i, "
-        "acf_q AS v1, CAST(0 AS BIGINT) AS v2, CAST(0 AS BIGINT) AS v3, "
-        "CAST(-1 AS BIGINT) AS edge "
-        "FROM (" + _acf_oracle() + ") "
-        "UNION ALL "
-        "SELECT 'ewma_' || variant AS variant, user_id, idx AS i, "
-        "ewma_q AS v1, CAST(0 AS BIGINT) AS v2, CAST(0 AS BIGINT) AS v3, "
-        "CAST(-1 AS BIGINT) AS edge "
-        "FROM (" + _ewma_oracle() + ") "
-        "UNION ALL "
-        "SELECT 'seasonal' AS variant, user_id, idx AS i, "
-        "seasonal_q AS v1, trend_q AS v2, resid_q AS v3, "
-        "CAST(edge AS BIGINT) AS edge "
-        "FROM (" + _seasonal_oracle() + ")"
-    )
-
-
-def q_tsstats_merged(spark, sf_dir):
-    """acf + ewma (both adjust modes) + seasonal_decompose in ONE
-    variant-tag union — replaces all three at r13, freeing two slots;
-    the time-series-statistics block stays value-verified (i = lag or
-    idx; v1..v3 carry each variant's quantized columns, 0-padded; edge
-    = the seasonal edge flag, -1 elsewhere)."""
-    ac = q_acf(spark, sf_dir).select(
-        F.lit("acf").alias("variant"),
-        "user_id",
-        F.col("lag").cast("bigint").alias("i"),
-        F.col("acf_q").alias("v1"),
-        F.lit(0).cast("bigint").alias("v2"),
-        F.lit(0).cast("bigint").alias("v3"),
-        F.lit(-1).cast("bigint").alias("edge"),
-    )
-    ew = q_ewma(spark, sf_dir).select(
-        F.concat(F.lit("ewma_"), F.col("variant")).alias("variant"),
-        "user_id",
-        F.col("idx").alias("i"),
-        F.col("ewma_q").alias("v1"),
-        F.lit(0).cast("bigint").alias("v2"),
-        F.lit(0).cast("bigint").alias("v3"),
-        F.lit(-1).cast("bigint").alias("edge"),
-    )
-    se = q_seasonal_decompose(spark, sf_dir).select(
-        F.lit("seasonal").alias("variant"),
-        "user_id",
-        F.col("idx").alias("i"),
-        F.col("seasonal_q").alias("v1"),
-        F.col("trend_q").alias("v2"),
-        F.col("resid_q").alias("v3"),
-        F.col("edge").cast("bigint").alias("edge"),
-    )
-    return ac.unionAll(ew).unionAll(se)
-
-
-def _temporal_join_merged_oracle() -> str:
-    return (
-        "SELECT 'asof' AS variant, user_id AS k, t, anchor_t AS a, "
-        "anchor_value6 AS x "
-        "FROM (" + _ASOF_JOIN_ORACLE + ") "
-        "UNION ALL "
-        "SELECT 'range' AS variant, o_orderkey AS k, "
-        "CAST(-1 AS BIGINT) AS t, n_shipments AS a, "
-        "CAST(qty_q AS DOUBLE) AS x "
-        "FROM (" + _RANGE_JOIN_ORACLE + ")"
-    )
-
-
-def q_temporal_join_merged(spark, sf_dir):
-    """asof_join + range_join in ONE variant-tag union — replaces both
-    at r13 (the two temporal-join plans — union+ordered-window and
-    chunked equi-join — stay plan-locked individually in
-    tests/test_plans.py; k = the join key, a = anchor_t or the
-    shipment count, x = the anchor value or quantized quantity)."""
-    ao = q_asof_join(spark, sf_dir).select(
-        F.lit("asof").alias("variant"),
-        F.col("user_id").alias("k"),
-        "t",
-        F.col("anchor_t").alias("a"),
-        F.col("anchor_value6").alias("x"),
-    )
-    rj = q_range_join(spark, sf_dir).select(
-        F.lit("range").alias("variant"),
-        F.col("o_orderkey").alias("k"),
-        F.lit(-1).cast("bigint").alias("t"),
-        F.col("n_shipments").alias("a"),
-        F.col("qty_q").cast("double").alias("x"),
-    )
-    return ao.unionAll(rj)
-
-
-def _regularize_merged_oracle() -> str:
-    return (
-        "SELECT 'gf_' || variant AS variant, user_id, t_us, v_q, "
-        "CAST(-1 AS BIGINT) AS bf "
-        "FROM (" + _gapfill_oracle() + ") "
-        "UNION ALL "
-        "SELECT 'interp' AS variant, user_id, t_us, v_q, "
-        "CAST(before_first AS BIGINT) AS bf "
-        "FROM (" + _interp_to_oracle() + ")"
-    )
-
-
-def q_regularize_merged(spark, sf_dir):
-    """gapfill (linear+ffill onto the regular grid) + interp_to
-    (caller-supplied instants) in ONE variant-tag union: the whole
-    irregular→regular surface stays value-verified in one registry row
-    (bf = the before-first flag, -1
-    for the grid variants)."""
-    gf = q_gapfill(spark, sf_dir).select(
-        F.concat(F.lit("gf_"), F.col("variant")).alias("variant"),
-        "user_id",
-        "t_us",
-        "v_q",
-        F.lit(-1).cast("bigint").alias("bf"),
-    )
-    it = q_interp_to(spark, sf_dir).select(
-        F.lit("interp").alias("variant"),
-        "user_id",
-        "t_us",
-        "v_q",
-        F.col("before_first").cast("bigint").alias("bf"),
-    )
-    return gf.unionAll(it)
-
-
 # --- CDC apply, analytics windows, set ops, ANN recall, sampling -------------
 
 _CDC_DELETE = "error"  # event_type acting as the delete tombstone
@@ -7759,495 +6735,6 @@ def q_weighted_sample(spark, sf_dir):
 
 
 # --- variant-family unions ---------------------------------------------------
-
-
-def _fftconv_nd_merged_oracle() -> str:
-    return (
-        "SELECT '2d' AS variant, user_id, row_idx AS i, col_idx AS j, "
-        "val4 AS va, 0.0 AS vb "
-        "FROM (" + _FFTCONVOLVE_2D_ORACLE + ") "
-        "UNION ALL "
-        "SELECT 'complex' AS variant, user_id, idx AS i, "
-        "CAST(-1 AS BIGINT) AS j, re4 AS va, im4 AS vb "
-        "FROM (" + _FFTCONVOLVE_COMPLEX_ORACLE + ")"
-    )
-
-
-def q_fftconv_nd_merged(spark, sf_dir):
-    """N-d grid + complex twin-array fftconvolve in ONE variant-tag
-    union — replaces fftconvolve_2d + fftconvolve_complex at r15 (the
-    convolution family's last two standalone slots)."""
-    d2 = q_fftconvolve_2d(spark, sf_dir).select(
-        F.lit("2d").alias("variant"), "user_id",
-        F.col("row_idx").alias("i"), F.col("col_idx").alias("j"),
-        F.col("val4").alias("va"), F.lit(0.0).alias("vb"),
-    )
-    cx = q_fftconvolve_complex(spark, sf_dir).select(
-        F.lit("complex").alias("variant"), "user_id",
-        F.col("idx").alias("i"), F.lit(-1).cast("bigint").alias("j"),
-        F.col("re4").alias("va"), F.col("im4").alias("vb"),
-    )
-    return d2.unionAll(cx)
-
-
-def _lm_vocab_merged_oracle() -> str:
-    return (
-        "SELECT 'nll' AS variant, doc_id AS k, '' AS s, n_tokens AS a, "
-        "nll_q AS b "
-        "FROM (" + _TEXT_LOGPROB_ORACLE + ") "
-        "UNION ALL "
-        "SELECT 'vocab' AS variant, CAST(-1 AS BIGINT) AS k, token AS s, "
-        "tf AS a, df AS b "
-        "FROM (" + _TEXT_VOCAB_ORACLE + ")"
-    )
-
-
-def q_lm_vocab_merged(spark, sf_dir):
-    """Unigram-LM NLL + corpus vocabulary in ONE variant-tag union —
-    replaces text_logprob + text_vocab at r15 (the LM layer and its
-    vocabulary input share a slot)."""
-    lp = q_text_logprob(spark, sf_dir).select(
-        F.lit("nll").alias("variant"), F.col("doc_id").alias("k"),
-        F.lit("").alias("s"), F.col("n_tokens").alias("a"),
-        F.col("nll_q").alias("b"),
-    )
-    vo = q_text_vocab(spark, sf_dir).select(
-        F.lit("vocab").alias("variant"), F.lit(-1).cast("bigint").alias("k"),
-        F.col("token").alias("s"), F.col("tf").alias("a"),
-        F.col("df").alias("b"),
-    )
-    return lp.unionAll(vo)
-
-
-def _real_decode_merged_oracle() -> str:
-    return (
-        "SELECT 'img' AS variant, doc_id, CAST(n_bytes AS BIGINT) AS k, "
-        "f0_4 AS v1, f1_4 AS v2, f2_4 AS v3, f3 AS v4, f4 AS v5 "
-        "FROM (" + _MULTIMODAL_REAL_DECODE_ORACLE + ") "
-        "UNION ALL "
-        "SELECT 'video' AS variant, doc_id, frame_idx AS k, f0_4 AS v1, "
-        "0.0 AS v2, 0.0 AS v3, 0.0 AS v4, 0.0 AS v5 "
-        "FROM (" + _video_frames_oracle() + ")"
-    )
-
-
-def q_real_decode_merged(spark, sf_dir):
-    """Real image decode features + AVI/MJPEG frame sampling in ONE
-    variant-tag union — replaces multimodal_real_decode +
-    multimodal_video_frames at r15 (k = byte count or frame index)."""
-    im = q_multimodal_real_decode(spark, sf_dir).select(
-        F.lit("img").alias("variant"), "doc_id",
-        F.col("n_bytes").cast("bigint").alias("k"),
-        F.col("f0_4").alias("v1"), F.col("f1_4").alias("v2"),
-        F.col("f2_4").alias("v3"), F.col("f3").alias("v4"),
-        F.col("f4").alias("v5"),
-    )
-    vf = q_multimodal_video_frames(spark, sf_dir).select(
-        F.lit("video").alias("variant"), "doc_id",
-        F.col("frame_idx").alias("k"),
-        F.col("f0_4").alias("v1"), F.lit(0.0).alias("v2"),
-        F.lit(0.0).alias("v3"), F.lit(0.0).alias("v4"),
-        F.lit(0.0).alias("v5"),
-    )
-    return im.unionAll(vf)
-
-
-def _session_family_merged_oracle() -> str:
-    return (
-        "SELECT 'sessions' AS variant, user_id, '' AS s, n_sessions AS a, "
-        "max_session_events AS b "
-        "FROM (" + _SESSIONIZE_ORACLE + ") "
-        "UNION ALL "
-        "SELECT 'dedup' AS variant, user_id, day AS s, "
-        "CAST(-1 AS BIGINT) AS a, CAST(-1 AS BIGINT) AS b "
-        "FROM (" + _STREAM_DEDUP_ORACLE + ")"
-    )
-
-
-def q_session_family_merged(spark, sf_dir):
-    """Gap-based sessionization + streaming dedup's batch twin in ONE
-    variant-tag union — replaces sessionize + stream_dedup at r15."""
-    se = q_sessionize(spark, sf_dir).select(
-        F.lit("sessions").alias("variant"), "user_id",
-        F.lit("").alias("s"),
-        F.col("n_sessions").alias("a"),
-        F.col("max_session_events").alias("b"),
-    )
-    sd = q_stream_dedup(spark, sf_dir).select(
-        F.lit("dedup").alias("variant"), "user_id",
-        F.col("day").alias("s"),
-        F.lit(-1).cast("bigint").alias("a"),
-        F.lit(-1).cast("bigint").alias("b"),
-    )
-    return se.unionAll(sd)
-
-
-def _embedding_merged_oracle() -> str:
-    return (
-        "SELECT 'quant' AS variant, vec_id AS k1, CAST(-1 AS BIGINT) AS k2, "
-        "q0 AS a, q1 AS b, q2 AS c, q3 AS d, sum_q AS e, scale0_6 AS x "
-        "FROM (" + _quantize_oracle() + ") "
-        "UNION ALL "
-        "SELECT 'pca_' || variant AS variant, i AS k1, j AS k2, "
-        "CAST(-1 AS BIGINT) AS a, CAST(-1 AS BIGINT) AS b, "
-        "CAST(-1 AS BIGINT) AS c, CAST(-1 AS BIGINT) AS d, v_q AS e, "
-        "0.0 AS x "
-        "FROM (" + _pca_oracle() + ")"
-    )
-
-
-def q_embedding_merged(spark, sf_dir):
-    """int8 embedding quantization + the PCA invariant query in ONE
-    variant-tag union (the embedding-transform family in one row)."""
-    qu = q_embedding_quantize(spark, sf_dir).select(
-        F.lit("quant").alias("variant"), F.col("vec_id").alias("k1"),
-        F.lit(-1).cast("bigint").alias("k2"),
-        F.col("q0").alias("a"), F.col("q1").alias("b"),
-        F.col("q2").alias("c"), F.col("q3").alias("d"),
-        F.col("sum_q").alias("e"), F.col("scale0_6").alias("x"),
-    )
-    pc = q_embedding_pca(spark, sf_dir).select(
-        F.concat(F.lit("pca_"), F.col("variant")).alias("variant"),
-        F.col("i").alias("k1"), F.col("j").alias("k2"),
-        F.lit(-1).cast("bigint").alias("a"),
-        F.lit(-1).cast("bigint").alias("b"),
-        F.lit(-1).cast("bigint").alias("c"),
-        F.lit(-1).cast("bigint").alias("d"),
-        F.col("v_q").alias("e"), F.lit(0.0).alias("x"),
-    )
-    return qu.unionAll(pc)
-
-
-def _events_merged_oracle() -> str:
-    return (
-        "SELECT 'funnel' AS variant, user_id AS k1, t1_us AS v1, "
-        "t2_us AS v2, t3_us AS v3 "
-        "FROM (" + _funnel_oracle() + ") "
-        "UNION ALL "
-        "SELECT 'retention' AS variant, cohort_period AS k1, "
-        "period_offset AS v1, n_active AS v2, CAST(-1 AS BIGINT) AS v3 "
-        "FROM (" + _retention_oracle() + ")"
-    )
-
-
-def q_events_merged(spark, sf_dir):
-    """Ordered funnel times + retention cohorts in ONE variant-tag
-    union (the event-sequence family in one registry row; k1 = user or
-    cohort, v1..v3 carry each variant's columns -1-padded)."""
-    fu = q_funnel(spark, sf_dir).select(
-        F.lit("funnel").alias("variant"),
-        F.col("user_id").alias("k1"),
-        F.col("t1_us").alias("v1"),
-        F.col("t2_us").alias("v2"),
-        F.col("t3_us").alias("v3"),
-    )
-    re_ = q_retention(spark, sf_dir).select(
-        F.lit("retention").alias("variant"),
-        F.col("cohort_period").alias("k1"),
-        F.col("period_offset").alias("v1"),
-        F.col("n_active").alias("v2"),
-        F.lit(-1).cast("bigint").alias("v3"),
-    )
-    return fu.unionAll(re_)
-
-
-def _tpch_order_merged_oracle() -> str:
-    return (
-        "SELECT 'q4' AS variant, o_orderpriority AS s1, "
-        "CAST(-1 AS BIGINT) AS k1, CAST(-1 AS BIGINT) AS k2, "
-        "CAST(n_orders AS DOUBLE) AS v1, 0.0 AS price "
-        "FROM (" + _tpch_q4_oracle() + ") "
-        "UNION ALL "
-        "SELECT 'q18' AS variant, o_orderdate AS s1, o_orderkey AS k1, "
-        "c_custkey AS k2, sum_qty AS v1, o_totalprice AS price "
-        "FROM (" + _tpch_q18_oracle() + ")"
-    )
-
-
-def q_tpch_order_merged(spark, sf_dir):
-    """TPC-H Q4 (semi-join priority counts) + Q18 (having-join top-100)
-    in ONE variant-tag union; both join plans stay individually plan-locked."""
-    q4 = q_tpch_q4(spark, sf_dir).select(
-        F.lit("q4").alias("variant"),
-        F.col("o_orderpriority").alias("s1"),
-        F.lit(-1).cast("bigint").alias("k1"),
-        F.lit(-1).cast("bigint").alias("k2"),
-        F.col("n_orders").cast("double").alias("v1"),
-        F.lit(0.0).alias("price"),
-    )
-    q18 = q_tpch_q18(spark, sf_dir).select(
-        F.lit("q18").alias("variant"),
-        F.col("o_orderdate").alias("s1"),
-        F.col("o_orderkey").alias("k1"),
-        F.col("c_custkey").alias("k2"),
-        F.col("sum_qty").alias("v1"),
-        F.col("o_totalprice").alias("price"),
-    )
-    return q4.unionAll(q18)
-
-
-def _grouping_sets_merged_oracle() -> str:
-    return (
-        "SELECT 'rollup' AS variant, l_returnflag AS rf, "
-        "l_linestatus AS ls, CAST(-1 AS BIGINT) AS g_rf, "
-        "CAST(-1 AS BIGINT) AS g_ls, n, sum_qty, 0.0 AS sum_price "
-        "FROM (" + _LINEITEM_ROLLUP_ORACLE + ") "
-        "UNION ALL "
-        "SELECT 'cube' AS variant, rf, ls, g_rf, g_ls, n, sum_qty, "
-        "sum_price "
-        "FROM (" + _cube_oracle() + ")"
-    )
-
-
-def q_grouping_sets_merged(spark, sf_dir):
-    """ROLLUP + CUBE (with GROUPING() markers) in ONE variant-tag
-    union; the grouping-sets surface stays value-verified in one row."""
-    ro = q_lineitem_rollup(spark, sf_dir).select(
-        F.lit("rollup").alias("variant"),
-        F.col("l_returnflag").alias("rf"),
-        F.col("l_linestatus").alias("ls"),
-        F.lit(-1).cast("bigint").alias("g_rf"),
-        F.lit(-1).cast("bigint").alias("g_ls"),
-        "n",
-        "sum_qty",
-        F.lit(0.0).alias("sum_price"),
-    )
-    cu = q_cube_revenue(spark, sf_dir).select(
-        F.lit("cube").alias("variant"),
-        "rf",
-        "ls",
-        "g_rf",
-        "g_ls",
-        "n",
-        "sum_qty",
-        "sum_price",
-    )
-    return ro.unionAll(cu)
-
-
-def _framed_spectral_merged_oracle() -> str:
-    return (
-        "SELECT 'stft' AS variant, user_id, frame AS i, bin AS j, "
-        "re4 AS va, im4 AS vb "
-        "FROM (" + _STFT_ORACLE + ") "
-        "UNION ALL "
-        "SELECT 'coherence' AS variant, user_id, idx AS i, "
-        "CAST(-1 AS BIGINT) AS j, coh6 AS va, 0.0 AS vb "
-        "FROM (" + _COHERENCE_ORACLE + ")"
-    )
-
-
-def q_framed_spectral_merged(spark, sf_dir):
-    """STFT frames + two-signal coherence in ONE variant-tag union —
-    replaces stft + coherence at r14 (the framed-spectral family's
-    remaining unmerged members; i/j = frame/bin or idx/-1)."""
-    st = q_stft(spark, sf_dir).select(
-        F.lit("stft").alias("variant"),
-        "user_id",
-        F.col("frame").alias("i"),
-        F.col("bin").alias("j"),
-        F.col("re4").alias("va"),
-        F.col("im4").alias("vb"),
-    )
-    co = q_coherence(spark, sf_dir).select(
-        F.lit("coherence").alias("variant"),
-        "user_id",
-        F.col("idx").alias("i"),
-        F.lit(-1).cast("bigint").alias("j"),
-        F.col("coh6").alias("va"),
-        F.lit(0.0).alias("vb"),
-    )
-    return st.unionAll(co)
-
-
-def _text_wide_merged_oracle() -> str:
-    return (
-        "SELECT 'lang' AS variant, doc_id, score_en AS a, score_de AS b, "
-        "score_fr AS c, score_es AS d, score_zh AS e, n_chars AS f, "
-        "pred_lang AS s1, fingerprint AS s2, 0.0 AS x1, 0.0 AS x2 "
-        "FROM (" + _text_lang_fp_oracle() + ") "
-        "UNION ALL "
-        "SELECT 'tfidf' AS variant, doc_id, rank AS a, "
-        "CAST(-1 AS BIGINT) AS b, CAST(-1 AS BIGINT) AS c, "
-        "CAST(-1 AS BIGINT) AS d, CAST(-1 AS BIGINT) AS e, "
-        "CAST(-1 AS BIGINT) AS f, tok AS s1, '' AS s2, tfidf AS x1, "
-        "0.0 AS x2 "
-        "FROM (" + _TEXT_TFIDF_ORACLE + ") "
-        "UNION ALL "
-        "SELECT 'rep' AS variant, doc_id, n_tokens AS a, "
-        "CAST(-1 AS BIGINT) AS b, CAST(-1 AS BIGINT) AS c, "
-        "CAST(-1 AS BIGINT) AS d, CAST(-1 AS BIGINT) AS e, "
-        "CAST(-1 AS BIGINT) AS f, '' AS s1, '' AS s2, dupfrac6 AS x1, "
-        "topbi6 AS x2 "
-        "FROM (" + _TEXT_REPETITION_ORACLE + ")"
-    )
-
-
-def q_text_wide_merged(spark, sf_dir):
-    """Language-ID+fingerprint + per-doc TF-IDF top tokens + repetition
-    stats in ONE variant-tag union — replaces text_lang_id +
-    text_tfidf + text_repetition at r14, freeing two slots (a..f carry
-    the integer columns -1-padded, s1/s2 the strings, x1/x2 the
-    doubles)."""
-    la = q_text_lang_fp(spark, sf_dir).select(
-        F.lit("lang").alias("variant"),
-        "doc_id",
-        F.col("score_en").alias("a"),
-        F.col("score_de").alias("b"),
-        F.col("score_fr").alias("c"),
-        F.col("score_es").alias("d"),
-        F.col("score_zh").alias("e"),
-        F.col("n_chars").alias("f"),
-        F.col("pred_lang").alias("s1"),
-        F.col("fingerprint").alias("s2"),
-        F.lit(0.0).alias("x1"),
-        F.lit(0.0).alias("x2"),
-    )
-    tf = q_text_tfidf(spark, sf_dir).select(
-        F.lit("tfidf").alias("variant"),
-        "doc_id",
-        F.col("rank").alias("a"),
-        F.lit(-1).cast("bigint").alias("b"),
-        F.lit(-1).cast("bigint").alias("c"),
-        F.lit(-1).cast("bigint").alias("d"),
-        F.lit(-1).cast("bigint").alias("e"),
-        F.lit(-1).cast("bigint").alias("f"),
-        F.col("tok").alias("s1"),
-        F.lit("").alias("s2"),
-        F.col("tfidf").alias("x1"),
-        F.lit(0.0).alias("x2"),
-    )
-    rp = q_text_repetition(spark, sf_dir).select(
-        F.lit("rep").alias("variant"),
-        "doc_id",
-        F.col("n_tokens").alias("a"),
-        F.lit(-1).cast("bigint").alias("b"),
-        F.lit(-1).cast("bigint").alias("c"),
-        F.lit(-1).cast("bigint").alias("d"),
-        F.lit(-1).cast("bigint").alias("e"),
-        F.lit(-1).cast("bigint").alias("f"),
-        F.lit("").alias("s1"),
-        F.lit("").alias("s2"),
-        F.col("dupfrac6").alias("x1"),
-        F.col("topbi6").alias("x2"),
-    )
-    return la.unionAll(tf).unionAll(rp)
-
-
-def _smooth_family_merged_oracle() -> str:
-    return (
-        "SELECT variant, user_id, idx, v6 AS v "
-        "FROM (" + _savgol_merged_oracle() + ") "
-        "UNION ALL "
-        "SELECT 'detrend' AS variant, user_id, idx, "
-        "CAST(resid_q AS DOUBLE) AS v "
-        "FROM (" + _DETREND_ORACLE + ")"
-    )
-
-
-def q_smooth_family_merged(spark, sf_dir):
-    """Savitzky–Golay smooth + deriv + linear detrend in ONE
-    variant-tag union — replaces savgol (already the r8 sg pair) +
-    detrend at r16 (the local-smoothing/trend-removal family in one
-    slot)."""
-    sg = q_savgol_merged(spark, sf_dir).select(
-        "variant", "user_id", "idx", F.col("v6").alias("v")
-    )
-    dt = q_detrend(spark, sf_dir).select(
-        F.lit("detrend").alias("variant"), "user_id", "idx",
-        F.col("resid_q").cast("double").alias("v"),
-    )
-    return sg.unionAll(dt)
-
-
-def _wavelet_spectrum_merged_oracle() -> str:
-    return (
-        "SELECT 'cwt' AS variant, user_id, idx, value4 AS v "
-        "FROM (" + _cwt_oracle() + ") "
-        "UNION ALL "
-        "SELECT 'pgram' AS variant, user_id, idx, "
-        "CAST(power_q AS DOUBLE) AS v "
-        "FROM (" + _PERIODOGRAM_ORACLE + ")"
-    )
-
-
-def q_wavelet_spectrum_merged(spark, sf_dir):
-    """Ricker CWT + boxcar periodogram in ONE variant-tag union —
-    replaces cwt_ricker + periodogram at r16 (both are per-(user,idx)
-    spectral decompositions of the same regular series)."""
-    cw = q_cwt_ricker(spark, sf_dir).select(
-        F.lit("cwt").alias("variant"), "user_id", "idx",
-        F.col("value4").alias("v"),
-    )
-    pg = q_periodogram(spark, sf_dir).select(
-        F.lit("pgram").alias("variant"), "user_id", "idx",
-        F.col("power_q").cast("double").alias("v"),
-    )
-    return cw.unionAll(pg)
-
-
-def _freqest_merged_oracle() -> str:
-    return (
-        "SELECT 'lomb' AS variant, user_id, idx, "
-        "CAST(power_q AS DOUBLE) AS v "
-        "FROM (" + _lombscargle_oracle() + ") "
-        "UNION ALL "
-        "SELECT 'domfreq' AS variant, user_id, peak_bin AS idx, "
-        "peak_mag3 AS v "
-        "FROM (" + _DOMINANT_FREQUENCY_ORACLE + ")"
-    )
-
-
-def q_freqest_merged(spark, sf_dir):
-    """Lomb–Scargle (irregular series) + dominant-frequency argmax
-    (regular series) in ONE variant-tag union (the frequency-estimation
-    family)."""
-    lo = q_lombscargle(spark, sf_dir).select(
-        F.lit("lomb").alias("variant"), "user_id", "idx",
-        F.col("power_q").cast("double").alias("v"),
-    )
-    dfq = q_dominant_frequency(spark, sf_dir).select(
-        F.lit("domfreq").alias("variant"), "user_id",
-        F.col("peak_bin").alias("idx"), F.col("peak_mag3").alias("v"),
-    )
-    return lo.unionAll(dfq)
-
-
-def _live_streams_merged_oracle() -> str:
-    return (
-        "SELECT 'sosfilt' AS variant, user_id, idx AS k, val4 AS a, "
-        "0.0 AS b, 0.0 AS c, 0.0 AS d, 0.0 AS e "
-        "FROM (" + _SOSFILT_STREAM_ORACLE + ") "
-        "UNION ALL "
-        "SELECT 'windows' AS variant, user_id, window_start AS k, "
-        "CAST(n AS DOUBLE) AS a, CAST(sum_q AS DOUBLE) AS b, "
-        "CAST(avg_q AS DOUBLE) AS c, min4 AS d, max4 AS e "
-        "FROM (" + _STREAM_WINDOW_STATS_LIVE_ORACLE + ")"
-    )
-
-
-def q_live_streams_merged(spark, sf_dir):
-    """The two LIVE Structured-Streaming executions (stateful sosfilt +
-    watermarked windowed stats) in ONE variant-tag union — replaces
-    sosfilt_stream + stream_window_stats_live at r16. Each side still
-    runs its real readStream→memory-sink job before the batch union,
-    so the driver keeps verifying stream-equals-oracle for BOTH
-    stateful-operator classes in one slot."""
-    so = q_sosfilt_stream(spark, sf_dir).select(
-        F.lit("sosfilt").alias("variant"), "user_id",
-        F.col("idx").alias("k"), F.col("val4").alias("a"),
-        F.lit(0.0).alias("b"), F.lit(0.0).alias("c"),
-        F.lit(0.0).alias("d"), F.lit(0.0).alias("e"),
-    )
-    wi = q_stream_window_stats_live(spark, sf_dir).select(
-        F.lit("windows").alias("variant"), "user_id",
-        F.col("window_start").alias("k"),
-        F.col("n").cast("double").alias("a"),
-        F.col("sum_q").cast("double").alias("b"),
-        F.col("avg_q").cast("double").alias("c"),
-        F.col("min4").alias("d"), F.col("max4").alias("e"),
-    )
-    return so.unionAll(wi)
 
 
 # --- TPC-H relational sweep --------------------------------------------------
@@ -9464,456 +7951,6 @@ def q_event_transitions(spark, sf_dir):
 # --- variant-family unions ---------------------------------------------------
 
 
-def _text_surface_merged_oracle() -> str:
-    return (
-        "SELECT variant, doc_id, n_tokens AS m1, a1 AS m2, a2 AS m3, "
-        "a3 AS m4, f1, '' AS s1 "
-        "FROM (" + _text_stats_merged_oracle() + ") "
-        "UNION ALL "
-        "SELECT 'redact' AS variant, doc_id, n_email AS m1, n_ip AS m2, "
-        "n_phone AS m3, CAST(-1 AS BIGINT) AS m4, 0.0 AS f1, "
-        "md5(redacted) AS s1 FROM (" + _redact_oracle() + ") "
-        "UNION ALL "
-        "SELECT 'url' AS variant, doc_id, n_urls AS m1, n_domains AS m2, "
-        "CAST(-1 AS BIGINT) AS m3, CAST(-1 AS BIGINT) AS m4, 0.0 AS f1, "
-        "coalesce(first_domain, '') AS s1 "
-        "FROM (" + _TEXT_URL_STATS_ORACLE + ")"
-    )
-
-
-def q_text_surface_merged(spark, sf_dir):
-    """tokens/quality + PII redaction + URL stats in ONE variant-tag
-    union — replaces text_token_stats + text_redact + text_url_stats
-    at r17 (redacted text pinned via md5, both engines agree)."""
-    a = q_text_stats_merged(spark, sf_dir).select(
-        "variant",
-        "doc_id",
-        F.col("n_tokens").alias("m1"),
-        F.col("a1").alias("m2"),
-        F.col("a2").alias("m3"),
-        F.col("a3").alias("m4"),
-        "f1",
-        F.lit("").alias("s1"),
-    )
-    b = q_text_redact(spark, sf_dir).select(
-        F.lit("redact").alias("variant"),
-        "doc_id",
-        F.col("n_email").alias("m1"),
-        F.col("n_ip").alias("m2"),
-        F.col("n_phone").alias("m3"),
-        F.lit(-1).cast("bigint").alias("m4"),
-        F.lit(0.0).alias("f1"),
-        F.md5(F.col("redacted")).alias("s1"),
-    )
-    c = q_text_url_stats(spark, sf_dir).select(
-        F.lit("url").alias("variant"),
-        "doc_id",
-        F.col("n_urls").alias("m1"),
-        F.col("n_domains").alias("m2"),
-        F.lit(-1).cast("bigint").alias("m3"),
-        F.lit(-1).cast("bigint").alias("m4"),
-        F.lit(0.0).alias("f1"),
-        F.coalesce(F.col("first_domain"), F.lit("")).alias("s1"),
-    )
-    return a.unionAll(b).unionAll(c)
-
-
-def _decontaminate_merged_oracle() -> str:
-    return (
-        "SELECT 'ngram' AS variant, doc_id, n_shared_ngrams AS n, "
-        "contaminated FROM (" + _DECONTAMINATE_ORACLE + ") "
-        "UNION ALL "
-        "SELECT 'bloom' AS variant, doc_id, n_flagged_shingles AS n, "
-        "contaminated FROM (" + _bloom_oracle() + ")"
-    )
-
-
-def q_decontaminate_merged(spark, sf_dir):
-    """Broadcast-shingle + bloom-bits decontamination in ONE
-    variant-tag union — replaces decontaminate + bloom_decontaminate
-    at r17."""
-    a = q_decontaminate(spark, sf_dir).select(
-        F.lit("ngram").alias("variant"),
-        "doc_id",
-        F.col("n_shared_ngrams").alias("n"),
-        "contaminated",
-    )
-    b = q_bloom_decontaminate(spark, sf_dir).select(
-        F.lit("bloom").alias("variant"),
-        "doc_id",
-        F.col("n_flagged_shingles").alias("n"),
-        "contaminated",
-    )
-    return a.unionAll(b)
-
-
-def _inverse_transform_merged_oracle() -> str:
-    return (
-        "SELECT variant, user_id, idx AS i1, CAST(-1 AS BIGINT) AS i2, "
-        "va, vb FROM (" + _fft_family_merged_oracle() + ") "
-        "UNION ALL "
-        "SELECT variant, user_id, i1, i2, v AS va, 0.0 AS vb "
-        "FROM (" + _fftshift_merged_oracle() + ") "
-        "UNION ALL "
-        "SELECT 'istft' AS variant, user_id, t AS i1, "
-        "CAST(-1 AS BIGINT) AS i2, val4 AS va, 0.0 AS vb "
-        "FROM (" + _ISTFT_NATIVE_ORACLE + ")"
-    )
-
-
-def q_inverse_transform_merged(spark, sf_dir):
-    """The inverse/spectral-rearrangement family (ifft 4-variant +
-    fftshift 3-variant + native istft) in ONE variant-tag union."""
-    a = q_fft_family_merged(spark, sf_dir).select(
-        "variant",
-        "user_id",
-        F.col("idx").alias("i1"),
-        F.lit(-1).cast("bigint").alias("i2"),
-        "va",
-        "vb",
-    )
-    b = q_fftshift_merged(spark, sf_dir).select(
-        "variant",
-        "user_id",
-        "i1",
-        "i2",
-        F.col("v").alias("va"),
-        F.lit(0.0).alias("vb"),
-    )
-    c = q_istft_native(spark, sf_dir).select(
-        F.lit("istft").alias("variant"),
-        "user_id",
-        F.col("t").alias("i1"),
-        F.lit(-1).cast("bigint").alias("i2"),
-        F.col("val4").alias("va"),
-        F.lit(0.0).alias("vb"),
-    )
-    return a.unionAll(b).unionAll(c)
-
-
-def _dataset_shape_merged_oracle() -> str:
-    return (
-        "SELECT 'mix' AS variant, source AS k1, n AS n1, min_id AS n2, "
-        "max_id AS n3 FROM (" + _DATASET_MIX_ORACLE + ") "
-        "UNION ALL "
-        "SELECT 'cap' AS variant, CAST(grp AS VARCHAR) AS k1, "
-        "doc_id AS n1, CAST(-1 AS BIGINT) AS n2, CAST(-1 AS BIGINT) AS n3 "
-        "FROM (" + _cap_oracle() + ") "
-        "UNION ALL "
-        "SELECT 'qfilter' AS variant, event_type AS k1, event_id AS n1, "
-        "thr_q AS n2, CAST(-1 AS BIGINT) AS n3 "
-        "FROM (" + _filter_quantile_oracle() + ")"
-    )
-
-
-def q_dataset_shape_merged(spark, sf_dir):
-    """Fixed-rate source mixing + per-group cap + per-group quantile
-    gate in ONE variant-tag union — the dataset-shaping family."""
-    a = q_dataset_mix(spark, sf_dir).select(
-        F.lit("mix").alias("variant"),
-        F.col("source").alias("k1"),
-        F.col("n").alias("n1"),
-        F.col("min_id").alias("n2"),
-        F.col("max_id").alias("n3"),
-    )
-    b = q_cap_per_group(spark, sf_dir).select(
-        F.lit("cap").alias("variant"),
-        F.col("grp").cast("string").alias("k1"),
-        F.col("doc_id").alias("n1"),
-        F.lit(-1).cast("bigint").alias("n2"),
-        F.lit(-1).cast("bigint").alias("n3"),
-    )
-    c = q_filter_by_quantile(spark, sf_dir).select(
-        F.lit("qfilter").alias("variant"),
-        F.col("event_type").alias("k1"),
-        F.col("event_id").alias("n1"),
-        F.col("thr_q").alias("n2"),
-        F.lit(-1).cast("bigint").alias("n3"),
-    )
-    return a.unionAll(b).unionAll(c)
-
-
-def _join_strategy_merged_oracle() -> str:
-    return (
-        "SELECT 'skew' AS variant, event_id AS i1, k AS i2, k_n AS i3, "
-        "k_avg_q AS i4 FROM (" + _skew_join_oracle() + ") "
-        "UNION ALL "
-        "SELECT 'bloom' AS variant, CAST(-1 AS BIGINT) AS i1, k AS i2, "
-        "n_items AS i3, qty_q AS i4 FROM (" + _bloom_semijoin_oracle() + ")"
-    )
-
-
-def q_join_strategy_merged(spark, sf_dir):
-    """Salted skew join + bloom runtime-filter semi-join in ONE
-    variant-tag union — replaces skew_join + bloom_semijoin at r18."""
-    a = q_skew_join(spark, sf_dir).select(
-        F.lit("skew").alias("variant"),
-        F.col("event_id").alias("i1"),
-        F.col("k").alias("i2"),
-        F.col("k_n").alias("i3"),
-        F.col("k_avg_q").alias("i4"),
-    )
-    b = q_bloom_semijoin(spark, sf_dir).select(
-        F.lit("bloom").alias("variant"),
-        F.lit(-1).cast("bigint").alias("i1"),
-        F.col("k").alias("i2"),
-        F.col("n_items").alias("i3"),
-        F.col("qty_q").alias("i4"),
-    )
-    return a.unionAll(b)
-
-
-def _rolling_family_merged_oracle() -> str:
-    return (
-        "SELECT 'stats' AS variant, user_id, t_us, roll_count, "
-        "sum_q AS m1, mean_q AS m2, min_q AS m3, max_q AS m4 "
-        "FROM (" + _rolling_oracle() + ") "
-        "UNION ALL "
-        "SELECT 'median' AS variant, user_id, t_us, roll_count, "
-        "median_q AS m1, CAST(-1 AS BIGINT) AS m2, "
-        "CAST(-1 AS BIGINT) AS m3, CAST(-1 AS BIGINT) AS m4 "
-        "FROM (" + _rolling_median_oracle() + ") "
-        "UNION ALL "
-        "SELECT 'qn' AS variant, user_id, t_us, "
-        "CAST(-1 AS BIGINT) AS roll_count, qn_mille AS m1, "
-        "CAST(-1 AS BIGINT) AS m2, CAST(-1 AS BIGINT) AS m3, "
-        "CAST(-1 AS BIGINT) AS m4 "
-        "FROM (" + _qnorm_oracle() + ")"
-    )
-
-
-def q_rolling_family_merged(spark, sf_dir):
-    """Rolling moment stats + rolling median + per-group
-    rank-uniformization in ONE variant-tag union (the
-    ordered-window-per-user family; all three plans stay literal union
-    branches)."""
-    a = q_rolling_stats(spark, sf_dir).select(
-        F.lit("stats").alias("variant"),
-        "user_id",
-        "t_us",
-        "roll_count",
-        F.col("sum_q").alias("m1"),
-        F.col("mean_q").alias("m2"),
-        F.col("min_q").alias("m3"),
-        F.col("max_q").alias("m4"),
-    )
-    b = q_rolling_median(spark, sf_dir).select(
-        F.lit("median").alias("variant"),
-        "user_id",
-        "t_us",
-        "roll_count",
-        F.col("median_q").alias("m1"),
-        F.lit(-1).cast("bigint").alias("m2"),
-        F.lit(-1).cast("bigint").alias("m3"),
-        F.lit(-1).cast("bigint").alias("m4"),
-    )
-    c = q_quantile_normalize(spark, sf_dir).select(
-        F.lit("qn").alias("variant"),
-        "user_id",
-        "t_us",
-        F.lit(-1).cast("bigint").alias("roll_count"),
-        F.col("qn_mille").alias("m1"),
-        F.lit(-1).cast("bigint").alias("m2"),
-        F.lit(-1).cast("bigint").alias("m3"),
-        F.lit(-1).cast("bigint").alias("m4"),
-    )
-    return a.unionAll(b).unionAll(c)
-
-
-def _quantile_family_merged_oracle() -> str:
-    return (
-        "SELECT 'gq' AS variant, user_id, q_mille AS i1, v_q AS i2 "
-        "FROM (" + _group_quantiles_oracle() + ") "
-        "UNION ALL "
-        "SELECT 'qn' AS variant, user_id, t_us AS i1, qn_mille AS i2 "
-        "FROM (" + _qnorm_oracle() + ") "
-        "UNION ALL "
-        "SELECT 'wz' AS variant, user_id, t_us AS i1, w_q AS i2 "
-        "FROM (" + _winsorize_oracle() + ")"
-    )
-
-
-def q_quantile_family_merged(spark, sf_dir):
-    """Per-group quantiles + rank-uniformization + winsorize in ONE
-    variant-tag union — replaces group_quantiles + quantile_normalize
-    + winsorize at r18 (all r11/r12 slate entries)."""
-    a = q_group_quantiles(spark, sf_dir).select(
-        F.lit("gq").alias("variant"),
-        "user_id",
-        F.col("q_mille").alias("i1"),
-        F.col("v_q").alias("i2"),
-    )
-    b = q_quantile_normalize(spark, sf_dir).select(
-        F.lit("qn").alias("variant"),
-        "user_id",
-        F.col("t_us").alias("i1"),
-        F.col("qn_mille").alias("i2"),
-    )
-    c = q_winsorize(spark, sf_dir).select(
-        F.lit("wz").alias("variant"),
-        "user_id",
-        F.col("t_us").alias("i1"),
-        F.col("w_q").alias("i2"),
-    )
-    return a.unionAll(b).unionAll(c)
-
-
-def _retrieval_merged_oracle() -> str:
-    return (
-        "SELECT 'postings' AS variant, token AS k1, df AS i1, "
-        "tf_total AS i2, max_tf AS i3, top_doc AS i4, postings_sum AS i5 "
-        "FROM (" + _text_postings_oracle() + ") "
-        "UNION ALL "
-        "SELECT 'bm25' AS variant, '' AS k1, doc_id AS i1, n_match AS i2, "
-        "score_q AS i3, CAST(-1 AS BIGINT) AS i4, CAST(-1 AS BIGINT) AS i5 "
-        "FROM (" + _bm25_oracle() + ")"
-    )
-
-
-def q_retrieval_merged(spark, sf_dir):
-    """Inverted-index build + BM25 scoring (the retrieval layer) in
-    ONE variant-tag union — replaces text_postings + bm25_scores at
-    r19 (both r13/r14 slate entries; the merge lands after both have
-    registered)."""
-    a = q_text_postings(spark, sf_dir).select(
-        F.lit("postings").alias("variant"),
-        F.col("token").alias("k1"),
-        F.col("df").cast("bigint").alias("i1"),
-        F.col("tf_total").alias("i2"),
-        F.col("max_tf").cast("bigint").alias("i3"),
-        F.col("top_doc").cast("bigint").alias("i4"),
-        F.col("postings_sum").alias("i5"),
-    )
-    b = q_bm25_scores(spark, sf_dir).select(
-        F.lit("bm25").alias("variant"),
-        F.lit("").alias("k1"),
-        F.col("doc_id").alias("i1"),
-        F.col("n_match").cast("bigint").alias("i2"),
-        F.col("score_q").alias("i3"),
-        F.lit(-1).cast("bigint").alias("i4"),
-        F.lit(-1).cast("bigint").alias("i5"),
-    )
-    return a.unionAll(b)
-
-
-def _tpch_joinfam_merged_oracle() -> str:
-    return (
-        "SELECT 'q7' AS variant, supp_nation AS k1, cust_nation AS k2, "
-        "l_year AS yr, revenue AS f1, 0.0 AS f2, n_rows "
-        "FROM (" + _tpch_q7_oracle() + ") "
-        "UNION ALL "
-        "SELECT 'q8' AS variant, '' AS k1, '' AS k2, o_year AS yr, "
-        "mkt_share AS f1, total_vol AS f2, n_rows "
-        "FROM (" + _tpch_q8_oracle() + ") "
-        "UNION ALL "
-        "SELECT 'q9' AS variant, nation AS k1, '' AS k2, o_year AS yr, "
-        "sum_profit AS f1, 0.0 AS f2, n_rows "
-        "FROM (" + _tpch_q9_oracle() + ")"
-    )
-
-
-def q_tpch_joinfam_merged(spark, sf_dir):
-    """The three 5/6-way-join TPC-H shapes (Q7 volume shipping, Q8
-    market share, Q9 product profit) in ONE variant-tag union —
-    replaces tpch_q7 + tpch_q8 + tpch_q9 at r19 (all registered by
-    r17); each branch keeps its individually plan-locked shape."""
-    a = q_tpch_q7(spark, sf_dir).select(
-        F.lit("q7").alias("variant"),
-        F.col("supp_nation").alias("k1"),
-        F.col("cust_nation").alias("k2"),
-        F.col("l_year").alias("yr"),
-        F.col("revenue").alias("f1"),
-        F.lit(0.0).alias("f2"),
-        "n_rows",
-    )
-    b = q_tpch_q8(spark, sf_dir).select(
-        F.lit("q8").alias("variant"),
-        F.lit("").alias("k1"),
-        F.lit("").alias("k2"),
-        F.col("o_year").alias("yr"),
-        F.col("mkt_share").alias("f1"),
-        F.col("total_vol").alias("f2"),
-        "n_rows",
-    )
-    c = q_tpch_q9(spark, sf_dir).select(
-        F.lit("q9").alias("variant"),
-        F.col("nation").alias("k1"),
-        F.lit("").alias("k2"),
-        F.col("o_year").alias("yr"),
-        F.col("sum_profit").alias("f1"),
-        F.lit(0.0).alias("f2"),
-        "n_rows",
-    )
-    return a.unionAll(b).unionAll(c)
-
-
-def _tpch_onerow_merged_oracle() -> str:
-    return (
-        "SELECT 'q14' AS variant, promo_revenue AS f1, total_revenue AS f2, "
-        "promo_share AS f3, CAST(-1 AS BIGINT) AS n_rows "
-        "FROM (" + _tpch_q14_oracle() + ") "
-        "UNION ALL "
-        "SELECT 'q19' AS variant, revenue AS f1, -1.0 AS f2, -1.0 AS f3, "
-        "n_rows FROM (" + _tpch_q19_oracle() + ")"
-    )
-
-
-def q_tpch_onerow_merged(spark, sf_dir):
-    """The two single-row lineitem⋈part aggregates (Q14 promo share,
-    Q19 disjunctive revenue) in ONE variant-tag union — replaces
-    tpch_q14 + tpch_q19 at r19."""
-    a = q_tpch_q14(spark, sf_dir).select(
-        F.lit("q14").alias("variant"),
-        F.col("promo_revenue").alias("f1"),
-        F.col("total_revenue").alias("f2"),
-        F.col("promo_share").alias("f3"),
-        F.lit(-1).cast("bigint").alias("n_rows"),
-    )
-    b = q_tpch_q19(spark, sf_dir).select(
-        F.lit("q19").alias("variant"),
-        F.col("revenue").alias("f1"),
-        F.lit(-1.0).alias("f2"),
-        F.lit(-1.0).alias("f3"),
-        "n_rows",
-    )
-    return a.unionAll(b)
-
-
-def _curation_family_merged_oracle() -> str:
-    # absorbs the whole clean+url hygiene union (variant/k/n/s), so the
-    # url_canonical_dedup variant keeps an oracle row
-    return (
-        "SELECT 'cur' AS variant, doc_id, quality6 AS f1, "
-        "CAST(-1 AS BIGINT) AS n1, status AS s1 "
-        "FROM (" + _curation_oracle() + ") "
-        "UNION ALL "
-        "SELECT variant, k AS doc_id, 0.0 AS f1, n AS n1, "
-        "s AS s1 FROM (" + _text_hygiene_merged_oracle() + ")"
-    )
-
-
-def q_curation_family_merged(spark, sf_dir):
-    """End-to-end curation verdict + the r11 text-hygiene union
-    (clean_text + url_canonical_dedup) in ONE variant-tag union —
-    replaces curation_report + clean_text at r12; all three plans
-    stay literal union branches."""
-    a = q_curation_report(spark, sf_dir).select(
-        F.lit("cur").alias("variant"),
-        "doc_id",
-        F.col("quality6").alias("f1"),
-        F.lit(-1).cast("bigint").alias("n1"),
-        F.col("status").alias("s1"),
-    )
-    b = q_text_hygiene_merged(spark, sf_dir).select(
-        "variant",
-        F.col("k").alias("doc_id"),
-        F.lit(0.0).alias("f1"),
-        F.col("n").alias("n1"),
-        F.col("s").alias("s1"),
-    )
-    return a.unionAll(b)
-
-
 # --- data-quality layer (pipeline/quality.py) --------------------------------
 
 _PROFILE_COLS = (
@@ -10344,191 +8381,6 @@ def q_frequent_values(spark, sf_dir):
 # --- variant-family unions ---------------------------------------------------
 
 
-def _convolve_xfamily_merged_oracle() -> str:
-    return (
-        "SELECT variant, user_id, idx, v4 AS va, 0.0 AS vb "
-        "FROM (" + _convolve_family_merged_oracle() + ") "
-        "UNION ALL "
-        "SELECT 'valid_' || variant AS variant, user_id, idx, "
-        "v6 AS va, 0.0 AS vb "
-        "FROM (" + _convolve_merged_oracle() + ") "
-        "UNION ALL "
-        "SELECT 'deconv' AS variant, user_id, idx, quot_q AS va, "
-        "rem_q AS vb FROM (" + _deconvolve_oracle() + ")"
-    )
-
-
-def q_convolve_xfamily_merged(spark, sf_dir):
-    """The convolve family: full/same/xcorr (q_convolve_family_merged)
-    + valid-mode convolution + polynomial deconvolution in ONE
-    variant-tag union."""
-    fam = q_convolve_family_merged(spark, sf_dir).select(
-        "variant", "user_id", "idx",
-        F.col("v4").alias("va"), F.lit(0.0).alias("vb"),
-    )
-    # convolve_valid's plan is itself the valid-mode union
-    # (q_convolve_merged: variant, user_id, idx, v6)
-    va = q_convolve_merged(spark, sf_dir).select(
-        F.concat(F.lit("valid_"), F.col("variant")).alias("variant"),
-        "user_id", "idx",
-        F.col("v6").alias("va"), F.lit(0.0).alias("vb"),
-    )
-    de = q_deconvolve(spark, sf_dir).select(
-        F.lit("deconv").alias("variant"), "user_id", "idx",
-        F.col("quot_q").alias("va"), F.col("rem_q").alias("vb"),
-    )
-    return fam.unionAll(va).unionAll(de)
-
-
-def _dedup_pair_family_merged_oracle() -> str:
-    return (
-        "SELECT variant, a_id, b_id, score "
-        "FROM (" + _dedup_pairs_merged_oracle() + ") "
-        "UNION ALL "
-        "SELECT 'cross' AS variant, left_id AS a_id, right_id AS b_id, "
-        "jaccard AS score FROM (" + _minhash_cross_oracle() + ")"
-    )
-
-
-def q_dedup_pair_family_merged(spark, sf_dir):
-    """The three self-corpus pair emitters (minhash/simhash/embedding,
-    q_dedup_pairs_merged) + the cross-corpus incremental LSH join in
-    ONE variant-tag union."""
-    base = q_dedup_pairs_merged(spark, sf_dir)
-    cross = q_dedup_minhash_cross(spark, sf_dir).select(
-        F.lit("cross").alias("variant"),
-        F.col("left_id").alias("a_id"),
-        F.col("right_id").alias("b_id"),
-        F.col("jaccard").alias("score"),
-    )
-    return base.unionAll(cross)
-
-
-def _sketch_family_merged_oracle() -> str:
-    return (
-        "SELECT variant, k, a, b, c, d, e "
-        "FROM (" + _sketch_state_merged_oracle() + ") "
-        "UNION ALL "
-        "SELECT 'regmerge' AS variant, rf AS k, CAST(m AS BIGINT) AS a, "
-        "present AS b, zeros AS c, register_sum AS d, rank_checksum AS e "
-        "FROM (" + _hll_oracle() + ")"
-    )
-
-
-def q_sketch_family_merged(spark, sf_dir):
-    """HLL + count-min state checksums (q_sketch_state_merged) + the
-    shard-merge re-aggregation invariance in ONE variant-tag union."""
-    base = q_sketch_state_merged(spark, sf_dir)
-    mg = q_sketch_hll_merge(spark, sf_dir).select(
-        F.lit("regmerge").alias("variant"),
-        F.col("rf").alias("k"),
-        F.col("m").cast("bigint").alias("a"),
-        F.col("present").alias("b"),
-        F.col("zeros").alias("c"),
-        F.col("register_sum").alias("d"),
-        F.col("rank_checksum").alias("e"),
-    )
-    return base.unionAll(mg)
-
-
-def _tpch_scan_join_merged_oracle() -> str:
-    return (
-        "SELECT variant, rf AS s1, ls AS s2, m1 AS v1, m2 AS v2, "
-        "m3 AS v3, m4 AS v4, cnt "
-        "FROM (" + _tpch_q1q6_merged_oracle() + ") "
-        "UNION ALL "
-        "SELECT variant, CAST(k AS VARCHAR) AS s1, CAST(s AS VARCHAR) "
-        "AS s2, revenue AS v1, 0.0 AS v2, 0.0 AS v3, 0.0 AS v4, "
-        "n AS cnt FROM (" + _tpch_q3q5_merged_oracle() + ")"
-    )
-
-
-def q_tpch_scan_join_merged(spark, sf_dir):
-    """TPC-H Q1+Q6 (scan-bound rollups) + Q3+Q5 (join-bound shapes)
-    in ONE variant-tag union; all four locked plans remain literal
-    union branches."""
-    a = q_tpch_q1q6_merged(spark, sf_dir).select(
-        "variant",
-        F.col("rf").alias("s1"),
-        F.col("ls").alias("s2"),
-        F.col("m1").alias("v1"),
-        F.col("m2").alias("v2"),
-        F.col("m3").alias("v3"),
-        F.col("m4").alias("v4"),
-        "cnt",
-    )
-    b = q_tpch_q3q5_merged(spark, sf_dir).select(
-        "variant",
-        F.col("k").cast("string").alias("s1"),
-        F.col("s").cast("string").alias("s2"),
-        F.col("revenue").alias("v1"),
-        F.lit(0.0).alias("v2"),
-        F.lit(0.0).alias("v3"),
-        F.lit(0.0).alias("v4"),
-        F.col("n").alias("cnt"),
-    )
-    return a.unionAll(b)
-
-
-def _psd_family_merged_oracle() -> str:
-    return (
-        "SELECT 'w_' || variant AS variant, user_id, idx AS i1, "
-        "CAST(-1 AS BIGINT) AS i2, power4 AS va, 0.0 AS vb "
-        "FROM (" + _welch_merged_oracle() + ") "
-        "UNION ALL "
-        "SELECT 'c_' || variant AS variant, user_id, i1, i2, va, vb "
-        "FROM (" + _csd_merged_oracle() + ")"
-    )
-
-
-def q_psd_family_merged(spark, sf_dir):
-    """The Welch power-spectral-density family (hann + blackman
-    windows) + the cross-spectral family (csd + spectrogram) in ONE
-    variant-tag union; all four framed-spectral plans stay literal
-    union branches."""
-    w = q_welch_merged(spark, sf_dir).select(
-        F.concat(F.lit("w_"), F.col("variant")).alias("variant"),
-        "user_id",
-        F.col("idx").alias("i1"),
-        F.lit(-1).cast("bigint").alias("i2"),
-        F.col("power4").alias("va"),
-        F.lit(0.0).alias("vb"),
-    )
-    c = q_csd_merged(spark, sf_dir).select(
-        F.concat(F.lit("c_"), F.col("variant")).alias("variant"),
-        "user_id", "i1", "i2", "va", "vb",
-    )
-    return w.unionAll(c)
-
-
-def _text_hygiene_merged_oracle() -> str:
-    return (
-        "SELECT 'clean' AS variant, doc_id AS k, n_removed AS n, "
-        "clean_md5 AS s FROM (" + _clean_text_oracle() + ") "
-        "UNION ALL "
-        "SELECT 'url' AS variant, keep_id AS k, n_docs AS n, cu AS s "
-        "FROM (" + _url_dedup_oracle() + ")"
-    )
-
-
-def q_text_hygiene_merged(spark, sf_dir):
-    """Text normalization (md5-pinned) + URL canonicalization dedup in
-    ONE variant-tag union."""
-    a = q_clean_text(spark, sf_dir).select(
-        F.lit("clean").alias("variant"),
-        F.col("doc_id").alias("k"),
-        F.col("n_removed").alias("n"),
-        F.col("clean_md5").alias("s"),
-    )
-    b = q_url_canonical_dedup(spark, sf_dir).select(
-        F.lit("url").alias("variant"),
-        F.col("keep_id").alias("k"),
-        F.col("n_docs").alias("n"),
-        F.col("cu").alias("s"),
-    )
-    return a.unionAll(b)
-
-
 # --- DSIR importance weights (pipeline/text.py dsir_weights) ----------------
 
 _DSIR_LAMBDA = 0.5
@@ -10578,73 +8430,621 @@ def q_dsir_weights(spark, sf_dir):
 # the registry: name -> (query, oracle SQL), in driver order
 # ---------------------------------------------------------------------------
 
+# Variant-tag unions that only project leaf queries onto one shared
+# column list: name -> branches, each ``(leaf_query, leaf_oracle, cols)``.
+# ``cols`` is one list of SQL projections that both engines run: Spark
+# as ``leaf_query(...).selectExpr(*cols)``, DuckDB as ``SELECT cols
+# FROM (leaf_oracle)``. A two-item branch ``(name, cols)`` projects the
+# inner ``_UNIONS[name]`` entry. Fillers are typed (``CAST(0 AS DOUBLE)``,
+# not ``0.0``, which both engines parse as DECIMAL) so a filler has the
+# Spark type of the column it fills on both engines.
+_UNIONS = {
+    "fft": (
+        (q_fft, _FFT_ORACLE,
+            ("'fft' AS variant", "user_id", "idx", "re4 AS va", "im4 AS vb")),
+        (q_rfft_merged, _rfft_merged_oracle(),
+            ("'rfft_' || variant AS variant", "user_id", "idx",
+             "CAST(re_q AS DOUBLE) AS va", "CAST(im_q AS DOUBLE) AS vb")),
+    ),
+    "convolve_family": (
+        (q_fftconvolve, _FFTCONVOLVE_ORACLE,
+            ("'full' AS variant", "user_id", "idx", "conv4 AS v4")),
+        (q_convolve, _CONVOLVE_ORACLE,
+            ("'same' AS variant", "user_id", "idx", "conv4 AS v4")),
+        (q_correlate, _CORRELATE_ORACLE,
+            ("'xcorr' AS variant", "user_id", "idx", "corr4 AS v4")),
+    ),
+    "fftconvolve": (
+        ("convolve_family",
+            ("variant", "user_id", "idx", "v4 AS va", "CAST(0 AS DOUBLE) AS vb")),
+        (q_convolve_merged, _convolve_merged_oracle(),
+            ("'valid_' || variant AS variant", "user_id", "idx", "v6 AS va",
+             "CAST(0 AS DOUBLE) AS vb")),
+        (q_deconvolve, _deconvolve_oracle(),
+            ("'deconv' AS variant", "user_id", "idx", "quot_q AS va", "rem_q AS vb")),
+    ),
+    "decimate_fir": (
+        (q_decimate_fir, _DECIMATE_FIR_ORACLE,
+            ("'fir' AS variant", "user_id", "idx", "value4")),
+        (q_decimate_iir_merged, _decimate_iir_merged_oracle(),
+            ("'iir_' || variant AS variant", "user_id", "idx", "value4")),
+    ),
+    "resample": (
+        (q_resample, _RESAMPLE_ORACLE,
+            ("'time' AS variant", "user_id", "idx", "value4 AS va",
+             "CAST(0 AS DOUBLE) AS vb")),
+        (q_resample_poly, _resample_poly_oracle(),
+            ("'poly' AS variant", "user_id", "idx", "value4 AS va",
+             "CAST(0 AS DOUBLE) AS vb")),
+        (q_resample_freq, _RESAMPLE_FREQ_ORACLE,
+            ("'freq' AS variant", "user_id", "idx", "re4 AS va", "im4 AS vb")),
+    ),
+    "stft": (
+        (q_stft, _STFT_ORACLE,
+            ("'stft' AS variant", "user_id", "frame AS i", "bin AS j", "re4 AS va",
+             "im4 AS vb")),
+        (q_coherence, _COHERENCE_ORACLE,
+            ("'coherence' AS variant", "user_id", "idx AS i", "CAST(-1 AS BIGINT) AS j",
+             "coh6 AS va", "CAST(0 AS DOUBLE) AS vb")),
+    ),
+    "istft_roundtrip": (
+        (q_istft_roundtrip, _ISTFT_ORACLE,
+            ("'fused' AS variant", "user_id", "t", "val4")),
+        (q_istft_native, _ISTFT_ORACLE,
+            ("'native' AS variant", "user_id", "t", "val4")),
+    ),
+    "welch_windows": (
+        (q_welch, _welch_oracle(), ("'hann' AS variant", "user_id", "idx", "power4")),
+        (q_welch_blackman, _welch_oracle("blackman"),
+            ("'blackman' AS variant", "user_id", "idx", "power4")),
+    ),
+    "csd": (
+        (q_csd, _csd_oracle(),
+            ("'csd' AS variant", "user_id", "idx AS i1", "CAST(-1 AS BIGINT) AS i2",
+             "CAST(re_q AS DOUBLE) AS va", "CAST(im_q AS DOUBLE) AS vb")),
+        (q_spectrogram, _spectrogram_oracle(),
+            ("'sgram' AS variant", "user_id", "frame AS i1", "bin AS i2", "pow4 AS va",
+             "CAST(0 AS DOUBLE) AS vb")),
+    ),
+    "welch": (
+        ("welch_windows",
+            ("'w_' || variant AS variant", "user_id", "idx AS i1",
+             "CAST(-1 AS BIGINT) AS i2", "power4 AS va", "CAST(0 AS DOUBLE) AS vb")),
+        ("csd", ("'c_' || variant AS variant", "user_id", "i1", "i2", "va", "vb")),
+    ),
+    "cwt_ricker": (
+        (q_cwt_ricker, _cwt_oracle(),
+            ("'cwt' AS variant", "user_id", "idx", "value4 AS v")),
+        (q_periodogram, _PERIODOGRAM_ORACLE,
+            ("'pgram' AS variant", "user_id", "idx", "CAST(power_q AS DOUBLE) AS v")),
+    ),
+    "hilbert": (
+        (q_hilbert, _HILBERT_ORACLE,
+            ("'analytic' AS variant", "user_id", "idx", "re4 AS va", "im4 AS vb")),
+        (q_hilbert_envelope, _HILBERT_ENVELOPE_ORACLE,
+            ("'envelope' AS variant", "user_id", "idx", "env4 AS va",
+             "CAST(0 AS DOUBLE) AS vb")),
+    ),
+    "sosfilt": (
+        (q_sosfilt, _SOSFILT_ORACLE, ("'sos' AS variant", "user_id", "idx", "value4")),
+        (q_sosfilt_chunked, _SOSFILT_CHUNKED_ORACLE,
+            ("'chunked' AS variant", "user_id", "idx", "value4")),
+        (q_sosfiltfilt_merged, _sosfiltfilt_merged_oracle(),
+            ("'ff_' || variant AS variant", "user_id", "idx", "value4")),
+    ),
+    "lfilter": (
+        (q_lfilter, _LFILTER_ORACLE,
+            ("'causal' AS variant", "user_id", "idx", "value4")),
+        (q_filtfilt, _FILTFILT_ORACLE,
+            ("'zerophase' AS variant", "user_id", "idx", "value4")),
+    ),
+    "peak_widths": (
+        (q_peak_widths, _peak_widths_oracle(),
+            ("'width' AS variant", "user_id", "peak", "CAST(width_q AS DOUBLE) AS a",
+             "CAST(wh_q AS DOUBLE) AS b", "CAST(lip_q AS DOUBLE) AS c",
+             "CAST(rip_q AS DOUBLE) AS d")),
+        (q_find_peaks, _FIND_PEAKS_ORACLE,
+            ("'peak' AS variant", "user_id", "peak", "CAST(index AS DOUBLE) AS a",
+             "val4 AS b", "CAST(0 AS DOUBLE) AS c", "CAST(0 AS DOUBLE) AS d")),
+    ),
+    "dedup_exact": (
+        (q_dedup_exact, _DEDUP_EXACT_ORACLE,
+            ("'exact' AS variant", "keep_id AS k1", "CAST(-1 AS BIGINT) AS k2",
+             "content_hash AS s", "n_copies AS a", "CAST(-1 AS BIGINT) AS b",
+             "CAST(-1 AS BIGINT) AS c", "CAST(-1 AS BIGINT) AS d",
+             "CAST(0 AS DOUBLE) AS x")),
+        (q_dedup_ngram_jaccard, _DEDUP_NGRAM_JACCARD_ORACLE,
+            ("'jaccard' AS variant", "a_id AS k1", "b_id AS k2", "'' AS s",
+             "CAST(-1 AS BIGINT) AS a", "CAST(-1 AS BIGINT) AS b",
+             "CAST(-1 AS BIGINT) AS c", "CAST(-1 AS BIGINT) AS d", "jaccard AS x")),
+        (q_dedup_ngram_spans, _dup_ngram_oracle(),
+            ("'spans' AS variant", "doc_id AS k1", "CAST(-1 AS BIGINT) AS k2",
+             "'' AS s", "n_tokens AS a", "n_grams AS b", "n_dup_grams AS c",
+             "frac_q AS d", "CAST(0 AS DOUBLE) AS x")),
+    ),
+    "dedup_pairs": (
+        (q_dedup_minhash, _minhash_oracle(),
+            ("'minhash' AS variant", "a_id", "b_id", "jaccard AS score")),
+        (q_dedup_simhash, _simhash_oracle(),
+            ("'simhash' AS variant", "a_id", "b_id",
+             "CAST(hamming AS DOUBLE) AS score")),
+        (q_dedup_embedding, _DEDUP_EMBEDDING_ORACLE,
+            ("'embedding' AS variant", "a_id", "b_id", "cos_sim AS score")),
+    ),
+    "dedup_minhash": (
+        ("dedup_pairs", ("variant", "a_id", "b_id", "score")),
+        (q_dedup_minhash_cross, _minhash_cross_oracle(),
+            ("'cross' AS variant", "left_id AS a_id", "right_id AS b_id",
+             "jaccard AS score")),
+    ),
+    "ann_cosine_topk": (
+        (q_ann_cosine_topk, _ANN_COSINE_TOPK_ORACLE,
+            ("'exact' AS variant", "query_id", "rank", "neighbor_id", "cos_sim")),
+        (q_ann_cosine_topk_lsh, _lsh_topk_oracle(),
+            ("'lsh' AS variant", "query_id", "rank", "neighbor_id", "cos_sim")),
+    ),
+    "ann_cosine_topk_ivf": (
+        (q_ann_cosine_topk_ivf, _ANN_COSINE_TOPK_IVF_ORACLE,
+            ("'ivf' AS variant", "query_id", "rank", "neighbor_id", "cos_sim")),
+        (q_ann_cosine_topk_kmeans, _kmeans_topk_oracle(),
+            ("'kmeans' AS variant", "query_id", "rank", "neighbor_id", "cos_sim")),
+    ),
+    "text_hygiene": (
+        (q_clean_text, _clean_text_oracle(),
+            ("'clean' AS variant", "doc_id AS k", "n_removed AS n", "clean_md5 AS s")),
+        (q_url_canonical_dedup, _url_dedup_oracle(),
+            ("'url' AS variant", "keep_id AS k", "n_docs AS n", "cu AS s")),
+    ),
+    "curation_report": (
+        (q_curation_report, _curation_oracle(),
+            ("'cur' AS variant", "doc_id", "quality6 AS f1", "CAST(-1 AS BIGINT) AS n1",
+             "status AS s1")),
+        ("text_hygiene",
+            ("variant", "k AS doc_id", "CAST(0 AS DOUBLE) AS f1", "n AS n1",
+             "s AS s1")),
+    ),
+    "embedding_quantize": (
+        (q_embedding_quantize, _quantize_oracle(),
+            ("'quant' AS variant", "vec_id AS k1", "CAST(-1 AS BIGINT) AS k2",
+             "q0 AS a", "q1 AS b", "q2 AS c", "q3 AS d", "sum_q AS e",
+             "scale0_6 AS x")),
+        (q_embedding_pca, _pca_oracle(),
+            ("'pca_' || variant AS variant", "i AS k1", "j AS k2",
+             "CAST(-1 AS BIGINT) AS a", "CAST(-1 AS BIGINT) AS b",
+             "CAST(-1 AS BIGINT) AS c", "CAST(-1 AS BIGINT) AS d", "v_q AS e",
+             "CAST(0 AS DOUBLE) AS x")),
+    ),
+    "dataset_split": (
+        (q_dataset_split, _DATASET_SPLIT_ORACLE,
+            ("'split' AS variant", "split AS k1", "lang", "n",
+             "CAST(0 AS BIGINT) AS min_id", "CAST(0 AS BIGINT) AS max_id",
+             "CAST(0 AS BIGINT) AS sum_id")),
+        (q_dataset_stratified, _DATASET_STRATIFIED_ORACLE,
+            ("'stratified' AS variant", "'' AS k1", "lang", "n", "min_id", "max_id",
+             "sum_id")),
+    ),
+    "dataset_mix": (
+        (q_dataset_mix, _DATASET_MIX_ORACLE,
+            ("'mix' AS variant", "source AS k1", "n AS n1", "min_id AS n2",
+             "max_id AS n3")),
+        (q_cap_per_group, _cap_oracle(),
+            ("'cap' AS variant", "CAST(grp AS STRING) AS k1", "doc_id AS n1",
+             "CAST(-1 AS BIGINT) AS n2", "CAST(-1 AS BIGINT) AS n3")),
+        (q_filter_by_quantile, _filter_quantile_oracle(),
+            ("'qfilter' AS variant", "event_type AS k1", "event_id AS n1",
+             "thr_q AS n2", "CAST(-1 AS BIGINT) AS n3")),
+    ),
+    "decontaminate": (
+        (q_decontaminate, _DECONTAMINATE_ORACLE,
+            ("'ngram' AS variant", "doc_id", "n_shared_ngrams AS n", "contaminated")),
+        (q_bloom_decontaminate, _bloom_oracle(),
+            ("'bloom' AS variant", "doc_id", "n_flagged_shingles AS n",
+             "contaminated")),
+    ),
+    "multimodal_features": (
+        (q_multimodal_features, _multimodal_oracle(),
+            ("'features' AS variant", "doc_id", "CAST(n_bytes AS BIGINT) AS k",
+             "'' AS s", "f0", "f1", "f2", "f3")),
+        (q_multimodal_resize, _MULTIMODAL_RESIZE_ORACLE,
+            ("'resize' AS variant", "doc_id", "CAST(n_bytes AS BIGINT) AS k",
+             "digest AS s", "CAST(0 AS DOUBLE) AS f0", "CAST(0 AS DOUBLE) AS f1",
+             "CAST(0 AS DOUBLE) AS f2", "CAST(0 AS DOUBLE) AS f3")),
+        (q_multimodal_frame_sample, _MULTIMODAL_FRAME_SAMPLE_ORACLE,
+            ("'frame' AS variant", "doc_id", "CAST(frame_idx AS BIGINT) AS k",
+             "'' AS s", "f0", "CAST(0 AS DOUBLE) AS f1", "CAST(0 AS DOUBLE) AS f2",
+             "CAST(0 AS DOUBLE) AS f3")),
+    ),
+    "multimodal_real_decode": (
+        (q_multimodal_real_decode, _MULTIMODAL_REAL_DECODE_ORACLE,
+            ("'img' AS variant", "doc_id", "CAST(n_bytes AS BIGINT) AS k", "f0_4 AS v1",
+             "f1_4 AS v2", "f2_4 AS v3", "f3 AS v4", "f4 AS v5")),
+        (q_multimodal_video_frames, _video_frames_oracle(),
+            ("'video' AS variant", "doc_id", "frame_idx AS k", "f0_4 AS v1",
+             "CAST(0 AS DOUBLE) AS v2", "CAST(0 AS DOUBLE) AS v3",
+             "CAST(0 AS DOUBLE) AS v4", "CAST(0 AS DOUBLE) AS v5")),
+    ),
+    "multimodal_audio_decode": (
+        (q_multimodal_audio_decode, _MULTIMODAL_AUDIO_DECODE_ORACLE,
+            ("'audio' AS variant", "doc_id", "CAST(n_bytes AS BIGINT) AS nb", "'' AS s",
+             "rms6 AS m1", "mean6 AS m2", "n_frames AS m3", "sample_rate AS m4")),
+        (q_multimodal_gzip_decode, _MULTIMODAL_GZIP_DECODE_ORACLE,
+            ("'gzip' AS variant", "doc_id", "text_bytes AS nb", "text_md5 AS s",
+             "CAST(0 AS DOUBLE) AS m1", "CAST(0 AS DOUBLE) AS m2",
+             "CAST(0 AS DOUBLE) AS m3", "CAST(0 AS DOUBLE) AS m4")),
+    ),
+    "tpch_q1q6": (
+        (q_tpch_q1, _TPCH_Q1_ORACLE,
+            ("'q1' AS variant", "l_returnflag AS rf", "l_linestatus AS ls",
+             "sum_qty AS m1", "sum_base_price AS m2", "sum_disc_price AS m3",
+             "sum_charge AS m4", "count_order AS cnt")),
+        (q_tpch_q6, _TPCH_Q6_ORACLE,
+            ("'q6' AS variant", "'' AS rf", "'' AS ls", "revenue AS m1",
+             "CAST(0 AS DOUBLE) AS m2", "CAST(0 AS DOUBLE) AS m3",
+             "CAST(0 AS DOUBLE) AS m4", "n AS cnt")),
+    ),
+    "tpch_q3q5": (
+        (q_tpch_q3, _TPCH_Q3_ORACLE,
+            ("'q3' AS variant", "l_orderkey AS k", "o_orderdate AS s", "revenue",
+             "CAST(-1 AS BIGINT) AS n")),
+        (q_tpch_q5, _TPCH_Q5_ORACLE,
+            ("'q5' AS variant", "CAST(-1 AS BIGINT) AS k", "n_name AS s", "revenue",
+             "n")),
+    ),
+    "tpch_q1": (
+        ("tpch_q1q6",
+            ("variant", "rf AS s1", "ls AS s2", "m1 AS v1", "m2 AS v2", "m3 AS v3",
+             "m4 AS v4", "cnt")),
+        ("tpch_q3q5",
+            ("variant", "CAST(k AS STRING) AS s1", "CAST(s AS STRING) AS s2",
+             "revenue AS v1", "CAST(0 AS DOUBLE) AS v2", "CAST(0 AS DOUBLE) AS v3",
+             "CAST(0 AS DOUBLE) AS v4", "n AS cnt")),
+    ),
+    "sessionize": (
+        (q_sessionize, _SESSIONIZE_ORACLE,
+            ("'sessions' AS variant", "user_id", "'' AS s", "n_sessions AS a",
+             "max_session_events AS b")),
+        (q_stream_dedup, _STREAM_DEDUP_ORACLE,
+            ("'dedup' AS variant", "user_id", "day AS s", "CAST(-1 AS BIGINT) AS a",
+             "CAST(-1 AS BIGINT) AS b")),
+    ),
+    "fftconvolve_2d": (
+        (q_fftconvolve_2d, _FFTCONVOLVE_2D_ORACLE,
+            ("'2d' AS variant", "user_id", "row_idx AS i", "col_idx AS j", "val4 AS va",
+             "CAST(0 AS DOUBLE) AS vb")),
+        (q_fftconvolve_complex, _FFTCONVOLVE_COMPLEX_ORACLE,
+            ("'complex' AS variant", "user_id", "idx AS i", "CAST(-1 AS BIGINT) AS j",
+             "re4 AS va", "im4 AS vb")),
+    ),
+    "lineitem_rollup": (
+        (q_lineitem_rollup, _LINEITEM_ROLLUP_ORACLE,
+            ("'rollup' AS variant", "l_returnflag AS rf", "l_linestatus AS ls",
+             "CAST(-1 AS BIGINT) AS g_rf", "CAST(-1 AS BIGINT) AS g_ls", "n", "sum_qty",
+             "CAST(0 AS DOUBLE) AS sum_price")),
+        (q_cube_revenue, _cube_oracle(),
+            ("'cube' AS variant", "rf", "ls", "g_rf", "g_ls", "n", "sum_qty",
+             "sum_price")),
+    ),
+    "sosfilt_stream": (
+        (q_sosfilt_stream, _SOSFILT_STREAM_ORACLE,
+            ("'sosfilt' AS variant", "user_id", "idx AS k", "val4 AS a",
+             "CAST(0 AS DOUBLE) AS b", "CAST(0 AS DOUBLE) AS c",
+             "CAST(0 AS DOUBLE) AS d", "CAST(0 AS DOUBLE) AS e")),
+        (q_stream_window_stats_live, _STREAM_WINDOW_STATS_LIVE_ORACLE,
+            ("'windows' AS variant", "user_id", "window_start AS k",
+             "CAST(n AS DOUBLE) AS a", "CAST(sum_q AS DOUBLE) AS b",
+             "CAST(avg_q AS DOUBLE) AS c", "min4 AS d", "max4 AS e")),
+    ),
+    "asof_join": (
+        (q_asof_join, _ASOF_JOIN_ORACLE,
+            ("'asof' AS variant", "user_id AS k", "t", "anchor_t AS a",
+             "anchor_value6 AS x")),
+        (q_range_join, _RANGE_JOIN_ORACLE,
+            ("'range' AS variant", "o_orderkey AS k", "CAST(-1 AS BIGINT) AS t",
+             "n_shipments AS a", "CAST(qty_q AS DOUBLE) AS x")),
+    ),
+    "text_logprob": (
+        (q_text_logprob, _TEXT_LOGPROB_ORACLE,
+            ("'nll' AS variant", "doc_id AS k", "'' AS s", "n_tokens AS a",
+             "nll_q AS b")),
+        (q_text_vocab, _TEXT_VOCAB_ORACLE,
+            ("'vocab' AS variant", "CAST(-1 AS BIGINT) AS k", "token AS s", "tf AS a",
+             "df AS b")),
+    ),
+    "text_lang_id": (
+        (q_text_lang_fp, _text_lang_fp_oracle(),
+            ("'lang' AS variant", "doc_id", "score_en AS a", "score_de AS b",
+             "score_fr AS c", "score_es AS d", "score_zh AS e", "n_chars AS f",
+             "pred_lang AS s1", "fingerprint AS s2", "CAST(0 AS DOUBLE) AS x1",
+             "CAST(0 AS DOUBLE) AS x2")),
+        (q_text_tfidf, _TEXT_TFIDF_ORACLE,
+            ("'tfidf' AS variant", "doc_id", "rank AS a", "CAST(-1 AS BIGINT) AS b",
+             "CAST(-1 AS BIGINT) AS c", "CAST(-1 AS BIGINT) AS d",
+             "CAST(-1 AS BIGINT) AS e", "CAST(-1 AS BIGINT) AS f", "tok AS s1",
+             "'' AS s2", "tfidf AS x1", "CAST(0 AS DOUBLE) AS x2")),
+        (q_text_repetition, _TEXT_REPETITION_ORACLE,
+            ("'rep' AS variant", "doc_id", "n_tokens AS a", "CAST(-1 AS BIGINT) AS b",
+             "CAST(-1 AS BIGINT) AS c", "CAST(-1 AS BIGINT) AS d",
+             "CAST(-1 AS BIGINT) AS e", "CAST(-1 AS BIGINT) AS f", "'' AS s1",
+             "'' AS s2", "dupfrac6 AS x1", "topbi6 AS x2")),
+    ),
+    "sketch_state": (
+        (q_sketch_hll, _hll_oracle(),
+            ("'hll' AS variant", "rf AS k", "CAST(m AS BIGINT) AS a", "present AS b",
+             "zeros AS c", "register_sum AS d", "rank_checksum AS e")),
+        (q_sketch_countmin, _countmin_oracle(),
+            ("'countmin' AS variant", "tok AS k", "exact_cnt AS a", "est AS b",
+             "CAST(-1 AS BIGINT) AS c", "CAST(-1 AS BIGINT) AS d",
+             "CAST(-1 AS BIGINT) AS e")),
+    ),
+    "sketch_hll": (
+        ("sketch_state", ("variant", "k", "a", "b", "c", "d", "e")),
+        (q_sketch_hll_merge, _hll_oracle(),
+            ("'regmerge' AS variant", "rf AS k", "CAST(m AS BIGINT) AS a",
+             "present AS b", "zeros AS c", "register_sum AS d", "rank_checksum AS e")),
+    ),
+    "gapfill": (
+        (q_gapfill, _gapfill_oracle(),
+            ("'gf_' || variant AS variant", "user_id", "t_us", "v_q",
+             "CAST(-1 AS BIGINT) AS bf")),
+        (q_interp_to, _interp_to_oracle(),
+            ("'interp' AS variant", "user_id", "t_us", "v_q",
+             "CAST(before_first AS BIGINT) AS bf")),
+    ),
+    "savgol": (
+        (q_savgol_merged, _savgol_merged_oracle(),
+            ("variant", "user_id", "idx", "v6 AS v")),
+        (q_detrend, _DETREND_ORACLE,
+            ("'detrend' AS variant", "user_id", "idx", "CAST(resid_q AS DOUBLE) AS v")),
+    ),
+    "fft_family": (
+        (q_ifft, _IFFT_ORACLE,
+            ("'ifft' AS variant", "user_id", "idx", "re6 AS va", "im6 AS vb")),
+        (q_ihfft, _IHFFT_ORACLE,
+            ("'ihfft' AS variant", "user_id", "idx", "re6 AS va", "im6 AS vb")),
+        (q_irfft, _IRFFT_ORACLE,
+            ("'irfft' AS variant", "user_id", "idx", "value6 AS va",
+             "CAST(0 AS DOUBLE) AS vb")),
+        (q_hfft, _HFFT_ORACLE,
+            ("'hfft' AS variant", "user_id", "idx", "value4 AS va",
+             "CAST(0 AS DOUBLE) AS vb")),
+    ),
+    "fftshift": (
+        (q_fftshift, _FFTSHIFT_ORACLE,
+            ("'shift' AS variant", "user_id", "idx AS i1", "CAST(-1 AS BIGINT) AS i2",
+             "value AS v")),
+        (q_ifftshift, _IFFTSHIFT_ORACLE,
+            ("'ishift' AS variant", "user_id", "idx AS i1", "CAST(-1 AS BIGINT) AS i2",
+             "value AS v")),
+        (q_fftshift_2d, _FFTSHIFT2D_ORACLE,
+            ("'shift2d' AS variant", "user_id", "idx_d1 AS i1", "idx_d2 AS i2",
+             "val4 AS v")),
+    ),
+    "ifft": (
+        ("fft_family",
+            ("variant", "user_id", "idx AS i1", "CAST(-1 AS BIGINT) AS i2", "va",
+             "vb")),
+        ("fftshift",
+            ("variant", "user_id", "i1", "i2", "v AS va", "CAST(0 AS DOUBLE) AS vb")),
+        (q_istft_native, _ISTFT_NATIVE_ORACLE,
+            ("'istft' AS variant", "user_id", "t AS i1", "CAST(-1 AS BIGINT) AS i2",
+             "val4 AS va", "CAST(0 AS DOUBLE) AS vb")),
+    ),
+    "medfilt": (
+        (q_medfilt, _MEDFILT_ORACLE,
+            ("'median' AS variant", "user_id", "idx", "med6 AS v")),
+        (q_wiener, _WIENER_ORACLE,
+            ("'wiener' AS variant", "user_id", "idx", "CAST(wiener_q AS DOUBLE) AS v")),
+    ),
+    "text_stats": (
+        (q_text_token_stats, _TOKEN_STATS_ORACLE,
+            ("'tokens' AS variant", "doc_id", "n_tokens", "n_chars AS a1",
+             "n_uniq_tokens AS a2", "n_bpe_pieces AS a3", "mean_token_len AS f1")),
+        (q_text_quality, _TEXT_QUALITY_ORACLE,
+            ("'quality' AS variant", "doc_id", "n_tokens", "n_stopwords AS a1",
+             "CAST(0 AS BIGINT) AS a2", "CAST(0 AS BIGINT) AS a3", "quality AS f1")),
+    ),
+    "text_token_stats": (
+        ("text_stats",
+            ("variant", "doc_id", "n_tokens AS m1", "a1 AS m2", "a2 AS m3", "a3 AS m4",
+             "f1", "'' AS s1")),
+        (q_text_redact, _redact_oracle(),
+            ("'redact' AS variant", "doc_id", "n_email AS m1", "n_ip AS m2",
+             "n_phone AS m3", "CAST(-1 AS BIGINT) AS m4", "CAST(0 AS DOUBLE) AS f1",
+             "md5(redacted) AS s1")),
+        (q_text_url_stats, _TEXT_URL_STATS_ORACLE,
+            ("'url' AS variant", "doc_id", "n_urls AS m1", "n_domains AS m2",
+             "CAST(-1 AS BIGINT) AS m3", "CAST(-1 AS BIGINT) AS m4",
+             "CAST(0 AS DOUBLE) AS f1", "coalesce(first_domain, '') AS s1")),
+    ),
+    "skew_join": (
+        (q_skew_join, _skew_join_oracle(),
+            ("'skew' AS variant", "event_id AS i1", "k AS i2", "k_n AS i3",
+             "k_avg_q AS i4")),
+        (q_bloom_semijoin, _bloom_semijoin_oracle(),
+            ("'bloom' AS variant", "CAST(-1 AS BIGINT) AS i1", "k AS i2",
+             "n_items AS i3", "qty_q AS i4")),
+    ),
+    "lombscargle": (
+        (q_lombscargle, _lombscargle_oracle(),
+            ("'lomb' AS variant", "user_id", "idx", "CAST(power_q AS DOUBLE) AS v")),
+        (q_dominant_frequency, _DOMINANT_FREQUENCY_ORACLE,
+            ("'domfreq' AS variant", "user_id", "peak_bin AS idx", "peak_mag3 AS v")),
+    ),
+    "acf": (
+        (q_acf, _acf_oracle(),
+            ("'acf' AS variant", "user_id", "CAST(lag AS BIGINT) AS i", "acf_q AS v1",
+             "CAST(0 AS BIGINT) AS v2", "CAST(0 AS BIGINT) AS v3",
+             "CAST(-1 AS BIGINT) AS edge")),
+        (q_ewma, _ewma_oracle(),
+            ("'ewma_' || variant AS variant", "user_id", "idx AS i", "ewma_q AS v1",
+             "CAST(0 AS BIGINT) AS v2", "CAST(0 AS BIGINT) AS v3",
+             "CAST(-1 AS BIGINT) AS edge")),
+        (q_seasonal_decompose, _seasonal_oracle(),
+            ("'seasonal' AS variant", "user_id", "idx AS i", "seasonal_q AS v1",
+             "trend_q AS v2", "resid_q AS v3", "CAST(edge AS BIGINT) AS edge")),
+    ),
+    "rolling_stats": (
+        (q_rolling_stats, _rolling_oracle(),
+            ("'stats' AS variant", "user_id", "t_us", "roll_count", "sum_q AS m1",
+             "mean_q AS m2", "min_q AS m3", "max_q AS m4")),
+        (q_rolling_median, _rolling_median_oracle(),
+            ("'median' AS variant", "user_id", "t_us", "roll_count", "median_q AS m1",
+             "CAST(-1 AS BIGINT) AS m2", "CAST(-1 AS BIGINT) AS m3",
+             "CAST(-1 AS BIGINT) AS m4")),
+        (q_quantile_normalize, _qnorm_oracle(),
+            ("'qn' AS variant", "user_id", "t_us", "CAST(-1 AS BIGINT) AS roll_count",
+             "qn_mille AS m1", "CAST(-1 AS BIGINT) AS m2", "CAST(-1 AS BIGINT) AS m3",
+             "CAST(-1 AS BIGINT) AS m4")),
+    ),
+    "group_quantiles": (
+        (q_group_quantiles, _group_quantiles_oracle(),
+            ("'gq' AS variant", "user_id", "q_mille AS i1", "v_q AS i2")),
+        (q_quantile_normalize, _qnorm_oracle(),
+            ("'qn' AS variant", "user_id", "t_us AS i1", "qn_mille AS i2")),
+        (q_winsorize, _winsorize_oracle(),
+            ("'wz' AS variant", "user_id", "t_us AS i1", "w_q AS i2")),
+    ),
+    "funnel": (
+        (q_funnel, _funnel_oracle(),
+            ("'funnel' AS variant", "user_id AS k1", "t1_us AS v1", "t2_us AS v2",
+             "t3_us AS v3")),
+        (q_retention, _retention_oracle(),
+            ("'retention' AS variant", "cohort_period AS k1", "period_offset AS v1",
+             "n_active AS v2", "CAST(-1 AS BIGINT) AS v3")),
+    ),
+    "tpch_q4": (
+        (q_tpch_q4, _tpch_q4_oracle(),
+            ("'q4' AS variant", "o_orderpriority AS s1", "CAST(-1 AS BIGINT) AS k1",
+             "CAST(-1 AS BIGINT) AS k2", "CAST(n_orders AS DOUBLE) AS v1",
+             "CAST(0 AS DOUBLE) AS price")),
+        (q_tpch_q18, _tpch_q18_oracle(),
+            ("'q18' AS variant", "o_orderdate AS s1", "o_orderkey AS k1",
+             "c_custkey AS k2", "sum_qty AS v1", "o_totalprice AS price")),
+    ),
+    "text_postings": (
+        (q_text_postings, _text_postings_oracle(),
+            ("'postings' AS variant", "token AS k1", "CAST(df AS BIGINT) AS i1",
+             "tf_total AS i2", "CAST(max_tf AS BIGINT) AS i3",
+             "CAST(top_doc AS BIGINT) AS i4", "postings_sum AS i5")),
+        (q_bm25_scores, _bm25_oracle(),
+            ("'bm25' AS variant", "'' AS k1", "doc_id AS i1",
+             "CAST(n_match AS BIGINT) AS i2", "score_q AS i3",
+             "CAST(-1 AS BIGINT) AS i4", "CAST(-1 AS BIGINT) AS i5")),
+    ),
+    "tpch_q7": (
+        (q_tpch_q7, _tpch_q7_oracle(),
+            ("'q7' AS variant", "supp_nation AS k1", "cust_nation AS k2",
+             "l_year AS yr", "revenue AS f1", "CAST(0 AS DOUBLE) AS f2", "n_rows")),
+        (q_tpch_q8, _tpch_q8_oracle(),
+            ("'q8' AS variant", "'' AS k1", "'' AS k2", "o_year AS yr",
+             "mkt_share AS f1", "total_vol AS f2", "n_rows")),
+        (q_tpch_q9, _tpch_q9_oracle(),
+            ("'q9' AS variant", "nation AS k1", "'' AS k2", "o_year AS yr",
+             "sum_profit AS f1", "CAST(0 AS DOUBLE) AS f2", "n_rows")),
+    ),
+    "tpch_q14": (
+        (q_tpch_q14, _tpch_q14_oracle(),
+            ("'q14' AS variant", "promo_revenue AS f1", "total_revenue AS f2",
+             "promo_share AS f3", "CAST(-1 AS BIGINT) AS n_rows")),
+        (q_tpch_q19, _tpch_q19_oracle(),
+            ("'q19' AS variant", "revenue AS f1", "CAST(-1 AS DOUBLE) AS f2",
+             "CAST(-1 AS DOUBLE) AS f3", "n_rows")),
+    ),
+}
+
+
+def _branches(name: str):
+    """``(query, oracle_sql, cols)`` for each branch of ``_UNIONS[name]``,
+    with nested entries resolved to their own union pair."""
+    for *leaf, cols in _UNIONS[name]:
+        if len(leaf) == 1:
+            leaf = _union(leaf[0])
+        yield (*leaf, cols)
+
+
+def _union(name: str):
+    """``_UNIONS[name]`` as a ``(query, oracle_sql)`` registry pair."""
+    branches = list(_branches(name))
+
+    def query(spark, sf_dir):
+        return reduce(
+            DataFrame.unionAll,
+            [q(spark, sf_dir).selectExpr(*cols) for q, _, cols in branches],
+        )
+
+    oracle = " UNION ALL ".join(
+        f"SELECT {', '.join(cols)} FROM ({o})" for _, o, cols in branches
+    )
+    return query, oracle
+
+
 REGISTRY = {
-    "fft": (q_fft_fwd_merged, _fft_fwd_merged_oracle()),
-    "fftconvolve": (q_convolve_xfamily_merged, _convolve_xfamily_merged_oracle()),
-    "decimate_fir": (q_decimate_merged, _decimate_merged_oracle()),
-    "resample": (q_resample_merged, _resample_merged_oracle()),
-    "stft": (q_framed_spectral_merged, _framed_spectral_merged_oracle()),
-    "istft_roundtrip": (q_istft_merged, _istft_merged_oracle()),
-    "welch": (q_psd_family_merged, _psd_family_merged_oracle()),
-    "cwt_ricker": (q_wavelet_spectrum_merged, _wavelet_spectrum_merged_oracle()),
-    "hilbert": (q_hilbert_merged, _hilbert_merged_oracle()),
-    "sosfilt": (q_sosfilt_family_merged, _sosfilt_family_merged_oracle()),
-    "lfilter": (q_lfilter_merged, _lfilter_merged_oracle()),
-    "peak_widths": (q_peaks_merged, _peaks_merged_oracle()),
-    "dedup_exact": (q_dedup_family_merged, _dedup_family_merged_oracle()),
-    "dedup_minhash": (q_dedup_pair_family_merged, _dedup_pair_family_merged_oracle()),
-    "ann_cosine_topk": (q_ann_merged, _ann_merged_oracle()),
-    "ann_cosine_topk_ivf": (q_ann_cells_merged, _ann_cells_merged_oracle()),
-    "curation_report": (q_curation_family_merged, _curation_family_merged_oracle()),
-    "embedding_quantize": (q_embedding_merged, _embedding_merged_oracle()),
-    "dataset_split": (q_dataset_merged, _dataset_merged_oracle()),
-    "dataset_mix": (q_dataset_shape_merged, _dataset_shape_merged_oracle()),
-    "decontaminate": (q_decontaminate_merged, _decontaminate_merged_oracle()),
-    "multimodal_features": (q_multimodal_tf_merged, _multimodal_tf_merged_oracle()),
-    "multimodal_real_decode": (q_real_decode_merged, _real_decode_merged_oracle()),
-    "multimodal_audio_decode": (q_multimodal_bin_merged, _multimodal_bin_merged_oracle()),
-    "tpch_q1": (q_tpch_scan_join_merged, _tpch_scan_join_merged_oracle()),
-    "sessionize": (q_session_family_merged, _session_family_merged_oracle()),
-    "fftconvolve_2d": (q_fftconv_nd_merged, _fftconv_nd_merged_oracle()),
-    "lineitem_rollup": (q_grouping_sets_merged, _grouping_sets_merged_oracle()),
-    "sosfilt_stream": (q_live_streams_merged, _live_streams_merged_oracle()),
-    "asof_join": (q_temporal_join_merged, _temporal_join_merged_oracle()),
+    "fft": _union("fft"),
+    "fftconvolve": _union("fftconvolve"),
+    "decimate_fir": _union("decimate_fir"),
+    "resample": _union("resample"),
+    "stft": _union("stft"),
+    "istft_roundtrip": _union("istft_roundtrip"),
+    "welch": _union("welch"),
+    "cwt_ricker": _union("cwt_ricker"),
+    "hilbert": _union("hilbert"),
+    "sosfilt": _union("sosfilt"),
+    "lfilter": _union("lfilter"),
+    "peak_widths": _union("peak_widths"),
+    "dedup_exact": _union("dedup_exact"),
+    "dedup_minhash": _union("dedup_minhash"),
+    "ann_cosine_topk": _union("ann_cosine_topk"),
+    "ann_cosine_topk_ivf": _union("ann_cosine_topk_ivf"),
+    "curation_report": _union("curation_report"),
+    "embedding_quantize": _union("embedding_quantize"),
+    "dataset_split": _union("dataset_split"),
+    "dataset_mix": _union("dataset_mix"),
+    "decontaminate": _union("decontaminate"),
+    "multimodal_features": _union("multimodal_features"),
+    "multimodal_real_decode": _union("multimodal_real_decode"),
+    "multimodal_audio_decode": _union("multimodal_audio_decode"),
+    "tpch_q1": _union("tpch_q1"),
+    "sessionize": _union("sessionize"),
+    "fftconvolve_2d": _union("fftconvolve_2d"),
+    "lineitem_rollup": _union("lineitem_rollup"),
+    "sosfilt_stream": _union("sosfilt_stream"),
+    "asof_join": _union("asof_join"),
     "dedup_clusters": (q_dedup_clusters, _dedup_clusters_oracle()),
-    "text_logprob": (q_lm_vocab_merged, _lm_vocab_merged_oracle()),
-    "text_lang_id": (q_text_wide_merged, _text_wide_merged_oracle()),
-    "sketch_hll": (q_sketch_family_merged, _sketch_family_merged_oracle()),
-    "gapfill": (q_regularize_merged, _regularize_merged_oracle()),
+    "text_logprob": _union("text_logprob"),
+    "text_lang_id": _union("text_lang_id"),
+    "sketch_hll": _union("sketch_hll"),
+    "gapfill": _union("gapfill"),
     "multimodal_png_decode": (q_multimodal_decode_merged, _multimodal_merged_oracle()),
-    "savgol": (q_smooth_family_merged, _smooth_family_merged_oracle()),
+    "savgol": _union("savgol"),
     "stream_window_stats": (q_windows_merged, _windows_merged_oracle()),
-    "ifft": (q_inverse_transform_merged, _inverse_transform_merged_oracle()),
-    "medfilt": (q_medfilt_merged, _medfilt_merged_oracle()),
-    "text_token_stats": (q_text_surface_merged, _text_surface_merged_oracle()),
-    "skew_join": (q_join_strategy_merged, _join_strategy_merged_oracle()),
+    "ifft": _union("ifft"),
+    "medfilt": _union("medfilt"),
+    "text_token_stats": _union("text_token_stats"),
+    "skew_join": _union("skew_join"),
     "sketch_histogram": (q_sketch_histogram, _histogram_oracle()),
     "text_hash_vectors": (q_text_hash_vectors, _hash_vectors_oracle()),
-    "lombscargle": (q_freqest_merged, _freqest_merged_oracle()),
-    "acf": (q_tsstats_merged, _tsstats_merged_oracle()),
+    "lombscargle": _union("lombscargle"),
+    "acf": _union("acf"),
     "robust_zscore": (q_robust_zscore, _robust_z_oracle()),
     "ohlc_bars": (q_ohlc_bars, _ohlc_oracle()),
     "latest_by_key": (q_latest_by_key, _latest_oracle()),
     "sample_negatives": (q_sample_negatives, _negatives_oracle()),
-    "rolling_stats": (q_rolling_family_merged, _rolling_family_merged_oracle()),
+    "rolling_stats": _union("rolling_stats"),
     "pagerank": (q_pagerank, _pagerank_oracle()),
     "zorder_curve": (q_zorder_curve, _zorder_oracle()),
-    "group_quantiles": (q_quantile_family_merged, _quantile_family_merged_oracle()),
+    "group_quantiles": _union("group_quantiles"),
     "bpe_encode": (q_bpe_encode, _bpe_encode_oracle()),
     "interval_join": (q_interval_join, _interval_join_oracle()),
-    "funnel": (q_events_merged, _events_merged_oracle()),
+    "funnel": _union("funnel"),
     "audio_spectral": (q_audio_spectral, _audio_spectral_oracle()),
     "char_entropy": (q_char_entropy, _char_entropy_oracle()),
     "ngram_counts": (q_ngram_counts, _ngram_counts_oracle()),
     "kfold_weights": (q_kfold_weights, _kfold_weights_oracle()),
-    "tpch_q4": (q_tpch_order_merged, _tpch_order_merged_oracle()),
+    "tpch_q4": _union("tpch_q4"),
     "grouped_ols": (q_grouped_ols, _grouped_ols_oracle()),
     "triangle_count": (q_triangle_count, _triangle_oracle()),
     "sequence_pack": (q_sequence_pack, _sequence_pack_oracle()),
-    "text_postings": (q_retrieval_merged, _retrieval_merged_oracle()),
+    "text_postings": _union("text_postings"),
     "edit_distance_join": (q_edit_distance_join, _edit_join_oracle()),
     "event_pivot": (q_event_pivot, _event_pivot_oracle()),
     "orders_unshipped": (q_orders_unshipped, _orders_unshipped_oracle()),
@@ -10658,9 +9058,9 @@ REGISTRY = {
     "dedup_keep_best": (q_dedup_keep_best, _keep_best_oracle()),
     "key_skew_profile": (q_key_skew_profile, _key_skew_oracle()),
     "dataset_split_safe": (q_dataset_split_safe, _split_safe_oracle()),
-    "tpch_q7": (q_tpch_joinfam_merged, _tpch_joinfam_merged_oracle()),
+    "tpch_q7": _union("tpch_q7"),
     "tpch_q10": (q_tpch_q10, _tpch_q10_oracle()),
-    "tpch_q14": (q_tpch_onerow_merged, _tpch_onerow_merged_oracle()),
+    "tpch_q14": _union("tpch_q14"),
     "tpch_q15": (q_tpch_q15, _tpch_q15_oracle()),
     "tpch_q22": (q_tpch_q22, _tpch_q22_oracle()),
     "tpch_q13": (q_tpch_q13, _tpch_q13_oracle()),

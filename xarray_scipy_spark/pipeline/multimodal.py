@@ -918,6 +918,8 @@ def frame_sample(
     animated-GIF canvases the same way; ``codec="stride"`` keeps
     the fixed-stride fallback for opaque payloads.
 
+    A NULL payload emits no frames.
+
     Scale: explode happens Python-side inside the Arrow batch, so one
     input batch amortizes decode across documents, and the payload
     column is pruned upstream by Catalyst until this operator scans it.
@@ -939,6 +941,8 @@ def frame_sample(
                 fidx: list[int] = []
                 feat: list[float] = []
                 for i, payload in zip(pdf[id_col], pdf[bin_col]):
+                    if payload is None:
+                        continue
                     if codec == "mjpeg":
                         frames = [
                             np.asarray(decode_jpeg(j)[0], dtype=float)
@@ -965,6 +969,8 @@ def frame_sample(
             fidx: list[int] = []
             feat: list[float] = []
             for i, payload in zip(pdf[id_col], pdf[bin_col]):
+                if payload is None:
+                    continue
                 n_frames = len(payload) // frame_bytes
                 for k in range(0, n_frames, every):
                     frame = payload[k * frame_bytes : (k + 1) * frame_bytes]
@@ -990,25 +996,27 @@ def resize_payload(
     truncate/pad body; the Spark contract (schema, batching, digest
     recompute) is identical.
 
-    Output: ``(id_col, payload, n_bytes, digest)``.
+    Output: ``(id_col, payload, n_bytes, digest)``; a NULL payload
+    gives NULL ``payload``, ``n_bytes`` and ``digest``.
     """
     id_type = dict(df.dtypes)[id_col]
     schema = f"{id_col} {id_type}, payload binary, n_bytes int, digest string"
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            out_ids, payloads, digests = [], [], []
-            for i, payload in zip(pdf[id_col], pdf[bin_col]):
-                p = bytes(payload)[:target_bytes].ljust(target_bytes, pad)
-                out_ids.append(i)
-                payloads.append(p)
-                digests.append(hashlib.md5(p).hexdigest())
+            payloads = [
+                None if p is None else bytes(p)[:target_bytes].ljust(target_bytes, pad)
+                for p in pdf[bin_col]
+            ]
             yield pd.DataFrame(
                 {
-                    id_col: out_ids,
+                    id_col: pdf[id_col].values,
                     "payload": payloads,
-                    "n_bytes": [target_bytes] * len(out_ids),
-                    "digest": digests,
+                    "n_bytes": [None if p is None else target_bytes for p in payloads],
+                    "digest": [
+                        None if p is None else hashlib.md5(p).hexdigest()
+                        for p in payloads
+                    ],
                 }
             )
 
@@ -1031,6 +1039,9 @@ def decode_features(
     Output: ``(id_col, n_bytes, f0..f{n-1})``. The declared schema is
     the Spark analog of the reference's ``output_dtypes`` contract
     (``/root/reference/xarray_scipy/signal.py:148``).
+
+    A NULL payload gives NULL ``n_bytes`` and NULL features;
+    ``decoder`` is not called for it.
     """
     feature_fields = ", ".join(f"f{i} double" for i in range(n_features))
     id_type = dict(df.dtypes)[id_col]
@@ -1039,11 +1050,14 @@ def decode_features(
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             payloads = pdf[bin_col]
-            feats = [decoder(p, n_features) for p in payloads]
+            feats = [
+                [None] * n_features if p is None else decoder(p, n_features)
+                for p in payloads
+            ]
             out = pd.DataFrame(
                 {
                     id_col: pdf[id_col].values,
-                    "n_bytes": [len(p) for p in payloads],
+                    "n_bytes": [None if p is None else len(p) for p in payloads],
                 }
             )
             for i in range(n_features):
@@ -1084,7 +1098,8 @@ def decode_text(
     (Arrow-batched, same plumbing contract as :func:`decode_features`).
     Output: ``(id_col, n_bytes, out_col)`` with ``n_bytes`` the COMPRESSED
     payload size — pairing it with ``octet_length(text)`` downstream
-    gives the corpus compression ratio for free."""
+    gives the corpus compression ratio for free. A NULL payload gives
+    NULL ``n_bytes`` and NULL text; ``decoder`` is not called for it."""
     id_type = dict(df.dtypes)[id_col]
     schema = f"{id_col} {id_type}, n_bytes int, {out_col} string"
 
@@ -1094,8 +1109,8 @@ def decode_text(
             yield pd.DataFrame(
                 {
                     id_col: pdf[id_col].values,
-                    "n_bytes": [len(p) for p in payloads],
-                    out_col: [decoder(p) for p in payloads],
+                    "n_bytes": [None if p is None else len(p) for p in payloads],
+                    out_col: [None if p is None else decoder(p) for p in payloads],
                 }
             )
 
