@@ -12,6 +12,7 @@ Public surface mirrors ``xarray_scipy.signal`` operator-for-operator
 (:mod:`xarray_scipy_spark.pipeline`).
 """
 
+from . import _zipcache  # noqa: F401  (first: patches zipimport, see module)
 from .operators import (
     asof_join,
     coherence,

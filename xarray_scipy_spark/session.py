@@ -11,6 +11,15 @@ import os
 
 from pyspark.sql import SparkSession
 
+_DRIVER_MEM_CAP_MB = 48 * 1024
+
+
+def _default_driver_memory() -> str:
+    """Driver heap when ``SPARK_GRAFT_DRIVER_MEM`` is unset: half of
+    physical memory, capped at 48g."""
+    phys = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+    return f"{min(_DRIVER_MEM_CAP_MB, phys // 2**21)}m"
+
 
 def get_spark(
     app_name: str = "xarray_scipy_spark",
@@ -25,6 +34,8 @@ def get_spark(
     - UTC session timezone: required for DuckDB-oracle comparability.
     - shuffle partitions default to local core count; on a cluster pass
       ~2-3x total executor cores (AQE coalesces the excess).
+    - driver heap: ``SPARK_GRAFT_DRIVER_MEM`` if set, else
+      :func:`_default_driver_memory`.
     """
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
     if shuffle_partitions is None:
@@ -39,7 +50,10 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "65536")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_memory(),
+        )
         # G1 with 32m regions instead of the auto-sized default:
         # measured three-way GC A/B on this VM class. At a 48g heap G1
         # auto-picks 16m regions, so Spark's ~16 MB shuffle/Arrow
