@@ -1,5 +1,6 @@
 """pipeline.graph.pagerank — numpy power-iteration parity, the
-Σ rank = 1 invariant, dangling handling, and argument gates."""
+Σ rank = 1 invariant, dangling handling, bad input, a lazy build, and
+argument gates."""
 
 from __future__ import annotations
 
@@ -76,6 +77,58 @@ def test_pagerank_argument_gates(spark):
         pagerank(df, iterations=-1)
     with pytest.raises(ValueError, match="damping"):
         pagerank(df, damping=1.0)
+
+
+# multi-edges (0→1 twice), a self-loop (3→3), dangling vertices (2, 5)
+_SHAPED_EDGES = [(0, 1), (0, 1), (0, 2), (1, 0), (1, 3), (3, 3), (3, 5), (4, 0)]
+
+
+@pytest.mark.parametrize("iterations", [0, 1, 2, 10, 25])
+def test_pagerank_parity_every_history_length(spark, iterations):
+    df = spark.createDataFrame(_SHAPED_EDGES, "src long, dst long")
+    got = {
+        r["node"]: r["rank"]
+        for r in pagerank(df, iterations=iterations).collect()
+    }
+    exp = _numpy_pagerank(_SHAPED_EDGES, n_iter=iterations)
+    assert set(got) == set(exp)
+    for v in exp:
+        assert got[v] == pytest.approx(exp[v], abs=1e-12)
+    assert sum(got.values()) == pytest.approx(1.0, abs=1e-12)
+
+
+def test_pagerank_build_starts_no_job(spark):
+    sc = spark.sparkContext
+    df = spark.createDataFrame(_SHAPED_EDGES, "src long, dst long")
+    group = "test_pagerank_build_starts_no_job"
+    sc.setJobGroup(group, group)
+    try:
+        pagerank(df, iterations=10)
+        jobs = list(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert jobs == []
+
+
+def test_pagerank_drops_null_endpoints(spark):
+    edges = [(0, 1), (1, 2), (2, 0), (2, 3)]
+    df = spark.createDataFrame(
+        edges + [(None, 1), (3, None), (None, None)], "src long, dst long"
+    )
+    got = {r["node"]: r["rank"] for r in pagerank(df, iterations=6).collect()}
+    exp = _numpy_pagerank(edges, n_iter=6)
+    assert set(got) == set(exp)  # no NULL vertex, N = 4
+    for v in exp:
+        assert got[v] == pytest.approx(exp[v], abs=1e-12)
+
+
+def test_pagerank_empty_edges_is_empty(spark):
+    df = spark.createDataFrame([], "src long, dst long")
+    assert pagerank(df, iterations=3).collect() == []
+    only_null = spark.createDataFrame([(None, 1)], "src long, dst long")
+    out = pagerank(only_null, iterations=0)
+    assert out.columns == ["node", "rank"]
+    assert out.collect() == []
 
 
 # --- triangle_count --------------------------------------------------------

@@ -562,22 +562,23 @@ def test_interval_join_is_equi_not_nested_loop(spark):
 
 
 def test_pagerank_iteration_has_no_cartesian_and_partial_agg(spark):
-    """pagerank's per-iteration plan: contribution aggregation is a
-    hash aggregate (map-side partials), the only nested-loop joins are
-    the 1-row broadcast scalar frames (dangling mass / vertex count),
-    and no CartesianProduct appears."""
+    """pagerank's per-iteration plan: message aggregation is a hash
+    aggregate (map-side partials), the only nested-loop join is the
+    broadcast 1-row coefficient frame (vertex count and dangling
+    masses), and no CartesianProduct appears."""
     from xarray_scipy_spark.pipeline import pagerank
 
     df = spark.createDataFrame(
         [(i % 7, (i * 3) % 7) for i in range(30)], "src long, dst long"
     )
-    plan = _static_plan(pagerank(df, iterations=2, checkpoint_every=10))
+    plan = _static_plan(pagerank(df, iterations=2))
     assert "CartesianProduct" not in plan
     assert "HashAggregate" in plan
     # scalar frames broadcast; the big sides never nested-loop each other
     assert plan.count("BroadcastNestedLoopJoin") <= plan.count(
         "BroadcastExchange"
     )
+    assert plan.count("BroadcastNestedLoopJoin") == 1, plan
 
 
 def test_zorder_curve_is_pure_codegen(spark):
@@ -853,13 +854,15 @@ def test_merged_union_adds_no_exchange(spark, name):
 
 
 def test_unforced_broadcasts_scale_paths(spark):
-    """target_encoding's per-category aggregate and pagerank's degree
-    frame are DATA-SIZED (one row per category / vertex), so neither
-    may carry a forced broadcast hint (VERDICT r8 #2: a forced
-    broadcast there is a driver OOM at 10^8 categories / 10^9
-    vertices). With autoBroadcastJoinThreshold=-1 both joins must
+    """target_encoding's per-category aggregate is DATA-SIZED (one row
+    per category), so it may not carry a forced broadcast hint (VERDICT
+    r8 #2: a forced broadcast there is a driver OOM at 10^8
+    categories). With autoBroadcastJoinThreshold=-1 its join must
     compile to a shuffle strategy — proving AQE, not a hint, picks the
-    physical join — and results must match the default-config run."""
+    physical join. pagerank joins nothing data-sized: its only join is
+    the forced broadcast of the 1-row coefficient frame, so it has no
+    equi-join at all and exactly one broadcast. Both results must match
+    the default-config run."""
     from xarray_scipy_spark.pipeline import pagerank
     from xarray_scipy_spark.pipeline.features import target_encoding
 
@@ -877,7 +880,7 @@ def test_unforced_broadcasts_scale_paths(spark):
         )
 
     def pr():
-        return pagerank(edges, iterations=1, checkpoint_every=10)
+        return pagerank(edges, iterations=1)
 
     base_te = sorted(map(tuple, te().collect()))
     base_pr = {r["node"]: r["rank"] for r in pr().collect()}
@@ -886,11 +889,13 @@ def test_unforced_broadcasts_scale_paths(spark):
     try:
         te_plan = _static_plan(te())
         pr_plan = _static_plan(pr())
-        # the data-sized joins pick a shuffle strategy; the only
+        # the data-sized join picks a shuffle strategy; the only
         # broadcasts left are the intentionally-forced 1-row scalar
-        # frames (global prior / vertex count / dangling mass)
+        # frames (global prior / pagerank's coefficients)
         assert "SortMergeJoin" in te_plan or "ShuffledHashJoin" in te_plan, te_plan
-        assert "SortMergeJoin" in pr_plan or "ShuffledHashJoin" in pr_plan, pr_plan
+        for node in ("SortMergeJoin", "ShuffledHashJoin", "BroadcastHashJoin"):
+            assert node not in pr_plan, pr_plan
+        assert pr_plan.count("BroadcastExchange") == 1, pr_plan
         assert sorted(map(tuple, te().collect())) == base_te
         got_pr = {r["node"]: r["rank"] for r in pr().collect()}
         assert got_pr.keys() == base_pr.keys()

@@ -4687,9 +4687,9 @@ def _pagerank_oracle() -> str:
 def q_pagerank(spark, sf_dir):
     """PageRank on the order→supplier link graph (src = l_orderkey mod
     500, dst = l_suppkey mod 500, distinct edges): 10 damped power
-    iterations through pipeline/graph.py — one contribution shuffle per
-    iteration, dangling mass as a broadcast 1-row aggregate, lineage
-    truncated by localCheckpoint. The iterative-graph operator class
+    iterations through pipeline/graph.py — one lazy query, one message
+    shuffle per iteration, the dangling mass resolved by a closing
+    1-row aggregate. The iterative-graph operator class
     (dedup_clusters' connected components being the other member)."""
     li = (
         load_table(spark, "lineitem", sf_dir)

@@ -4,29 +4,22 @@ The LLM-data-pipeline motivation: web-crawl curation ranks domains/
 pages by link authority (PageRank feeding crawl-priority and quality
 priors), and duplicate clusters (pipeline/dedup.py duplicate_clusters)
 already need the connected-components half of this family. This module
-adds the rank half with the same scale discipline:
+adds the rank half.
 
-- one hash-aggregation shuffle per iteration (contributions grouped by
-  destination), co-partitioned joins otherwise;
-- the dangling-node mass handled as a 1-ROW aggregate broadcast — no
-  driver collect inside the loop;
-- ``localCheckpoint`` every few iterations to truncate lineage (the
-  duplicate_clusters / BPE pattern). The cadence is MEASURED, not
-  guessed: on a 500-node/10-iteration run, checkpoint_every=1 → 6.6 s
-  (job-overhead bound), 2 → 3.9 s, 3 → 3.8 s, 5 → 6.5 s
-  (optimizer-analysis bound), 10 → minutes (Catalyst analysis cost is
-  superlinear in the join-chain depth, and each iteration references
-  its predecessor in three places). Default 3.
+``pagerank`` is one lazy query: building it runs no Spark job, takes
+no ``localCheckpoint`` and collects nothing. The global dangling-mass
+term every power iteration needs is not computed inside the loop.
+Power iteration is affine in the ranks, so the loop propagates along
+edges only and a closing 1-row aggregate resolves the uniform terms
+afterwards (derivation in the ``pagerank`` docstring).
+Each iteration then reads its predecessor once, and the plan grows
+linearly with the iteration count.
 
-At 100 TB: edges pre-partitioned by ``src`` make the rank join
-shuffle-free on one side; the per-iteration shuffle carries one row
-per (dst, partial sum) after map-side combine — bounded by vertices,
-not edges.
+``triangle_count`` is non-iterative: degree-ordered orientation, three
+hash-join shuffles and a corner-count aggregate.
 """
 
 from __future__ import annotations
-
-from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, functions as F
 
@@ -40,105 +33,120 @@ def pagerank(
     dst: str = "dst",
     iterations: int = 10,
     damping: float = 0.85,
-    checkpoint_every: int = 3,
 ) -> DataFrame:
     """Power-iteration PageRank over a directed edge list.
 
     Semantics (the classic normalized formulation): ranks start uniform
-    at 1/N; each iteration every vertex sends ``rank/out_degree`` along
-    its out-edges, dangling vertices (no out-edges) spread their whole
-    rank uniformly, and the new rank is
-    ``(1-d)/N + d * (received + dangling_mass/N)``. Σ rank = 1 at every
-    iteration (a test invariant). Multi-edges contribute once per edge
-    (pre-``distinct`` the input to change that); self-loops count.
+    at 1/N over the N distinct vertices; each iteration every vertex
+    sends ``rank/out_degree`` along its out-edges, dangling vertices
+    (no out-edges) spread their whole rank uniformly, and the new rank
+    is ``(1-d)/N + d * (received + dangling_mass/N)``. Σ rank = 1 at
+    every iteration. Multi-edges contribute once per edge (pre-
+    ``distinct`` the input to change that); self-loops count.
+
+    Bad input: edges with a NULL ``src`` or ``dst`` are dropped before
+    anything else, so a NULL endpoint never becomes a vertex or counts
+    in N. An edge frame with no (remaining) edges gives an empty
+    ``(node, rank)`` frame, with no error.
 
     Returns ``(node, rank)`` with one row per distinct vertex.
 
-    Plan shape per iteration: ranks ⋈ edges on (node = src) — map-side
-    when edges are pre-partitioned by src — then ONE hash aggregation
-    by dst (partials combine map-side, so hot destinations cost no
-    extra shuffle rows), a left join back onto the vertex frame, and a
-    broadcast 1-row dangling-mass aggregate. No driver-side loop state
-    beyond the iteration counter; no collect anywhere.
+    Derivation. Let ``v_0 = 1`` and ``v_{k+1}[w] = d * Σ_{u→w}
+    v_k[u]/outdeg(u)``: edge-only propagation with no global term. Let
+    ``D_k = Σ_{u dangling} v_k[u]``. Then, by induction on the power
+    iteration,
+
+        rank_t = v_t/N + Σ_{j<t} c_j * v_{t-1-j}
+        c_j    = (1-d)/N + (d/N) * (D_j/N + Σ_{i<j} c_i * D_{j-1-i})
+
+    so the loop carries each vertex's history ``h = [v_0 .. v_k]`` and
+    never needs N or the dangling mass.
+
+    Plan shape:
+
+    - build: one aggregate by vertex (each edge explodes to
+      ``(src, dst)`` and ``(dst, NULL)``, then ``collect_list``) gives
+      every vertex its out-list;
+    - each iteration: a vertex row ``(node, out, h)`` explodes into
+      one self row plus one message per out-edge, and ONE aggregate by
+      vertex sums the messages and keeps the self row's state with
+      ``collect_list(state)[0]`` (exactly one non-NULL state per key;
+      ``collect_list`` plans an object hash aggregate where ``first``
+      over a struct would plan a sort aggregate, though past
+      ``spark.sql.objectHashAggregate.sortBased.fallbackThreshold``
+      keys in a task it falls back to sorting too). Partials combine
+      map-side, so a hot destination costs no extra shuffle rows;
+    - close: one 1-row aggregate over the last frame gives N and
+      ``D_0 .. D_{t-1}``, one projection of that row folds the
+      recurrence into ``c = [c_0 .. c_{t-1}]``, and a broadcast cross
+      join applies the final linear combination. The last frame is
+      read twice; AQE reuses its exchange.
+
+    The iteration and the closing step are SQL text: every Column-API
+    call is a py4j round trip, and as SQL text a 10-iteration build
+    makes about 700 of them.
+
+    Cost model: a row carries its out-list and its history, so its
+    width grows by one double per iteration, and every iteration's
+    shuffle carries the out-lists. A vertex's out-list is one array
+    value, so a hub's out-degree is bounded by what one row may hold in
+    memory. Retry: with no ``localCheckpoint``, a lost executor is
+    recomputed from lineage.
     """
     if iterations < 0:
         raise ValueError(f"iterations must be >= 0, got {iterations}")
     if not 0.0 < damping < 1.0:
         raise ValueError(f"damping must be in (0, 1), got {damping}")
+    d = f"{float(damping)!r}D"
 
-    # The edge frame feeds EVERY iteration's contribution join: without
-    # a lineage cut here, each checkpoint job re-executes the caller's
-    # upstream plan (scan + any distinct/shuffle) once per materialized
-    # step — measured 8.7 s -> 4.0 s on the contract graph from this
-    # one line. Lazy checkpoint: materialized on first use, reused by
-    # every later job (the GraphX pattern).
-    e = edges.select(
-        F.col(src).alias("_s"), F.col(dst).alias("_d")
-    ).localCheckpoint(eager=False)
-    # one pass over e (explode of both endpoints, not a 2-way unionAll
-    # that reads the checkpointed edge RDD twice — the triangle_count
-    # degree pattern, r16)
-    nodes = (
-        e.select(F.explode(F.array("_s", "_d")).alias("node"))
-        .distinct()
-    )
-    deg = e.groupBy(F.col("_s").alias("node")).agg(
-        F.count(F.lit(1)).alias("_deg")
-    )
-    # n as a broadcastable 1-row frame (no collect; the literal count
-    # would force an action per plan rebuild). It rides INSIDE the
-    # checkpointed ranks frame as a constant column so iterations never
-    # recompute the vertex distinct.
-    nfr = nodes.agg(F.count(F.lit(1)).cast("double").alias("_n"))
-
-    # No forced broadcast on the degree frame: it has one row per
-    # non-dangling VERTEX, so at billions of vertices a broadcast hint
-    # here OOMs the driver during setup even though the per-iteration
-    # loop is vertex-partitioned (VERDICT r8 #2). AQE broadcasts it
-    # when it fits under autoBroadcastJoinThreshold; otherwise this is
-    # one setup-stage shuffle join, amortized over all iterations.
-    base = nodes.join(deg, "node", "left").select(
-        "node", F.coalesce(F.col("_deg"), F.lit(0)).alias("_deg")
-    )
-    ranks = base.crossJoin(F.broadcast(nfr)).select(
-        "node", "_deg", "_n", (F.lit(1.0) / F.col("_n")).alias("rank")
-    )
-    ranks = ranks.localCheckpoint(eager=True)
-
-    for it in range(iterations):
-        dangling = ranks.filter(F.col("_deg") == 0).agg(
-            F.coalesce(F.sum("rank"), F.lit(0.0)).alias("_dm")
+    frame = (
+        edges.select(F.col(src).alias("_s"), F.col(dst).alias("_d"))
+        .where("_s IS NOT NULL AND _d IS NOT NULL")
+        .selectExpr(
+            "inline(array(struct(_s AS node, _d AS tgt), "
+            "struct(_d AS node, NULL AS tgt)))"
         )
-        contrib = (
-            ranks.filter(F.col("_deg") > 0)
-            .join(e, ranks["node"] == e["_s"], "inner")
-            .groupBy(F.col("_d").alias("node"))
-            .agg(F.sum(F.col("rank") / F.col("_deg")).alias("_recv"))
-        )
-        ranks = (
-            ranks.select("node", "_deg", "_n")
-            .join(contrib, "node", "left")
-            .crossJoin(F.broadcast(dangling))
-            .select(
-                "node",
-                "_deg",
-                "_n",
-                (
-                    (1.0 - damping) / F.col("_n")
-                    + damping
-                    * (
-                        F.coalesce(F.col("_recv"), F.lit(0.0))
-                        + F.col("_dm") / F.col("_n")
-                    )
-                ).alias("rank"),
+        .groupBy("node")
+        .agg(F.expr("collect_list(tgt) AS out"))
+        .selectExpr("node", "out", "array(1D) AS h")
+    )
+    for _ in range(iterations):
+        frame = (
+            frame.selectExpr("*", "explode(sequence(0, size(out))) AS i")
+            .selectExpr(
+                "IF(i = 0, node, out[i - 1]) AS node",
+                "IF(i = 0, struct(out, h), NULL) AS st",
+                f"IF(i = 0, NULL, {d} * element_at(h, -1) / size(out)) AS m",
+            )
+            .groupBy("node")
+            .agg(
+                F.expr("collect_list(st)[0].out AS out"),
+                F.expr(
+                    "concat(collect_list(st)[0].h, array(coalesce(sum(m), 0D))) AS h"
+                ),
             )
         )
-        # no unconditional final checkpoint: the caller's action
-        # materializes the last (< checkpoint_every)-deep suffix, and
-        # the plan stays inspectable (tests/test_plans.py)
-        if (it + 1) % checkpoint_every == 0 and it != iterations - 1:
-            ranks = ranks.localCheckpoint(eager=True)
-    return ranks.select("node", "rank")
+    t = iterations
+    sums = ", ".join(f"sum(IF(size(out) = 0, h[{k}], 0D))" for k in range(t))
+    # c_j folded left to right: c is [c_0 .. c_{j-1}] when x = D_j
+    coef = (
+        frame.selectExpr(
+            "CAST(count(1) AS DOUBLE) AS n",
+            f"CAST(array({sums}) AS ARRAY<DOUBLE>) AS dm",
+        )
+        .where("n > 0")
+        .selectExpr(
+            "n",
+            "aggregate(dm, CAST(array() AS ARRAY<DOUBLE>), (c, x) -> concat(c, array("
+            f"(1D - {d}) / n + {d} / n * (x / n + aggregate(zip_with(c, "
+            "reverse(slice(dm, 1, size(c))), (a, b) -> a * b), 0D, (s, y) -> s + y))"
+            "))) AS c",
+        )
+    )
+    rank = " + ".join(
+        [f"h[{t}] / n"] + [f"c[{j}] * h[{t - 1 - j}]" for j in range(t)]
+    )
+    return frame.crossJoin(F.broadcast(coef)).selectExpr("node", f"{rank} AS rank")
 
 
 def triangle_count(
@@ -174,10 +182,9 @@ def triangle_count(
     fresh copy of the whole upstream (input scan + canonicalizing
     distinct) at every reference — the pre-r16 physical plan carried
     ~45 copies of the edge subtree / 90 input scans. Both frames are
-    edge-list-sized (the small side of the problem at corpus scale —
-    the same bound pagerank's edge checkpoint relies on), so the two
-    materializations replace O(plan-copies) input scans with exactly
-    one.
+    edge-list-sized (the small side of the problem at corpus scale),
+    so the two materializations replace O(plan-copies) input scans
+    with exactly one.
 
     Fault-tolerance trade (r17 note): ``localCheckpoint`` stores the
     blocks on executors only — losing an executor mid-query kills the
