@@ -318,10 +318,9 @@ def test_kernel_exchange_keeps_full_width(spark):
 def test_kernel_exchange_width_scales_with_input(spark):
     """The kernel-exchange width heuristic: full task-wave width when
     the (pruned) input is large enough to amortize per-bucket Python
-    overhead, proportionally narrower when it is not, never below 1 —
-    and the conf knob overrides the target."""
+    overhead, proportionally narrower when it is not, never below 1."""
     from xarray_scipy_spark.core import (
-        _BUCKET_TARGET_CONF,
+        _BUCKET_TARGET_DEFAULT,
         _default_buckets,
         _plan_size_bytes,
     )
@@ -336,19 +335,15 @@ def test_kernel_exchange_width_scales_with_input(spark):
 
     got = _default_buckets(ev)
     assert 1 <= got <= width
-    # tiny target -> the cap binds (full width, the 100 TB regime)
-    spark.conf.set(_BUCKET_TARGET_CONF, "1")
-    try:
-        assert _default_buckets(ev) == width
-        # huge target -> single bucket (the floor)
-        spark.conf.set(_BUCKET_TARGET_CONF, str(1 << 40))
-        assert _default_buckets(ev) == 1
-    finally:
-        spark.conf.unset(_BUCKET_TARGET_CONF)
-    # consistency: the un-overridden width is ceil(est / default target)
-    from xarray_scipy_spark.core import _BUCKET_TARGET_DEFAULT
-
+    # consistency: the width is ceil(est / target), capped at full width
     assert got == min(width, max(1, -(-est // _BUCKET_TARGET_DEFAULT)))
+    # an input estimated far above width * target -> the cap binds (full
+    # width, the 100 TB regime); planning only, no job runs
+    huge = spark.range(1 << 40)
+    assert _plan_size_bytes(huge) > 1000 * width * _BUCKET_TARGET_DEFAULT
+    assert _default_buckets(huge) == width
+    # a one-row input -> single bucket (the floor)
+    assert _default_buckets(spark.range(1)) == 1
 
 
 def test_pure_catalyst_smoothers_have_no_python_and_one_exchange(spark):

@@ -36,6 +36,17 @@ cluster (default: 2x shuffle partitions), and AQE coalesces or splits
 buckets as sizes demand. A single series never spans buckets, so the
 per-worker memory bound is unchanged from the reference's own
 ``allow_rechunk`` concession (one series must fit one worker).
+
+Bucket layout (every path — ragged, per-length, cogrouped — shares it):
+sort the bucket by ``by + order`` → :func:`_series_bounds` (a new series
+starts where a key changes; two NULL keys are equal, so a NULL key is ONE
+series, as Spark's ``groupBy`` treats it) → :func:`_grid` (``n_in`` /
+``offset`` / ``delta`` per series) → kernel → :func:`_assemble` (the
+output rows). Ties in ``order`` left unbroken keep arrival order, which
+Spark does not fix: pass a tie-break column for a deterministic result.
+NULL samples reach the kernel as NaN and propagate like NaN samples. The
+cogrouped path pairs series by key with inner alignment: a key on one
+side only is dropped, and a NULL key never pairs (as in a SQL join).
 """
 
 from __future__ import annotations
@@ -130,23 +141,105 @@ def _coord_floats(col: pd.Series) -> np.ndarray:
 
 def _series_bounds(pdf: pd.DataFrame, by: Sequence[str]) -> tuple[np.ndarray, np.ndarray]:
     """Start/end row offsets of each series in a bucket sorted by
-    ``by + order``: a new series starts where any key column changes."""
+    ``by + order``: a new series starts where any key column changes.
+    Two NULL keys compare equal (Arrow hands a NULL bigint key over as
+    NaN, and ``NaN != NaN``), so a NULL key is one series."""
     changed = np.zeros(len(pdf), dtype=bool)
-    changed[0] = True
+    changed[:1] = True
     for c in by:
         a = pdf[c].to_numpy()
-        changed[1:] |= a[1:] != a[:-1]
+        na = pd.isna(a)
+        changed[1:] |= (a[1:] != a[:-1]) & ~(na[1:] & na[:-1])
     starts = np.flatnonzero(changed)
-    ends = np.r_[starts[1:], len(pdf)]
+    ends = np.r_[starts[1:], len(pdf)][: len(starts)]
     return starts, ends
+
+
+def _grid(
+    coords: np.ndarray, starts: np.ndarray, ends: np.ndarray
+) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """Per-series group attrs: ``n_in`` (sample count), ``offset`` (first
+    coordinate) and ``delta`` (mean spacing; 0 for a single sample)."""
+    lengths = ends - starts
+    offsets = coords[starts]
+    spans = np.abs(coords[ends - 1] - offsets)
+    deltas = np.where(lengths > 1, spans / np.maximum(lengths - 1, 1), 0.0)
+    return lengths, offsets, deltas
+
+
+def _padded(
+    vals: Sequence[np.ndarray], starts: np.ndarray, lengths: np.ndarray
+) -> tuple[list[np.ndarray], np.ndarray]:
+    """Right-zero-padded ``(n_series, n_max)`` block of each sample array
+    (series ``i`` is rows ``starts[i]:starts[i] + lengths[i]``) and the
+    mask of real samples; ``block[mask]`` is back in row order."""
+    jj = np.arange(int(lengths.max()))
+    mask = jj[None, :] < lengths[:, None]
+    gather = starts[:, None] + np.minimum(jj[None, :], lengths[:, None] - 1)
+    return [np.where(mask, v[gather], 0.0) for v in vals], mask
+
+
+def _assemble(src, carry, starts, grid, sel, m, outs, emit_idx) -> pd.DataFrame:
+    """A bucket's output frame, the one place output rows are built.
+
+    ``src`` is the sorted bucket, ``starts`` its series' first rows and
+    ``grid`` their :func:`_grid` attrs. ``sel`` (index array or slice)
+    picks and orders the series that produced output; the ``j``-th of
+    them gets ``m[j]`` rows that repeat its ``carry`` columns and grid
+    attrs, numbered ``idx`` 0..m[j]-1 when ``emit_idx``. ``outs`` maps
+    each kernel output name to its values, flattened in that order."""
+    total = int(m.sum())
+    rep = np.repeat(starts[sel], m)
+    res = pd.DataFrame(index=np.arange(total))
+    for c in carry:
+        res[c] = src[c].to_numpy()[rep]
+    if emit_idx:
+        res["idx"] = np.arange(total, dtype=np.int64) - np.repeat(np.cumsum(m) - m, m)
+    for name, col in outs.items():
+        res[name] = col
+    for name, attr in zip(("n_in", "offset", "delta"), grid):
+        res[name] = np.repeat(attr[sel], m)
+    return res
+
+
+def _output_schema(
+    df: DataFrame, by: list[str], keep: list[str], out_fields: str, emit_idx: bool
+) -> tuple[str, list[str]]:
+    """The UDF's DDL ``[*by, *keep, idx?, *out_fields, n_in, offset,
+    delta]`` and the kernel output column names."""
+    idx_field = "idx bigint, " if emit_idx else ""
+    carry_ddl = (_ddl_of(df, by + keep) + ", ") if by or keep else ""
+    schema = f"{carry_ddl}{idx_field}{out_fields}, {GROUP_ATTR_FIELDS}"
+    return schema, [f.strip().split()[0] for f in out_fields.split(",")]
+
+
+def _grouped_buckets(frames: Sequence[DataFrame], by: list[str], n_buckets: int) -> list:
+    """Tag every frame with the same bucket column and group on it.
+
+    With no broadcast dims (the reference's scalar / nchannels=None
+    shape, tests/test_signal.py:36-38) the whole frame is ONE series —
+    one bucket, exactly the reference's single-block concession.
+    Otherwise each frame takes an explicit fixed-width exchange instead
+    of the groupBy's implicit one: the kernel stage is CPU-bound Python
+    whose work-per-byte is far above a SQL stage's, so AQE's byte-based
+    partition coalescing (which would fold a small-but-expensive shuffle
+    onto 1-3 cores) is the wrong heuristic here. HashPartitioning on the
+    bucket column satisfies the grouping distribution, so no second
+    exchange is inserted, and cogrouped sides stay co-located."""
+    bucket = _bucket_expr(frames[0].sparkSession, by, n_buckets) if by else F.lit(0)
+    grouped = []
+    for f in frames:
+        f = f.withColumn(_BUCKET, bucket)
+        if by:
+            f = f.repartition(n_buckets, F.col(_BUCKET))
+        grouped.append(f.groupBy(_BUCKET))
+    return grouped
 
 
 # Per-bucket input-volume target for the kernel exchange width
 # heuristic (Catalyst-estimated bytes of the PRUNED kernel input, not
-# raw file bytes). Tunable per session for unusual work-per-byte
-# kernels; the default was measured across the operator families at
-# sf0.1 and the 10x tier.
-_BUCKET_TARGET_CONF = "spark.xarray_scipy_spark.kernel.bucketTargetBytes"
+# raw file bytes), measured across the operator families at sf0.1 and
+# the 10x tier.
 _BUCKET_TARGET_DEFAULT = 96 * 1024
 # Catalyst reports Long.MaxValue-ish sizes for relations it cannot
 # estimate (e.g. RDD-backed local relations): treat those as unknown.
@@ -177,8 +270,8 @@ def _default_buckets(df: DataFrame) -> int:
     identity-kernel job at 33 buckets minus the same job at 1 bucket,
     divided by 32, median of 9, with ``_zipcache`` keeping workers from
     re-reading pyspark.zip per task), so a bucket should carry at
-    least ``bucketTargetBytes`` of input before another one is worth
-    opening. At real scale the estimate far exceeds
+    least ``_BUCKET_TARGET_DEFAULT`` bytes of input before another one
+    is worth opening. At real scale the estimate far exceeds
     ``width * target`` and the exchange is always full-width (capped at
     shuffle partitions, which the user sizes so a partition fits an
     executor); the reduction only engages on small inputs, exactly the
@@ -188,10 +281,9 @@ def _default_buckets(df: DataFrame) -> int:
     sess = df.sparkSession
     parts = int(sess.conf.get("spark.sql.shuffle.partitions", "200"))
     width = max(parts, sess.sparkContext.defaultParallelism)
-    target = int(sess.conf.get(_BUCKET_TARGET_CONF, str(_BUCKET_TARGET_DEFAULT)))
     est = _plan_size_bytes(df)
-    if est is not None and target > 0:
-        width = min(width, max(1, -(-est // target)))
+    if est is not None:
+        width = min(width, max(1, -(-est // _BUCKET_TARGET_DEFAULT)))
     return width
 
 
@@ -228,9 +320,12 @@ def apply_series_kernel(
         padding exact, and the loop then runs once per bucket no matter
         how many lengths the bucket mixes.
     by : broadcast-dim columns (the series key — reference's loop dims).
+        A NULL key is one series, as Spark's ``groupBy`` treats it.
     order : core-dim coordinate column (+ optional tie-break columns);
         the first entry supplies offset/delta (datetime ok — epoch-ns).
-    values : value columns handed to the kernel as float64 blocks.
+        Ties left unbroken keep arrival order, which Spark does not fix.
+    values : value columns handed to the kernel as float64 blocks;
+        NULL samples arrive as NaN and propagate like NaN samples.
     out_fields : DDL for the kernel's output columns,
         e.g. ``"re double, im double"``.
     emit_idx : add ``idx bigint`` = 0..m-1 output position per series.
@@ -250,105 +345,46 @@ def apply_series_kernel(
     # otherwise ride the shuffle for nothing
     needed = list(dict.fromkeys(by + keep + order + list(values)))
     df = df.select(*needed)
-    idx_field = "idx bigint, " if emit_idx else ""
-    keep_ddl = (_ddl_of(df, keep) + ", ") if keep else ""
-    by_ddl = (_ddl_of(df, by) + ", ") if by else ""
-    schema = f"{by_ddl}{keep_ddl}{idx_field}{out_fields}, {GROUP_ATTR_FIELDS}"
-    out_names = [f.strip().split()[0] for f in out_fields.split(",")]
+    schema, out_names = _output_schema(df, by, keep, out_fields, emit_idx)
     n_buckets = buckets if buckets is not None else _default_buckets(df)
+    ragged = getattr(kernel, "batch_ragged", False)
 
     def run(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values(by + order, kind="mergesort")
         starts, ends = _series_bounds(pdf, by)
-        lengths = ends - starts
-        coords = _coord_floats(pdf[order[0]])
-        offsets = coords[starts]
-        lasts = coords[ends - 1]
-        deltas = np.where(
-            lengths > 1, np.abs(lasts - offsets) / np.maximum(lengths - 1, 1), 0.0
-        )
+        grid = _grid(_coord_floats(pdf[order[0]]), starts, ends)
+        lengths = grid[0]
         vals = [pdf[v].to_numpy(dtype=float) for v in values]
 
-        if getattr(kernel, "batch_ragged", False) and len(starts):
-            n_max = int(lengths.max())
-            jj = np.arange(n_max)
-            gather = np.minimum(starts[:, None] + jj[None, :], ends[:, None] - 1)
-            mask = jj[None, :] < lengths[:, None]
-            blocks = [np.where(mask, v[gather], 0.0) for v in vals]
-            out = kernel(*blocks, lengths=lengths)
-            out_lens = np.asarray(out.pop("__lengths__"), dtype=np.int64)
+        if ragged:
+            out = kernel(*_padded(vals, starts, lengths)[0], lengths=lengths)
+            m = np.asarray(out.pop("__lengths__"), dtype=np.int64)
             m_max = np.atleast_2d(next(iter(out.values()))).shape[1]
-            sel = np.arange(m_max)[None, :] < out_lens[:, None]
-            rep = np.repeat(starts, out_lens)
-            res = pd.DataFrame(index=np.arange(len(rep)))
-            for c in by + keep:
-                res[c] = pdf[c].to_numpy()[rep]
-            if emit_idx:
-                res["idx"] = np.broadcast_to(
-                    np.arange(m_max, dtype=np.int64), sel.shape
-                )[sel]
-            for name in out_names:
-                res[name] = np.atleast_2d(out[name])[sel]
-            res["n_in"] = np.repeat(lengths, out_lens)
-            res["offset"] = np.repeat(offsets, out_lens)
-            res["delta"] = np.repeat(deltas, out_lens)
-            return res
+            sel = np.arange(m_max)[None, :] < m[:, None]
+            cols = {name: np.atleast_2d(out[name])[sel] for name in out_names}
+            return _assemble(pdf, by + keep, starts, grid, slice(None), m, cols, emit_idx)
 
-        pieces: list[dict[str, np.ndarray]] = []
+        # one kernel call per block of equal-length series; rows come out
+        # block by block, so the series order is the blocks' concatenation
+        perm, ms = [], []
+        pieces: dict[str, list[np.ndarray]] = {name: [] for name in out_names}
         for n in np.unique(lengths):
             sel = np.flatnonzero(lengths == n)
-            s = starts[sel]
-            row_idx = (s[:, None] + np.arange(n)).ravel()
-            blocks = [v[row_idx].reshape(len(s), n) for v in vals]
-            out = kernel(*blocks)
-            first = next(iter(out.values()))
-            m = np.atleast_2d(first).shape[1]
-            piece = {
-                "__rep__": np.repeat(s, m),  # row index of each series head
-                "n_in": np.full(len(s) * m, n, dtype=np.int64),
-                "offset": np.repeat(offsets[sel], m),
-                "delta": np.repeat(deltas[sel], m),
-            }
-            if emit_idx:
-                piece["idx"] = np.tile(np.arange(m, dtype=np.int64), len(s))
+            rows = (starts[sel, None] + np.arange(n)).ravel()
+            out = kernel(*[v[rows].reshape(len(sel), n) for v in vals])
+            m = np.atleast_2d(next(iter(out.values()))).shape[1]
+            perm.append(sel)
+            ms.append(np.full(len(sel), m, dtype=np.int64))
             for name in out_names:
-                piece[name] = np.atleast_2d(out[name]).ravel()
-            pieces.append(piece)
+                pieces[name].append(np.atleast_2d(out[name]).ravel())
+        cols = {name: np.concatenate(p) for name, p in pieces.items()}
+        return _assemble(
+            pdf, by + keep, starts, grid, np.concatenate(perm), np.concatenate(ms),
+            cols, emit_idx,
+        )
 
-        cat = {
-            k: np.concatenate([p[k] for p in pieces])
-            for k in pieces[0]
-        } if pieces else {}
-        rep = cat.pop("__rep__", np.array([], dtype=np.int64))
-        res = pd.DataFrame(index=np.arange(len(rep)))
-        for c in by + keep:
-            res[c] = pdf[c].to_numpy()[rep]
-        if emit_idx:
-            res["idx"] = cat["idx"] if pieces else np.array([], dtype=np.int64)
-        for name in out_names:
-            res[name] = cat[name] if pieces else np.array([], dtype=float)
-        for g in ("n_in", "offset", "delta"):
-            res[g] = cat[g] if pieces else np.array([], dtype=float)
-        return res
-
-    # no broadcast dims (the reference's scalar / nchannels=None shape,
-    # tests/test_signal.py:36-38): the whole frame is ONE series — one
-    # bucket, exactly the reference's single-block concession
-    bucket = (
-        _bucket_expr(df.sparkSession, by, n_buckets) if by else F.lit(0)
-    )
-    out = df.withColumn(_BUCKET, bucket)
-    if by:
-        # Explicit fixed-width exchange instead of the groupBy's implicit
-        # one: the kernel stage is CPU-bound Python whose work-per-byte is
-        # far above a SQL stage's, so AQE's byte-based partition
-        # coalescing (which would fold a small-but-expensive shuffle onto
-        # 1-3 cores) is the wrong heuristic here. HashPartitioning on the
-        # bucket column satisfies the grouping distribution, so no second
-        # exchange is inserted; n_buckets already scales with the session's
-        # shuffle sizing at real scale.
-        out = out.repartition(n_buckets, F.col(_BUCKET))
-    return out.groupBy(_BUCKET).applyInPandas(run, schema=schema)
+    (grouped,) = _grouped_buckets([df], by, n_buckets)
+    return grouped.applyInPandas(run, schema=schema)
 
 
 def apply_cogrouped_kernel(
@@ -374,8 +410,9 @@ def apply_cogrouped_kernel(
     per BUCKET of many complete series pairs, not per pair, so
     Arrow/pandas overhead amortizes exactly like
     :func:`apply_series_kernel`. Inside a bucket both sides are sorted
-    once and paired by their ``by`` tuple; keys present on only one
-    side are skipped (inner alignment).
+    once and paired by their ``by`` tuple with inner alignment: keys
+    present on only one side are skipped, and a NULL key never pairs
+    (as in a SQL join). NULL samples reach the kernel as NaN.
     ``kernel(coords1, *arrays1, coords2, *arrays2) -> dict`` of 1-D
     arrays (per-pair call — pair shapes differ too much to block-batch).
     Group attrs (n_in/offset/delta) describe input 1.
@@ -391,94 +428,47 @@ def apply_cogrouped_kernel(
     # dedup otherwise prunes the right cogroup input down to the key.
     needed2 = list(dict.fromkeys(by + order2 + list(values2)))
     df2 = df2.select(*[F.col(c).alias(c) for c in needed2])
-    idx_field = "idx bigint, " if emit_idx else ""
-    keep_ddl = (_ddl_of(df1, keep) + ", ") if keep else ""
-    by_ddl = (_ddl_of(df1, by) + ", ") if by else ""
-    schema = f"{by_ddl}{keep_ddl}{idx_field}{out_fields}, {GROUP_ATTR_FIELDS}"
-    out_names = [f.strip().split()[0] for f in out_fields.split(",")]
-    all_names = (
-        by + keep + (["idx"] if emit_idx else []) + out_names
-        + ["n_in", "offset", "delta"]
-    )
+    schema, out_names = _output_schema(df1, by, keep, out_fields, emit_idx)
     n_buckets = buckets if buckets is not None else _default_buckets(df1)
 
+    def keys(pdf: pd.DataFrame, starts: np.ndarray) -> list[tuple | None]:
+        # each series' key tuple; None (never pairs) when any part is NULL
+        k = pdf[by].iloc[starts]
+        null = k.isna().any(axis=1)
+        return [None if na else tuple(r) for na, r in zip(null, k.to_numpy(object))]
+
     def run(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-        empty = pd.DataFrame({c: [] for c in all_names}).iloc[0:0]
-        if left.empty or right.empty:
-            return empty
         left = left.sort_values(by + order1, kind="mergesort")
         right = right.sort_values(by + order2, kind="mergesort")
         ls, le = _series_bounds(left, by)
         rs, re_ = _series_bounds(right, by)
-        lkeys = [left[c].to_numpy() for c in by]
-        rkeys = [right[c].to_numpy() for c in by]
-        rindex = {
-            tuple(a[s] for a in rkeys): (s, e) for s, e in zip(rs, re_)
-        }
-        all_coords1 = _coord_floats(left[order1[0]])
+        rindex = dict(zip(keys(right, rs), map(slice, rs, re_)))
+        rindex.pop(None, None)
+        coords1 = _coord_floats(left[order1[0]])
+        coords2 = _coord_floats(right[order2[0]])
         lvals = [left[v].to_numpy(dtype=float) for v in values1]
         rvals = [right[v].to_numpy(dtype=float) for v in values2]
-        all_coords2 = _coord_floats(right[order2[0]])
         # accumulate raw arrays per pair and assemble ONE DataFrame at
         # the end — building a pandas frame per pair dominates the
         # kernel cost for buckets of many small series
+        hits, ms = [], []
         outs: dict[str, list[np.ndarray]] = {name: [] for name in out_names}
-        heads: list[int] = []
-        ms: list[int] = []
-        ns: list[int] = []
-        offs: list[float] = []
-        dels: list[float] = []
-        for s, e in zip(ls, le):
-            hit = rindex.get(tuple(a[s] for a in lkeys))
-            if hit is None:
+        for i, (key, l) in enumerate(zip(keys(left, ls), map(slice, ls, le))):
+            r = rindex.get(key)
+            if r is None:
                 continue
-            coords1 = all_coords1[s:e]
-            coords2 = all_coords2[hit[0] : hit[1]]
-            n = len(coords1)
-            arrays1 = [v[s:e] for v in lvals]
-            arrays2 = [v[hit[0] : hit[1]] for v in rvals]
-            out = kernel(coords1, *arrays1, coords2, *arrays2)
-            m = len(next(iter(out.values()))) if out else 0
+            out = kernel(
+                coords1[l], *[v[l] for v in lvals], coords2[r], *[v[r] for v in rvals]
+            )
+            hits.append(i)
+            ms.append(len(next(iter(out.values()))) if out else 0)
             for name in out_names:
                 outs[name].append(np.asarray(out[name]))
-            heads.append(s)
-            ms.append(m)
-            ns.append(n)
-            offs.append(float(coords1[0]) if n else 0.0)
-            dels.append(
-                abs(float(coords1[-1] - coords1[0])) / (n - 1) if n > 1 else 0.0
-            )
-        if not heads:
-            return empty
-        ms_arr = np.asarray(ms, dtype=np.int64)
-        rep = np.repeat(np.asarray(heads, dtype=np.int64), ms_arr)
-        res = pd.DataFrame(index=np.arange(int(ms_arr.sum())))
-        for c in by + keep:
-            res[c] = left[c].to_numpy()[rep]
-        if emit_idx:
-            res["idx"] = np.concatenate(
-                [np.arange(m, dtype=np.int64) for m in ms]
-            ) if ms else np.array([], dtype=np.int64)
-        for name in out_names:
-            res[name] = np.concatenate(outs[name]) if outs[name] else np.array([])
-        res["n_in"] = np.repeat(np.asarray(ns, dtype=np.int64), ms_arr)
-        res["offset"] = np.repeat(np.asarray(offs), ms_arr)
-        res["delta"] = np.repeat(np.asarray(dels), ms_arr)
-        return res
+        cols = {name: np.concatenate(o) if o else np.empty(0) for name, o in outs.items()}
+        return _assemble(
+            left, by + keep, ls, _grid(coords1, ls, le), np.asarray(hits, dtype=np.int64),
+            np.asarray(ms, dtype=np.int64), cols, emit_idx,
+        )
 
-    bucket_expr = (
-        _bucket_expr(df1.sparkSession, by, n_buckets) if by else F.lit(0)
-    )
-    left = df1.withColumn(_BUCKET, bucket_expr)
-    right = df2.withColumn(_BUCKET, bucket_expr)
-    if by:
-        # same explicit exchange as apply_series_kernel: keep the
-        # CPU-bound cogrouped kernel stage at full width instead of
-        # letting byte-based AQE coalescing serialize it
-        left = left.repartition(n_buckets, F.col(_BUCKET))
-        right = right.repartition(n_buckets, F.col(_BUCKET))
-    return (
-        left.groupBy(_BUCKET)
-        .cogroup(right.groupBy(_BUCKET))
-        .applyInPandas(run, schema=schema)
-    )
+    left, right = _grouped_buckets([df1, df2], by, n_buckets)
+    return left.cogroup(right).applyInPandas(run, schema=schema)

@@ -6,9 +6,9 @@ answer is ``allow_rechunk=True`` (signal.py:422, 452) — force the whole
 time axis into one block per series. Ours is the same concession made
 explicit — one shuffle co-locates each full series — but batched: many
 series share one bucket, the cascaded-biquad kernel runs once per
-equal-length block numpy-vectorized ACROSS series, so the per-sample
-recursion loop is paid once per block, not once per series
-(:func:`xarray_scipy_spark.core.apply_series_kernel`).
+bucket over a right-zero-padded ragged batch, numpy-vectorized ACROSS
+series, so the per-sample recursion loop is paid once per bucket, not
+once per series (:func:`xarray_scipy_spark.core.apply_series_kernel`).
 
 Scale path beyond reference parity (SURVEY.md §7 "hard parts"): for a
 single series longer than worker memory, overlap-and-discard chunked
@@ -41,6 +41,7 @@ from ..core import (
     _BUCKET,
     _ddl_of,
     _default_buckets,
+    _padded,
     _series_bounds,
     apply_series_kernel,
     resolve_keep_attrs,
@@ -50,7 +51,6 @@ from ..kernels.dsp import (
     _validate_padtype,
     filtfilt_ragged,
     lfilter_ragged,
-    sosfilt_1d,
     sosfilt_ragged,
     sosfiltfilt_ragged,
 )
@@ -269,30 +269,22 @@ def sosfilt_chunked(
         starts, ends = _series_bounds(pdf, by)
         lengths = ends - starts
         keys = [pdf[k].to_numpy() for k in by]
-        x = pdf[value].to_numpy(dtype=float)
-        out_val = np.empty(len(pdf))
+        zi = np.stack(
+            [
+                _st.get(tuple(a[i] for a in keys), np.zeros((n_sections, 2)))
+                for i in starts
+            ]
+        )
+        # one ragged pass: zf is each row's state at its own last sample
+        (block,), mask = _padded([pdf[value].to_numpy(dtype=float)], starts, lengths)
+        y, zf = sosfilt_ragged(sos, block, lengths, zi=zi)
         zf_col = np.full(len(pdf), None, dtype=object)
-        for n in np.unique(lengths):
-            sel = np.flatnonzero(lengths == n)
-            s = starts[sel]
-            rows = (s[:, None] + np.arange(n)).ravel()
-            block = x[rows].reshape(len(s), n)
-            zi = np.stack(
-                [
-                    _st.get(
-                        tuple(a[i] for a in keys), np.zeros((n_sections, 2))
-                    )
-                    for i in s
-                ]
-            )
-            y, zf = sosfilt_1d(sos, block, zi=zi)
-            out_val[rows] = y.ravel()
-            for k_i, r in enumerate(s + n - 1):
-                zf_col[r] = zf[k_i].ravel().tolist()
+        for r, z in zip(ends - 1, zf):
+            zf_col[r] = z.ravel().tolist()
         res = pd.DataFrame({k: pdf[k].to_numpy() for k in by})
         res[dim] = pdf[dim].to_numpy()
         res["idx"] = pdf["__pos__"].to_numpy()
-        res["value"] = out_val
+        res["value"] = y[mask]
         res["zf"] = zf_col
         return res
 
