@@ -286,6 +286,67 @@ def test_decimate_large_q_analytic_tone():
 
 # ---------- ragged batching (the bucket-level recursion path) ----------
 
+def _direct_form_1(b, a, x, zi=()):
+    """Reference for the recursions that shares no code with them: the
+    difference equation y[n] = Σ b_k x[n−k] − Σ a_k y[n−k] (a[0]
+    normalized to 1), sample by sample. ``zi`` is a direct-form-II-
+    transposed initial state: entry n is what the samples before 0
+    contribute to y[n], so it is added to y[n] for n < len(zi)."""
+    b = np.asarray(b, dtype=float) / a[0]
+    a = np.asarray(a, dtype=float) / a[0]
+    y = np.zeros(len(x))
+    for n in range(len(x)):
+        acc = sum(b[k] * x[n - k] for k in range(min(n, len(b) - 1) + 1))
+        acc -= sum(a[k] * y[n - k] for k in range(1, min(n, len(a) - 1) + 1))
+        y[n] = acc + (zi[n] if n < len(zi) else 0.0)
+    return y
+
+
+def _padded_rows(rows):
+    lengths = np.array([len(r) for r in rows])
+    x = np.zeros((len(rows), max(lengths.max(), 1)))
+    for i, r in enumerate(rows):
+        x[i, : len(r)] = r
+    return x, lengths
+
+
+def test_ragged_recursions_match_direct_form_1():
+    """sosfilt_ragged (one difference equation per section) and
+    lfilter_ragged against the plain difference equation, per row of a
+    mixed-length batch with a nonzero initial state. Each row is cut in
+    two and the second part is seeded with the first part's ``zf``, so
+    the final state captured at each row's own last sample is checked
+    too."""
+    from xarray_scipy_spark.kernels.dsp import lfilter_ragged, sosfilt_ragged
+
+    rng = np.random.default_rng(29)
+    sos = butter_sos(4, 0.3)
+    b, a = np.array([0.4, -0.2, 0.1]), np.array([1.3, -0.5, 0.2, -0.05])
+    rows = [rng.standard_normal(n) for n in rng.integers(1, 60, size=9)]
+    cut = [len(r) // 2 for r in rows]
+    heads = _padded_rows([r[:c] for r, c in zip(rows, cut)])
+    tails = _padded_rows([r[c:] for r, c in zip(rows, cut)])
+
+    def sos_reference(x, zi):
+        for section, z in zip(sos, zi):
+            x = _direct_form_1(section[:3], section[3:], x, z)
+        return x
+
+    cases = (
+        (lambda x, n, zi: sosfilt_ragged(sos, x, n, zi=zi), sos_reference,
+         rng.standard_normal((len(rows), len(sos), 2))),
+        (lambda x, n, zi: lfilter_ragged(b, a, x, n, zi=zi),
+         lambda x, zi: _direct_form_1(b, a, x, zi),
+         rng.standard_normal((len(rows), 3))),
+    )
+    for run, reference, zi in cases:
+        y1, zf = run(*heads, zi)
+        y2, _ = run(*tails, zf)
+        for i, (r, c) in enumerate(zip(rows, cut)):
+            got = np.r_[y1[i, :c], y2[i, : len(r) - c]]
+            np.testing.assert_allclose(got, reference(r, zi[i]), atol=1e-9)
+
+
 def test_ragged_kernels_match_per_row():
     """sosfilt/sosfiltfilt/decimate over a right-zero-padded ragged
     batch must be sample-exact vs the per-row kernels — including the
@@ -418,6 +479,10 @@ def test_lfilter_matches_sos_cascade_and_fir():
     y, zf = lfilter_1d(b, a, np.full(60, 2.5), zi=zi * 2.5)
     np.testing.assert_allclose(y, 2.5, atol=1e-9)
     np.testing.assert_allclose(zf, zi * 2.5, atol=1e-9)
+    # a pure gain has no state: zf is empty, (0,) for a 1-D input
+    y, zf = lfilter_1d([2.0], [4.0], x[0], zi=np.zeros(0))
+    np.testing.assert_array_equal(y, 0.5 * x[0])
+    assert zf.shape == (0,)
     # ragged zf captured at each row's own last sample
     lens = np.array([50, 120, 80, 120])
     yr, zfr = lfilter_ragged(b, a, x, lens)

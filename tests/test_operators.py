@@ -656,31 +656,33 @@ def test_scalar_series_no_broadcast_dims(spark, sine_pdf):
 
 def test_sosfilt_chunked_equals_whole_series(spark):
     """Chunked filtering with zi handoff must be sample-for-sample
-    identical to the whole-series recursion."""
+    identical to the whole-series recursion, for a NULL series key too
+    (its state must hand off like any other key's)."""
     import pandas as pd
 
     from xarray_scipy_spark.kernels.dsp import sosfilt_1d
     from xarray_scipy_spark.kernels.filter_design import butter_sos
 
     rng = np.random.default_rng(17)
-    n, nch = 100, 3
+    n, keys = 100, [0, 1, 2, None]
     pdf = pd.concat(
         [
             pd.DataFrame(
-                {"ch": ch, "t": np.arange(n, dtype=float), "value": rng.standard_normal(n)}
+                {"ch": [ch] * n, "t": np.arange(n, dtype=float), "value": rng.standard_normal(n)}
             )
-            for ch in range(nch)
+            for ch in keys
         ],
         ignore_index=True,
     ).sample(frac=1.0, random_state=2)
     sos = butter_sos(4, 0.2)
-    out = xss.sosfilt_chunked(
-        sos, spark.createDataFrame(pdf), by=["ch"], dim="t", chunk_rows=16
-    ).toPandas()
-    assert len(out) == n * nch
-    for ch in range(nch):
-        got = out[out.ch == ch].sort_values("idx")["value"].to_numpy()
-        x = pdf[pdf.ch == ch].sort_values("t")["value"].to_numpy()
+    df = spark.createDataFrame(pdf, "ch long, t double, value double")
+    out = xss.sosfilt_chunked(sos, df, by=["ch"], dim="t", chunk_rows=16).toPandas()
+    assert len(out) == n * len(keys)
+    for ch in keys:
+        sel = out.ch.isna() if ch is None else out.ch == ch
+        got = out[sel].sort_values("idx")["value"].to_numpy()
+        src = pdf.ch.isna() if ch is None else pdf.ch == ch
+        x = pdf[src].sort_values("t")["value"].to_numpy()
         np.testing.assert_array_equal(got, sosfilt_1d(sos, x))
 
 

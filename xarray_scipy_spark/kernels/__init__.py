@@ -2,7 +2,10 @@
 
 The distribution layer (:mod:`xarray_scipy_spark.core`) applies these
 per series inside Arrow-batched pandas UDFs; nothing in this package
-touches Spark.
+touches Spark. Each filter recursion is written once, in ragged form
+(a right-zero-padded batch plus per-row lengths, ``dsp.*_ragged``);
+the ``_1d`` entry points exported here run that kernel with every row
+at full length.
 """
 
 from .dsp import (

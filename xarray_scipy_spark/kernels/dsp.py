@@ -4,20 +4,28 @@ These are the 1-D kernels the reference obtains from scipy and applies
 per broadcast-dim slice via ``xr.apply_ufunc`` (``/root/reference/
 xarray_scipy/signal.py:84, 126, 292, 384, 408, 438``). scipy is not
 available here, so each is re-derived from its published definition.
-Every kernel is vectorized numpy over one series; the *distribution*
-across series is Spark's job (``applyInPandas`` per group), exactly as
-dask chunks were the reference's.
+Every kernel is vectorized numpy over a 2-D batch ``(n_series,
+n_samples)``, so one Arrow batch amortizes Python overhead across the
+many short series of a group partition; the *distribution* across
+series is Spark's job (``applyInPandas`` per group), exactly as dask
+chunks were the reference's.
 
-All kernels operate on a 2-D batch ``(n_series, n_samples)`` where
-profitable, so one Arrow batch amortizes Python overhead across the
-many short series of a group partition.
+Each recursion is written once, in ragged form: ``sosfilt_ragged`` and
+``lfilter_ragged`` hold the only per-sample loops and take a
+right-zero-padded batch plus each row's true length, and one
+zero-phase routine runs both ``sosfiltfilt_ragged`` and
+``filtfilt_ragged``. The ``_1d`` entry points (``sosfilt_1d``,
+``lfilter_1d``, ``sosfiltfilt_1d``, ``decimate_1d``) are those kernels
+with every row at full length, a 1-D input squeezed back to 1-D.
 """
 
 from __future__ import annotations
 
+from functools import partial
+
 import numpy as np
 
-from .filter_design import cheby1_sos, firwin, sosfilt_zi
+from .filter_design import cheby1_sos, firwin, lfilter_zi, sosfilt_zi
 
 __all__ = [
     "fftconvolve_1d",
@@ -197,46 +205,42 @@ def resample_fourier_freq(xf: np.ndarray, num: int) -> np.ndarray:
     return np.fft.ifft(_resample_spectrum(xf, num), axis=-1) * (num / float(n))
 
 
+def _full_rows(x) -> tuple[np.ndarray, np.ndarray]:
+    """A 1-D ``(n,)`` or 2-D ``(k, n)`` input as a ragged batch whose
+    rows are all at full length: ``(batch, lengths)``."""
+    batch = np.atleast_2d(np.asarray(x, dtype=float))
+    return batch, np.full(batch.shape[0], batch.shape[1], dtype=np.int64)
+
+
+def _rows_ending(lengths: np.ndarray) -> dict[int, np.ndarray]:
+    """Sample index -> the rows whose last sample it is. Built once per
+    call, so a per-sample loop captures each row's final state with one
+    dict lookup instead of a compare over every row."""
+    last = np.asarray(lengths, dtype=np.int64) - 1
+    order = np.argsort(last, kind="stable")
+    idx, first = np.unique(last[order], return_index=True)
+    return dict(zip(idx.tolist(), np.split(order, first[1:])))
+
+
+def _initial_state(zi, shape: tuple[int, ...]) -> np.ndarray:
+    if zi is None:
+        return np.zeros(shape)
+    return np.broadcast_to(np.asarray(zi, dtype=float), shape).copy()
+
+
 def sosfilt_1d(sos: np.ndarray, x: np.ndarray, zi: np.ndarray | None = None):
     """Cascaded-biquad IIR filter, direct-form II transposed
     (``scipy.signal.sosfilt``; reference signal.py:403-430).
 
-    ``x`` may be 1-D ``(n,)`` or 2-D ``(n_series, n)``; the recursion is
-    sequential along the last axis but numpy-vectorized across series,
-    which is what makes one Arrow batch of many short series cheap.
-    Returns ``y`` (and the final state when ``zi`` is given, matching the
-    scipy tuple contract the reference stumbles over at signal.py:417-419).
+    ``x`` may be 1-D ``(n,)`` or 2-D ``(n_series, n)``: this is
+    :func:`sosfilt_ragged` with every row at full length. Returns ``y``
+    (and the final state when ``zi`` is given, matching the scipy tuple
+    contract the reference stumbles over at signal.py:417-419).
     """
-    sos = np.atleast_2d(np.asarray(sos, dtype=float))
-    x = np.asarray(x, dtype=float)
-    squeeze = x.ndim == 1
-    y = np.atleast_2d(x).astype(float).copy()
-    n_series, n = y.shape
-    n_sections = sos.shape[0]
-    return_zi = zi is not None
-    if zi is None:
-        state = np.zeros((n_series, n_sections, 2))
-    else:
-        state = np.broadcast_to(
-            np.asarray(zi, dtype=float), (n_series, n_sections, 2)
-        ).copy()
-    for s in range(n_sections):
-        b0, b1, b2, a0, a1, a2 = sos[s]
-        b0, b1, b2, a1, a2 = b0 / a0, b1 / a0, b2 / a0, a1 / a0, a2 / a0
-        z1 = state[:, s, 0].copy()
-        z2 = state[:, s, 1].copy()
-        for i in range(n):
-            xi = y[:, i].copy()
-            yi = b0 * xi + z1
-            z1 = b1 * xi - a1 * yi + z2
-            z2 = b2 * xi - a2 * yi
-            y[:, i] = yi
-        state[:, s, 0] = z1
-        state[:, s, 1] = z2
-    if squeeze:
-        y = y[0]
-        state = state[0]
-    return (y, state) if return_zi else y
+    y, zf = sosfilt_ragged(sos, *_full_rows(x), zi=zi)
+    if np.ndim(x) == 1:
+        y, zf = y[0], zf[0]
+    return y if zi is None else (y, zf)
 
 
 def sosfilt_ragged(
@@ -248,8 +252,9 @@ def sosfilt_ragged(
     """Causal SOS filter over a RAGGED batch: ``x`` is ``(k, n_max)``
     right-zero-padded, ``lengths[i]`` the true sample count of row
     ``i``. One per-sample loop for the whole batch regardless of how
-    many distinct lengths it mixes — the padding is exact because the
-    filter is causal (``y[:, :lengths[i]]`` depends only on
+    many distinct lengths it mixes: the recursion is sequential along
+    samples and numpy-vectorized across rows. The padding is exact
+    because the filter is causal (``y[:, :lengths[i]]`` depends only on
     ``x[:, :lengths[i]]``); the tail beyond each row's length is
     garbage the caller must mask.
 
@@ -259,46 +264,50 @@ def sosfilt_ragged(
     """
     sos = np.atleast_2d(np.asarray(sos, dtype=float))
     y = np.atleast_2d(np.asarray(x, dtype=float)).copy()
-    lengths = np.asarray(lengths, dtype=np.int64)
     n_series, n = y.shape
     n_sections = sos.shape[0]
-    if zi is None:
-        state = np.zeros((n_series, n_sections, 2))
-    else:
-        state = np.broadcast_to(
-            np.asarray(zi, dtype=float), (n_series, n_sections, 2)
-        ).copy()
+    state = _initial_state(zi, (n_series, n_sections, 2))
     final = state.copy()
-    last = lengths - 1
+    ends = _rows_ending(lengths)
     for s in range(n_sections):
         b0, b1, b2, a0, a1, a2 = sos[s]
         b0, b1, b2, a1, a2 = b0 / a0, b1 / a0, b2 / a0, a1 / a0, a2 / a0
-        z1 = state[:, s, 0].copy()
-        z2 = state[:, s, 1].copy()
+        z1, z2 = state[:, s, 0], state[:, s, 1]
         for i in range(n):
             xi = y[:, i].copy()
             yi = b0 * xi + z1
             z1, z2 = b1 * xi - a1 * yi + z2, b2 * xi - a2 * yi
             y[:, i] = yi
-            hit = last == i
-            if hit.any():
-                final[hit, s, 0] = z1[hit]
-                final[hit, s, 1] = z2[hit]
-        state[:, s, 0] = z1
-        state[:, s, 1] = z2
+            rows = ends.get(i)
+            if rows is not None:
+                final[rows, s, 0] = z1[rows]
+                final[rows, s, 1] = z2[rows]
     return y, final
+
+
+_PADTYPES = ("odd", "even", "constant", None)
+
+
+def _validate_padtype(padtype) -> None:
+    if padtype not in _PADTYPES:
+        raise ValueError(
+            f"Unknown value {padtype!r} given to padtype. padtype must be "
+            "'even', 'odd', 'constant', or None."
+        )
 
 
 def _edge_ext_ragged(
     x: np.ndarray, lengths: np.ndarray, p: int, padtype: str | None
 ) -> tuple[np.ndarray, np.ndarray]:
-    """Per-row scipy edge extension over a ragged right-padded batch:
-    returns ``(ext, ext_lens)`` where ``ext`` is ``(k, n_max + 2p)``
-    with each row's ``padtype`` head/tail extension in place and the
-    region beyond ``ext_lens[i] = lengths[i] + 2p`` zeroed. Shared by
-    the sos- and (b, a)-form zero-phase filters."""
+    """Per-row scipy edge extension (``odd_ext`` / ``even_ext`` /
+    ``const_ext``) over a ragged right-padded batch: returns
+    ``(ext, ext_lens)`` where ``ext`` is ``(k, n_max + 2p)`` with each
+    row's ``padtype`` head/tail extension in place and the region
+    beyond ``ext_lens[i] = lengths[i] + 2p`` zeroed."""
     k, n_max = x.shape
-    if p >= int(lengths.min()):
+    # an empty batch checks padlen against the full width, as a 2-D
+    # input with every row at full length would
+    if p >= int(lengths.min(initial=n_max)):
         raise ValueError(
             f"The length of the input vector x must be greater than padlen, "
             f"which is {p}."
@@ -327,6 +336,56 @@ def _edge_ext_ragged(
     return ext, lengths + 2 * p
 
 
+def _zero_phase_ragged(causal, zi, x, lengths, padlen, padtype) -> np.ndarray:
+    """The forward-backward routine of both zero-phase filters: per-row
+    edge extension by ``padlen`` (0 when ``padtype`` is None), the
+    causal pass ``causal(x, lengths, zi) -> (y, zf)`` seeded with the
+    steady-state ``zi`` scaled by each row's first extended sample,
+    per-row reversal about each row's own extended length, the same
+    pass again, then reversal and trim. Output padded to ``(k, n_max)``
+    with the tail beyond each row's length zeroed."""
+    x = np.atleast_2d(np.asarray(x, dtype=float))
+    lengths = np.asarray(lengths, dtype=np.int64)
+    p = 0 if padtype is None else int(padlen)
+    ext, ext_lens = _edge_ext_ragged(x, lengths, p, padtype)
+    n_max = x.shape[1]
+    L = n_max + 2 * p
+    j = np.arange(L)[None, :]
+
+    def seeded(v):
+        return causal(v, ext_lens, zi[None] * v[:, :1].reshape(-1, *[1] * zi.ndim))[0]
+
+    y = seeded(ext)
+    ridx = np.clip(ext_lens[:, None] - 1 - j, 0, L - 1)
+    y = seeded(np.where(j < ext_lens[:, None], np.take_along_axis(y, ridx, axis=1), 0.0))
+    lens = lengths[:, None]
+    t = np.arange(n_max)[None, :]
+    oidx = np.clip(lens + p - 1 - t, 0, L - 1)
+    return np.where(t < lens, np.take_along_axis(y, oidx, axis=1), 0.0)
+
+
+def sosfiltfilt_1d(
+    sos: np.ndarray,
+    x: np.ndarray,
+    padlen: int | None = None,
+    padtype: str | None = "odd",
+) -> np.ndarray:
+    """Zero-phase forward-backward IIR filter
+    (``scipy.signal.sosfiltfilt``; reference signal.py:433-461, which
+    forwards ``padtype``/``padlen`` straight to scipy): this is
+    :func:`sosfiltfilt_ragged` with every row at full length.
+
+    Edge-extends per ``padtype`` ('odd'/'even'/'constant'/None), seeds
+    each pass with steady-state initial conditions scaled by the first
+    sample, filters forward then backward, and trims the padding.
+    Output length equals input length. ``padtype=None`` means no
+    extension (scipy forces ``padlen = 0``); inputs not longer than
+    ``padlen`` raise, as in scipy.
+    """
+    y = sosfiltfilt_ragged(sos, *_full_rows(x), padlen=padlen, padtype=padtype)
+    return y[0] if np.ndim(x) == 1 else y
+
+
 def sosfiltfilt_ragged(
     sos: np.ndarray,
     x: np.ndarray,
@@ -334,35 +393,41 @@ def sosfiltfilt_ragged(
     padlen: int | None = None,
     padtype: str | None = "odd",
 ) -> np.ndarray:
-    """Zero-phase forward-backward filter over a ragged right-padded
-    batch — per-row edge extension (``padtype`` ∈ odd/even/constant/
-    None, scipy semantics), per-row reversal about each row's own
-    extended length, one batched recursion per pass. Sample-exact vs
-    :func:`sosfiltfilt_1d` applied per row (asserted in
-    tests/test_kernels.py); output padded to ``(k, n_max)`` with the
-    tail beyond each row's length zeroed."""
+    """Zero-phase forward-backward SOS filter over a ragged
+    right-padded batch (``padtype`` ∈ odd/even/constant/None, scipy
+    semantics; default ``padlen`` 3·(2·n_sections + 1)), both passes
+    batched by :func:`sosfilt_ragged`. Output padded to ``(k, n_max)``
+    with the tail beyond each row's length zeroed."""
     _validate_padtype(padtype)
     sos = np.atleast_2d(np.asarray(sos, dtype=float))
-    x = np.atleast_2d(np.asarray(x, dtype=float))
-    lengths = np.asarray(lengths, dtype=np.int64)
-    if padtype is None:
-        padlen = 0
-    elif padlen is None:
+    if padlen is None:
         padlen = 3 * (2 * sos.shape[0] + 1)
-    p = int(padlen)
-    ext, ext_lens = _edge_ext_ragged(x, lengths, p, padtype)
-    k, n_max = x.shape
-    lens = lengths[:, None]
-    L = n_max + 2 * p
-    j = np.arange(L)[None, :]
-    zi = sosfilt_zi(sos)
-    y, _ = sosfilt_ragged(sos, ext, ext_lens, zi=zi[None] * ext[:, :1][..., None])
-    ridx = np.clip(ext_lens[:, None] - 1 - j, 0, L - 1)
-    rev = np.where(j < ext_lens[:, None], np.take_along_axis(y, ridx, axis=1), 0.0)
-    y2, _ = sosfilt_ragged(sos, rev, ext_lens, zi=zi[None] * rev[:, :1][..., None])
-    t = np.arange(n_max)[None, :]
-    oidx = np.clip(lens + p - 1 - t, 0, L - 1)
-    return np.where(t < lens, np.take_along_axis(y2, oidx, axis=1), 0.0)
+    return _zero_phase_ragged(
+        partial(sosfilt_ragged, sos), sosfilt_zi(sos), x, lengths, padlen, padtype
+    )
+
+
+def decimate_1d(
+    x: np.ndarray,
+    q: int,
+    n: int | None = None,
+    ftype: str = "iir",
+    zero_phase: bool = True,
+) -> np.ndarray:
+    """Anti-aliased downsample by integer factor ``q``
+    (``scipy.signal.decimate``; reference signal.py:109-152): this is
+    :func:`decimate_ragged` with every row at full length.
+
+    iir: order-``n`` (default 8) Chebyshev-I low-pass at 0.8/q with
+    0.05 dB ripple, zero-phase by default. fir: ``n+1``-tap (default
+    30*q+1 per scipy) Hamming firwin at 1/q. Output: ``x[::q]`` of the
+    filtered signal -> length ``ceil(len/q)``; the reference's declared
+    ``len//q`` (signal.py:143-145) truncates the last sample when
+    ``len % q != 0`` — we keep scipy's actual semantics and document the
+    divergence at the operator layer.
+    """
+    y, _ = decimate_ragged(*_full_rows(x), q, n=n, ftype=ftype, zero_phase=zero_phase)
+    return y[0] if np.ndim(x) == 1 else y
 
 
 def decimate_ragged(
@@ -373,8 +438,9 @@ def decimate_ragged(
     ftype: str = "iir",
     zero_phase: bool = True,
 ) -> tuple[np.ndarray, np.ndarray]:
-    """:func:`decimate_1d` over a ragged right-padded batch. Exact per
-    row: the IIR paths use the ragged causal/zero-phase kernels; the
+    """The filter-and-downsample of :func:`decimate_1d` over a ragged
+    right-padded batch. Exact per row: the IIR paths use the ragged
+    causal/zero-phase kernels; the
     FIR path convolves the padded matrix directly — linear convolution
     implicitly zero-pads past each signal's end, so the padded rows
     compute the identical values. Returns ``(y_padded, out_lengths)``
@@ -393,123 +459,6 @@ def decimate_ragged(
     elif ftype == "fir":
         numtaps = (30 * q if n is None else n) + 1
         if zero_phase and numtaps % 2 == 0:
-            numtaps += 1
-        h = firwin(numtaps, 1.0 / q)
-        if zero_phase:
-            y = fftconvolve_1d(x, h, mode="same") if numtaps > 1 else x
-        else:
-            full = fftconvolve_1d(x, h, mode="full")
-            y = full[..., : x.shape[-1]]
-    else:
-        raise ValueError(f"ftype must be 'iir' or 'fir', got {ftype!r}")
-    return y[..., ::q], (lengths + q - 1) // q
-
-
-_PADTYPES = ("odd", "even", "constant", None)
-
-
-def _validate_padtype(padtype) -> None:
-    if padtype not in _PADTYPES:
-        raise ValueError(
-            f"Unknown value {padtype!r} given to padtype. padtype must be "
-            "'even', 'odd', 'constant', or None."
-        )
-
-
-def _pad_ext(x: np.ndarray, n: int, padtype: str | None) -> np.ndarray:
-    """Edge extension at both ends along the last axis (scipy
-    ``odd_ext`` / ``even_ext`` / ``const_ext``; ``None`` -> no pad)."""
-    if n == 0 or padtype is None:
-        return x
-    mleft, mright = x[..., n:0:-1], x[..., -2 : -(n + 2) : -1]
-    if padtype == "odd":
-        left = 2 * x[..., :1] - mleft
-        right = 2 * x[..., -1:] - mright
-    elif padtype == "even":
-        left, right = mleft, mright
-    else:  # constant
-        left = np.repeat(x[..., :1], n, axis=-1)
-        right = np.repeat(x[..., -1:], n, axis=-1)
-    return np.concatenate([left, x, right], axis=-1)
-
-
-def _odd_ext(x: np.ndarray, n: int) -> np.ndarray:
-    """Odd extension at both ends along the last axis (scipy ``odd_ext``)."""
-    return _pad_ext(x, n, "odd")
-
-
-def sosfiltfilt_1d(
-    sos: np.ndarray,
-    x: np.ndarray,
-    padlen: int | None = None,
-    padtype: str | None = "odd",
-) -> np.ndarray:
-    """Zero-phase forward-backward IIR filter
-    (``scipy.signal.sosfiltfilt``; reference signal.py:433-461, which
-    forwards ``padtype``/``padlen`` straight to scipy).
-
-    Edge-extends per ``padtype`` ('odd'/'even'/'constant'/None), seeds
-    each pass with steady-state initial conditions scaled by the first
-    sample, filters forward then backward, and trims the padding.
-    Output length equals input length. ``padtype=None`` means no
-    extension (scipy forces ``padlen = 0``).
-    """
-    _validate_padtype(padtype)
-    sos = np.atleast_2d(np.asarray(sos, dtype=float))
-    x = np.asarray(x, dtype=float)
-    n = x.shape[-1]
-    if padtype is None:
-        padlen = 0
-    elif padlen is None:
-        ntaps = 2 * sos.shape[0] + 1
-        padlen = 3 * ntaps
-    if padlen >= n:
-        # scipy parity: sosfiltfilt raises for inputs not longer than padlen
-        raise ValueError(
-            f"The length of the input vector x must be greater than padlen, "
-            f"which is {padlen}."
-        )
-    ext = _pad_ext(x, padlen, padtype)
-    zi = sosfilt_zi(sos)  # (n_sections, 2)
-    x0 = ext[..., :1]
-    y, _ = sosfilt_1d(sos, ext, zi=zi[None] * x0[..., None] if ext.ndim == 2 else zi * x0)
-    y = y[..., ::-1]
-    y0 = y[..., :1]
-    y, _ = sosfilt_1d(sos, y, zi=zi[None] * y0[..., None] if y.ndim == 2 else zi * y0)
-    y = y[..., ::-1]
-    if padlen > 0:
-        y = y[..., padlen:-padlen]
-    return y
-
-
-def decimate_1d(
-    x: np.ndarray,
-    q: int,
-    n: int | None = None,
-    ftype: str = "iir",
-    zero_phase: bool = True,
-) -> np.ndarray:
-    """Anti-aliased downsample by integer factor ``q``
-    (``scipy.signal.decimate``; reference signal.py:109-152).
-
-    iir: order-``n`` (default 8) Chebyshev-I low-pass at 0.8/q with
-    0.05 dB ripple, zero-phase by default. fir: ``n+1``-tap (default
-    30*q+1 per scipy) Hamming firwin at 1/q. Output: ``x[::q]`` of the
-    filtered signal -> length ``ceil(len/q)``; the reference's declared
-    ``len//q`` (signal.py:143-145) truncates the last sample when
-    ``len % q != 0`` — we keep scipy's actual semantics and document the
-    divergence at the operator layer.
-    """
-    x = np.asarray(x, dtype=float)
-    if q < 1:
-        raise ValueError("q must be >= 1")
-    if ftype == "iir":
-        order = 8 if n is None else n
-        sos = cheby1_sos(order, 0.05, 0.8 / q)
-        y = sosfiltfilt_1d(sos, x) if zero_phase else sosfilt_1d(sos, x)
-    elif ftype == "fir":
-        numtaps = (30 * q if n is None else n) + 1
-        if zero_phase and numtaps % 2 == 0:
             # a centered 'same' convolution is only truly zero-phase for a
             # symmetric odd-length FIR; an even tap count would leave a
             # half-sample shift
@@ -523,7 +472,7 @@ def decimate_1d(
             y = full[..., : x.shape[-1]]
     else:
         raise ValueError(f"ftype must be 'iir' or 'fir', got {ftype!r}")
-    return y[..., ::q]
+    return y[..., ::q], (lengths + q - 1) // q
 
 
 def _norm_ba(b, a) -> tuple[np.ndarray, np.ndarray, int]:
@@ -544,37 +493,14 @@ def lfilter_1d(b, a, x: np.ndarray, zi: np.ndarray | None = None):
     """Transfer-function IIR/FIR filter, direct-form II transposed
     (``scipy.signal.lfilter`` semantics — the (b, a) surface the
     reference's sos-only wrappers skip). ``x`` is ``(n,)`` or batched
-    ``(n_series, n)``; sequential along samples, numpy-vectorized
-    across series. With ``zi`` (shape ``(n-1,)`` per series or
+    ``(n_series, n)``: this is :func:`lfilter_ragged` with every row at
+    full length. With ``zi`` (shape ``(n-1,)`` per series or
     broadcastable) returns ``(y, zf)``, else ``y``.
     """
-    bb, aa, n = _norm_ba(b, a)
-    x = np.asarray(x, dtype=float)
-    squeeze = x.ndim == 1
-    y = np.atleast_2d(x).astype(float).copy()
-    k, n_max = y.shape
-    ns = n - 1
-    return_zi = zi is not None
-    if ns == 0:
-        out = y * bb[0]
-        if squeeze:
-            out = out[0]
-        return (out, np.zeros((k, 0))) if return_zi else out
-    if zi is None:
-        state = np.zeros((k, ns))
-    else:
-        state = np.broadcast_to(np.asarray(zi, dtype=float), (k, ns)).copy()
-    for i in range(n_max):
-        xi = y[:, i].copy()
-        yi = bb[0] * xi + state[:, 0]
-        for s in range(ns - 1):
-            state[:, s] = bb[s + 1] * xi + state[:, s + 1] - aa[s + 1] * yi
-        state[:, ns - 1] = bb[ns] * xi - aa[ns] * yi
-        y[:, i] = yi
-    if squeeze:
-        y = y[0]
-        state = state[0]
-    return (y, state) if return_zi else y
+    y, zf = lfilter_ragged(b, a, *_full_rows(x), zi=zi)
+    if np.ndim(x) == 1:
+        y, zf = y[0], zf[0]
+    return y if zi is None else (y, zf)
 
 
 def lfilter_ragged(
@@ -586,17 +512,13 @@ def lfilter_ragged(
     ``zf`` captured at each row's own last sample."""
     bb, aa, n = _norm_ba(b, a)
     y = np.atleast_2d(np.asarray(x, dtype=float)).copy()
-    lengths = np.asarray(lengths, dtype=np.int64)
     k, n_max = y.shape
     ns = n - 1
     if ns == 0:
         return y * bb[0], np.zeros((k, 0))
-    if zi is None:
-        state = np.zeros((k, ns))
-    else:
-        state = np.broadcast_to(np.asarray(zi, dtype=float), (k, ns)).copy()
+    state = _initial_state(zi, (k, ns))
     final = state.copy()
-    last = lengths - 1
+    ends = _rows_ending(lengths)
     for i in range(n_max):
         xi = y[:, i].copy()
         yi = bb[0] * xi + state[:, 0]
@@ -604,9 +526,9 @@ def lfilter_ragged(
             state[:, s] = bb[s + 1] * xi + state[:, s + 1] - aa[s + 1] * yi
         state[:, ns - 1] = bb[ns] * xi - aa[ns] * yi
         y[:, i] = yi
-        hit = last == i
-        if hit.any():
-            final[hit] = state[hit]
+        rows = ends.get(i)
+        if rows is not None:
+            final[rows] = state[rows]
     return y, final
 
 
@@ -619,34 +541,18 @@ def filtfilt_ragged(
     padtype: str | None = "odd",
 ) -> np.ndarray:
     """Zero-phase forward-backward (b, a) filter over a ragged batch
-    (``scipy.signal.filtfilt`` pad-method semantics): per-row edge
-    extension, steady-state ``lfilter_zi`` seeding scaled by each
-    row's first extended sample, both passes batched. Output padded to
-    ``(k, n_max)`` with each row's tail zeroed."""
-    from .filter_design import lfilter_zi
-
+    (``scipy.signal.filtfilt`` pad-method semantics; default ``padlen``
+    3·max(len(a), len(b))): the zero-phase routine of
+    :func:`sosfiltfilt_ragged` with :func:`lfilter_ragged` passes and
+    ``lfilter_zi`` seeding. Output padded to ``(k, n_max)`` with each
+    row's tail zeroed."""
     _validate_padtype(padtype)
     bb, aa, n = _norm_ba(b, a)
-    x = np.atleast_2d(np.asarray(x, dtype=float))
-    lengths = np.asarray(lengths, dtype=np.int64)
-    if padtype is None:
-        padlen = 0
-    elif padlen is None:
-        padlen = 3 * max(len(np.atleast_1d(a)), len(np.atleast_1d(b)))
-    p = int(padlen)
-    ext, ext_lens = _edge_ext_ragged(x, lengths, p, padtype)
-    k, n_max = x.shape
-    lens = lengths[:, None]
-    L = n_max + 2 * p
-    j = np.arange(L)[None, :]
-    zi = lfilter_zi(b, a)
-    y, _ = lfilter_ragged(bb, aa, ext, ext_lens, zi=zi[None] * ext[:, :1])
-    ridx = np.clip(ext_lens[:, None] - 1 - j, 0, L - 1)
-    rev = np.where(j < ext_lens[:, None], np.take_along_axis(y, ridx, axis=1), 0.0)
-    y2, _ = lfilter_ragged(bb, aa, rev, ext_lens, zi=zi[None] * rev[:, :1])
-    t = np.arange(n_max)[None, :]
-    oidx = np.clip(lens + p - 1 - t, 0, L - 1)
-    return np.where(t < lens, np.take_along_axis(y2, oidx, axis=1), 0.0)
+    if padlen is None:
+        padlen = 3 * n
+    return _zero_phase_ragged(
+        partial(lfilter_ragged, bb, aa), lfilter_zi(b, a), x, lengths, padlen, padtype
+    )
 
 
 def _upfirdn_out_len(h_len: int, n_in, up: int, down: int):

@@ -88,6 +88,37 @@ def _as_sos(sos) -> np.ndarray:
     return sos
 
 
+def ragged_series_op(
+    df: DataFrame, fn, spacing, *, by, dim, value, keep_attrs
+) -> DataFrame:
+    """Apply ``fn(x, lengths) -> (y, out_lengths)``, a ragged batch
+    kernel over right-zero-padded ``(n_series, n_max)`` series
+    (:func:`~xarray_scipy_spark.core.apply_series_kernel` with
+    ``batch_ragged``: one call per bucket, whatever lengths it mixes),
+    to each series of ``value`` along ``dim``.
+
+    Output ``[*by, idx, value, <dim>, n_in, offset, delta]``; the
+    coordinate is ``offset + idx·spacing`` in ``dim``'s own type.
+    """
+
+    def kernel(x, lengths):
+        y, out_lengths = fn(x, lengths)
+        return {"value": y, "__lengths__": out_lengths}
+
+    kernel.batch_ragged = True
+    res = apply_series_kernel(
+        df,
+        kernel,
+        by=by,
+        order=dim,
+        values=[value],
+        out_fields="value double",
+        keep=resolve_keep_attrs(df, keep_attrs),
+    )
+    coord = linear_coord("idx", "offset", spacing)
+    return res.withColumn(dim, restore_coord_dtype(df, dim, coord))
+
+
 def sosfilt(
     sos,
     df: DataFrame,
@@ -115,25 +146,12 @@ def sosfilt(
                 f"got {zi.shape}"
             )
 
-    # ragged batch (core.apply_series_kernel): one recursion pass per
-    # bucket over a right-zero-padded matrix — exact by causality
-    def kernel(x, lengths):
-        y, _zf = sosfilt_ragged(sos, x, lengths, zi=zi)
-        return {"value": y, "__lengths__": lengths}
+    def fn(x, lengths):
+        return sosfilt_ragged(sos, x, lengths, zi=zi)[0], lengths
 
-    kernel.batch_ragged = True
-
-    res = apply_series_kernel(
-        df,
-        kernel,
-        by=by,
-        order=dim,
-        values=[value],
-        out_fields="value double",
-        keep=resolve_keep_attrs(df, keep_attrs),
+    return ragged_series_op(
+        df, fn, "delta", by=by, dim=dim, value=value, keep_attrs=keep_attrs
     )
-    coord = linear_coord("idx", "offset", "delta")
-    return res.withColumn(dim, restore_coord_dtype(df, dim, coord))
 
 
 def sosfiltfilt(
@@ -155,30 +173,14 @@ def sosfiltfilt(
     _validate_padtype(padtype)  # fail at call time, not inside the UDF
     sos = _as_sos(sos)
 
-    # ragged batch: edge extension, both recursion passes, and the
-    # per-row reversals all run once per bucket (kernels.dsp
-    # sosfiltfilt_ragged), sample-exact vs the per-series kernel
-    def kernel(x, lengths):
-        return {
-            "value": sosfiltfilt_ragged(
-                sos, x, lengths, padlen=padlen, padtype=padtype
-            ),
-            "__lengths__": lengths,
-        }
+    # edge extension, both recursion passes and the per-row reversals
+    # all run once per bucket (kernels.dsp.sosfiltfilt_ragged)
+    def fn(x, lengths):
+        return sosfiltfilt_ragged(sos, x, lengths, padlen, padtype), lengths
 
-    kernel.batch_ragged = True
-
-    res = apply_series_kernel(
-        df,
-        kernel,
-        by=by,
-        order=dim,
-        values=[value],
-        out_fields="value double",
-        keep=resolve_keep_attrs(df, keep_attrs),
+    return ragged_series_op(
+        df, fn, "delta", by=by, dim=dim, value=value, keep_attrs=keep_attrs
     )
-    coord = linear_coord("idx", "offset", "delta")
-    return res.withColumn(dim, restore_coord_dtype(df, dim, coord))
 
 
 def sosfilt_chunked(
@@ -261,8 +263,14 @@ def sosfilt_chunked(
                     "zf": pd.Series(dtype=object),
                 }
             )
+        # a NULL bigint key arrives as NaN and NaN != NaN: map every
+        # NULL to None so two NULL keys are one series, as in
+        # core._series_bounds
+        def key(vals):
+            return tuple(None if pd.isna(v) else v for v in vals)
+
         _st = {
-            tuple(r[k] for k in by): np.asarray(r["zf"]).reshape(n_sections, 2)
+            key(r[k] for k in by): np.asarray(r["zf"]).reshape(n_sections, 2)
             for _, r in st_pdf.iterrows()
         }
         pdf = pdf.sort_values(by + ["__pos__"], kind="mergesort")
@@ -271,7 +279,7 @@ def sosfilt_chunked(
         keys = [pdf[k].to_numpy() for k in by]
         zi = np.stack(
             [
-                _st.get(tuple(a[i] for a in keys), np.zeros((n_sections, 2)))
+                _st.get(key(a[i] for a in keys), np.zeros((n_sections, 2)))
                 for i in starts
             ]
         )
@@ -344,23 +352,12 @@ def lfilter(
         if zi.shape != (ns,):
             raise ValueError(f"zi must have shape ({ns},), got {zi.shape}")
 
-    def kernel(x, lengths):
-        y, _zf = lfilter_ragged(b, a, x, lengths, zi=zi)
-        return {"value": y, "__lengths__": lengths}
+    def fn(x, lengths):
+        return lfilter_ragged(b, a, x, lengths, zi=zi)[0], lengths
 
-    kernel.batch_ragged = True
-
-    res = apply_series_kernel(
-        df,
-        kernel,
-        by=by,
-        order=dim,
-        values=[value],
-        out_fields="value double",
-        keep=resolve_keep_attrs(df, keep_attrs),
+    return ragged_series_op(
+        df, fn, "delta", by=by, dim=dim, value=value, keep_attrs=keep_attrs
     )
-    coord = linear_coord("idx", "offset", "delta")
-    return res.withColumn(dim, restore_coord_dtype(df, dim, coord))
 
 
 def filtfilt(
@@ -385,24 +382,9 @@ def filtfilt(
     if a[0] == 0.0:
         raise ValueError("a[0] must be nonzero")
 
-    def kernel(x, lengths):
-        return {
-            "value": filtfilt_ragged(
-                b, a, x, lengths, padlen=padlen, padtype=padtype
-            ),
-            "__lengths__": lengths,
-        }
+    def fn(x, lengths):
+        return filtfilt_ragged(b, a, x, lengths, padlen, padtype), lengths
 
-    kernel.batch_ragged = True
-
-    res = apply_series_kernel(
-        df,
-        kernel,
-        by=by,
-        order=dim,
-        values=[value],
-        out_fields="value double",
-        keep=resolve_keep_attrs(df, keep_attrs),
+    return ragged_series_op(
+        df, fn, "delta", by=by, dim=dim, value=value, keep_attrs=keep_attrs
     )
-    coord = linear_coord("idx", "offset", "delta")
-    return res.withColumn(dim, restore_coord_dtype(df, dim, coord))

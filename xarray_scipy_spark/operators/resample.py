@@ -10,7 +10,9 @@ here the new equispaced coordinate is emitted natively in SQL
 from __future__ import annotations
 
 from collections.abc import Sequence
+from math import gcd
 
+import numpy as np
 from pyspark.sql import DataFrame, functions as F
 
 from ..core import apply_series_kernel, resolve_keep_attrs
@@ -20,7 +22,9 @@ from ..kernels.dsp import (
     resample_fourier,
     resample_fourier_freq,
     resample_poly_ragged,
+    upfirdn_ragged,
 )
+from .filters import ragged_series_op
 
 __all__ = ["decimate", "resample", "resample_poly", "upfirdn"]
 
@@ -50,26 +54,13 @@ def decimate(
     # right-zero-padded matrix, however many series lengths the bucket
     # mixes — exact by causality / implicit conv zero-padding
     # (kernels.dsp.decimate_ragged)
-    def kernel(x, lengths):
-        y, out_lens = decimate_ragged(
-            x, lengths, q, n=n, ftype=ftype, zero_phase=zero_phase
-        )
-        return {"value": y, "__lengths__": out_lens}
+    def fn(x, lengths):
+        return decimate_ragged(x, lengths, q, n=n, ftype=ftype, zero_phase=zero_phase)
 
-    kernel.batch_ragged = True
-
-    res = apply_series_kernel(
-        df,
-        kernel,
-        by=by,
-        order=dim,
-        values=[value],
-        out_fields="value double",
-        keep=resolve_keep_attrs(df, keep_attrs),
-    )
     new_delta = F.col("delta") * F.lit(float(q))
-    coord = linear_coord("idx", "offset", new_delta)
-    return res.withColumn(dim, restore_coord_dtype(df, dim, coord))
+    return ragged_series_op(
+        df, fn, new_delta, by=by, dim=dim, value=value, keep_attrs=keep_attrs
+    )
 
 
 def resample(
@@ -169,27 +160,14 @@ def resample_poly(
     if up < 1 or down < 1:
         raise ValueError("up and down must be >= 1")
 
-    def kernel(x, lengths):
-        y, out_lens = resample_poly_ragged(x, lengths, up, down)
-        return {"value": y, "__lengths__": out_lens}
-
-    kernel.batch_ragged = True
-
-    res = apply_series_kernel(
-        df,
-        kernel,
-        by=by,
-        order=dim,
-        values=[value],
-        out_fields="value double",
-        keep=resolve_keep_attrs(df, keep_attrs),
-    )
-    from math import gcd
+    def fn(x, lengths):
+        return resample_poly_ragged(x, lengths, up, down)
 
     g = gcd(up, down)
     new_delta = F.col("delta") * F.lit(float(down // g)) / F.lit(float(up // g))
-    coord = linear_coord("idx", "offset", new_delta)
-    return res.withColumn(dim, restore_coord_dtype(df, dim, coord))
+    return ragged_series_op(
+        df, fn, new_delta, by=by, dim=dim, value=value, keep_attrs=keep_attrs
+    )
 
 
 def upfirdn(
@@ -211,30 +189,15 @@ def upfirdn(
     ``ceil(((n-1)·up + len(h)) / down)`` per series; coordinate
     ``offset + idx·delta·down/up`` (the upsampled grid spacing).
     """
-    import numpy as np
-
-    from ..kernels.dsp import upfirdn_ragged
-
     h = np.atleast_1d(np.asarray(h, dtype=float))
     up, down = int(up), int(down)
     if up < 1 or down < 1:
         raise ValueError("up and down must be >= 1")
 
-    def kernel(x, lengths):
-        y, out_lens = upfirdn_ragged(h, x, lengths, up, down)
-        return {"value": y, "__lengths__": out_lens}
+    def fn(x, lengths):
+        return upfirdn_ragged(h, x, lengths, up, down)
 
-    kernel.batch_ragged = True
-
-    res = apply_series_kernel(
-        df,
-        kernel,
-        by=by,
-        order=dim,
-        values=[value],
-        out_fields="value double",
-        keep=resolve_keep_attrs(df, keep_attrs),
-    )
     new_delta = F.col("delta") * F.lit(float(down)) / F.lit(float(up))
-    coord = linear_coord("idx", "offset", new_delta)
-    return res.withColumn(dim, restore_coord_dtype(df, dim, coord))
+    return ragged_series_op(
+        df, fn, new_delta, by=by, dim=dim, value=value, keep_attrs=keep_attrs
+    )

@@ -158,6 +158,30 @@ def _frames(x: np.ndarray, frame_len: int, hop: int) -> np.ndarray:
     return np.lib.stride_tricks.sliding_window_view(x, frame_len, axis=-1)[:, ::hop, :]
 
 
+def _overlap_add(
+    seg: np.ndarray, taps: np.ndarray, hop: int, weight_eps: float
+) -> dict[str, np.ndarray]:
+    """Weighted overlap-add of ``(n_series, n_frames, frame_len)``
+    frames: ``Σ taps·seg / Σ taps²`` at each sample position ``t``,
+    keeping the positions whose window weight exceeds ``weight_eps``.
+    Returns the kernel output ``{"t": positions, "val": samples}``."""
+    n_series, n_frames, frame_len = seg.shape
+    t_len = (n_frames - 1) * hop + frame_len
+    num = np.zeros((n_series, t_len))
+    den = np.zeros(t_len)
+    f_off = hop * np.arange(n_frames)
+    for i in range(frame_len):
+        # positions i + hop*f are distinct across frames for fixed i
+        # (stride hop), so fancy-index += is collision-free
+        pos = f_off + i
+        num[:, pos] += taps[i] * seg[:, :, i]
+        den[pos] += taps[i] * taps[i]
+    kept = np.flatnonzero(den > weight_eps)
+    val = num[:, kept] / den[kept]
+    t_out = np.broadcast_to(kept.astype(np.int64), (n_series, len(kept)))
+    return {"t": t_out, "val": val.astype(float)}
+
+
 def stft(
     df: DataFrame,
     *,
@@ -290,20 +314,7 @@ def istft(
             n_frames = n // n_bins
             spec = (re_block + 1j * im_block).reshape(n_series, n_frames, n_bins)
             seg = np.fft.irfft(spec, n=frame_len, axis=-1)  # (s, f, frame_len)
-            t_len = (n_frames - 1) * hop + frame_len
-            num = np.zeros((n_series, t_len))
-            den = np.zeros(t_len)
-            f_off = hop * np.arange(n_frames)
-            for i in range(frame_len):
-                # positions i + hop*f are distinct across frames for
-                # fixed i (stride hop), so fancy-index += is collision-free
-                pos = f_off + i
-                num[:, pos] += taps[i] * seg[:, :, i]
-                den[pos] += taps[i] * taps[i]
-            kept = np.flatnonzero(den > weight_eps)
-            val = num[:, kept] / den[kept]
-            t_out = np.broadcast_to(kept.astype(np.int64), (n_series, len(kept)))
-            return {"t": t_out, "val": val.astype(float)}
+            return _overlap_add(seg, taps, hop, weight_eps)
 
         res = apply_series_kernel(
             df,
@@ -408,18 +419,7 @@ def spectral_apply(
                     f"{(n_series, n_frames, n_bins)}, got {spec.shape}"
                 )
         seg = np.fft.irfft(spec, n=frame_len, axis=-1)
-        t_len = (n_frames - 1) * hop + frame_len
-        num = np.zeros((n_series, t_len))
-        den = np.zeros(t_len)
-        f_off = hop * np.arange(n_frames)
-        for i in range(frame_len):
-            pos = f_off + i  # distinct across frames for fixed i
-            num[:, pos] += taps[i] * seg[:, :, i]
-            den[pos] += taps[i] * taps[i]
-        kept = np.flatnonzero(den > weight_eps)
-        val = num[:, kept] / den[kept]
-        t_out = np.broadcast_to(kept.astype(np.int64), (n_series, len(kept)))
-        return {"t": t_out, "val": val.astype(float)}
+        return _overlap_add(seg, taps, hop, weight_eps)
 
     res = apply_series_kernel(
         df,

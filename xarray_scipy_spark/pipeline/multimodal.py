@@ -1030,7 +1030,6 @@ def decode_features(
     bin_col: str = "payload",
     n_features: int = 4,
     decoder: Callable[[bytes, int], list[float]] = fake_decoder,
-    batch_size_hint: int | None = None,
 ) -> DataFrame:
     """Extract a fixed-width feature vector from each binary payload via
     ``mapInPandas`` (Arrow-batched; the iterator sees whole column

@@ -19,7 +19,7 @@ from collections.abc import Mapping, Sequence
 
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
-from .hashes import _c
+from .hashes import _c, h60
 
 __all__ = [
     "cap_per_group",
@@ -86,9 +86,7 @@ def _u01(parts: Sequence[Column], engine: str) -> Column:
     # so both engines agree row-for-row — the md5 path's contract is
     # cross-engine reproducibility, and a Spark-only clamp would break
     # byte-parity with every shipped oracle; left as-is by design.
-    seeded = F.concat_ws("|", *parts)
-    h = F.conv(F.substring(F.md5(seeded), 1, 15), 16, 10).cast("bigint")
-    return h / F.lit(_H60_SPAN)
+    return h60(F.concat_ws("|", *parts)) / F.lit(_H60_SPAN)
 
 
 def hash_uniform(col, salt: str = "", engine: str = "md5") -> Column:
@@ -347,7 +345,7 @@ def pack_sequences(
         else spark_df.sparkSession.sparkContext.defaultParallelism
     )
     dom = F.pmod(
-        F.conv(F.substring(F.md5(F.concat_ws("|", F.lit(salt), F.col(id_col).cast("string"))), 1, 15), 16, 10).cast("bigint"),
+        h60(F.concat_ws("|", F.lit(salt), F.col(id_col).cast("string"))),
         F.lit(n_dom),
     )
     work = spark_df.withColumn("__dom__", dom)
