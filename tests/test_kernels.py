@@ -437,6 +437,33 @@ def test_ragged_padlen_guard():
         sosfiltfilt_ragged(sos, x, np.array([40, 10]))
 
 
+def test_negative_padlen_extends_nothing():
+    """scipy treats a negative padlen as no edge extension: every
+    zero-phase kernel returns its padlen=0 result for padlen=-1."""
+    from xarray_scipy_spark.kernels import sos2tf
+    from xarray_scipy_spark.kernels.dsp import filtfilt_ragged, sosfiltfilt_ragged
+
+    sos = butter_sos(4, 0.3)
+    b, a = sos2tf(sos)
+    rng = np.random.default_rng(5)
+    x = rng.normal(size=50)
+    batch = rng.normal(size=(3, 50))
+    lens = np.array([50, 31, 12])
+    for padtype in ("odd", "even", "constant"):
+        np.testing.assert_array_equal(
+            sosfiltfilt_1d(sos, x, padlen=-1, padtype=padtype),
+            sosfiltfilt_1d(sos, x, padlen=0, padtype=padtype),
+        )
+        np.testing.assert_array_equal(
+            sosfiltfilt_ragged(sos, batch, lens, padlen=-3, padtype=padtype),
+            sosfiltfilt_ragged(sos, batch, lens, padlen=0, padtype=padtype),
+        )
+        np.testing.assert_array_equal(
+            filtfilt_ragged(b, a, batch, lens, padlen=-1, padtype=padtype),
+            filtfilt_ragged(b, a, batch, lens, padlen=0, padtype=padtype),
+        )
+
+
 def test_resample_freq_matches_time_domain():
     """domain='freq' (spectrum input) must reproduce the time-domain
     resample when fed fft(x), for both down- and up-sampling, and

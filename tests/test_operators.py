@@ -1050,6 +1050,27 @@ def test_lfilter_and_filtfilt_operators(spark, sine_df, sine_pdf):
         )
 
 
+def test_zero_phase_operators_negative_padlen_extends_nothing(spark, sine_df):
+    """A negative padlen means no edge extension (scipy), so both
+    zero-phase operators return their padlen=0 output for it."""
+    from xarray_scipy_spark.kernels import butter_sos, sos2tf
+
+    sos = butter_sos(4, 0.3)
+    b, a = sos2tf(sos)
+
+    def values(op, *coef, padlen):
+        out = op(*coef, sine_df, by=["channel"], dim="time", padlen=padlen)
+        return out.orderBy("channel", "idx").toPandas()["value"].to_numpy()
+
+    for op, coef in (
+        (xss.operators.sosfiltfilt, (sos,)),
+        (xss.operators.filtfilt, (b, a)),
+    ):
+        np.testing.assert_array_equal(
+            values(op, *coef, padlen=-1), values(op, *coef, padlen=0)
+        )
+
+
 def test_savgol_filter_matches_interp_reference(spark):
     from xarray_scipy_spark.operators.savgol import savgol_coeff_matrices
 
@@ -1299,6 +1320,15 @@ def test_find_peaks_plateau_midpoints_match_scipy_walk(spark):
         .tolist()
     )
     assert gott == []
+    # two samples share an instant inside a plateau: whichever order the
+    # tie takes, the run spans indices 2..4 and peaks at 3
+    tied = spark.createDataFrame(
+        pd.DataFrame(
+            {"ch": "a", "t": [0, 1, 2, 2, 3, 4], "value": [0.0, 1.0, 5.0, 5.0, 5.0, 1.0]}
+        )
+    )
+    got = xss.operators.find_peaks(tied, by=["ch"], dim="t").select("index").toPandas()
+    assert got["index"].tolist() == [3]
 
 
 def test_deconvolve_reconstructs_exactly(spark):

@@ -2760,6 +2760,28 @@ def test_keep_best_resolves_clusters_deterministically(spark):
     assert out[5] == (5, 5, True, 1)
 
 
+def test_duplicate_clusters_raises_instead_of_cutting_off(spark):
+    """Min-label propagation moves a label one hop per round: an
+    80-node path needs 79 rounds, so the default max_iter=30 stops
+    with the path split into 50 clusters and must raise rather than
+    return them. An 80-node star converges in three rounds."""
+    import xarray_scipy_spark.pipeline as pl
+
+    path = spark.createDataFrame(
+        [(i, i + 1) for i in range(79)], "a_id long, b_id long"
+    )
+    with pytest.raises(RuntimeError, match="did not converge"):
+        pl.duplicate_clusters(path)
+    # the hub holds the largest id, so the leaves learn the minimum
+    # only in the second round
+    star = spark.createDataFrame(
+        [(79, i) for i in range(79)], "a_id long, b_id long"
+    )
+    got = pl.duplicate_clusters(star).collect()
+    assert len(got) == 80
+    assert {r["cluster_id"] for r in got} == {0}
+
+
 def test_keep_best_stable_under_repartition(spark):
     import xarray_scipy_spark.pipeline as pl
 

@@ -394,13 +394,16 @@ def test_second_wave_kernel_queries_single_exchange_pruned_scan(spark, name):
 
 
 def test_gapfill_has_no_join_node(spark):
-    """gapfill is union + one ordered window — a join node appearing
-    means the bracketing logic regressed to an asof-style join that
-    skews on hot series."""
+    """gapfill is union + one window shuffle (running frames in time
+    order and in reverse time order) — a join node appearing means the
+    bracketing logic regressed to an asof-style join that skews on hot
+    series, and a frame ending at unboundedFollowing is recomputed for
+    every row (O(n^2) per series)."""
     plan = _static_plan(plain("gapfill")(spark, SF_DIR))
     for node in _JOIN_NODES:
         assert node not in plan, node
     assert "Window" in plan
+    assert "unboundedfollowing" not in plan
 
 
 def test_bloom_probes_are_broadcast_joins(spark):

@@ -1,16 +1,19 @@
 """Session and Python-worker process setup: the stat-guarded zipimport
-cache invalidation (``xarray_scipy_spark._zipcache``) and the host-sized
-driver heap (``session._default_driver_memory``)."""
+cache invalidation (``xarray_scipy_spark._zipcache``), the host-sized
+driver heap (``session._default_driver_memory``), the codegen cache
+size, and the per-session parquet schema cache of ``load_table``."""
 
 import importlib
 import os
 import sys
 import zipfile
 import zipimport
+from functools import reduce
 
 import numpy as np
 import pandas as pd
 import pytest
+from pyspark.sql import DataFrame
 
 import xarray_scipy_spark  # noqa: F401  (installs the zipimport wrapper)
 from xarray_scipy_spark import session
@@ -129,3 +132,72 @@ def test_default_driver_memory_fits_the_host(monkeypatch):
     monkeypatch.delenv("SPARK_GRAFT_DRIVER_MEM")
     with pytest.raises(Built, match=f"^{mem}$"):
         session.get_spark()
+
+
+def _compiles(spark) -> int:
+    """Janino compiles so far in this JVM (one per codegen cache miss)."""
+    jvm = spark.sparkContext._jvm
+    return jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME().getCount()
+
+
+def test_codegen_cache_holds_a_warm_working_set(spark):
+    """150 projections, each with its own literal, generate 150 classes.
+    At Spark's default of 100 entries the LRU drops every one of them
+    before its second use; the session's cache keeps them all, so the
+    second round compiles nothing."""
+    assert spark.conf.get("spark.sql.codegen.cache.maxEntries") == str(
+        session.CODEGEN_CACHE_ENTRIES
+    )
+    # a union compiles each branch's projection as its own class
+    union = reduce(
+        DataFrame.unionAll,
+        [spark.range(0, 2, 1, 1).selectExpr(f"{k} AS k", f"id * 3 + {k} AS v") for k in range(150)],
+    )
+    before = _compiles(spark)
+    union.collect()
+    assert _compiles(spark) - before >= 150
+    before = _compiles(spark)
+    rows = union.collect()
+    assert _compiles(spark) == before
+    assert sorted(map(tuple, rows)) == [(k, k + 3 * i) for k in range(150) for i in (0, 1)]
+
+
+def _jobs_of(spark, fn, group):
+    """(fn's result, ids of the Spark jobs it started under ``group``)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_load_table_reuses_the_schema_of_an_unchanged_file(spark, tmp_path):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from xarray_scipy_spark.sources import load_table
+
+    pq.write_table(pa.table({"k": [1, 2, 3], "x": [0.5, 1.5, 2.5]}), tmp_path / "t.parquet")
+    first, jobs = _jobs_of(spark, lambda: load_table(spark, "t", str(tmp_path)), "cold-load")
+    assert jobs  # the cold load infers the schema with a job
+    second, jobs = _jobs_of(spark, lambda: load_table(spark, "t", str(tmp_path)), "warm-load")
+    assert jobs == []
+    assert second.schema == first.schema
+    assert sorted(map(tuple, second.collect())) == [(1, 0.5), (2, 1.5), (3, 2.5)]
+
+
+def test_load_table_infers_a_rewritten_file_again(spark, tmp_path):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from xarray_scipy_spark.sources import load_table
+
+    path = tmp_path / "t.parquet"
+    pq.write_table(pa.table({"k": [1, 2]}), path)
+    assert load_table(spark, "t", str(tmp_path)).columns == ["k"]
+    pq.write_table(pa.table({"k": [1, 2], "y": ["a", "b"]}), path)
+    df = load_table(spark, "t", str(tmp_path))
+    assert df.columns == ["k", "y"]
+    assert sorted(map(tuple, df.collect())) == [(1, "a"), (2, "b")]

@@ -343,10 +343,11 @@ def _zero_phase_ragged(causal, zi, x, lengths, padlen, padtype) -> np.ndarray:
     steady-state ``zi`` scaled by each row's first extended sample,
     per-row reversal about each row's own extended length, the same
     pass again, then reversal and trim. Output padded to ``(k, n_max)``
-    with the tail beyond each row's length zeroed."""
+    with the tail beyond each row's length zeroed. A negative
+    ``padlen`` extends nothing, as in scipy."""
     x = np.atleast_2d(np.asarray(x, dtype=float))
     lengths = np.asarray(lengths, dtype=np.int64)
-    p = 0 if padtype is None else int(padlen)
+    p = 0 if padtype is None else max(int(padlen), 0)
     ext, ext_lens = _edge_ext_ragged(x, lengths, p, padtype)
     n_max = x.shape[1]
     L = n_max + 2 * p
@@ -378,9 +379,9 @@ def sosfiltfilt_1d(
     Edge-extends per ``padtype`` ('odd'/'even'/'constant'/None), seeds
     each pass with steady-state initial conditions scaled by the first
     sample, filters forward then backward, and trims the padding.
-    Output length equals input length. ``padtype=None`` means no
-    extension (scipy forces ``padlen = 0``); inputs not longer than
-    ``padlen`` raise, as in scipy.
+    Output length equals input length. ``padtype=None`` or a negative
+    ``padlen`` means no extension (scipy forces ``padlen = 0``); inputs
+    not longer than ``padlen`` raise, as in scipy.
     """
     y = sosfiltfilt_ragged(sos, *_full_rows(x), padlen=padlen, padtype=padtype)
     return y[0] if np.ndim(x) == 1 else y

@@ -168,8 +168,9 @@ def sosfiltfilt(
     """Zero-phase forward-backward IIR filter (signal.py:433-461).
 
     ``padtype``/``padlen`` follow scipy: 'odd' (default), 'even',
-    'constant', or None (no edge extension, padlen forced to 0) — the
-    reference forwards both kwargs to scipy verbatim."""
+    'constant', or None (no edge extension, padlen forced to 0); a
+    negative ``padlen`` extends nothing — the reference forwards both
+    kwargs to scipy verbatim."""
     _validate_padtype(padtype)  # fail at call time, not inside the UDF
     sos = _as_sos(sos)
 
@@ -374,8 +375,9 @@ def filtfilt(
 ) -> DataFrame:
     """Zero-phase forward-backward (b, a) filter
     (``scipy.signal.filtfilt`` pad-method semantics: odd/even/constant/
-    None edge extension, steady-state ``lfilter_zi`` seeding). Same
-    one-exchange ragged-batch plan as :func:`sosfiltfilt`."""
+    None edge extension, none either for a negative ``padlen``;
+    steady-state ``lfilter_zi`` seeding). Same one-exchange
+    ragged-batch plan as :func:`sosfiltfilt`."""
     _validate_padtype(padtype)
     b = np.atleast_1d(np.asarray(b, dtype=float))
     a = np.atleast_1d(np.asarray(a, dtype=float))

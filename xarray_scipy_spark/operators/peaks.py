@@ -104,8 +104,10 @@ def find_peaks(
     sample is the run's midpoint ``(left_edge + right_edge) // 2`` —
     exactly ``scipy.signal.find_peaks``'s ``_local_maxima_1d``. Run
     bounds and neighbor-run values come from running
-    ``last/first(..., ignorenulls)`` frames over the SAME ordered
-    window, so plateau support costs no extra exchange. Series edges
+    ``last(..., ignorenulls)`` frames over the series in sample order
+    (looking back) and in reverse ``index`` order (looking ahead),
+    both within the same partitioning, so plateau support costs a
+    local sort but no extra exchange. Series edges
     never qualify (matches scipy). Optional scipy-style filters:
     ``height`` keeps peaks with ``value >= height``; ``threshold``
     requires ``min(value - left, value - right) >= threshold``
@@ -131,7 +133,14 @@ def find_peaks(
     by = list(by)
     w = Window.partitionBy(*by).orderBy(dim)
     past = w.rowsBetween(Window.unboundedPreceding, 0)
-    future = w.rowsBetween(0, Window.unboundedFollowing)
+    # the look-ahead runs as a running frame in reverse order: Spark
+    # recomputes a frame that ends at unboundedFollowing for every row,
+    # O(n^2) per series
+    future = (
+        Window.partitionBy(*by)
+        .orderBy(F.col("index").desc())
+        .rowsBetween(Window.unboundedPreceding, 0)
+    )
     v = F.col(value)
     lagv = F.lag(value, 1).over(w)
     leadv = F.lead(value, 1).over(w)
@@ -145,10 +154,17 @@ def find_peaks(
     run_first = xl.isNull() | (v != xl)  # first row of its equal-run
     run_last = xr.isNull() | (v != xr)  # last row of its equal-run
     idx = F.col("index")
-    run_start = F.last(F.when(run_first, idx), True).over(past)
-    run_end = F.first(F.when(run_last, idx), True).over(future)
-    prev_val = F.last(F.when(v != xl, xl), True).over(past)
-    next_val = F.first(F.when(v != xr, xr), True).over(future)
+    # the look-back frames get their own step, so they run on the sort
+    # that numbered `index` and rows tied in `dim` keep index order
+    ser = ser.withColumns(
+        {
+            "__rs__": F.last(F.when(run_first, idx), True).over(past),
+            "__pv__": F.last(F.when(v != xl, xl), True).over(past),
+        }
+    )
+    run_start, prev_val = F.col("__rs__"), F.col("__pv__")
+    run_end = F.last(F.when(run_last, idx), True).over(future)
+    next_val = F.last(F.when(v != xr, xr), True).over(future)
     cond = (
         (prev_val < v)
         & (next_val < v)
@@ -158,7 +174,7 @@ def find_peaks(
         cond = cond & (v >= F.lit(float(height)))
     if threshold is not None:
         cond = cond & (F.least(v - xl, v - xr) >= F.lit(float(threshold)))
-    ser = ser.withColumn("__is_peak__", cond).drop("__xl__", "__xr__")
+    ser = ser.withColumn("__is_peak__", cond).drop("__xl__", "__xr__", "__rs__", "__pv__")
     wp = Window.partitionBy(*by).orderBy("index")
     peaks = ser.filter(F.col("__is_peak__")).select(*by, "index", dim, value)
     if distance is not None:

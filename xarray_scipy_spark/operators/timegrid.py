@@ -16,9 +16,12 @@ event tables needs it in-engine.
 Plan shape (scale notes): one tiny per-series min/max aggregation
 (shuffle #1, one row per series), a generative ``sequence`` explode
 for the grid (no shuffle — rows produced where the series lives), a
-union with the observations, and ONE ordered window over
-``(by, t)`` (shuffle #2) computing the bracketing neighbours with
-running ``last/first(..., ignorenulls)`` frames — no join node
+union with the observations, and one window partitioning over
+``by`` (shuffle #2) computing the bracketing neighbours with running
+``last(..., ignorenulls)`` frames, in ``t`` order for the previous
+observation and in reverse ``t`` order for the next (a local re-sort,
+no exchange; Spark recomputes a frame that ends at unboundedFollowing
+for every row, which is O(n^2) per series) — no join node
 anywhere, so there is nothing to skew and nothing to broadcast. Cost
 is linear in observations + grid points; partitioning is per-series,
 the same key layout every kernel operator here uses. Spark's
@@ -56,8 +59,36 @@ def _gapfill_value(method: str):
     )
 
 
+def _brackets(rows: DataFrame, by: list) -> DataFrame:
+    """``[*by, _t, _obs, _v0, _pt, _v1, _nt]`` over the union ``rows``
+    of observations (``_obs`` 1) and instants to fill (``_obs`` 0,
+    ``_v`` null): the last observed value and instant at or before
+    each row, and the first after it, per series."""
+    # observations sort BEFORE the grid row at the same instant
+    # (_obs desc), so the backward frame sees a collocated observation
+    # and the forward frame, the same running frame in the exact
+    # reverse order, does not
+    part = Window.partitionBy(*by)
+    back = part.orderBy(F.col("_t").asc(), F.col("_obs").desc()).rowsBetween(
+        Window.unboundedPreceding, 0
+    )
+    fwd = part.orderBy(F.col("_t").desc(), F.col("_obs").asc()).rowsBetween(
+        Window.unboundedPreceding, 0
+    )
+    obs_t = F.when(F.col("_v").isNotNull(), F.col("_t"))
+    return rows.select(
+        *by,
+        "_t",
+        "_obs",
+        F.last("_v", ignorenulls=True).over(back).alias("_v0"),
+        F.last(obs_t, ignorenulls=True).over(back).alias("_pt"),
+        F.last("_v", ignorenulls=True).over(fwd).alias("_v1"),
+        F.last(obs_t, ignorenulls=True).over(fwd).alias("_nt"),
+    )
+
+
 def _gapfill_core(df: DataFrame, *, by, dim: str, value: str, dt):
-    """Shared gapfill machinery: grid generation + the ONE ordered
+    """Shared gapfill machinery: grid generation + the one-shuffle
     window computing the bracketing observations. Returns
     ``(both, out_dim, by)`` where ``both`` carries
     ``[*by, _t, _obs, _v0, _pt, _v1, _nt]`` — every fill method is a
@@ -113,23 +144,7 @@ def _gapfill_core(df: DataFrame, *, by, dim: str, value: str, dt):
             F.lit(None).cast("double").alias("_v"),
             F.lit(0).alias("_obs"),
         )
-    # observations sort BEFORE the grid row at the same instant
-    # (_obs desc), so the backward frame sees a collocated observation
-    # and the forward frame (which starts at the current row) does not
-    # double-count it
-    w = Window.partitionBy(*by).orderBy(F.col("_t").asc(), F.col("_obs").desc())
-    back = w.rowsBetween(Window.unboundedPreceding, 0)
-    fwd = w.rowsBetween(0, Window.unboundedFollowing)
-    obs_t = F.when(F.col("_v").isNotNull(), F.col("_t"))
-    both = obs.unionAll(grid).select(
-        *by,
-        "_t",
-        "_obs",
-        F.last("_v", ignorenulls=True).over(back).alias("_v0"),
-        F.last(obs_t, ignorenulls=True).over(back).alias("_pt"),
-        F.first("_v", ignorenulls=True).over(fwd).alias("_v1"),
-        F.first(obs_t, ignorenulls=True).over(fwd).alias("_nt"),
-    )
+    both = _brackets(obs.unionAll(grid), by)
     if not is_ts:
         out_dim = F.col("_t").alias(dim)
     elif in_dtype == "timestamp_ntz":
@@ -237,8 +252,8 @@ def interp_to(
     an asof tolerance).
 
     ``targets``: ``[*by, <dim>]`` rows naming where to evaluate. Same
-    plan as gapfill — union the observations with the targets, ONE
-    ordered window computes the bracketing observations, no join node
+    plan as gapfill — union the observations with the targets, one
+    window shuffle computes the bracketing observations, no join node
     — and the same value semantics: exact passthrough on observed
     instants, ``linear`` interpolation between brackets, ``ffill``
     carry-forward; targets before the first observation return null
@@ -273,19 +288,7 @@ def interp_to(
         F.lit(None).cast("double").alias("_v"),
         F.lit(0).alias("_obs"),
     )
-    w = Window.partitionBy(*by).orderBy(F.col("_t").asc(), F.col("_obs").desc())
-    back = w.rowsBetween(Window.unboundedPreceding, 0)
-    fwd = w.rowsBetween(0, Window.unboundedFollowing)
-    obs_t = F.when(F.col("_v").isNotNull(), F.col("_t"))
-    both = obs.unionAll(tgt).select(
-        *by,
-        "_t",
-        "_obs",
-        F.last("_v", ignorenulls=True).over(back).alias("_v0"),
-        F.last(obs_t, ignorenulls=True).over(back).alias("_pt"),
-        F.first("_v", ignorenulls=True).over(fwd).alias("_v1"),
-        F.first(obs_t, ignorenulls=True).over(fwd).alias("_nt"),
-    )
+    both = _brackets(obs.unionAll(tgt), by)
     if method == "ffill":
         filled = F.col("_v0")
     else:

@@ -448,6 +448,10 @@ def duplicate_clusters(
     frames (bounded, rebuilt from parquet on a whole-query retry); on
     a failure-prone cluster use a reliable ``checkpoint()`` with a
     durable checkpoint dir at the same sites.
+
+    Raises ``RuntimeError`` when labels still change in round
+    ``max_iter`` (a component whose diameter is ``max_iter`` or more):
+    the labels at that point split a component into several clusters.
     """
     # symmetrize with ONE pass over pairs (explode of both directions)
     # — a fwd/rev union would re-execute the whole upstream pair
@@ -503,6 +507,11 @@ def duplicate_clusters(
         labels = new_labels.select("id", "comp")
         if changed == 0:
             break
+    else:
+        raise RuntimeError(
+            f"duplicate_clusters did not converge in max_iter={max_iter} "
+            "rounds; raise max_iter"
+        )
     return labels.select(F.col("id").alias("doc_id"), F.col("comp").alias("cluster_id"))
 
 
@@ -528,7 +537,9 @@ def keep_best(
 
     Returns one row PER INPUT DOC: ``(id_col, cluster_id, keep_id,
     kept, n_members)`` — the per-doc verdict frame a curation pass
-    filters on (``kept``) or audits (``n_members > 1``).
+    filters on (``kept``) or audits (``n_members > 1``). Raises
+    ``RuntimeError`` when the components do not converge in
+    ``max_iter`` rounds (see :func:`duplicate_clusters`).
 
     Scale shape: the component labels are pair-node-sized (tiny next
     to the corpus); the docs⋈labels join and the keep-id join are both

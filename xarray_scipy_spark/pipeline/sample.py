@@ -197,7 +197,9 @@ def split_assign_clustered(
     salt-independent resplits, DuckDB-reproducible). Scale shape: the
     component frame is pair-node-sized; the corpus pays ONE keyed
     equi-join (AQE broadcasts it when the duplicate graph is small)
-    and the split itself stays a pure projection.
+    and the split itself stays a pure projection. Raises
+    ``RuntimeError`` when the components do not converge in
+    ``max_iter`` rounds (see :func:`.dedup.duplicate_clusters`).
     """
     from .dedup import duplicate_clusters
 

@@ -13,6 +13,18 @@ from pyspark.sql import SparkSession
 
 _DRIVER_MEM_CAP_MB = 48 * 1024
 
+# Spark's codegen cache (an LRU of compiled classes, keyed by their
+# Java source) defaults to 100 entries. One pass of the perfbench
+# corpus_pipeline mix generates 173 distinct classes and one dsp_ragged
+# pass 80 plus the warm-up's, so at 100 the LRU evicted every class
+# before its next use: each warm corpus pass ran 165 Janino compiles.
+# At 1024 both working sets fit with headroom and warm passes compile
+# nothing once the plans settle. An entry costs about 20 KB (corpus
+# mix, CodegenMetrics: 8.6 KB mean source key, 2.8 KB mean class
+# bytecode; about 13 KB of metaspace per class loaded), so a full
+# cache holds about 20 MB.
+CODEGEN_CACHE_ENTRIES = 1024
+
 
 def _default_driver_memory() -> str:
     """Driver heap when ``SPARK_GRAFT_DRIVER_MEM`` is unset: half of
@@ -36,6 +48,10 @@ def get_spark(
       ~2-3x total executor cores (AQE coalesces the excess).
     - driver heap: ``SPARK_GRAFT_DRIVER_MEM`` if set, else
       :func:`_default_driver_memory`.
+    - codegen cache: holds :data:`CODEGEN_CACHE_ENTRIES` generated
+      classes, so a warm call reuses the classes its cold call compiled
+      instead of recompiling them with Janino. Static: it takes effect
+      in the first session of a JVM.
     """
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
     if shuffle_partitions is None:
@@ -50,6 +66,7 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "65536")
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
         .config(
             "spark.driver.memory",
             os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_memory(),
