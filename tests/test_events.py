@@ -136,8 +136,8 @@ def test_retention_cohorts_plan_is_join_free(spark):
     """r12 plan lock: the cohort is a whole-partition min() WINDOW
     over the deduplicated pairs frame, not a groupBy+join — the r12
     decomposition measured the join shape at 3 pair-volume exchanges
-    where the window pays 1 (tools/retention_decompose.py, -27%
-    same-session). Empty input stays well-formed."""
+    where the window pays 1 (tools/retention_decompose.py at
+    71b8918, -27% same-session). Empty input stays well-formed."""
     df = spark.createDataFrame(
         [(1, "2024-01-01 00:00:00"), (1, "2024-01-09 00:00:00")],
         "user_id long, ts string",

@@ -784,10 +784,10 @@ def test_istft_roundtrip_reconstructs(spark, sine_df, sine_pdf):
 
 
 def test_istft_fused_and_spectral_apply_match_native(spark, sine_df):
-    """The three physical strategies for the inverse — native OLA
-    (frame-parallel), fused istft (one exchange on the spectrum), and
-    spectral_apply's single-kernel roundtrip — must produce identical
-    rows: same plan semantics, different exchanges."""
+    """The two physical strategies for the inverse — istft's native
+    OLA (frame-parallel) and spectral_apply's fused single-kernel
+    roundtrip — must produce identical rows: same semantics,
+    different exchanges."""
     fl, hop = 32, 16
     spec = xss.stft(
         sine_df, by=["channel"], dim="time", frame_len=fl, hop=hop, window="hann"
@@ -795,16 +795,10 @@ def test_istft_fused_and_spectral_apply_match_native(spark, sine_df):
     native = xss.istft(
         spec, by=["channel"], frame_len=fl, hop=hop, window="hann"
     ).toPandas().sort_values(["channel", "t"], ignore_index=True)
-    fused = xss.istft(
-        spec, by=["channel"], frame_len=fl, hop=hop, window="hann",
-        reconstruct="fused",
-    ).toPandas().sort_values(["channel", "t"], ignore_index=True)
     one_pass = xss.spectral_apply(
         sine_df, by=["channel"], dim="time", frame_len=fl, hop=hop, window="hann"
     ).toPandas().sort_values(["channel", "t"], ignore_index=True)
-    assert native[["channel", "t"]].equals(fused[["channel", "t"]])
     assert native[["channel", "t"]].equals(one_pass[["channel", "t"]])
-    np.testing.assert_allclose(fused["value"], native["value"], atol=1e-9)
     np.testing.assert_allclose(one_pass["value"], native["value"], atol=1e-9)
 
 

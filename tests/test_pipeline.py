@@ -222,6 +222,37 @@ def test_cosine_topk_lsh_subset_of_bruteforce(spark):
         assert sorted(grp["rank"]) == list(range(1, len(grp) + 1))
 
 
+@pytest.mark.parametrize("case", ["empty", "null_first"])
+def test_lsh_paths_take_dim_from_first_non_null_vector(spark, case):
+    """Both SRP-LSH paths read the vector dimension from the first
+    non-NULL embedding: an empty corpus gives an empty frame with the
+    declared columns, and a NULL first row neither crashes nor pairs."""
+    import numpy as np
+
+    schema = "vec_id long, embedding array<double>"
+    if case == "empty":
+        df = spark.createDataFrame([], schema)
+    else:
+        rng = np.random.default_rng(4)
+        v1, v3 = rng.standard_normal((2, 8))
+        rows = [(0, None), (1, v1), (2, v1 * 2.0), (3, v3)]
+        df = spark.createDataFrame(
+            [(i, None if v is None else [float(x) for x in v]) for i, v in rows],
+            schema,
+        ).coalesce(1)
+    dup = pl.embedding_dup_pairs(df, threshold=0.9, method="lsh", lsh_planes=6)
+    top = pl.cosine_topk_lsh(df, df.filter("vec_id = 1"), k=1, planes=6)
+    assert dup.columns == ["a_id", "b_id", "cos_sim"]
+    assert top.columns == ["query_id", "rank", "neighbor_id", "cos_sim"]
+    pairs = {(r["a_id"], r["b_id"]) for r in dup.collect()}
+    hits = [(r["query_id"], r["neighbor_id"]) for r in top.collect()]
+    if case == "empty":
+        assert pairs == set() and hits == []
+    else:
+        assert pairs == {(1, 2)}
+        assert hits == [(1, 2)]
+
+
 def test_kmeans_cells_matches_numpy_lloyd(spark):
     import numpy as np
 
@@ -1649,6 +1680,94 @@ def test_minhash_pairs_cross_matches_self_join_restriction(spark):
     assert all(l < 100 and r < 100 for l, r in got)  # sane id spaces
 
 
+def _near_copy_docs(spark):
+    """34 docs: 12 random 30-word bases, a one-word edit of each, a
+    three-word edit of the first 6 and an exact copy of the first 4, so
+    many pairs share two or more LSH bands or SimHash chunks."""
+    import random
+
+    rng = random.Random(7)
+    vocab = [f"w{i}" for i in range(60)]
+    bases = [[rng.choice(vocab) for _ in range(30)] for _ in range(12)]
+
+    def edit(words, n):
+        out = list(words)
+        for pos in rng.sample(range(len(out)), n):
+            out[pos] = f"x{rng.randrange(1000)}"
+        return out
+
+    texts = [*bases, *(edit(b, 1) for b in bases),
+             *(edit(b, 3) for b in bases[:6]), *bases[:4]]
+    return spark.createDataFrame(
+        [(i, " ".join(t)) for i, t in enumerate(texts)], "doc_id long, text string"
+    )
+
+
+def test_simhash_pairs_emit_each_pair_once_with_full_recall(spark):
+    """simhash_pairs(max_distance=3) equals an all-pairs Python scan of
+    the fingerprints: every pair within distance 3 comes out (the
+    pigeonhole over 4 chunks makes recall exact), exactly once, even
+    when it shares several chunks."""
+    from itertools import combinations
+
+    docs = _near_copy_docs(spark)
+    fps = {
+        r["doc_id"]: r["simhash"] for r in pl.simhash_fingerprints(docs).collect()
+    }
+    chunks = {i: [(h >> (12 * c)) & 0xFFF for c in range(4)] for i, h in fps.items()}
+    want = {
+        (a, b): bin(fps[a] ^ fps[b]).count("1")
+        for a, b in combinations(sorted(fps), 2)
+        if bin(fps[a] ^ fps[b]).count("1") <= 3
+    }
+    shared = [
+        sum(x == y for x, y in zip(chunks[a], chunks[b])) for a, b in want
+    ]
+    assert max(shared) >= 2
+    got = [
+        ((r["a_id"], r["b_id"]), r["hamming"])
+        for r in pl.simhash_pairs(docs, max_distance=3).collect()
+    ]
+    assert len(got) == len(dict(got))
+    assert dict(got) == want
+
+
+def test_minhash_pairs_emit_each_pair_once_with_full_recall(spark):
+    """minhash_pairs equals a Python scan: candidates are the pairs
+    that share a band of the signatures (compared per band, the same
+    test as equal band hashes), verified by shingle-set Jaccard; each
+    comes out exactly once, even when it shares several bands."""
+    from itertools import combinations
+
+    from xarray_scipy_spark.pipeline.dedup import _with_shingles
+
+    docs = _near_copy_docs(spark)
+    sig = {
+        r["doc_id"]: [r[f"mh_{i}"] for i in range(16)]
+        for r in pl.minhash_signatures(docs).collect()
+    }
+    sh = {
+        r["doc_id"]: set(r["shingles"])
+        for r in _with_shingles(docs, "doc_id", "text", 3).collect()
+    }
+    want, shared = {}, []
+    for a, b in combinations(sorted(sig), 2):
+        n = sum(sig[a][4 * j:4 * j + 4] == sig[b][4 * j:4 * j + 4] for j in range(4))
+        jac = len(sh[a] & sh[b]) / len(sh[a] | sh[b])
+        if n and jac >= 0.5:
+            want[(a, b)] = jac
+            shared.append(n)
+    assert max(shared) >= 2 and min(shared) == 1
+    got = [
+        ((r["a_id"], r["b_id"]), r["jaccard"])
+        for r in pl.minhash_pairs(docs).collect()
+    ]
+    assert len(got) == len(dict(got))
+    assert dict(got).keys() == want.keys()
+    for pair, jac in got:
+        assert abs(jac - want[pair]) < 1e-12
+
+
 def test_cap_per_group_deterministic_and_stable_under_growth(spark):
     docs = spark.createDataFrame(
         [(i, f"d{i % 5}") for i in range(200)], "doc_id long, domain string"
@@ -2947,15 +3066,16 @@ def test_auc_exact_guard_fires_over_cap(spark):
 
 
 def test_hash_uniform_engines(spark):
-    """The r12 xxhash64 knob (VERDICT r11 #2): md5 default pinned
-    byte-equal to the DuckDB h60 construction; xxhash64 deterministic,
-    salt-sensitive, in [0, 1); unknown engine raises."""
+    """The md5 uniform is byte-equal to its DuckDB h60 twin, and the
+    sampling functions built on it keep their own contracts: a
+    deterministic stratified sample, exactly n rows per group from
+    cap_per_group, k deterministic ranks from weighted_sample, and
+    mix_datasets rates."""
     import duckdb
 
     import xarray_scipy_spark.pipeline as pl
 
     df = spark.createDataFrame([(i,) for i in range(200)], "doc_id long")
-    # md5 default unchanged: byte-equal to the documented DuckDB twin
     got = {
         r["doc_id"]: r["u"]
         for r in df.select(
@@ -2969,98 +3089,56 @@ def test_hash_uniform_engines(spark):
         ).fetchall()
     )
     assert got == exp
-    # xxhash64: deterministic, in [0,1), salt changes the draw
-    a = df.select(
-        "doc_id",
-        pl.hash_uniform("doc_id", salt="s", engine="xxhash64").alias("u"),
+
+    docs = spark.createDataFrame(
+        [(i, "ab"[i % 2], float(i % 7) + 1.0) for i in range(400)],
+        "doc_id long, grp string, wt double",
     )
-    ua = {r["doc_id"]: r["u"] for r in a.collect()}
-    ub = {r["doc_id"]: r["u"] for r in a.collect()}
-    assert ua == ub
-    assert all(0.0 <= v < 1.0 for v in ua.values())
-    uc = {
-        r["doc_id"]: r["u"]
-        for r in df.select(
-            "doc_id",
-            pl.hash_uniform("doc_id", salt="t", engine="xxhash64").alias("u"),
-        ).collect()
-    }
-    assert sum(ua[i] != uc[i] for i in ua) > 150
-    with pytest.raises(ValueError, match="hash engine"):
-        df.select(pl.hash_uniform("doc_id", engine="sha9"))
-
-
-def test_u01_xxhash64_boundary_clamp(spark):
-    """The xxhash64 uniform lives in the OPEN interval (0, 1): hashes
-    rounding to exactly 0.0 (within ~2^9 of -2^63) or 1.0 (within
-    ~2^10 of 2^63-1) are clamped, so rate=1.0 keeps every id and
-    log(u) consumers stay finite (r12 self-review + ADVICE r12 #1).
-    The clamp helper is driven with literal extremes — the raw
-    boundary hashes themselves are ~2^-54-rare, unreachable by
-    enumeration."""
-    from pyspark.sql import functions as F
-
-    from xarray_scipy_spark.pipeline.sample import _clamp_u01_open
-
-    df = spark.createDataFrame(
-        [(0.0,), (1.0,), (0.5,), (2.0**-64,), (1.0 - 2.0**-53,)], "u double"
-    )
-    vals = [
-        r["c"] for r in df.select(_clamp_u01_open(F.col("u")).alias("c")).collect()
-    ]
-    assert vals == [2.0**-64, 1.0 - 2.0**-53, 0.5, 2.0**-64, 1.0 - 2.0**-53]
-    assert all(0.0 < v < 1.0 for v in vals)
+    s1 = {r["doc_id"] for r in pl.stratified_sample(
+        docs, fractions="0.25").collect()}
+    s2 = {r["doc_id"] for r in pl.stratified_sample(
+        docs.repartition(5), fractions="0.25").collect()}
+    assert s1 == s2 and 40 < len(s1) < 160
+    capped = pl.cap_per_group(docs, by=["grp"], id_col="doc_id", n=5)
+    rows = capped.groupBy("grp").count().collect()
+    assert {r["grp"]: r["count"] for r in rows} == {"a": 5, "b": 5}
+    w1 = {(r["doc_id"], r["smp_rank"]) for r in pl.weighted_sample(
+        docs, id_col="doc_id", weight_col="wt", k=7
+    ).collect()}
+    w2 = {(r["doc_id"], r["smp_rank"]) for r in pl.weighted_sample(
+        docs.repartition(3), id_col="doc_id", weight_col="wt", k=7
+    ).collect()}
+    assert w1 == w2 and len(w1) == 7
+    out = pl.mix_datasets({"x": docs, "y": docs}, {"x": 0.5, "y": 1.0})
+    cnt = {r["source"]: r["count"] for r in out.groupBy("source").count().collect()}
+    assert cnt["y"] == 400 and 120 < cnt["x"] < 280
 
 
 def test_ares_key_guard_modes(spark):
-    """The staged r15 both-ends guard (ADVICE r13 #2): under
-    u_guard='both' BOTH md5 rounding boundaries lose — u==1.0 no
-    longer yields key 0 (the maximum); under the registered 'zero'
-    default the one-sided r12-r14 semantics are preserved exactly.
-    Driven with literal boundary uniforms (the raw boundary hashes
-    are ~1e-16-rare, unreachable by enumeration)."""
+    """Both md5 rounding boundaries lose the A-Res draw: u == 0 (log
+    is NULL, which sorts first under the descending key) and u == 1.0
+    (key 0, the maximum) both map to −inf, while an ordinary u keeps
+    ln(u)/w. Driven with literal boundary uniforms (the raw boundary
+    hashes are ~1e-16-rare, unreachable by enumeration)."""
     import math
 
     from pyspark.sql import functions as F
 
     from xarray_scipy_spark.pipeline.sample import _ares_key
 
-    df = spark.createDataFrame(
-        [(0.0,), (1.0,), (0.5,)], "u double"
-    )
-
-    def keys(mode):
-        return [
-            r["k"]
-            for r in df.select(
-                _ares_key(F.col("u"), F.lit(2.0), mode).alias("k")
-            ).collect()
-        ]
-
-    zero = keys("zero")
-    both = keys("both")
-    # u=0 loses under both modes; u=0.5 is the ordinary draw
-    assert zero[0] == float("-inf") and both[0] == float("-inf")
-    assert abs(zero[2] - math.log(0.5) / 2.0) < 1e-15
-    assert both[2] == zero[2]
-    # the one-sided gap: 'zero' hands u=1 the MAXIMUM key (0.0);
-    # 'both' deflects it to -inf like the other boundary
-    assert zero[1] == 0.0
-    assert both[1] == float("-inf")
-    import pytest as _pt
-
-    with _pt.raises(ValueError, match="u_guard"):
-        keys("nope")
+    df = spark.createDataFrame([(0.0,), (1.0,), (0.5,)], "u double")
+    keys = [
+        r["k"]
+        for r in df.select(_ares_key(F.col("u"), F.lit(2.0)).alias("k")).collect()
+    ]
+    assert keys[0] == float("-inf")
+    assert keys[1] == float("-inf")
+    assert abs(keys[2] - math.log(0.5) / 2.0) < 1e-15
 
 
 def test_weighted_sample_guarded_matches_staged_oracle(spark):
-    """Parity pinned a round ahead of the r15 flip (the 77601a7
-    discipline), kept as the standing guard-equivalence check now the
-    flip is REGISTERED: weighted_sample(u_guard='both') must match
-    the guarded DuckDB oracle byte-for-byte on real data, and — since
-    no sf0.001 id hits a boundary — both must equal the historical
-    r12-r14 unguarded pair, proving the guard changes nothing except
-    on boundary rows."""
+    """weighted_sample must match the guarded DuckDB oracle of the
+    registered query byte-for-byte on real data."""
     import duckdb
 
     import xarray_scipy_spark.pipeline as pl
@@ -3071,49 +3149,41 @@ def test_weighted_sample_guarded_matches_staged_oracle(spark):
         spark.read.parquet(f"{sf}/documents.parquet")
         .select("lang", "doc_id", "n_chars")
     )
-    got = {
-        mode: sorted(
-            map(
-                tuple,
-                pl.weighted_sample(
-                    d, id_col="doc_id", weight_col="n_chars", k=C._WS_K,
-                    group_cols=["lang"], u_guard=mode,
-                ).collect(),
-            )
+    got = sorted(
+        map(
+            tuple,
+            pl.weighted_sample(
+                d, id_col="doc_id", weight_col="n_chars", k=C._WS_K,
+                group_cols=["lang"],
+            ).collect(),
         )
-        for mode in ("zero", "both")
-    }
+    )
     con = duckdb.connect()
     con.execute(
         "CREATE VIEW documents AS SELECT * FROM "
         f"read_parquet('{sf}/documents.parquet')"
     )
-    exp = {
-        g: sorted(map(tuple, con.execute(C._weighted_sample_oracle(g)).fetchall()))
-        for g in (False, True)
-    }
-    assert got["both"] == exp[True], "staged pair disagrees"
-    assert got["zero"] == exp[False], "registered pair disagrees"
-    assert got["zero"] == got["both"], "boundary-free data must not differ"
+    exp = sorted(map(tuple, con.execute(C._weighted_sample_oracle()).fetchall()))
+    assert got == exp
 
 
 def test_weighted_sample_zero_u_loses(spark):
     """A row whose uniform is exactly 0.0 must LOSE weighted
     selection, not win it: log(0) is NULL in Spark and NULL sorts
     first under the descending key order (ADVICE r12 #1). Pin the
-    guard by driving the key expression the same way weighted_sample
-    builds it, with a forced-zero uniform."""
+    guard by driving weighted_sample's key expression (``_ares_key``)
+    with a forced-zero uniform."""
     from pyspark.sql import functions as F
 
-    # reproduce the guarded key with u pinned per-row: id 1 has u=0
-    # (the pathological draw), ids 2..4 have ordinary draws
+    from xarray_scipy_spark.pipeline.sample import _ares_key
+
+    # u pinned per-row: id 1 has u=0 (the pathological draw), ids 2..4
+    # have ordinary draws
     df = spark.createDataFrame(
         [(1, 0.0, 1e9), (2, 0.5, 1.0), (3, 0.9, 1.0), (4, 0.2, 1.0)],
         "id long, u double, w double",
     )
-    key = F.when(F.col("u") > 0, F.log("u") / F.col("w")).otherwise(
-        F.lit(float("-inf"))
-    )
+    key = _ares_key(F.col("u"), F.col("w"))
     got = [
         r["id"]
         for r in df.select("id", key.alias("k"))
@@ -3133,47 +3203,6 @@ def test_weighted_sample_zero_u_loses(spark):
     assert picked.count() == 25
 
 
-def test_split_and_kfold_xxhash64_contracts(spark):
-    """split_assign/kfold_assign(engine='xxhash64'): disjoint +
-    exhaustive + rerun-stable, proportions near the weights, and the
-    md5 default stays byte-identical to the engine-less call."""
-    import xarray_scipy_spark.pipeline as pl
-
-    df = spark.createDataFrame([(i,) for i in range(2000)], "doc_id long")
-    w = {"train": 0.8, "val": 0.1, "test": 0.1}
-    md5_default = {
-        r["doc_id"]: r["split"] for r in pl.split_assign(df, weights=w).collect()
-    }
-    md5_named = {
-        r["doc_id"]: r["split"]
-        for r in pl.split_assign(df, weights=w, engine="md5").collect()
-    }
-    assert md5_default == md5_named
-    xx = {
-        r["doc_id"]: r["split"]
-        for r in pl.split_assign(df, weights=w, engine="xxhash64").collect()
-    }
-    assert set(xx) == set(md5_default)
-    from collections import Counter
-
-    c = Counter(xx.values())
-    assert 0.75 < c["train"] / 2000 < 0.85
-    assert 0.06 < c["val"] / 2000 < 0.14
-    # folds: every row in [0, k), stable across reruns
-    f1 = {
-        r["doc_id"]: r["fold"]
-        for r in pl.kfold_assign(df, k=5, engine="xxhash64").collect()
-    }
-    f2 = {
-        r["doc_id"]: r["fold"]
-        for r in pl.kfold_assign(df, k=5, engine="xxhash64").collect()
-    }
-    assert f1 == f2
-    assert set(f1.values()) == set(range(5))
-    with pytest.raises(ValueError, match="hash engine"):
-        pl.kfold_assign(df, k=5, engine="sha9")
-
-
 def test_split_assign_clustered_rejects_cluster_id_input(spark):
     """ADVICE r11 #1: composing with duplicate_clusters/keep_best
     output (which already carries cluster_id) must raise a clear
@@ -3186,47 +3215,3 @@ def test_split_assign_clustered_rejects_cluster_id_input(spark):
     pairs = spark.createDataFrame([(0, 1)], "a_id long, b_id long")
     with pytest.raises(ValueError, match="cluster_id"):
         pl.split_assign_clustered(docs, pairs)
-
-
-def test_remaining_xxhash64_engine_surfaces(spark):
-    """The r12 knob on the other four sampling functions: xxhash64
-    keeps each function's own contract (determinism, sizes, exact-by-id
-    stability) and the md5 default stays byte-identical to engine-less
-    calls."""
-    import xarray_scipy_spark.pipeline as pl
-
-    docs = spark.createDataFrame(
-        [(i, "ab"[i % 2], float(i % 7) + 1.0) for i in range(400)],
-        "doc_id long, grp string, wt double",
-    )
-    # stratified_sample: md5 default pinned; xxhash64 deterministic
-    md5_ids = {r["doc_id"] for r in pl.stratified_sample(
-        docs, fractions="0.25").collect()}
-    assert md5_ids == {r["doc_id"] for r in pl.stratified_sample(
-        docs, fractions="0.25", engine="md5").collect()}
-    xx1 = {r["doc_id"] for r in pl.stratified_sample(
-        docs, fractions="0.25", engine="xxhash64").collect()}
-    xx2 = {r["doc_id"] for r in pl.stratified_sample(
-        docs, fractions="0.25", engine="xxhash64").collect()}
-    assert xx1 == xx2 and 40 < len(xx1) < 160
-    # cap_per_group: exactly n per group, stable, engine-selectable
-    for eng in ("md5", "xxhash64"):
-        capped = pl.cap_per_group(
-            docs, by=["grp"], id_col="doc_id", n=5, engine=eng
-        )
-        rows = capped.groupBy("grp").count().collect()
-        assert {r["count"] for r in rows} == {5}, (eng, rows)
-    # weighted_sample: k ranks, positive weights only, deterministic
-    w1 = {(r["doc_id"], r["smp_rank"]) for r in pl.weighted_sample(
-        docs, id_col="doc_id", weight_col="wt", k=7, engine="xxhash64"
-    ).collect()}
-    w2 = {(r["doc_id"], r["smp_rank"]) for r in pl.weighted_sample(
-        docs, id_col="doc_id", weight_col="wt", k=7, engine="xxhash64"
-    ).collect()}
-    assert w1 == w2 and len(w1) == 7
-    # mix_datasets: rates respected in expectation, deterministic
-    out = pl.mix_datasets(
-        {"x": docs, "y": docs}, {"x": 0.5, "y": 1.0}, engine="xxhash64"
-    )
-    cnt = {r["source"]: r["count"] for r in out.groupBy("source").count().collect()}
-    assert cnt["y"] == 400 and 120 < cnt["x"] < 280

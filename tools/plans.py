@@ -3,11 +3,11 @@
 
 Writes one ``<outdir>/<name>_<tag>.txt`` per query (same resolution
 order as bench.py) plus a ``summary_<tag>.tsv`` counting the plan
-nodes that matter for the r16 optimization triage: Exchange,
-join strategies, Python-boundary nodes, scans, windows, sorts.
+nodes that decide a query's cost: Exchange, join strategies,
+Python-boundary nodes, scans, windows, sorts. Diff two summaries.
 
 Usage:
-    python tools/r16_plans.py <outdir> <tag> [<query> ...]
+    python tools/plans.py <outdir> <tag> [<query> ...]
 
 With no query names, does all of bench.HEADLINE. Building a plan for
 queries that call eager localCheckpoint() runs those setup jobs — the
@@ -57,7 +57,7 @@ def main() -> int:
     names = sys.argv[3:] or bench.HEADLINE
     os.makedirs(outdir, exist_ok=True)
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    spark = get_spark("r16-plans")
+    spark = get_spark("plans")
 
     rows = []
     for name in names:

@@ -1143,8 +1143,6 @@ def q_sosfilt_chunked(spark, sf_dir):
 # extension + impulse-response convolution + state-response literals,
 # forward and backward).
 _SFF_SOS = butter_sos(4, 0.25)
-_SFF_NSEC = _SFF_SOS.shape[0]
-_SFF_PADLEN = 3 * (2 * _SFF_NSEC + 1)  # kernel default
 
 
 def _state_response_sql(sos: np.ndarray, name: str, length: int = 200) -> str:
@@ -4377,8 +4375,8 @@ def q_windows_merged(spark, sf_dir):
     return win.unionAll(sess)
 
 
-# Both istft reconstruction strategies share one oracle: the original
-# series on covered positions.
+# The spectral_apply roundtrip and istft's native plan share one
+# oracle: the original series on covered positions.
 _ISTFT_ORACLE = (
     f"WITH {_S} "
     "SELECT user_id, j AS t, round(x, 4) + 0.0 AS val4 "
@@ -6692,13 +6690,8 @@ def q_ann_recall_eval(spark, sf_dir):
 _WS_K = 25
 
 
-def _weighted_sample_oracle(guarded: bool = False) -> str:
-    # guarded=True is the registered oracle: the both-ends boundary CASE
-    # mirroring pipeline/sample.py _ares_key(u_guard="both").
-    # guarded=False is byte-pinned to the default u_guard="zero" path
-    # (whose u==0 deflection the SQL omits on purpose: ~1e-18 of md5 ids,
-    # none below ~10^17 rows; Spark's -inf and DuckDB's raw ln(u) only
-    # diverge ON such a row).
+def _weighted_sample_oracle() -> str:
+    # the both-ends boundary CASE mirrors pipeline/sample.py _ares_key
     u = (
         "(('0x' || substring(md5('wsample|' || CAST(doc_id AS VARCHAR)), 1, 15))"
         "::BIGINT / 16.0^15)"
@@ -6706,8 +6699,6 @@ def _weighted_sample_oracle(guarded: bool = False) -> str:
     key = (
         f"CASE WHEN {u} > 0 AND {u} < 1 THEN ln({u}) / n_chars "
         "ELSE CAST('-inf' AS DOUBLE) END"
-        if guarded
-        else f"ln({u}) / n_chars"
     )
     return (
         f"WITH keyed AS (SELECT lang, doc_id, {key} AS k "
@@ -6723,14 +6714,13 @@ def q_weighted_sample(spark, sf_dir):
     weighted_sample): 25 docs per language, probability ∝ n_chars, by
     the Efraimidis–Vassilvitskii A-Res keys over the salted-hash
     uniform — exact-by-id, rerun/partitioning-stable, and the oracle
-    recomputes the identical selection. Registered with the both-ends
-    u-boundary guard since r15 (ADVICE r13 #2): u values at EITHER
-    md5 rounding boundary (u == 0 log-poisoning, u == 1.0 guaranteed
-    win) lose symmetrically; the oracle mirrors the guard CASE."""
+    recomputes the identical selection. u values at EITHER md5
+    rounding boundary (u == 0 log-poisoning, u == 1.0 guaranteed win)
+    lose symmetrically; the oracle mirrors the guard CASE."""
     d = _docs(spark, sf_dir).select("lang", "doc_id", "n_chars")
     return pl.weighted_sample(
         d, id_col="doc_id", weight_col="n_chars", k=_WS_K,
-        group_cols=["lang"], u_guard="both",
+        group_cols=["lang"],
     )
 
 
@@ -8334,7 +8324,6 @@ def q_key_skew_profile(spark, sf_dir):
     return key_skew_profile(orders, key_col="o_custkey")
 
 
-_FREQ_COLS = ("l_returnflag", "l_quantity", "o_orderpriority")
 _FREQ_K = 5
 
 
@@ -9052,7 +9041,7 @@ REGISTRY = {
     "cdc_apply": (q_cdc_apply, _cdc_apply_oracle()),
     "window_analytics": (q_window_analytics, _window_analytics_oracle()),
     "active_user_setops": (q_active_user_setops, _setops_oracle()),
-    "weighted_sample": (q_weighted_sample, _weighted_sample_oracle(guarded=True)),
+    "weighted_sample": (q_weighted_sample, _weighted_sample_oracle()),
     "ann_recall_eval": (q_ann_recall_eval, _ann_recall_oracle()),
     "missing_windows": (q_missing_windows, _missing_windows_oracle()),
     "dedup_keep_best": (q_dedup_keep_best, _keep_best_oracle()),

@@ -139,8 +139,8 @@ def retention_cohorts(
     per-partition-unique pairs. The per-group cohort is then a
     whole-partition ``min`` WINDOW over the pairs frame, not a
     groupBy+join: the r12 decomposition (tools/retention_decompose.py
-    @1000x) measured the join shape's small-frame glue at 1.25 s of a
-    2.86 s total — three pair-volume exchanges (first-agg, both join
+    at 71b8918, @1000x) measured the join shape's small-frame glue at
+    1.25 s of a 2.86 s total — three pair-volume exchanges (first-agg, both join
     sides re-keyed) where the window pays one; the rewrite measured
     3.93 -> 2.85 s interleaved same-session with identical output.
     The previous shapes lost worse: raw-events join (two event-volume

@@ -261,15 +261,12 @@ def istft(
     im_col: str = "im",
     out: str = "value",
     weight_eps: float = 1e-12,
-    reconstruct: str = "native",
 ) -> DataFrame:
     """Inverse STFT by windowed least-squares overlap-add.
 
     Input: :func:`stft` output (one row per (series, frame, bin) with
     twin ``re``/``im``); ``frame_len``/``hop``/``window`` must match the
-    forward transform. Two physical strategies, same result:
-
-    ``reconstruct="native"`` (default) — two-stage plan:
+    forward transform. Two-stage plan:
 
     1. per-frame ``irfft`` through the grouped kernel with
        ``(by, frame)`` as the series key and ``bin`` as the core dim —
@@ -282,20 +279,13 @@ def istft(
        frames parallelize across partitions, so no worker ever holds a
        whole series.
 
-    ``reconstruct="fused"`` — one-stage plan: series key is ``by``
-    alone and the kernel does irfft AND the overlap-add in one
-    vectorized pass over each ``(series, frame, bin)`` block. ONE
-    bucket exchange total, no reconstruction shuffle — strictly fewer
-    exchanges when a whole series (the same bound every other grouped
-    kernel here assumes) fits a worker. Per-block drop positions are
-    geometry-constant (they depend only on ``n``, ``hop``, ``taps``),
-    so equal-length blocks stay rectangular.
-
     Since ``y_f = w·x`` exactly, the quotient reproduces the original
     samples exactly wherever any covering window tap is nonzero;
     positions with total weight ≤ ``weight_eps`` (e.g. t=0 under a
     periodic Hann whose first tap is 0, and the tail beyond the last
     full frame) are dropped rather than emitted as garbage.
+    :func:`spectral_apply` is the one-exchange alternative when the
+    caller starts from samples and wants samples back.
 
     Output: ``[*by, t, <out>]`` with ``t`` the 0-based sample position
     of the original series.
@@ -303,29 +293,6 @@ def istft(
     hop = frame_len // 2 if hop is None else hop
     taps = window_taps(window, frame_len)
     by = list(by)
-    n_bins = frame_len // 2 + 1
-    if reconstruct not in ("native", "fused"):
-        raise ValueError(f"reconstruct must be 'native' or 'fused', got {reconstruct!r}")
-
-    if reconstruct == "fused":
-
-        def fused_kernel(re_block, im_block):
-            n_series, n = re_block.shape
-            n_frames = n // n_bins
-            spec = (re_block + 1j * im_block).reshape(n_series, n_frames, n_bins)
-            seg = np.fft.irfft(spec, n=frame_len, axis=-1)  # (s, f, frame_len)
-            return _overlap_add(seg, taps, hop, weight_eps)
-
-        res = apply_series_kernel(
-            df,
-            fused_kernel,
-            by=by,
-            order=[frame_col, bin_col],
-            values=[re_col, im_col],
-            out_fields="t bigint, val double",
-            emit_idx=False,
-        )
-        return res.select(*by, "t", F.col("val").alias(out))
 
     def kernel(re_block, im_block):
         seg = np.fft.irfft(re_block + 1j * im_block, n=frame_len, axis=-1)

@@ -8,14 +8,16 @@ the north-star training-data ops. Design rules at 100 TB:
   bit chunk / SRP bucket) — never an all-pairs cross join;
 - signatures are computed **map-side** with higher-order array
   functions (one pass over each doc's token array, zero shuffles);
-- the only shuffles are the bucket join and the final distinct;
+- the only shuffle is the bucket join: a pair sharing several bands
+  is emitted once, from its smallest shared band, so no final
+  distinct runs;
 - hot buckets (a band value shared by many docs) are the classic LSH
   skew risk: AQE skew-join splitting handles moderate skew, and
   ``max_df`` drops degenerate shingles (stopword-like n-grams) before
   they create quadratic buckets.
 
 Every constant (seeds, band layout, hash width) is mirrored by the
-DuckDB oracle SQL in :mod:`xarray_scipy_spark.oracles`, which recomputes
+DuckDB oracle SQL in :mod:`xarray_scipy_spark.contract`, which recomputes
 identical md5-based values — the correctness gate compares byte-equal
 results, not just row counts.
 """
@@ -26,18 +28,19 @@ import hashlib
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame, Window, functions as F
+from pyspark.sql import DataFrame, Window, functions as F
 
 from .hashes import (
     MINHASH_P,
+    bucket,
     h32,
-    h48,
     h60,
     minhash_coeffs,
     spread,
     tokens,
     word_shingles,
 )
+from .similarity import _dot, _normed, _vec_dim, srp_bucket
 
 __all__ = [
     "edit_distance_pairs",
@@ -163,71 +166,21 @@ def minhash_pairs(
 
     Output: ``(a_id, b_id, jaccard)`` with ``a_id < b_id``.
     """
-    rows_per_band = num_hashes // bands
-    if rows_per_band * bands != num_hashes:
-        raise ValueError("bands must divide num_hashes")
+    band_hashes = _minhash_bands(num_hashes, bands)
     sigs = minhash_signatures(
         df, id_col=id_col, text_col=text_col, num_hashes=num_hashes, k=k
     )
-    # One SQL statement for band-explode + self-join (Py4J build cost,
-    # same as simhash). Semantics:
-    # - shuffle-hash, NOT broadcast: broadcasting a side of the
-    #   self-join would compute the signature subtree twice and pull
-    #   one copy through the driver; with both sides shuffled on the
-    #   bucket keys the exchanges canonicalize identically and are
-    #   computed once (ReusedExchange);
-    # - a pair sharing several bands is emitted ONCE — from its
-    #   smallest shared band (every earlier band hash must differ) —
-    #   replacing the distinct() and its extra shuffle of the
-    #   candidate set. Each side carries the 4 band hashes as an array.
-    def band_md5(b: int) -> str:
-        cols = ", ".join(
-            f"mh_{b * rows_per_band + r}" for r in range(rows_per_band)
-        )
-        return f"md5(concat_ws('|', {cols}))"
-
-    band_structs = ", ".join(
-        f"named_struct('band', {b}, 'band_hash', {band_md5(b)})"
-        for b in range(bands)
+    cand = _band_join(
+        sigs,
+        band_hashes,
+        keep=id_col,
+        pair=f"a.{id_col} < b.{id_col}",
+        out=f"a.{id_col} AS a_id, b.{id_col} AS b_id",
     )
-    bhs = ", ".join(band_md5(b) for b in range(bands))
-    earlier_differ = " AND ".join(
-        f"(a.band <= {c} OR a.bhs[{c}] != b.bhs[{c}])" for c in range(bands - 1)
-    )
-    earlier_differ = f" AND {earlier_differ}" if earlier_differ else ""
-    cand = df.sparkSession.sql(
-        f"""
-        WITH buckets AS (
-          SELECT {id_col}, array({bhs}) AS bhs, bb.band, bb.band_hash
-          FROM {{sigs}} LATERAL VIEW explode(array({band_structs})) AS bb
-        )
-        SELECT /*+ SHUFFLE_HASH(a, b) */
-               a.{id_col} AS a_id, b.{id_col} AS b_id
-        FROM buckets a JOIN buckets b
-          ON a.band = b.band AND a.band_hash = b.band_hash
-         AND a.{id_col} < b.{id_col}{earlier_differ}
-        """,
-        sigs=sigs,
-    )
-
     sh = _with_shingles(df, id_col, text_col, k)
-    sa = sh.select(F.col(id_col).alias("a_id"), F.col("shingles").alias("sh_a"))
-    sb = sh.select(F.col(id_col).alias("b_id"), F.col("shingles").alias("sh_b"))
-    # broadcast the CANDIDATE side explicitly: it is tiny after LSH
-    # (that's the whole point of banding), while sa/sb carry the heavy
-    # shingle arrays — letting the planner broadcast a shingle side
-    # would recompute it driver-side
-    verified = (
-        sb.join(F.broadcast(sa.join(F.broadcast(cand), "a_id")), "b_id")
-        .withColumn(
-            "jaccard",
-            F.size(F.array_intersect("sh_a", "sh_b"))
-            / F.size(F.array_union("sh_a", "sh_b")),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("a_id", "b_id", "jaccard")
+    return _jaccard_verify(
+        cand, (sh, id_col, "a_id"), (sh, id_col, "b_id"), threshold
     )
-    return verified
 
 
 def minhash_pairs_cross(
@@ -260,9 +213,7 @@ def minhash_pairs_cross(
     Output: ``(left_id, right_id, jaccard)`` — id spaces may overlap
     freely (ids never compare across sides).
     """
-    rows_per_band = num_hashes // bands
-    if rows_per_band * bands != num_hashes:
-        raise ValueError("bands must divide num_hashes")
+    band_hashes = _minhash_bands(num_hashes, bands)
     rid = right_id_col or id_col
     rtext = right_text_col or text_col
     sig_l = minhash_signatures(
@@ -271,52 +222,102 @@ def minhash_pairs_cross(
     sig_r = minhash_signatures(
         right, id_col=rid, text_col=rtext, num_hashes=num_hashes, k=k
     ).select(F.col(rid).alias("_id"), F.lit(1).alias("_side"), "*").drop(rid)
-    sigs = sig_l.unionByName(sig_r)
+    cand = _band_join(
+        sig_l.unionByName(sig_r),
+        band_hashes,
+        keep="_id, _side",
+        pair="a._side = 0 AND b._side = 1",
+        out="a._id AS left_id, b._id AS right_id",
+    )
+    return _jaccard_verify(
+        cand,
+        (_with_shingles(left, id_col, text_col, k), id_col, "left_id"),
+        (_with_shingles(right, rid, rtext, k), rid, "right_id"),
+        threshold,
+    )
 
-    def band_md5(b: int) -> str:
-        cols = ", ".join(
-            f"mh_{b * rows_per_band + r}" for r in range(rows_per_band)
-        )
-        return f"md5(concat_ws('|', {cols}))"
 
-    band_structs = ", ".join(
-        f"named_struct('band', {b}, 'band_hash', {band_md5(b)})"
+def _minhash_bands(num_hashes: int, bands: int) -> list[str]:
+    """Band hash SQL per band: md5 of the band's ``num_hashes // bands``
+    concatenated minhash columns (``mh_<i>``)."""
+    rows_per_band = num_hashes // bands
+    if rows_per_band * bands != num_hashes:
+        raise ValueError("bands must divide num_hashes")
+    return [
+        "md5(concat_ws('|', "
+        + ", ".join(f"mh_{b * rows_per_band + r}" for r in range(rows_per_band))
+        + "))"
         for b in range(bands)
+    ]
+
+
+def _band_join(
+    sigs: DataFrame, bands: list[str], *, keep: str, pair: str, out: str
+) -> DataFrame:
+    """LSH candidate pairs: explode each row of ``sigs`` into one bucket
+    row per band (``bands`` are SQL expressions over ``sigs``), self-join
+    the buckets on ``(band, band_hash)`` under the extra condition
+    ``pair`` and select ``out``; ``keep`` lists the ``sigs`` columns the
+    bucket rows carry (``a.``/``b.`` in ``pair`` and ``out``).
+
+    - One SQL statement: the Column-API build of this join was ~1000
+      Py4J round trips (~0.5 s per plan build).
+    - Shuffle-hash, NOT broadcast: broadcasting one side of a self-join
+      computes the signature subtree a second time and pulls one copy
+      through the driver. With both sides shuffled on the bucket keys
+      the exchanges canonicalize identically and are computed once
+      (ReusedExchange).
+    - A pair sharing several bands is emitted ONCE, from its smallest
+      shared band: every row carries all its band hashes as ``bhs``, and
+      every earlier band must differ. This replaces a distinct() and its
+      extra shuffle of the candidate set.
+    """
+    structs = ", ".join(
+        f"named_struct('band', {i}, 'band_hash', {h})" for i, h in enumerate(bands)
     )
-    bhs = ", ".join(band_md5(b) for b in range(bands))
-    earlier_differ = " AND ".join(
-        f"(a.band <= {c} OR a.bhs[{c}] != b.bhs[{c}])" for c in range(bands - 1)
+    earlier_differ = "".join(
+        f" AND (a.band <= {c} OR a.bhs[{c}] != b.bhs[{c}])"
+        for c in range(len(bands) - 1)
     )
-    earlier_differ = f" AND {earlier_differ}" if earlier_differ else ""
-    cand = left.sparkSession.sql(
+    return sigs.sparkSession.sql(
         f"""
         WITH buckets AS (
-          SELECT _id, _side, array({bhs}) AS bhs, bb.band, bb.band_hash
-          FROM {{sigs}} LATERAL VIEW explode(array({band_structs})) AS bb
+          SELECT {keep}, array({", ".join(bands)}) AS bhs, bb.band, bb.band_hash
+          FROM {{sigs}} LATERAL VIEW explode(array({structs})) AS bb
         )
-        SELECT /*+ SHUFFLE_HASH(a, b) */
-               a._id AS left_id, b._id AS right_id
+        SELECT /*+ SHUFFLE_HASH(a, b) */ {out}
         FROM buckets a JOIN buckets b
           ON a.band = b.band AND a.band_hash = b.band_hash
-         AND a._side = 0 AND b._side = 1{earlier_differ}
+         AND {pair}{earlier_differ}
         """,
         sigs=sigs,
     )
-    sh_l = _with_shingles(left, id_col, text_col, k).select(
-        F.col(id_col).alias("left_id"), F.col("shingles").alias("sh_a")
-    )
-    sh_r = _with_shingles(right, rid, rtext, k).select(
-        F.col(rid).alias("right_id"), F.col("shingles").alias("sh_b")
-    )
+
+
+def _jaccard_verify(cand: DataFrame, a, b, threshold: float) -> DataFrame:
+    """Keep the candidate pairs whose exact shingle-set Jaccard
+    (``array_intersect`` / ``array_union``) is at least ``threshold``.
+    ``a`` and ``b`` are ``(shingles, id_col, name)`` per side: a
+    :func:`_with_shingles` frame, its id column, and that id's column
+    name in ``cand``. Output: ``(a name, b name, jaccard)``.
+
+    The CANDIDATE side is broadcast explicitly: it is tiny after LSH
+    (that is the point of banding), while the shingle sides carry the
+    heavy arrays; letting the planner broadcast a shingle side would
+    recompute it driver-side.
+    """
+    (sh_a, id_a, na), (sh_b, id_b, nb) = a, b
+    sa = sh_a.select(F.col(id_a).alias(na), F.col("shingles").alias("sh_a"))
+    sb = sh_b.select(F.col(id_b).alias(nb), F.col("shingles").alias("sh_b"))
     return (
-        sh_r.join(F.broadcast(sh_l.join(F.broadcast(cand), "left_id")), "right_id")
+        sb.join(F.broadcast(sa.join(F.broadcast(cand), na)), nb)
         .withColumn(
             "jaccard",
             F.size(F.array_intersect("sh_a", "sh_b"))
             / F.size(F.array_union("sh_a", "sh_b")),
         )
         .filter(F.col("jaccard") >= threshold)
-        .select("left_id", "right_id", "jaccard")
+        .select(na, nb, "jaccard")
     )
 
 
@@ -353,7 +354,7 @@ def ngram_jaccard_pairs(
         inv = inv.withColumn("df_", F.count(F.lit(1)).over(w)).filter(
             F.col("df_") <= max_df
         ).drop("df_")
-    # shuffle-hash self-join: see minhash_pairs — keeps the shingle
+    # shuffle-hash self-join: see _band_join — keeps the shingle
     # pipeline computed once (reused exchange) instead of broadcasting
     # one full copy through the driver
     a = inv.hint("shuffle_hash").alias("a")
@@ -642,57 +643,27 @@ def simhash_pairs(
 ) -> DataFrame:
     """Near-dup pairs by SimHash Hamming distance.
 
-    Candidates: pairs sharing at least one of the 4 × 12-bit chunks
-    (pigeonhole: any pair within Hamming distance 3·12 shares a chunk —
-    for ``max_distance <= 3`` recall is exact; larger distances trade
-    recall for the same bucket-join cost). Then the exact distance
-    filter via ``bit_count(a ^ b)``.
+    Candidates: pairs sharing at least one of the 4 × 12-bit chunks,
+    through :func:`_band_join` (pigeonhole: a pair within Hamming
+    distance 3 differs in at most 3 chunks, so for ``max_distance <= 3``
+    recall is exact; larger distances trade recall for the same
+    bucket-join cost). Then the exact distance filter via
+    ``bit_count(a ^ b)``.
     """
     fps = simhash_fingerprints(df, id_col=id_col, text_col=text_col)
     chunk_bits = _SIMHASH_BITS // _SIMHASH_CHUNKS
     mask = (1 << chunk_bits) - 1
-    # One spark.sql statement (same Py4J-roundtrip rationale as
-    # simhash_fingerprints — the Column-API version of this join was
-    # ~1000 driver roundtrips ≈ 0.5 s per plan build). Semantics:
-    #
-    # - shuffle-hash, NOT broadcast: broadcasting one side of a
-    #   self-join materializes the whole fingerprint subtree a second
-    #   time (and collects it to the driver). With both sides shuffled
-    #   on the same keys the plans canonicalize identically and
-    #   ReusedExchange computes the fingerprints ONCE (measured ~2x).
-    # - a pair sharing k chunks would surface k times; instead of a
-    #   distinct() (a full extra shuffle of the pair set), emit each
-    #   pair exactly once — from its SMALLEST shared chunk — by
-    #   requiring every earlier chunk to differ. Both sides carry the
-    #   full fingerprint, so that is shift/mask arithmetic inside the
-    #   same codegen stage as the join.
-    chunk_structs = ", ".join(
-        f"named_struct('chunk', {c}, 'chunk_val',"
-        f" shiftright(simhash, {c * chunk_bits}) & {mask})"
-        for c in range(_SIMHASH_CHUNKS)
-    )
-    earlier_differ = " AND ".join(
-        f"(a.chunk <= {c} OR (shiftright(a.simhash, {c * chunk_bits}) & {mask})"
-        f" != (shiftright(b.simhash, {c * chunk_bits}) & {mask}))"
-        for c in range(_SIMHASH_CHUNKS - 1)
-    )
-    return df.sparkSession.sql(
-        f"""
-        WITH buckets AS (
-          SELECT {id_col}, simhash, cc.chunk, cc.chunk_val
-          FROM {{fps}} LATERAL VIEW explode(array({chunk_structs})) AS cc
-        )
-        SELECT a_id, b_id, hamming FROM (
-          SELECT /*+ SHUFFLE_HASH(a, b) */
-                 a.{id_col} AS a_id, b.{id_col} AS b_id,
-                 bit_count(a.simhash ^ b.simhash) AS hamming
-          FROM buckets a JOIN buckets b
-            ON a.chunk = b.chunk AND a.chunk_val = b.chunk_val
-           AND a.{id_col} < b.{id_col} AND {earlier_differ}
-        ) WHERE hamming <= {int(max_distance)}
-        """,
-        fps=fps,
-    )
+    return _band_join(
+        fps,
+        [
+            f"shiftright(simhash, {c * chunk_bits}) & {mask}"
+            for c in range(_SIMHASH_CHUNKS)
+        ],
+        keep=f"{id_col}, simhash",
+        pair=f"a.{id_col} < b.{id_col}",
+        out=f"a.{id_col} AS a_id, b.{id_col} AS b_id, "
+        "bit_count(a.simhash ^ b.simhash) AS hamming",
+    ).where(f"hamming <= {int(max_distance)}")
 
 
 def srp_plane(plane: int, dim: int) -> float:
@@ -703,14 +674,6 @@ def srp_plane(plane: int, dim: int) -> float:
     literals on both sides instead of recomputing per row."""
     h = hashlib.md5(f"{plane}|{dim}".encode()).hexdigest()
     return (int(h[:15], 16) % 1000) / 1000.0 - 0.5
-
-
-def _dot(a: Column, b: Column) -> Column:
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
 
 
 def embedding_dup_pairs(
@@ -744,28 +707,23 @@ def embedding_dup_pairs(
       vectors (one cheap count against parquet metadata), LSH beyond —
       so the default NEVER silently runs O(N²) on a large corpus.
 
-    Output ``(a_id, b_id, cos_sim)`` with ``a_id < b_id``.
+    Output ``(a_id, b_id, cos_sim)`` with ``a_id < b_id``. ``"lsh"``
+    takes the dimension from the first non-NULL vector; with none it
+    returns an empty frame.
     """
     if method not in ("auto", "exact", "lsh"):
         raise ValueError(f"method must be auto|exact|lsh, got {method!r}")
     if method == "auto":
         method = "exact" if df.count() <= exact_max_rows else "lsh"
-    v = df.select(
-        F.col(id_col),
-        F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("v"),
-    )
-    norm = F.sqrt(_dot(F.col("v"), F.col("v")))
-    v = v.withColumn("nrm", norm)
-
+    v = _normed(df, id_col, vec_col, [])
     if method == "lsh":
-        dim = len(df.select(vec_col).first()[0])
-        def plane_lit(p):
-            return F.array(*[F.lit(srp_plane(p, d)) for d in range(dim)])
-        bucket = None
-        for p in range(lsh_planes):
-            bit = F.when(_dot(F.col("v"), plane_lit(p)) >= 0, 1 << p).otherwise(0)
-            bucket = bit if bucket is None else bucket + bit
-        v = v.withColumn("bucket", bucket)
+        dim = _vec_dim(df, vec_col)
+        if dim is None:
+            id_type = dict(df.dtypes)[id_col]
+            return df.sparkSession.createDataFrame(
+                [], f"a_id {id_type}, b_id {id_type}, cos_sim double"
+            )
+        v = v.withColumn("bucket", srp_bucket(F.col("v"), lsh_planes, dim))
         a = v.hint("shuffle_hash").alias("a")
         b = v.hint("shuffle_hash").alias("b")
         join_cond = (F.col("a.bucket") == F.col("b.bucket")) & (
@@ -814,7 +772,7 @@ def _blocked_allpairs_cosine(
         ],
         "pid int, pa int, pb int",
     )
-    vb = v.withColumn("blk", F.pmod(F.xxhash64(id_col), F.lit(blocks)).cast("int"))
+    vb = v.withColumn("blk", bucket(blocks, id_col).cast("int"))
     left = vb.join(
         F.broadcast(pairs_meta), vb["blk"] == pairs_meta["pa"]
     ).select("pid", id_col, "v")
@@ -1080,7 +1038,7 @@ def edit_distance_pairs(
     # left side explodes each member over (its bucket .. B-1) as the
     # probe bucket, the right side keys on its own bucket, and the
     # (bx < by) | (bx == by & id order) filter kills the mirror.
-    b_ = F.pmod(F.xxhash64(F.col("_id").cast("string")), F.lit(dup_buckets))
+    b_ = bucket(dup_buckets, F.col("_id").cast("string"))
     dup_strings = uniq.filter(F.col("_c") >= 2).select("_s")
     members = base.join(dup_strings, "_s").withColumn("_b", b_)
     wl = members.select(

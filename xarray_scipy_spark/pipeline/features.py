@@ -229,7 +229,7 @@ def auc_exact(
         # the guard exists for.
         #
         # Single-pass candidate MEASURED-AND-REJECTED (r14, VERDICT
-        # r13 #7, tools/auc_shape_ab.py @135M rows, two settled
+        # r13 #7, tools/auc_shape_ab.py at 71b8918, @135M rows, two settled
         # sessions: 0.91x / 1.04x — a tie): the "second input
         # aggregate" the eager checkpoint appears to pay never
         # re-scans in practice, because the checkpoint job reuses the

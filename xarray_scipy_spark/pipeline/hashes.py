@@ -24,6 +24,7 @@ __all__ = [
     "h60",
     "h48",
     "h32",
+    "bucket",
     "seeded_md5",
     "minhash_coeffs",
     "MINHASH_P",
@@ -146,6 +147,14 @@ def h32(col) -> Column:
     DuckDB equivalent: ``('0x' || substring(md5(x), 1, 8))::BIGINT``.
     """
     return F.conv(F.substring(F.md5(_c(col)), 1, 8), 16, 10).cast("bigint")
+
+
+def bucket(n: int, *cols) -> Column:
+    """Partition bucket ``pmod(xxhash64(cols), n)`` in ``[0, n)``: the
+    JVM-native hash for skew-splitting exchanges. Spark-only (no oracle
+    recomputes it), so it may pick rows' tasks but never their values.
+    """
+    return F.pmod(F.xxhash64(*[_c(c) for c in cols]), F.lit(n))
 
 
 # affine MinHash permutations over the 32-bit hash space:

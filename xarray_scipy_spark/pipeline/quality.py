@@ -38,6 +38,8 @@ from collections.abc import Mapping, Sequence
 
 from pyspark.sql import DataFrame, functions as F
 
+from .hashes import bucket as hash_bucket
+
 __all__ = [
     "data_profile",
     "constraint_check",
@@ -341,7 +343,7 @@ def frequent_values(
     cnt = stacked.groupBy("column", "value").agg(
         F.count(F.lit(1)).alias("cnt")
     )
-    bucket = F.pmod(F.xxhash64(F.col("value")), F.lit(buckets))
+    bucket = hash_bucket(buckets, "value")
     pruned = (
         cnt.withColumn("_b", bucket)
         .withColumn(

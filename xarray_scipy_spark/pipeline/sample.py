@@ -19,7 +19,7 @@ from collections.abc import Mapping, Sequence
 
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
-from .hashes import _c, h60
+from .hashes import _c, bucket, h60
 
 __all__ = [
     "cap_per_group",
@@ -44,93 +44,35 @@ __all__ = [
 _H60_SPAN = float(16**15)
 
 
-def _clamp_u01_open(u: Column) -> Column:
-    """Clamp a nominal [0, 1] uniform into the OPEN interval (0, 1):
-    never exactly 1.0 (a rate=1.0 filter must keep every id) and never
-    exactly 0.0 (``log(u)`` consumers must stay finite). Bounds are the
-    largest double below 1 and the grid spacing of the 2^-64 divide."""
-    return F.greatest(F.least(u, F.lit(1.0 - 2.0**-53)), F.lit(2.0**-64))
-
-
-def _u01(parts: Sequence[Column], engine: str) -> Column:
-    """[0, 1) uniform over the salted parts tuple, by hash engine.
-
-    ``md5`` is the shipped default: the h60 construction reproduces
-    bit-for-bit in DuckDB, which is what the oracle gate verifies.
-    ``xxhash64`` is the at-scale fast path: same determinism and
-    salt-independence contracts, whole-stage-codegen JVM hashing with
-    no hex round-trip — measured 11.8x faster on the hash-dominated
-    tier, landing at 1.18x the no-hash scan floor
-    (tools/hash_floor_ab.py; BASELINE.md r11 addendum) — but NOT
-    reproducible by other engines, so oracle-gated paths keep md5.
-    """
-    if engine == "xxhash64":
-        # signed 64-bit hash shifted into (0, 1). The long->double
-        # conversion rounds hashes within ~2^10 of 2^63-1 UP to
-        # exactly 2^63, which would make u == 1.0 and deterministically
-        # drop those ids even at rate=1.0 — clamp to the largest
-        # double below 1. Symmetrically, hashes within ~2^9 of -2^63
-        # round to exactly u == 0.0 (~2^-54 of ids), which poisons
-        # log(u) consumers (weighted_sample's A-Res key goes NULL and
-        # NULL-sorted rows would WIN regardless of weight, ADVICE r12
-        # #1) — clamp above 0 too. No oracle mirrors this path, so
-        # both clamps are free.
-        u = (F.xxhash64(*parts) / F.lit(float(2**64))) + F.lit(0.5)
-        return _clamp_u01_open(u)
-    if engine != "md5":
-        raise ValueError(
-            f"unknown hash engine {engine!r}: expected 'md5' or 'xxhash64'"
-        )
-    # NOTE: h values within ~2^7 of 2^60-1 round up to u == 1.0 here
-    # (~1e-16 of ids). DuckDB's BIGINT/DOUBLE divide rounds IDENTICALLY,
-    # so both engines agree row-for-row — the md5 path's contract is
-    # cross-engine reproducibility, and a Spark-only clamp would break
-    # byte-parity with every shipped oracle; left as-is by design.
+def _u01(parts: Sequence[Column]) -> Column:
+    """[0, 1) uniform over the salted parts tuple: the h60 construction,
+    which reproduces bit-for-bit in DuckDB (the oracle gate verifies
+    it), boundary rounding included (see :func:`hash_uniform`)."""
     return h60(F.concat_ws("|", *parts)) / F.lit(_H60_SPAN)
 
 
-def hash_uniform(col, salt: str = "", engine: str = "md5") -> Column:
+def hash_uniform(col, salt: str = "") -> Column:
     """Deterministic uniform in [0, 1) from ``md5(salt|value)``.
 
     DuckDB equivalent (the oracle recomputes it exactly)::
 
         ('0x' || substring(md5(salt || '|' || x), 1, 15))::BIGINT / 16.0^15
 
-    ``engine="xxhash64"`` swaps the cross-engine md5 construction for
-    JVM-native xxhash64 (``xxhash64(salt, x)/2^64 + 0.5``) — the
-    100 TB knob for hash-dominated plans (split/fold/mix/cap): same
-    rerun/partitioning stability and salt-independence, ~12x less
-    per-row hash cost, but no out-of-Spark reproducibility. Default
-    stays md5 because the correctness gate requires a hash DuckDB can
-    recompute (the ``exact_distinct=False`` precedent in
-    pipeline/quality.py data_profile).
+    Boundary semantics are DuckDB's BIGINT/DOUBLE divide rounding,
+    verbatim: hash values within ~2^7 of 2^60-1 round UP to exactly
+    ``u == 1.0`` (~1e-16 of ids), so those ids are deterministically
+    dropped even at rate=1.0, and ``u == 0.0`` is reachable (15 leading
+    zero hex chars, ~1e-18 of ids). A Spark-side clamp would break
+    byte parity with every shipped oracle, so consumers that cannot
+    tolerate a boundary guard locally: :func:`weighted_sample` sends any ``u``
+    outside the open interval (0, 1) to the losing key (``_ares_key``).
 
-    Boundary semantics DIFFER between the two engines, by design:
-
-    - ``md5`` keeps DuckDB's BIGINT/DOUBLE divide rounding verbatim —
-      hash values within ~2^7 of 2^60-1 round UP to exactly ``u ==
-      1.0`` (~1e-16 of ids), so those ids are deterministically
-      dropped even at rate=1.0, and ``u == 0.0`` is reachable (15
-      leading zero hex chars, ~1e-18 of ids). A Spark-side clamp
-      would break byte-parity with every shipped oracle, so the md5
-      path is left exactly as DuckDB computes it.
-    - ``xxhash64`` has no oracle to mirror, so it clamps BOTH ends
-      into the open interval (0, 1): never 1.0 (no rate=1.0 drops)
-      and never 0.0 (no ``log(u)`` poisoning). See the boundary test
-      ``tests/test_pipeline.py::test_u01_xxhash64_boundary_clamp``.
-
-    Consumers that cannot tolerate a boundary on the md5 path must
-    guard locally, and the guard is per-boundary: the default
-    ``u_guard="zero"`` deflects only ``u == 0`` (the log(u)-NULL
-    poisoning), leaving ``u == 1.0`` rows (~1e-16 of ids) with ``key
-    = log(1)/w = 0`` — the maximum possible key, a guaranteed win
-    regardless of weight (ADVICE r13 #2). The registered contract
-    query uses the symmetric guard — ``weighted_sample(...,
-    u_guard="both")`` with its oracle mirror
-    (contract._weighted_sample_oracle(guarded=True)) — since the r15
-    rotation; both semantics stay available per call site.
+    md5 is the only hash. A JVM-native hash was ~12x cheaper per row,
+    but no other engine reproduces it, and at the 135 M-row tier it
+    bought only 1.13-1.15x end to end (``tools/hash_floor_ab.py`` and
+    ``tools/knob_tier_ab.py`` at 71b8918).
     """
-    return _u01([F.lit(salt), _c(col)], engine)
+    return _u01([F.lit(salt), _c(col)])
 
 
 def split_assign(
@@ -140,7 +82,6 @@ def split_assign(
     weights: Mapping[str, float] | None = None,
     salt: str = "split",
     out: str = "split",
-    engine: str = "md5",
 ) -> DataFrame:
     """Assign every row to a named split by cumulative weight ranges
     over the salted-hash uniform — e.g. ``{"train": .98, "val": .01,
@@ -155,7 +96,7 @@ def split_assign(
         raise ValueError(f"split weights must sum to 1, got {total}")
     if len(weights) < 2:
         raise ValueError("need at least two splits")
-    u = hash_uniform(id_col, salt=salt, engine=engine)
+    u = hash_uniform(id_col, salt=salt)
     names = list(weights)
     expr = F.lit(names[-1])
     cum = 0.0
@@ -179,7 +120,6 @@ def split_assign_clustered(
     a_col: str = "a_id",
     b_col: str = "b_id",
     max_iter: int = 30,
-    engine: str = "md5",
 ) -> DataFrame:
     """Leakage-safe train/val/test assignment: every member of a
     near-duplicate cluster lands in the SAME split.
@@ -223,8 +163,7 @@ def split_assign_clustered(
         "cluster_id", F.coalesce(F.col("cluster_id"), F.col(id_col).cast("bigint"))
     )
     return split_assign(
-        d, id_col="cluster_id", weights=weights, salt=salt, out=out,
-        engine=engine,
+        d, id_col="cluster_id", weights=weights, salt=salt, out=out
     )
 
 
@@ -235,7 +174,6 @@ def mix_datasets(
     id_col: str = "doc_id",
     salt: str = "mix",
     source_col: str = "source",
-    engine: str = "md5",
 ) -> DataFrame:
     """Weighted domain mixture: the corpus-assembly step that samples
     each source dataset at its own rate and unions the survivors,
@@ -259,8 +197,7 @@ def mix_datasets(
         if not 0.0 <= rate <= 1.0:
             raise ValueError(f"rate for {name!r} must be in [0, 1], got {rate}")
         part = df.filter(
-            hash_uniform(id_col, salt=f"{salt}|{name}", engine=engine)
-            < F.lit(rate)
+            hash_uniform(id_col, salt=f"{salt}|{name}") < F.lit(rate)
         ).withColumn(source_col, F.lit(name))
         out = part if out is None else out.unionByName(part)
     if out is None:
@@ -275,7 +212,6 @@ def stratified_sample(
     fractions: Mapping[str, float] | str,
     stratum_col: str | None = None,
     salt: str = "sample",
-    engine: str = "md5",
 ) -> DataFrame:
     """Deterministic per-stratum subsample: keep a row iff its salted-
     hash uniform falls below its stratum's fraction. ``fractions`` maps
@@ -284,7 +220,7 @@ def stratified_sample(
     for a flat sample. Unlike ``DataFrame.sample`` this is exact-by-id:
     the same ids survive every rerun, any partitioning, any engine.
     """
-    u = hash_uniform(id_col, salt=salt, engine=engine)
+    u = hash_uniform(id_col, salt=salt)
     if stratum_col is None:
         frac = float(fractions)  # type: ignore[arg-type]
         return df.filter(u < F.lit(frac))
@@ -404,7 +340,6 @@ def cap_per_group(
     n: int,
     salt: str = "cap",
     keep_col: str | None = None,
-    engine: str = "md5",
 ) -> DataFrame:
     """Keep at most ``n`` rows per group, chosen by the salted-hash
     uniform over ``id_col`` — the per-domain / per-source cap every
@@ -427,7 +362,7 @@ def cap_per_group(
     the group keys serializes each group's sort onto ONE reducer — at
     100 TB a per-domain cap with a handful of hot domains is exactly
     the skew case. The filter path therefore runs TWO-PHASE top-n:
-    phase 1 ranks within (deterministic xxhash64 salt-bucket × group)
+    phase 1 ranks within (deterministic hash bucket × group)
     — parallelism = buckets × groups — and prunes to each bucket's
     local top-``n`` (a superset of the global top-``n`` for any
     bucketing); phase 2 runs the exact window over the ≤ buckets·n
@@ -442,7 +377,7 @@ def cap_per_group(
         raise ValueError(f"n must be >= 1, got {n}")
     by = [by] if isinstance(by, str) else list(by)
     w = Window.partitionBy(*by).orderBy(
-        hash_uniform(id_col, salt=salt, engine=engine).asc(),
+        hash_uniform(id_col, salt=salt).asc(),
         F.col(id_col).asc(),
     )
     if keep_col is not None:
@@ -454,9 +389,9 @@ def cap_per_group(
     # coalescing would fold the whole phase onto 1-2 tasks at bench
     # sizes (the istft lesson, tests/test_plans.py kernel-width lock) —
     # the window then reuses this exchange, no second shuffle
-    pb = F.pmod(F.xxhash64(F.col(id_col)), F.lit(buckets))
+    pb = bucket(buckets, id_col)
     wl = Window.partitionBy(pb, *by).orderBy(
-        hash_uniform(id_col, salt=salt, engine=engine).asc(),
+        hash_uniform(id_col, salt=salt).asc(),
         F.col(id_col).asc(),
     )
     pruned = (
@@ -476,30 +411,18 @@ def kfold_assign(
     k: int = 5,
     salt: str = "fold",
     out: str = "fold",
-    engine: str = "md5",
 ) -> DataFrame:
     """Deterministic k-fold cross-validation assignment: fold =
     ``h60(salt|id) mod k`` — the split_assign determinism contract
     (rerun/partitioning-stable, engine-reproducible, disjoint and
     exhaustive folds) with uniform fold sizes in expectation. Pure
     projection, no shuffle."""
-    from .hashes import h60
-
     if k < 2:
         raise ValueError(f"k must be >= 2, got {k}")
-    if engine == "xxhash64":
-        # same fast-path contract as hash_uniform: pmod of the JVM
-        # hash keeps folds disjoint/exhaustive and rerun-stable
-        fold = F.pmod(F.xxhash64(F.lit(salt), _c(id_col)), F.lit(k))
-    elif engine == "md5":
-        fold = F.pmod(
-            h60(F.concat_ws("|", F.lit(salt), _c(id_col).cast("string"))),
-            F.lit(k),
-        )
-    else:
-        raise ValueError(
-            f"unknown hash engine {engine!r}: expected 'md5' or 'xxhash64'"
-        )
+    fold = F.pmod(
+        h60(F.concat_ws("|", F.lit(salt), _c(id_col).cast("string"))),
+        F.lit(k),
+    )
     return df.withColumn(out, fold.cast("int"))
 
 
@@ -731,31 +654,18 @@ def robust_zscore(
     return res
 
 
-def _ares_key(u: Column, weight: Column, u_guard: str) -> Column:
+def _ares_key(u: Column, weight: Column) -> Column:
     """The Efraimidis–Vassilvitskii A-Res key ``ln(u)/w`` with the
-    hash-boundary guard applied. ``u_guard``:
-
-    - ``"zero"`` (the function default; the r12-r14 registered
-      semantics): only ``u == 0`` is deflected to −inf (log(0) is
-      NULL and NULL sorts FIRST under the descending key — ADVICE
-      r12 #1); ``u == 1.0`` still yields key 0, the maximum, so such
-      an id wins regardless of weight (the ADVICE r13 #2 one-sided
-      gap).
-    - ``"both"`` (the contract-registered semantics since r15, staged
-      r14): any ``u`` outside the open interval (0, 1) loses —
-      symmetric treatment of both md5 rounding boundaries (each
-      ~1e-16-1e-18 of ids). The DuckDB mirror is
-      contract._weighted_sample_oracle(guarded=True).
+    hash-boundary guard applied: any ``u`` outside the open interval
+    (0, 1) loses (key −inf). ``log(0)`` is NULL, and NULL sorts FIRST
+    under the descending key; ``u == 1.0`` gives key 0, the maximum,
+    which would win regardless of weight. Both md5 rounding boundaries
+    (each ~1e-16-1e-18 of ids) are treated alike; the DuckDB mirror is
+    ``contract._weighted_sample_oracle``.
     """
-    if u_guard == "zero":
-        return F.when(u > 0, F.log(u) / weight).otherwise(
-            F.lit(float("-inf"))
-        )
-    if u_guard == "both":
-        return F.when((u > 0) & (u < 1), F.log(u) / weight).otherwise(
-            F.lit(float("-inf"))
-        )
-    raise ValueError(f"u_guard must be 'zero' or 'both', got {u_guard!r}")
+    return F.when((u > 0) & (u < 1), F.log(u) / weight).otherwise(
+        F.lit(float("-inf"))
+    )
 
 
 def weighted_sample(
@@ -766,8 +676,6 @@ def weighted_sample(
     k: int,
     group_cols=None,
     salt: str = "wsample",
-    engine: str = "md5",
-    u_guard: str = "zero",
 ) -> DataFrame:
     """Deterministic weighted sampling without replacement — k rows
     per group (or globally), selection probability proportional to
@@ -790,14 +698,8 @@ def weighted_sample(
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k!r}")
     groups = list(group_cols) if group_cols else []
-    u = hash_uniform(F.col(id_col), salt, engine=engine)
-    # boundary semantics live in _ares_key (both md5 rounding
-    # boundaries documented there). The default stays "zero" — the
-    # registered r12-r14 semantics, byte-pinned by the shipped oracle —
-    # until the r15 rotation flips the contract query AND its oracle
-    # mirror to "both" together (ADVICE r13 #2; staged machinery is
-    # API + tested as of r14, the 77601a7 pre-staging discipline).
-    key = _ares_key(u, F.col(weight_col), u_guard)
+    u = hash_uniform(F.col(id_col), salt)
+    key = _ares_key(u, F.col(weight_col))
     base = df.filter(F.col(weight_col) > 0).select(
         *groups, F.col(id_col), key.alias("_key")
     )
@@ -824,7 +726,6 @@ def temperature_mix(
     alpha: float = 0.7,
     budget_frac: float = 0.5,
     salt: str = "tmix",
-    engine: str = "md5",
 ) -> DataFrame:
     """Temperature-flattened source mixing: sampling shares follow
     ``cnt^alpha`` (alpha < 1 flattens the source power law, the
@@ -888,10 +789,7 @@ def temperature_mix(
             ).alias("_rate"),
         )
     )
-    u = _u01(
-        [F.lit(salt), F.col(source_col), F.col(id_col).cast("string")],
-        engine,
-    )
+    u = _u01([F.lit(salt), F.col(source_col), F.col(id_col).cast("string")])
     kept = (
         df.select(id_col, source_col)
         .join(F.broadcast(rates.select(source_col, "_rate")), source_col)

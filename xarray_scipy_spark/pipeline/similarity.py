@@ -22,7 +22,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
-from .hashes import spread
+from .hashes import bucket as hash_bucket, spread
 
 __all__ = [
     "cosine_topk",
@@ -51,6 +51,13 @@ def _normed(df: DataFrame, id_col: str, vec_col: str, extra: list[str]) -> DataF
     v = F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("v")
     out = df.select(F.col(id_col), v, *[F.col(c) for c in extra])
     return out.withColumn("nrm", F.sqrt(_dot(F.col("v"), F.col("v"))))
+
+
+def _vec_dim(df: DataFrame, vec_col: str) -> int | None:
+    """Length of the first non-NULL vector in ``vec_col``; None when
+    there is none (an empty frame, or every vector NULL)."""
+    row = df.where(F.col(vec_col).isNotNull()).select(F.size(vec_col)).first()
+    return None if row is None else row[0]
 
 
 def cosine_topk(
@@ -207,11 +214,18 @@ def cosine_topk_lsh(
     column doubles as a partition key so probes prune to partitions.
     Approximate by construction: neighbors hashing elsewhere are
     missed with probability ``1 - (1-θ/π)^planes``-ish per plane
-    disagreement (the LSH trade).
+    disagreement (the LSH trade). The dimension comes from the first
+    non-NULL corpus vector; with none the result is empty.
     """
     if not 1 <= probes <= planes + 1:
         raise ValueError(f"probes must be in [1, planes+1], got {probes}")
-    dim = len(corpus.select(vec_col).first()[0])
+    dim = _vec_dim(corpus, vec_col)
+    if dim is None:
+        id_type = dict(corpus.dtypes)[id_col]
+        return corpus.sparkSession.createDataFrame(
+            [],
+            f"query_id {id_type}, rank int, neighbor_id {id_type}, cos_sim double",
+        )
     c = _normed(spread(corpus, id_col), id_col, vec_col, []).withColumn(
         "bucket", srp_bucket(F.col("v"), planes, dim)
     ).alias("c")
@@ -668,7 +682,7 @@ def label_outliers(
             ).alias("cos_centroid"),
         )
     )
-    bucket = F.pmod(F.xxhash64(F.col("_id")), F.lit(buckets))
+    bucket = hash_bucket(buckets, "_id")
     pruned = (
         cos.withColumn("_b", bucket)
         .withColumn("_lr", F.row_number().over(

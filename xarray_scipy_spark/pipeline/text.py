@@ -616,7 +616,7 @@ def bigram_logprob(
     # transform: the lambda indexes `_toks` as a bound column ref.
     # Referencing the tokenizer EXPRESSION inside the lambda instead
     # re-evaluates the whole tokenize per element — O(n²) per doc,
-    # measured 5x slower end-to-end (tools/logprob_shape_ab.py).
+    # measured 5x slower end-to-end (tools/logprob_shape_ab.py at 71b8918).
     arr = df.select(F.col(id_col), tokens(F.col(text_col)).alias("_toks"))
     pair = F.explode(
         F.transform(

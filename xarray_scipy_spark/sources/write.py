@@ -96,7 +96,7 @@ def register_bucketed(
     property. This is the read-side half of the write-once/join-many
     layout story (measured at the 1000x tier: the tpch_q7/q8
     fact-fact sort-merge join drops its shuffles — 26.7→13.3 s and
-    10.1→5.1 s — tools/q7_bucketed_ab.py, BASELINE.md r13). The
+    10.1→5.1 s — tools/q7_bucketed_ab.py at 71b8918, BASELINE.md r13). The
     declared ``bucket_by`` / ``n_buckets`` / ``sort_by`` MUST match
     the values the directory was written with; Spark trusts the
     declaration, so a mismatch silently produces wrong joins. The
