@@ -253,6 +253,32 @@ def test_lsh_paths_take_dim_from_first_non_null_vector(spark, case):
         assert hits == [(1, 2)]
 
 
+def test_cosine_paths_skip_null_embeddings(spark):
+    """A NULL embedding is neither a neighbor nor gets one: the exact
+    and IVF paths drop NULL vectors, and the SRP-LSH paths give a NULL
+    vector a NULL bucket, so the bucket joins never match it (planes=1
+    puts half of all vectors in bucket 0, where a NULL used to land)."""
+    import numpy as np
+
+    rng = np.random.default_rng(12)
+    vecs = {i: [float(x) for x in rng.standard_normal(6)] for i in (1, 2, 3)}
+    df = spark.createDataFrame(
+        [(i, vecs.get(i)) for i in range(5)], "vec_id long, embedding array<double>"
+    ).coalesce(1)
+    exact = pl.cosine_topk(df, df, k=4).collect()
+    lsh = pl.cosine_topk_lsh(df, df, k=4, planes=1).collect()
+    cells = df.withColumn("label", F.lit(0))
+    ivf = pl.cosine_topk_ivf(cells, cells, k=4).collect()
+    for r in exact + lsh + ivf:
+        assert {r["query_id"], r["neighbor_id"]} <= {1, 2, 3}
+        assert r["cos_sim"] is not None
+    assert {r["query_id"] for r in exact} == {r["query_id"] for r in ivf} == {1, 2, 3}
+    dup = pl.embedding_dup_pairs(df, threshold=-1.0, method="lsh", lsh_planes=1)
+    assert all({r["a_id"], r["b_id"]} <= {1, 2, 3} for r in dup.collect())
+    pairs = pl.embedding_dup_pairs(df, threshold=-1.0, method="exact").collect()
+    assert {(r["a_id"], r["b_id"]) for r in pairs} == {(1, 2), (1, 3), (2, 3)}
+
+
 def test_kmeans_cells_matches_numpy_lloyd(spark):
     import numpy as np
 
@@ -707,6 +733,15 @@ def test_jpeg_dc_only_roundtrip_exact():
     dec, w, h = decode_jpeg(encode_jpeg(img))
     assert (w, h) == (32, 24)
     assert (dec == img).all()
+    # the same streams with the lone component's sampling factors
+    # patched 1x1 -> 2x2 stay valid: a single-component scan walks the
+    # component's own block grid, not 2x2-block MCUs (T.81 A.2.2)
+    for prog in (False, True):
+        payload = bytearray(encode_jpeg(img, progressive=prog))
+        sof = payload.index(b"\xff\xc2" if prog else b"\xff\xc0")
+        assert payload[sof + 11] == 0x11
+        payload[sof + 11] = 0x22
+        assert (decode_jpeg(bytes(payload))[0] == img).all(), prog
 
 
 def test_jpeg_ac_checkerboard_exact():
@@ -1924,6 +1959,8 @@ def test_frame_sample_mjpeg_codec(spark):
     ]
     got = sorted(map(tuple, out[["doc_id", "frame_idx", "f0"]].to_numpy()))
     assert got == sorted(exp)
+    with pytest.raises(ValueError, match="codec"):
+        frame_sample(df, codec="gif")
 
 
 def test_sample_negatives_contract(spark):
@@ -2156,7 +2193,7 @@ def test_animated_gif_composite_transparency_disposal():
 
     import numpy as np
 
-    from xarray_scipy_spark.pipeline.multimodal import decode_gif_frames
+    from xarray_scipy_spark.pipeline.multimodal import decode_gif, decode_gif_frames
 
     # hand-build: 8x6 screen, 4-entry palette, 3 frames
     pal = np.array([[10, 10, 10], [200, 0, 0], [0, 200, 0], [0, 0, 200]], np.uint8)
@@ -2232,6 +2269,19 @@ def test_animated_gif_composite_transparency_disposal():
     exp3[1:3, 2:5] = pal[0]
     exp3[3:5, 5:7] = pal[3]
     assert np.array_equal(frames[2], exp3)
+
+    # a logical screen larger than its first image: decode_gif returns
+    # the image's own rectangle, decode_gif_frames the screen canvas
+    gif = bytearray(b"GIF89a" + struct.pack("<HHBBB", 8, 6, 0xF1, 0, 0))
+    gif += pal.tobytes() + img_block(2, 1, 3, 2, np.array([2, 3, 2, 3, 2, 3]))
+    gif += b"\x3b"
+    rgb, w, h = decode_gif(bytes(gif))
+    assert (w, h) == (3, 2)
+    assert np.array_equal(rgb, pal[[[2, 3, 2], [3, 2, 3]]])
+    (canvas,) = decode_gif_frames(bytes(gif))
+    exp = np.tile(pal[0], (6, 8, 1))
+    exp[1:3, 2:5] = rgb
+    assert np.array_equal(canvas, exp)
 
 
 def test_png_16bit_and_palette():

@@ -709,7 +709,7 @@ def embedding_dup_pairs(
 
     Output ``(a_id, b_id, cos_sim)`` with ``a_id < b_id``. ``"lsh"``
     takes the dimension from the first non-NULL vector; with none it
-    returns an empty frame.
+    returns an empty frame. A NULL vector is in no pair.
     """
     if method not in ("auto", "exact", "lsh"):
         raise ValueError(f"method must be auto|exact|lsh, got {method!r}")
@@ -742,7 +742,7 @@ def embedding_dup_pairs(
             .filter(F.col("cos_sim") >= threshold)
         )
     return _blocked_allpairs_cosine(
-        v.drop("nrm"), id_col=id_col, threshold=threshold
+        v.drop("nrm").where(F.col("v").isNotNull()), id_col=id_col, threshold=threshold
     )
 
 

@@ -1,22 +1,23 @@
-"""Pure-numpy baseline JPEG codec (ITU-T T.81, public spec).
+"""Pure-numpy JPEG codec, baseline and progressive (ITU-T T.81,
+public spec).
 
 No imaging library ships in this container, so — like the PNG path
 (pipeline/multimodal.py) — the decoder is written from the published
 standard: marker segmentation, stream-carried huffman tables (DHT),
-quantization tables (DQT), baseline sequential DCT scan decode with
-byte-stuffing and restart markers, dequantization, a vectorized 8×8
-inverse DCT (one einsum over all blocks of a component), chroma
-upsampling for subsampled scans, and JFIF/BT.601 YCbCr→RGB for
-3-component images. The encoder exists for fixtures and tests:
-grayscale or 4:4:4 / 4:2:0 color, any quantization table (all-ones by
-default so DC-only images roundtrip EXACTLY — the property the
-arithmetic oracle uses), standard Annex K huffman tables.
+quantization tables (DQT), one scan decoder for sequential (SOF0) and
+progressive (SOF2, Annex G) scans with byte-stuffing and restart
+markers, dequantization, a vectorized 8×8 inverse DCT (one einsum over
+all blocks of a component), chroma upsampling for subsampled scans,
+and JFIF/BT.601 YCbCr→RGB for 3-component images. The encoder exists
+for fixtures and tests: grayscale or 4:4:4 / 4:2:0 color, baseline or
+progressive, any quantization table (all-ones by default so DC-only
+images roundtrip EXACTLY — the property the arithmetic oracle uses),
+standard Annex K huffman tables.
 
 Scale note: this module is the per-payload kernel; the Spark side
-(``decode_features`` / ``decode_text`` plumbing in multimodal.py)
-amortizes it over Arrow batches, one batch per task — decode
-parallelism comes from partitions, exactly like every other kernel in
-the engine.
+(``_map_payloads`` in multimodal.py) amortizes it over Arrow batches,
+one batch per task — decode parallelism comes from partitions, exactly
+like every other kernel in the engine.
 """
 
 from __future__ import annotations
@@ -164,7 +165,7 @@ class _BitReader:
             if nxt == 0x00:
                 self.pos += 2
             else:
-                raise _MarkerHit(0xFF00 | nxt)
+                raise ValueError(f"marker ff{nxt:02x} inside entropy-coded data")
         else:
             self.pos += 1
         self.acc = (self.acc << 8) | b
@@ -193,28 +194,26 @@ class _BitReader:
         self.acc = 0
 
 
-class _MarkerHit(Exception):
-    def __init__(self, marker):
-        self.marker = marker
-
-
 def _extend(v: int, t: int) -> int:
     """T.81 F.2.2.1 EXTEND: map a t-bit magnitude to its signed value."""
     return v if t == 0 or v >= (1 << (t - 1)) else v - (1 << t) + 1
 
 
 def decode_jpeg(payload: bytes):
-    """Baseline sequential JPEG decode -> ``(pixels, width, height)``
-    with pixels ``(h, w)`` uint8 for grayscale or ``(h, w, 3)`` RGB.
+    """Sequential or progressive JPEG decode -> ``(pixels, width,
+    height)`` with pixels ``(h, w)`` uint8 for grayscale or
+    ``(h, w, 3)`` RGB.
 
     Supported: SOF0 (baseline DCT) and SOF2 (progressive DCT — full
     spectral selection AND successive approximation: DC first/refine,
-    AC first with EOB-run coding, AC refinement with correction bits;
-    r7), 8-bit precision, 1 or 3 components, any sampling factors
-    whose MCU tiling is rectangular (4:4:4, 4:2:2, 4:2:0 in practice),
-    stream-carried DQT/DHT tables, DRI restart intervals. Arithmetic
-    coding and 12-bit precision raise ``ValueError`` — decode is
-    value-checked downstream.
+    AC first with EOB-run coding, AC refinement with correction bits),
+    8-bit precision, 1 or 3 components, any sampling factors whose MCU
+    tiling is rectangular (4:4:4, 4:2:2, 4:2:0 in practice),
+    stream-carried DQT/DHT tables, DRI restart intervals. Both
+    processes share one marker loop and one scan decoder: a baseline
+    scan is the full band 0..63 at Ah = Al = 0. Arithmetic coding and
+    12-bit precision raise ``ValueError`` — decode is value-checked
+    downstream.
     """
     buf = bytes(payload)
     if buf[:2] != b"\xff\xd8":
@@ -223,33 +222,33 @@ def decode_jpeg(payload: bytes):
     qtables: dict[int, np.ndarray] = {}
     htables: dict[tuple[int, int], dict] = {}
     frame = None
+    scanned = False
     restart_interval = 0
     while pos + 4 <= len(buf):
         if buf[pos] != 0xFF:
             raise ValueError(f"bad marker alignment at {pos}")
         marker = buf[pos + 1]
         pos += 2
+        if marker == 0xD9:  # EOI
+            break
         if marker in (0xD8, 0x01) or 0xD0 <= marker <= 0xD7:
             continue
         size = struct.unpack(">H", buf[pos : pos + 2])[0]
         body = buf[pos + 2 : pos + size]
         if marker == 0xDB:  # DQT
-            off = 0
-            while off < len(body):
-                pq, tq = body[off] >> 4, body[off] & 0x0F
-                if pq != 0:
+            for off in range(0, len(body), 65):
+                if body[off] >> 4:
                     raise ValueError("16-bit quantization tables unsupported")
                 q = np.frombuffer(body, dtype=np.uint8, count=64, offset=off + 1)
-                qtables[tq] = q.astype(np.int64)
-                off += 65
+                qtables[body[off] & 0x0F] = q.astype(np.int64)
         elif marker == 0xC4:  # DHT
             off = 0
             while off < len(body):
-                tc, th = body[off] >> 4, body[off] & 0x0F
                 bits = list(body[off + 1 : off + 17])
                 n = sum(bits)
-                vals = list(body[off + 17 : off + 17 + n])
-                htables[(tc, th)] = _canonical_codes(bits, vals)
+                htables[(body[off] >> 4, body[off] & 0x0F)] = _canonical_codes(
+                    bits, list(body[off + 17 : off + 17 + n])
+                )
                 off += 17 + n
         elif marker in (0xC0, 0xC2):  # SOF0 baseline / SOF2 progressive
             prec, h, w, ncomp = body[0], *struct.unpack(">HH", body[1:5]), body[5]
@@ -260,6 +259,9 @@ def decode_jpeg(payload: bytes):
                 cid, hv, tq = body[6 + 3 * i : 9 + 3 * i]
                 comps.append({"id": cid, "h": hv >> 4, "v": hv & 0x0F, "tq": tq})
             frame = {"h": h, "w": w, "comps": comps, "prog": marker == 0xC2}
+            frame["grid"] = _comp_grids(comps, w, h)
+            for c in comps:  # zigzag coefficients, accumulated across scans
+                c["zz"] = np.zeros((c["bh"], c["bw"], 64), dtype=np.int64)
         elif marker in (0xC1, 0xC3, 0xC5, 0xC6, 0xC7, 0xC9, 0xCA, 0xCB):
             raise ValueError(
                 f"unsupported JPEG process (SOF{marker - 0xC0}); "
@@ -269,512 +271,35 @@ def decode_jpeg(payload: bytes):
             restart_interval = struct.unpack(">H", body[:2])[0]
         elif marker == 0xDA:  # SOS — entropy-coded data follows
             if frame is None:
-                raise ValueError("SOS before SOF0")
-            if frame.get("prog"):
-                # progressive: many scans follow; a dedicated loop
-                # consumes them all (updating tables between scans)
-                return _decode_progressive(
-                    buf, pos - 2, frame, qtables, htables, restart_interval
-                )
-            ns = body[0]
-            scan_tabs = {}
-            for i in range(ns):
-                cs, td_ta = body[1 + 2 * i], body[2 + 2 * i]
-                scan_tabs[cs] = (td_ta >> 4, td_ta & 0x0F)
-            pixels = _decode_scan(
-                buf, pos + size, frame, scan_tabs, qtables, htables, restart_interval
-            )
-            return pixels, frame["w"], frame["h"]
-        elif marker == 0xD9:  # EOI before any scan
-            break
+                raise ValueError("SOS before SOF")
+            pos = _decode_scan(buf, pos + size, frame, body, htables, restart_interval)
+            scanned = True
+            continue
         pos += size
-    raise ValueError("JPEG has no SOS scan")
+    if not scanned:
+        raise ValueError("JPEG has no SOS scan")
+    return _reconstruct_planes(frame, qtables)
 
 
-def _decode_scan(buf, pos, frame, scan_tabs, qtables, htables, restart_interval):
-    comps = frame["comps"]
-    hmax = max(c["h"] for c in comps)
-    vmax = max(c["v"] for c in comps)
-    h, w = frame["h"], frame["w"]
-    mcus_x = -(-w // (8 * hmax))
-    mcus_y = -(-h // (8 * vmax))
-    # per-component zigzag coefficient store, MCU-block order
-    blocks = {c["id"]: [] for c in comps}
-    pred = {c["id"]: 0 for c in comps}
-    rd = _BitReader(buf, pos)
-    n_mcu = mcus_x * mcus_y
-    for m in range(n_mcu):
-        if restart_interval and m and m % restart_interval == 0:
-            # between intervals: drop partial-byte padding, skip any
-            # stuffed 0xFF00 pad bytes, then consume the byte-aligned
-            # RSTn marker and reset the DC predictors
-            rd.align()
-            while rd.buf[rd.pos] != 0xFF or rd.buf[rd.pos + 1] == 0x00:
-                rd.pos += 2 if rd.buf[rd.pos] == 0xFF else 1
-            nxt = rd.buf[rd.pos + 1]
-            if not (0xD0 <= nxt <= 0xD7):
-                raise ValueError(f"expected RSTn between intervals, got ff{nxt:02x}")
-            rd.pos += 2
-            for cid in pred:
-                pred[cid] = 0
-        for c in comps:
-            td, ta = scan_tabs[c["id"]]
-            dc_tab = htables.get((0, td))
-            ac_tab = htables.get((1, ta))
-            if dc_tab is None or ac_tab is None:
-                raise ValueError("missing huffman table referenced by scan")
-            for _ in range(c["h"] * c["v"]):
-                zz = np.zeros(64, dtype=np.int64)
-                t = rd.huffman(dc_tab)
-                diff = _extend(rd.bits(t), t) if t else 0
-                pred[c["id"]] += diff
-                zz[0] = pred[c["id"]]
-                k = 1
-                while k < 64:
-                    rs = rd.huffman(ac_tab)
-                    r, s = rs >> 4, rs & 0x0F
-                    if s == 0:
-                        if r == 15:  # ZRL: sixteen zeros
-                            k += 16
-                            continue
-                        break  # EOB
-                    k += r
-                    if k > 63:
-                        raise ValueError("AC run past end of block")
-                    zz[k] = _extend(rd.bits(s), s)
-                    k += 1
-                blocks[c["id"]].append(zz)
-    planes = {}
-    for c in comps:
-        q = qtables.get(c["tq"])
-        if q is None:
-            raise ValueError(f"missing quantization table {c['tq']}")
-        arr = np.stack(blocks[c["id"]]) if blocks[c["id"]] else np.zeros((0, 64))
-        coeffs = (arr * q[None, :])[:, _ZZ_INV].reshape(-1, 8, 8).astype(float)
-        # vectorized IDCT over every block of the component at once
-        pix = np.einsum("ux,nuv,vy->nxy", _DCT, coeffs, _DCT)
-        bw = mcus_x * c["h"]  # blocks per row in this component's plane
-        bh = mcus_y * c["v"]
-        plane = np.zeros((bh * 8, bw * 8))
-        # blocks arrive MCU by MCU, row-major within the MCU
-        i = 0
-        for my in range(mcus_y):
-            for mx in range(mcus_x):
-                for by in range(c["v"]):
-                    for bx in range(c["h"]):
-                        y0 = (my * c["v"] + by) * 8
-                        x0 = (mx * c["h"] + bx) * 8
-                        plane[y0 : y0 + 8, x0 : x0 + 8] = pix[i]
-                        i += 1
-        # upsample to full resolution (sample replication) and crop
-        plane = np.repeat(np.repeat(plane, hmax // c["h"], axis=1), vmax // c["v"], axis=0)
-        planes[c["id"]] = plane[:h, :w] + 128.0
-    if len(comps) == 1:
-        out = np.clip(np.rint(planes[comps[0]["id"]]), 0, 255).astype(np.uint8)
-        return out
-    if len(comps) != 3:
-        raise ValueError(f"unsupported component count {len(comps)}")
-    y, cb, cr = (planes[c["id"]] for c in comps)
-    r = y + 1.402 * (cr - 128.0)
-    g = y - 0.344136 * (cb - 128.0) - 0.714136 * (cr - 128.0)
-    b = y + 1.772 * (cb - 128.0)
-    rgb = np.stack([r, g, b], axis=-1)
-    return np.clip(np.rint(rgb), 0, 255).astype(np.uint8)
-
-
-class _BitWriter:
-    def __init__(self):
-        self.out = bytearray()
-        self.acc = 0
-        self.nbits = 0
-
-    def bits(self, value: int, n: int):
-        self.acc = (self.acc << n) | (value & ((1 << n) - 1))
-        self.nbits += n
-        while self.nbits >= 8:
-            self.nbits -= 8
-            b = (self.acc >> self.nbits) & 0xFF
-            self.out.append(b)
-            if b == 0xFF:
-                self.out.append(0x00)  # byte stuffing
-
-    def flush(self):
-        if self.nbits:
-            self.bits((1 << (8 - self.nbits)) - 1, 8 - self.nbits)  # 1-fill pad
-
-
-def _encode_tables(bits, values):
-    """symbol -> (length, code) for the encoder side."""
-    table = {}
-    code = 0
-    k = 0
-    for length in range(1, 17):
-        for _ in range(bits[length - 1]):
-            table[values[k]] = (length, code)
-            code += 1
-            k += 1
-        code <<= 1
-    return table
-
-
-def _category(v: int) -> int:
-    return int(v).bit_length() if v >= 0 else int(-v).bit_length()
-
-
-def _encode_component_blocks(wr, blocks_zz, dc_tab, ac_tab, pred):
-    for zz in blocks_zz:
-        diff = int(zz[0]) - pred[0]
-        pred[0] = int(zz[0])
-        t = _category(diff)
-        length, code = dc_tab[t]
-        wr.bits(code, length)
-        if t:
-            wr.bits(diff if diff >= 0 else diff + (1 << t) - 1, t)
-        run = 0
-        last_nz = int(np.max(np.nonzero(zz)[0])) if np.any(zz[1:]) else 0
-        for k in range(1, 64):
-            v = int(zz[k])
-            if k > last_nz:
-                break
-            if v == 0:
-                run += 1
-                continue
-            while run > 15:
-                length, code = ac_tab[0xF0]  # ZRL
-                wr.bits(code, length)
-                run -= 16
-            s = _category(v)
-            length, code = ac_tab[(run << 4) | s]
-            wr.bits(code, length)
-            wr.bits(v if v >= 0 else v + (1 << s) - 1, s)
-            run = 0
-        if last_nz < 63:
-            length, code = ac_tab[0x00]  # EOB
-            wr.bits(code, length)
-
-
-def _dct_blocks(plane, quant):
-    """(h, w) float plane -> list of quantized zigzag blocks (row-major)."""
-    h, w = plane.shape
-    ph, pw = -(-h // 8) * 8, -(-w // 8) * 8
-    padded = np.pad(plane, ((0, ph - h), (0, pw - w)), mode="edge") - 128.0
-    tiles = padded.reshape(ph // 8, 8, pw // 8, 8).transpose(0, 2, 1, 3)
-    coeffs = np.einsum("ux,nmxy,vy->nmuv", _DCT, tiles, _DCT)
-    q = coeffs.reshape(-1, 64)[:, _ZZ]
-    return np.rint(q / quant[None, :]).astype(np.int64)
-
-
-def encode_jpeg(
-    pixels,
-    quant=None,
-    subsample: bool = False,
-    restart_interval: int = 0,
-    progressive: bool = False,
-) -> bytes:
-    """Baseline JPEG encoder (fixture generator and binary-sink
-    utility). ``pixels``: ``(h, w)`` gray or ``(h, w, 3)`` RGB uint8.
-    ``quant``: 64 zigzag-ordered divisors (default all ones — with a
-    DC-only image this makes decode(encode(x)) EXACT, the property the
-    arithmetic oracle leans on). ``subsample=True`` writes 4:2:0 chroma
-    (2×2 box-filtered); only meaningful for color inputs.
-    ``restart_interval``: emit DRI + RSTn markers every N MCUs (real
-    encoders use them for error resilience and parallel decode; here
-    they exercise the decoder's restart path; baseline mode only).
-    ``progressive=True`` (r7) writes SOF2 with the full Annex G scan
-    script — DC first at Al=1, per-component AC bands 1-5/6-63 at
-    Al=1, then DC and AC refinement scans to Al=0 — so spectral
-    selection, successive approximation, EOB runs, and correction-bit
-    buffering are all exercised; with integer coefficients the
-    progression completes losslessly, preserving the exact-roundtrip
-    property the arithmetic oracles lean on."""
-    px = np.asarray(pixels, dtype=float)
-    quant = np.ones(64, dtype=np.int64) if quant is None else np.asarray(quant, dtype=np.int64)
-    gray = px.ndim == 2
-    h, w = px.shape[:2]
-    if gray:
-        comps = [{"id": 1, "h": 1, "v": 1, "plane": px}]
-    else:
-        r, g, b = px[..., 0], px[..., 1], px[..., 2]
-        y = 0.299 * r + 0.587 * g + 0.114 * b
-        cb = 128.0 - 0.168736 * r - 0.331264 * g + 0.5 * b
-        cr = 128.0 + 0.5 * r - 0.418688 * g - 0.081312 * b
-        if subsample:
-            ph, pw = -(-h // 2) * 2, -(-w // 2) * 2
-            def ds(p):
-                p = np.pad(p, ((0, ph - h), (0, pw - w)), mode="edge")
-                return p.reshape(ph // 2, 2, pw // 2, 2).mean(axis=(1, 3))
-            comps = [
-                {"id": 1, "h": 2, "v": 2, "plane": y},
-                {"id": 2, "h": 1, "v": 1, "plane": ds(cb)},
-                {"id": 3, "h": 1, "v": 1, "plane": ds(cr)},
-            ]
-        else:
-            comps = [
-                {"id": 1, "h": 1, "v": 1, "plane": y},
-                {"id": 2, "h": 1, "v": 1, "plane": cb},
-                {"id": 3, "h": 1, "v": 1, "plane": cr},
-            ]
+def _comp_grids(comps, w, h):
+    """Per-component block grids: ``bw``/``bh`` is the padded grid an
+    interleaved (MCU-order) scan covers, ``cw``/``ch`` the component's
+    own grid a single-component scan covers (T.81 A.2.2/A.2.3)."""
     hmax = max(c["h"] for c in comps)
     vmax = max(c["v"] for c in comps)
     mcus_x = -(-w // (8 * hmax))
     mcus_y = -(-h // (8 * vmax))
-    # per-component quantized blocks in PLANE row-major order, then
-    # re-gathered in MCU order during the scan write
     for c in comps:
-        bw = mcus_x * c["h"]
-        bh = mcus_y * c["v"]
-        plane = c["plane"]
-        # pad the plane so its block grid is exactly (bh, bw)
-        plane = np.pad(
-            plane,
-            ((0, bh * 8 - plane.shape[0]), (0, bw * 8 - plane.shape[1])),
-            mode="edge",
-        )
-        c["zz"] = _dct_blocks(plane, quant).reshape(bh, bw, 64)
-
-    out = bytearray(b"\xff\xd8")  # SOI
-
-    def seg(marker, body):
-        out.extend(bytes([0xFF, marker]) + struct.pack(">H", len(body) + 2) + body)
-
-    seg(0xDB, bytes([0]) + bytes(int(v) for v in quant))  # DQT id 0
-    if restart_interval and not progressive:
-        seg(0xDD, struct.pack(">H", restart_interval))  # DRI
-    sof = bytearray([8]) + struct.pack(">HH", h, w) + bytes([len(comps)])
-    for c in comps:
-        sof += bytes([c["id"], (c["h"] << 4) | c["v"], 0])
-    seg(0xC2 if progressive else 0xC0, bytes(sof))
-    if progressive:
-        tabs = [(0, 0, _DC_LUM), (1, 0, _AC_PROG)]
-        if not gray:
-            tabs += [(0, 1, _DC_CHR)]
-    else:
-        tabs = [(0, 0, _DC_LUM), (1, 0, _AC_LUM)]
-        if not gray:
-            tabs += [(0, 1, _DC_CHR), (1, 1, _AC_CHR)]
-    for tc, th, (bits, vals) in tabs:
-        seg(0xC4, bytes([(tc << 4) | th] + bits + vals))
-    if progressive:
-        # non-interleaved AC scans need the true per-component grids
-        _comp_grids({"h": h, "w": w, "comps": comps})
-        _encode_progressive_scans(out, seg, comps, gray, mcus_x, mcus_y)
-        out.extend(b"\xff\xd9")  # EOI
-        return bytes(out)
-    sos = bytearray([len(comps)])
-    for i, c in enumerate(comps):
-        td_ta = 0 if i == 0 or gray else 0x11
-        sos += bytes([c["id"], td_ta])
-    sos += bytes([0, 63, 0])
-    seg(0xDA, bytes(sos))
-
-    wr = _BitWriter()
-    enc_tabs = _ENC_TABS
-    preds = {c["id"]: [0] for c in comps}
-    n_done = 0
-    for my in range(mcus_y):
-        for mx in range(mcus_x):
-            if restart_interval and n_done and n_done % restart_interval == 0:
-                wr.flush()  # byte-align (1-padded, stuffed if 0xFF)
-                wr.out.extend(
-                    bytes([0xFF, 0xD0 + (n_done // restart_interval - 1) % 8])
-                )
-                for p in preds.values():
-                    p[0] = 0
-            n_done += 1
-            for i, c in enumerate(comps):
-                dc_tab, ac_tab = enc_tabs[0 if i == 0 or gray else 1]
-                rows = []
-                for by in range(c["v"]):
-                    for bx in range(c["h"]):
-                        rows.append(c["zz"][my * c["v"] + by, mx * c["h"] + bx])
-                _encode_component_blocks(wr, rows, dc_tab, ac_tab, preds[c["id"]])
-    wr.flush()
-    out.extend(wr.out)
-    out.extend(b"\xff\xd9")  # EOI
-    return bytes(out)
-
-
-# encoder tables are fixed (Annex K): build once at import
-_ENC_TABS = {
-    0: (_encode_tables(*_DC_LUM), _encode_tables(*_AC_LUM)),
-    1: (_encode_tables(*_DC_CHR), _encode_tables(*_AC_CHR)),
-}
-
-
-# ---------------------------------------------------------------------------
-# progressive (SOF2) decode — T.81 Annex G: spectral selection +
-# successive approximation. Coefficients accumulate across scans in
-# per-component (block_rows, block_cols, 64) zigzag stores; the
-# reconstruction below is shared arithmetic with the baseline path
-# (dequant -> vectorized IDCT -> upsample -> color).
-# ---------------------------------------------------------------------------
-
-
-def _comp_grids(frame):
-    comps = frame["comps"]
-    hmax = max(c["h"] for c in comps)
-    vmax = max(c["v"] for c in comps)
-    mcus_x = -(-frame["w"] // (8 * hmax))
-    mcus_y = -(-frame["h"] // (8 * vmax))
-    for c in comps:
-        c["bw"] = mcus_x * c["h"]  # padded (MCU-interleaved) grid
+        c["bw"] = mcus_x * c["h"]
         c["bh"] = mcus_y * c["v"]
-        # non-interleaved scans cover the component's TRUE block grid
-        c["cw"] = -(-(-(-frame["w"] * c["h"] // hmax)) // 8)
-        c["ch"] = -(-(-(-frame["h"] * c["v"] // vmax)) // 8)
+        c["cw"] = -(-(-(-w * c["h"] // hmax)) // 8)
+        c["ch"] = -(-(-(-h * c["v"] // vmax)) // 8)
     return hmax, vmax, mcus_x, mcus_y
 
 
-def _skip_to_marker(buf, pos):
-    """Advance past entropy data to the next non-stuffed, non-RSTn
-    marker byte pair."""
-    while pos + 1 < len(buf):
-        if buf[pos] == 0xFF and buf[pos + 1] not in (0x00,) and not (
-            0xD0 <= buf[pos + 1] <= 0xD7
-        ):
-            return pos
-        pos += 2 if buf[pos] == 0xFF else 1
-    return len(buf)
-
-
-def _decode_progressive(buf, pos, frame, qtables, htables, restart_interval):
-    hmax, vmax, mcus_x, mcus_y = _comp_grids(frame)
-    comps = frame["comps"]
-    byid = {c["id"]: c for c in comps}
-    store = {
-        c["id"]: np.zeros((c["bh"], c["bw"], 64), dtype=np.int64) for c in comps
-    }
-    pred = {c["id"]: 0 for c in comps}
-    while pos + 4 <= len(buf):
-        if buf[pos] != 0xFF:
-            raise ValueError(f"bad marker alignment at {pos}")
-        marker = buf[pos + 1]
-        pos += 2
-        if marker == 0xD9:  # EOI
-            break
-        if marker in (0x01,) or 0xD0 <= marker <= 0xD7:
-            continue
-        size = struct.unpack(">H", buf[pos : pos + 2])[0]
-        body = buf[pos + 2 : pos + size]
-        if marker == 0xC4:  # DHT between scans
-            off = 0
-            while off < len(body):
-                tc, th = body[off] >> 4, body[off] & 0x0F
-                bits = list(body[off + 1 : off + 17])
-                n = sum(bits)
-                htables[(tc, th)] = _canonical_codes(
-                    bits, list(body[off + 17 : off + 17 + n])
-                )
-                off += 17 + n
-        elif marker == 0xDB:
-            off = 0
-            while off < len(body):
-                tq = body[off] & 0x0F
-                qtables[tq] = np.frombuffer(
-                    body, dtype=np.uint8, count=64, offset=off + 1
-                ).astype(np.int64)
-                off += 65
-        elif marker == 0xDD:
-            restart_interval = struct.unpack(">H", body[:2])[0]
-        elif marker == 0xDA:
-            ns = body[0]
-            scan_comps = []
-            for i in range(ns):
-                cs, td_ta = body[1 + 2 * i], body[2 + 2 * i]
-                scan_comps.append((byid[cs], td_ta >> 4, td_ta & 0x0F))
-            ss, se, ahal = body[1 + 2 * ns], body[2 + 2 * ns], body[3 + 2 * ns]
-            ah, al = ahal >> 4, ahal & 0x0F
-            pos = _decode_prog_scan(
-                buf,
-                pos + size,
-                frame,
-                scan_comps,
-                ss,
-                se,
-                ah,
-                al,
-                store,
-                pred,
-                htables,
-                restart_interval,
-                mcus_x,
-                mcus_y,
-            )
-            continue
-        pos += size
-    return _reconstruct_planes(frame, store, qtables, mcus_x, mcus_y, hmax, vmax)
-
-
-def _decode_prog_scan(
-    buf, pos, frame, scan_comps, ss, se, ah, al, store, pred,
-    htables, restart_interval, mcus_x, mcus_y,
-):
-    rd = _BitReader(buf, pos)
-    eobrun = 0
-    interleaved = len(scan_comps) > 1
-    if ss == 0 and se != 0:
-        raise ValueError("progressive DC scan must have Se = 0")
-    if ss != 0 and interleaved:
-        raise ValueError("progressive AC scans are single-component")
-
-    def restart(m):
-        nonlocal eobrun
-        rd.align()
-        p = _skip_to_marker_rst(rd.buf, rd.pos)
-        nxt = rd.buf[p + 1]
-        if not (0xD0 <= nxt <= 0xD7):
-            raise ValueError(f"expected RSTn between intervals, got ff{nxt:02x}")
-        rd.pos = p + 2
-        for cid in pred:
-            pred[cid] = 0
-        eobrun = 0
-
-    if ss == 0:
-        # DC scan: interleaved MCU order over all scan components (or
-        # the component's own grid when ns == 1)
-        if interleaved:
-            units = mcus_x * mcus_y
-        else:
-            c = scan_comps[0][0]
-            units = c["cw"] * c["ch"]
-        for m in range(units):
-            if restart_interval and m and m % restart_interval == 0:
-                restart(m)
-            if interleaved:
-                my, mx = divmod(m, mcus_x)
-                for c, td, _ta in scan_comps:
-                    tab = htables.get((0, td)) if ah == 0 else None
-                    for by in range(c["v"]):
-                        for bx in range(c["h"]):
-                            zz = store[c["id"]][my * c["v"] + by, mx * c["h"] + bx]
-                            _dc_unit(rd, zz, ah, al, tab, pred, c["id"])
-            else:
-                c, td, _ta = scan_comps[0]
-                ry, rx = divmod(m, c["cw"])
-                tab = htables.get((0, td)) if ah == 0 else None
-                _dc_unit(rd, store[c["id"]][ry, rx], ah, al, tab, pred, c["id"])
-    else:
-        c, _td, ta = scan_comps[0]
-        tab = htables.get((1, ta))
-        if tab is None:
-            raise ValueError("missing AC huffman table referenced by scan")
-        units = c["cw"] * c["ch"]
-        for m in range(units):
-            if restart_interval and m and m % restart_interval == 0:
-                restart(m)
-            ry, rx = divmod(m, c["cw"])
-            zz = store[c["id"]][ry, rx]
-            if ah == 0:
-                eobrun = _ac_first(rd, zz, ss, se, al, tab, eobrun)
-            else:
-                eobrun = _ac_refine(rd, zz, ss, se, al, tab, eobrun)
-    rd.align()
-    return _skip_to_marker(rd.buf, rd.pos)
-
-
-def _skip_to_marker_rst(buf, pos):
-    """Advance past entropy padding to the next marker byte pair
-    (INCLUDING RSTn — used inside scans at restart boundaries)."""
+def _next_marker(buf, pos):
+    """Position of the next marker byte pair (RSTn included) at or
+    after ``pos``, skipping stuffed 0xFF00 pairs."""
     while pos + 1 < len(buf):
         if buf[pos] == 0xFF and buf[pos + 1] != 0x00:
             return pos
@@ -782,17 +307,89 @@ def _skip_to_marker_rst(buf, pos):
     return len(buf)
 
 
+def _decode_scan(buf, pos, frame, hdr, htables, restart_interval):
+    """Decode one scan's entropy-coded data into the components'
+    coefficient stores; returns the position of the marker after it.
+
+    The scan header's band ``Ss..Se`` and approximation ``Ah/Al`` pick
+    the per-block work: DC (``Ss = 0``) through :func:`_dc_unit`, AC
+    through :func:`_ac_first` or :func:`_ac_refine`. A baseline scan is
+    the full band at ``Ah = Al = 0``. A multi-component scan walks MCUs
+    in interleaved order; a single-component scan walks the
+    component's own block grid (T.81 A.2.2)."""
+    byid = {c["id"]: c for c in frame["comps"]}
+    ns = hdr[0]
+    ss, se, ahal = hdr[1 + 2 * ns : 4 + 2 * ns]
+    ah, al = ahal >> 4, ahal & 0x0F
+    baseline = not frame["prog"]
+    if baseline:
+        if (ss, se, ah, al) != (0, 63, 0, 0):
+            raise ValueError("baseline scan must cover the full band 0..63")
+    elif ss == 0 and se != 0:
+        raise ValueError("progressive DC scan must have Se = 0")
+    elif ss != 0 and ns > 1:
+        raise ValueError("progressive AC scans are single-component")
+    scan = []
+    for i in range(ns):
+        c, tdta = byid[hdr[1 + 2 * i]], hdr[2 + 2 * i]
+        dc = htables.get((0, tdta >> 4)) if ss == 0 and ah == 0 else {}
+        ac = htables.get((1, tdta & 0x0F)) if se else {}
+        if dc is None or ac is None:
+            raise ValueError("missing huffman table referenced by scan")
+        scan.append((c, dc, ac))
+    if ns == 1:
+        c, dc, ac = scan[0]
+        units = [
+            [(c["zz"][ry, rx], c["id"], dc, ac)]
+            for ry in range(c["ch"])
+            for rx in range(c["cw"])
+        ]
+    else:
+        _hmax, _vmax, mcus_x, mcus_y = frame["grid"]
+        units = [
+            [
+                (c["zz"][my * c["v"] + by, mx * c["h"] + bx], c["id"], dc, ac)
+                for c, dc, ac in scan
+                for by in range(c["v"])
+                for bx in range(c["h"])
+            ]
+            for my in range(mcus_y)
+            for mx in range(mcus_x)
+        ]
+    ac_band = _ac_refine if ah else _ac_first
+    lo = max(ss, 1)
+    rd = _BitReader(buf, pos)
+    pred = dict.fromkeys(byid, 0)
+    eobrun = 0
+    for m, unit in enumerate(units):
+        if restart_interval and m and m % restart_interval == 0:
+            # between intervals: drop the partial-byte padding, consume
+            # the byte-aligned RSTn marker, reset DC predictors and EOB run
+            rd.align()
+            p = _next_marker(buf, rd.pos)
+            if p + 1 >= len(buf) or not 0xD0 <= buf[p + 1] <= 0xD7:
+                raise ValueError("expected RSTn between restart intervals")
+            rd.pos = p + 2
+            pred = dict.fromkeys(byid, 0)
+            eobrun = 0
+        for zz, cid, dc, ac in unit:
+            if ss == 0:
+                _dc_unit(rd, zz, ah, al, dc, pred, cid)
+            if se:
+                eobrun = ac_band(rd, zz, lo, se, al, ac, eobrun)
+                if eobrun and baseline:
+                    raise ValueError("EOB run in a baseline scan")
+    rd.align()
+    return _next_marker(buf, rd.pos)
+
+
 def _dc_unit(rd, zz, ah, al, tab, pred, cid):
     if ah == 0:  # first DC scan: huffman-coded point-transformed diffs
-        if tab is None:
-            raise ValueError("missing DC huffman table referenced by scan")
         t = rd.huffman(tab)
-        diff = _extend(rd.bits(t), t) if t else 0
-        pred[cid] += diff
+        pred[cid] += _extend(rd.bits(t), t) if t else 0
         zz[0] = pred[cid] << al
-    else:  # refinement: one raw bit per block
-        if rd.bits(1):
-            zz[0] |= 1 << al
+    elif rd.bits(1):  # refinement: one raw bit per block
+        zz[0] |= 1 << al
 
 
 def _ac_first(rd, zz, ss, se, al, tab, eobrun):
@@ -872,15 +469,19 @@ def _ac_refine(rd, zz, ss, se, al, tab, eobrun):
     return eobrun
 
 
-def _reconstruct_planes(frame, store, qtables, mcus_x, mcus_y, hmax, vmax):
+def _reconstruct_planes(frame, qtables):
+    """Coefficient stores -> pixels: dequantize, one vectorized IDCT
+    per component, replicate subsampled planes up, crop, and convert
+    YCbCr -> RGB (JFIF/BT.601) for 3-component images."""
+    hmax, vmax, _mcus_x, _mcus_y = frame["grid"]
     comps = frame["comps"]
     h, w = frame["h"], frame["w"]
-    planes = {}
+    planes = []
     for c in comps:
         q = qtables.get(c["tq"])
         if q is None:
             raise ValueError(f"missing quantization table {c['tq']}")
-        arr = store[c["id"]].reshape(-1, 64)
+        arr = c["zz"].reshape(-1, 64)
         coeffs = (arr * q[None, :])[:, _ZZ_INV].reshape(-1, 8, 8).astype(float)
         pix = np.einsum("ux,nuv,vy->nxy", _DCT, coeffs, _DCT)
         bh, bw = c["bh"], c["bw"]
@@ -890,18 +491,220 @@ def _reconstruct_planes(frame, store, qtables, mcus_x, mcus_y, hmax, vmax):
         plane = np.repeat(
             np.repeat(plane, hmax // c["h"], axis=1), vmax // c["v"], axis=0
         )
-        planes[c["id"]] = plane[:h, :w] + 128.0
+        planes.append(plane[:h, :w] + 128.0)
     if len(comps) == 1:
-        out = np.clip(np.rint(planes[comps[0]["id"]]), 0, 255).astype(np.uint8)
-        return out, w, h
+        return np.clip(np.rint(planes[0]), 0, 255).astype(np.uint8), w, h
     if len(comps) != 3:
         raise ValueError(f"unsupported component count {len(comps)}")
-    y, cb, cr = (planes[c["id"]] for c in comps)
+    y, cb, cr = planes
     r = y + 1.402 * (cr - 128.0)
     g = y - 0.344136 * (cb - 128.0) - 0.714136 * (cr - 128.0)
     b = y + 1.772 * (cb - 128.0)
     rgb = np.stack([r, g, b], axis=-1)
     return np.clip(np.rint(rgb), 0, 255).astype(np.uint8), w, h
+
+
+class _BitWriter:
+    def __init__(self):
+        self.out = bytearray()
+        self.acc = 0
+        self.nbits = 0
+
+    def bits(self, value: int, n: int):
+        self.acc = (self.acc << n) | (value & ((1 << n) - 1))
+        self.nbits += n
+        while self.nbits >= 8:
+            self.nbits -= 8
+            b = (self.acc >> self.nbits) & 0xFF
+            self.out.append(b)
+            if b == 0xFF:
+                self.out.append(0x00)  # byte stuffing
+
+    def flush(self):
+        if self.nbits:
+            self.bits((1 << (8 - self.nbits)) - 1, 8 - self.nbits)  # 1-fill pad
+
+
+def _encode_tables(bits, values):
+    """symbol -> (length, code) for the encoder side."""
+    return {sym: code for code, sym in _canonical_codes(bits, values).items()}
+
+
+def _category(v: int) -> int:
+    return int(v).bit_length() if v >= 0 else int(-v).bit_length()
+
+
+def _encode_component_blocks(wr, blocks_zz, dc_tab, ac_tab, pred):
+    for zz in blocks_zz:
+        diff = int(zz[0]) - pred[0]
+        pred[0] = int(zz[0])
+        t = _category(diff)
+        length, code = dc_tab[t]
+        wr.bits(code, length)
+        if t:
+            wr.bits(diff if diff >= 0 else diff + (1 << t) - 1, t)
+        run = 0
+        last_nz = int(np.max(np.nonzero(zz)[0])) if np.any(zz[1:]) else 0
+        for k in range(1, 64):
+            v = int(zz[k])
+            if k > last_nz:
+                break
+            if v == 0:
+                run += 1
+                continue
+            while run > 15:
+                length, code = ac_tab[0xF0]  # ZRL
+                wr.bits(code, length)
+                run -= 16
+            s = _category(v)
+            length, code = ac_tab[(run << 4) | s]
+            wr.bits(code, length)
+            wr.bits(v if v >= 0 else v + (1 << s) - 1, s)
+            run = 0
+        if last_nz < 63:
+            length, code = ac_tab[0x00]  # EOB
+            wr.bits(code, length)
+
+
+def _dct_blocks(plane, quant):
+    """(h, w) float plane -> list of quantized zigzag blocks (row-major)."""
+    h, w = plane.shape
+    ph, pw = -(-h // 8) * 8, -(-w // 8) * 8
+    padded = np.pad(plane, ((0, ph - h), (0, pw - w)), mode="edge") - 128.0
+    tiles = padded.reshape(ph // 8, 8, pw // 8, 8).transpose(0, 2, 1, 3)
+    coeffs = np.einsum("ux,nmxy,vy->nmuv", _DCT, tiles, _DCT)
+    q = coeffs.reshape(-1, 64)[:, _ZZ]
+    return np.rint(q / quant[None, :]).astype(np.int64)
+
+
+def encode_jpeg(
+    pixels,
+    quant=None,
+    subsample: bool = False,
+    restart_interval: int = 0,
+    progressive: bool = False,
+) -> bytes:
+    """JPEG encoder (fixture generator and binary-sink utility),
+    baseline by default. ``pixels``: ``(h, w)`` gray or ``(h, w, 3)`` RGB uint8.
+    ``quant``: 64 zigzag-ordered divisors (default all ones — with a
+    DC-only image this makes decode(encode(x)) EXACT, the property the
+    arithmetic oracle leans on). ``subsample=True`` writes 4:2:0 chroma
+    (2×2 box-filtered); only meaningful for color inputs.
+    ``restart_interval``: emit DRI + RSTn markers every N MCUs (real
+    encoders use them for error resilience and parallel decode; here
+    they exercise the decoder's restart path; baseline mode only).
+    ``progressive=True`` writes SOF2 with the full Annex G scan
+    script — DC first at Al=1, per-component AC bands 1-5/6-63 at
+    Al=1, then DC and AC refinement scans to Al=0 — so spectral
+    selection, successive approximation, EOB runs, and correction-bit
+    buffering are all exercised; with integer coefficients the
+    progression completes losslessly, preserving the exact-roundtrip
+    property the arithmetic oracles lean on."""
+    px = np.asarray(pixels, dtype=float)
+    quant = np.ones(64, dtype=np.int64) if quant is None else np.asarray(quant, dtype=np.int64)
+    gray = px.ndim == 2
+    h, w = px.shape[:2]
+    if gray:
+        comps = [{"id": 1, "h": 1, "v": 1, "plane": px}]
+    else:
+        r, g, b = px[..., 0], px[..., 1], px[..., 2]
+        y = 0.299 * r + 0.587 * g + 0.114 * b
+        cb = 128.0 - 0.168736 * r - 0.331264 * g + 0.5 * b
+        cr = 128.0 + 0.5 * r - 0.418688 * g - 0.081312 * b
+        if subsample:
+            ph, pw = -(-h // 2) * 2, -(-w // 2) * 2
+            def ds(p):
+                p = np.pad(p, ((0, ph - h), (0, pw - w)), mode="edge")
+                return p.reshape(ph // 2, 2, pw // 2, 2).mean(axis=(1, 3))
+            comps = [
+                {"id": 1, "h": 2, "v": 2, "plane": y},
+                {"id": 2, "h": 1, "v": 1, "plane": ds(cb)},
+                {"id": 3, "h": 1, "v": 1, "plane": ds(cr)},
+            ]
+        else:
+            comps = [
+                {"id": 1, "h": 1, "v": 1, "plane": y},
+                {"id": 2, "h": 1, "v": 1, "plane": cb},
+                {"id": 3, "h": 1, "v": 1, "plane": cr},
+            ]
+    _hmax, _vmax, mcus_x, mcus_y = _comp_grids(comps, w, h)
+    # per-component quantized blocks in PLANE row-major order, then
+    # re-gathered in MCU order during the scan write
+    for c in comps:
+        bw, bh, plane = c["bw"], c["bh"], c["plane"]
+        # pad the plane so its block grid is exactly (bh, bw)
+        plane = np.pad(
+            plane,
+            ((0, bh * 8 - plane.shape[0]), (0, bw * 8 - plane.shape[1])),
+            mode="edge",
+        )
+        c["zz"] = _dct_blocks(plane, quant).reshape(bh, bw, 64)
+
+    out = bytearray(b"\xff\xd8")  # SOI
+
+    def seg(marker, body):
+        out.extend(bytes([0xFF, marker]) + struct.pack(">H", len(body) + 2) + body)
+
+    seg(0xDB, bytes([0]) + bytes(int(v) for v in quant))  # DQT id 0
+    if restart_interval and not progressive:
+        seg(0xDD, struct.pack(">H", restart_interval))  # DRI
+    sof = bytearray([8]) + struct.pack(">HH", h, w) + bytes([len(comps)])
+    for c in comps:
+        sof += bytes([c["id"], (c["h"] << 4) | c["v"], 0])
+    seg(0xC2 if progressive else 0xC0, bytes(sof))
+    if progressive:
+        tabs = [(0, 0, _DC_LUM), (1, 0, _AC_PROG)]
+        if not gray:
+            tabs += [(0, 1, _DC_CHR)]
+    else:
+        tabs = [(0, 0, _DC_LUM), (1, 0, _AC_LUM)]
+        if not gray:
+            tabs += [(0, 1, _DC_CHR), (1, 1, _AC_CHR)]
+    for tc, th, (bits, vals) in tabs:
+        seg(0xC4, bytes([(tc << 4) | th] + bits + vals))
+    if progressive:
+        _encode_progressive_scans(out, seg, comps, gray, mcus_x, mcus_y)
+        out.extend(b"\xff\xd9")  # EOI
+        return bytes(out)
+    sos = bytearray([len(comps)])
+    for i, c in enumerate(comps):
+        td_ta = 0 if i == 0 or gray else 0x11
+        sos += bytes([c["id"], td_ta])
+    sos += bytes([0, 63, 0])
+    seg(0xDA, bytes(sos))
+
+    wr = _BitWriter()
+    enc_tabs = _ENC_TABS
+    preds = {c["id"]: [0] for c in comps}
+    n_done = 0
+    for my in range(mcus_y):
+        for mx in range(mcus_x):
+            if restart_interval and n_done and n_done % restart_interval == 0:
+                wr.flush()  # byte-align (1-padded, stuffed if 0xFF)
+                wr.out.extend(
+                    bytes([0xFF, 0xD0 + (n_done // restart_interval - 1) % 8])
+                )
+                for p in preds.values():
+                    p[0] = 0
+            n_done += 1
+            for i, c in enumerate(comps):
+                dc_tab, ac_tab = enc_tabs[0 if i == 0 or gray else 1]
+                rows = []
+                for by in range(c["v"]):
+                    for bx in range(c["h"]):
+                        rows.append(c["zz"][my * c["v"] + by, mx * c["h"] + bx])
+                _encode_component_blocks(wr, rows, dc_tab, ac_tab, preds[c["id"]])
+    wr.flush()
+    out.extend(wr.out)
+    out.extend(b"\xff\xd9")  # EOI
+    return bytes(out)
+
+
+# encoder tables are fixed (Annex K): build once at import
+_ENC_TABS = {
+    0: (_encode_tables(*_DC_LUM), _encode_tables(*_AC_LUM)),
+    1: (_encode_tables(*_DC_CHR), _encode_tables(*_AC_CHR)),
+}
 
 
 # ---------------------------------------------------------------------------

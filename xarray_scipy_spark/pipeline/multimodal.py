@@ -13,24 +13,35 @@ decode paths for the public uncompressed formats — header tokenizing,
 raster/PCM scaling, feature math, all value-verified by arithmetic
 oracles (``multimodal_real_decode`` / ``multimodal_audio_decode``).
 Compressed formats with pure-numpy decode paths: PNG (stdlib zlib
-inflate + scanline unfilter) and baseline JPEG (stream-carried huffman
-tables, dequant, vectorized IDCT — pipeline/jpeg.py). WebP,
-progressive JPEG, mp3/ogg and video containers need libraries this
-container does not ship and stay behind clearly-marked
-``NotImplementedError`` gates; the deterministic fallback decoder
-(md5-derived features) keeps that plumbing testable and SQL-reproducible.
+inflate + scanline unfilter), GIF (LZW, animated frames composited),
+baseline and progressive JPEG (pipeline/jpeg.py), lossless WebP
+(pipeline/webp.py) and RIFF/AVI Motion-JPEG video. Lossy WebP, mp3/ogg
+and other video containers need libraries this container does not
+ship and stay behind clearly-marked ``NotImplementedError`` gates; the
+deterministic fallback decoder (md5-derived features) keeps that
+plumbing testable and SQL-reproducible.
+
+Every binary operator (``frame_sample``, ``resize_payload``,
+``decode_features``, ``decode_text``) is a per-payload ``rows``
+function; :func:`_map_payloads` holds the one ``mapInPandas`` call
+that runs them.
 """
 
 from __future__ import annotations
 
+import gzip
 import hashlib
-from collections.abc import Callable, Iterator
+import struct
+import zlib
+from collections.abc import Callable
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
 from .hashes import spread
 from .jpeg import decode_jpeg, encode_jpeg
+from .webp import decode_webp
 
 __all__ = [
     "with_binary",
@@ -100,8 +111,6 @@ def decode_ppm(payload: bytes):
     ``(pixels, width, height)`` with ``pixels`` an ``(h, w, 3)`` uint8
     array. Handles ``#`` comments and arbitrary whitespace in the
     header per the netpbm spec."""
-    import numpy as np
-
     if payload[:2] != b"P6":
         raise ValueError("not a binary PPM (P6) payload")
     # header tokenizer: magic, width, height, maxval; '#' starts a
@@ -147,11 +156,6 @@ def decode_png(payload: bytes):
     channel lanes vectorized. Chunk CRCs are not verified (decode is
     value-checked downstream; a corrupt stream fails the zlib inflate
     or the length checks)."""
-    import struct
-    import zlib
-
-    import numpy as np
-
     if payload[:8] != _PNG_SIG:
         raise ValueError("not a PNG payload (bad signature)")
     pos, ihdr, idat, plte = 8, None, [], None
@@ -236,8 +240,6 @@ def _png_unfilter(raw: bytes, w: int, h: int, channels: int):
     """Reverse the five PNG scanline filters over a (w, h) raster (the
     whole image, or one Adam7 sub-image — each pass filters against
     its OWN neighbors)."""
-    import numpy as np
-
     stride = w * channels
     if len(raw) < (stride + 1) * h:
         raise ValueError("PNG raster truncated")
@@ -288,11 +290,6 @@ def encode_png(pixels) -> bytes:
     encoder's output exercises every unfilter path — all five filters
     vectorize on the encode side because the predictors read the
     original (= reconstructed) neighbors."""
-    import struct
-    import zlib
-
-    import numpy as np
-
     px = np.asarray(pixels, dtype=np.uint8)
     if px.ndim == 2:
         px = px[:, :, None]
@@ -351,10 +348,6 @@ def decode_bmp(payload: bytes):
     the common case) and top-down (negative height) row orders and the
     4-byte row stride padding. Returns ``(pixels, width, height)`` with
     ``pixels`` an ``(h, w, 3)`` RGB uint8 array (BMP stores BGR)."""
-    import struct
-
-    import numpy as np
-
     if payload[:2] != b"BM":
         raise ValueError("not a BMP payload")
     data_off = struct.unpack_from("<I", payload, 10)[0]
@@ -381,10 +374,6 @@ def encode_bmp(pixels) -> bytes:
     """Minimal 24-bit BI_RGB BMP writer (bottom-up, BITMAPINFOHEADER)
     for ``(h, w, 3)`` RGB uint8 pixels — the fixture-side inverse of
     :func:`decode_bmp`."""
-    import struct
-
-    import numpy as np
-
     px = np.asarray(pixels, dtype=np.uint8)
     h, w, _c = px.shape
     stride = (w * 3 + 3) // 4 * 4
@@ -402,10 +391,6 @@ def encode_gif(pixels) -> bytes:
     GIF" style — every pixel emitted as a literal 9-bit code with a
     CLEAR before the code width would grow, which every conformant
     decoder accepts. Input: ``(h, w)`` uint8 indices."""
-    import struct
-
-    import numpy as np
-
     px = np.asarray(pixels, dtype=np.uint8)
     h, w = px.shape
     out = bytearray()
@@ -447,17 +432,14 @@ def encode_gif(pixels) -> bytes:
     return bytes(out)
 
 
-def decode_gif_frames(payload: bytes):
-    """Full animated-GIF decode (r7): every frame composited onto the
-    logical screen — sub-rectangle frames draw at their (left, top),
-    transparency (GCE transparent index) leaves the canvas showing
-    through, and disposal methods none/keep (0/1), restore-background
-    (2), and restore-previous (3) are honored. Returns a list of
-    ``(screen_h, screen_w, 3)`` uint8 canvases, one per frame."""
-    import struct
-
-    import numpy as np
-
+def _gif_images(payload: bytes):
+    """Parse a GIF87a/89a block stream: logical screen, global/local
+    color tables, graphic control extensions (other extensions are
+    skipped), full variable-width LZW image data and four-pass
+    interlace. Lazy: yields the screen ``(width, height, background
+    rgb)`` first, then one ``(left, top, rgb, opaque, disposal)`` per
+    image with ``rgb`` its own ``(h, w, 3)`` uint8 rectangle and
+    ``opaque`` the ``(h, w)`` mask of non-transparent pixels."""
     buf = bytes(payload)
     if buf[:6] not in (b"GIF87a", b"GIF89a"):
         raise ValueError("not a GIF payload")
@@ -468,19 +450,16 @@ def decode_gif_frames(payload: bytes):
         n = 2 << (flags & 7)
         gct = np.frombuffer(buf[pos : pos + 3 * n], dtype=np.uint8).reshape(n, 3)
         pos += 3 * n
-    if gct is not None and bg_idx < len(gct):
-        canvas = np.tile(gct[bg_idx], (sh, sw, 1)).astype(np.uint8)
-    else:
-        canvas = np.zeros((sh, sw, 3), dtype=np.uint8)
-    frames: list = []
+    ok_bg = gct is not None and bg_idx < len(gct)
+    yield sw, sh, gct[bg_idx] if ok_bg else np.zeros(3, dtype=np.uint8)
     transparent = None
     disposal = 0
     while pos < len(buf):
         b0 = buf[pos]
         pos += 1
-        if b0 == 0x3B:
+        if b0 == 0x3B:  # trailer
             break
-        if b0 == 0x21:
+        if b0 == 0x21:  # extension: label + sub-blocks
             label = buf[pos]
             pos += 1
             if label == 0xF9 and buf[pos] >= 4:  # graphic control extension
@@ -506,111 +485,63 @@ def decode_gif_frames(payload: bytes):
         pos += 1
         data = bytearray()
         while buf[pos]:
-            ln = buf[pos]
-            data += buf[pos + 1 : pos + 1 + ln]
-            pos += 1 + ln
+            data += buf[pos + 1 : pos + 1 + buf[pos]]
+            pos += 1 + buf[pos]
         pos += 1
         idx = np.asarray(
             _lzw_decode(bytes(data), min_code, w * h), dtype=np.int64
         )[: w * h].reshape(h, w)
         if iflags & 0x40:
-            order = np.concatenate(
-                [np.arange(st, h, sp) for st, sp in
-                 ((0, 8), (4, 8), (2, 4), (1, 2))]
-            )
-            deinter = np.empty_like(idx)
-            deinter[order] = idx
-            idx = deinter
-        prev = canvas.copy() if disposal == 3 else None
-        region = canvas[top : top + h, left : left + w]
-        rgb = table[idx]
-        if transparent is not None:
-            mask = (idx != transparent)[:, :, None]
-            region[:] = np.where(mask, rgb, region)
-        else:
-            region[:] = rgb
-        frames.append(canvas.copy())
-        if disposal == 2:  # restore background in the frame rect
-            if gct is not None and bg_idx < len(gct):
-                canvas[top : top + h, left : left + w] = gct[bg_idx]
-            else:
-                canvas[top : top + h, left : left + w] = 0
-        elif disposal == 3 and prev is not None:
-            canvas = prev
-        transparent = None
-        disposal = 0
-    if not frames:
-        raise ValueError("GIF contained no image frame")
-    return frames
-
-
-def decode_gif(payload: bytes):
-    """Pure-python GIF87a/89a decoder: logical screen + global/local
-    color tables, extension skipping, full variable-width LZW decode
-    (clear/end codes, width growth to 12 bits), non-interlaced frames.
-    Returns the FIRST frame as ``((h, w, 3) uint8, w, h)`` through the
-    color table; interlaced frames deinterlace through the standard
-    four-pass row order (r7)."""
-    import struct
-
-    import numpy as np
-
-    buf = bytes(payload)
-    if buf[:6] not in (b"GIF87a", b"GIF89a"):
-        raise ValueError("not a GIF payload")
-    sw, sh, flags, _bg, _ar = struct.unpack("<HHBBB", buf[6:13])
-    pos = 13
-    gct = None
-    if flags & 0x80:
-        n = 2 << (flags & 7)
-        gct = np.frombuffer(buf[pos : pos + 3 * n], dtype=np.uint8).reshape(n, 3)
-        pos += 3 * n
-    while pos < len(buf):
-        b0 = buf[pos]
-        pos += 1
-        if b0 == 0x3B:  # trailer
-            break
-        if b0 == 0x21:  # extension: label + sub-blocks
-            pos += 1
-            while buf[pos]:
-                pos += 1 + buf[pos]
-            pos += 1
-            continue
-        if b0 != 0x2C:
-            raise ValueError(f"unexpected GIF block 0x{b0:02x}")
-        _l, _t, w, h, iflags = struct.unpack("<HHHHB", buf[pos : pos + 9])
-        pos += 9
-        interlaced = bool(iflags & 0x40)
-        table = gct
-        if iflags & 0x80:
-            n = 2 << (iflags & 7)
-            table = np.frombuffer(buf[pos : pos + 3 * n], dtype=np.uint8).reshape(n, 3)
-            pos += 3 * n
-        if table is None:
-            raise ValueError("GIF frame without a color table")
-        min_code = buf[pos]
-        pos += 1
-        data = bytearray()
-        while buf[pos]:
-            ln = buf[pos]
-            data += buf[pos + 1 : pos + 1 + ln]
-            pos += 1 + ln
-        pos += 1
-        indices = _lzw_decode(bytes(data), min_code, w * h)
-        idx = np.asarray(indices, dtype=np.int64)[: w * h].reshape(h, w)
-        if interlaced:
             # GIF interlace: rows arrive in four passes (8/8 from 0,
             # 8/8 from 4, 4/4 from 2, 2/2 from 1) — reorder
             order = np.concatenate(
-                [np.arange(start, h, step) for start, step in
-                 ((0, 8), (4, 8), (2, 4), (1, 2))]
+                [np.arange(st, h, sp) for st, sp in ((0, 8), (4, 8), (2, 4), (1, 2))]
             )
             deinter = np.empty_like(idx)
             deinter[order] = idx
             idx = deinter
-        rgb = table[idx].reshape(h, w, 3)
-        return rgb, w, h
+        opaque = np.ones((h, w), bool) if transparent is None else idx != transparent
+        yield left, top, table[idx], opaque, disposal
+        transparent = None
+        disposal = 0
+
+
+def decode_gif(payload: bytes):
+    """GIF87a/89a decode of the FIRST image -> ``((h, w, 3) uint8, w,
+    h)``: the image's own rectangle through its color table (global
+    or local), LZW-decoded and deinterlaced. Use
+    :func:`decode_gif_frames` for screen-composited frames."""
+    images = _gif_images(payload)
+    next(images)  # the logical screen
+    for _left, _top, rgb, _opaque, _disposal in images:
+        return rgb, rgb.shape[1], rgb.shape[0]
     raise ValueError("GIF contained no image frame")
+
+
+def decode_gif_frames(payload: bytes):
+    """Full animated-GIF decode: every image composited onto the
+    logical screen — sub-rectangle images draw at their (left, top),
+    transparency (GCE transparent index) leaves the canvas showing
+    through, and disposal methods none/keep (0/1), restore-background
+    (2), and restore-previous (3) are honored. Returns a list of
+    ``(screen_h, screen_w, 3)`` uint8 canvases, one per image."""
+    images = _gif_images(payload)
+    sw, sh, bg = next(images)
+    canvas = np.tile(bg, (sh, sw, 1))
+    frames = []
+    for left, top, rgb, opaque, disposal in images:
+        h, w = opaque.shape
+        prev = canvas.copy() if disposal == 3 else None
+        region = canvas[top : top + h, left : left + w]
+        region[opaque] = rgb[opaque]
+        frames.append(canvas.copy())
+        if disposal == 2:  # restore background in the image rect
+            region[:] = bg
+        elif disposal == 3:
+            canvas = prev
+    if not frames:
+        raise ValueError("GIF contained no image frame")
+    return frames
 
 
 def _lzw_decode(data: bytes, min_code: int, limit: int) -> list[int]:
@@ -665,8 +596,6 @@ def image_decoder(payload: bytes, n_features: int) -> list[float]:
     height (zero-padded / truncated to ``n_features``). Remaining
     formats (lossy-VP8 WebP, AVIF, ...) have no pure-python path and
     raise."""
-    import numpy as np
-
     if payload[:2] == b"P6":
         px, w, h = decode_ppm(payload)
     elif payload[:2] == b"BM":
@@ -674,16 +603,12 @@ def image_decoder(payload: bytes, n_features: int) -> list[float]:
     elif payload[:8] == _PNG_SIG:
         px, w, h = decode_png(payload)
     elif payload[:2] == b"\xff\xd8":
-        from .jpeg import decode_jpeg
-
         px, w, h = decode_jpeg(payload)
         if px.ndim == 2:
             px = px[:, :, None]
     elif payload[:6] in (b"GIF87a", b"GIF89a"):
         px, w, h = decode_gif(payload)
     elif payload[:4] == b"RIFF" and payload[8:12] == b"WEBP":
-        from .webp import decode_webp
-
         px, w, h = decode_webp(payload)
     else:
         raise NotImplementedError(
@@ -706,8 +631,6 @@ def decode_wav(payload: bytes):
     Walks the RIFF chunk list (handles extra chunks like LIST/fact
     before data). Returns ``(samples, sample_rate)`` with ``samples``
     an ``(n_frames, n_channels)`` float64 array scaled to [-1, 1)."""
-    import numpy as np
-
     if payload[:4] != b"RIFF" or payload[8:12] != b"WAVE":
         raise ValueError("not a RIFF/WAVE payload")
     pos, fmt, data = 12, None, None
@@ -744,8 +667,6 @@ def audio_decoder(payload: bytes, n_features: int) -> list[float]:
     n_frames, sample_rate, n_channels]`` (zero-padded / truncated to
     ``n_features``). Compressed codecs (mp3/ogg/aac) require an audio
     library this container does not ship and raise."""
-    import numpy as np
-
     if payload[:4] == b"RIFF":
         x, sr = decode_wav(payload)
         ch0 = x[:, 0] if x.size else np.zeros(1)
@@ -772,10 +693,6 @@ def encode_avi_mjpeg(frames, fps: int = 10) -> bytes:
     a ``movi`` LIST of ``00dc`` chunks, each a baseline JPEG from
     :func:`~xarray_scipy_spark.pipeline.jpeg.encode_jpeg`. Chunks are
     word-aligned per RIFF."""
-    import struct
-
-    import numpy as np
-
     frames = [np.asarray(f) for f in frames]
     if not frames:
         raise ValueError("need at least one frame")
@@ -813,8 +730,6 @@ def decode_avi_mjpeg(payload: bytes) -> list[bytes]:
     payloads (``00dc``/``00db`` chunks of the ``movi`` LIST) — pure
     chunk walking, word-aligned per RIFF. Frames decode with
     :func:`~xarray_scipy_spark.pipeline.jpeg.decode_jpeg`."""
-    import struct
-
     buf = bytes(payload)
     if buf[:4] != b"RIFF" or buf[8:12] != b"AVI ":
         raise ValueError("not a RIFF/AVI payload")
@@ -853,8 +768,6 @@ def audio_spectral_features(payload: bytes) -> list[float]:
     at an exact bin frequency k·sr/n the spectrum concentrates in bin
     k, so centroid == peak == k·sr/n in closed form — the property the
     contract oracle pins."""
-    import numpy as np
-
     x, sr = decode_wav(payload)
     ch0 = x[:, 0] if x.size else np.zeros(1)
     n = len(ch0)
@@ -876,8 +789,8 @@ def audio_spectral_features(payload: bytes) -> list[float]:
 
 def video_frame_decoder(payload: bytes, frame_bytes: int = 0) -> list[bytes]:
     """Container demux: RIFF/AVI Motion-JPEG payloads demux for REAL
-    (r7 — :func:`decode_avi_mjpeg`; each returned blob is a baseline
-    JPEG the in-repo decoder handles). Every other container (mp4/h264
+    (:func:`decode_avi_mjpeg`; each returned blob is a JPEG the in-repo
+    decoder handles). Every other container (mp4/h264
     etc.) still requires an av library this environment does not ship
     and raises — loudly, never a silently wrong answer."""
     buf = bytes(payload)
@@ -889,6 +802,41 @@ def video_frame_decoder(payload: bytes, frame_bytes: int = 0) -> list[bytes]:
     )
 
 
+def _map_payloads(
+    df: DataFrame,
+    id_col: str,
+    bin_col: str,
+    fields: dict[str, str],
+    rows: Callable[[bytes | None], list[tuple]],
+) -> DataFrame:
+    """Run a per-payload kernel over ``df`` in Arrow batches
+    (``mapInPandas``, one batch of payloads per call, so decode cost
+    is amortized and Catalyst prunes the payload column until here).
+
+    ``rows(payload)`` returns the output rows of one payload (``None``
+    for a NULL one) as tuples in ``fields`` order (``{name: ddl
+    type}``); each row is prefixed with its input's ``id_col`` value,
+    whose type carries over. Zero, one or many rows per payload."""
+    names = list(fields)
+    cols = {id_col: dict(df.dtypes)[id_col], **fields}
+    schema = ", ".join(f"{n} {t}" for n, t in cols.items())
+
+    def run(batches):
+        for pdf in batches:
+            ids: list = []
+            out: list[tuple] = []
+            for i, payload in zip(pdf[id_col], pdf[bin_col]):
+                got = rows(payload)
+                ids.extend([i] * len(got))
+                out.extend(got)
+            cols = list(zip(*out)) or [()] * len(names)
+            yield pd.DataFrame(
+                {id_col: ids, **{n: list(c) for n, c in zip(names, cols)}}
+            )
+
+    return spread(df.select(id_col, bin_col), id_col).mapInPandas(run, schema=schema)
+
+
 def frame_sample(
     df: DataFrame,
     *,
@@ -898,88 +846,45 @@ def frame_sample(
     every: int = 3,
     codec: str = "stride",
 ) -> DataFrame:
-    """Sample every ``every``-th fixed-stride frame from each binary
-    payload and emit one row per sampled frame (UDTF shape: the
-    ``mapInPandas`` batch yields MORE rows than it receives).
+    """Sample every ``every``-th frame from each binary payload and
+    emit one row per sampled frame (UDTF shape: the ``mapInPandas``
+    batch yields MORE rows than it receives). Per frame: ``frame_idx``
+    (index among ALL frames, so the sampling stride is visible) and
+    ``f0``.
 
-    The fallback "codec" slices the payload into consecutive
-    ``frame_bytes``-byte frames (tail shorter than a frame dropped) —
-    a real codec plugs in at :func:`video_frame_decoder`. Per frame:
-    ``frame_idx`` (index among ALL frames, so the sampling stride is
-    visible) and ``f0`` (md5-derived stand-in feature, SQL-reproducible
-    for the oracle).
-
-    ``codec="mjpeg"`` (r7) is the REAL path: payloads are RIFF/AVI
+    ``codec="stride"`` slices an opaque payload into consecutive
+    ``frame_bytes``-byte frames (tail shorter than a frame dropped);
+    ``f0`` is an md5-derived stand-in feature, SQL-reproducible for the
+    oracle. ``codec="mjpeg"`` is the real path: payloads are RIFF/AVI
     Motion-JPEG containers, demuxed chunk-by-chunk
     (:func:`decode_avi_mjpeg`) and each sampled frame decoded through
-    the in-repo baseline-JPEG decoder; ``f0`` is then the decoded
-    frame's pixel mean (closed-form for the DC/AC arithmetic fixtures,
-    so the contract oracle states it in SQL). ``codec="gif"`` samples composited
-    animated-GIF canvases the same way; ``codec="stride"`` keeps
-    the fixed-stride fallback for opaque payloads.
+    the in-repo JPEG decoder; ``f0`` is then the decoded frame's pixel
+    mean (closed-form for the DC/AC arithmetic fixtures, so the
+    contract oracle states it in SQL).
 
     A NULL payload emits no frames.
-
-    Scale: explode happens Python-side inside the Arrow batch, so one
-    input batch amortizes decode across documents, and the payload
-    column is pruned upstream by Catalyst until this operator scans it.
     """
-    if codec not in ("stride", "mjpeg", "gif"):
-        raise ValueError(
-            f"codec must be 'stride', 'mjpeg' or 'gif', got {codec!r}"
-        )
-    id_type = dict(df.dtypes)[id_col]
-    schema = f"{id_col} {id_type}, frame_idx int, f0 double"
+    if codec not in ("stride", "mjpeg"):
+        raise ValueError(f"codec must be 'stride' or 'mjpeg', got {codec!r}")
 
-    if codec in ("mjpeg", "gif"):
+    def rows(payload):
+        if payload is None:
+            return []
+        if codec == "mjpeg":
+            jpegs = decode_avi_mjpeg(bytes(payload))
+            pixels = [decode_jpeg(jpegs[k])[0] for k in range(0, len(jpegs), every)]
+            return [
+                (k * every, float(np.asarray(px, dtype=float).mean()))
+                for k, px in enumerate(pixels)
+            ]
+        fb = frame_bytes
+        frames = [payload[k * fb : (k + 1) * fb] for k in range(0, len(payload) // fb, every)]
+        return [
+            (k * every, float(hashlib.md5(f).digest()[0])) for k, f in enumerate(frames)
+        ]
 
-        def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            import numpy as np
-
-            for pdf in batches:
-                ids: list = []
-                fidx: list[int] = []
-                feat: list[float] = []
-                for i, payload in zip(pdf[id_col], pdf[bin_col]):
-                    if payload is None:
-                        continue
-                    if codec == "mjpeg":
-                        frames = [
-                            np.asarray(decode_jpeg(j)[0], dtype=float)
-                            for j in decode_avi_mjpeg(bytes(payload))
-                        ]
-                    else:  # animated GIF: composited canvases
-                        frames = [
-                            np.asarray(f, dtype=float)
-                            for f in decode_gif_frames(bytes(payload))
-                        ]
-                    for k in range(0, len(frames), every):
-                        ids.append(i)
-                        fidx.append(k)
-                        feat.append(float(frames[k].mean()))
-                yield pd.DataFrame({id_col: ids, "frame_idx": fidx, "f0": feat})
-
-        return spread(df.select(id_col, bin_col), id_col).mapInPandas(
-            run, schema=schema
-        )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids: list = []
-            fidx: list[int] = []
-            feat: list[float] = []
-            for i, payload in zip(pdf[id_col], pdf[bin_col]):
-                if payload is None:
-                    continue
-                n_frames = len(payload) // frame_bytes
-                for k in range(0, n_frames, every):
-                    frame = payload[k * frame_bytes : (k + 1) * frame_bytes]
-                    ids.append(i)
-                    fidx.append(k)
-                    feat.append(float(hashlib.md5(frame).digest()[0]))
-            yield pd.DataFrame({id_col: ids, "frame_idx": fidx, "f0": feat})
-
-    return spread(df.select(id_col, bin_col), id_col).mapInPandas(run, schema=schema)
+    fields = {"frame_idx": "int", "f0": "double"}
+    return _map_payloads(df, id_col, bin_col, fields, rows)
 
 
 def resize_payload(
@@ -999,28 +904,15 @@ def resize_payload(
     Output: ``(id_col, payload, n_bytes, digest)``; a NULL payload
     gives NULL ``payload``, ``n_bytes`` and ``digest``.
     """
-    id_type = dict(df.dtypes)[id_col]
-    schema = f"{id_col} {id_type}, payload binary, n_bytes int, digest string"
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = [
-                None if p is None else bytes(p)[:target_bytes].ljust(target_bytes, pad)
-                for p in pdf[bin_col]
-            ]
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col].values,
-                    "payload": payloads,
-                    "n_bytes": [None if p is None else target_bytes for p in payloads],
-                    "digest": [
-                        None if p is None else hashlib.md5(p).hexdigest()
-                        for p in payloads
-                    ],
-                }
-            )
+    def rows(payload):
+        if payload is None:
+            return [(None, None, None)]
+        out = bytes(payload)[:target_bytes].ljust(target_bytes, pad)
+        return [(out, target_bytes, hashlib.md5(out).hexdigest())]
 
-    return spread(df.select(id_col, bin_col), id_col).mapInPandas(run, schema=schema)
+    fields = {"payload": "binary", "n_bytes": "int", "digest": "string"}
+    return _map_payloads(df, id_col, bin_col, fields, rows)
 
 
 def decode_features(
@@ -1037,33 +929,19 @@ def decode_features(
 
     Output: ``(id_col, n_bytes, f0..f{n-1})``. The declared schema is
     the Spark analog of the reference's ``output_dtypes`` contract
-    (``/root/reference/xarray_scipy/signal.py:148``).
+    (``xarray_scipy/signal.py``).
 
     A NULL payload gives NULL ``n_bytes`` and NULL features;
     ``decoder`` is not called for it.
     """
-    feature_fields = ", ".join(f"f{i} double" for i in range(n_features))
-    id_type = dict(df.dtypes)[id_col]
-    schema = f"{id_col} {id_type}, n_bytes int, {feature_fields}"
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = pdf[bin_col]
-            feats = [
-                [None] * n_features if p is None else decoder(p, n_features)
-                for p in payloads
-            ]
-            out = pd.DataFrame(
-                {
-                    id_col: pdf[id_col].values,
-                    "n_bytes": [None if p is None else len(p) for p in payloads],
-                }
-            )
-            for i in range(n_features):
-                out[f"f{i}"] = [f[i] for f in feats]
-            yield out
+    def rows(payload):
+        if payload is None:
+            return [(None,) * (n_features + 1)]
+        return [(len(payload), *decoder(payload, n_features)[:n_features])]
 
-    return spread(df.select(id_col, bin_col), id_col).mapInPandas(run, schema=schema)
+    fields = {"n_bytes": "int", **{f"f{i}": "double" for i in range(n_features)}}
+    return _map_payloads(df, id_col, bin_col, fields, rows)
 
 
 def gzip_text_decoder(payload: bytes) -> str:
@@ -1072,16 +950,12 @@ def gzip_text_decoder(payload: bytes) -> str:
     wire format of web-crawl corpora (WARC records, .jsonl.gz shards) —
     the common case for 100 TB text ingestion, and the one compressed
     format the container can decode without any external library."""
-    import gzip
-
     return gzip.decompress(bytes(payload)).decode("utf-8")
 
 
 def gzip_text_encoder(text: str) -> bytes:
     """Fixture-side inverse of :func:`gzip_text_decoder` (``mtime=0``
     so payload bytes are deterministic across runs)."""
-    import gzip
-
     return gzip.compress(text.encode("utf-8"), mtime=0)
 
 
@@ -1099,18 +973,9 @@ def decode_text(
     payload size — pairing it with ``octet_length(text)`` downstream
     gives the corpus compression ratio for free. A NULL payload gives
     NULL ``n_bytes`` and NULL text; ``decoder`` is not called for it."""
-    id_type = dict(df.dtypes)[id_col]
-    schema = f"{id_col} {id_type}, n_bytes int, {out_col} string"
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = pdf[bin_col]
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col].values,
-                    "n_bytes": [None if p is None else len(p) for p in payloads],
-                    out_col: [None if p is None else decoder(p) for p in payloads],
-                }
-            )
+    def rows(payload):
+        return [(None, None) if payload is None else (len(payload), decoder(payload))]
 
-    return spread(df.select(id_col, bin_col), id_col).mapInPandas(run, schema=schema)
+    fields = {"n_bytes": "int", out_col: "string"}
+    return _map_payloads(df, id_col, bin_col, fields, rows)

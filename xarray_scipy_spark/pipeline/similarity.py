@@ -96,12 +96,15 @@ def cosine_topk(
     ``max_broadcast_queries=None`` lifts the cap for callers that know
     their size (the collect itself is inherent to the strategy).
 
+    NULL vectors are dropped on both sides: a NULL query gets no
+    neighbors and a NULL corpus vector is nobody's neighbor.
+
     Output: ``(query_id, rank, neighbor_id, cos_sim)``.
     """
     import numpy as np
     import pandas as pd
 
-    qside = queries.select(id_col, vec_col)
+    qside = queries.select(id_col, vec_col).where(F.col(vec_col).isNotNull())
     if max_broadcast_queries is not None:
         # Count BEFORE collect: the guard must refuse without ever
         # materializing an oversized query set on the driver. limit(cap+1)
@@ -167,7 +170,11 @@ def cosine_topk(
     # so Spark's own maxPartitionBytes file splitting yields the right
     # parallelism at scale, and a forced 32-way exchange on a small
     # corpus only adds a shuffle + per-task Python overhead
-    candidates = corpus.select(id_col, vec_col).mapInPandas(run, schema=out_schema)
+    candidates = (
+        corpus.select(id_col, vec_col)
+        .where(F.col(vec_col).isNotNull())
+        .mapInPandas(run, schema=out_schema)
+    )
     w = Window.partitionBy("query_id").orderBy(
         F.col("cos_sim").desc(), F.col("neighbor_id")
     )
@@ -182,7 +189,8 @@ def cosine_topk(
 def srp_bucket(vcol: Column, planes: int, dim: int) -> Column:
     """Signed-random-projection bucket: bit ``p`` is the sign of the dot
     with deterministic hyperplane ``p`` (:func:`..dedup.srp_plane`
-    literals — JVM-evaluated, reproducible in SQL)."""
+    literals — JVM-evaluated, reproducible in SQL). A NULL vector gets
+    a NULL bucket, so a bucket equi-join never matches it."""
     from .dedup import srp_plane
 
     bucket = None
@@ -190,7 +198,7 @@ def srp_bucket(vcol: Column, planes: int, dim: int) -> Column:
         plane = F.array(*[F.lit(srp_plane(p, d)) for d in range(dim)])
         bit = F.when(_dot(vcol, plane) >= 0, F.lit(1 << p)).otherwise(F.lit(0))
         bucket = bit if bucket is None else bucket + bit
-    return bucket
+    return F.when(vcol.isNotNull(), bucket)
 
 
 def cosine_topk_lsh(
@@ -215,7 +223,8 @@ def cosine_topk_lsh(
     Approximate by construction: neighbors hashing elsewhere are
     missed with probability ``1 - (1-θ/π)^planes``-ish per plane
     disagreement (the LSH trade). The dimension comes from the first
-    non-NULL corpus vector; with none the result is empty.
+    non-NULL corpus vector; with none the result is empty. A NULL
+    vector has a NULL bucket: it is neither a neighbor nor gets one.
     """
     if not 1 <= probes <= planes + 1:
         raise ValueError(f"probes must be in [1, planes+1], got {probes}")
@@ -352,10 +361,12 @@ def cosine_topk_ivf(
     volume drops from N to N/C per query, and with a cell-partitioned
     corpus layout the scan prunes to matching partitions. Recall is
     exact for neighbors in the probed cell (single-probe IVF
-    semantics).
+    semantics). NULL vectors are dropped on both sides.
     """
-    c = _normed(spread(corpus, id_col), id_col, vec_col, [cell_col]).alias("c")
-    q = _normed(queries, id_col, vec_col, [cell_col]).alias("q")
+    c = _normed(spread(corpus, id_col), id_col, vec_col, [cell_col])
+    q = _normed(queries, id_col, vec_col, [cell_col])
+    c = c.where(F.col("v").isNotNull()).alias("c")
+    q = q.where(F.col("v").isNotNull()).alias("q")
     scored = (
         F.broadcast(q)
         .join(
