@@ -112,6 +112,35 @@ def test_contract_registry_is_written_once():
     assert list(C.QUERIES) == list(C.REGISTRY) == list(C.ORACLES)
 
 
+def test_stream_twins_are_the_batch_code():
+    """The streaming twins run the batch code: the package has one
+    ``applyInPandasWithState`` call site (the stateful runner), and no
+    module under ``streaming/`` reaches into the sketch expressions
+    (``_hll_rank_ladder_sql``, ``_cm_cell``) — ``hll_stream`` and
+    ``countmin_stream`` return the batch sketches."""
+    import ast
+    import pathlib
+
+    import xarray_scipy_spark
+
+    root = pathlib.Path(xarray_scipy_spark.__file__).parent
+    calls, refs = [], []
+    for path in sorted(root.rglob("*.py")):
+        rel = path.relative_to(root).as_posix()
+        for node in ast.walk(ast.parse(path.read_text())):
+            if isinstance(node, ast.Call) and getattr(node.func, "attr", None) == (
+                "applyInPandasWithState"
+            ):
+                calls.append((rel, node.lineno))
+            name = getattr(node, "id", None) or getattr(node, "attr", None)
+            if isinstance(node, ast.alias):
+                name = node.name
+            if rel.startswith("streaming/") and name in ("_hll_rank_ladder_sql", "_cm_cell"):
+                refs.append((rel, name))
+    assert [rel for rel, _ in calls] == ["streaming/stateful.py"], calls
+    assert refs == []
+
+
 @pytest.mark.parametrize("name", sorted(ORACLES))
 def test_tail_queries_match_oracle(spark, name):
     """Every registered query, not only the 50 the driver checks this

@@ -764,6 +764,23 @@ def test_csd_and_coherence_match_numpy(spark, sine_df, sine_pdf):
     assert crows[tone_bin]["coherence"] > 0.99
 
 
+@pytest.mark.parametrize("hop", [0, -2])
+@pytest.mark.parametrize("op", ["welch", "istft", "csd", "coherence"])
+def test_framed_operators_reject_nonpositive_hop(sine_df, op, hop):
+    """``hop <= 0`` raises at call time: a zero step used to fail only
+    inside the worker, after task retries, and a negative one silently
+    reversed the framing (``istft`` wrote samples at negative ``t``)."""
+    kw = dict(by=["channel"], frame_len=32, hop=hop)
+    with pytest.raises(ValueError, match="hop"):
+        if op == "welch":
+            xss.welch(sine_df, dim="time", **kw)
+        elif op == "istft":
+            stft = xss.stft(sine_df, by=["channel"], dim="time", frame_len=32)
+            xss.istft(stft, **kw)
+        else:
+            getattr(xss, op)(sine_df, sine_df, dim="time", **kw)
+
+
 # ---------------- istft ----------------
 
 def test_istft_roundtrip_reconstructs(spark, sine_df, sine_pdf):
@@ -870,52 +887,45 @@ def test_find_peaks_filters_and_contract(spark):
     assert sorted(th["index"].tolist()) == [2]
 
 
-def test_correlate_matches_direct_and_conjugates(spark):
-    """correlate == convolve(x, conj(y[::-1])): check against the
-    direct O(n*m) lag sum for real inputs and conjugation for complex."""
-    import numpy as np
-    import pandas as pd
+@pytest.mark.parametrize("side", ["none", "im1", "im2", "both"])
+@pytest.mark.parametrize("mode", ["full", "same", "valid"])
+@pytest.mark.parametrize("op", ["fftconvolve", "correlate"])
+def test_correlate_matches_direct_and_conjugates(spark, op, mode, side):
+    """Through the operator, for every mode and complex side (real,
+    complex first or second input, both complex): fftconvolve equals
+    ``fftconvolve_1d(x, y)`` and correlate equals scipy's definition
+    ``fftconvolve_1d(x, conj(y[::-1]))``; full-mode correlate also
+    equals numpy's direct O(n*m) lag sum, which conjugates ``y``."""
+    from xarray_scipy_spark import operators as ops
+    from xarray_scipy_spark.kernels.dsp import fftconvolve_1d
 
     rng = np.random.default_rng(5)
-    x = rng.standard_normal(17)
-    y = rng.standard_normal(9)
-    rows = []
-    for j, v in enumerate(x):
-        rows.append(("a", j, float(v)))
-    df1 = spark.createDataFrame(rows, "ch string, t bigint, value double")
-    df2 = spark.createDataFrame(
-        [("a", j, float(v)) for j, v in enumerate(y)],
-        "ch string, t bigint, value double",
-    )
-    from xarray_scipy_spark.operators import correlate
-
-    got = (
-        correlate(df1, df2, by=["ch"], dim="t", mode="full")
-        .orderBy("idx")
-        .toPandas()
-    )
-    direct = np.correlate(x, y, mode="full")
-    np.testing.assert_allclose(got["value"].to_numpy(), direct, atol=1e-9)
-
-    # complex: second input must be conjugated (scipy semantics)
-    xi = rng.standard_normal(17)
-    yi = rng.standard_normal(9)
+    x, y = rng.standard_normal(17), rng.standard_normal(9)
+    xi, yi = rng.standard_normal(17), rng.standard_normal(9)
+    schema = "ch string, t bigint, value double, im double"
     d1 = spark.createDataFrame(
-        [("a", j, float(v), float(w)) for j, (v, w) in enumerate(zip(x, xi))],
-        "ch string, t bigint, value double, im double",
+        [("a", j, float(v), float(w)) for j, (v, w) in enumerate(zip(x, xi))], schema
     )
     d2 = spark.createDataFrame(
-        [("a", j, float(v), float(w)) for j, (v, w) in enumerate(zip(y, yi))],
-        "ch string, t bigint, value double, im double",
+        [("a", j, float(v), float(w)) for j, (v, w) in enumerate(zip(y, yi))], schema
     )
-    gotc = (
-        correlate(d1, d2, by=["ch"], dim="t", mode="full", im1="im", im2="im")
+    im1 = "im" if side in ("im1", "both") else None
+    im2 = "im" if side in ("im2", "both") else None
+    xs = x + 1j * xi if im1 else x
+    ys = y + 1j * yi if im2 else y
+    want = fftconvolve_1d(xs, np.conj(ys[::-1]) if op == "correlate" else ys, mode=mode)
+    got = (
+        getattr(ops, op)(d1, d2, by=["ch"], dim="t", mode=mode, im1=im1, im2=im2)
         .orderBy("idx")
         .toPandas()
     )
-    directc = np.correlate(x + 1j * xi, y + 1j * yi, mode="full")
-    np.testing.assert_allclose(gotc["re"].to_numpy(), directc.real, atol=1e-9)
-    np.testing.assert_allclose(gotc["im"].to_numpy(), directc.imag, atol=1e-9)
+    if side == "none":
+        np.testing.assert_allclose(got["value"].to_numpy(), want, atol=1e-9)
+    else:
+        np.testing.assert_allclose(got["re"].to_numpy(), want.real, atol=1e-9)
+        np.testing.assert_allclose(got["im"].to_numpy(), want.imag, atol=1e-9)
+    if op == "correlate" and mode == "full":
+        np.testing.assert_allclose(want, np.correlate(xs, ys, mode="full"), atol=1e-9)
 
 
 def _medfilt_ref(x: np.ndarray, k: int) -> np.ndarray:

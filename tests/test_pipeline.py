@@ -809,6 +809,36 @@ def test_jpeg_general_roundtrips_and_errors():
         decode_jpeg(bytes(payload))
 
 
+def test_truncated_jpeg_and_gif_raise_value_error():
+    """Every cut of a JPEG (baseline and progressive, 4:2:0) or GIF
+    payload either decodes or raises ``ValueError`` — never a bare
+    ``IndexError``/``struct.error`` from reading past the end, which a
+    per-row decode-error policy catching ``ValueError`` would miss."""
+    import numpy as np
+
+    from xarray_scipy_spark.pipeline.jpeg import decode_jpeg, encode_jpeg
+    from xarray_scipy_spark.pipeline.multimodal import (
+        decode_gif,
+        decode_gif_frames,
+        encode_gif,
+    )
+
+    rng = np.random.default_rng(0)
+    img = rng.integers(0, 256, (16, 16, 3), dtype=np.uint8)
+    cases = [
+        (encode_jpeg(img, subsample=True, progressive=prog), decode_jpeg)
+        for prog in (False, True)
+    ]
+    gif = encode_gif(img[..., 0][:8, :8])
+    cases += [(gif, decode_gif), (gif, decode_gif_frames)]
+    for payload, decode in cases:
+        for n in range(len(payload)):
+            try:
+                decode(payload[:n])
+            except ValueError:
+                pass
+
+
 def test_jpeg_through_image_decoder(spark):
     """image_decoder sniffs the FFD8 signature and routes through
     decode_jpeg inside the Arrow-batched decode_features plumbing."""

@@ -1,6 +1,7 @@
 """Time-column normalization: one definition of "epoch integer of a
 time column", shared by every relational query that does arithmetic on
-event time.
+event time, and one event-time prelude (:func:`with_event_time`) for
+every watermarked windowed operator.
 
 The driver's parquet stores time as ``timestamp[us]`` (verified with
 pyarrow at every sf), which Spark reads as TIMESTAMP_NTZ. DuckDB reads
@@ -21,7 +22,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
 
-__all__ = ["epoch_us", "event_time"]
+__all__ = ["epoch_us", "event_time", "with_event_time"]
 
 _NTZ_EPOCH = "TIMESTAMP_NTZ '1970-01-01 00:00:00'"
 
@@ -63,3 +64,12 @@ def event_time(df: DataFrame, col: str) -> Column:
     if dict(df.dtypes).get(col) == "timestamp":
         return F.col(col)
     return F.timestamp_micros(epoch_us(df, col))
+
+
+def with_event_time(df: DataFrame, col: str, watermark: str) -> DataFrame:
+    """``df`` plus the ``__event_time__`` column (:func:`event_time` of
+    ``col``), watermarked by ``watermark`` when ``df`` is a stream — the
+    prelude of every event-time windowed operator, which runs the same
+    plan on a static frame."""
+    work = df.withColumn("__event_time__", event_time(df, col))
+    return work.withWatermark("__event_time__", watermark) if work.isStreaming else work

@@ -10,7 +10,10 @@ Two physical strategies, chosen by the caller (the engine's only
   shuffle on the broadcast dims (``cogroup().applyInPandas``) and
   convolved per group with the FFT kernel. This is the general path and
   the scale path: both inputs stream through the same hash exchange, no
-  driver collection, no broadcast of either side.
+  driver collection, no broadcast of either side. :func:`correlate`
+  runs the same kernel with the second input reversed and conjugated
+  (scipy's ``correlate(x, y) = convolve(x, conj(y[::-1]))``), so the
+  two share one plan and one body (``_fft_pair``).
 - :func:`convolve_fir` — a small fixed FIR tap vector against a big
   signal: PURE SQL window dot-product (lag/lead), fully
   whole-stage-codegen'd, zero Python. At 100 TB this is the one to use
@@ -18,11 +21,12 @@ Two physical strategies, chosen by the caller (the engine's only
   neighbouring window ops.
 
 Mode semantics (reference signal.py:71-78): full -> n1+n2-1,
-same -> n1 (centered); 'valid' unsupported exactly like the reference
-(its ``_compute_output_size`` returns the NotImplemented constant).
-Like the reference (``exclude_dims=set(dims)`` at signal.py:99 drops
-the coords), the convolved dim has no coordinate column — callers can
-rebuild one with :func:`~xarray_scipy_spark.functions.coords.linear_coord`.
+same -> n1 (centered), valid -> max-min+1 (the fully-overlapped lags;
+the reference's own valid path is broken, its ``_compute_output_size``
+returns the NotImplemented constant). Like the reference
+(``exclude_dims=set(dims)`` at signal.py:99 drops the coords), the
+convolved dim has no coordinate column — callers can rebuild one with
+:func:`~xarray_scipy_spark.functions.coords.linear_coord`.
 
 The reference's ``method`` parameter quirk: accepted but silently
 ignored — execution is always FFT-based (signal.py:88-91 forwards only
@@ -48,6 +52,42 @@ __all__ = [
     "fftconvolve_nd",
     "convolve_fir",
 ]
+
+
+def _fft_pair(
+    df1, df2, *, by, dim, value1, value2, mode, keep_attrs, im1, im2, flip
+) -> DataFrame:
+    """The one cogrouped FFT kernel behind :func:`fftconvolve` and
+    :func:`correlate`: ``flip`` reverses and conjugates the second
+    input, the scipy definition ``correlate(x, y) = convolve(x,
+    conj(y[::-1]))``. A complex side (``im1``/``im2``) switches the
+    output to twin ``re``/``im`` columns."""
+    if mode not in ("full", "same", "valid"):
+        raise ValueError(f"mode must be full|same|valid, got {mode!r}")
+    cplx = im1 is not None or im2 is not None
+    n1 = 1 if im1 is None else 2
+
+    def kernel(coords1, *rest):
+        a1, a2 = rest[:n1], rest[n1 + 1 :]
+        x = a1[0] if im1 is None else a1[0] + 1j * a1[1]
+        y = a2[0] if im2 is None else a2[0] + 1j * a2[1]
+        out = fftconvolve_1d(x, np.conj(y[::-1]) if flip else y, mode=mode)
+        if cplx:
+            return {"re": out.real.astype(float), "im": out.imag.astype(float)}
+        return {"value": out}
+
+    return apply_cogrouped_kernel(
+        df1,
+        df2,
+        kernel,
+        by=by,
+        order1=dim,
+        order2=dim,
+        values1=[value1] + ([im1] if im1 is not None else []),
+        values2=[value2] + ([im2] if im2 is not None else []),
+        out_fields="re double, im double" if cplx else "value double",
+        keep=resolve_keep_attrs(df1, keep_attrs),
+    )
 
 
 def fftconvolve(
@@ -79,49 +119,9 @@ def fftconvolve(
     independently, and the output switches to twin ``re``/``im``
     columns whenever one is.
     """
-    if mode not in ("full", "same", "valid"):
-        raise ValueError(f"mode must be full|same|valid, got {mode!r}")
-    cplx = im1 is not None or im2 is not None
-
-    if cplx:
-
-        def kernel(coords1, *rest):
-            n1 = 2 if im1 is not None else 1
-            a1 = rest[:n1]
-            coords2 = rest[n1]
-            a2 = rest[n1 + 1 :]
-            x = a1[0] + 1j * a1[1] if im1 is not None else a1[0]
-            y = a2[0] + 1j * a2[1] if im2 is not None else a2[0]
-            out = fftconvolve_1d(x, y, mode=mode)
-            return {"re": out.real.astype(float), "im": out.imag.astype(float)}
-
-        return apply_cogrouped_kernel(
-            df1,
-            df2,
-            kernel,
-            by=by,
-            order1=dim,
-            order2=dim,
-            values1=[value1] + ([im1] if im1 is not None else []),
-            values2=[value2] + ([im2] if im2 is not None else []),
-            out_fields="re double, im double",
-            keep=resolve_keep_attrs(df1, keep_attrs),
-        )
-
-    def kernel(coords1, x, coords2, y):
-        return {"value": fftconvolve_1d(x, y, mode=mode)}
-
-    return apply_cogrouped_kernel(
-        df1,
-        df2,
-        kernel,
-        by=by,
-        order1=dim,
-        order2=dim,
-        values1=[value1],
-        values2=[value2],
-        out_fields="value double",
-        keep=resolve_keep_attrs(df1, keep_attrs),
+    return _fft_pair(
+        df1, df2, by=by, dim=dim, value1=value1, value2=value2, mode=mode,
+        keep_attrs=keep_attrs, im1=im1, im2=im2, flip=False,
     )
 
 
@@ -271,49 +271,9 @@ def correlate(
     Complex inputs via twin re/im columns (``im1``/``im2``); the second
     input is conjugated, as scipy does.
     """
-    if mode not in ("full", "same", "valid"):
-        raise ValueError(f"mode must be full|same|valid, got {mode!r}")
-    cplx = im1 is not None or im2 is not None
-
-    if cplx:
-
-        def kernel(coords1, *rest):
-            n1 = 2 if im1 is not None else 1
-            a1 = rest[:n1]
-            coords2 = rest[n1]
-            a2 = rest[n1 + 1 :]
-            x = a1[0] + 1j * a1[1] if im1 is not None else a1[0]
-            y = a2[0] + 1j * a2[1] if im2 is not None else a2[0]
-            out = fftconvolve_1d(x, np.conj(y[::-1]), mode=mode)
-            return {"re": out.real.astype(float), "im": out.imag.astype(float)}
-
-        return apply_cogrouped_kernel(
-            df1,
-            df2,
-            kernel,
-            by=by,
-            order1=dim,
-            order2=dim,
-            values1=[value1] + ([im1] if im1 is not None else []),
-            values2=[value2] + ([im2] if im2 is not None else []),
-            out_fields="re double, im double",
-            keep=resolve_keep_attrs(df1, keep_attrs),
-        )
-
-    def kernel(coords1, x, coords2, y):
-        return {"value": fftconvolve_1d(x, y[::-1], mode=mode)}
-
-    return apply_cogrouped_kernel(
-        df1,
-        df2,
-        kernel,
-        by=by,
-        order1=dim,
-        order2=dim,
-        values1=[value1],
-        values2=[value2],
-        out_fields="value double",
-        keep=resolve_keep_attrs(df1, keep_attrs),
+    return _fft_pair(
+        df1, df2, by=by, dim=dim, value1=value1, value2=value2, mode=mode,
+        keep_attrs=keep_attrs, im1=im1, im2=im2, flip=True,
     )
 
 

@@ -1,4 +1,5 @@
-"""Short-time spectral analysis: ``stft`` and ``welch``.
+"""Short-time spectral analysis: STFT, its inverse, and Welch-style
+spectral densities.
 
 Engine-native extensions (no direct reference analog — the reference
 stops at whole-series transforms, ``/root/reference/xarray_scipy/
@@ -21,6 +22,11 @@ Design notes (100 TB):
 - Welch averages periodograms inside the kernel, so its output is
   n_bins rows per series no matter how long the series — the classic
   map-side reduction of spectral mass.
+
+Each rule is written once: ``_hop`` (the ``frame_len // 2`` default,
+checked at call time), ``_frames`` (also used by the streaming
+``stft_stream``), ``_fold`` (the one-sided density fold) and
+``_cross`` (the cogrouped pass of ``csd`` and ``coherence``).
 """
 
 from __future__ import annotations
@@ -158,6 +164,31 @@ def _frames(x: np.ndarray, frame_len: int, hop: int) -> np.ndarray:
     return np.lib.stride_tricks.sliding_window_view(x, frame_len, axis=-1)[:, ::hop, :]
 
 
+def _hop(frame_len: int, hop: int | None) -> int:
+    """The frame step every framed operator uses: ``frame_len // 2`` by
+    default, checked at call time (a zero step fails only inside the
+    worker, and a negative one reverses the framing)."""
+    hop = frame_len // 2 if hop is None else hop
+    if hop < 1 or frame_len < 1:
+        raise ValueError("frame_len and hop must be >= 1")
+    return hop
+
+
+def _fold(n: int) -> np.ndarray:
+    """One-sided fold of an ``n``-point rfft: every bin counts twice
+    except DC and, for even ``n``, the Nyquist bin."""
+    fold = np.full(n // 2 + 1, 2.0)
+    fold[0] = 1.0
+    if n % 2 == 0:
+        fold[-1] = 1.0
+    return fold
+
+
+def _bin_frequency(n: int):
+    """Frequency of bin ``idx`` of an ``n``-point transform."""
+    return F.col("idx").cast("double") / (F.lit(float(n)) * F.col("delta"))
+
+
 def _overlap_add(
     seg: np.ndarray, taps: np.ndarray, hop: int, weight_eps: float
 ) -> dict[str, np.ndarray]:
@@ -208,9 +239,7 @@ def stft(
 
     Series shorter than one frame produce no rows.
     """
-    hop = frame_len // 2 if hop is None else hop
-    if hop < 1 or frame_len < 1:
-        raise ValueError("frame_len and hop must be >= 1")
+    hop = _hop(frame_len, hop)
     taps = window_taps(window, frame_len)
     values = list(values)
     n_bins = frame_len // 2 + 1
@@ -290,7 +319,7 @@ def istft(
     Output: ``[*by, t, <out>]`` with ``t`` the 0-based sample position
     of the original series.
     """
-    hop = frame_len // 2 if hop is None else hop
+    hop = _hop(frame_len, hop)
     taps = window_taps(window, frame_len)
     by = list(by)
 
@@ -361,9 +390,7 @@ def spectral_apply(
     total window weight ≤ ``weight_eps`` are dropped, and the tail
     beyond the last full frame was never framed.
     """
-    hop = frame_len // 2 if hop is None else hop
-    if hop < 1 or frame_len < 1:
-        raise ValueError("frame_len and hop must be >= 1")
+    hop = _hop(frame_len, hop)
     taps = window_taps(window, frame_len)
     n_bins = frame_len // 2 + 1
     by = list(by)
@@ -429,10 +456,9 @@ def welch(
     ``bin / (nfft·delta)``.
 
     ``detrend``: ``'constant'`` subtracts each frame's mean BEFORE
-    windowing (scipy's welch default); the engine default stays
-    ``None`` for now because the registered oracle pins the
-    no-detrend output — pass ``'constant'`` for strict scipy-default
-    parity (the default flips with the next contract rotation).
+    windowing (scipy's welch default). The engine default is ``None``
+    because the registered ``welch`` oracle pins the no-detrend
+    output; pass ``'constant'`` for strict scipy-default parity.
 
     ``power[k] = c_k * mean_over_frames |X_f[k]|^2 / sum(w^2)`` with the
     one-sided fold ``c_k = 2`` except DC and (even ``frame_len``) the
@@ -444,19 +470,13 @@ def welch(
     ``n_bins`` rows per series regardless of series length — the
     reduction happens map-side, before any further aggregation.
     """
-    hop = frame_len // 2 if hop is None else hop
+    hop = _hop(frame_len, hop)
     nfft = frame_len if nfft is None else int(nfft)
     if nfft < frame_len:
         raise ValueError(f"nfft ({nfft}) must be >= frame_len ({frame_len})")
     taps = window_taps(window, frame_len)
-    u = float(np.sum(taps**2))
+    scale = _fold(nfft) / float(np.sum(taps**2))
     values = list(values)
-    n_bins = nfft // 2 + 1
-    fold = np.full(n_bins, 2.0)
-    fold[0] = 1.0
-    if nfft % 2 == 0:
-        fold[-1] = 1.0
-
     if detrend not in (None, "constant"):
         raise ValueError(f"detrend must be None or 'constant', got {detrend!r}")
     if average not in ("mean", "median"):
@@ -482,7 +502,7 @@ def welch(
             pxx = np.median(per, axis=1) / bias
         else:
             pxx = per.mean(axis=1)
-        pxx = pxx * (fold / u)
+        pxx = pxx * scale
         return {"power": pxx.astype(float)}
 
     res = apply_series_kernel(
@@ -494,10 +514,9 @@ def welch(
         out_fields="power double",
         keep=resolve_keep_attrs(df, keep_attrs),
     )
-    return res.withColumn(
-        "frequency",
-        F.col("idx").cast("double") / (F.lit(float(nfft)) * F.col("delta")),
-    ).withColumn("psd", F.col("power") * F.col("delta"))
+    return res.withColumn("frequency", _bin_frequency(nfft)).withColumn(
+        "psd", F.col("power") * F.col("delta")
+    )
 
 
 def periodogram(
@@ -530,12 +549,7 @@ def periodogram(
         if detrend == "constant":
             x = x - x.mean(axis=1, keepdims=True)
         spec = np.fft.rfft(x, axis=-1)
-        n_bins = n // 2 + 1
-        fold = np.full(n_bins, 2.0)
-        fold[0] = 1.0
-        if n % 2 == 0:
-            fold[-1] = 1.0
-        return {"power": (spec.real**2 + spec.imag**2) * (fold / n)}
+        return {"power": (spec.real**2 + spec.imag**2) * (_fold(n) / n)}
 
     res = apply_series_kernel(
         df,
@@ -552,14 +566,42 @@ def periodogram(
     ).withColumn("psd", F.col("power") * F.col("delta"))
 
 
-def _framed_ffts(x, y, frame_len, hop, taps):
-    if len(x) != len(y):
-        raise ValueError(
-            f"csd/coherence need aligned equal-length series, got {len(x)}/{len(y)}"
-        )
-    fx = _frames(x[None, :], frame_len, hop)[0] * taps
-    fy = _frames(y[None, :], frame_len, hop)[0] * taps
-    return np.fft.rfft(fx, axis=-1), np.fft.rfft(fy, axis=-1)
+def _cross(
+    df1, df2, stat, out_fields, *, by, dim, frame_len, hop, window, value1, value2, keep=()
+):
+    """The cogrouped Welch pass shared by :func:`csd` and
+    :func:`coherence`: frame, window and rfft both aligned series, then
+    ``stat(fx, fy)`` reduces the ``(n_frames, n_bins)`` spectra
+    to the ``out_fields`` columns (none for a series shorter than one
+    frame). Adds the bin ``frequency`` column."""
+    hop = _hop(frame_len, hop)
+    taps = window_taps(window, frame_len)
+    names = [f.split()[0] for f in out_fields.split(",")]
+
+    def kernel(coords1, x, coords2, y):
+        if len(x) != len(y):
+            raise ValueError(
+                f"csd/coherence need aligned equal-length series, got {len(x)}/{len(y)}"
+            )
+        fx = np.fft.rfft(_frames(x[None, :], frame_len, hop)[0] * taps, axis=-1)
+        fy = np.fft.rfft(_frames(y[None, :], frame_len, hop)[0] * taps, axis=-1)
+        if fx.shape[0] == 0:
+            return {c: np.zeros(0) for c in names}
+        return stat(fx, fy)
+
+    res = apply_cogrouped_kernel(
+        df1,
+        df2,
+        kernel,
+        by=by,
+        order1=dim,
+        order2=dim,
+        values1=[value1],
+        values2=[value2],
+        out_fields=out_fields,
+        keep=keep,
+    )
+    return res.withColumn("frequency", _bin_frequency(frame_len))
 
 
 def csd(
@@ -581,38 +623,16 @@ def csd(
     for the literal density). Both inputs co-locate through ONE
     cogrouped shuffle; output is twin ``re``/``im`` per bin.
     """
-    hop = frame_len // 2 if hop is None else hop
-    taps = window_taps(window, frame_len)
-    u = float(np.sum(taps**2))
-    n_bins = frame_len // 2 + 1
-    fold = np.full(n_bins, 2.0)
-    fold[0] = 1.0
-    if frame_len % 2 == 0:
-        fold[-1] = 1.0
+    scale = _fold(frame_len) / float(np.sum(window_taps(window, frame_len) ** 2))
 
-    def kernel(coords1, x, coords2, y):
-        fx, fy = _framed_ffts(x, y, frame_len, hop, taps)
-        if fx.shape[0] == 0:
-            z = np.zeros(0)
-            return {"re": z, "im": z}
-        pxy = (np.conj(fx) * fy).mean(axis=0) * (fold / u)
+    def stat(fx, fy):
+        pxy = (np.conj(fx) * fy).mean(axis=0) * scale
         return {"re": pxy.real.astype(float), "im": pxy.imag.astype(float)}
 
-    res = apply_cogrouped_kernel(
-        df1,
-        df2,
-        kernel,
-        by=by,
-        order1=dim,
-        order2=dim,
-        values1=[value1],
-        values2=[value2],
-        out_fields="re double, im double",
+    return _cross(
+        df1, df2, stat, "re double, im double", by=by, dim=dim, frame_len=frame_len,
+        hop=hop, window=window, value1=value1, value2=value2,
         keep=resolve_keep_attrs(df1, keep_attrs),
-    )
-    return res.withColumn(
-        "frequency",
-        F.col("idx").cast("double") / (F.lit(float(frame_len)) * F.col("delta")),
     )
 
 
@@ -633,13 +653,7 @@ def coherence(
     energy and one-sided fold cancel, so γ² ∈ [0, 1] needs no scaling.
     Requires several frames per series (a single frame gives γ² ≡ 1).
     """
-    hop = frame_len // 2 if hop is None else hop
-    taps = window_taps(window, frame_len)
-
-    def kernel(coords1, x, coords2, y):
-        fx, fy = _framed_ffts(x, y, frame_len, hop, taps)
-        if fx.shape[0] == 0:
-            return {"coherence": np.zeros(0)}
+    def stat(fx, fy):
         pxx = (fx.real**2 + fx.imag**2).mean(axis=0)
         pyy = (fy.real**2 + fy.imag**2).mean(axis=0)
         pxy = (np.conj(fx) * fy).mean(axis=0)
@@ -647,18 +661,7 @@ def coherence(
         coh = np.where(denom > 0, np.abs(pxy) ** 2 / np.where(denom > 0, denom, 1.0), 0.0)
         return {"coherence": coh.astype(float)}
 
-    res = apply_cogrouped_kernel(
-        df1,
-        df2,
-        kernel,
-        by=by,
-        order1=dim,
-        order2=dim,
-        values1=[value1],
-        values2=[value2],
-        out_fields="coherence double",
-    )
-    return res.withColumn(
-        "frequency",
-        F.col("idx").cast("double") / (F.lit(float(frame_len)) * F.col("delta")),
+    return _cross(
+        df1, df2, stat, "coherence double", by=by, dim=dim, frame_len=frame_len,
+        hop=hop, window=window, value1=value1, value2=value2,
     )

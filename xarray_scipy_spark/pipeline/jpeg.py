@@ -213,9 +213,15 @@ def decode_jpeg(payload: bytes):
     processes share one marker loop and one scan decoder: a baseline
     scan is the full band 0..63 at Ah = Al = 0. Arithmetic coding and
     12-bit precision raise ``ValueError`` — decode is value-checked
-    downstream.
+    downstream — and so does a truncated or malformed payload.
     """
-    buf = bytes(payload)
+    try:
+        return _decode_jpeg(bytes(payload))
+    except (IndexError, struct.error) as e:  # read past the end of a cut payload
+        raise ValueError(f"truncated or corrupt JPEG payload: {e}") from e
+
+
+def _decode_jpeg(buf: bytes):
     if buf[:2] != b"\xff\xd8":
         raise ValueError("not a JPEG payload (missing SOI)")
     pos = 2

@@ -439,72 +439,76 @@ def _gif_images(payload: bytes):
     interlace. Lazy: yields the screen ``(width, height, background
     rgb)`` first, then one ``(left, top, rgb, opaque, disposal)`` per
     image with ``rgb`` its own ``(h, w, 3)`` uint8 rectangle and
-    ``opaque`` the ``(h, w)`` mask of non-transparent pixels."""
+    ``opaque`` the ``(h, w)`` mask of non-transparent pixels. A
+    truncated or malformed payload raises ``ValueError``."""
     buf = bytes(payload)
     if buf[:6] not in (b"GIF87a", b"GIF89a"):
         raise ValueError("not a GIF payload")
-    sw, sh, flags, bg_idx, _ar = struct.unpack("<HHBBB", buf[6:13])
-    pos = 13
-    gct = None
-    if flags & 0x80:
-        n = 2 << (flags & 7)
-        gct = np.frombuffer(buf[pos : pos + 3 * n], dtype=np.uint8).reshape(n, 3)
-        pos += 3 * n
-    ok_bg = gct is not None and bg_idx < len(gct)
-    yield sw, sh, gct[bg_idx] if ok_bg else np.zeros(3, dtype=np.uint8)
-    transparent = None
-    disposal = 0
-    while pos < len(buf):
-        b0 = buf[pos]
-        pos += 1
-        if b0 == 0x3B:  # trailer
-            break
-        if b0 == 0x21:  # extension: label + sub-blocks
-            label = buf[pos]
-            pos += 1
-            if label == 0xF9 and buf[pos] >= 4:  # graphic control extension
-                gflags = buf[pos + 1]
-                disposal = (gflags >> 2) & 0x07
-                transparent = buf[pos + 4] if gflags & 1 else None
-            while buf[pos]:
-                pos += 1 + buf[pos]
-            pos += 1
-            continue
-        if b0 != 0x2C:
-            raise ValueError(f"unexpected GIF block 0x{b0:02x}")
-        left, top, w, h, iflags = struct.unpack("<HHHHB", buf[pos : pos + 9])
-        pos += 9
-        table = gct
-        if iflags & 0x80:
-            n = 2 << (iflags & 7)
-            table = np.frombuffer(buf[pos : pos + 3 * n], dtype=np.uint8).reshape(n, 3)
+    try:
+        sw, sh, flags, bg_idx, _ar = struct.unpack("<HHBBB", buf[6:13])
+        pos = 13
+        gct = None
+        if flags & 0x80:
+            n = 2 << (flags & 7)
+            gct = np.frombuffer(buf[pos : pos + 3 * n], dtype=np.uint8).reshape(n, 3)
             pos += 3 * n
-        if table is None:
-            raise ValueError("GIF frame without a color table")
-        min_code = buf[pos]
-        pos += 1
-        data = bytearray()
-        while buf[pos]:
-            data += buf[pos + 1 : pos + 1 + buf[pos]]
-            pos += 1 + buf[pos]
-        pos += 1
-        idx = np.asarray(
-            _lzw_decode(bytes(data), min_code, w * h), dtype=np.int64
-        )[: w * h].reshape(h, w)
-        if iflags & 0x40:
-            # GIF interlace: rows arrive in four passes (8/8 from 0,
-            # 8/8 from 4, 4/4 from 2, 2/2 from 1) — reorder
-            order = np.concatenate(
-                [np.arange(st, h, sp) for st, sp in ((0, 8), (4, 8), (2, 4), (1, 2))]
-            )
-            deinter = np.empty_like(idx)
-            deinter[order] = idx
-            idx = deinter
-        opaque = np.ones((h, w), bool) if transparent is None else idx != transparent
-        yield left, top, table[idx], opaque, disposal
+        ok_bg = gct is not None and bg_idx < len(gct)
+        yield sw, sh, gct[bg_idx] if ok_bg else np.zeros(3, dtype=np.uint8)
         transparent = None
         disposal = 0
+        while pos < len(buf):
+            b0 = buf[pos]
+            pos += 1
+            if b0 == 0x3B:  # trailer
+                break
+            if b0 == 0x21:  # extension: label + sub-blocks
+                label = buf[pos]
+                pos += 1
+                if label == 0xF9 and buf[pos] >= 4:  # graphic control extension
+                    gflags = buf[pos + 1]
+                    disposal = (gflags >> 2) & 0x07
+                    transparent = buf[pos + 4] if gflags & 1 else None
+                while buf[pos]:
+                    pos += 1 + buf[pos]
+                pos += 1
+                continue
+            if b0 != 0x2C:
+                raise ValueError(f"unexpected GIF block 0x{b0:02x}")
+            left, top, w, h, iflags = struct.unpack("<HHHHB", buf[pos : pos + 9])
+            pos += 9
+            table = gct
+            if iflags & 0x80:
+                n = 2 << (iflags & 7)
+                table = np.frombuffer(buf[pos : pos + 3 * n], dtype=np.uint8).reshape(n, 3)
+                pos += 3 * n
+            if table is None:
+                raise ValueError("GIF frame without a color table")
+            min_code = buf[pos]
+            pos += 1
+            data = bytearray()
+            while buf[pos]:
+                data += buf[pos + 1 : pos + 1 + buf[pos]]
+                pos += 1 + buf[pos]
+            pos += 1
+            idx = np.asarray(
+                _lzw_decode(bytes(data), min_code, w * h), dtype=np.int64
+            )[: w * h].reshape(h, w)
+            if iflags & 0x40:
+                # GIF interlace: rows arrive in four passes (8/8 from 0,
+                # 8/8 from 4, 4/4 from 2, 2/2 from 1) — reorder
+                order = np.concatenate(
+                    [np.arange(st, h, sp) for st, sp in ((0, 8), (4, 8), (2, 4), (1, 2))]
+                )
+                deinter = np.empty_like(idx)
+                deinter[order] = idx
+                idx = deinter
+            opaque = np.ones((h, w), bool) if transparent is None else idx != transparent
+            yield left, top, table[idx], opaque, disposal
+            transparent = None
+            disposal = 0
 
+    except (IndexError, struct.error) as e:  # read past the end of a cut payload
+        raise ValueError(f"truncated or corrupt GIF payload: {e}") from e
 
 def decode_gif(payload: bytes):
     """GIF87a/89a decode of the FIRST image -> ``((h, w, 3) uint8, w,

@@ -404,13 +404,11 @@ def windowed_constraints(
     Output: ``(window_start, constraint, kind, passed, n_violations,
     n_rows)``, one row per (window, constraint).
     """
-    from ..functions.timeutil import event_time
+    from ..functions.timeutil import with_event_time
 
     if not constraints:
         raise ValueError("windowed_constraints needs at least one constraint")
-    work = sdf.withColumn("__event_time__", event_time(sdf, dim))
-    if work.isStreaming:
-        work = work.withWatermark("__event_time__", watermark)
+    work = with_event_time(sdf, dim, watermark)
     aggs = [F.count(F.lit(1)).alias("_n")]
     names: list[tuple[str, str]] = []
     for i, spec in enumerate(constraints):

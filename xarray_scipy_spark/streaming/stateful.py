@@ -1,5 +1,5 @@
-"""Stateful streaming IIR filtering: ``sosfilt`` over an unbounded
-stream with per-series filter-state carry.
+"""Stateful streaming twins of batch operators: ``sosfilt``, ``stft``
+and ``gapfill`` over an unbounded stream with per-series state carry.
 
 Why this exists (SURVEY.md §7 "hard parts"): the batch ``sosfilt``
 inherits the reference's ``allow_rechunk`` concession (whole series in
@@ -8,32 +8,78 @@ For a series longer than memory — or one that never ends — the cascaded
 biquad recursion must instead run *incrementally*: filter each arriving
 chunk with the section states (``zi``) left by the previous chunk. The
 kernel already returns its final state (``kernels.dsp.sosfilt_1d``);
-this module wires that handoff through Structured Streaming's
-``applyInPandasWithState`` so Spark manages state storage, recovery and
-group routing. The result is sample-for-sample identical to the batch
-operator applied to the fully materialized series (asserted in
-``tests/test_streaming.py``), provided each series' rows arrive in
-nondecreasing ``dim`` order across micro-batches — the usual
+the STFT carries its partial trailing frame and gapfill its last
+observation the same way. Each twin is one ``step`` function over the
+batch code (``sosfilt_1d``, ``spectral._frames``, the gapfill
+interpolation); :func:`_run_stateful` runs all three through Structured
+Streaming's ``applyInPandasWithState`` so Spark manages state storage,
+recovery and group routing. Each result is sample-for-sample identical
+to the batch operator applied to the fully materialized series
+(asserted in ``tests/test_streaming.py``), provided each series' rows
+arrive in nondecreasing ``dim`` order across micro-batches — the usual
 event-time-ordered ingestion contract.
 
-At scale: state per key is O(n_sections × 2) doubles — thousands of
-bytes per million-key state store; the per-batch work is the same
-vectorized kernel as batch mode. No shuffle beyond the groupBy exchange
-each micro-batch.
+At scale: state per key is O(n_sections × 2) doubles for ``sosfilt``,
+under one frame for ``stft`` and four scalars for ``gapfill``; the
+per-batch work is the same vectorized kernel as batch mode. No shuffle
+beyond the groupBy exchange each micro-batch.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator, Sequence
+from collections.abc import Callable, Iterator, Sequence
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from ..core import _ddl_of
 from ..kernels.dsp import sosfilt_1d
+from ..operators.spectral import _frames, _hop, window_taps
 
-__all__ = ["sosfilt_stream", "stft_stream"]
+__all__ = ["sosfilt_stream", "stft_stream", "gapfill_stream"]
+
+
+def _run_stateful(
+    sdf: DataFrame,
+    *,
+    by: Sequence[str],
+    dim: str,
+    out_fields: str,
+    state_ddl: str,
+    step: Callable[[pd.DataFrame, tuple | None], tuple[dict | None, tuple]],
+) -> DataFrame:
+    """Run ``step`` once per series and micro-batch, with Spark-managed
+    state (``applyInPandasWithState``, append mode, no timeout).
+
+    ``step(pdf, state)`` gets the series' rows of this micro-batch as
+    one frame sorted by ``dim`` and the state tuple the previous batch
+    left (``None`` on the first). It returns ``(columns, new_state)``:
+    ``columns`` is a dict of output arrays in ``out_fields`` order, or
+    ``None`` to emit nothing. The key columns ``by`` lead every output
+    row, typed as in ``sdf``.
+    """
+    by = list(by)
+
+    def fn(key, pdfs: Iterator[pd.DataFrame], state: GroupState) -> Iterator[pd.DataFrame]:
+        # Arrow chunks within one micro-batch arrive unordered; the
+        # recursions need the batch's full sample sequence, so gather
+        # and sort once (same memory bound as one batch's worth of the
+        # series — the incremental point is across batches).
+        pdf = pd.concat(list(pdfs), ignore_index=True).sort_values(dim, kind="mergesort")
+        cols, new_state = step(pdf, state.get if state.exists else None)
+        state.update(new_state)
+        if cols is not None:
+            yield pd.DataFrame({**dict(zip(by, key)), **cols})
+
+    return sdf.groupBy(*by).applyInPandasWithState(
+        fn,
+        outputStructType=", ".join(f for f in (_ddl_of(sdf, by), out_fields) if f),
+        stateStructType=state_ddl,
+        outputMode="append",
+        timeoutConf=GroupStateTimeout.NoTimeout,
+    )
 
 
 def sosfilt_stream(
@@ -61,45 +107,18 @@ def sosfilt_stream(
     if sos.shape[1] != 6:
         raise ValueError(f"sos must be (n_sections, 6), got {sos.shape}")
     n_sections = sos.shape[0]
-    by = list(by)
 
-    by_fields = {f.name: f.dataType.simpleString() for f in sdf.schema.fields}
-    out_ddl = ", ".join(
-        [f"{c} {by_fields[c]}" for c in by]
-        + [f"{dim} {by_fields[dim]}", "value double", "idx bigint"]
-    )
-    state_ddl = "zi array<double>, n_seen bigint"
-
-    def fn(
-        key, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            zi_flat, n_seen = state.get
-            zi = np.asarray(zi_flat, dtype=float).reshape(n_sections, 2)
-        else:
-            zi = np.zeros((n_sections, 2))
-            n_seen = 0
-        # Arrow chunks within one micro-batch arrive unordered; the
-        # recursion needs the batch's full sample sequence, so gather
-        # and sort once (same memory bound as one batch's worth of the
-        # series — the incremental point is across batches).
-        pdf = pd.concat(list(pdfs), ignore_index=True)
-        pdf = pdf.sort_values(dim, kind="mergesort")
+    def step(pdf, state):
+        zi_flat, n_seen = state or (np.zeros(2 * n_sections), 0)
         x = pdf[value].to_numpy(dtype=float)
-        y, zi = sosfilt_1d(sos, x, zi=zi)
-        out = pd.DataFrame({c: pdf[c].to_numpy() for c in by})
-        out[dim] = pdf[dim].to_numpy()
-        out["value"] = y
-        out["idx"] = n_seen + np.arange(len(x), dtype=np.int64)
-        state.update((zi.ravel().tolist(), n_seen + len(x)))
-        yield out
+        y, zi = sosfilt_1d(sos, x, zi=np.asarray(zi_flat, dtype=float).reshape(n_sections, 2))
+        idx = n_seen + np.arange(len(x), dtype=np.int64)
+        cols = {dim: pdf[dim].to_numpy(), "value": y, "idx": idx}
+        return cols, (zi.ravel().tolist(), n_seen + len(x))
 
-    return sdf.groupBy(*by).applyInPandasWithState(
-        fn,
-        outputStructType=out_ddl,
-        stateStructType=state_ddl,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return _run_stateful(
+        sdf, by=by, dim=dim, out_fields=f"{_ddl_of(sdf, [dim])}, value double, idx bigint",
+        state_ddl="zi array<double>, n_seen bigint", step=step,
     )
 
 
@@ -130,82 +149,35 @@ def stft_stream(
     ``frame`` the global frame index since the stream began and
     ``frame_time`` the coordinate of the frame's first sample.
     """
-    from ..operators.spectral import window_taps
-
-    hop = frame_len // 2 if hop is None else int(hop)
-    if hop < 1 or frame_len < 1:
-        raise ValueError("frame_len and hop must be >= 1")
+    hop = _hop(frame_len, hop)
     taps = window_taps(window, frame_len)
     n_bins = frame_len // 2 + 1
-    by = list(by)
-    by_fields = {f.name: f.dataType.simpleString() for f in sdf.schema.fields}
-    out_ddl = ", ".join(
-        [f"{c} {by_fields[c]}" for c in by]
-        + [
-            "frame bigint",
-            "bin bigint",
-            "re double",
-            "im double",
-            f"frame_time {by_fields[dim]}",
-        ]
-    )
-    state_ddl = "carry array<double>, carry_t array<double>, frames bigint"
 
-    def fn(
-        key, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            cv, ct, frames_emitted = state.get
-            carry = np.asarray(cv, dtype=float)
-            carry_t = np.asarray(ct, dtype=float)
-        else:
-            carry = np.zeros(0)
-            carry_t = np.zeros(0)
-            frames_emitted = 0
-        pdf = pd.concat(list(pdfs), ignore_index=True).sort_values(
-            dim, kind="mergesort"
-        )
-        a = np.concatenate([carry, pdf[value].to_numpy(dtype=float)])
-        at = np.concatenate([carry_t, pdf[dim].to_numpy(dtype=float)])
-        n_new = max(0, (len(a) - frame_len) // hop + 1) if len(a) >= frame_len else 0
-        if n_new:
-            fr = (
-                np.lib.stride_tricks.sliding_window_view(a, frame_len)[
-                    : (n_new - 1) * hop + 1 : hop
-                ]
-                * taps
-            )
-            spec = np.fft.rfft(fr, axis=-1)
-            out = pd.DataFrame(
-                {
-                    "frame": np.repeat(
-                        frames_emitted + np.arange(n_new, dtype=np.int64), n_bins
-                    ),
-                    "bin": np.tile(np.arange(n_bins, dtype=np.int64), n_new),
-                    "re": spec.real.ravel(),
-                    "im": spec.imag.ravel(),
-                    "frame_time": np.repeat(at[: n_new * hop : hop], n_bins),
-                }
-            )
-            for c, v in zip(by, key):
-                out.insert(0, c, v)
-            keep_from = n_new * hop
-            frames_emitted += n_new
-        else:
-            out = None
-            keep_from = 0
-        carry = a[keep_from:]
-        carry_t = at[keep_from:]
-        state.update((carry.tolist(), carry_t.tolist(), frames_emitted))
-        if out is not None:
-            yield out[by + ["frame", "bin", "re", "im", "frame_time"]]
+    def step(pdf, state):
+        carry, carry_t, frames = state or ([], [], 0)
+        a = np.concatenate([np.asarray(carry, dtype=float), pdf[value].to_numpy(dtype=float)])
+        at = np.concatenate([np.asarray(carry_t, dtype=float), pdf[dim].to_numpy(dtype=float)])
+        fr = _frames(a[None, :], frame_len, hop)[0] * taps
+        n_new = fr.shape[0]
+        # the next frame starts at n_new·hop: keep the samples from there
+        new_state = (a[n_new * hop :].tolist(), at[n_new * hop :].tolist(), frames + n_new)
+        if not n_new:
+            return None, new_state
+        spec = np.fft.rfft(fr, axis=-1)
+        cols = {
+            "frame": np.repeat(frames + np.arange(n_new, dtype=np.int64), n_bins),
+            "bin": np.tile(np.arange(n_bins, dtype=np.int64), n_new),
+            "re": spec.real.ravel(),
+            "im": spec.imag.ravel(),
+            "frame_time": np.repeat(at[: n_new * hop : hop], n_bins),
+        }
+        return cols, new_state
 
-    return sdf.groupBy(*by).applyInPandasWithState(
-        fn,
-        outputStructType=out_ddl,
-        stateStructType=state_ddl,
-        outputMode="append",
-        timeoutConf="NoTimeout",
+    return _run_stateful(
+        sdf, by=by, dim=dim,
+        out_fields="frame bigint, bin bigint, re double, im double, "
+        f"frame_time {dict(sdf.dtypes)[dim]}",
+        state_ddl="carry array<double>, carry_t array<double>, frames bigint", step=step,
     )
 
 
@@ -243,39 +215,22 @@ def gapfill_stream(
     """
     if method not in ("linear", "ffill"):
         raise ValueError(f"method must be 'linear' or 'ffill', got {method!r}")
-    step = float(dt)
-    if step <= 0:
+    spacing = float(dt)
+    if spacing <= 0:
         raise ValueError(f"dt must be positive, got {dt!r}")
-    by = list(by)
-    by_fields = {f.name: f.dataType.simpleString() for f in sdf.schema.fields}
-    out_ddl = ", ".join(
-        [f"{c} {by_fields[c]}" for c in by] + [f"{dim} double", f"{value} double"]
-    )
-    state_ddl = "anchor double, prev_t double, prev_v double, k bigint"
     linear = method == "linear"
 
-    def fn(
-        key, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            anchor, prev_t, prev_v, k = state.get
-        else:
-            anchor = None
-        pdf = pd.concat(list(pdfs), ignore_index=True).sort_values(
-            dim, kind="mergesort"
-        )
-        ts = pdf[dim].to_numpy(dtype=float)
-        vs = pdf[value].to_numpy(dtype=float)
+    def step(pdf, state):
+        anchor, prev_t, prev_v, k = state or (None, None, None, 0)
         out_t: list[float] = []
         out_v: list[float] = []
-        for t, v in zip(ts, vs):
+        for t, v in zip(pdf[dim].to_numpy(dtype=float), pdf[value].to_numpy(dtype=float)):
             if anchor is None:
-                anchor, prev_t, prev_v, k = t, t, v, 0
+                anchor, prev_t, prev_v, k = t, t, v, 1
                 out_t.append(t)
                 out_v.append(v)
-                k = 1
                 continue
-            g = anchor + k * step
+            g = anchor + k * spacing
             while g <= t:
                 if g == prev_t:
                     out_v.append(prev_v)
@@ -287,19 +242,12 @@ def gapfill_stream(
                     out_v.append(prev_v)
                 out_t.append(g)
                 k += 1
-                g = anchor + k * step
+                g = anchor + k * spacing
             prev_t, prev_v = t, v
-        state.update((anchor, prev_t, prev_v, k))
-        if out_t:
-            out = pd.DataFrame({dim: out_t, value: out_v})
-            for c, kv in zip(by, key):
-                out.insert(0, c, kv)
-            yield out[by + [dim, value]]
+        cols = {dim: out_t, value: out_v} if out_t else None
+        return cols, (anchor, prev_t, prev_v, k)
 
-    return sdf.groupBy(*by).applyInPandasWithState(
-        fn,
-        outputStructType=out_ddl,
-        stateStructType=state_ddl,
-        outputMode="append",
-        timeoutConf="NoTimeout",
+    return _run_stateful(
+        sdf, by=by, dim=dim, out_fields=f"{dim} double, {value} double",
+        state_ddl="anchor double, prev_t double, prev_v double, k bigint", step=step,
     )

@@ -14,7 +14,12 @@ Batch/stream parity: the same groupBy(window(...)) plan executes on a
 static DataFrame, and the contract's DuckDB oracle reproduces it with
 epoch bucket arithmetic — the streaming result over a bounded source
 (AvailableNow) is identical to the batch aggregate of the materialized
-input.
+input. Every event-time operator here (and
+``pipeline.quality.windowed_constraints``) starts from one prelude,
+:func:`~xarray_scipy_spark.functions.timeutil.with_event_time`. The
+sketch twins are the batch code itself: :func:`hll_stream` returns
+``sketches.hll_registers`` and :func:`countmin_stream` returns
+``sketches.countmin_sketch``, both native running aggregates.
 """
 
 from __future__ import annotations
@@ -23,9 +28,30 @@ from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, functions as F
 
-from ..functions.timeutil import event_time
+from ..functions.timeutil import event_time, with_event_time
+from ..pipeline.sketches import countmin_sketch, hll_registers
 
-__all__ = ["windowed_stats", "session_stats", "stream_distinct"]
+__all__ = [
+    "windowed_stats",
+    "session_stats",
+    "stream_distinct",
+    "hll_stream",
+    "countmin_stream",
+    "ohlc_stream",
+    "latest_stream",
+]
+
+
+def _stats(value: str) -> list:
+    """The per-window ``n``, ``sum``, ``avg``, ``min`` and ``max`` of
+    :func:`windowed_stats` and :func:`session_stats`."""
+    return [
+        F.count(F.lit(1)).alias("n"),
+        F.sum(value).alias("sum"),
+        F.avg(value).alias("avg"),
+        F.min(value).alias("min"),
+        F.max(value).alias("max"),
+    ]
 
 
 def windowed_stats(
@@ -54,29 +80,17 @@ def windowed_stats(
     semantics); the watermark only takes effect on streams.
     """
     by = list(by)
-    work = sdf.withColumn("__event_time__", event_time(sdf, dim))
-    if work.isStreaming:
-        work = work.withWatermark("__event_time__", watermark)
+    work = with_event_time(sdf, dim, watermark)
     win = (
         F.window("__event_time__", window, slide)
         if slide
         else F.window("__event_time__", window)
     )
-    agg = work.groupBy(win.alias("w"), *by).agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(value).alias("sum"),
-        F.avg(value).alias("avg"),
-        F.min(value).alias("min"),
-        F.max(value).alias("max"),
-    )
+    agg = work.groupBy(win.alias("w"), *by).agg(*_stats(value))
     return agg.select(
         *by,
         F.col("w.start").cast("long").alias("window_start"),
-        "n",
-        "sum",
-        "avg",
-        "min",
-        "max",
+        "n", "sum", "avg", "min", "max",
     )
 
 
@@ -107,27 +121,15 @@ def session_stats(
     µs, the window bounds), ``n``, ``sum``, ``avg``, ``min``, ``max``.
     """
     by = list(by)
-    work = sdf.withColumn("__event_time__", event_time(sdf, dim))
-    if work.isStreaming:
-        work = work.withWatermark("__event_time__", watermark)
-    agg = work.groupBy(
-        F.session_window("__event_time__", gap).alias("w"), *by
-    ).agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(value).alias("sum"),
-        F.avg(value).alias("avg"),
-        F.min(value).alias("min"),
-        F.max(value).alias("max"),
+    work = with_event_time(sdf, dim, watermark)
+    agg = work.groupBy(F.session_window("__event_time__", gap).alias("w"), *by).agg(
+        *_stats(value)
     )
     return agg.select(
         *by,
         F.unix_micros(F.col("w.start")).alias("session_start"),
         F.unix_micros(F.col("w.end")).alias("session_end"),
-        "n",
-        "sum",
-        "avg",
-        "min",
-        "max",
+        "n", "sum", "avg", "min", "max",
     )
 
 
@@ -192,28 +194,13 @@ def hll_stream(
     (streaming queries cannot chain a second aggregation; the fold is
     a cheap batch read of ≤2^p rows per group).
 
-    The bucket/rank expressions are the exact ones
-    :func:`~xarray_scipy_spark.pipeline.sketches.hll_state` uses, so a
-    stream's final register table over a bounded source equals the
+    This IS :func:`~xarray_scipy_spark.pipeline.sketches.hll_registers`
+    (the registers :func:`~xarray_scipy_spark.pipeline.sketches.
+    hll_state` folds): its ``spread`` probe leaves a stream as it is, so
+    a stream's final register table over a bounded source equals the
     batch sketch row-for-row — pinned by test.
     """
-    from ..pipeline.sketches import _hll_rank_ladder_sql
-
-    if p not in (4, 8, 12):
-        raise ValueError(f"p must be 4, 8, or 12, got {p}")
-    by = list(by)
-    nhex = 15 - p // 4
-    return (
-        sdf.select(*by, F.col(col).cast("string").alias("_hv"))
-        .selectExpr(
-            *by,
-            f"CAST(conv(substring(md5(_hv), {nhex + 1}, {p // 4}), 16, 10) AS BIGINT) AS bucket",
-            f"CAST(conv(substring(md5(_hv), 1, {nhex}), 16, 10) AS BIGINT) AS hi",
-        )
-        .selectExpr(*by, "bucket", _hll_rank_ladder_sql(p) + " AS rank")
-        .groupBy(*by, "bucket")
-        .agg(F.max("rank").alias("mj"))
-    )
+    return hll_registers(sdf, col, by=list(by), p=p)
 
 
 def countmin_stream(
@@ -230,29 +217,11 @@ def countmin_stream(
     incrementally for free. State is bounded at ``depth × width`` rows
     forever; point estimates come from
     :func:`~xarray_scipy_spark.pipeline.sketches.countmin_lookup` over
-    the emitted cells. Cell indexes are the exact expressions
-    :func:`~xarray_scipy_spark.pipeline.sketches.countmin_sketch`
-    uses, so the final stream state over a bounded source equals the
-    batch sketch row-for-row — pinned by test."""
-    from pyspark.sql import functions as FF
-
-    from ..pipeline.hashes import _c
-    from ..pipeline.sketches import _cm_cell
-
-    if depth < 1 or width < 2:
-        raise ValueError("need depth >= 1, width >= 2")
-    w = FF.lit(1).cast("bigint") if weight is None else _c(weight).cast("bigint")
-    pairs = FF.array(
-        *[
-            FF.struct(FF.lit(j).alias("j"), _cm_cell(col, j, width).alias("cell"))
-            for j in range(depth)
-        ]
-    )
-    return (
-        sdf.select(FF.explode(pairs).alias("p"), w.alias("w"))
-        .groupBy(FF.col("p.j").alias("j"), FF.col("p.cell").alias("cell"))
-        .agg(FF.sum("w").alias("cnt"))
-    )
+    the emitted cells. This IS
+    :func:`~xarray_scipy_spark.pipeline.sketches.countmin_sketch` run
+    on the stream, so the final stream state over a bounded source
+    equals the batch sketch row-for-row — pinned by test."""
+    return countmin_sketch(sdf, col, depth=depth, width=width, weight=weight)
 
 
 def ohlc_stream(
@@ -283,9 +252,7 @@ def ohlc_stream(
     ``open``, ``high``, ``low``, ``close``, ``mean``.
     """
     by = list(by)
-    work = sdf.withColumn("__event_time__", event_time(sdf, dim))
-    if work.isStreaming:
-        work = work.withWatermark("__event_time__", watermark)
+    work = with_event_time(sdf, dim, watermark)
     v = F.col(value).cast("double")
     agg = work.groupBy(F.window("__event_time__", bar).alias("w"), *by).agg(
         F.count(F.lit(1)).alias("n"),
@@ -328,9 +295,7 @@ def latest_stream(
     """
     keys = list(keys)
     values = list(values)
-    work = sdf.withColumn("__event_time__", event_time(sdf, dim))
-    if work.isStreaming:
-        work = work.withWatermark("__event_time__", watermark)
+    work = with_event_time(sdf, dim, watermark)
     payload = F.struct(F.col(dim).alias(dim), *[F.col(c) for c in values])
     agg = work.groupBy(*keys).agg(
         F.max_by(payload, F.col("__event_time__")).alias("_w")
