@@ -145,3 +145,104 @@ def test_core_primitives_match_pandas_groupby(spark, key_type):
     want = _cogrouped_oracle(pdf1, pdf2, pair_convolve)
     assert sorted(set(_canon(want)["k"])) == [1, 2, 3]
     pd.testing.assert_frame_equal(_canon(got), _canon(want), rtol=1e-12)
+
+
+def test_runners_match_local_pandas(spark):
+    """The three runners against local pandas: ``map_batches`` over a
+    frame with empty partitions (an empty batch emits nothing), a
+    self-cogroup through ``map_groups`` (both sides share lineage, so
+    the right side needs fresh attributes), a cogroup key on the right
+    side only (emits nothing), and ``sum_batches`` against numpy sums
+    with NULL rows present (skipped, and not counted)."""
+    from xarray_scipy_spark.core import map_batches, map_groups, sum_batches
+
+    rng = np.random.default_rng(7)
+    pdf = pd.DataFrame({"k": rng.integers(0, 3, 40), "x": rng.standard_normal(40)})
+    # 8 partitions for 3 keys: at least 5 are empty
+    df = spark.createDataFrame(pdf).repartition(8, "k")
+
+    def per_batch(b):
+        return {"n": [len(b)], "s": [b["x"].sum()]}
+
+    got = map_batches(df, per_batch, {"n": "bigint", "s": "double"}).toPandas()
+    assert (got["n"] > 0).all() and got["n"].sum() == len(pdf)
+    assert got["s"].sum() == pytest.approx(pdf["x"].sum(), rel=1e-12)
+
+    class Batches:
+        """Hands map_batches' batch function an empty batch, which an
+        empty Spark partition does not send."""
+
+        def mapInPandas(self, run, schema):
+            return [len(out) for out in run(iter([pdf.iloc[:0], pdf]))]
+
+    assert map_batches(Batches(), per_batch, {"n": "bigint", "s": "double"}) == [1]
+
+    def doubled(b):
+        keep = b["x"].to_numpy() > 0
+        return {"k": b["k"].to_numpy()[keep], "y": 2 * b["x"].to_numpy()[keep]}
+
+    got = map_batches(df, doubled, {"k": "bigint", "y": "double"}).toPandas()
+    want = pd.DataFrame(doubled(pdf))
+    pd.testing.assert_frame_equal(
+        got.sort_values(["k", "y"]).reset_index(drop=True),
+        want.sort_values(["k", "y"]).reset_index(drop=True),
+    )
+
+    def pair(left, right):
+        return {
+            "k": left["k"].to_numpy()[:1],
+            "n_left": [len(left)],
+            "n_right": [len(right)],
+            "x_right": [right["x"].sum()],
+        }
+
+    fields = {"k": "bigint", "n_left": "bigint", "n_right": "bigint", "x_right": "double"}
+    only_right = spark.createDataFrame(pd.DataFrame({"k": [3, 3], "x": [1.0, 2.0]}))
+    for right in (df, df.unionByName(only_right)):
+        # the projection prunes the output, which on a shared lineage
+        # would prune the right input down to the key
+        got = map_groups([df, right], ["k"], pair, fields).select("k", "n_right", "x_right")
+        got = got.toPandas().sort_values("k").reset_index(drop=True)
+        rpdf = right.toPandas()
+        want = pd.DataFrame(
+            [pair(g, rpdf[rpdf["k"] == k]) for k, g in pdf.groupby("k")]
+        ).explode(list(fields))[list(got.columns)]
+        pd.testing.assert_frame_equal(got, want.astype(got.dtypes.to_dict()).reset_index(drop=True))
+
+    rows = [(float(a), [float(a), float(b)]) for a, b in rng.standard_normal((30, 2))]
+    nulls = [(None, [1.0, 2.0]), (1.0, None)]
+    sdf = spark.createDataFrame(rows + nulls, "a double, v array<double>").repartition(3)
+
+    def moments(b):
+        v = np.array(b["v"].tolist(), dtype=float)
+        return {"a": b["a"].sum(), "v": v.sum(axis=0), "vv": v.T @ v}
+
+    sums = sum_batches(sdf, moments)
+    v = np.array([r[1] for r in rows])
+    assert sums["n"] == len(rows)
+    assert sums["a"] == pytest.approx([sum(r[0] for r in rows)], rel=1e-12)
+    np.testing.assert_allclose(sums["v"], v.sum(axis=0), rtol=1e-12)
+    np.testing.assert_allclose(sums["vv"], (v.T @ v).ravel(), rtol=1e-12)
+    assert sum_batches(sdf.where("a IS NULL"), moments) is None
+
+
+def test_python_worker_calls_only_in_core():
+    """One Python-worker boundary: ``applyInPandas``, ``mapInPandas``,
+    ``applyInArrow`` and ``mapInArrow`` are called in ``core.py`` only.
+    ``contract.py``'s three fixture and probe calls are pinned by count;
+    ``stateful``'s ``applyInPandasWithState`` is another name, pinned by
+    ``test_stream_twins_are_the_batch_code``."""
+    import ast
+    import pathlib
+    from collections import Counter
+
+    import xarray_scipy_spark
+
+    root = pathlib.Path(xarray_scipy_spark.__file__).parent
+    names = {"applyInPandas", "mapInPandas", "applyInArrow", "mapInArrow"}
+    calls = Counter()
+    for path in sorted(root.rglob("*.py")):
+        for node in ast.walk(ast.parse(path.read_text())):
+            if isinstance(node, ast.Call) and getattr(node.func, "attr", None) in names:
+                calls[path.relative_to(root).as_posix()] += 1
+    assert calls == {"core.py": 3, "contract.py": 3}, calls

@@ -3295,3 +3295,76 @@ def test_split_assign_clustered_rejects_cluster_id_input(spark):
     pairs = spark.createDataFrame([(0, 1)], "a_id long, b_id long")
     with pytest.raises(ValueError, match="cluster_id"):
         pl.split_assign_clustered(docs, pairs)
+
+
+@pytest.mark.parametrize("fit", ["embedding_moments", "fit_ridge", "fit_logistic"])
+def test_driver_reductions_skip_null_rows(spark, fit):
+    """The three driver-side reductions skip a row with a NULL in any
+    column they read and count only the rows used: the fit with NULL
+    rows present equals the fit without them."""
+    import numpy as np
+
+    import xarray_scipy_spark.pipeline as pl
+
+    rng = np.random.default_rng(17)
+    X = rng.standard_normal((80, 2))
+    y = (X @ [1.5, -2.0] + rng.standard_normal(80) > 0).astype(float)
+    rows = [(float(a), float(b), [float(a), float(b)], float(v)) for (a, b), v in zip(X, y)]
+    # each NULL row has a NULL vector and a NULL feature or label
+    nulls = [(None, 1.0, None, 1.0), (0.5, 0.5, None, None)]
+    schema = "f0 double, f1 double, vec array<double>, y double"
+    clean = spark.createDataFrame(rows, schema).repartition(3)
+    dirty = spark.createDataFrame(rows + nulls, schema).repartition(3)
+    if fit == "embedding_moments":
+        (n, *got), (n0, *want) = (pl.embedding_moments(d) for d in (dirty, clean))
+        assert n == n0 == len(rows)
+    else:
+        got, want = (getattr(pl, fit)(d, ["f0", "f1"], "y") for d in (dirty, clean))
+    for g, w in zip(got, want):
+        np.testing.assert_allclose(g, w, rtol=1e-9, atol=1e-12)
+
+
+def test_kmeans_cells_null_vector_has_no_row(spark):
+    """A NULL vector takes no part in the initial centroids or the
+    means, and gets no output row."""
+    import numpy as np
+
+    import xarray_scipy_spark.pipeline as pl
+
+    rng = np.random.default_rng(19)
+    vecs = rng.standard_normal((60, 4)) + rng.integers(0, 3, 60)[:, None] * 3.0
+    rows = [(i + 1, [float(x) for x in v]) for i, v in enumerate(vecs)]
+    schema = "vec_id bigint, embedding array<double>"
+    clean = spark.createDataFrame(rows, schema)
+    # id 0 sorts first, so it would be an initial centroid
+    dirty = spark.createDataFrame([(0, None)] + rows, schema)
+    got, want = (
+        pl.kmeans_cells(d, k=3, iters=3).toPandas().sort_values("vec_id").reset_index(drop=True)
+        for d in (dirty, clean)
+    )
+    pd.testing.assert_frame_equal(got, want)
+
+
+def test_pack_sequences_null_size_keeps_its_row(spark):
+    """A chunk with a NULL ``n_tokens`` keeps its row with NULL pack
+    columns; the other chunks pack as if it were not there."""
+    import numpy as np
+
+    import xarray_scipy_spark.pipeline as pl
+
+    sizes = np.random.default_rng(23).integers(50, 900, 120)
+    pdf = pd.DataFrame({"chunk_id": range(120), "n_tokens": sizes})
+    clean = spark.createDataFrame(pdf.drop(index=7), "chunk_id bigint, n_tokens bigint")
+    dirty = spark.createDataFrame(
+        [(int(i), None if i == 7 else int(s)) for i, s in zip(pdf["chunk_id"], sizes)],
+        "chunk_id bigint, n_tokens bigint",
+    )
+    got, want = (
+        pl.pack_sequences(d, budget=2048, partitions=4).toPandas().set_index("chunk_id")
+        for d in (dirty, clean)
+    )
+    assert len(got) == 120
+    assert got.loc[7].isna().all()
+    pd.testing.assert_frame_equal(
+        got.drop(index=7).sort_index(), want.sort_index(), check_dtype=False
+    )

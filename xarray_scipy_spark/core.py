@@ -47,6 +47,16 @@ Spark does not fix: pass a tie-break column for a deterministic result.
 NULL samples reach the kernel as NaN and propagate like NaN samples. The
 cogrouped path pairs series by key with inner alignment: a key on one
 side only is dropped, and a NULL key never pairs (as in a SQL join).
+
+One boundary: every pandas-UDF call in the package goes through three
+runners here. :func:`map_batches` maps Arrow batches (an empty batch
+emits nothing); :func:`sum_batches` reduces per-batch partials on the
+driver and skips rows with a NULL in any input column; :func:`map_groups`
+runs one grouped or two cogrouped frames (an empty first input emits
+nothing). Each takes its output fields as ``{name: ddl type}`` and builds
+the frame from the ``{name: values}`` its function returns, so a change
+to how Python workers are called (Arrow in place of pandas, counters,
+error columns) is a change to these three functions.
 """
 
 from __future__ import annotations
@@ -109,9 +119,96 @@ def _bucket_expr(spark, by: Sequence[str], n_buckets: int):
     return F.element_at(arr, idx)
 
 
-def _ddl_of(df: DataFrame, cols: Sequence[str]) -> str:
-    by_field = {f.name: f.dataType.simpleString() for f in df.schema.fields}
-    return ", ".join(f"{c} {by_field[c]}" for c in cols)
+def _fields_of(df: DataFrame, cols: Sequence[str]) -> dict[str, str]:
+    types = dict(df.dtypes)
+    return {c: types[c] for c in cols}
+
+
+def _ddl(fields: dict[str, str]) -> str:
+    return ", ".join(f"{n} {t}" for n, t in fields.items())
+
+
+def _parse_ddl(ddl: str) -> dict[str, str]:
+    return dict(f.split(None, 1) for f in ddl.split(","))
+
+
+def map_batches(
+    df: DataFrame, fn: Callable[[pd.DataFrame], dict], fields: dict[str, str]
+) -> DataFrame:
+    """Run ``fn`` over ``df`` one Arrow batch at a time (``mapInPandas``).
+
+    ``fn(pdf)`` returns ``{name: values}`` for the ``fields``
+    (``{name: ddl type}``) columns, any number of rows; an empty input
+    batch emits nothing."""
+
+    def run(batches):
+        for pdf in batches:
+            if len(pdf):
+                yield pd.DataFrame(fn(pdf), copy=False)
+
+    return df.mapInPandas(run, schema=_ddl(fields))
+
+
+def sum_batches(
+    df: DataFrame, fn: Callable[[pd.DataFrame], dict]
+) -> dict[str, np.ndarray] | None:
+    """Sum ``fn``'s per-batch partials over ``df`` on the driver.
+
+    Rows with a NULL in any column of ``df`` are skipped. ``fn(pdf)``
+    returns ``{name: array}``; each batch sends one ``array<double>``
+    row per name (flattened), and the result maps each name to its
+    ``np.sum`` over the batches, plus ``"n"``, the rows used. ``None``
+    when no row is used."""
+
+    def partials(pdf: pd.DataFrame) -> dict:
+        parts = {"n": len(pdf), **fn(pdf)}
+        return {
+            "name": list(parts),
+            "v": [np.ravel(v).astype(float).tolist() for v in parts.values()],
+        }
+
+    live = df.where(" AND ".join(f"`{c}` IS NOT NULL" for c in df.columns))
+    rows = map_batches(live, partials, {"name": "string", "v": "array<double>"}).collect()
+    if not rows:
+        return None
+    parts: dict[str, list] = {}
+    for r in rows:
+        parts.setdefault(r["name"], []).append(r["v"])
+    sums = {name: np.sum(np.asarray(v), axis=0) for name, v in parts.items()}
+    sums["n"] = int(sums["n"][0])
+    return sums
+
+
+def map_groups(
+    frames: Sequence[DataFrame],
+    by: Sequence[str],
+    fn: Callable[..., dict],
+    fields: dict[str, str],
+) -> DataFrame:
+    """Run ``fn`` once per group of ``by`` over one frame
+    (``groupBy().applyInPandas``) or per cogroup of two
+    (``cogroup().applyInPandas``, ``fn(left, right)``).
+
+    ``fn`` returns ``{name: values}`` for the ``fields`` columns; a
+    group whose first input is empty (a key on the right side only)
+    emits nothing. The right frame is re-projected with fresh attribute
+    IDs: when both inputs share lineage (self-convolution, two filters
+    of one cache), Spark's self-join dedup otherwise prunes the right
+    cogroup input down to the key."""
+    ddl = _ddl(fields)
+
+    def frame(*pdfs: pd.DataFrame) -> pd.DataFrame:
+        return pd.DataFrame(fn(*pdfs), copy=False) if len(pdfs[0]) else pd.DataFrame()
+
+    if len(frames) == 1:
+        return frames[0].groupBy(*by).applyInPandas(lambda pdf: frame(pdf), schema=ddl)
+    left, right = frames
+    right = right.select(*[F.col(c).alias(c) for c in right.columns])
+    return (
+        left.groupBy(*by)
+        .cogroup(right.groupBy(*by))
+        .applyInPandas(lambda lpdf, rpdf: frame(lpdf, rpdf), schema=ddl)
+    )
 
 
 def resolve_keep_attrs(df: DataFrame, keep_attrs: bool | None) -> list[str]:
@@ -179,8 +276,8 @@ def _padded(
     return [np.where(mask, v[gather], 0.0) for v in vals], mask
 
 
-def _assemble(src, carry, starts, grid, sel, m, outs, emit_idx) -> pd.DataFrame:
-    """A bucket's output frame, the one place output rows are built.
+def _assemble(src, carry, starts, grid, sel, m, outs, emit_idx) -> dict[str, np.ndarray]:
+    """A bucket's output columns, the one place output rows are built.
 
     ``src`` is the sorted bucket, ``starts`` its series' first rows and
     ``grid`` their :func:`_grid` attrs. ``sel`` (index array or slice)
@@ -190,31 +287,32 @@ def _assemble(src, carry, starts, grid, sel, m, outs, emit_idx) -> pd.DataFrame:
     each kernel output name to its values, flattened in that order."""
     total = int(m.sum())
     rep = np.repeat(starts[sel], m)
-    res = pd.DataFrame(index=np.arange(total))
-    for c in carry:
-        res[c] = src[c].to_numpy()[rep]
+    res = {c: src[c].to_numpy()[rep] for c in carry}
     if emit_idx:
         res["idx"] = np.arange(total, dtype=np.int64) - np.repeat(np.cumsum(m) - m, m)
-    for name, col in outs.items():
-        res[name] = col
+    res.update(outs)
     for name, attr in zip(("n_in", "offset", "delta"), grid):
         res[name] = np.repeat(attr[sel], m)
     return res
 
 
-def _output_schema(
+def _output_fields(
     df: DataFrame, by: list[str], keep: list[str], out_fields: str, emit_idx: bool
-) -> tuple[str, list[str]]:
-    """The UDF's DDL ``[*by, *keep, idx?, *out_fields, n_in, offset,
+) -> tuple[dict[str, str], list[str]]:
+    """The UDF's fields ``[*by, *keep, idx?, *out_fields, n_in, offset,
     delta]`` and the kernel output column names."""
-    idx_field = "idx bigint, " if emit_idx else ""
-    carry_ddl = (_ddl_of(df, by + keep) + ", ") if by or keep else ""
-    schema = f"{carry_ddl}{idx_field}{out_fields}, {GROUP_ATTR_FIELDS}"
-    return schema, [f.strip().split()[0] for f in out_fields.split(",")]
+    outs = _parse_ddl(out_fields)
+    fields = {
+        **_fields_of(df, by + keep),
+        **({"idx": "bigint"} if emit_idx else {}),
+        **outs,
+        **_parse_ddl(GROUP_ATTR_FIELDS),
+    }
+    return fields, list(outs)
 
 
 def _grouped_buckets(frames: Sequence[DataFrame], by: list[str], n_buckets: int) -> list:
-    """Tag every frame with the same bucket column and group on it.
+    """Tag every frame with the same bucket column, to be grouped on it.
 
     With no broadcast dims (the reference's scalar / nchannels=None
     shape, tests/test_signal.py:36-38) the whole frame is ONE series —
@@ -227,13 +325,11 @@ def _grouped_buckets(frames: Sequence[DataFrame], by: list[str], n_buckets: int)
     bucket column satisfies the grouping distribution, so no second
     exchange is inserted, and cogrouped sides stay co-located."""
     bucket = _bucket_expr(frames[0].sparkSession, by, n_buckets) if by else F.lit(0)
-    grouped = []
+    tagged = []
     for f in frames:
         f = f.withColumn(_BUCKET, bucket)
-        if by:
-            f = f.repartition(n_buckets, F.col(_BUCKET))
-        grouped.append(f.groupBy(_BUCKET))
-    return grouped
+        tagged.append(f.repartition(n_buckets, F.col(_BUCKET)) if by else f)
+    return tagged
 
 
 # Per-bucket input-volume target for the kernel exchange width
@@ -345,11 +441,11 @@ def apply_series_kernel(
     # otherwise ride the shuffle for nothing
     needed = list(dict.fromkeys(by + keep + order + list(values)))
     df = df.select(*needed)
-    schema, out_names = _output_schema(df, by, keep, out_fields, emit_idx)
+    fields, out_names = _output_fields(df, by, keep, out_fields, emit_idx)
     n_buckets = buckets if buckets is not None else _default_buckets(df)
     ragged = getattr(kernel, "batch_ragged", False)
 
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
+    def run(pdf: pd.DataFrame) -> dict[str, np.ndarray]:
         pdf = pdf.sort_values(by + order, kind="mergesort")
         starts, ends = _series_bounds(pdf, by)
         grid = _grid(_coord_floats(pdf[order[0]]), starts, ends)
@@ -383,8 +479,7 @@ def apply_series_kernel(
             cols, emit_idx,
         )
 
-    (grouped,) = _grouped_buckets([df], by, n_buckets)
-    return grouped.applyInPandas(run, schema=schema)
+    return map_groups(_grouped_buckets([df], by, n_buckets), [_BUCKET], run, fields)
 
 
 def apply_cogrouped_kernel(
@@ -423,12 +518,8 @@ def apply_cogrouped_kernel(
     keep = list(keep)
     # prune both sides to what the kernel reads (see apply_series_kernel)
     df1 = df1.select(*dict.fromkeys(by + keep + order1 + list(values1)))
-    # Fresh attribute IDs on the right side: when both inputs share lineage
-    # (self-convolution, two filters of one cache), Spark's self-join
-    # dedup otherwise prunes the right cogroup input down to the key.
-    needed2 = list(dict.fromkeys(by + order2 + list(values2)))
-    df2 = df2.select(*[F.col(c).alias(c) for c in needed2])
-    schema, out_names = _output_schema(df1, by, keep, out_fields, emit_idx)
+    df2 = df2.select(*dict.fromkeys(by + order2 + list(values2)))
+    fields, out_names = _output_fields(df1, by, keep, out_fields, emit_idx)
     n_buckets = buckets if buckets is not None else _default_buckets(df1)
 
     def keys(pdf: pd.DataFrame, starts: np.ndarray) -> list[tuple | None]:
@@ -437,7 +528,7 @@ def apply_cogrouped_kernel(
         null = k.isna().any(axis=1)
         return [None if na else tuple(r) for na, r in zip(null, k.to_numpy(object))]
 
-    def run(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
+    def run(left: pd.DataFrame, right: pd.DataFrame) -> dict[str, np.ndarray]:
         left = left.sort_values(by + order1, kind="mergesort")
         right = right.sort_values(by + order2, kind="mergesort")
         ls, le = _series_bounds(left, by)
@@ -470,5 +561,4 @@ def apply_cogrouped_kernel(
             np.asarray(ms, dtype=np.int64), cols, emit_idx,
         )
 
-    left, right = _grouped_buckets([df1, df2], by, n_buckets)
-    return left.cogroup(right).applyInPandas(run, schema=schema)
+    return map_groups(_grouped_buckets([df1, df2], by, n_buckets), [_BUCKET], run, fields)

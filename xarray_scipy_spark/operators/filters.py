@@ -39,11 +39,13 @@ from pyspark.sql import DataFrame
 
 from ..core import (
     _BUCKET,
-    _ddl_of,
+    _ddl,
     _default_buckets,
+    _fields_of,
     _padded,
     _series_bounds,
     apply_series_kernel,
+    map_groups,
     resolve_keep_attrs,
 )
 from ..functions.coords import linear_coord, restore_coord_dtype
@@ -234,17 +236,10 @@ def sosfilt_chunked(
         .persist()
     )
     max_chunk = dfc.agg(F.max("__chunk__").alias("m")).collect()[0]["m"]
+    fields = {**_fields_of(df, by + [dim]), "idx": "bigint", "value": "double"}
     if max_chunk is None:
         dfc.unpersist()
-        return df.sparkSession.createDataFrame(
-            [], f"{(_ddl_of(df, by) + ', ') if by else ''}{dim} {dict(df.dtypes)[dim]}, "
-            "idx bigint, value double"
-        )
-    by_ddl = (_ddl_of(df, by) + ", ") if by else ""
-    out_schema = (
-        f"{by_ddl}{dim} {dict(df.dtypes)[dim]}, idx bigint, value double, "
-        "zf array<double>"
-    )
+        return df.sparkSession.createDataFrame([], _ddl(fields))
     n_buckets = buckets if buckets is not None else _default_buckets(df)
     bucket = F.pmod(F.xxhash64(*by), F.lit(n_buckets)) if by else F.lit(0)
 
@@ -253,17 +248,7 @@ def sosfilt_chunked(
     # 0). Both sides group on the same xxhash64 bucket, so the state
     # rows land on the worker that already holds the series — the
     # handoff never touches the driver.
-    def run(pdf: pd.DataFrame, st_pdf: pd.DataFrame) -> pd.DataFrame:
-        if not len(pdf):
-            return pd.DataFrame(
-                {
-                    **{k: pd.Series(dtype=object) for k in by},
-                    dim: pd.Series(dtype=object),
-                    "idx": pd.Series(dtype="int64"),
-                    "value": pd.Series(dtype="float64"),
-                    "zf": pd.Series(dtype=object),
-                }
-            )
+    def run(pdf: pd.DataFrame, st_pdf: pd.DataFrame) -> dict:
         # a NULL bigint key arrives as NaN and NaN != NaN: map every
         # NULL to None so two NULL keys are one series, as in
         # core._series_bounds
@@ -290,16 +275,15 @@ def sosfilt_chunked(
         zf_col = np.full(len(pdf), None, dtype=object)
         for r, z in zip(ends - 1, zf):
             zf_col[r] = z.ravel().tolist()
-        res = pd.DataFrame({k: pdf[k].to_numpy() for k in by})
-        res[dim] = pdf[dim].to_numpy()
-        res["idx"] = pdf["__pos__"].to_numpy()
-        res["value"] = y[mask]
-        res["zf"] = zf_col
-        return res
+        return {
+            **{c: pdf[c].to_numpy() for c in by + [dim]},
+            "idx": pdf["__pos__"].to_numpy(),
+            "value": y[mask],
+            "zf": zf_col,
+        }
 
-    spark = df.sparkSession
-    state_ddl = f"{by_ddl}zf array<double>"
-    state_df = spark.createDataFrame([], state_ddl)
+    zf = {"zf": "array<double>"}
+    state_df = df.sparkSession.createDataFrame([], _ddl({**_fields_of(df, by), **zf}))
     parts: list[DataFrame] = []
     for c in range(int(max_chunk) + 1):
         left = dfc.filter(F.col("__chunk__") == c).withColumn(_BUCKET, bucket)
@@ -307,12 +291,7 @@ def sosfilt_chunked(
         # eager localCheckpoint: materializes this pass (the recursion
         # is sequential anyway) and truncates the lineage so pass c+1
         # plans against stored partitions, not a c-deep DAG
-        out = (
-            left.groupBy(_BUCKET)
-            .cogroup(right.groupBy(_BUCKET))
-            .applyInPandas(run, schema=out_schema)
-            .localCheckpoint()
-        )
+        out = map_groups([left, right], [_BUCKET], run, {**fields, **zf}).localCheckpoint()
         state_df = out.filter("zf IS NOT NULL").select(*by, "zf")
         parts.append(out.select(*by, dim, "idx", "value"))
     # every pass is already materialized (eager checkpoints), so the

@@ -18,7 +18,7 @@ from collections.abc import Sequence
 import numpy as np
 from pyspark.sql import DataFrame
 
-from ..core import apply_cogrouped_kernel, resolve_keep_attrs
+from ..core import _fields_of, apply_cogrouped_kernel, map_groups, resolve_keep_attrs
 from ..kernels.peaks import peak_widths as _peak_widths_np
 
 __all__ = ["find_peaks", "peak_prominences", "peak_widths"]
@@ -180,13 +180,11 @@ def find_peaks(
     if distance is not None:
         if distance < 1:
             raise ValueError(f"distance must be >= 1, got {distance}")
-        import pandas as pd
-
         dist = int(distance)
         val_col = value
 
-        def sel(pdf: pd.DataFrame) -> pd.DataFrame:
-            pdf = pdf.sort_values("index").reset_index(drop=True)
+        def sel(pdf):
+            pdf = pdf.sort_values("index")
             idx = pdf["index"].to_numpy()
             h = pdf[val_col].to_numpy()
             keep = np.ones(len(idx), dtype=bool)
@@ -201,9 +199,9 @@ def find_peaks(
                 while k < len(idx) and idx[k] - idx[j] < dist:
                     keep[k] = False
                     k += 1
-            return pdf[keep]
+            return {c: pdf[c].to_numpy()[keep] for c in pdf.columns}
 
-        peaks = peaks.groupBy(*by).applyInPandas(sel, peaks.schema)
+        peaks = map_groups([peaks], by, sel, _fields_of(peaks, peaks.columns))
     out = peaks.withColumn("peak", F.row_number().over(wp) - 1).select(
         *by, "peak", "index", dim, value
     )

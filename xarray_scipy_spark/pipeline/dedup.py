@@ -30,6 +30,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window, functions as F
 
+from ..core import map_groups
 from .hashes import (
     MINHASH_P,
     bucket,
@@ -779,25 +780,16 @@ def _blocked_allpairs_cosine(
     right = vb.join(
         F.broadcast(pairs_meta), vb["blk"] == pairs_meta["pb"]
     ).select("pid", id_col, "v")
-    # fresh attribute IDs on the right: both cogroup inputs share the
-    # (vb ⋈ pairs_meta) lineage, which trips the ambiguous-self-join
-    # check (same workaround as core.apply_cogrouped_kernel)
-    right = right.select(*[F.col(c).alias(c) for c in right.columns])
 
-    out_schema = f"a_id {id_type}, b_id {id_type}, cos_sim double"
-
-    def score(lpdf: pd.DataFrame, rpdf: pd.DataFrame) -> pd.DataFrame:
-        empty = pd.DataFrame({"a_id": [], "b_id": [], "cos_sim": []})
-        if lpdf.empty or rpdf.empty:
-            return empty
+    def score(lpdf: pd.DataFrame, rpdf: pd.DataFrame) -> dict:
+        if rpdf.empty:
+            return {"a_id": [], "b_id": [], "cos_sim": []}
         la = np.stack(lpdf["v"].to_numpy())
         rb = np.stack(rpdf["v"].to_numpy())
         la = la / np.linalg.norm(la, axis=1, keepdims=True)
         rb = rb / np.linalg.norm(rb, axis=1, keepdims=True)
         sims = la @ rb.T
         ia, ib = np.nonzero(sims >= threshold)
-        if not len(ia):
-            return empty
         aid = lpdf[id_col].to_numpy()[ia]
         bid = rpdf[id_col].to_numpy()[ib]
         keep = aid != bid
@@ -807,15 +799,10 @@ def _blocked_allpairs_cosine(
         # unique on the normalized pair drops the mirror
         pairs = np.stack([lo, hi], axis=1)
         _, first = np.unique(pairs, axis=0, return_index=True)
-        return pd.DataFrame(
-            {"a_id": lo[first], "b_id": hi[first], "cos_sim": s[first]}
-        )
+        return {"a_id": lo[first], "b_id": hi[first], "cos_sim": s[first]}
 
-    return (
-        left.groupBy("pid")
-        .cogroup(right.groupBy("pid"))
-        .applyInPandas(lambda l, r: score(l, r), schema=out_schema)
-    )
+    fields = {"a_id": id_type, "b_id": id_type, "cos_sim": "double"}
+    return map_groups([left, right], ["pid"], score, fields)
 
 
 def duplicated_ngram_spans(

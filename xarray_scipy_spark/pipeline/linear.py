@@ -23,7 +23,13 @@ from collections.abc import Sequence
 import numpy as np
 from pyspark.sql import DataFrame, functions as F
 
+from ..core import sum_batches
+
 __all__ = ["fit_logistic", "fit_ridge", "grouped_ols", "predict_linear"]
+
+
+def _labelled(df: DataFrame, feature_cols: list[str], label_col: str) -> DataFrame:
+    return df.select(*feature_cols, F.col(label_col).cast("double").alias("_label"))
 
 
 def fit_ridge(
@@ -36,11 +42,12 @@ def fit_ridge(
 ):
     """Fit ``label ≈ features · β + b`` by ridge normal equations.
 
-    One ``mapInPandas`` pass emits per-batch partials of
-    ``(n, Σx, Σy, XᵀX, Xᵀy)``; the driver combine and the
+    One Arrow-batch pass (``core.sum_batches``) emits per-batch
+    partials of ``(n, Σx, Σy, XᵀX, Xᵀy)``; the driver combine and the
     ``(d × d)`` solve are closed over the feature count, never the
     corpus. ``l2`` regularizes the (centered) Gram matrix —
-    the intercept is never penalized.
+    the intercept is never penalized. Rows with a NULL feature or label
+    are skipped, and ``n`` counts the rows used.
 
     Returns ``(beta, intercept)``: a length-d numpy vector and a
     float.
@@ -52,39 +59,16 @@ def fit_ridge(
     if l2 < 0:
         raise ValueError(f"l2 must be >= 0, got {l2}")
 
-    def partial(batches):
-        import pandas as pd
+    def partial(pdf):
+        x = pdf[feature_cols].to_numpy(dtype=float)
+        y = pdf["_label"].to_numpy(dtype=float)
+        return {"sx": x.sum(axis=0), "sy": y.sum(), "g": x.T @ x, "xy": x.T @ y}
 
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            x = pdf[feature_cols].to_numpy(dtype=float)
-            y = pdf["_label"].to_numpy(dtype=float)
-            yield pd.DataFrame(
-                {
-                    "n": [len(x)],
-                    "sx": [x.sum(axis=0).tolist()],
-                    "sy": [float(y.sum())],
-                    "g": [(x.T @ x).ravel().tolist()],
-                    "xy": [(x.T @ y).tolist()],
-                }
-            )
-
-    rows = (
-        df.select(*feature_cols, F.col(label_col).cast("double").alias("_label"))
-        .mapInPandas(
-            partial,
-            "n bigint, sx array<double>, sy double, g array<double>, xy array<double>",
-        )
-        .collect()
-    )
-    if not rows:
+    sums = sum_batches(_labelled(df, feature_cols, label_col), partial)
+    if sums is None:
         raise ValueError("cannot fit on an empty frame")
-    n = sum(r["n"] for r in rows)
-    sx = np.sum([np.asarray(r["sx"]) for r in rows], axis=0)
-    sy = sum(r["sy"] for r in rows)
-    g = np.sum([np.asarray(r["g"]) for r in rows], axis=0).reshape(d, d)
-    xy = np.sum([np.asarray(r["xy"]) for r in rows], axis=0)
+    n, sx, sy, xy = sums["n"], sums["sx"], sums["sy"][0], sums["xy"]
+    g = sums["g"].reshape(d, d)
     if fit_intercept:
         mx = sx / n
         my = sy / n
@@ -135,12 +119,14 @@ def fit_logistic(
     keep vs drop) on the pipeline's own feature columns.
 
     Iteration shape: the current coefficients ship to the executors as
-    plain floats; ONE ``mapInPandas`` pass returns the Newton partials
-    ``(XᵀWX, Xᵀ(y − p), loss)`` — d² + d + 1 doubles per partition —
-    and the driver takes the damped Newton step closed over d. Usually
-    converges in < 10 iterations; each is exactly one corpus pass (the
-    k-means/BPE driver-loop precedent: iteration STATE is a handful of
-    floats, data never concentrates).
+    plain floats; ONE Arrow-batch pass (``core.sum_batches``) returns
+    the Newton partials ``(XᵀWX, Xᵀ(y − p), loss)`` — d² + d + 1
+    doubles per partition — and the driver takes the damped Newton step
+    closed over d. Usually converges in < 10 iterations; each is
+    exactly one corpus pass (the k-means/BPE driver-loop precedent:
+    iteration STATE is a handful of floats, data never concentrates).
+    Rows with a NULL feature or label are skipped; with none left it
+    raises ``ValueError``.
 
     Returns ``(beta, intercept)``; score with
     ``1 / (1 + exp(−predict_linear(...)))`` — still a pure projection.
@@ -151,37 +137,24 @@ def fit_logistic(
         raise ValueError("need at least one feature column")
     if l2 < 0:
         raise ValueError(f"l2 must be >= 0, got {l2}")
-    src = df.select(
-        *feature_cols, F.col(label_col).cast("double").alias("_label")
-    ).localCheckpoint()
+    src = _labelled(df, feature_cols, label_col).localCheckpoint()
     da = d + (1 if fit_intercept else 0)
     beta = np.zeros(da)
 
     def make_partial(b):
-        def partial(batches):
-            import pandas as pd
-
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                x = pdf[feature_cols].to_numpy(dtype=float)
-                if fit_intercept:
-                    x = np.hstack([x, np.ones((len(x), 1))])
-                y = pdf["_label"].to_numpy(dtype=float)
-                eta = np.clip(x @ b, -35, 35)
-                p = 1.0 / (1.0 + np.exp(-eta))
-                w = p * (1.0 - p)
-                yield pd.DataFrame(
-                    {
-                        "h": [((x * w[:, None]).T @ x).ravel().tolist()],
-                        "g": [(x.T @ (y - p)).tolist()],
-                        "ll": [
-                            float(
-                                np.sum(y * eta - np.logaddexp(0.0, eta))
-                            )
-                        ],
-                    }
-                )
+        def partial(pdf):
+            x = pdf[feature_cols].to_numpy(dtype=float)
+            if fit_intercept:
+                x = np.hstack([x, np.ones((len(x), 1))])
+            y = pdf["_label"].to_numpy(dtype=float)
+            eta = np.clip(x @ b, -35, 35)
+            p = 1.0 / (1.0 + np.exp(-eta))
+            w = p * (1.0 - p)
+            return {
+                "h": (x * w[:, None]).T @ x,
+                "g": x.T @ (y - p),
+                "ll": np.sum(y * eta - np.logaddexp(0.0, eta)),
+            }
 
         return partial
 
@@ -190,15 +163,12 @@ def fit_logistic(
         reg[d, d] = 0.0  # never penalize the intercept
     last_ll = -np.inf
     for _ in range(max_iter):
-        rows = src.mapInPandas(
-            make_partial(beta.copy()),
-            "h array<double>, g array<double>, ll double",
-        ).collect()
-        h = np.sum([np.asarray(r["h"]) for r in rows], axis=0).reshape(da, da)
-        g = np.sum([np.asarray(r["g"]) for r in rows], axis=0)
-        ll = sum(r["ll"] for r in rows) - 0.5 * l2 * float(
-            beta[:d] @ beta[:d]
-        )
+        sums = sum_batches(src, make_partial(beta.copy()))
+        if sums is None:
+            raise ValueError("cannot fit on an empty frame")
+        h = sums["h"].reshape(da, da)
+        g = sums["g"]
+        ll = float(sums["ll"][0]) - 0.5 * l2 * float(beta[:d] @ beta[:d])
         step = np.linalg.solve(h + l2 * reg + 1e-12 * np.eye(da), g - l2 * (reg @ beta))
         beta = beta + step
         if abs(ll - last_ll) < tol * (1.0 + abs(ll)):

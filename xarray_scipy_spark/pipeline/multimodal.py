@@ -23,8 +23,8 @@ plumbing testable and SQL-reproducible.
 
 Every binary operator (``frame_sample``, ``resize_payload``,
 ``decode_features``, ``decode_text``) is a per-payload ``rows``
-function; :func:`_map_payloads` holds the one ``mapInPandas`` call
-that runs them.
+function; :func:`_map_payloads` runs them through ``core``'s Arrow-batch
+runner, :func:`~xarray_scipy_spark.core.map_batches`.
 """
 
 from __future__ import annotations
@@ -39,6 +39,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
+from ..core import _fields_of, map_batches
 from .hashes import spread
 from .jpeg import decode_jpeg, encode_jpeg
 from .webp import decode_webp
@@ -814,31 +815,28 @@ def _map_payloads(
     rows: Callable[[bytes | None], list[tuple]],
 ) -> DataFrame:
     """Run a per-payload kernel over ``df`` in Arrow batches
-    (``mapInPandas``, one batch of payloads per call, so decode cost
-    is amortized and Catalyst prunes the payload column until here).
+    (``core.map_batches``, one batch of payloads per call, so decode
+    cost is amortized and Catalyst prunes the payload column until here).
 
     ``rows(payload)`` returns the output rows of one payload (``None``
     for a NULL one) as tuples in ``fields`` order (``{name: ddl
     type}``); each row is prefixed with its input's ``id_col`` value,
     whose type carries over. Zero, one or many rows per payload."""
     names = list(fields)
-    cols = {id_col: dict(df.dtypes)[id_col], **fields}
-    schema = ", ".join(f"{n} {t}" for n, t in cols.items())
 
-    def run(batches):
-        for pdf in batches:
-            ids: list = []
-            out: list[tuple] = []
-            for i, payload in zip(pdf[id_col], pdf[bin_col]):
-                got = rows(payload)
-                ids.extend([i] * len(got))
-                out.extend(got)
-            cols = list(zip(*out)) or [()] * len(names)
-            yield pd.DataFrame(
-                {id_col: ids, **{n: list(c) for n, c in zip(names, cols)}}
-            )
+    def run(pdf: pd.DataFrame) -> dict:
+        ids: list = []
+        out: list[tuple] = []
+        for i, payload in zip(pdf[id_col], pdf[bin_col]):
+            got = rows(payload)
+            ids.extend([i] * len(got))
+            out.extend(got)
+        cols = list(zip(*out)) or [()] * len(names)
+        return {id_col: ids, **{n: list(c) for n, c in zip(names, cols)}}
 
-    return spread(df.select(id_col, bin_col), id_col).mapInPandas(run, schema=schema)
+    return map_batches(
+        spread(df.select(id_col, bin_col), id_col), run, {**_fields_of(df, [id_col]), **fields}
+    )
 
 
 def frame_sample(

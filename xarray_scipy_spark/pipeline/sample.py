@@ -19,6 +19,7 @@ from collections.abc import Mapping, Sequence
 
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
+from ..core import _fields_of, map_groups
 from .hashes import _c, bucket, h60
 
 __all__ = [
@@ -266,7 +267,9 @@ def pack_sequences(
 
     Output: ``(id, pack_id, pack_pos, pack_fill, overflow)`` —
     ``pack_id`` is globally unique (domain-prefixed), ``pack_fill``
-    the pack's total tokens, one row per input chunk.
+    the pack's total tokens, one row per input chunk. A chunk with a
+    NULL ``n_tokens`` keeps its row with NULL ``pack_id``, ``pack_pos``,
+    ``pack_fill`` and ``overflow``, and takes no part in the packing.
     """
     import numpy as np
     import pandas as pd
@@ -287,22 +290,18 @@ def pack_sequences(
         F.lit(n_dom),
     )
     work = spark_df.withColumn("__dom__", dom)
-    id_type = dict(df.dtypes)[id_col]
-    out_schema = (
-        f"{id_col} {id_type}, pack_id bigint, pack_pos int, "
-        "pack_fill bigint, overflow boolean"
-    )
 
-    def pack(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        (domain,) = key
-        # first-fit-decreasing, ties broken by id for determinism
+    def pack(pdf: pd.DataFrame) -> dict:
+        # first-fit-decreasing, ties broken by id for determinism; NULL
+        # sizes sort last and get no pack
         pdf = pdf.sort_values(
             ["__nt__", id_col], ascending=[False, True], kind="mergesort"
         )
-        sizes = pdf["__nt__"].to_numpy()
+        n = int(pdf["__nt__"].count())
+        sizes = pdf["__nt__"].to_numpy()[:n].astype(np.int64)
         fills: list[int] = []
-        assign = np.empty(len(pdf), dtype=np.int64)
-        pos = np.empty(len(pdf), dtype=np.int32)
+        assign = np.empty(n, dtype=np.int64)
+        pos = np.empty(n, dtype=np.int32)
         for i, s in enumerate(sizes):
             for j, f0 in enumerate(fills):
                 if f0 + s <= budget:
@@ -314,22 +313,31 @@ def pack_sequences(
                 fills.append(int(s))
         # positions within each pack in assignment order
         counters: dict[int, int] = {}
-        for i in range(len(pdf)):
+        for i in range(n):
             j = int(assign[i])
             pos[i] = counters.get(j, 0)
             counters[j] = pos[i] + 1
         fill_arr = np.array([fills[j] for j in assign], dtype=np.int64)
-        return pd.DataFrame(
-            {
-                id_col: pdf[id_col].to_numpy(),
-                "pack_id": int(domain) * 1_000_000_000 + assign,
-                "pack_pos": pos,
-                "pack_fill": fill_arr,
-                "overflow": sizes > budget,
-            }
-        )
+        packed = {
+            "pack_id": int(pdf["__dom__"].iat[0]) * 1_000_000_000 + assign,
+            "pack_pos": pos,
+            "pack_fill": fill_arr,
+            "overflow": sizes > budget,
+        }
+        # the NULL-size rows keep their row, with NULL pack columns
+        return {
+            id_col: pdf[id_col].to_numpy(),
+            **{c: pd.Series(v).reindex(range(len(pdf))) for c, v in packed.items()},
+        }
 
-    return work.groupBy("__dom__").applyInPandas(pack, schema=out_schema)
+    fields = {
+        **_fields_of(df, [id_col]),
+        "pack_id": "bigint",
+        "pack_pos": "int",
+        "pack_fill": "bigint",
+        "overflow": "boolean",
+    }
+    return map_groups([work], ["__dom__"], pack, fields)
 
 
 def cap_per_group(

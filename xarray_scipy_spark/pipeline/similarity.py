@@ -22,6 +22,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
+from ..core import _fields_of, map_batches, sum_batches
 from .hashes import bucket as hash_bucket, spread
 
 __all__ = [
@@ -102,7 +103,6 @@ def cosine_topk(
     Output: ``(query_id, rank, neighbor_id, cos_sim)``.
     """
     import numpy as np
-    import pandas as pd
 
     qside = queries.select(id_col, vec_col).where(F.col(vec_col).isNotNull())
     if max_broadcast_queries is not None:
@@ -120,7 +120,6 @@ def cosine_topk(
             )
     qrows = qside.collect()
     id_type = dict(corpus.dtypes)[id_col]
-    out_schema = f"query_id {id_type}, neighbor_id {id_type}, cos_sim double"
     spark = corpus.sparkSession
     if not qrows:
         return spark.createDataFrame(
@@ -132,48 +131,38 @@ def cosine_topk(
     eps = 2.0 * 10.0 ** (-round_digits)
     q_block = 4096  # bounds the per-batch (B × Qblock) score matrix
 
-    def run(batches):
-        for pdf in batches:
-            ids = pdf[id_col].to_numpy()
-            cm = np.array(pdf[vec_col].tolist(), dtype=float)
-            cm /= np.maximum(np.linalg.norm(cm, axis=1, keepdims=True), 1e-300)
-            outs = []
-            for j0 in range(0, len(q_ids), q_block):
-                qi = q_ids[j0 : j0 + q_block]
-                sims = cm @ qm[j0 : j0 + q_block].T  # (B, Qblock)
-                sims[ids[:, None] == qi[None, :]] = -np.inf
-                if sims.shape[0] > k:
-                    kth = np.partition(sims, -k, axis=0)[-k, :]
-                else:
-                    kth = np.full(sims.shape[1], -np.inf)
-                ii, jj = np.nonzero(sims >= kth[None, :] - eps)
-                # When a batch has <= k rows, kth is -inf and the masked
-                # self-similarities (-inf) pass `-inf >= -inf` — drop all
-                # non-finite candidates so self-matches never surface.
-                finite = np.isfinite(sims[ii, jj])
-                ii, jj = ii[finite], jj[finite]
-                outs.append(
-                    pd.DataFrame(
-                        {
-                            "query_id": qi[jj],
-                            "neighbor_id": ids[ii],
-                            "cos_sim": sims[ii, jj],
-                        }
-                    )
-                )
-            yield pd.concat(outs) if outs else pd.DataFrame(
-                {"query_id": [], "neighbor_id": [], "cos_sim": []}
-            )
+    def run(pdf):
+        ids = pdf[id_col].to_numpy()
+        cm = np.array(pdf[vec_col].tolist(), dtype=float)
+        cm /= np.maximum(np.linalg.norm(cm, axis=1, keepdims=True), 1e-300)
+        outs = []
+        for j0 in range(0, len(q_ids), q_block):
+            qi = q_ids[j0 : j0 + q_block]
+            sims = cm @ qm[j0 : j0 + q_block].T  # (B, Qblock)
+            sims[ids[:, None] == qi[None, :]] = -np.inf
+            if sims.shape[0] > k:
+                kth = np.partition(sims, -k, axis=0)[-k, :]
+            else:
+                kth = np.full(sims.shape[1], -np.inf)
+            ii, jj = np.nonzero(sims >= kth[None, :] - eps)
+            # When a batch has <= k rows, kth is -inf and the masked
+            # self-similarities (-inf) pass `-inf >= -inf` — drop all
+            # non-finite candidates so self-matches never surface.
+            finite = np.isfinite(sims[ii, jj])
+            ii, jj = ii[finite], jj[finite]
+            outs.append((qi[jj], ids[ii], sims[ii, jj]))
+        cols = [np.concatenate(c) for c in zip(*outs)]
+        return dict(zip(("query_id", "neighbor_id", "cos_sim"), cols))
 
     # no spread() here: matmul work scales with BYTES (unlike the
     # tokenize/hash pipelines whose per-row fan-out dwarfs their input),
     # so Spark's own maxPartitionBytes file splitting yields the right
     # parallelism at scale, and a forced 32-way exchange on a small
     # corpus only adds a shuffle + per-task Python overhead
-    candidates = (
-        corpus.select(id_col, vec_col)
-        .where(F.col(vec_col).isNotNull())
-        .mapInPandas(run, schema=out_schema)
+    candidates = map_batches(
+        corpus.select(id_col, vec_col).where(F.col(vec_col).isNotNull()),
+        run,
+        {"query_id": id_type, "neighbor_id": id_type, "cos_sim": "double"},
     )
     w = Window.partitionBy("query_id").orderBy(
         F.col("cos_sim").desc(), F.col("neighbor_id")
@@ -292,43 +281,41 @@ def kmeans_cells(
     absorbs float-summation-order differences that would otherwise make
     the assignment depend on partition order.
 
-    Execution: assignment is a ``mapInPandas`` scan against the
-    broadcast k×d centroid matrix (tiny closure state, the standard
-    Lloyd-on-Spark shape); the update is one groupBy per iteration.
-    Only the k×d centroid matrix ever reaches the driver.
+    Execution: assignment is an Arrow-batch scan (``core.map_batches``)
+    against the broadcast k×d centroid matrix (tiny closure state, the
+    standard Lloyd-on-Spark shape); the update is one groupBy per
+    iteration. Only the k×d centroid matrix ever reaches the driver.
+
+    A NULL vector takes no part in the initial centroids or the means,
+    and gets no output row.
 
     Returns ``(id_col, cell)``.
     """
     import numpy as np
-    import pandas as pd
 
-    v = df.select(
+    v = df.where(F.col(vec_col).isNotNull()).select(
         F.col(id_col),
         F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("v"),
     )
-    id_type = dict(df.dtypes)[id_col]
     init = v.orderBy(id_col).limit(k).collect()
     if len(init) < k:
         raise ValueError(f"need at least k={k} vectors, got {len(init)}")
     centroids = np.asarray([r["v"] for r in init], dtype=float)
 
     def assigner(cents: np.ndarray):
-        def run(batches):
-            for pdf in batches:
-                x = np.stack(pdf["v"].to_numpy())
-                d2 = ((x[:, None, :] - cents[None, :, :]) ** 2).sum(axis=2)
-                cell = np.argmin(np.round(d2, round_digits), axis=1)
-                out = pd.DataFrame({id_col: pdf[id_col].to_numpy()})
-                out["cell"] = cell.astype(np.int32)
-                yield out[[id_col, "cell"]]
+        def run(pdf):
+            x = np.stack(pdf["v"].to_numpy())
+            d2 = ((x[:, None, :] - cents[None, :, :]) ** 2).sum(axis=2)
+            cell = np.argmin(np.round(d2, round_digits), axis=1)
+            return {id_col: pdf[id_col].to_numpy(), "cell": cell.astype(np.int32)}
 
         return run
 
     assigned = None
     dim = centroids.shape[1]
     for t in range(iters):
-        assigned = spread(v, id_col).mapInPandas(
-            assigner(centroids), schema=f"{id_col} {id_type}, cell int"
+        assigned = map_batches(
+            spread(v, id_col), assigner(centroids), {**_fields_of(df, [id_col]), "cell": "int"}
         )
         if t == iters - 1:
             break  # the returned assignment follows the LAST centroids
@@ -451,40 +438,25 @@ def embedding_moments(
 ):
     """Distributed first/second moments of an embedding column.
 
-    One ``mapInPandas`` pass computes per-batch partials of (count,
-    Σx, ΣxxT) — each partition contributes ONE row of d + d² doubles
-    regardless of its row count, so the driver combine handles
-    d=64 · n_partitions floats, never the corpus.
+    One Arrow-batch pass (``core.sum_batches``) computes per-batch
+    partials of (count, Σx, ΣxxT) — each partition contributes d + d²
+    doubles regardless of its row count, so the driver combine handles
+    d=64 · n_partitions floats, never the corpus. NULL vectors are
+    skipped and not counted.
 
     Returns ``(n, mean, cov)``: the row count, the d-vector mean and
     the biased d×d covariance ``G/n − μμᵀ`` (numpy arrays).
     """
     import numpy as np
-    import pandas as pd
 
-    def partial(batches):
-        for pdf in batches:
-            m = np.array(pdf[vec_col].tolist(), dtype=float)
-            if not len(m):
-                continue
-            yield pd.DataFrame(
-                {
-                    "n": [len(m)],
-                    "s": [m.sum(axis=0).tolist()],
-                    "g": [(m.T @ m).ravel().tolist()],
-                }
-            )
+    def partial(pdf):
+        m = np.array(pdf[vec_col].tolist(), dtype=float)
+        return {"s": m.sum(axis=0), "g": m.T @ m}
 
-    rows = (
-        df.select(vec_col)
-        .mapInPandas(partial, "n bigint, s array<double>, g array<double>")
-        .collect()
-    )
-    if not rows:
+    sums = sum_batches(df.select(vec_col), partial)
+    if sums is None:
         raise ValueError("cannot fit PCA on an empty corpus")
-    n = sum(r["n"] for r in rows)
-    s = np.sum([np.asarray(r["s"]) for r in rows], axis=0)
-    g = np.sum([np.asarray(r["g"]) for r in rows], axis=0)
+    n, s, g = sums["n"], sums["s"], sums["g"]
     d = len(s)
     mean = s / n
     cov = g.reshape(d, d) / n - np.outer(mean, mean)

@@ -12,6 +12,7 @@ from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, functions as F
 
+from ..core import _fields_of, map_batches
 from .hashes import h60, spread, tokens
 
 __all__ = [
@@ -946,8 +947,8 @@ def char_entropy(
     prose sits in between.
 
     Plan shape: ZERO shuffles — entropy is a per-row property, so it
-    runs as one Arrow-batched ``mapInPandas`` projection. Inside each
-    batch the computation is fully numpy-vectorized (no per-document
+    runs as one Arrow-batched projection (``core.map_batches``). Inside
+    each batch the computation is fully numpy-vectorized (no per-document
     Python loop): all texts concatenate once, UTF-32 decode gives one
     uint32 code point per character (so multi-byte characters count as
     one char, matching ``string_split``/``split('')``), and per-(doc,
@@ -965,56 +966,35 @@ def char_entropy(
     dropped (same row set as the Catalyst shape, which exploded to
     zero rows for them). Output: ``(id, n_chars, entropy_bits)``.
     """
-    from pyspark.sql.types import (
-        DoubleType,
-        LongType,
-        StructField,
-        StructType,
-    )
+    import numpy as np
 
-    src = df.select(id_col, text_col)
-    out_schema = StructType(
-        [
-            src.schema[id_col],
-            StructField("n_chars", LongType()),
-            StructField("entropy_bits", DoubleType()),
-        ]
-    )
+    def entropy(pdf):
+        texts = pdf[text_col].fillna("")
+        lens = texts.str.len().to_numpy(np.int64)
+        joined = "".join(texts.tolist())
+        codes = np.frombuffer(
+            joined.encode("utf-32-le"), dtype=np.uint32
+        ).astype(np.int64)
+        doc_idx = np.repeat(np.arange(len(pdf), dtype=np.int64), lens)
+        keys = (doc_idx << 21) | codes
+        uniq, counts = np.unique(keys, return_counts=True)
+        d = uniq >> 21
+        n_docs = len(pdf)
+        n_chars = np.bincount(d, weights=counts, minlength=n_docs)
+        clogc = np.bincount(
+            d, weights=counts * np.log2(counts), minlength=n_docs
+        )
+        keep = n_chars > 0
+        with np.errstate(divide="ignore", invalid="ignore"):
+            ent = np.log2(n_chars) - clogc / n_chars
+        return {
+            id_col: pdf[id_col].to_numpy()[keep],
+            "n_chars": n_chars[keep].astype(np.int64),
+            "entropy_bits": ent[keep],
+        }
 
-    def batches(it):
-        import numpy as np
-        import pandas as pd
-
-        for pdf in it:
-            if not len(pdf):
-                continue
-            texts = pdf[text_col].fillna("")
-            lens = texts.str.len().to_numpy(np.int64)
-            joined = "".join(texts.tolist())
-            codes = np.frombuffer(
-                joined.encode("utf-32-le"), dtype=np.uint32
-            ).astype(np.int64)
-            doc_idx = np.repeat(np.arange(len(pdf), dtype=np.int64), lens)
-            keys = (doc_idx << 21) | codes
-            uniq, counts = np.unique(keys, return_counts=True)
-            d = uniq >> 21
-            n_docs = len(pdf)
-            n_chars = np.bincount(d, weights=counts, minlength=n_docs)
-            clogc = np.bincount(
-                d, weights=counts * np.log2(counts), minlength=n_docs
-            )
-            keep = n_chars > 0
-            with np.errstate(divide="ignore", invalid="ignore"):
-                ent = np.log2(n_chars) - clogc / n_chars
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col].to_numpy()[keep],
-                    "n_chars": n_chars[keep].astype(np.int64),
-                    "entropy_bits": ent[keep],
-                }
-            )
-
-    return src.mapInPandas(batches, out_schema)
+    fields = {**_fields_of(df, [id_col]), "n_chars": "bigint", "entropy_bits": "double"}
+    return map_batches(df.select(id_col, text_col), entropy, fields)
 
 
 def ngram_counts(

@@ -34,7 +34,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from ..core import _ddl_of
+from ..core import _ddl, _fields_of
 from ..kernels.dsp import sosfilt_1d
 from ..operators.spectral import _frames, _hop, window_taps
 
@@ -75,7 +75,7 @@ def _run_stateful(
 
     return sdf.groupBy(*by).applyInPandasWithState(
         fn,
-        outputStructType=", ".join(f for f in (_ddl_of(sdf, by), out_fields) if f),
+        outputStructType=", ".join(f for f in (_ddl(_fields_of(sdf, by)), out_fields) if f),
         stateStructType=state_ddl,
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
@@ -117,7 +117,8 @@ def sosfilt_stream(
         return cols, (zi.ravel().tolist(), n_seen + len(x))
 
     return _run_stateful(
-        sdf, by=by, dim=dim, out_fields=f"{_ddl_of(sdf, [dim])}, value double, idx bigint",
+        sdf, by=by, dim=dim,
+        out_fields=f"{_ddl(_fields_of(sdf, [dim]))}, value double, idx bigint",
         state_ddl="zi array<double>, n_seen bigint", step=step,
     )
 
