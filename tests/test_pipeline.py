@@ -279,6 +279,61 @@ def test_cosine_paths_skip_null_embeddings(spark):
     assert {(r["a_id"], r["b_id"]) for r in pairs} == {(1, 2), (1, 3), (2, 3)}
 
 
+@pytest.mark.parametrize("path", ["exact", "ivf", "lsh", "kmeans"])
+def test_vector_with_null_element_counts_as_null(spark, path):
+    """A vector with a NULL element is a NULL vector on every path: the
+    output with it equals the output without it (nobody's neighbour,
+    no neighbours, no cell). Before, IVF and LSH ranked it with a NULL
+    ``cos_sim``, k-means put it in cell 0, and the exact path's NaN
+    row took a top-k slot in its batch."""
+    import numpy as np
+
+    rng = np.random.default_rng(21)
+    rows = [(i, [float(x) for x in rng.standard_normal(3)]) for i in range(6)]
+    rows.append((6, [None, 1.0, 0.5]))
+    schema = "vec_id long, embedding array<double>"
+
+    def run(df):
+        if path == "exact":
+            return pl.cosine_topk(df, df, k=2)
+        if path == "ivf":
+            cells = df.withColumn("label", F.lit(0))
+            return pl.cosine_topk_ivf(cells, cells, k=8)
+        if path == "lsh":
+            return pl.cosine_topk_lsh(df, df, k=8, planes=1)
+        return pl.kmeans_cells(df, k=2, iters=2)
+
+    with_null, without = (
+        sorted(map(tuple, run(spark.createDataFrame(r, schema).coalesce(1)).collect()))
+        for r in (rows, rows[:-1])
+    )
+    assert with_null == without and without
+
+
+def test_cosine_topk_ivf_one_cell_equals_exact(spark):
+    """With every vector in one cell, the IVF probe-and-rank is the
+    exact top-k: the same neighbour ids per rank as ``cosine_topk``,
+    and ``cos_sim`` within 1e-6 (the two compute the cosine apart)."""
+    import numpy as np
+
+    rng = np.random.default_rng(23)
+    n, d = 120, 16
+    corpus = spark.createDataFrame(
+        [(i, [float(x) for x in v]) for i, v in enumerate(rng.standard_normal((n, d)))],
+        "vec_id long, embedding array<double>",
+    ).withColumn("label", F.lit(0))
+    queries = corpus.filter("vec_id % 10 = 0")
+    ivf, exact = (
+        f(corpus, queries, k=5).toPandas().sort_values(["query_id", "rank"]).reset_index(drop=True)
+        for f in (pl.cosine_topk_ivf, pl.cosine_topk)
+    )
+    assert len(exact) == 12 * 5
+    pd.testing.assert_frame_equal(
+        ivf[["query_id", "rank", "neighbor_id"]], exact[["query_id", "rank", "neighbor_id"]]
+    )
+    np.testing.assert_allclose(ivf["cos_sim"], exact["cos_sim"], rtol=0, atol=1e-6)
+
+
 def test_kmeans_cells_matches_numpy_lloyd(spark):
     import numpy as np
 
@@ -810,18 +865,25 @@ def test_jpeg_general_roundtrips_and_errors():
 
 
 def test_truncated_jpeg_and_gif_raise_value_error():
-    """Every cut of a JPEG (baseline and progressive, 4:2:0) or GIF
-    payload either decodes or raises ``ValueError`` — never a bare
-    ``IndexError``/``struct.error`` from reading past the end, which a
-    per-row decode-error policy catching ``ValueError`` would miss."""
+    """Every cut of a JPEG (baseline and progressive, 4:2:0), GIF, PNG,
+    BMP or lossless WebP payload either raises ``ValueError`` or, for
+    PNG, decodes to the full image (a cut in the trailing CRC or IEND
+    chunk loses no pixel data) — never a bare ``IndexError``,
+    ``struct.error`` or ``zlib.error`` from reading past the end, which
+    a per-row decode-error policy catching ``ValueError`` would miss."""
     import numpy as np
 
     from xarray_scipy_spark.pipeline.jpeg import decode_jpeg, encode_jpeg
     from xarray_scipy_spark.pipeline.multimodal import (
+        decode_bmp,
         decode_gif,
         decode_gif_frames,
+        decode_png,
+        encode_bmp,
         encode_gif,
+        encode_png,
     )
+    from xarray_scipy_spark.pipeline.webp import decode_webp, encode_webp_lossless
 
     rng = np.random.default_rng(0)
     img = rng.integers(0, 256, (16, 16, 3), dtype=np.uint8)
@@ -831,12 +893,44 @@ def test_truncated_jpeg_and_gif_raise_value_error():
     ]
     gif = encode_gif(img[..., 0][:8, :8])
     cases += [(gif, decode_gif), (gif, decode_gif_frames)]
+    small = img[:8, :8]
+    cases += [
+        (encode_png(small), decode_png),
+        (encode_bmp(small), decode_bmp),
+        (encode_webp_lossless(small), decode_webp),
+    ]
     for payload, decode in cases:
         for n in range(len(payload)):
             try:
-                decode(payload[:n])
+                px = decode(payload[:n])[0]
             except ValueError:
-                pass
+                continue
+            if decode is decode_png:
+                np.testing.assert_array_equal(px, small)
+
+
+def test_jpeg_bit_reader_keeps_only_unread_bits(monkeypatch):
+    """The JPEG bit reader's accumulator holds only the bits not yet
+    returned: it never grows past 64 bits over a whole 128x128 4:2:0
+    decode (it used to keep every bit of the scan, which made decode
+    time quadratic in the scan length)."""
+    import numpy as np
+
+    from xarray_scipy_spark.pipeline import jpeg
+
+    widest = []
+    fill = jpeg._BitReader._fill
+
+    def spy(self):
+        fill(self)
+        widest.append(self.acc.bit_length())
+
+    monkeypatch.setattr(jpeg._BitReader, "_fill", spy)
+    rng = np.random.default_rng(2)
+    img = rng.integers(0, 256, (128, 128, 3), dtype=np.uint8)
+    for prog in (False, True):
+        jpeg.decode_jpeg(jpeg.encode_jpeg(img, subsample=True, progressive=prog))
+    assert widest and max(widest) <= 64
 
 
 def test_jpeg_through_image_decoder(spark):
@@ -2797,6 +2891,36 @@ def test_constraint_check_verdicts(spark):
         pl.constraint_check(df, [{"kind": "made_up"}])
     with pytest.raises(ValueError, match="at least one"):
         pl.constraint_check(df, [])
+
+
+def test_windowed_constraints_one_window_equals_constraint_check(spark):
+    """Over a static frame whose events all fall in one window,
+    ``windowed_constraints`` gives ``constraint_check``'s verdict rows
+    (every kind but ``unique``), in request order."""
+    import xarray_scipy_spark.pipeline as pl
+
+    base_ns = 1_700_000_040 * 1_000_000_000  # a 60 s window boundary
+    df = spark.createDataFrame(
+        [
+            (base_ns + i * 1_000_000_000, k, flag, v)
+            for i, (k, flag, v) in enumerate(
+                [(1, "A", 10.0), (1, "N", -1.0), (2, "X", 5.0), (2, None, 0.0), (3, "A", None)]
+            )
+        ],
+        "ts long, k long, flag string, v double",
+    )
+    cons = [
+        {"kind": "not_null", "column": "flag"},
+        {"kind": "in_set", "column": "flag", "values": ["A", "N"]},
+        {"kind": "between", "column": "v", "min": 0, "max": 10},
+        {"kind": "min_rows", "value": 10},
+        {"kind": "non_negative", "column": "v"},
+        {"kind": "min_rows", "value": 2},
+    ]
+    win = pl.windowed_constraints(df, dim="ts", constraints=cons).collect()
+    assert {r["window_start"] for r in win} == {base_ns // 1_000_000_000}
+    batch = [tuple(r) for r in pl.constraint_check(df, cons).collect()]
+    assert [tuple(r)[1:] for r in win] == batch
 
 
 def test_quality_layer_single_pass_plans(spark):

@@ -150,3 +150,22 @@ def test_interp_to_ffill_and_validation(spark, irregular):
     assert res == {5: 10.0, 9: -10.0}
     with pytest.raises(ValueError, match="method"):
         interp_to(irregular, targets, by=["ch"], dim="t", method="nearest")
+
+
+@pytest.mark.parametrize("method", ["linear", "ffill"])
+def test_interp_to_on_gapfill_grid_equals_gapfill(spark, method):
+    """``interp_to`` onto ``gapfill``'s own grid is ``gapfill``: the two
+    share one fill rule, also where the first observation is NULL and
+    the grid instants before the next one have nothing to carry."""
+    from xarray_scipy_spark.operators import interp_to
+
+    df = spark.createDataFrame(
+        [(0, 0, None), (0, 3, 4.0), (0, 4, -2.0), (0, 9, 5.0), (0, 15, 5.5),
+         (1, 2, 10.0), (1, 8, -10.0)],
+        "ch int, t long, value double",
+    )
+    filled = ops.gapfill(df, by=["ch"], dim="t", dt=1, method=method)
+    onto = interp_to(df, filled.select("ch", "t"), by=["ch"], dim="t", method=method)
+    want = sorted(map(tuple, filled.collect()))
+    assert sorted(map(tuple, onto.collect())) == want
+    assert (0, 1, None) in want  # nothing observed yet

@@ -25,7 +25,7 @@ from functools import partial
 
 import numpy as np
 
-from .filter_design import cheby1_sos, firwin, lfilter_zi, sosfilt_zi
+from .filter_design import _norm_ba, cheby1_sos, firwin, lfilter_zi, sosfilt_zi
 
 __all__ = [
     "fftconvolve_1d",
@@ -474,20 +474,6 @@ def decimate_ragged(
     else:
         raise ValueError(f"ftype must be 'iir' or 'fir', got {ftype!r}")
     return y[..., ::q], (lengths + q - 1) // q
-
-
-def _norm_ba(b, a) -> tuple[np.ndarray, np.ndarray, int]:
-    """Zero-pad b/a to a common length n and normalize a[0] to 1."""
-    b = np.atleast_1d(np.asarray(b, dtype=float))
-    a = np.atleast_1d(np.asarray(a, dtype=float))
-    if a[0] == 0.0:
-        raise ValueError("a[0] must be nonzero")
-    n = max(len(a), len(b))
-    bb = np.zeros(n)
-    bb[: len(b)] = b / a[0]
-    aa = np.zeros(n)
-    aa[: len(a)] = a / a[0]
-    return bb, aa, n
 
 
 def lfilter_1d(b, a, x: np.ndarray, zi: np.ndarray | None = None):

@@ -284,14 +284,8 @@ def sosfilt_zi(sos: np.ndarray) -> np.ndarray:
     return zi
 
 
-def lfilter_zi(b, a) -> np.ndarray:
-    """Steady-state initial conditions for a unit-step input in
-    transfer-function form (scipy ``lfilter_zi`` equivalent): with the
-    direct-form-II-transposed state recursion ``z = A^T z + B x`` at
-    steady state, ``zi = (I - A^T) \\ B`` where ``A`` is the companion
-    matrix of the normalized denominator and
-    ``B = b[1:] - a[1:] * b[0]``. Length ``max(len(a), len(b)) - 1``.
-    """
+def _norm_ba(b, a) -> tuple[np.ndarray, np.ndarray, int]:
+    """Zero-pad b/a to a common length n and normalize a[0] to 1."""
     b = np.atleast_1d(np.asarray(b, dtype=float))
     a = np.atleast_1d(np.asarray(a, dtype=float))
     if a[0] == 0.0:
@@ -301,6 +295,18 @@ def lfilter_zi(b, a) -> np.ndarray:
     bb[: len(b)] = b / a[0]
     aa = np.zeros(n)
     aa[: len(a)] = a / a[0]
+    return bb, aa, n
+
+
+def lfilter_zi(b, a) -> np.ndarray:
+    """Steady-state initial conditions for a unit-step input in
+    transfer-function form (scipy ``lfilter_zi`` equivalent): with the
+    direct-form-II-transposed state recursion ``z = A^T z + B x`` at
+    steady state, ``zi = (I - A^T) \\ B`` where ``A`` is the companion
+    matrix of the normalized denominator and
+    ``B = b[1:] - a[1:] * b[0]``. Length ``max(len(a), len(b)) - 1``.
+    """
+    bb, aa, n = _norm_ba(b, a)
     if n == 1:
         return np.zeros(0)
     comp_t = np.zeros((n - 1, n - 1))

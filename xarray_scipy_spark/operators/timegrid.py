@@ -59,11 +59,11 @@ def _gapfill_value(method: str):
     )
 
 
-def _brackets(rows: DataFrame, by: list) -> DataFrame:
-    """``[*by, _t, _obs, _v0, _pt, _v1, _nt]`` over the union ``rows``
-    of observations (``_obs`` 1) and instants to fill (``_obs`` 0,
-    ``_v`` null): the last observed value and instant at or before
-    each row, and the first after it, per series."""
+def _brackets(obs: DataFrame, instants: DataFrame, by: _Seq[str]) -> DataFrame:
+    """``[*by, _t, _obs, _v0, _pt, _v1, _nt]`` for each ``[*by, _t]``
+    row of ``instants`` from the observations ``obs`` (see
+    :func:`_observed`): the last observed value and instant at or
+    before each instant, and the first after it, per series."""
     # observations sort BEFORE the grid row at the same instant
     # (_obs desc), so the backward frame sees a collocated observation
     # and the forward frame, the same running frame in the exact
@@ -76,7 +76,10 @@ def _brackets(rows: DataFrame, by: list) -> DataFrame:
         Window.unboundedPreceding, 0
     )
     obs_t = F.when(F.col("_v").isNotNull(), F.col("_t"))
-    return rows.select(
+    fill = instants.select(
+        *by, "_t", F.lit(None).cast("double").alias("_v"), F.lit(0).alias("_obs")
+    )
+    return obs.unionAll(fill).select(
         *by,
         "_t",
         "_obs",
@@ -84,37 +87,54 @@ def _brackets(rows: DataFrame, by: list) -> DataFrame:
         F.last(obs_t, ignorenulls=True).over(back).alias("_pt"),
         F.last("_v", ignorenulls=True).over(fwd).alias("_v1"),
         F.last(obs_t, ignorenulls=True).over(fwd).alias("_nt"),
+    ).filter(F.col("_obs") == 0)
+
+
+def _observed(df: DataFrame, by: _Seq[str], dim: str, value: str):
+    """The prelude of every fill: ``(obs, time, out_dim)``. ``obs`` is
+    the observation rows ``[*by, _t, _v, _obs]``; ``time(frame)`` puts a
+    frame's ``dim`` on the integer time axis ``_t`` (exact epoch
+    microseconds for a timestamp ``dim`` of ``df``, so grid arithmetic
+    never round-trips through floats); ``out_dim`` restores ``dim``'s
+    type from ``_t``."""
+    from ..functions.timeutil import _NTZ_EPOCH, epoch_us
+
+    in_dtype = dict(df.dtypes)[dim]
+    is_ts = in_dtype.startswith("timestamp")
+
+    def time(frame: DataFrame):
+        return epoch_us(frame, dim) if is_ts else F.col(dim)
+
+    if not is_ts:
+        out_dim = F.col("_t")
+    elif in_dtype == "timestamp_ntz":
+        out_dim = F.expr(f"timestampadd(MICROSECOND, _t, {_NTZ_EPOCH})")
+    else:
+        out_dim = F.timestamp_micros(F.col("_t"))
+    obs = df.select(
+        *by,
+        time(df).alias("_t"),
+        F.col(value).cast("double").alias("_v"),
+        F.lit(1).alias("_obs"),
     )
+    return obs, time, out_dim.alias(dim)
 
 
 def _gapfill_core(df: DataFrame, *, by, dim: str, value: str, dt):
     """Shared gapfill machinery: grid generation + the one-shuffle
     window computing the bracketing observations. Returns
-    ``(both, out_dim, by)`` where ``both`` carries
-    ``[*by, _t, _obs, _v0, _pt, _v1, _nt]`` — every fill method is a
-    pure projection over it (see :func:`_gapfill_value`)."""
-    from ..functions.timeutil import _NTZ_EPOCH, epoch_us
-
-    by = list(by)
+    ``(grid, out_dim)`` where ``grid`` carries
+    ``[*by, _t, _obs, _v0, _pt, _v1, _nt]`` per grid instant — every
+    fill method is a pure projection over it (see
+    :func:`_gapfill_value`)."""
+    obs, _, out_dim = _observed(df, by, dim, value)
     in_dtype = dict(df.dtypes)[dim]
-    is_ts = in_dtype.startswith("timestamp")
-    if is_ts:
-        # epoch_us handles TIMESTAMP and TIMESTAMP_NTZ (naive-as-UTC),
-        # keeping grid arithmetic in exact integer microseconds
-        tcol = epoch_us(df, dim)
+    if in_dtype.startswith("timestamp"):
         step = int(round(float(dt) * 1_000_000))
         if step <= 0:
             raise ValueError(f"dt must be a positive number of seconds, got {dt!r}")
     else:
-        tcol = F.col(dim)
         step = dt
-
-    obs = df.select(
-        *by,
-        tcol.alias("_t"),
-        F.col(value).cast("double").alias("_v"),
-        F.lit(1).alias("_obs"),
-    )
     rng = obs.groupBy(*by).agg(
         F.min("_t").alias("_t0"), F.max("_t").alias("_t1")
     )
@@ -129,29 +149,13 @@ def _gapfill_core(df: DataFrame, *, by, dim: str, value: str, dt):
             *by,
             "_t0",
             F.explode(F.sequence(F.lit(0), nsteps.cast("bigint"))).alias("_k"),
-        ).select(
-            *by,
-            (F.col("_t0") + F.col("_k") * F.lit(float(step))).alias("_t"),
-            F.lit(None).cast("double").alias("_v"),
-            F.lit(0).alias("_obs"),
-        )
+        ).select(*by, (F.col("_t0") + F.col("_k") * F.lit(float(step))).alias("_t"))
     else:
         grid = rng.select(
             *by,
-            F.explode(F.sequence(F.col("_t0"), F.col("_t1"), F.lit(step))).alias(
-                "_t"
-            ),
-            F.lit(None).cast("double").alias("_v"),
-            F.lit(0).alias("_obs"),
+            F.explode(F.sequence(F.col("_t0"), F.col("_t1"), F.lit(step))).alias("_t"),
         )
-    both = _brackets(obs.unionAll(grid), by)
-    if not is_ts:
-        out_dim = F.col("_t").alias(dim)
-    elif in_dtype == "timestamp_ntz":
-        out_dim = F.expr(f"timestampadd(MICROSECOND, _t, {_NTZ_EPOCH})").alias(dim)
-    else:
-        out_dim = F.timestamp_micros(F.col("_t")).alias(dim)
-    return both, out_dim, by
+    return _brackets(obs, grid, by), out_dim
 
 
 def gapfill(
@@ -182,11 +186,8 @@ def gapfill(
     """
     if method not in ("linear", "ffill"):
         raise ValueError(f"method must be 'linear' or 'ffill', got {method!r}")
-    both, out_dim, by = _gapfill_core(df, by=by, dim=dim, value=value, dt=dt)
-    return (
-        both.filter(F.col("_obs") == 0)
-        .select(*by, out_dim, _gapfill_value(method).alias(value))
-    )
+    grid, out_dim = _gapfill_core(df, by=by, dim=dim, value=value, dt=dt)
+    return grid.select(*by, out_dim, _gapfill_value(method).alias(value))
 
 
 def gapfill_variants(
@@ -215,7 +216,7 @@ def gapfill_variants(
     for m in methods:
         if m not in ("linear", "ffill"):
             raise ValueError(f"method must be 'linear' or 'ffill', got {m!r}")
-    both, out_dim, by = _gapfill_core(df, by=by, dim=dim, value=value, dt=dt)
+    grid, out_dim = _gapfill_core(df, by=by, dim=dim, value=value, dt=dt)
     tagged = F.array(
         *[
             F.struct(
@@ -225,8 +226,7 @@ def gapfill_variants(
         ]
     )
     return (
-        both.filter(F.col("_obs") == 0)
-        .select(*by, out_dim, F.explode(tagged).alias("_p"))
+        grid.select(*by, out_dim, F.explode(tagged).alias("_p"))
         .select(
             F.col("_p._m").alias(variant_col),
             *by,
@@ -265,48 +265,7 @@ def interp_to(
     """
     if method not in ("linear", "ffill"):
         raise ValueError(f"method must be 'linear' or 'ffill', got {method!r}")
-    by = list(by)
-    in_dtype = dict(df.dtypes)[dim]
-    is_ts = in_dtype.startswith("timestamp")
-    if is_ts:
-        from ..functions.timeutil import _NTZ_EPOCH, epoch_us
-
-        tcol = epoch_us(df, dim)
-        gcol = epoch_us(targets, dim)
-    else:
-        tcol = F.col(dim)
-        gcol = F.col(dim)
-    obs = df.select(
-        *by,
-        tcol.alias("_t"),
-        F.col(value).cast("double").alias("_v"),
-        F.lit(1).alias("_obs"),
-    )
-    tgt = targets.select(
-        *by,
-        gcol.alias("_t"),
-        F.lit(None).cast("double").alias("_v"),
-        F.lit(0).alias("_obs"),
-    )
-    both = _brackets(obs.unionAll(tgt), by)
-    if method == "ffill":
-        filled = F.col("_v0")
-    else:
-        filled = (
-            F.when(F.col("_t") == F.col("_pt"), F.col("_v0"))
-            .when(F.col("_nt").isNull(), F.col("_v0"))
-            .when(F.col("_pt").isNull(), F.lit(None).cast("double"))
-            .otherwise(
-                F.col("_v0")
-                + (F.col("_v1") - F.col("_v0"))
-                * (F.col("_t") - F.col("_pt")).cast("double")
-                / (F.col("_nt") - F.col("_pt")).cast("double")
-            )
-        )
-    if not is_ts:
-        out_dim = F.col("_t").alias(dim)
-    elif in_dtype == "timestamp_ntz":
-        out_dim = F.expr(f"timestampadd(MICROSECOND, _t, {_NTZ_EPOCH})").alias(dim)
-    else:
-        out_dim = F.timestamp_micros(F.col("_t")).alias(dim)
-    return both.filter(F.col("_obs") == 0).select(*by, out_dim, filled.alias(value))
+    obs, time, out_dim = _observed(df, by, dim, value)
+    tgt = targets.select(*by, time(targets).alias("_t"))
+    filled = _gapfill_value(method).alias(value)
+    return _brackets(obs, tgt, by).select(*by, out_dim, filled)

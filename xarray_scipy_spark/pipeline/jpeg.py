@@ -175,7 +175,8 @@ class _BitReader:
         while self.nbits < n:
             self._fill()
         self.nbits -= n
-        out = (self.acc >> self.nbits) & ((1 << n) - 1)
+        out = self.acc >> self.nbits
+        self.acc &= (1 << self.nbits) - 1  # keep only the unread bits
         return out
 
     def huffman(self, table) -> int:
@@ -521,7 +522,8 @@ class _BitWriter:
         self.nbits += n
         while self.nbits >= 8:
             self.nbits -= 8
-            b = (self.acc >> self.nbits) & 0xFF
+            b = self.acc >> self.nbits
+            self.acc &= (1 << self.nbits) - 1  # keep only the unwritten bits
             self.out.append(b)
             if b == 0xFF:
                 self.out.append(0x00)  # byte stuffing

@@ -156,7 +156,15 @@ def decode_png(payload: bytes):
     left-neighbor recursion, so those rows walk pixel columns with the
     channel lanes vectorized. Chunk CRCs are not verified (decode is
     value-checked downstream; a corrupt stream fails the zlib inflate
-    or the length checks)."""
+    or the length checks). A truncated or malformed payload raises
+    ``ValueError``."""
+    try:
+        return _decode_png(payload)
+    except (struct.error, zlib.error) as e:  # a cut IDAT stream or IHDR body
+        raise ValueError(f"truncated or corrupt PNG payload: {e}") from e
+
+
+def _decode_png(payload: bytes):
     if payload[:8] != _PNG_SIG:
         raise ValueError("not a PNG payload (bad signature)")
     pos, ihdr, idat, plte = 8, None, [], None
@@ -348,7 +356,15 @@ def decode_bmp(payload: bytes):
     format after PPM and WAV. Handles both bottom-up (positive height,
     the common case) and top-down (negative height) row orders and the
     4-byte row stride padding. Returns ``(pixels, width, height)`` with
-    ``pixels`` an ``(h, w, 3)`` RGB uint8 array (BMP stores BGR)."""
+    ``pixels`` an ``(h, w, 3)`` RGB uint8 array (BMP stores BGR). A
+    truncated or malformed payload raises ``ValueError``."""
+    try:
+        return _decode_bmp(payload)
+    except struct.error as e:  # a header cut short
+        raise ValueError(f"truncated or corrupt BMP payload: {e}") from e
+
+
+def _decode_bmp(payload: bytes):
     if payload[:2] != b"BM":
         raise ValueError("not a BMP payload")
     data_off = struct.unpack_from("<I", payload, 10)[0]

@@ -169,10 +169,9 @@ def data_profile(
 
 def _row_counter(spec: Mapping, alias: str):
     """Compile one ROW-PREDICATE constraint spec to ``(name, kind,
-    violation-counter aggregate)`` — the shared piece between the batch
-    :func:`constraint_check` and the event-time
-    :func:`windowed_constraints`. ``unique``/``min_rows`` are handled
-    by the callers (they aren't per-row predicates)."""
+    violation-counter aggregate)``; None for any other kind.
+    ``unique``/``min_rows`` are handled by :func:`_compile` (they
+    aren't per-row predicates)."""
     kind = spec["kind"]
     if kind == "not_null":
         c = spec["column"]
@@ -217,6 +216,48 @@ def _row_counter(spec: Mapping, alias: str):
     return None
 
 
+def _compile(constraints: Sequence[Mapping]):
+    """Compile constraint specs to ``(aggs, uniques, verdicts)``:
+    ``aggs`` is the row count ``_n`` plus one violation counter per
+    row-predicate constraint, all for one aggregate; ``uniques`` is the
+    distinct count of each ``unique`` key, for a SEPARATE aggregate
+    (see :func:`constraint_check`); ``verdicts`` explodes the two
+    aggregates' columns into one ``(constraint, kind, passed,
+    n_violations, n_rows)`` row per constraint, in request order."""
+    aggs = [F.count(F.lit(1)).alias("_n")]
+    uniques = []
+    rows = []
+    for i, spec in enumerate(constraints):
+        kind = spec["kind"]
+        if kind == "unique":
+            kc = list(spec["columns"])
+            name = f"unique({', '.join(kc)})"
+            uniques.append(
+                F.count_distinct(F.struct(*[F.col(c) for c in kc])).alias(f"_d_{i}")
+            )
+            viol = F.col("_n") - F.col(f"_d_{i}")
+        elif kind == "min_rows":
+            name = f"min_rows({spec['value']})"
+            viol = F.greatest(F.lit(0), F.lit(int(spec["value"])) - F.col("_n"))
+        else:
+            compiled = _row_counter(spec, f"_v_{i}")
+            if compiled is None:
+                raise ValueError(f"unknown constraint kind: {kind!r}")
+            name, kind, counter = compiled
+            aggs.append(counter)
+            viol = F.col(f"_v_{i}")
+        rows.append(
+            F.struct(
+                F.lit(name).alias("constraint"),
+                F.lit(kind).alias("kind"),
+                (viol == 0).alias("passed"),
+                viol.cast("long").alias("n_violations"),
+                F.col("_n").cast("long").alias("n_rows"),
+            )
+        )
+    return aggs, uniques, F.explode(F.array(*rows)).alias("_r")
+
+
 def constraint_check(
     df: DataFrame,
     constraints: Sequence[Mapping],
@@ -249,53 +290,11 @@ def constraint_check(
     """
     if not constraints:
         raise ValueError("constraint_check needs at least one constraint")
-    aggs = [F.count(F.lit(1)).alias("_n")]
-    names: list[tuple[str, str]] = []
-    uniques: list[tuple[int, list[str]]] = []
-    for i, spec in enumerate(constraints):
-        kind = spec["kind"]
-        if kind == "unique":
-            kc = list(spec["columns"])
-            names.append((f"unique({', '.join(kc)})", kind))
-            uniques.append((i, kc))
-        elif kind == "min_rows":
-            names.append((f"min_rows({spec['value']})", kind))
-            # violation count computed post-agg from _n
-        else:
-            compiled = _row_counter(spec, f"_v_{i}")
-            if compiled is None:
-                raise ValueError(f"unknown constraint kind: {kind!r}")
-            name, kind, counter = compiled
-            names.append((name, kind))
-            aggs.append(counter)
+    aggs, uniques, verdicts = _compile(constraints)
     one = df.agg(*aggs)
     if uniques:
-        dist_aggs = [
-            F.count_distinct(F.struct(*[F.col(c) for c in kc])).alias(
-                f"_d_{i}"
-            )
-            for i, kc in uniques
-        ]
-        one = one.crossJoin(F.broadcast(df.agg(*dist_aggs)))
-    rows = []
-    for i, (spec, (name, kind)) in enumerate(zip(constraints, names)):
-        if kind == "unique":
-            viol = F.col("_n") - F.col(f"_d_{i}")
-        elif kind == "min_rows":
-            k = int(spec["value"])
-            viol = F.greatest(F.lit(0), F.lit(k) - F.col("_n"))
-        else:
-            viol = F.col(f"_v_{i}")
-        rows.append(
-            F.struct(
-                F.lit(name).alias("constraint"),
-                F.lit(kind).alias("kind"),
-                (viol == 0).alias("passed"),
-                viol.cast("long").alias("n_violations"),
-                F.col("_n").cast("long").alias("n_rows"),
-            )
-        )
-    return one.select(F.explode(F.array(*rows)).alias("_r")).select("_r.*")
+        one = one.crossJoin(F.broadcast(df.agg(*uniques)))
+    return one.select(verdicts).select("_r.*")
 
 
 def frequent_values(
@@ -408,48 +407,19 @@ def windowed_constraints(
 
     if not constraints:
         raise ValueError("windowed_constraints needs at least one constraint")
+    aggs, uniques, verdicts = _compile(constraints)
+    if uniques:
+        raise ValueError(
+            "windowed_constraints does not support 'unique' (exact "
+            "cross-window uniqueness is unbounded state) — use the "
+            "batch constraint_check"
+        )
     work = with_event_time(sdf, dim, watermark)
-    aggs = [F.count(F.lit(1)).alias("_n")]
-    names: list[tuple[str, str]] = []
-    for i, spec in enumerate(constraints):
-        kind = spec["kind"]
-        if kind == "unique":
-            raise ValueError(
-                "windowed_constraints does not support 'unique' (exact "
-                "cross-window uniqueness is unbounded state) — use the "
-                "batch constraint_check"
-            )
-        if kind == "min_rows":
-            names.append((f"min_rows({spec['value']})", kind))
-            continue
-        compiled = _row_counter(spec, f"_v_{i}")
-        if compiled is None:
-            raise ValueError(f"unknown constraint kind: {kind!r}")
-        name, kind, counter = compiled
-        names.append((name, kind))
-        aggs.append(counter)
     agg = work.groupBy(F.window("__event_time__", window).alias("w")).agg(
         *aggs
     )
-    rows = []
-    for i, (spec, (name, kind)) in enumerate(zip(constraints, names)):
-        if kind == "min_rows":
-            k = int(spec["value"])
-            viol = F.greatest(F.lit(0), F.lit(k) - F.col("_n"))
-        else:
-            viol = F.col(f"_v_{i}")
-        rows.append(
-            F.struct(
-                F.lit(name).alias("constraint"),
-                F.lit(kind).alias("kind"),
-                (viol == 0).alias("passed"),
-                viol.cast("long").alias("n_violations"),
-                F.col("_n").cast("long").alias("n_rows"),
-            )
-        )
     return agg.select(
-        F.col("w.start").cast("long").alias("window_start"),
-        F.explode(F.array(*rows)).alias("_r"),
+        F.col("w.start").cast("long").alias("window_start"), verdicts
     ).select("window_start", "_r.*")
 
 

@@ -1,21 +1,31 @@
 """Similarity search over embedding columns: cosine top-k.
 
-No reference analog. Two physical strategies:
+No reference analog. Three physical strategies, plus the quantizer
+that builds IVF cells:
 
-- :func:`cosine_topk` — brute-force: broadcast the (small) query set
-  against the full corpus, rank per query. Exact; the baseline. Cost
-  O(Q·N·d) but embarrassingly parallel and shuffle-free on the corpus
-  side (queries are broadcast, ranking shuffles only Q·k-ish rows
-  after the per-partition window).
-- :func:`cosine_topk_ivf` — IVF-style: corpus is bucketed by a coarse
-  quantizer cell (here the precomputed ``label`` column stands in for
-  a k-means cell id); each query probes only its own cell. The join
-  becomes a bucket equi-join and the scanned fraction drops to ~1/C.
-  This is the 100 TB path: cells map to partition pruning when the
-  corpus is written partitioned by cell.
+- :func:`cosine_topk` — exact brute force: the (small) query set is
+  collected and rides into an Arrow-batch scan of the corpus
+  (``core.map_batches``), where one numpy matmul per batch scores
+  every (corpus row, query) pair; ranking shuffles only each batch's
+  top-k candidates. The baseline.
+- :func:`cosine_topk_ivf` — IVF-style: each query probes only its own
+  coarse cell (``cell_col``). The join becomes a cell equi-join and
+  the scanned fraction drops to ~1/C; with a corpus written
+  partitioned by cell, cells map to partition pruning.
+- :func:`cosine_topk_lsh` — each query probes its signed-random-
+  projection bucket (and, with ``probes > 1``, the buckets one bit
+  away). Approximate.
+- :func:`kmeans_cells` — Lloyd k-means cell assignment, the IVF
+  coarse quantizer: an Arrow-batch assigner (``core.map_batches``)
+  against the broadcast centroids, one groupBy per iteration.
 
-All arithmetic is JVM higher-order functions (``zip_with`` +
-``aggregate``) — no Python in the loop.
+The IVF and LSH paths are one probe-and-rank step: the broadcast
+queries join the corpus on the partition key, JVM higher-order
+functions (``zip_with`` + ``aggregate``) score each pair, and a window
+keeps the top k. A vector with a NULL element counts as a NULL vector
+on every path: it is nobody's neighbour, gets none, and has no cell.
+The module also holds scalar quantization, embedding moments / PCA and
+outlier labels.
 """
 
 from __future__ import annotations
@@ -54,11 +64,69 @@ def _normed(df: DataFrame, id_col: str, vec_col: str, extra: list[str]) -> DataF
     return out.withColumn("nrm", F.sqrt(_dot(F.col("v"), F.col("v"))))
 
 
+def _complete(vec: Column) -> Column:
+    """True for a vector with no NULL element; NULL for a NULL vector.
+    A vector with a NULL element counts as a NULL vector: filter on
+    this before a vector reaches numpy, where the element turns NaN."""
+    return F.forall(vec, lambda x: x.isNotNull())
+
+
 def _vec_dim(df: DataFrame, vec_col: str) -> int | None:
     """Length of the first non-NULL vector in ``vec_col``; None when
     there is none (an empty frame, or every vector NULL)."""
     row = df.where(F.col(vec_col).isNotNull()).select(F.size(vec_col)).first()
     return None if row is None else row[0]
+
+
+def _no_neighbours(corpus: DataFrame, id_col: str) -> DataFrame:
+    """The empty ``(query_id, rank, neighbor_id, cos_sim)`` result."""
+    id_type = dict(corpus.dtypes)[id_col]
+    return corpus.sparkSession.createDataFrame(
+        [], f"query_id {id_type}, rank int, neighbor_id {id_type}, cos_sim double"
+    )
+
+
+def _top_k(scored: DataFrame, k: int) -> DataFrame:
+    """Keep each query's ``k`` best ``(query_id, neighbor_id, cos_sim)``
+    rows, ranked by similarity then neighbour id."""
+    w = Window.partitionBy("query_id").orderBy(
+        F.col("cos_sim").desc(), F.col("neighbor_id")
+    )
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select("query_id", "rank", "neighbor_id", "cos_sim")
+    )
+
+
+def _probe_rank(
+    q: DataFrame, c: DataFrame, probe: str, key: str, *, k: int, id_col: str, round_digits: int
+) -> DataFrame:
+    """Top-``k`` by cosine of each query over the corpus rows in the
+    partition it probes: the broadcast queries ``q`` join the corpus
+    ``c`` (both :func:`_normed`) on ``q.probe == c.key`` and distinct
+    ids. A vector with a NULL element has a NULL norm and takes no part
+    on either side."""
+    q = q.where(F.col("nrm").isNotNull()).alias("q")
+    c = c.where(F.col("nrm").isNotNull()).alias("c")
+    scored = (
+        F.broadcast(q)
+        .join(
+            c,
+            (F.col(f"q.{probe}") == F.col(f"c.{key}"))
+            & (F.col(f"q.{id_col}") != F.col(f"c.{id_col}")),
+        )
+        .select(
+            F.col(f"q.{id_col}").alias("query_id"),
+            F.col(f"c.{id_col}").alias("neighbor_id"),
+            F.round(
+                _dot(F.col("q.v"), F.col("c.v"))
+                / (F.col("q.nrm") * F.col("c.nrm")),
+                round_digits,
+            ).alias("cos_sim"),
+        )
+    )
+    return _top_k(scored, k)
 
 
 def cosine_topk(
@@ -97,14 +165,15 @@ def cosine_topk(
     ``max_broadcast_queries=None`` lifts the cap for callers that know
     their size (the collect itself is inherent to the strategy).
 
-    NULL vectors are dropped on both sides: a NULL query gets no
-    neighbors and a NULL corpus vector is nobody's neighbor.
+    A NULL vector, or one with a NULL element, is dropped on both
+    sides: as a query it gets no neighbors, in the corpus it is
+    nobody's neighbor.
 
     Output: ``(query_id, rank, neighbor_id, cos_sim)``.
     """
     import numpy as np
 
-    qside = queries.select(id_col, vec_col).where(F.col(vec_col).isNotNull())
+    qside = queries.select(id_col, vec_col).where(_complete(F.col(vec_col)))
     if max_broadcast_queries is not None:
         # Count BEFORE collect: the guard must refuse without ever
         # materializing an oversized query set on the driver. limit(cap+1)
@@ -119,12 +188,9 @@ def cosine_topk(
                 "cosine_topk_lsh, or raise the limit explicitly"
             )
     qrows = qside.collect()
-    id_type = dict(corpus.dtypes)[id_col]
-    spark = corpus.sparkSession
     if not qrows:
-        return spark.createDataFrame(
-            [], f"query_id {id_type}, rank int, neighbor_id {id_type}, cos_sim double"
-        )
+        return _no_neighbours(corpus, id_col)
+    id_type = dict(corpus.dtypes)[id_col]
     q_ids = np.array([r[0] for r in qrows])
     qm = np.array([r[1] for r in qrows], dtype=float)
     qm /= np.maximum(np.linalg.norm(qm, axis=1, keepdims=True), 1e-300)
@@ -160,34 +226,27 @@ def cosine_topk(
     # parallelism at scale, and a forced 32-way exchange on a small
     # corpus only adds a shuffle + per-task Python overhead
     candidates = map_batches(
-        corpus.select(id_col, vec_col).where(F.col(vec_col).isNotNull()),
+        corpus.select(id_col, vec_col).where(_complete(F.col(vec_col))),
         run,
         {"query_id": id_type, "neighbor_id": id_type, "cos_sim": "double"},
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id")
-    )
-    return (
-        candidates.withColumn("cos_sim", F.round("cos_sim", round_digits))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id", "cos_sim")
-    )
+    return _top_k(candidates.withColumn("cos_sim", F.round("cos_sim", round_digits)), k)
 
 
 def srp_bucket(vcol: Column, planes: int, dim: int) -> Column:
     """Signed-random-projection bucket: bit ``p`` is the sign of the dot
     with deterministic hyperplane ``p`` (:func:`..dedup.srp_plane`
-    literals — JVM-evaluated, reproducible in SQL). A NULL vector gets
-    a NULL bucket, so a bucket equi-join never matches it."""
+    literals — JVM-evaluated, reproducible in SQL). A NULL vector, or
+    one with a NULL element, has a NULL dot and so a NULL bucket: a
+    bucket equi-join never matches it."""
     from .dedup import srp_plane
 
     bucket = None
     for p in range(planes):
         plane = F.array(*[F.lit(srp_plane(p, d)) for d in range(dim)])
-        bit = F.when(_dot(vcol, plane) >= 0, F.lit(1 << p)).otherwise(F.lit(0))
+        bit = (_dot(vcol, plane) >= 0).cast("int") * F.lit(1 << p)
         bucket = bit if bucket is None else bucket + bit
-    return F.when(vcol.isNotNull(), bucket)
+    return bucket
 
 
 def cosine_topk_lsh(
@@ -213,20 +272,17 @@ def cosine_topk_lsh(
     missed with probability ``1 - (1-θ/π)^planes``-ish per plane
     disagreement (the LSH trade). The dimension comes from the first
     non-NULL corpus vector; with none the result is empty. A NULL
-    vector has a NULL bucket: it is neither a neighbor nor gets one.
+    vector, or one with a NULL element, is neither a neighbor nor gets
+    one.
     """
     if not 1 <= probes <= planes + 1:
         raise ValueError(f"probes must be in [1, planes+1], got {probes}")
     dim = _vec_dim(corpus, vec_col)
     if dim is None:
-        id_type = dict(corpus.dtypes)[id_col]
-        return corpus.sparkSession.createDataFrame(
-            [],
-            f"query_id {id_type}, rank int, neighbor_id {id_type}, cos_sim double",
-        )
+        return _no_neighbours(corpus, id_col)
     c = _normed(spread(corpus, id_col), id_col, vec_col, []).withColumn(
         "bucket", srp_bucket(F.col("v"), planes, dim)
-    ).alias("c")
+    )
     q = _normed(queries, id_col, vec_col, []).withColumn(
         "bucket", srp_bucket(F.col("v"), planes, dim)
     )
@@ -234,31 +290,9 @@ def cosine_topk_lsh(
         F.col("bucket"),
         *[F.col("bucket").bitwiseXOR(F.lit(1 << i)) for i in range(probes - 1)],
     )
-    q = q.withColumn("probe", F.explode(probe_list)).alias("q")
-    scored = (
-        F.broadcast(q)
-        .join(
-            c,
-            (F.col("q.probe") == F.col("c.bucket"))
-            & (F.col(f"q.{id_col}") != F.col(f"c.{id_col}")),
-        )
-        .select(
-            F.col(f"q.{id_col}").alias("query_id"),
-            F.col(f"c.{id_col}").alias("neighbor_id"),
-            F.round(
-                _dot(F.col("q.v"), F.col("c.v"))
-                / (F.col("q.nrm") * F.col("c.nrm")),
-                round_digits,
-            ).alias("cos_sim"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id", "cos_sim")
+    q = q.withColumn("probe", F.explode(probe_list))
+    return _probe_rank(
+        q, c, "probe", "bucket", k=k, id_col=id_col, round_digits=round_digits
     )
 
 
@@ -286,14 +320,14 @@ def kmeans_cells(
     standard Lloyd-on-Spark shape); the update is one groupBy per
     iteration. Only the k×d centroid matrix ever reaches the driver.
 
-    A NULL vector takes no part in the initial centroids or the means,
-    and gets no output row.
+    A NULL vector, or one with a NULL element, takes no part in the
+    initial centroids or the means, and gets no output row.
 
     Returns ``(id_col, cell)``.
     """
     import numpy as np
 
-    v = df.where(F.col(vec_col).isNotNull()).select(
+    v = df.where(_complete(F.col(vec_col))).select(
         F.col(id_col),
         F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("v"),
     )
@@ -348,36 +382,13 @@ def cosine_topk_ivf(
     volume drops from N to N/C per query, and with a cell-partitioned
     corpus layout the scan prunes to matching partitions. Recall is
     exact for neighbors in the probed cell (single-probe IVF
-    semantics). NULL vectors are dropped on both sides.
+    semantics). A NULL vector, or one with a NULL element, is dropped
+    on both sides.
     """
     c = _normed(spread(corpus, id_col), id_col, vec_col, [cell_col])
     q = _normed(queries, id_col, vec_col, [cell_col])
-    c = c.where(F.col("v").isNotNull()).alias("c")
-    q = q.where(F.col("v").isNotNull()).alias("q")
-    scored = (
-        F.broadcast(q)
-        .join(
-            c,
-            (F.col(f"q.{cell_col}") == F.col(f"c.{cell_col}"))
-            & (F.col(f"q.{id_col}") != F.col(f"c.{id_col}")),
-        )
-        .select(
-            F.col(f"q.{id_col}").alias("query_id"),
-            F.col(f"c.{id_col}").alias("neighbor_id"),
-            F.round(
-                _dot(F.col("q.v"), F.col("c.v"))
-                / (F.col("q.nrm") * F.col("c.nrm")),
-                round_digits,
-            ).alias("cos_sim"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id", "cos_sim")
+    return _probe_rank(
+        q, c, cell_col, cell_col, k=k, id_col=id_col, round_digits=round_digits
     )
 
 

@@ -10,7 +10,7 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, functions as F
 
 from ..core import _fields_of, map_batches
 from .hashes import h60, spread, tokens
@@ -92,6 +92,13 @@ def token_stats(
     )
 
 
+def _marker_count(tk: Column, lang: str) -> Column:
+    """How many of the tokens ``tk`` are ``lang``'s marker words (for
+    English, its stop words)."""
+    markers = F.array(*[F.lit(w) for w in LANG_MARKERS[lang]])
+    return F.size(F.filter(tk, lambda t: F.array_contains(markers, t)))
+
+
 def quality_score(
     df: DataFrame, *, id_col: str = "doc_id", text_col: str = "text"
 ) -> DataFrame:
@@ -106,9 +113,8 @@ def quality_score(
     """
     base = spread(df, id_col).select(F.col(id_col), tokens(text_col).alias("tk"))
     tk = F.col("tk")
-    stop = F.array(*[F.lit(w) for w in LANG_MARKERS["en"]])
     n_tok = F.size(tk)
-    n_stop = F.size(F.filter(tk, lambda t: F.array_contains(stop, t)))
+    n_stop = _marker_count(tk, "en")
     mean_len = F.aggregate(
         tk, F.lit(0.0), lambda acc, t: acc + F.length(t)
     ) / F.greatest(n_tok, F.lit(1))
@@ -122,7 +128,7 @@ def quality_score(
     )
     return base.select(
         F.col(id_col),
-        F.size(tk).alias("n_tokens"),
+        n_tok.alias("n_tokens"),
         n_stop.alias("n_stopwords"),
         F.round(score, 6).alias("quality"),
     )
@@ -136,12 +142,7 @@ def lang_id(
     en→de→fr→es→zh). Emits per-language scores so downstream filters
     can threshold on confidence."""
     base = spread(df, id_col).select(F.col(id_col), tokens(text_col).alias("tk"))
-    tk = F.col("tk")
-    scores = {}
-    for lang in _LANG_ORDER:
-        markers = F.array(*[F.lit(w) for w in LANG_MARKERS[lang]])
-        scores[lang] = F.size(F.filter(tk, lambda t: F.array_contains(markers, t)))
-    best = None
+    scores = {lang: _marker_count(F.col("tk"), lang) for lang in _LANG_ORDER}
     pred = F.lit(_LANG_ORDER[-1])
     # build the argmax as a reversed CASE chain: earlier languages win ties
     for lang in reversed(_LANG_ORDER[:-1]):
@@ -151,7 +152,6 @@ def lang_id(
             c = scores[lang] >= s
             cond = c if cond is None else (cond & c)
         pred = F.when(cond, F.lit(lang)).otherwise(pred)
-        best = lang
     return base.select(
         F.col(id_col),
         *[scores[lang].alias(f"score_{lang}") for lang in _LANG_ORDER],
@@ -346,25 +346,13 @@ def redact(
     return spread(df, id_col).select(*sel)
 
 
-def tfidf_top_tokens(
-    df: DataFrame,
-    *,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k: int = 5,
-    round_digits: int = 6,
-) -> DataFrame:
-    """Top-``k`` tokens per document by smoothed TF-IDF.
-
-    ``tfidf = (tf / n_tokens_doc) * (ln((N + 1) / (df + 1)) + 1)`` —
-    sklearn's smoothed idf. Relational shape at scale: explode once,
-    one hash aggregate for per-doc term counts, one for document
-    frequencies (both map-side partial), a broadcast-able join on the
-    token, and a per-doc top-k window. Ranking is deterministic: ties
-    broken on the ROUNDED score then the token string.
-    """
-    from pyspark.sql import Window
-
+def _tfidf(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
+    """``(id_col, tok, tfidf)``: smoothed TF-IDF of each distinct token
+    in each document, ``(tf / n_tokens_doc) * (ln((N + 1) / (df + 1))
+    + 1)`` (sklearn's smoothed idf, ``N`` the distinct non-NULL ids).
+    Relational shape: explode once, one hash aggregate for per-doc
+    term counts and one for document frequencies (both map-side
+    partial), and a broadcast join on the token."""
     toks = spread(df, id_col).select(F.col(id_col), tokens(text_col).alias("tk"))
     # explode_outer + null filter: see dedup (generator filter inference)
     tok = toks.select(
@@ -389,16 +377,38 @@ def tfidf_top_tokens(
     idf = F.log(
         (F.col("_ndocs") + F.lit(1)).cast("double") / (F.col("df") + 1)
     ) + F.lit(1.0)
-    scored = (
+    return (
         tf.join(doclen, id_col)
         .join(F.broadcast(dfreq), "tok")
         .select(
             F.col(id_col),
             F.col("tok"),
-            F.round(
-                (F.col("tf") / F.col("n_tok")) * idf, round_digits
-            ).alias("tfidf"),
+            ((F.col("tf") / F.col("n_tok")) * idf).alias("tfidf"),
         )
+    )
+
+
+def tfidf_top_tokens(
+    df: DataFrame,
+    *,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+    k: int = 5,
+    round_digits: int = 6,
+) -> DataFrame:
+    """Top-``k`` tokens per document by smoothed TF-IDF.
+
+    ``tfidf = (tf / n_tokens_doc) * (ln((N + 1) / (df + 1)) + 1)`` —
+    sklearn's smoothed idf. Relational shape at scale: explode once,
+    one hash aggregate for per-doc term counts, one for document
+    frequencies (both map-side partial), a broadcast-able join on the
+    token, and a per-doc top-k window. Ranking is deterministic: ties
+    broken on the ROUNDED score then the token string.
+    """
+    from pyspark.sql import Window
+
+    scored = _tfidf(df, id_col, text_col).withColumn(
+        "tfidf", F.round("tfidf", round_digits)
     )
     w = Window.partitionBy(id_col).orderBy(
         F.col("tfidf").desc(), F.col("tok")
@@ -771,41 +781,15 @@ def hashed_tfidf_vectors(
     """
     if dim < 2:
         raise ValueError(f"dim must be >= 2, got {dim}")
-    toks = spread(df, id_col).select(F.col(id_col), tokens(text_col).alias("tk"))
-    tok = toks.select(
-        F.col(id_col), F.explode_outer("tk").alias("tok")
-    ).filter(F.col("tok").isNotNull())
-    tf = tok.groupBy(id_col, "tok").agg(F.count(F.lit(1)).alias("tf"))
-    doclen = tf.groupBy(id_col).agg(F.sum("tf").alias("n_tok"))
-    dfreq = tf.groupBy("tok").agg(F.count(F.lit(1)).alias("df"))
-    # n_docs rides the (tiny) token-idf side as a broadcast 1-row
-    # aggregate instead of an EAGER distinct-count action at plan-build
-    # time: the same distinct shuffle, but scheduled inside the main
-    # job — no driver barrier, no extra corpus pass serialized before
-    # the query starts (guide §5: the driver does no data work) (r16).
-    nfr = df.select(id_col).agg(
-        # count_distinct ignores NULL ids — the same semantics as the
-        # oracle's count(DISTINCT doc_id), unlike the pre-r16 eager
-        # distinct().count() which counted the null group (ADVICE r16
-        # low: callers with nullable ids get oracle-consistent idf)
-        F.count_distinct(F.col(id_col)).alias("_ndocs")
-    )
-    dfreq = dfreq.crossJoin(F.broadcast(nfr))
-    idf = F.log(
-        (F.col("_ndocs") + F.lit(1)).cast("double") / (F.col("df") + 1)
-    ) + F.lit(1.0)
     slot = h60(F.concat_ws("|", F.lit("fh"), F.col("tok"))) % F.lit(dim)
     sign = F.when(
         h60(F.concat_ws("|", F.lit("fhs"), F.col("tok"))) % 2 == 0, F.lit(1.0)
     ).otherwise(F.lit(-1.0))
+    # the ±1 sign multiplies exactly: sign * tfidf is the product the
+    # two factors would give in any order
     weighted = (
-        tf.join(doclen, id_col)
-        .join(F.broadcast(dfreq), "tok")
-        .select(
-            F.col(id_col),
-            slot.alias("slot"),
-            (sign * (F.col("tf") / F.col("n_tok")) * idf).alias("w"),
-        )
+        _tfidf(df, id_col, text_col)
+        .select(F.col(id_col), slot.alias("slot"), (sign * F.col("tfidf")).alias("w"))
         .groupBy(id_col, "slot")
         .agg(F.sum("w").alias("w"))
     )

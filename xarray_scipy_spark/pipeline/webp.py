@@ -442,7 +442,15 @@ def _inv_color_transform(px, w: int, h: int, size_bits: int, elems) -> None:
 def decode_webp(payload: bytes):
     """Decode a lossless WebP (RIFF/WEBP + VP8L). Returns
     ``(pixels, width, height)`` with ``pixels`` an ``(h, w, c)`` uint8
-    array — c = 4 (RGBA) when the header's alpha hint is set, else 3."""
+    array — c = 4 (RGBA) when the header's alpha hint is set, else 3.
+    A truncated or malformed payload raises ``ValueError``."""
+    try:
+        return _decode_webp(payload)
+    except IndexError as e:  # read past the end of a cut payload
+        raise ValueError(f"truncated or corrupt WebP payload: {e}") from e
+
+
+def _decode_webp(payload: bytes):
     import numpy as np
 
     if payload[:4] != b"RIFF" or payload[8:12] != b"WEBP":
